@@ -30,10 +30,10 @@ from data_validation_engine_spark.contract.compile import (
 )
 from data_validation_engine_spark.contract.spec import EntityContract
 from data_validation_engine_spark.messages import (
-    MESSAGE_SCHEMA,
     ORIGIN_ENTITY,
     RECORD_INDEX,
     compile_message_template,
+    empty_messages,
 )
 
 
@@ -54,7 +54,7 @@ def contract_messages(
     if not checks:
         # no declared checks (e.g. a header entity of plain strings):
         # an empty explode would type as VOID — return the empty frame
-        return empty_messages_frame(df.sparkSession)
+        return empty_messages(df.sparkSession)
     idx = (
         F.col(RECORD_INDEX).cast("long")
         if RECORD_INDEX in df.columns
@@ -266,7 +266,3 @@ def reject_records_by_origin(df: DataFrame, messages: DataFrame) -> DataFrame:
         .distinct()
     )
     return df.join(rejects, on=[ORIGIN_ENTITY, RECORD_INDEX], how="left_anti")
-
-
-def empty_messages_frame(spark) -> DataFrame:
-    return spark.createDataFrame([], MESSAGE_SCHEMA)

@@ -2,15 +2,18 @@
 
 The reference builds ``__record_index__`` with ``rdd.zipWithIndex()``
 (dve spark_helpers.py:489-499) — a full scan through Python serialisation.
-Here the same file-order index is computed DataFrame-native:
+Here the same file-order index is computed inside the JVM plan:
 
 1. ``monotonically_increasing_id()`` encodes (partition_id << 33 | offset)
    with per-partition offsets contiguous from 0 — order within a partition
    is scan order.
 2. One tiny aggregation collects per-partition row counts (K rows for K
    partitions — driver-safe at any scale).
-3. A broadcast join of cumulative offsets converts (partition, offset) to a
-   global contiguous 1-based index.
+3. The cumulative offsets become one literal ``array<bigint>`` indexed by
+   partition id (partitions with no rows keep their slot, so the array is
+   dense), and each row's index is offset + position within its partition
+   + 1. The lookup is a constant-array access in the projection: no join,
+   no broadcast, no Python-built frame, so no Python worker starts.
 
 No shuffle of the data, one extra metadata-size job; deterministic for a
 fixed file layout (same guarantee as zipWithIndex).
@@ -36,40 +39,33 @@ from data_validation_engine_spark.messages import RECORD_INDEX
 
 _MID = "__dve_mid"
 _PART = "__dve_part"
-_OFFSET = "__dve_poffset"
 
 
 def add_record_index(
     df: DataFrame, *, column: str = RECORD_INDEX, persist: bool = True
 ) -> DataFrame:
     """Add a stable, contiguous, 1-based index column in scan order."""
-    spark = df.sparkSession
-    with_mid = df.withColumn(_MID, F.monotonically_increasing_id()).withColumn(
-        _PART, F.shiftright(F.col(_MID), 33).cast("long")
-    )
+    with_mid = df.withColumn(_MID, F.monotonically_increasing_id())
     if persist:
         with_mid = with_mid.persist(StorageLevel.MEMORY_AND_DISK)
+    part = F.shiftright(F.col(_MID), 33)
 
-    counts = (
-        with_mid.groupBy(_PART)
+    counts = {
+        row[_PART]: row["n"]
+        for row in with_mid.groupBy(part.alias(_PART))
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(_PART)
         .collect()
-    )
-    offsets, running = [], 0
-    for row in counts:
-        offsets.append((row[_PART], running))
-        running += row["n"]
-
-    if not offsets:
+    }
+    if not counts:
         return df.withColumn(column, F.lit(None).cast("long"))
 
-    offsets_df = F.broadcast(
-        spark.createDataFrame(offsets, f"{_PART} long, {_OFFSET} long")
-    )
+    offsets, running = [], 0
+    for p in range(max(counts) + 1):
+        offsets.append(running)
+        running += counts.get(p, 0)
+
+    offset = F.array(*[F.lit(o) for o in offsets]).cast("array<bigint>")[part]
     local_pos = F.col(_MID).bitwiseAND(F.lit((1 << 33) - 1))
-    return (
-        with_mid.join(offsets_df, on=_PART, how="inner")
-        .withColumn(column, (F.col(_OFFSET) + local_pos + F.lit(1)).cast("long"))
-        .drop(_MID, _PART, _OFFSET)
-    )
+    return with_mid.withColumn(
+        column, (offset + local_pos + F.lit(1)).cast("long")
+    ).drop(_MID)

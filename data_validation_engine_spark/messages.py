@@ -420,7 +420,11 @@ def messages_for_checks(
 
 
 def empty_messages(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], MESSAGE_SCHEMA)
+    """A message feed with no rows, planned in the JVM (a typed null per
+    field over an empty range) so evaluating it starts no Python worker."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in MESSAGE_SCHEMA]
+    )
 
 
 def union_messages(frames: list[DataFrame]) -> DataFrame | None:

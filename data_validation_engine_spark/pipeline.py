@@ -30,7 +30,6 @@ plan.
 
 from __future__ import annotations
 
-import datetime as dt
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Optional
@@ -206,7 +205,6 @@ def run_pipeline(
     errors_dir = work / "errors"
     submission_id = submission_id or new_submission_id()
     audit = AuditLog(spark, audit_path) if audit_path else None
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
     def audit_status(status: str, result: str | None = None) -> None:
         if audit:
@@ -215,8 +213,6 @@ def run_pipeline(
                 [
                     {
                         "submission_id": submission_id,
-                        "date_updated": now.date(),
-                        "time_updated": now,
                         "status": status,
                         "job_run_id": None,
                         "submission_result": result,
@@ -232,8 +228,6 @@ def run_pipeline(
             [
                 {
                     "submission_id": submission_id,
-                    "date_updated": now.date(),
-                    "time_updated": now,
                     **submission_info,
                 }
             ],
@@ -291,6 +285,7 @@ def run_pipeline(
     )
 
     transform_counts: dict[str, Observation] = {}
+    transform_schemas: dict[str, T.StructType] = {}
     for name, entity_contract in datasets.items():
         path = input_files[name]
         ext = Path(path).suffix.lower()
@@ -349,6 +344,7 @@ def run_pipeline(
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         df.write.mode("overwrite").parquet(str(work / "transform" / name))
         transform_counts[name] = obs
+        transform_schemas[name] = df.schema
 
     # -- stage 3: data contract --------------------------------------------
     # Reference-faithful rejection timing: the contract emits messages and
@@ -357,14 +353,22 @@ def run_pipeline(
     # and notifications built during business rules still see failed
     # records (dve spark/contract.py:120-199, rejection at
     # pipeline.py:614-637).
+    #
+    # Each parquet barrier is reloaded with the schema of the frame just
+    # written to it, so no reload pays a footer-inference job.
     contract_messages = MessageCollector()
+    contract_schemas: dict[str, T.StructType] = {}
     for name, entity_contract in datasets.items():
-        raw = spark.read.parquet(str(work / "transform" / name))
-        indexed = add_record_index(raw)
+        raw = spark.read.schema(transform_schemas[name]).parquet(
+            str(work / "transform" / name)
+        )
+        # a fresh file scan: both evaluations see the same partitions
+        indexed = add_record_index(raw, persist=False)
         typed, messages = apply_contract(
             entity_contract, indexed, drop_failed_records=False
         )
         typed.write.mode("overwrite").parquet(str(work / "data_contract" / name))
+        contract_schemas[name] = typed.schema
         contract_messages.add(messages)
     # lazy checkpoint BEFORE the JSONL write: the write is this frame's
     # first action and materialises the blocks, so the all_messages
@@ -384,9 +388,9 @@ def run_pipeline(
     # entity NAMESPACE
     entities = EntityManager(
         {
-            name: spark.read.parquet(
-                str(work / "data_contract" / name)
-            ).withColumn(ORIGIN_ENTITY, F.lit(name))
+            name: spark.read.schema(contract_schemas[name])
+            .parquet(str(work / "data_contract" / name))
+            .withColumn(ORIGIN_ENTITY, F.lit(name))
             for name in datasets
         },
         spark=spark,
@@ -490,7 +494,9 @@ def run_pipeline(
             out = work / "business_rules" / name
             df.write.mode("overwrite").parquet(str(out))
             result.entity_paths[name] = str(out)
-            result.entities[name] = spark.read.parquet(str(out))
+            result.entities[name] = spark.read.schema(df.schema).parquet(
+                str(out)
+            )
     finally:
         # unpersist integrity-check caches on EVERY path — a failure in the
         # rules stage otherwise leaks cached blocks across process_landing
@@ -545,8 +551,6 @@ def run_pipeline(
             [
                 {
                     "submission_id": submission_id,
-                    "date_updated": now.date(),
-                    "time_updated": now,
                     "record_count": received,
                     "number_submission_rejections": 0,
                     "number_record_rejections": result.statistics[
@@ -632,14 +636,11 @@ def process_landing(
         except ValueError:
             submission_info = {}
         if audit:
-            now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
             audit.append(
                 "transfers",
                 [
                     {
                         "submission_id": submission_id,
-                        "date_updated": now.date(),
-                        "time_updated": now,
                         "report_name": Path(data_uri).name,
                         "transfer_id": submission_id,
                         "transfer_method": "landing_move",

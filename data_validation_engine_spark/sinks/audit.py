@@ -8,7 +8,8 @@ parquet append with identical schemas.
 
 "Latest status per submission" uses the reference's one window pattern:
 ``row_number() over (partition by submission_id order by time_updated
-desc)`` (dve spark/auditing.py:143-162).
+desc)`` (dve spark/auditing.py:143-162), with ties on ``time_updated``
+broken by status rank so the answer never depends on file order.
 """
 
 from __future__ import annotations
@@ -169,6 +170,8 @@ class AuditLog:
             return AuditLog._TABLE_LOCKS.setdefault(key, threading.Lock())
 
     def append(self, table: str, records: list[dict[str, Any]]) -> None:
+        """Append records; ``time_updated`` (and ``date_updated``) default
+        to the moment of this call."""
         schema = AUDIT_SCHEMAS[table]
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = []
@@ -317,8 +320,16 @@ class AuditLog:
         df = self.read("processing_status")
         if submission_id is not None:
             df = df.where(F.col("submission_id") == submission_id)
+        # lifecycle order breaks a tie on time_updated: the later status
+        # wins (an unknown status ranks below all of these)
+        status = F.col("status")
+        rank = (
+            F.when(status == "received", 0)
+            .when(status == "processed", 1)
+            .when(status.isin("failed", "completed"), 2)
+        )
         w = Window.partitionBy("submission_id").orderBy(
-            F.col("time_updated").desc()
+            F.col("time_updated").desc(), rank.desc_nulls_last()
         )
         return (
             df.withColumn("__rn", F.row_number().over(w))

@@ -155,6 +155,57 @@ def test_record_index_is_file_order(spark, sf_dir):
     assert first == again
 
 
+def _plan(df) -> str:
+    qe = df._jdf.queryExecution()
+    return qe.optimizedPlan().toString() + qe.executedPlan().toString()
+
+
+def _zip_with_index(df, key: str) -> dict:
+    """The reference definition: ``rdd.zipWithIndex()`` + 1, keyed by ``key``."""
+    return {row[key]: i + 1 for row, i in df.rdd.zipWithIndex().collect()}
+
+
+@pytest.mark.parametrize("persist", [True, False])
+def test_record_index_matches_zip_with_index_with_empty_partitions(
+    spark, persist
+):
+    # 7 partitions of 10 rows; partitions 1, 2, 4 and 6 filter to empty
+    df = spark.range(0, 70, numPartitions=7).where(
+        (F.col("id") < 10)
+        | F.col("id").between(30, 39)
+        | F.col("id").between(50, 55)
+    )
+    assert df.rdd.getNumPartitions() == 7
+    indexed = add_record_index(df, persist=persist)
+    got = {r["id"]: r[RECORD_INDEX] for r in indexed.collect()}
+    assert got == _zip_with_index(df, "id")
+    plan = _plan(indexed)
+    assert "BroadcastExchange" not in plan and "ExistingRDD" not in plan
+
+
+def test_record_index_matches_zip_with_index_after_shuffle(spark):
+    # a global sort: the index follows the post-shuffle partition order
+    df = spark.range(0, 500, numPartitions=5).orderBy(F.col("id") % 13, "id")
+    indexed = add_record_index(df, persist=True)
+    got = {r["id"]: r[RECORD_INDEX] for r in indexed.collect()}
+    assert got == _zip_with_index(df, "id")
+    assert sorted(got.values()) == list(range(1, 501))
+    plan = _plan(indexed)
+    assert "BroadcastExchange" not in plan and "ExistingRDD" not in plan
+
+
+def test_empty_messages_is_typed_and_jvm_planned(spark):
+    from data_validation_engine_spark.messages import MESSAGE_SCHEMA, empty_messages
+
+    empty = empty_messages(spark)
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in MESSAGE_SCHEMA
+    ]
+    plan = _plan(empty)
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert empty.count() == 0
+
+
 def test_reject_records_cross_stage(spark, contract):
     from data_validation_engine_spark.contract.apply import (
         contract_messages,

@@ -6,6 +6,11 @@ boundaries until the DuckDB twin caught the divergence. This lint
 makes that class structural: any C0 control character (except
 tab/newline) in a tracked .py file fails, minus the explicit
 allowlist of documented intentional uses.
+
+The submission path gets the same treatment for Python-built frames:
+a ``spark.createDataFrame(`` over a Python list is planned as an RDD
+that starts Python workers when evaluated, so each call site on that
+path is pinned below.
 """
 
 from __future__ import annotations
@@ -58,3 +63,43 @@ def test_repo_compiles_with_warnings_as_errors():
             except Exception as exc:  # noqa: BLE001 — collect all
                 bad.append((rel, str(exc)[:160]))
     assert not bad, f"compile warnings/errors: {bad}"
+
+
+#: (path, count) — ``spark.createDataFrame(`` call sites on the submission
+#: path; every other file in SUBMISSION_PATH must have none
+CREATE_DATAFRAME_ALLOWED = {
+    # _critical, UNEXPECTED_ENTITY and XSD_NOT_VALIDATED message rows
+    # (failure paths only) and the dve_submission_info refdata frame
+    # (evaluated only when a rule reads it)
+    "data_validation_engine_spark/pipeline.py": 4,
+    # audit rows on the Delta / non-local path (local parquet appends are
+    # written driver-side)
+    "data_validation_engine_spark/sinks/audit.py": 1,
+    # write_literal_messages_jsonl: presence/XSD failure rows
+    "data_validation_engine_spark/sinks/errors.py": 1,
+    # report_summary headings (the over-cap report fallback)
+    "data_validation_engine_spark/sinks/report.py": 1,
+}
+
+SUBMISSION_PATH = (
+    "data_validation_engine_spark/pipeline.py",
+    "data_validation_engine_spark/messages.py",
+    "data_validation_engine_spark/contract/*.py",
+    "data_validation_engine_spark/sinks/*.py",
+)
+
+
+def test_create_dataframe_call_sites_are_pinned():
+    found = {}
+    for pattern in SUBMISSION_PATH:
+        for p in REPO.glob(pattern):
+            rel = p.relative_to(REPO).as_posix()
+            text = p.read_text(encoding="utf-8")
+            found[rel] = text.count("spark.createDataFrame(")
+    assert set(CREATE_DATAFRAME_ALLOWED) <= set(found)
+    bad = {
+        rel: (n, CREATE_DATAFRAME_ALLOWED.get(rel, 0))
+        for rel, n in found.items()
+        if n != CREATE_DATAFRAME_ALLOWED.get(rel, 0)
+    }
+    assert not bad, f"spark.createDataFrame( call sites (found, allowed): {bad}"

@@ -176,6 +176,31 @@ def test_audit_log_roundtrip(spark, tmp):
     assert latest == {"s1": "processed", "s2": "received"}
 
 
+def test_latest_status_breaks_time_ties_by_lifecycle(spark, tmp):
+    import datetime as dt
+
+    from data_validation_engine_spark.sinks.audit import AuditLog
+
+    log = AuditLog(spark, str(tmp / "audit"))
+    t = dt.datetime(2024, 1, 2, 3, 4, 5)
+    # one append per submission, rows in either order, same time_updated
+    for sid, order in (
+        ("s1", ["received", "completed"]),
+        ("s2", ["completed", "received"]),
+    ):
+        log.append(
+            "processing_status",
+            [
+                {"submission_id": sid, "time_updated": t, "status": s}
+                for s in order
+            ],
+        )
+    latest = {
+        r["submission_id"]: r["status"] for r in log.latest_status().collect()
+    }
+    assert latest == {"s1": "completed", "s2": "completed"}
+
+
 def _report_messages(spark):
     from data_validation_engine_spark.contract import (
         apply_contract,
