@@ -38,14 +38,11 @@ from data_validation_engine_spark.steps import (
 )
 from data_validation_engine_spark.steps.sync_filters import apply_sync_filters
 
-_ENGINES: dict[int, StepEngine] = {}
-
 
 def _engine(spark: SparkSession) -> StepEngine:
-    key = id(spark)
-    if key not in _ENGINES:
-        _ENGINES[key] = StepEngine(spark)
-    return _ENGINES[key]
+    # a fresh engine per call: function registration is idempotent per
+    # session, and caching engines would keep every arm's newSession() alive
+    return StepEngine(spark)
 
 
 def _load(spark: SparkSession, sf_dir: str, names: Iterable[str]) -> dict[str, DataFrame]:

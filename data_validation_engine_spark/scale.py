@@ -209,16 +209,6 @@ def entity_read_counts(steps) -> dict[str, int]:
     return counts
 
 
-def hot_entities(steps, *, threshold: int = 2) -> set[str]:
-    """Entity names read by at least ``threshold`` steps — the candidates
-    worth ``persist()``-ing before running the list."""
-    return {
-        name
-        for name, n in entity_read_counts(steps).items()
-        if n >= threshold
-    }
-
-
 def zorder_key(
     cols: list[Column],
     mins: list[float],

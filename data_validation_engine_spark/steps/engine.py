@@ -1,9 +1,17 @@
-"""The Spark step engine: one method per step type, all lazy DataFrame ops.
+"""The Spark step engine: every step type is a binding or a handler, and
+every step is lazy DataFrame ops.
 
 Design notes (vs reference, for the parity audit):
 
-- Dispatch: config type -> handler (dve base/rules.py:97-203 uses reflection
-  over type hints; here an explicit registry — same contract).
+- Dispatch: ``StepEngine.evaluate`` looks the config type up in
+  ``BINDINGS`` and then in the engine's handler table (dve
+  base/rules.py:97-203 reflects over type hints; here an explicit
+  registry — same contract). A binding row names a library function as
+  ``"module:function"``, imported when the step runs, and maps config
+  fields to its frames and arguments; a step that only forwards its
+  fields needs nothing else. Steps that orchestrate (joins and their
+  integrity checks, orphans, notifications, the sync-filter stage,
+  side-table resolution, multi-branch steps) keep a handler method.
 - Joins are theta joins on SQL conditions (dve spark/rules.py:144-166);
   Catalyst picks broadcast/hash/sort-merge/nested-loop. Column-conflict
   resolution is last-wins, case-insensitive, preserving last casing
@@ -24,8 +32,9 @@ Design notes (vs reference, for the parity audit):
 
 from __future__ import annotations
 
+import importlib
 import uuid
-from typing import Callable, MutableMapping, Optional
+from typing import Callable, MutableMapping, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +46,7 @@ from data_validation_engine_spark.messages import (
     MessageCollector,
     messages_for_failures,
 )
+from data_validation_engine_spark.steps import configs
 from data_validation_engine_spark.steps.configs import (
     AbstractJoin,
     AbstractNewColumnJoin,
@@ -55,7 +65,6 @@ from data_validation_engine_spark.steps.configs import (
     HeaderJoin,
     ImmediateFilter,
     InnerJoin,
-    LanguageId,
     LeftJoin,
     MinHashDedup,
     Notification,
@@ -66,72 +75,26 @@ from data_validation_engine_spark.steps.configs import (
     SelectColumns,
     SemiJoin,
     Sessionize,
-    AsofJoin,
-    HashSample,
-    HashSplit,
-    StratifiedSample,
-    NgramJaccardPairs,
-    SimHashPairs,
-    SimHashSignatures,
     SimilarityTopK,
     TableUnion,
-    TextFingerprint,
-    TextStats,
-    TfIdfTopTerms,
     IntervalJoin,
     TopKPerGroup,
     RollingAggregate,
     IncrementalDedup,
-    ContainmentPairs,
-    WeightedSample,
-    RepetitionStats,
-    PiiScrub,
-    Decontaminate,
-    ChunkDocuments,
-    PackSequences,
-    LabelCentroids,
-    NearestCentroid,
-    BuildVocab,
     KMeansFit,
-    KnnJoin,
-    ApproxDistinct,
-    GroupedQuantiles,
-    ProfileColumns,
-    FuzzyJoin,
-    Bm25Search,
-    PageRankStep,
-    EncodeTokens,
     ProfileGate,
-    FrequentItems,
-    ProfileDiff,
-    QuantileBuckets,
-    OutlierFlags,
-    MergeUpsert,
-    ApplyChanges,
-    TriangleCount,
-    ParagraphDedup,
     SemanticDedup,
     PcaProject,
     HllProfile,
     LmPerplexity,
     SharedSpans,
-    GroupedAuc,
-    SampledQuantiles,
-    QuantizeVectors,
-    SaltedJoin,
     ProjectVectors,
-    CorpusMix,
-    SnapshotDiff,
-    Scd2Build,
     ExactQuotaSample,
     Winsorize,
     Impute,
     KmvSetOps,
-    RetentionCohorts,
     WindowFunnel,
     Unpivot,
-    Chi2Drift,
-    GroupedRegression,
     EcdfNormalize,
     BucketByLength,
     SqlQuery,
@@ -139,50 +102,17 @@ from data_validation_engine_spark.steps.configs import (
     BpeEncode,
     Repartition,
     Pseudonymize,
-    ClusterRepresentatives,
-    RenderChat,
-    ConversationStats,
-    NormalizeText,
     BloomFilter,
     CmsSketch,
     DsirResample,
-    NegativeSamples,
     RrfFuse,
-    ExtractHtmlText,
-    ExtractAnchorTexts,
-    ExtractLinks,
-    HardNegativeSamples,
     ClassifierFit,
     ClassifierScore,
     ClassifierEval,
-    CompactMinhashIndex,
-    RemoveRepeatedSubstrings,
-    HeavyHitters,
-    InterleaveSources,
-    WindowedHeavyHitters,
     PQFit,
-    AnnRecall,
     PQTopKMany,
     PQEncode,
-    GopherQualityFlags,
-    GopherRepetitionFlags,
-    C4Clean,
-    UrlBlocklist,
-    PairRecall,
     WordLm,
-    MojibakeStats,
-    FixMojibake,
-    ParseRobots,
-    RobotsAllowed,
-    ParseJson,
-    MaterializePacks,
-    CompressionRatio,
-    Standardize,
-    SplitSentences,
-    ChunkByContent,
-    ChunkBySentences,
-    ScriptProfile,
-    SelectTokenBudget,
 )
 
 Entities = MutableMapping[str, DataFrame]
@@ -196,6 +126,475 @@ def _qcol(name: str) -> Column:
 def _truthy(expression: str) -> Column:
     """SQL expression -> non-null boolean Column (null => false)."""
     return F.coalesce(F.expr(expression).cast("boolean"), F.lit(False))
+
+
+class Binding(NamedTuple):
+    """A step that only forwards config fields to one library function.
+
+    ``impl`` is ``"module:function"`` under the package, looked up each
+    time the step runs: importing the engine loads no llmops module, and a
+    function patched on its module is the one called. ``args`` lists the
+    config fields passed positionally and ``kwargs`` maps parameter ->
+    config field. A field written ``"@field"`` holds an entity name and
+    passes that entity's frame.
+    Tuples pass as lists and dicts as copies. The function's result
+    becomes the step's output entity.
+    """
+
+    impl: str
+    args: tuple[str, ...]
+    kwargs: dict[str, str]
+
+    def function(self) -> Callable[..., DataFrame]:
+        module, name = self.impl.split(":")
+        return getattr(
+            importlib.import_module(f"data_validation_engine_spark.{module}"),
+            name,
+        )
+
+    def __call__(self, entities: Entities, config: AnyStep) -> DataFrame:
+        def value(field: str):
+            if field.startswith("@"):
+                return entities[getattr(config, field[1:])]
+            v = getattr(config, field)
+            if isinstance(v, tuple):
+                return list(v)
+            if isinstance(v, dict):
+                return dict(v)
+            return v
+
+        args = [value(f) for f in self.args]
+        kwargs = {p: value(f) for p, f in self.kwargs.items()}
+        return self.function()(*args, **kwargs)
+
+
+def _bind(impl: str, *args: str, **kwargs: str) -> Binding:
+    return Binding(impl, args, kwargs)
+
+
+#: config type -> binding, for every step that only forwards its fields;
+#: the steps that orchestrate keep a handler method on StepEngine
+BINDINGS: dict[type, Binding] = {
+    # -- text / corpus -------------------------------------------------------
+    configs.TextStats: _bind(
+        "llmops.text:text_stats", "@entity_name", "id_column", "text_column"
+    ),
+    configs.RepetitionStats: _bind(
+        "llmops.text:repetition_stats",
+        "@entity_name", "id_column", "text_column",
+        max_top_token_frac="max_top_token_frac",
+        max_dup_bigram_frac="max_dup_bigram_frac",
+    ),
+    configs.PiiScrub: _bind(
+        "llmops.text:pii_scrub", "@entity_name", "id_column", "text_column",
+        out_col="clean_column",
+    ),
+    configs.LanguageId: _bind(
+        "llmops.text:language_id", "@entity_name", "id_column", "text_column",
+        out_col="lang_column",
+    ),
+    configs.BuildVocab: _bind(
+        "llmops.text:build_vocab", "@entity_name", "id_column", "text_column",
+        min_count="min_count", min_doc_freq="min_doc_freq",
+    ),
+    configs.EncodeTokens: _bind(
+        "llmops.text:encode_tokens",
+        "@entity_name", "id_column", "text_column", "@vocab_entity",
+        unk_id="unk_id",
+    ),
+    configs.TfIdfTopTerms: _bind(
+        "llmops.text:tfidf_top_terms",
+        "@entity_name", "id_column", "text_column",
+        top_n="top_n",
+    ),
+    configs.Bm25Search: _bind(
+        "llmops.text:bm25_search",
+        "@entity_name", "id_column", "text_column", "query",
+        k1="k1", b="b", round_to="round_to", detail="detail",
+    ),
+    configs.TextFingerprint: _bind(
+        "llmops.text:text_fingerprint",
+        "@entity_name", "id_column", "text_column",
+        shingle_size="shingle_size", winnow_k="winnow_k",
+    ),
+    configs.ScriptProfile: _bind(
+        "llmops.text:script_profile", "@entity_name", "text_column",
+        prefix="prefix",
+    ),
+    configs.NormalizeText: _bind(
+        "llmops.normalize:normalize_text", "@entity_name", "text_column",
+        form="form", lowercase="lowercase", strip_control="strip_control",
+        collapse_whitespace="collapse_whitespace",
+        output_col="output_column",
+    ),
+    configs.MojibakeStats: _bind(
+        "llmops.normalize:mojibake_stats", "@entity_name", "text_column"
+    ),
+    configs.FixMojibake: _bind(
+        "llmops.normalize:fix_mojibake", "@entity_name", "text_column",
+        output_col="output_column", flag_col="flag_column",
+    ),
+    configs.CompressionRatio: _bind(
+        "llmops.compress:compression_ratio", "@entity_name", "text_column",
+        level="level", output_col="output_column",
+    ),
+    configs.Decontaminate: _bind(
+        "llmops.decontam:decontaminate",
+        "@entity_name", "@target_name", "id_column", "text_column",
+        ngram="ngram",
+    ),
+    configs.ParagraphDedup: _bind(
+        "llmops.paragraphs:remove_repeated_paragraphs",
+        "@entity_name", "key_column", "text_column",
+        sep="separator", min_chars="min_chars", normalize="normalize",
+        max_docs="max_docs", keep="keep", out_col="output_column",
+    ),
+    configs.SplitSentences: _bind(
+        "llmops.paragraphs:split_sentences",
+        "@entity_name", "key_column", "text_column",
+        min_chars="min_chars",
+    ),
+    configs.RemoveRepeatedSubstrings: _bind(
+        "llmops.substrings:remove_repeated_substrings",
+        "@entity_name", "id_column", "text_column",
+        min_len="min_len", min_docs="min_docs", depth="depth",
+        width="width", seed="seed", out_col="output_column",
+        exact_verify="exact_verify",
+    ),
+    configs.C4Clean: _bind(
+        "llmops.c4:c4_clean", "@entity_name", "text_column",
+        min_line_words="min_line_words", min_sentences="min_sentences",
+        clean_col="clean_column", keep_col="keep_column",
+    ),
+    configs.GopherQualityFlags: _bind(
+        "llmops.gopher:gopher_quality_flags", "@entity_name", "text_column",
+        min_words="min_words", max_words="max_words",
+        min_mean_word_len="min_mean_word_len",
+        max_mean_word_len="max_mean_word_len",
+        max_symbol_word_ratio="max_symbol_word_ratio",
+        max_bullet_line_frac="max_bullet_line_frac",
+        max_ellipsis_line_frac="max_ellipsis_line_frac",
+        min_alpha_word_frac="min_alpha_word_frac",
+        min_stop_words="min_stop_words", keep_col="keep_column",
+    ),
+    configs.GopherRepetitionFlags: _bind(
+        "llmops.gopher:gopher_repetition_flags",
+        "@entity_name", "text_column",
+        max_dup_line_frac="max_dup_line_frac",
+        max_dup_para_frac="max_dup_para_frac",
+        max_dup_line_char_frac="max_dup_line_char_frac",
+        max_dup_para_char_frac="max_dup_para_char_frac",
+        max_top_gram_fracs="max_top_gram_fracs",
+        max_dup_gram_fracs="max_dup_gram_fracs",
+        keep_col="keep_column",
+    ),
+    # -- chunking / chat -----------------------------------------------------
+    configs.ChunkDocuments: _bind(
+        "llmops.chunking:chunk_documents",
+        "@entity_name", "id_column", "text_column",
+        chunk_tokens="chunk_tokens", overlap="overlap",
+    ),
+    configs.ChunkBySentences: _bind(
+        "llmops.chunking:chunk_by_sentences",
+        "@entity_name", "key_column", "text_column",
+        max_tokens="max_tokens", overlap_sentences="overlap_sentences",
+        min_chars="min_chars",
+    ),
+    configs.ChunkByContent: _bind(
+        "llmops.chunking:chunk_by_content",
+        "@entity_name", "key_column", "text_column",
+        target_tokens="target_tokens", min_tokens="min_tokens",
+        max_tokens="max_tokens", gram="gram", seed="seed",
+    ),
+    configs.PackSequences: _bind(
+        "llmops.chunking:pack_sequences",
+        "@entity_name", "id_column", "text_column",
+        capacity="capacity", n_shards="n_shards", seed="seed",
+    ),
+    configs.MaterializePacks: _bind(
+        "llmops.chunking:materialize_packs",
+        "@entity_name", "key_column", "ids_column",
+        capacity="capacity", n_shards="n_shards", seed="seed",
+        pad_id="pad_token_id", eod_id="eod_token_id",
+    ),
+    configs.RenderChat: _bind(
+        "llmops.chat:render_chat",
+        "@entity_name", "key_column", "conversation_column",
+        role_open="role_open", role_close="role_close",
+        turn_end="turn_end", mask_roles="mask_roles",
+    ),
+    configs.ConversationStats: _bind(
+        "llmops.chat:conversation_stats",
+        "@entity_name", "key_column", "conversation_column",
+        user_role="user_role", assistant_role="assistant_role",
+        system_role="system_role",
+    ),
+    # -- near-duplicates / vectors -------------------------------------------
+    configs.SimHashSignatures: _bind(
+        "llmops.dedup:simhash_table",
+        "@entity_name", "id_column", "text_column",
+        bits="bits",
+    ),
+    configs.SimHashPairs: _bind(
+        "llmops.dedup:simhash_pairs",
+        "@entity_name", "id_column", "text_column",
+        bits="bits", max_hamming="max_hamming",
+    ),
+    configs.NgramJaccardPairs: _bind(
+        "llmops.dedup:ngram_jaccard_pairs",
+        "@entity_name", "id_column", "text_column",
+        shingle_size="shingle_size", threshold="threshold",
+    ),
+    configs.ContainmentPairs: _bind(
+        "llmops.dedup:containment_pairs",
+        "@entity_name", "id_column", "text_column",
+        threshold="threshold", shingle_size="shingle_size",
+    ),
+    configs.ClusterRepresentatives: _bind(
+        "llmops.dedup:cluster_representatives",
+        "@entity_name", "cluster_column",
+        score_col="score_column", id_col="id_column",
+    ),
+    configs.CompactMinhashIndex: _bind(
+        "llmops.dedup:compact_minhash_index",
+        "@entity_name", "@live_entity", "id_column",
+    ),
+    configs.LabelCentroids: _bind(
+        "llmops.vectors:label_centroids",
+        "@entity_name", "label_column", "id_column", "vector_column",
+        dim="dim", segment_size="segment_size",
+    ),
+    configs.NearestCentroid: _bind(
+        "llmops.vectors:nearest_centroid", "@entity_name", "@target_name",
+        id_col="id_column", vec_col="vector_column",
+        label_col="label_column", centroid_col="centroid_column",
+    ),
+    configs.QuantizeVectors: _bind(
+        "llmops.vectors:quantize_vectors",
+        "@entity_name", "id_column", "vector_column",
+        round_to="round_to",
+    ),
+    configs.KnnJoin: _bind(
+        "llmops.similarity:knn_join", "@entity_name", "k",
+        id_col="id_column", vec_col="vector_column",
+        n_planes="n_planes", n_tables="n_tables", dim="dim",
+    ),
+    configs.HardNegativeSamples: _bind(
+        "llmops.similarity:hard_negative_samples", "@entity_name", "k",
+        id_col="id_column", vec_col="vector_column",
+        min_cosine="min_cosine", max_cosine="max_cosine",
+        candidate_factor="candidate_factor",
+        n_planes="n_planes", n_tables="n_tables", dim="dim",
+    ),
+    configs.AnnRecall: _bind(
+        "llmops.recall:ann_recall", "@entity_name", "@target_name",
+        id_col="id_column", group_cols="group_columns", k="k",
+        recall_col="recall_column",
+    ),
+    configs.PairRecall: _bind(
+        "llmops.recall:pair_recall", "@entity_name", "@target_name",
+        id_a="id_a_column", id_b="id_b_column",
+        group_cols="group_columns", broadcast_exact="broadcast_exact",
+    ),
+    # -- sampling / splits ---------------------------------------------------
+    configs.HashSplit: _bind(
+        "llmops.split:hash_split", "@entity_name", "key_column",
+        splits="splits", seed="seed", split_col="split_column",
+    ),
+    configs.HashSample: _bind(
+        "llmops.split:deterministic_sample",
+        "@entity_name", "key_column", "fraction",
+        seed="seed",
+    ),
+    configs.StratifiedSample: _bind(
+        "llmops.split:stratified_sample",
+        "@entity_name", "key_column", "strata_column", "fractions",
+        default_fraction="default_fraction", seed="seed",
+    ),
+    configs.WeightedSample: _bind(
+        "llmops.split:weighted_sample",
+        "@entity_name", "key_column", "weight_column",
+        rate="rate", seed="seed",
+    ),
+    configs.CorpusMix: _bind(
+        "llmops.split:corpus_mix",
+        "@entity_name", "key_column", "label_column", "weight_column",
+        "targets", "budget",
+        temperature="temperature", seed="seed",
+    ),
+    configs.SelectTokenBudget: _bind(
+        "llmops.split:select_token_budget",
+        "@entity_name", "score_column", "token_column",
+        group_cols="group_by", budget_tokens="budget_tokens",
+        budget_frac="budget_frac", tiebreak_col="tiebreak_column",
+        keep_col="keep_column",
+    ),
+    configs.NegativeSamples: _bind(
+        "llmops.split:negative_samples",
+        "@entity_name", "@pool_name", "anchor_column", "pool_column",
+        k="k", seed="seed", exclude_self="exclude_self",
+        pool_cols="pool_columns",
+    ),
+    configs.InterleaveSources: _bind(
+        "llmops.split:interleave_sources",
+        "@entity_name", "source_column", "weights", "key_column",
+        seed="seed", order_col="order_column",
+    ),
+    # -- analytics / statistics ----------------------------------------------
+    configs.AsofJoin: _bind(
+        "llmops.asof:asof_join", "@entity_name", "@target_name", "on",
+        left_ts="left_ts", right_ts="right_ts", value_cols="value_columns",
+        prefix="prefix", direction="direction", tolerance="tolerance",
+    ),
+    configs.FuzzyJoin: _bind(
+        "llmops.linkage:fuzzy_string_join",
+        "@entity_name", "@right_entity", "left_column", "right_column",
+        max_distance="max_distance", prefix_len="prefix_len",
+        length_bucket="length_bucket", prefix="prefix",
+    ),
+    configs.SaltedJoin: _bind(
+        "scale:salted_left_join", "@entity_name", "@target_name", "key",
+        n_salts="n_salts", how="how",
+    ),
+    configs.ProfileColumns: _bind(
+        "llmops.analytics:profile_columns", "@entity_name", "columns"
+    ),
+    configs.ProfileDiff: _bind(
+        "llmops.analytics:profile_diff", "@entity_name", "@target_name",
+        columns="columns",
+    ),
+    configs.GroupedQuantiles: _bind(
+        "llmops.analytics:grouped_quantiles",
+        "@entity_name", "group_by", "value_column", "probs",
+        round_to="round_to",
+    ),
+    configs.SampledQuantiles: _bind(
+        "llmops.analytics:sampled_quantiles",
+        "@entity_name", "group_by", "value_column", "key_column", "probs",
+        k="k", round_to="round_to", seed="seed",
+    ),
+    configs.FrequentItems: _bind(
+        "llmops.analytics:frequent_items",
+        "@entity_name", "group_by", "value_column", "k",
+        min_count="min_count",
+    ),
+    configs.QuantileBuckets: _bind(
+        "llmops.analytics:quantile_buckets",
+        "@entity_name", "group_by", "value_column", "n_buckets",
+        bucket_col="bucket_column",
+    ),
+    configs.OutlierFlags: _bind(
+        "llmops.analytics:outlier_flags",
+        "@entity_name", "group_by", "value_column",
+        factor="factor", flag_col="flag_column",
+    ),
+    configs.ApproxDistinct: _bind(
+        "llmops.sketch:kmv_distinct",
+        "@entity_name", "group_by", "value_column",
+        k="k", seed="seed",
+    ),
+    configs.HeavyHitters: _bind(
+        "llmops.sketch:heavy_hitters",
+        "@entity_name", "value_column", "min_count",
+        weight_col="weight_column", depth="depth", width="width",
+        seed="seed",
+    ),
+    configs.WindowedHeavyHitters: _bind(
+        "llmops.sketch:windowed_heavy_hitters",
+        "@cells_entity", "@entity_name", "ts_column", "value_column",
+        "min_count",
+        window_seconds="window_seconds", depth="depth", width="width",
+        seed="seed", check_totals="check_totals",
+    ),
+    configs.GroupedAuc: _bind(
+        "llmops.stats:grouped_auc",
+        "@entity_name", "score_column", "label_column",
+        group_cols="group_by",
+    ),
+    configs.Chi2Drift: _bind(
+        "llmops.stats:chi2_drift", "@entity_name", "@target_name", "column",
+        round_to="round_to",
+    ),
+    configs.GroupedRegression: _bind(
+        "llmops.stats:grouped_regression",
+        "@entity_name", "group_by", "x_column", "y_column",
+        scale="scale", round_to="round_to",
+    ),
+    configs.Standardize: _bind(
+        "llmops.stats:standardize", "@entity_name", "value_column",
+        group_cols="group_by", method="method", out_col="output_column",
+        ddof="ddof", broadcast_stats="broadcast_stats",
+    ),
+    configs.RetentionCohorts: _bind(
+        "llmops.events:retention_cohorts",
+        "@entity_name", "user_column", "ts_us_column",
+        period_us="period_us",
+    ),
+    # -- graphs --------------------------------------------------------------
+    configs.PageRankStep: _bind(
+        "llmops.graph:pagerank", "@entity_name",
+        src_col="src_column", dst_col="dst_column",
+        weight_col="weight_column", iterations="iterations",
+        damping="damping",
+    ),
+    configs.TriangleCount: _bind(
+        "llmops.graph:triangle_count", "@entity_name",
+        src_col="src_column", dst_col="dst_column",
+    ),
+    # -- change data ---------------------------------------------------------
+    configs.MergeUpsert: _bind(
+        "merge:merge_upsert", "@entity_name", "@target_name", "keys",
+        update_cols="update_columns", sequence_col="sequence_column",
+        insert_missing="insert_missing",
+    ),
+    configs.ApplyChanges: _bind(
+        "merge:apply_changes", "@entity_name", "@target_name", "keys",
+        op_col="op_column", sequence_col="sequence_column",
+    ),
+    configs.SnapshotDiff: _bind(
+        "merge:snapshot_diff", "@entity_name", "@target_name", "keys",
+        op_col="op_column", compare_cols="compare_columns",
+    ),
+    configs.Scd2Build: _bind(
+        "merge:scd2_from_ledger", "@entity_name", "keys",
+        sequence_col="sequence_column", op_col="op_column",
+    ),
+    # -- web -----------------------------------------------------------------
+    configs.ExtractHtmlText: _bind(
+        "llmops.web:extract_html_text", "@entity_name", "html_column",
+        unescape="unescape", output_col="output_column",
+    ),
+    configs.ExtractLinks: _bind(
+        "llmops.web:extract_links", "@entity_name", "html_column",
+        base_url_col="base_url_column", output_col="output_column",
+        unique="unique",
+    ),
+    configs.ExtractAnchorTexts: _bind(
+        "llmops.web:extract_anchor_texts", "@entity_name", "html_column",
+        output_href="output_href", output_text="output_text",
+    ),
+    configs.ParseJson: _bind(
+        "llmops.web:parse_json_column",
+        "@entity_name", "json_column", "json_schema",
+        output_col="output_column", valid_col="valid_column",
+    ),
+    configs.UrlBlocklist: _bind(
+        "llmops.web:url_blocklist",
+        "@entity_name", "@target_name", "url_column",
+        id_col="id_column", blocked_host_col="blocked_host_column",
+        host_col="host_column", max_labels="max_labels",
+        flag_col="flag_column",
+    ),
+    configs.ParseRobots: _bind(
+        "llmops.robots:parse_robots",
+        "@entity_name", "host_column", "robots_column",
+    ),
+    configs.RobotsAllowed: _bind(
+        "llmops.robots:robots_allowed",
+        "@entity_name", "@rules_name", "url_column",
+        agent="agent", host_col="host_column", out_col="output_column",
+    ),
+}
 
 
 class StepEngine:
@@ -242,73 +641,26 @@ class StepEngine:
             QualityFilters: self.quality_filters,
             SimilarityTopK: self.similarity_topk,
             EmbeddingNearDup: self.embedding_neardup,
-            TextStats: self.text_stats,
-            RepetitionStats: self.text_repetition,
-            PiiScrub: self.pii_scrub,
-            Decontaminate: self.decontaminate,
-            ChunkDocuments: self.chunk_documents,
-            PackSequences: self.pack_sequences,
-            LabelCentroids: self.label_centroids,
-            NearestCentroid: self.nearest_centroid,
-            BuildVocab: self.build_vocab,
-            KnnJoin: self.knn_join,
             KMeansFit: self.kmeans,
-            LanguageId: self.lang_id,
-            TfIdfTopTerms: self.tfidf_top_terms,
-            TextFingerprint: self.text_fingerprint,
-            SimHashSignatures: self.dedup_simhash,
-            SimHashPairs: self.dedup_simhash_pairs,
-            NgramJaccardPairs: self.dedup_ngram_pairs,
-            HashSplit: self.hash_split,
-            HashSample: self.hash_sample,
-            StratifiedSample: self.stratified_sample,
-            AsofJoin: self.asof_join,
             ConnectedComponents: self.connected_components,
             Sessionize: self.sessionize,
             IntervalJoin: self.interval_join,
             TopKPerGroup: self.top_k,
             RollingAggregate: self.rolling_agg,
             IncrementalDedup: self.dedup_incremental,
-            ContainmentPairs: self.dedup_containment_pairs,
-            WeightedSample: self.weighted_sample,
-            ApproxDistinct: self.approx_distinct,
-            GroupedQuantiles: self.grouped_quantiles,
-            ProfileColumns: self.profile,
-            FuzzyJoin: self.fuzzy_join,
-            Bm25Search: self.bm25,
-            PageRankStep: self.pagerank,
-            EncodeTokens: self.encode_tokens,
             ProfileGate: self.profile_gate,
-            FrequentItems: self.frequent_items,
-            ProfileDiff: self.profile_diff,
-            QuantileBuckets: self.quantile_buckets,
-            OutlierFlags: self.outlier_flags,
-            MergeUpsert: self.merge_upsert,
-            ApplyChanges: self.apply_changes,
-            TriangleCount: self.triangle_count,
-            ParagraphDedup: self.paragraph_dedup,
             SemanticDedup: self.semantic_dedup,
             PcaProject: self.pca_project,
             HllProfile: self.hll_profile,
             LmPerplexity: self.lm_perplexity,
             SharedSpans: self.shared_spans,
-            GroupedAuc: self.grouped_auc,
-            SampledQuantiles: self.sampled_quantiles,
-            QuantizeVectors: self.quantize_vectors,
-            SaltedJoin: self.salted_join,
             ProjectVectors: self.project_vectors,
-            CorpusMix: self.corpus_mix,
-            SnapshotDiff: self.snapshot_diff,
-            Scd2Build: self.scd2,
             ExactQuotaSample: self.exact_quota_sample,
             Winsorize: self.winsorize,
             Impute: self.impute,
             KmvSetOps: self.kmv_set,
-            RetentionCohorts: self.retention_cohorts,
             WindowFunnel: self.window_funnel,
             Unpivot: self.unpivot,
-            Chi2Drift: self.chi2_drift,
-            GroupedRegression: self.grouped_regression,
             EcdfNormalize: self.ecdf_normalize,
             BucketByLength: self.bucket_by_length,
             SqlQuery: self.sql_query,
@@ -316,105 +668,35 @@ class StepEngine:
             BpeEncode: self.bpe_encode,
             Repartition: self.repartition,
             Pseudonymize: self.pseudonymize,
-            ClusterRepresentatives: self.cluster_representatives,
-            RenderChat: self.render_chat,
-            ConversationStats: self.conversation_stats,
-            NormalizeText: self.normalize_text,
             CmsSketch: self.cms_sketch,
             BloomFilter: self.bloom_filter,
             DsirResample: self.dsir_resample,
             RrfFuse: self.rrf_fuse,
-            NegativeSamples: self.negative_samples,
-            ExtractHtmlText: self.extract_html_text,
-            ExtractLinks: self.extract_links,
-            ExtractAnchorTexts: self.extract_anchor_texts,
             ClassifierFit: self.classifier_fit,
-            RemoveRepeatedSubstrings: self.remove_repeated_substrings,
             ClassifierScore: self.classifier_score,
             ClassifierEval: self.classifier_eval,
-            CompactMinhashIndex: self.compact_minhash_index,
-            WindowedHeavyHitters: self.windowed_heavy_hitters,
             PQFit: self.pq_fit,
-            AnnRecall: self.ann_recall,
             PQTopKMany: self.pq_topk_many,
             PQEncode: self.pq_encode,
-            GopherQualityFlags: self.gopher_quality_flags,
-            GopherRepetitionFlags: self.gopher_repetition_flags,
-            C4Clean: self.c4_clean,
-            UrlBlocklist: self.url_blocklist,
-            PairRecall: self.pair_recall,
             WordLm: self.word_lm,
-            MojibakeStats: self.mojibake_stats,
-            FixMojibake: self.fix_mojibake,
-            HeavyHitters: self.heavy_hitters,
-            InterleaveSources: self.interleave_sources,
-            HardNegativeSamples: self.hard_negative_samples,
-            ParseRobots: self.parse_robots,
-            RobotsAllowed: self.robots_allowed,
-            ParseJson: self.parse_json,
-            MaterializePacks: self.materialize_packs,
-            CompressionRatio: self.compression_ratio,
-            Standardize: self.standardize,
-            SplitSentences: self.split_sentences,
-            ChunkBySentences: self.chunk_by_sentences,
-            ChunkByContent: self.chunk_by_content,
-            SelectTokenBudget: self.select_token_budget,
-            ScriptProfile: self.script_profile,
         }
 
     # -- dispatch ----------------------------------------------------------
     def evaluate(self, entities: Entities, *, config: AnyStep) -> Messages:
+        binding = BINDINGS.get(type(config))
+        if binding is not None:
+            entities[config.output_name] = binding(entities, config)
+            return None
         handler = self._handlers.get(type(config))
         if handler is None:
             raise ConfigurationError(f"unsupported step type {type(config).__name__}")
         return handler(entities, config=config)
 
-    def run(
-        self,
-        entities: Entities,
-        steps: list[AnyStep],
-        *,
-        persist_reused: bool = False,
-        persist_threshold: int = 2,
-    ) -> Messages:
-        """Evaluate a list of steps in order; returns the unioned messages.
-
-        ``persist_reused=True`` runs the driver-side ref-count pass
-        (scale.entity_read_counts — the SURVEY §7 persist-placement hook)
-        and persists every entity read by >= ``persist_threshold`` steps
-        the first time it is seen, so an N-consumer lineage computes once
-        instead of N times. Persists register with the engine's cache list
-        — call :meth:`cleanup` when the run's outputs have been
-        materialised. Opt-in: persisting trades executor memory for
-        recompute, a call the optimizer cannot make statically.
-        """
-        from pyspark import StorageLevel
-
-        from data_validation_engine_spark.scale import hot_entities
-
-        hot = (
-            hot_entities(steps, threshold=persist_threshold)
-            if persist_reused
-            else set()
-        )
-        pinned: set[int] = set()
-
-        def _pin_hot() -> None:
-            for name in hot & set(entities.keys()):
-                frame = entities[name]
-                if id(frame) not in pinned:
-                    entities[name] = frame.persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
-                    self._persisted.append(entities[name])
-                    pinned.add(id(entities[name]))
-
-        _pin_hot()
+    def run(self, entities: Entities, steps: list[AnyStep]) -> Messages:
+        """Evaluate a list of steps in order; returns the unioned messages."""
         collector = MessageCollector()
         for step in steps:
             collector.add(self.evaluate(entities, config=step))
-            if hot:
-                _pin_hot()
         return collector.union()
 
     # -- column / projection ----------------------------------------------
@@ -851,9 +1133,9 @@ class StepEngine:
         return None
 
     # -- corpus (llmops) steps ---------------------------------------------
-    # Thin dispatch over :mod:`llmops` so corpus cleaning is declarable in a
-    # dischema ``transformations`` list like any validation step (imports
-    # are local: llmops is an optional surface for pure-validation users).
+    # The llmops steps that need more than a binding row. Imports are
+    # local, as in BINDINGS: llmops is an optional surface for
+    # pure-validation users, and importing the engine loads none of it.
 
     def dedup_exact(self, entities: Entities, *, config: ExactDedup) -> Messages:
         from data_validation_engine_spark.llmops.dedup import exact_dedup
@@ -938,120 +1220,6 @@ class StepEngine:
         )
         return None
 
-    def text_stats(self, entities: Entities, *, config: TextStats) -> Messages:
-        from data_validation_engine_spark.llmops.text import text_stats
-
-        entities[config.output_name] = text_stats(
-            entities[config.entity_name], config.id_column, config.text_column
-        )
-        return None
-
-    def text_repetition(
-        self, entities: Entities, *, config: RepetitionStats
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import repetition_stats
-
-        entities[config.output_name] = repetition_stats(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            max_top_token_frac=config.max_top_token_frac,
-            max_dup_bigram_frac=config.max_dup_bigram_frac,
-        )
-        return None
-
-    def pii_scrub(self, entities: Entities, *, config: PiiScrub) -> Messages:
-        from data_validation_engine_spark.llmops.text import pii_scrub
-
-        entities[config.output_name] = pii_scrub(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            out_col=config.clean_column,
-        )
-        return None
-
-    def decontaminate(
-        self, entities: Entities, *, config: Decontaminate
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.decontam import decontaminate
-
-        entities[config.output_name] = decontaminate(
-            entities[config.entity_name],
-            entities[config.target_name],
-            config.id_column,
-            config.text_column,
-            ngram=config.ngram,
-        )
-        return None
-
-    def chunk_documents(
-        self, entities: Entities, *, config: ChunkDocuments
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            chunk_documents,
-        )
-
-        entities[config.output_name] = chunk_documents(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            chunk_tokens=config.chunk_tokens,
-            overlap=config.overlap,
-        )
-        return None
-
-    def pack_sequences(
-        self, entities: Entities, *, config: PackSequences
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            pack_sequences,
-        )
-
-        entities[config.output_name] = pack_sequences(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            capacity=config.capacity,
-            n_shards=config.n_shards,
-            seed=config.seed,
-        )
-        return None
-
-    def label_centroids(
-        self, entities: Entities, *, config: LabelCentroids
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.vectors import (
-            label_centroids,
-        )
-
-        entities[config.output_name] = label_centroids(
-            entities[config.entity_name],
-            config.label_column,
-            config.id_column,
-            config.vector_column,
-            dim=config.dim,
-            segment_size=config.segment_size,
-        )
-        return None
-
-    def nearest_centroid(
-        self, entities: Entities, *, config: NearestCentroid
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.vectors import (
-            nearest_centroid,
-        )
-
-        entities[config.output_name] = nearest_centroid(
-            entities[config.entity_name],
-            entities[config.target_name],
-            id_col=config.id_column,
-            vec_col=config.vector_column,
-            label_col=config.label_column,
-            centroid_col=config.centroid_column,
-        )
-        return None
-
     def kmeans(self, entities: Entities, *, config: KMeansFit) -> Messages:
         from data_validation_engine_spark.llmops.ivf import ivf_assign
         from data_validation_engine_spark.llmops.vectors import kmeans_fit
@@ -1086,179 +1254,6 @@ class StepEngine:
                 F.coalesce(F.col("n"), F.lit(0)).alias("n"),
                 "centroid",
             )
-        )
-        return None
-
-    def knn_join(self, entities: Entities, *, config: KnnJoin) -> Messages:
-        from data_validation_engine_spark.llmops.similarity import knn_join
-
-        entities[config.output_name] = knn_join(
-            entities[config.entity_name],
-            config.k,
-            id_col=config.id_column,
-            vec_col=config.vector_column,
-            n_planes=config.n_planes,
-            n_tables=config.n_tables,
-            dim=config.dim,
-        )
-        return None
-
-    def build_vocab(
-        self, entities: Entities, *, config: BuildVocab
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import build_vocab
-
-        entities[config.output_name] = build_vocab(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            min_count=config.min_count,
-            min_doc_freq=config.min_doc_freq,
-        )
-        return None
-
-    def lang_id(self, entities: Entities, *, config: LanguageId) -> Messages:
-        from data_validation_engine_spark.llmops.text import language_id
-
-        entities[config.output_name] = language_id(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            out_col=config.lang_column,
-        )
-        return None
-
-    def tfidf_top_terms(
-        self, entities: Entities, *, config: TfIdfTopTerms
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import tfidf_top_terms
-
-        entities[config.output_name] = tfidf_top_terms(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            top_n=config.top_n,
-        )
-        return None
-
-    def text_fingerprint(
-        self, entities: Entities, *, config: TextFingerprint
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import text_fingerprint
-
-        entities[config.output_name] = text_fingerprint(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            shingle_size=config.shingle_size,
-            winnow_k=config.winnow_k,
-        )
-        return None
-
-    def dedup_simhash(
-        self, entities: Entities, *, config: SimHashSignatures
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import simhash_table
-
-        entities[config.output_name] = simhash_table(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            bits=config.bits,
-        )
-        return None
-
-    def dedup_simhash_pairs(
-        self, entities: Entities, *, config: SimHashPairs
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import simhash_pairs
-
-        entities[config.output_name] = simhash_pairs(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            bits=config.bits,
-            max_hamming=config.max_hamming,
-        )
-        return None
-
-    def hash_split(self, entities: Entities, *, config: HashSplit) -> Messages:
-        from data_validation_engine_spark.llmops.split import hash_split
-
-        entities[config.output_name] = hash_split(
-            entities[config.entity_name],
-            config.key_column,
-            splits=dict(config.splits),
-            seed=config.seed,
-            split_col=config.split_column,
-        )
-        return None
-
-    def asof_join(self, entities: Entities, *, config: AsofJoin) -> Messages:
-        from data_validation_engine_spark.llmops.asof import asof_join
-
-        entities[config.output_name] = asof_join(
-            entities[config.entity_name],
-            entities[config.target_name],
-            list(config.on),
-            left_ts=config.left_ts,
-            right_ts=config.right_ts,
-            value_cols=(
-                list(config.value_columns)
-                if config.value_columns is not None
-                else None
-            ),
-            prefix=config.prefix,
-            direction=config.direction,
-            tolerance=config.tolerance,
-        )
-        return None
-
-    def stratified_sample(
-        self, entities: Entities, *, config: StratifiedSample
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            stratified_sample,
-        )
-
-        entities[config.output_name] = stratified_sample(
-            entities[config.entity_name],
-            config.key_column,
-            config.strata_column,
-            dict(config.fractions),
-            default_fraction=config.default_fraction,
-            seed=config.seed,
-        )
-        return None
-
-    def hash_sample(
-        self, entities: Entities, *, config: HashSample
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            deterministic_sample,
-        )
-
-        entities[config.output_name] = deterministic_sample(
-            entities[config.entity_name],
-            config.key_column,
-            config.fraction,
-            seed=config.seed,
-        )
-        return None
-
-    def dedup_ngram_pairs(
-        self, entities: Entities, *, config: NgramJaccardPairs
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import (
-            ngram_jaccard_pairs,
-        )
-
-        entities[config.output_name] = ngram_jaccard_pairs(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            shingle_size=config.shingle_size,
-            threshold=config.threshold,
         )
         return None
 
@@ -1493,140 +1488,6 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    def dedup_containment_pairs(
-        self, entities: Entities, *, config: ContainmentPairs
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import (
-            containment_pairs,
-        )
-
-        entities[config.output_name] = containment_pairs(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            threshold=config.threshold,
-            shingle_size=config.shingle_size,
-        )
-        return None
-
-    def weighted_sample(
-        self, entities: Entities, *, config: WeightedSample
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import weighted_sample
-
-        entities[config.output_name] = weighted_sample(
-            entities[config.entity_name],
-            config.key_column,
-            config.weight_column,
-            rate=config.rate,
-            seed=config.seed,
-        )
-        return None
-
-    def approx_distinct(
-        self, entities: Entities, *, config: ApproxDistinct
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.sketch import kmv_distinct
-
-        entities[config.output_name] = kmv_distinct(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            k=config.k,
-            seed=config.seed,
-        )
-        return None
-
-    def grouped_quantiles(
-        self, entities: Entities, *, config: GroupedQuantiles
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            grouped_quantiles,
-        )
-
-        entities[config.output_name] = grouped_quantiles(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            list(config.probs),
-            round_to=config.round_to,
-        )
-        return None
-
-    def profile(
-        self, entities: Entities, *, config: ProfileColumns
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            profile_columns,
-        )
-
-        entities[config.output_name] = profile_columns(
-            entities[config.entity_name],
-            list(config.columns) if config.columns is not None else None,
-        )
-        return None
-
-    def fuzzy_join(self, entities: Entities, *, config: FuzzyJoin) -> Messages:
-        from data_validation_engine_spark.llmops.linkage import (
-            fuzzy_string_join,
-        )
-
-        entities[config.output_name] = fuzzy_string_join(
-            entities[config.entity_name],
-            entities[config.right_entity],
-            config.left_column,
-            config.right_column,
-            max_distance=config.max_distance,
-            prefix_len=config.prefix_len,
-            length_bucket=config.length_bucket,
-            prefix=config.prefix,
-        )
-        return None
-
-    def bm25(self, entities: Entities, *, config: Bm25Search) -> Messages:
-        from data_validation_engine_spark.llmops.text import bm25_search
-
-        entities[config.output_name] = bm25_search(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            config.query,
-            k1=config.k1,
-            b=config.b,
-            round_to=config.round_to,
-            detail=config.detail,
-        )
-        return None
-
-    def pagerank(
-        self, entities: Entities, *, config: PageRankStep
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.graph import pagerank
-
-        entities[config.output_name] = pagerank(
-            entities[config.entity_name],
-            src_col=config.src_column,
-            dst_col=config.dst_column,
-            weight_col=config.weight_column,
-            iterations=config.iterations,
-            damping=config.damping,
-        )
-        return None
-
-    def encode_tokens(
-        self, entities: Entities, *, config: EncodeTokens
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import encode_tokens
-
-        entities[config.output_name] = encode_tokens(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            entities[config.vocab_entity],
-            unk_id=config.unk_id,
-        )
-        return None
-
     def profile_gate(
         self, entities: Entities, *, config: ProfileGate
     ) -> Messages:
@@ -1720,135 +1581,6 @@ class StepEngine:
 
         return union_messages(feeds)
 
-    def frequent_items(
-        self, entities: Entities, *, config: FrequentItems
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            frequent_items,
-        )
-
-        entities[config.output_name] = frequent_items(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            config.k,
-            min_count=config.min_count,
-        )
-        return None
-
-    def profile_diff(
-        self, entities: Entities, *, config: ProfileDiff
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            profile_diff,
-        )
-
-        entities[config.output_name] = profile_diff(
-            entities[config.entity_name],
-            entities[config.target_name],
-            # 'is not None': an explicitly-declared empty scope means
-            # 'diff zero columns', not 'diff everything'
-            columns=list(config.columns)
-            if config.columns is not None
-            else None,
-        )
-        return None
-
-    def quantile_buckets(
-        self, entities: Entities, *, config: QuantileBuckets
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            quantile_buckets,
-        )
-
-        entities[config.output_name] = quantile_buckets(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            config.n_buckets,
-            bucket_col=config.bucket_column,
-        )
-        return None
-
-    def outlier_flags(
-        self, entities: Entities, *, config: OutlierFlags
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            outlier_flags,
-        )
-
-        entities[config.output_name] = outlier_flags(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            factor=config.factor,
-            flag_col=config.flag_column,
-        )
-        return None
-
-    def merge_upsert(
-        self, entities: Entities, *, config: MergeUpsert
-    ) -> Messages:
-        from data_validation_engine_spark.merge import merge_upsert
-
-        entities[config.output_name] = merge_upsert(
-            entities[config.entity_name],
-            entities[config.target_name],
-            list(config.keys),
-            update_cols=list(config.update_columns)
-            if config.update_columns is not None
-            else None,
-            sequence_col=config.sequence_column,
-            insert_missing=config.insert_missing,
-        )
-        return None
-
-    def apply_changes(
-        self, entities: Entities, *, config: ApplyChanges
-    ) -> Messages:
-        from data_validation_engine_spark.merge import apply_changes
-
-        entities[config.output_name] = apply_changes(
-            entities[config.entity_name],
-            entities[config.target_name],
-            list(config.keys),
-            op_col=config.op_column,
-            sequence_col=config.sequence_column,
-        )
-        return None
-
-    def triangle_count(
-        self, entities: Entities, *, config: TriangleCount
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.graph import triangle_count
-
-        entities[config.output_name] = triangle_count(
-            entities[config.entity_name],
-            src_col=config.src_column,
-            dst_col=config.dst_column,
-        )
-        return None
-
-    def paragraph_dedup(
-        self, entities: Entities, *, config: ParagraphDedup
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.paragraphs import (
-            remove_repeated_paragraphs,
-        )
-
-        entities[config.output_name] = remove_repeated_paragraphs(
-            entities[config.entity_name],
-            config.key_column,
-            config.text_column,
-            sep=config.separator,
-            min_chars=config.min_chars,
-            normalize=config.normalize,
-            max_docs=config.max_docs,
-            keep=config.keep,
-            out_col=config.output_column,
-        )
-        return None
-
     def semantic_dedup(
         self, entities: Entities, *, config: SemanticDedup
     ) -> Messages:
@@ -1867,19 +1599,6 @@ class StepEngine:
             n_cells=config.n_cells,
             threshold=config.threshold,
             n_iters=config.n_iters,
-        )
-        return None
-
-    def grouped_auc(
-        self, entities: Entities, *, config: GroupedAuc
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.stats import grouped_auc
-
-        entities[config.output_name] = grouped_auc(
-            entities[config.entity_name],
-            config.score_column,
-            config.label_column,
-            group_cols=list(config.group_by),
         )
         return None
 
@@ -2051,98 +1770,6 @@ class StepEngine:
             )
         return None
 
-    def sampled_quantiles(
-        self, entities: Entities, *, config: SampledQuantiles
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            sampled_quantiles,
-        )
-
-        entities[config.output_name] = sampled_quantiles(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.value_column,
-            config.key_column,
-            list(config.probs),
-            k=config.k,
-            round_to=config.round_to,
-            seed=config.seed,
-        )
-        return None
-
-    def salted_join(
-        self, entities: Entities, *, config: SaltedJoin
-    ) -> Messages:
-        from data_validation_engine_spark.scale import salted_left_join
-
-        entities[config.output_name] = salted_left_join(
-            entities[config.entity_name],
-            entities[config.target_name],
-            config.key,
-            n_salts=config.n_salts,
-            how=config.how,
-        )
-        return None
-
-    def quantize_vectors(
-        self, entities: Entities, *, config: QuantizeVectors
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.vectors import (
-            quantize_vectors,
-        )
-
-        entities[config.output_name] = quantize_vectors(
-            entities[config.entity_name],
-            config.id_column,
-            config.vector_column,
-            round_to=config.round_to,
-        )
-        return None
-
-    def snapshot_diff(
-        self, entities: Entities, *, config: SnapshotDiff
-    ) -> Messages:
-        from data_validation_engine_spark.merge import snapshot_diff
-
-        entities[config.output_name] = snapshot_diff(
-            entities[config.entity_name],
-            entities[config.target_name],
-            list(config.keys),
-            op_col=config.op_column,
-            compare_cols=list(config.compare_columns)
-            if config.compare_columns is not None
-            else None,
-        )
-        return None
-
-    def corpus_mix(
-        self, entities: Entities, *, config: CorpusMix
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import corpus_mix
-
-        entities[config.output_name] = corpus_mix(
-            entities[config.entity_name],
-            config.key_column,
-            config.label_column,
-            config.weight_column,
-            dict(config.targets) if config.targets is not None else None,
-            config.budget,
-            temperature=config.temperature,
-            seed=config.seed,
-        )
-        return None
-
-    def scd2(self, entities: Entities, *, config: Scd2Build) -> Messages:
-        from data_validation_engine_spark.merge import scd2_from_ledger
-
-        entities[config.output_name] = scd2_from_ledger(
-            entities[config.entity_name],
-            list(config.keys),
-            sequence_col=config.sequence_column,
-            op_col=config.op_column,
-        )
-        return None
-
     def exact_quota_sample(
         self, entities: Entities, *, config: ExactQuotaSample
     ) -> Messages:
@@ -2218,21 +1845,6 @@ class StepEngine:
         )
         return None
 
-    def retention_cohorts(
-        self, entities: Entities, *, config: RetentionCohorts
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.events import (
-            retention_cohorts,
-        )
-
-        entities[config.output_name] = retention_cohorts(
-            entities[config.entity_name],
-            config.user_column,
-            config.ts_us_column,
-            period_us=config.period_us,
-        )
-        return None
-
     def window_funnel(
         self, entities: Entities, *, config: WindowFunnel
     ) -> Messages:
@@ -2256,36 +1868,6 @@ class StepEngine:
         )
         return None
 
-    def chi2_drift(
-        self, entities: Entities, *, config: Chi2Drift
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.stats import chi2_drift
-
-        entities[config.output_name] = chi2_drift(
-            entities[config.entity_name],
-            entities[config.target_name],
-            config.column,
-            round_to=config.round_to,
-        )
-        return None
-
-    def grouped_regression(
-        self, entities: Entities, *, config: GroupedRegression
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.stats import (
-            grouped_regression,
-        )
-
-        entities[config.output_name] = grouped_regression(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.x_column,
-            config.y_column,
-            scale=config.scale,
-            round_to=config.round_to,
-        )
-        return None
-
     def pseudonymize(
         self, entities: Entities, *, config: Pseudonymize
     ) -> Messages:
@@ -2304,235 +1886,6 @@ class StepEngine:
                 c, F.when(F.col(c).isNotNull(), token)
             )
         entities[config.output_name] = df
-        return None
-
-    def cluster_representatives(
-        self, entities: Entities, *, config: ClusterRepresentatives
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import (
-            cluster_representatives,
-        )
-
-        entities[config.output_name] = cluster_representatives(
-            entities[config.entity_name],
-            config.cluster_column,
-            score_col=config.score_column,
-            id_col=config.id_column,
-        )
-        return None
-
-    def render_chat(
-        self, entities: Entities, *, config: RenderChat
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chat import render_chat
-
-        entities[config.output_name] = render_chat(
-            entities[config.entity_name],
-            config.key_column,
-            config.conversation_column,
-            role_open=config.role_open,
-            role_close=config.role_close,
-            turn_end=config.turn_end,
-            mask_roles=tuple(config.mask_roles),
-        )
-        return None
-
-    def conversation_stats(
-        self, entities: Entities, *, config: ConversationStats
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chat import (
-            conversation_stats,
-        )
-
-        entities[config.output_name] = conversation_stats(
-            entities[config.entity_name],
-            config.key_column,
-            config.conversation_column,
-            user_role=config.user_role,
-            assistant_role=config.assistant_role,
-            system_role=config.system_role,
-        )
-        return None
-
-    def normalize_text(
-        self, entities: Entities, *, config: NormalizeText
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.normalize import (
-            normalize_text,
-        )
-
-        entities[config.output_name] = normalize_text(
-            entities[config.entity_name],
-            config.text_column,
-            form=config.form,
-            lowercase=config.lowercase,
-            strip_control=config.strip_control,
-            collapse_whitespace=config.collapse_whitespace,
-            output_col=config.output_column,
-        )
-        return None
-
-    def split_sentences(
-        self, entities: Entities, *, config: SplitSentences
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.paragraphs import (
-            split_sentences,
-        )
-
-        entities[config.output_name] = split_sentences(
-            entities[config.entity_name],
-            config.key_column,
-            config.text_column,
-            min_chars=config.min_chars,
-        )
-        return None
-
-    def standardize(
-        self, entities: Entities, *, config: Standardize
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.stats import standardize
-
-        entities[config.output_name] = standardize(
-            entities[config.entity_name],
-            config.value_column,
-            group_cols=list(config.group_by),
-            method=config.method,
-            out_col=config.output_column,
-            ddof=config.ddof,
-            broadcast_stats=config.broadcast_stats,
-        )
-        return None
-
-    def select_token_budget(
-        self, entities: Entities, *, config: SelectTokenBudget
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            select_token_budget,
-        )
-
-        entities[config.output_name] = select_token_budget(
-            entities[config.entity_name],
-            config.score_column,
-            config.token_column,
-            group_cols=list(config.group_by),
-            budget_tokens=config.budget_tokens,
-            budget_frac=config.budget_frac,
-            tiebreak_col=config.tiebreak_column,
-            keep_col=config.keep_column,
-        )
-        return None
-
-    def chunk_by_sentences(
-        self, entities: Entities, *, config: ChunkBySentences
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            chunk_by_sentences,
-        )
-
-        entities[config.output_name] = chunk_by_sentences(
-            entities[config.entity_name],
-            config.key_column,
-            config.text_column,
-            max_tokens=config.max_tokens,
-            overlap_sentences=config.overlap_sentences,
-            min_chars=config.min_chars,
-        )
-        return None
-
-    def chunk_by_content(
-        self, entities: Entities, *, config: ChunkByContent
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            chunk_by_content,
-        )
-
-        entities[config.output_name] = chunk_by_content(
-            entities[config.entity_name],
-            config.key_column,
-            config.text_column,
-            target_tokens=config.target_tokens,
-            min_tokens=config.min_tokens,
-            max_tokens=config.max_tokens,
-            gram=config.gram,
-            seed=config.seed,
-        )
-        return None
-
-    def script_profile(
-        self, entities: Entities, *, config: ScriptProfile
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.text import script_profile
-
-        entities[config.output_name] = script_profile(
-            entities[config.entity_name],
-            config.text_column,
-            prefix=config.prefix,
-        )
-        return None
-
-    def compression_ratio(
-        self, entities: Entities, *, config: CompressionRatio
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.compress import (
-            compression_ratio,
-        )
-
-        entities[config.output_name] = compression_ratio(
-            entities[config.entity_name],
-            config.text_column,
-            level=config.level,
-            output_col=config.output_column,
-        )
-        return None
-
-    def materialize_packs(
-        self, entities: Entities, *, config: MaterializePacks
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            materialize_packs,
-        )
-
-        entities[config.output_name] = materialize_packs(
-            entities[config.entity_name],
-            config.key_column,
-            config.ids_column,
-            capacity=config.capacity,
-            n_shards=config.n_shards,
-            seed=config.seed,
-            pad_id=config.pad_token_id,
-            eod_id=config.eod_token_id,
-        )
-        return None
-
-    def extract_html_text(
-        self, entities: Entities, *, config: ExtractHtmlText
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.web import (
-            extract_html_text,
-        )
-
-        entities[config.output_name] = extract_html_text(
-            entities[config.entity_name],
-            config.html_column,
-            unescape=config.unescape,
-            output_col=config.output_column,
-        )
-        return None
-
-    def parse_json(
-        self, entities: Entities, *, config: ParseJson
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.web import (
-            parse_json_column,
-        )
-
-        entities[config.output_name] = parse_json_column(
-            entities[config.entity_name],
-            config.json_column,
-            config.json_schema,
-            output_col=config.output_column,
-            valid_col=config.valid_column,
-        )
         return None
 
     def cms_sketch(
@@ -2692,75 +2045,6 @@ class StepEngine:
         )
         return None
 
-    def negative_samples(
-        self, entities: Entities, *, config: NegativeSamples
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            negative_samples,
-        )
-
-        entities[config.output_name] = negative_samples(
-            entities[config.entity_name],
-            entities[config.pool_name],
-            config.anchor_column,
-            config.pool_column,
-            k=config.k,
-            seed=config.seed,
-            exclude_self=config.exclude_self,
-            pool_cols=list(config.pool_columns),
-        )
-        return None
-
-    def extract_links(
-        self, entities: Entities, *, config: ExtractLinks
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.web import extract_links
-
-        entities[config.output_name] = extract_links(
-            entities[config.entity_name],
-            config.html_column,
-            base_url_col=config.base_url_column,
-            output_col=config.output_column,
-            unique=config.unique,
-        )
-        return None
-
-    def extract_anchor_texts(
-        self, entities: Entities, *, config: ExtractAnchorTexts
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.web import (
-            extract_anchor_texts,
-        )
-
-        entities[config.output_name] = extract_anchor_texts(
-            entities[config.entity_name],
-            config.html_column,
-            output_href=config.output_href,
-            output_text=config.output_text,
-        )
-        return None
-
-    def remove_repeated_substrings(
-        self, entities: Entities, *, config: RemoveRepeatedSubstrings
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.substrings import (
-            remove_repeated_substrings,
-        )
-
-        entities[config.output_name] = remove_repeated_substrings(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            min_len=config.min_len,
-            min_docs=config.min_docs,
-            depth=config.depth,
-            width=config.width,
-            seed=config.seed,
-            out_col=config.output_column,
-            exact_verify=config.exact_verify,
-        )
-        return None
-
     def classifier_fit(
         self, entities: Entities, *, config: ClassifierFit
     ) -> Messages:
@@ -2867,108 +2151,6 @@ class StepEngine:
             )
         return None
 
-    def url_blocklist(
-        self, entities: Entities, *, config: UrlBlocklist
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.web import url_blocklist
-
-        entities[config.output_name] = url_blocklist(
-            entities[config.entity_name],
-            entities[config.target_name],
-            config.url_column,
-            id_col=config.id_column,
-            blocked_host_col=config.blocked_host_column,
-            host_col=config.host_column,
-            max_labels=config.max_labels,
-            flag_col=config.flag_column,
-        )
-        return None
-
-    def c4_clean(
-        self, entities: Entities, *, config: C4Clean
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.c4 import c4_clean
-
-        entities[config.output_name] = c4_clean(
-            entities[config.entity_name],
-            config.text_column,
-            min_line_words=config.min_line_words,
-            min_sentences=config.min_sentences,
-            clean_col=config.clean_column,
-            keep_col=config.keep_column,
-        )
-        return None
-
-    def gopher_quality_flags(
-        self, entities: Entities, *, config: GopherQualityFlags
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.gopher import (
-            gopher_quality_flags,
-        )
-
-        entities[config.output_name] = gopher_quality_flags(
-            entities[config.entity_name],
-            config.text_column,
-            min_words=config.min_words,
-            max_words=config.max_words,
-            min_mean_word_len=config.min_mean_word_len,
-            max_mean_word_len=config.max_mean_word_len,
-            max_symbol_word_ratio=config.max_symbol_word_ratio,
-            max_bullet_line_frac=config.max_bullet_line_frac,
-            max_ellipsis_line_frac=config.max_ellipsis_line_frac,
-            min_alpha_word_frac=config.min_alpha_word_frac,
-            min_stop_words=config.min_stop_words,
-            keep_col=config.keep_column,
-        )
-        return None
-
-    def mojibake_stats(
-        self, entities: Entities, *, config: MojibakeStats
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.normalize import (
-            mojibake_stats,
-        )
-
-        entities[config.output_name] = mojibake_stats(
-            entities[config.entity_name], config.text_column
-        )
-        return None
-
-    def fix_mojibake(
-        self, entities: Entities, *, config: FixMojibake
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.normalize import (
-            fix_mojibake,
-        )
-
-        entities[config.output_name] = fix_mojibake(
-            entities[config.entity_name],
-            config.text_column,
-            output_col=config.output_column,
-            flag_col=config.flag_column,
-        )
-        return None
-
-    def gopher_repetition_flags(
-        self, entities: Entities, *, config: GopherRepetitionFlags
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.gopher import (
-            gopher_repetition_flags,
-        )
-
-        entities[config.output_name] = gopher_repetition_flags(
-            entities[config.entity_name],
-            config.text_column,
-            max_dup_line_frac=config.max_dup_line_frac,
-            max_dup_para_frac=config.max_dup_para_frac,
-            max_dup_line_char_frac=config.max_dup_line_char_frac,
-            max_dup_para_char_frac=config.max_dup_para_char_frac,
-            max_top_gram_fracs=tuple(config.max_top_gram_fracs),
-            max_dup_gram_fracs=tuple(config.max_dup_gram_fracs),
-            keep_col=config.keep_column,
-        )
-        return None
-
     def pq_encode(
         self, entities: Entities, *, config: PQEncode
     ) -> Messages:
@@ -3016,36 +2198,6 @@ class StepEngine:
         entities[config.output_name] = spark.createDataFrame(
             pq_codebooks_to_rows(books),
             "subspace int, code int, centroid array<double>",
-        )
-        return None
-
-    def ann_recall(
-        self, entities: Entities, *, config: AnnRecall
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.recall import ann_recall
-
-        entities[config.output_name] = ann_recall(
-            entities[config.entity_name],
-            entities[config.target_name],
-            id_col=config.id_column,
-            group_cols=list(config.group_columns),
-            k=config.k,
-            recall_col=config.recall_column,
-        )
-        return None
-
-    def pair_recall(
-        self, entities: Entities, *, config: PairRecall
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.recall import pair_recall
-
-        entities[config.output_name] = pair_recall(
-            entities[config.entity_name],
-            entities[config.target_name],
-            id_a=config.id_a_column,
-            id_b=config.id_b_column,
-            group_cols=list(config.group_columns),
-            broadcast_exact=config.broadcast_exact,
         )
         return None
 
@@ -3164,124 +2316,6 @@ class StepEngine:
             char_n=config.char_n,
             threshold_prob=config.threshold_prob,
             group_cols=list(config.group_columns) or None,
-        )
-        return None
-
-    def compact_minhash_index(
-        self, entities: Entities, *, config: CompactMinhashIndex
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import (
-            compact_minhash_index,
-        )
-
-        entities[config.output_name] = compact_minhash_index(
-            entities[config.entity_name],
-            entities[config.live_entity],
-            config.id_column,
-        )
-        return None
-
-    def windowed_heavy_hitters(
-        self, entities: Entities, *, config: WindowedHeavyHitters
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.sketch import (
-            windowed_heavy_hitters,
-        )
-
-        entities[config.output_name] = windowed_heavy_hitters(
-            entities[config.cells_entity],
-            entities[config.entity_name],
-            config.ts_column,
-            config.value_column,
-            config.min_count,
-            window_seconds=config.window_seconds,
-            depth=config.depth,
-            width=config.width,
-            seed=config.seed,
-            check_totals=config.check_totals,
-        )
-        return None
-
-    def heavy_hitters(
-        self, entities: Entities, *, config: HeavyHitters
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.sketch import heavy_hitters
-
-        entities[config.output_name] = heavy_hitters(
-            entities[config.entity_name],
-            config.value_column,
-            config.min_count,
-            weight_col=config.weight_column,
-            depth=config.depth,
-            width=config.width,
-            seed=config.seed,
-        )
-        return None
-
-    def interleave_sources(
-        self, entities: Entities, *, config: InterleaveSources
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            interleave_sources,
-        )
-
-        entities[config.output_name] = interleave_sources(
-            entities[config.entity_name],
-            config.source_column,
-            dict(config.weights),
-            config.key_column,
-            seed=config.seed,
-            order_col=config.order_column,
-        )
-        return None
-
-    def hard_negative_samples(
-        self, entities: Entities, *, config: HardNegativeSamples
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.similarity import (
-            hard_negative_samples,
-        )
-
-        entities[config.output_name] = hard_negative_samples(
-            entities[config.entity_name],
-            config.k,
-            id_col=config.id_column,
-            vec_col=config.vector_column,
-            min_cosine=config.min_cosine,
-            max_cosine=config.max_cosine,
-            candidate_factor=config.candidate_factor,
-            n_planes=config.n_planes,
-            n_tables=config.n_tables,
-            dim=config.dim,
-        )
-        return None
-
-    def parse_robots(
-        self, entities: Entities, *, config: ParseRobots
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.robots import parse_robots
-
-        entities[config.output_name] = parse_robots(
-            entities[config.entity_name],
-            config.host_column,
-            config.robots_column,
-        )
-        return None
-
-    def robots_allowed(
-        self, entities: Entities, *, config: RobotsAllowed
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.robots import (
-            robots_allowed,
-        )
-
-        entities[config.output_name] = robots_allowed(
-            entities[config.entity_name],
-            entities[config.rules_name],
-            config.url_column,
-            agent=config.agent,
-            host_col=config.host_column,
-            out_col=config.output_column,
         )
         return None
 

@@ -10,7 +10,8 @@ allowlist of documented intentional uses.
 The submission path gets the same treatment for Python-built frames:
 a ``spark.createDataFrame(`` over a Python list is planned as an RDD
 that starts Python workers when evaluated, so each call site on that
-path is pinned below.
+path is pinned below. Importing the pipeline must also leave the llmops
+library unimported, so a submission's setup does not pay for it.
 """
 
 from __future__ import annotations
@@ -103,3 +104,22 @@ def test_create_dataframe_call_sites_are_pinned():
         if n != CREATE_DATAFRAME_ALLOWED.get(rel, 0)
     }
     assert not bad, f"spark.createDataFrame( call sites (found, allowed): {bad}"
+
+
+def test_pipeline_import_loads_no_llmops_module():
+    """Importing the pipeline must not import the llmops operator library:
+    the step engine resolves its bindings when a step runs, and an eager
+    import here would add its cost to every submission's setup."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys, data_validation_engine_spark.pipeline;"
+        "print(sorted(m for m in sys.modules"
+        " if m.startswith('data_validation_engine_spark.llmops')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]"

@@ -540,14 +540,11 @@ def test_identify_orphans_sub_millisecond_timestamps(engine, spark):
     assert flags == {1: False, 2: True}
 
 
-# -- driver-side ref-count persist placement (SURVEY §7 optional hook) ---------
+# -- driver-side ref-count pass (SURVEY §7 persist-placement hook) ------------
 
 
-def test_entity_read_counts_and_hot_set():
-    from data_validation_engine_spark.scale import (
-        entity_read_counts,
-        hot_entities,
-    )
+def test_entity_read_counts():
+    from data_validation_engine_spark.scale import entity_read_counts
     from data_validation_engine_spark.steps import parse_step
 
     steps = [
@@ -564,72 +561,60 @@ def test_entity_read_counts_and_hot_set():
     counts = entity_read_counts(steps)
     # remove_entity is NOT a read (it deletes without computing lineage)
     assert counts == {"a": 2, "b": 2, "c": 1}
-    assert hot_entities(steps) == {"a", "b"}
-    assert hot_entities(steps, threshold=3) == set()
 
 
-def test_run_persist_reused_matches_plain_run(spark):
-    """persist_reused changes caching, never results: the multi-consumer
-    step list produces identical entities either way, and the reused
-    input is registered for unpersist."""
-    from data_validation_engine_spark.steps import StepEngine, parse_step
-
-    steps = [
-        parse_step(
-            {"operation": "group_by", "entity_name": "orders",
-             "group_by": "o_custkey",
-             "agg_columns": {"count(1)": "n"},
-             "new_entity_name": "per_cust"}
-        ),
-        parse_step(
-            {"operation": "left_join", "entity_name": "customer",
-             "target_name": "per_cust",
-             "join_condition": "customer.c_custkey = per_cust.o_custkey",
-             "new_columns": {"per_cust.n": "n_orders"}}
-        ),
-        parse_step(
-            {"operation": "semi_join", "entity_name": "customer",
-             "target_name": "per_cust",
-             "join_condition": "customer.c_custkey = per_cust.o_custkey"}
-        ),
-    ]
-
-    def load():
-        return {
-            "orders": spark.read.parquet(
-                "/root/testdata/sf0.001/orders.parquet"
-            ),
-            "customer": spark.read.parquet(
-                "/root/testdata/sf0.001/customer.parquet"
-            ),
-        }
-
-    plain_ents = load()
-    StepEngine(spark).run(plain_ents, steps)
-    plain = {tuple(r) for r in plain_ents["customer"].collect()}
-
-    eng = StepEngine(spark)
-    cached_ents = load()
-    eng.run(cached_ents, steps, persist_reused=True)
-    cached = {tuple(r) for r in cached_ents["customer"].collect()}
-    assert cached == plain
-    # per_cust is read twice -> it must be in the engine's cache registry
-    assert cached_ents["per_cust"].storageLevel.useMemory
-    eng.cleanup()
-    assert not cached_ents["per_cust"].storageLevel.useMemory
-
-
-def test_every_declared_step_type_has_a_handler(spark):
+def test_every_declared_step_type_dispatches():
     """The AnyStep union IS the public vocabulary: every config type in
-    it must dispatch to a registered engine handler (a new config without
-    a handler would otherwise only fail at evaluate() time in
-    production)."""
+    it has exactly one of a hand-written handler or a binding row, and a
+    binding's function imports, names only real config fields, and
+    accepts the arguments the row passes (a broken row would otherwise
+    only fail at evaluate() time in production)."""
+    import inspect
     import typing
 
     from data_validation_engine_spark.steps.configs import AnyStep
-    from data_validation_engine_spark.steps.engine import StepEngine
+    from data_validation_engine_spark.steps.engine import BINDINGS, StepEngine
 
     union = typing.get_args(typing.get_args(AnyStep)[0])
-    eng = StepEngine(spark, register_functions=False)
-    missing = [t.__name__ for t in union if t not in eng._handlers]
-    assert missing == []
+    handlers = StepEngine(None, register_functions=False)._handlers
+    assert set(BINDINGS) <= set(union)
+    assert not set(BINDINGS) & set(handlers)
+    problems = []
+    for config_type in union:
+        if config_type in handlers:
+            continue
+        binding = BINDINGS.get(config_type)
+        if binding is None:
+            problems.append((config_type.__name__, "no handler or binding"))
+            continue
+        fn = binding.function()
+        fields = [f.removeprefix("@") for f in binding.args]
+        fields += [f.removeprefix("@") for f in binding.kwargs.values()]
+        unknown = [f for f in fields if f not in config_type.model_fields]
+        if unknown:
+            problems.append((config_type.__name__, f"not fields: {unknown}"))
+        try:
+            inspect.signature(fn).bind(*binding.args, **binding.kwargs)
+        except TypeError as exc:
+            problems.append((config_type.__name__, str(exc)))
+    assert problems == []
+
+
+def test_driver_engine_does_not_pin_sessions(spark):
+    """``__spark_entry__._engine`` keeps no reference to the session it
+    serves: ``_parallel_arms`` runs every arm on a ``spark.newSession()``,
+    and a cached engine would keep each of them alive for good."""
+    import gc
+    import weakref
+
+    import __spark_entry__ as entry
+
+    arm = spark.newSession()
+    entry._engine(arm)
+    ref = weakref.ref(arm)
+    del arm
+    # pyspark's _monkey_patch_RDD pins the most recently constructed
+    # session, so construct one more before collecting
+    spark.newSession()
+    gc.collect()
+    assert ref() is None
