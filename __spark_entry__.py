@@ -11,7 +11,7 @@ the ANSI-SQL equivalent DuckDB runs on the same parquet tables.
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Iterable
+from typing import Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,6 +49,11 @@ def _load(spark: SparkSession, sf_dir: str, names: Iterable[str]) -> dict[str, D
     return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
+#: arms constructed at once by :func:`_parallel_arms` (OPTIMIZATION_r14.md
+#: has the sweep that chose it)
+_ARM_CONCURRENCY = 4
+
+
 def _parallel_arms(
     spark: SparkSession,
     sf_dir: str,
@@ -56,14 +61,12 @@ def _parallel_arms(
 ) -> DataFrame:
     """Union independent arm frames, CONSTRUCTING them concurrently.
 
-    OPTIMIZATION r13 (guide §2.6, overlap independent jobs): several
-    merged rows' arms run driver-side Spark ACTIONS while they BUILD
-    their frame — bounded sketch collects, availableNow streaming
-    drains, k-means/BPE driver rounds. Built serially, each such action
-    leaves most of local[32] idle during its scheduling tail, and the
-    row pays the SUM of the arms' construction walls. Here each arm
-    constructs in its own thread so the scheduler back-fills one arm's
-    stragglers with the next arm's tasks, and the row pays ~the MAX.
+    Several arms run driver-side Spark actions while they build their
+    frame (bounded sketch collects, availableNow streaming drains,
+    k-means/BPE driver rounds). Built serially, the row pays the sum of
+    those construction walls; here up to ``_ARM_CONCURRENCY`` arms build
+    at once, so one arm's scheduling tail is back-filled by another's
+    tasks and the row pays ~the max.
 
     Each arm gets ``spark.newSession()`` — same SparkContext (so
     ReuseExchange/broadcasts still share), but a CLONED SQL conf, so
@@ -73,26 +76,10 @@ def _parallel_arms(
     The result is ``unionByName`` in ARGUMENT order — row-for-row the
     serial union: thread timing affects only WHEN each arm's jobs run,
     never their values (every arm is a deterministic function of the
-    parquet inputs and arms share no mutable state).
-
-    r14 (guide §2.6 "2-3 jobs in flight is plenty"): in-flight arm
-    construction is BOUNDED (default 4, ``SPARK_GRAFT_ARM_CONCURRENCY``)
-    instead of one thread per arm — r13's unbounded pool put up to 8
-    concurrent arms' 32-wide stages in front of the scheduler at once,
-    which inverse-scaled (sketches ran FASTER at 8 cores than 32 in the
-    driver's r13 scaling block). Measured on the sketches row at 32
-    cores: conc 2 → 11.1s, 3 → 10.0s, 4 → 9.6s, 8 → 10.9s; a 6-row A/B
-    confirmed 4 over 3 (total 29.9 vs 31.7s). One above the guide's 2-3
-    because these arms are construction-heavy (driver actions), not pure
-    jobs. Queued arms still back-fill the running arms' scheduling
-    tails, which is all the overlap buys; FIFO order preserves argument
-    order of first submission."""
-    import os
+    parquet inputs and arms share no mutable state)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = min(
-        len(fns), int(os.environ.get("SPARK_GRAFT_ARM_CONCURRENCY", "4"))
-    )
+    workers = min(len(fns), _ARM_CONCURRENCY)
     with ThreadPoolExecutor(max_workers=workers) as pool:
         futs = [pool.submit(fn, spark.newSession(), sf_dir) for fn in fns]
         dfs = [f.result() for f in futs]
@@ -129,6 +116,19 @@ def _state_partitions(spark: SparkSession, n: int = 4):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _drain(sdf: DataFrame, path: str):
+    """Start an availableNow drain of the streaming frame ``sdf`` into
+    parquet at ``path`` (checkpoint beside it); returns the query."""
+    return (
+        sdf.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", f"{path}_ckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -301,15 +301,13 @@ def q_group_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# grouped-ranking / rolling / event-analytics singletons (round 9)
+# grouped-ranking / rolling / event-analytics arms
 #
-# Rounds 6-8 carried these eight surfaces as ONE tagged-union driver row
-# (`window_analytics`), which went red in r8 with zero information about
-# WHICH tag diverged. Per the r8 verdict, each surface now rides its OWN
-# driver row, and every hashed numeric is rendered to STRING inside both
-# twins' final SELECT (CAST(BIGINT AS STRING) is engine-exact), so the
-# engine->pandas dtype-coercion layer (DuckDB HUGEINT -> float64 vs Spark
-# int64) can no longer contribute a divergence class.
+# The arms of the window_analytics, event_analytics and sessionize rows.
+# Every hashed numeric renders as STRING inside both twins' final SELECT
+# (CAST(BIGINT AS STRING) is engine-exact), so the engine->pandas
+# dtype-coercion layer (DuckDB HUGEINT -> float64 vs Spark int64) cannot
+# contribute a divergence class.
 # ---------------------------------------------------------------------------
 
 def _events_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,6 +318,17 @@ def _events_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer sees the raw stored INT64 via unix_micros in ANY timezone."""
     return spark.read.schema(_EVENTS_TS_SCHEMA).parquet(
         f"{sf_dir}/events.parquet"
+    )
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a streaming source under the same explicit
+    TIMESTAMP schema as :func:`_events_ts`."""
+    from data_validation_engine_spark.streaming import read_entity_stream
+
+    return read_entity_stream(
+        spark, sf_dir, _EVENTS_TS_SCHEMA,
+        options={"pathGlobFilter": "events.parquet"},
     )
 
 
@@ -357,7 +366,10 @@ def q_topk_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    return ents["tk"]
+    return ents["tk"].selectExpr(
+        "'topk' AS op", "CONCAT_WS('|', event_type, rk) AS k",
+        "CONCAT_WS('|', eid, cents) AS v",
+    )
 
 
 def q_rolling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,7 +409,9 @@ def q_rolling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    return ents["rl"]
+    return ents["rl"].selectExpr(
+        "'roll' AS op", "eid AS k", "CONCAT_WS('|', n_1h, cents_1h) AS v",
+    )
 
 
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,7 +436,10 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_entity_name="pct",
         ),
     )
-    return ents["pct"]
+    return ents["pct"].selectExpr(
+        "'pct' AS op", "l_returnflag AS k",
+        "CONCAT_WS('|', p25, p50, p75) AS v",
+    )
 
 
 def q_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,12 +466,10 @@ def q_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         "COALESCE(l_linestatus, '*') AS lstatus",
         "CAST(gid AS STRING) AS gid",
         "CAST(cents AS STRING) AS cents",
+    ).selectExpr(
+        "'ru' AS op", "CONCAT_WS('|', rflag, lstatus, gid) AS k",
+        "cents AS v",
     )
-
-
-# (q_rolling_stream / q_funnel_stream folded into q_event_analytics in
-#  round 10 — the merged row starts both availableNow drains together;
-#  their oracles are composed unchanged by _merge_oracles.)
 
 
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,6 +506,9 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(cohort AS STRING) AS cohort",
         "CAST(offset AS STRING) AS offset",
         "CAST(n_users AS STRING) AS n_users",
+    ).selectExpr(
+        "'ret' AS op", "CONCAT_WS('|', cohort, offset) AS k",
+        "n_users AS v",
     )
 
 
@@ -537,6 +555,9 @@ def q_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(n_at_least AS STRING) AS n_at_least",
         "CAST(n_exact AS STRING) AS n_exact",
         "CAST(lag_sum_us AS STRING) AS lag_sum_us",
+    ).selectExpr(
+        "'fb' AS op", "stage AS k",
+        "CONCAT_WS('|', n_at_least, n_exact, lag_sum_us) AS v",
     )
 
 
@@ -1950,13 +1971,8 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# corpus term-surface singletons (round 9)
-#
-# Rounds 6-8 carried these five surfaces as ONE tagged-union driver row
-# (`tfidf_topterms`) that stayed red on the driver for three rounds while
-# locally green under the full adverse matrix — with zero information
-# about WHICH tag diverged. Each surface now rides its OWN driver row and
-# every hashed numeric renders as STRING in both twins.
+# corpus term surfaces: the parts of the text_corpus row's 'terms' arm
+# (q_corpus_terms). Every hashed numeric renders as STRING in both twins.
 # ---------------------------------------------------------------------------
 
 def q_tfidf_top1(
@@ -2083,11 +2099,10 @@ def q_bpe_pairstats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_corpus_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 re-merge of the five corpus-term singleton rows, all
-    green in CORRECTNESS_r09 under the all-string hash discipline
-    (tfidf_top1 / vocab_build / vocab_encode / postings / bpe_pairstats
-    — the r8 red-row localization is over, the merge map is reversed as
-    designed), plus one NEW tag:
+    """The text_corpus row's 'terms' arm: the five corpus-term surfaces
+    (tfidf_top1 / vocab_build / vocab_encode / postings / bpe_pairstats,
+    tagged tfidf/vocab/enc/post/bpe) under the all-string hash
+    discipline, plus:
 
     - 'dec' — BPE encode→decode round-trip through the JOIN-path
       encoder (llmops/bpe.py bpe_encode(word_table=...), the production
@@ -2174,94 +2189,29 @@ def q_corpus_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 re-merge of the four BATCH window-analytics singletons
-    (topk_group / rolling_agg / percentiles / rollup_cube — each green
-    in CORRECTNESS_r09; the r8 red-row localization concluded the
-    divergence was the dtype-coercion layer, fixed by the all-string
-    discipline both twins keep here). Frame is (op, k, v) strings."""
-    parts = [
-        q_topk_group(spark, sf_dir).selectExpr(
-            "'topk' AS op", "CONCAT_WS('|', event_type, rk) AS k",
-            "CONCAT_WS('|', eid, cents) AS v",
-        ),
-        q_rolling_agg(spark, sf_dir).selectExpr(
-            "'roll' AS op", "eid AS k", "CONCAT_WS('|', n_1h, cents_1h) AS v",
-        ),
-        q_percentiles(spark, sf_dir).selectExpr(
-            "'pct' AS op", "l_returnflag AS k",
-            "CONCAT_WS('|', p25, p50, p75) AS v",
-        ),
-        q_rollup_cube(spark, sf_dir).selectExpr(
-            "'ru' AS op", "CONCAT_WS('|', rflag, lstatus, gid) AS k",
-            "cents AS v",
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def q_event_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 re-merge of the four EVENT-analytics singletons
-    (retention / funnel_batch / funnel_stream / rolling_stream — all
-    green in CORRECTNESS_r09). The two streaming arms keep proving
-    batch/stream parity against the identical SQL oracles; merging
-    them back reclaims the localization rows' per-query session
-    overhead, and the two availableNow drains START TOGETHER and are
-    awaited together (independent streams share the session — the
-    production shape; each drain carries ~2s of fixed micro-batch
-    plumbing and running them concurrently pays it once)."""
+def q_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 'fb' funnel maintained by the STREAMING window-funnel operator
+    (streaming_window_funnel, drained under availableNow): each user's
+    furthest stage and its enter/reach times, hashed against the same
+    closed-form SQL semantics as the batch step. All-string (op, k, v)."""
     import tempfile
 
-    from data_validation_engine_spark.streaming import (
-        read_entity_stream,
-        streaming_rolling_counts,
-        streaming_window_funnel,
-    )
+    from data_validation_engine_spark.streaming import streaming_window_funnel
 
-    ev = _events_ts(spark, sf_dir)
-    fout = tempfile.mkdtemp(prefix="dve_sfun_q_")
-    rout = tempfile.mkdtemp(prefix="dve_sroll_q_")
+    out = tempfile.mkdtemp(prefix="dve_sfun_q_")
     with _state_partitions(spark):
-        fq = (
+        q = _drain(
             streaming_window_funnel(
-                read_entity_stream(
-                    spark, sf_dir, _EVENTS_TS_SCHEMA,
-                    options={"pathGlobFilter": "events.parquet"},
-                ),
+                _events_stream(spark, sf_dir),
                 "user_id", "ts", "event_type",
                 ["view", "click", "purchase"],
                 window_us=3 * 86_400_000_000, watermark="366 days",
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{fout}/data")
-            .option("checkpointLocation", f"{fout}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{out}/data",
         )
-        rq = (
-            streaming_rolling_counts(
-                read_entity_stream(
-                    spark, sf_dir, _EVENTS_TS_SCHEMA,
-                    options={"pathGlobFilter": "events.parquet"},
-                ),
-                "user_id", "ts", window_seconds=3600,
-                watermark="366 days",
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{rout}/data")
-            .option("checkpointLocation", f"{rout}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    fq.awaitTermination()
-    rq.awaitTermination()
-    fs = (
-        spark.read.parquet(f"{fout}/data")
+    q.awaitTermination()
+    return (
+        spark.read.parquet(f"{out}/data")
         .groupBy("user_id")
         .agg(
             F.max_by(
@@ -2276,8 +2226,30 @@ def q_event_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
             " CAST(COALESCE(s.t_reach_us, -1) AS STRING)) AS v",
         )
     )
-    sroll = (
-        spark.read.parquet(f"{rout}/data")
+
+
+def q_rolling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 'roll' trailing 1-hour count maintained by the STREAMING
+    rolling-count operator (streaming_rolling_counts, drained under
+    availableNow), keyed back to event ids. All-string (op, k, v)."""
+    import tempfile
+
+    from data_validation_engine_spark.streaming import streaming_rolling_counts
+
+    out = tempfile.mkdtemp(prefix="dve_sroll_q_")
+    with _state_partitions(spark):
+        q = _drain(
+            streaming_rolling_counts(
+                _events_stream(spark, sf_dir),
+                "user_id", "ts", window_seconds=3600,
+                watermark="366 days",
+            ),
+            f"{out}/data",
+        )
+    q.awaitTermination()
+    ev = _events_ts(spark, sf_dir)
+    return (
+        spark.read.parquet(f"{out}/data")
         .join(
             ev.select(
                 "event_id",
@@ -2293,41 +2265,6 @@ def q_event_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_window AS STRING) AS v",
         )
     )
-    parts = [
-        q_retention(spark, sf_dir).selectExpr(
-            "'ret' AS op", "CONCAT_WS('|', cohort, offset) AS k",
-            "n_users AS v",
-        ),
-        q_funnel_batch(spark, sf_dir).selectExpr(
-            "'fb' AS op", "stage AS k",
-            "CONCAT_WS('|', n_at_least, n_exact, lag_sum_us) AS v",
-        ),
-        fs,
-        sroll,
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 re-merge of the sessionize pair (sessionize_batch /
-    sessionize_stream — both green in CORRECTNESS_r09): the batch
-    gaps-and-islands rollup and the stateful streaming operator hashed
-    against the SAME oracle SQL, proving batch/stream parity on one
-    row. Frame is (op, k, v) strings."""
-    parts = [
-        q_sessionize_batch(spark, sf_dir).selectExpr(
-            "'b' AS op", "CONCAT_WS('|', uid, session_idx) AS k",
-            "CONCAT_WS('|', n_events, duration_us) AS v",
-        ),
-        q_sessionize_stream(spark, sf_dir).selectExpr(
-            "'s' AS op", "CONCAT_WS('|', uid, session_idx) AS k",
-            "CONCAT_WS('|', n_events, duration_us) AS v",
-        ),
-    ]
-    return parts[0].unionByName(parts[1])
 
 
 def q_quality_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3788,12 +3725,7 @@ def q_streaming_sync_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_validation_engine_spark.streaming import stream_interval_join
 
-    ev = read_entity_stream(
-        spark,
-        sf_dir,
-        _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    ev = _events_stream(spark, sf_dir)
     attributed = stream_interval_join(
         ev.where("event_type = 'purchase'"),
         ev.where("event_type = 'click'"),
@@ -3811,14 +3743,7 @@ def q_streaming_sync_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id AS record_key",
     )
     with _state_partitions(spark):
-        q2 = (
-            attributed.writeStream.format("parquet")
-            .option("path", f"{out}/attr")
-            .option("checkpointLocation", f"{out}/ckpt_attr")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q2 = _drain(attributed, f"{out}/attr")
     query.awaitTermination()
     q2.awaitTermination()
     feed = spark.read.schema(MESSAGE_SCHEMA).json(f"{out}/data")
@@ -3866,30 +3791,17 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_validation_engine_spark.streaming import (
-        read_entity_stream,
         streaming_apply_changes,
         streaming_exact_dedup,
     )
 
-    sdf = read_entity_stream(
-        spark,
-        sf_dir,
-        _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    sdf = _events_stream(spark, sf_dir)
     deduped = streaming_exact_dedup(
         sdf, ["user_id", "event_type"], ts_col="ts", watermark="366 days"
     )
     out = tempfile.mkdtemp(prefix="dve_stream_dedup_")
     with _state_partitions(spark):
-        q = (
-            deduped.select("user_id", "event_type")
-            .writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = _drain(deduped.select("user_id", "event_type"), f"{out}/data")
 
     # 'scdc': materialise the orders-derived ledger, stream it into a
     # foreachBatch-maintained table (concurrently with the dedup drain)
@@ -3943,17 +3855,11 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_validation_engine_spark.streaming import (
-        read_entity_stream,
         streaming_kmv_distinct,
         windowed_counts,
     )
 
-    sdf = read_entity_stream(
-        spark,
-        sf_dir,
-        _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    sdf = _events_stream(spark, sf_dir)
     agg = windowed_counts(
         sdf, "ts", window="1 hour", watermark="2 hours",
         group_by=["event_type"],
@@ -3964,35 +3870,16 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plumbing each, and running them concurrently pays it once in wall
     # time (the production shape too: independent streams share a session)
     with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = _drain(agg, f"{out}/data")
     sk = streaming_kmv_distinct(
-        read_entity_stream(
-            spark,
-            sf_dir,
-            _EVENTS_TS_SCHEMA,
-            options={"pathGlobFilter": "events.parquet"},
-        ),
+        _events_stream(spark, sf_dir),
         "ts",
         "user_id",
         window_seconds=86400,
         k=16,
     )
     with _state_partitions(spark):
-        q2 = (
-            sk.writeStream.format("parquet")
-            .option("path", f"{out}/kmv")
-            .option("checkpointLocation", f"{out}/ckpt_kmv")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q2 = _drain(sk, f"{out}/kmv")
     q.awaitTermination()
     q2.awaitTermination()
     # epoch seconds, not date_format: the window BUCKETING is epoch-µs
@@ -4031,6 +3918,9 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(session_idx AS STRING) AS session_idx",
         "CAST(n_events AS STRING) AS n_events",
         "CAST(duration_us AS STRING) AS duration_us",
+    ).selectExpr(
+        "'b' AS op", "CONCAT_WS('|', uid, session_idx) AS k",
+        "CONCAT_WS('|', n_events, duration_us) AS v",
     )
 
 
@@ -4045,29 +3935,16 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged sessionize row)."""
     import tempfile
 
-    from data_validation_engine_spark.streaming import (
-        read_entity_stream,
-        streaming_sessionize,
-    )
+    from data_validation_engine_spark.streaming import streaming_sessionize
 
-    sdf = read_entity_stream(
-        spark,
-        sf_dir,
-        _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    sdf = _events_stream(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="dve_sessions_q_")
     with _state_partitions(spark):
-        q = (
+        q = _drain(
             streaming_sessionize(
                 sdf, "user_id", "ts", gap_seconds=1800, watermark="366 days"
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{out}/data",
         )
     q.awaitTermination()
     return (
@@ -4082,6 +3959,10 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(session_idx AS STRING) AS session_idx",
             "CAST(n AS STRING) AS n_events",
             "CAST(dur AS STRING) AS duration_us",
+        )
+        .selectExpr(
+            "'s' AS op", "CONCAT_WS('|', uid, session_idx) AS k",
+            "CONCAT_WS('|', n_events, duration_us) AS v",
         )
     )
 
@@ -4319,6 +4200,23 @@ def _pipeline_vtable_frames(spark: SparkSession, sf_dir: str, root):
 # ---------------------------------------------------------------------------
 # llmops oracle SQL builders (DuckDB)
 # ---------------------------------------------------------------------------
+
+
+def _kv_sql(sql: str, op: str, k: str, v_cols: list[str]) -> str:
+    """Re-project a typed oracle into the all-string (op, k, v) arm shape
+    its Spark twin emits. '||' is safe: every column it joins is a
+    non-null VARCHAR by construction."""
+    v = " || '|' || ".join(v_cols)
+    return f"SELECT '{op}' AS op, {k} AS k, {v} AS v FROM ({sql})"
+
+
+def _union_sql(*parts: str) -> str:
+    """UNION ALL of arm oracles as parenthesised subqueries (every arm
+    emits the same (op, k, v) positional shape)."""
+    return "\nUNION ALL\n".join(
+        f"SELECT * FROM (\n{p}\n)" for p in parts
+    )
+
 
 # NULL/blank text → zero tokens, matching tokens_col's normalisation
 _DUCK_TOKS = (
@@ -4836,47 +4734,6 @@ def _similarity_ann_oracle(k: int = 10, n_planes: int = 4, dim: int = 64) -> str
     """
 
 
-def _similarity_ann_partitioned_oracle(
-    k: int = 10, n_planes: int = 4, dim: int = 64
-) -> str:
-    """Same probe as the flat ANN oracle; the bucket bit-string is cast to
-    BIGINT the way Spark's partition-column inference reads it back."""
-    from data_validation_engine_spark.llmops.similarity import hyperplanes
-
-    planes = hyperplanes(n_planes, dim)
-
-    def bucket(vec: str) -> str:
-        bits = []
-        for plane in planes:
-            lit = "[" + ", ".join(repr(v) for v in plane) + "]"
-            bits.append(
-                f"CASE WHEN {_duck_dot(vec, lit, dim)} >= 0 "
-                f"THEN '1' ELSE '0' END"
-            )
-        return " || ".join(bits)
-
-    cos = (
-        f"round({_duck_dot('e.embedding', 'q.qv', dim)} / "
-        f"(sqrt({_duck_dot('e.embedding', 'e.embedding', dim)}) * "
-        f"sqrt({_duck_dot('q.qv', 'q.qv', dim)})), 6)"
-    )
-    return f"""
-        WITH q AS (
-            SELECT embedding AS qv, {bucket('embedding')} AS qbucket
-            FROM embeddings WHERE vec_id = 0
-        ),
-        t AS (
-            SELECT vec_id, embedding, {bucket('embedding')} AS bucket
-            FROM embeddings
-        )
-        SELECT vec_id, {cos} AS cosine, CAST(bucket AS BIGINT) AS bucket
-        FROM t e JOIN q ON e.bucket = q.qbucket
-        WHERE vec_id <> 0
-        ORDER BY cosine DESC, vec_id ASC
-        LIMIT {k}
-    """
-
-
 def _multiprobe_ann_oracle(
     k: int = 10, n_planes: int = 6, n_tables: int = 3, dim: int = 64
 ) -> str:
@@ -5052,12 +4909,11 @@ def _lang_id_oracle() -> str:
     """
 
 
-_LLMOPS_ORACLES: dict[str, str] = {
-    # survivor branch: a = b = copy count, because the Spark row
-    # inner-joins the library survivors with the declarative-step
-    # survivors — the hash covers both paths. inc_* branches: the
-    # incremental-dedup twins (EXISTS over the naive pair predicate).
-    "dedup_exact": f"""
+# survivor branch: a = b = copy count, because the Spark row
+# inner-joins the library survivors with the declarative-step
+# survivors — the hash covers both paths. inc_* branches: the
+# incremental-dedup twins (EXISTS over the naive pair predicate).
+_DEDUP_EXACT_SQL = f"""
         WITH dup_in AS (
             SELECT * FROM documents
             UNION ALL
@@ -5128,9 +4984,10 @@ _LLMOPS_ORACLES: dict[str, str] = {
         SELECT * FROM survivor
         UNION ALL SELECT * FROM inc_exact
         UNION ALL SELECT * FROM inc_ngram
-    """,
-    "dedup_minhash": _dedup_minhash_oracle(),
-    "step_dedup_fuzzy": f"""
+    """
+
+_DEDUP_MINHASH_SQL = _dedup_minhash_oracle()
+_STEP_DEDUP_FUZZY_SQL = f"""
         SELECT * FROM ({_dedup_fuzzy_oracle()})
         UNION ALL
         SELECT doc_id, n_chars,
@@ -5143,17 +5000,19 @@ _LLMOPS_ORACLES: dict[str, str] = {
                    ) AS rk
             FROM documents
         ) WHERE rk = 1
-    """,
-    # signatures (full corpus) unioned with banded pairs (10% slice)
-    "dedup_simhash": f"""
+    """
+
+# signatures (full corpus) unioned with banded pairs (10% slice)
+_DEDUP_SIMHASH_SQL = f"""
         SELECT 'sig' AS op, doc_id AS a, CAST(-1 AS BIGINT) AS b,
                simhash AS v
         FROM ({_dedup_simhash_oracle()})
         UNION ALL
         SELECT 'pair', id_a, id_b, CAST(hamming AS VARCHAR)
         FROM ({_dedup_simhash_pairs_oracle()})
-    """,
-    "bounded_pairs": """
+    """
+
+_BOUNDED_PAIRS_SQL = """
         WITH t AS (
             SELECT doc_id,
                    CASE WHEN doc_id % 3 = 0 THEN 0
@@ -5163,9 +5022,10 @@ _LLMOPS_ORACLES: dict[str, str] = {
         SELECT a.bucket, a.doc_id AS id_a, b.doc_id AS id_b
         FROM t a JOIN t b
           ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    """,
-    # component twice: label propagation joined with large-star/small-star
-    "connected_components": f"""
+    """
+
+# component twice: label propagation joined with large-star/small-star
+_CONNECTED_COMPONENTS_SQL = f"""
         SELECT 'cc' AS op, id, component, component_star,
                CAST(NULL AS DOUBLE) AS x
         FROM ({_connected_components_oracle().replace(
@@ -5179,11 +5039,12 @@ _LLMOPS_ORACLES: dict[str, str] = {
         SELECT 'tri', node, n_tri, CAST(NULL AS BIGINT),
                CAST(NULL AS DOUBLE)
         FROM ({_triangle_oracle()})
-    """,
-    # KMV sketch + column profile + exact grouped quantiles; the kmv
-    # branch recomputes the identical min-128 md5 sketch so even the
-    # APPROXIMATE estimate is engine-exact
-    "data_profiling": f"""
+    """
+
+# KMV sketch + column profile + exact grouped quantiles; the kmv
+# branch recomputes the identical min-128 md5 sketch so even the
+# APPROXIMATE estimate is engine-exact
+_DATA_PROFILING_SQL = f"""
         WITH hp AS (
             SELECT DISTINCT o_orderpriority,
                    ('0x' || substring(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS hv
@@ -5534,11 +5395,12 @@ _LLMOPS_ORACLES: dict[str, str] = {
                 ) GROUP BY 1
             )
         ) UNPIVOT (v FOR tag IN (slope, icept, corr))
-    """,
-    # BM25 (ordered-fold scores) + blocked fuzzy linkage pairs; the fuzzy
-    # twin is the NAIVE blocked join, pinning the length-bucket
-    # decomposition's exactness
-    "text_retrieval": rf"""
+    """
+
+# BM25 (ordered-fold scores) + blocked fuzzy linkage pairs; the fuzzy
+# twin is the NAIVE blocked join, pinning the length-bucket
+# decomposition's exactness
+_TEXT_RETRIEVAL_SQL = rf"""
         WITH base AS (
             SELECT doc_id,
                    list_transform({_DUCK_TOKS}, t -> lower(t)) AS toks
@@ -5612,8 +5474,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
             GROUP BY 1
         ) h USING (doc_id)
         WHERE d.doc_id % 97 != 0
-    """,
-    "step_similarity_ann": f"""
+    """
+
+_STEP_SIMILARITY_ANN_SQL = f"""
         SELECT 'ann' AS method, vec_id, cosine
         FROM ({_similarity_ann_oracle(k=10, n_planes=4)})
         UNION ALL
@@ -5622,8 +5485,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
         UNION ALL
         SELECT 'ivf', vec_id, cosine
         FROM ({_similarity_ivf_oracle(k=10, n_cells=16, n_probe=4)})
-    """,
-    "ann_variants": f"""
+    """
+
+_ANN_VARIANTS_SQL = f"""
         SELECT 'exact' AS method, vec_id, cosine,
                CAST(NULL AS VARCHAR) AS bucket,
                CAST(NULL AS BIGINT) AS bucket_part
@@ -5639,10 +5503,11 @@ _LLMOPS_ORACLES: dict[str, str] = {
         UNION ALL
         SELECT 'ann', vec_id, cosine, bucket, CAST(bucket AS BIGINT)
         FROM ({_similarity_ann_oracle()})
-    """,
-    # two-level ordered segment fold (centroids) + nearest-prototype
-    # assignment; checksum = left-fold sum over the centroid components
-    "vector_stats": f"""
+    """
+
+# two-level ordered segment fold (centroids) + nearest-prototype
+# assignment; checksum = left-fold sum over the centroid components
+_VECTOR_STATS_SQL = f"""
         WITH seg AS (
             SELECT label, vec_id // 64 AS seg, count(*) AS n,
                    {_duck_vec_fold("list(embedding::DOUBLE[] ORDER BY vec_id)")}
@@ -5716,16 +5581,18 @@ _LLMOPS_ORACLES: dict[str, str] = {
                 )
             )
         )
-    """,
-    "embedding_neardup": f"""
+    """
+
+_EMBEDDING_NEARDUP_SQL = f"""
         SELECT 'pair' AS op, id_a AS a, id_b AS b, cosine AS x,
                CAST(-1 AS INT) AS r
         FROM ({_embedding_neardup_oracle(threshold=0.3)})
         UNION ALL
         SELECT 'knn', vec_id, neighbour, cosine, CAST(rank AS INT)
         FROM ({_knn_join_oracle(k=3)})
-    """,
-    "source_xml_json": """
+    """
+
+_SOURCE_XML_JSON_SQL = """
         SELECT 'json' AS src, r_regionkey AS k, r_name AS name,
                CAST(-1 AS BIGINT) AS rk
         FROM region
@@ -5737,8 +5604,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
         SELECT 'idx', c_custkey, '',
                CAST(row_number() OVER () AS BIGINT)
         FROM customer
-    """,
-    "quality_sync": r"""
+    """
+
+_QUALITY_SYNC_SQL = r"""
         SELECT doc_id, n_chars, lang FROM documents
         WHERE COALESCE(len(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'))
                   BETWEEN 40 AND 5000, FALSE)
@@ -5747,10 +5615,11 @@ _LLMOPS_ORACLES: dict[str, str] = {
           AND COALESCE((length(regexp_replace(text, '\s+', '', 'g'))
                   / len(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')))
                   BETWEEN 2.0 AND 15.0, FALSE)
-    """,
-    # text stats + language id + fingerprint joined on doc_id (the Spark
-    # row inner-joins the three per-row projections)
-    "text_stats": f"""
+    """
+
+# text stats + language id + fingerprint joined on doc_id (the Spark
+# row inner-joins the three per-row projections)
+_TEXT_STATS_SQL = f"""
         WITH ts AS ({_text_stats_oracle()}),
         li AS ({_lang_id_oracle()}),
         fp AS (
@@ -5865,10 +5734,11 @@ _LLMOPS_ORACLES: dict[str, str] = {
                 JOIN cdf ON sc.src = cdf.src AND sc.nc = cdf.nc
                 JOIN rep USING (doc_id)
                 JOIN pii USING (doc_id)
-    """,
-    # repetition signals + PII scrub over planted PII, joined on doc_id
-    # 32/8 token-window chunks unioned with 512-capacity 8-shard packing
-    "sequence_prep": f"""
+    """
+
+# repetition signals + PII scrub over planted PII, joined on doc_id
+# 32/8 token-window chunks unioned with 512-capacity 8-shard packing
+_SEQUENCE_PREP_SQL = f"""
         WITH toked AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
         st AS (
             SELECT doc_id, toks,
@@ -5960,10 +5830,11 @@ _LLMOPS_ORACLES: dict[str, str] = {
                 FROM toked
             )
         )
-    """,
-    # exact word-5-gram overlap vs the doc_id % 97 = 0 benchmark slice
-    # --- round-9 corpus term-surface singletons (all numerics VARCHAR) ---
-    "tfidf_top1": r"""
+    """
+
+# exact word-5-gram overlap vs the doc_id % 97 = 0 benchmark slice
+# --- corpus term surfaces of the 'terms' arm (all numerics VARCHAR) ---
+_TFIDF_TOP1_SQL = r"""
         WITH terms AS (
             SELECT doc_id, unnest(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS term
             FROM documents
@@ -5984,8 +5855,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
                    ) AS rk
             FROM tf JOIN dfreq USING (term), n
         ) WHERE rk = 1
-    """,
-    "vocab_build": r"""
+    """
+
+_VOCAB_BUILD_SQL = r"""
         WITH terms AS (
             SELECT doc_id, unnest(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS term
             FROM documents
@@ -5993,8 +5865,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
         SELECT term, CAST(count(*) AS VARCHAR) AS cnt,
                CAST(count(DISTINCT doc_id) AS VARCHAR) AS doc_freq
         FROM terms GROUP BY term HAVING count(*) >= 3
-    """,
-    "vocab_encode": r"""
+    """
+
+_VOCAB_ENCODE_SQL = r"""
         WITH terms AS (
             SELECT doc_id, unnest(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS term
             FROM documents
@@ -6025,8 +5898,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
             ) v USING (term)
             GROUP BY doc_id
         )
-    """,
-    "postings": r"""
+    """
+
+_POSTINGS_SQL = r"""
         WITH terms AS (
             SELECT doc_id, unnest(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS term
             FROM documents
@@ -6045,8 +5919,9 @@ _LLMOPS_ORACLES: dict[str, str] = {
                    ) AS pcsv
             FROM tf GROUP BY term
         ) WHERE doc_freq >= 3
-    """,
-    "bpe_pairstats": r"""
+    """
+
+_BPE_PAIRSTATS_SQL = r"""
         WITH terms AS (
             SELECT doc_id, unnest(string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS term
             FROM documents
@@ -6074,8 +5949,34 @@ _LLMOPS_ORACLES: dict[str, str] = {
                 ) GROUP BY 1, 2
             )
         ) WHERE rk <= 20
-    """,
-    "multimodal_meta": """
+    """
+
+# the corpus_terms arm: the five term surfaces plus 'dec', the BPE
+# round-trip — decode(join-path-encode(x)) must equal the
+# whitespace-normalised lowercased text, stated directly
+_CORPUS_TERMS_SQL = "\nUNION ALL\n".join([
+    _kv_sql(_TFIDF_TOP1_SQL, "tfidf", "doc_id",
+            ["term", "tf", "df", "n_docs"]),
+    _kv_sql(_VOCAB_BUILD_SQL, "vocab", "term", ["cnt", "doc_freq"]),
+    _kv_sql(_VOCAB_ENCODE_SQL, "enc", "doc_id",
+            ["sig", "n_tokens", "n_unk"]),
+    _kv_sql(_POSTINGS_SQL, "post", "term",
+            ["postings_md5", "doc_freq", "tf_total"]),
+    _kv_sql(_BPE_PAIRSTATS_SQL, "bpe", "pair", ["cnt", "rk"]),
+    r"""SELECT 'dec' AS op, CAST(doc_id AS VARCHAR) AS k,
+               md5(array_to_string(toks, ' ')) || '|' ||
+               CAST(len(toks) AS VARCHAR) AS v
+        FROM (
+            SELECT doc_id,
+                   CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = ''
+                        THEN CAST([] AS VARCHAR[])
+                        ELSE string_split_regex(regexp_replace(lower(text), '^\s+|\s+$', '', 'g'), '\s+')
+                   END AS toks
+            FROM documents
+        ) WHERE len(toks) > 0""",
+])
+
+_MULTIMODAL_META_SQL = """
         WITH b AS (
             SELECT doc_id,
                    hex(encode(COALESCE(text, ''))) AS h,
@@ -6104,8 +6005,7 @@ _LLMOPS_ORACLES: dict[str, str] = {
                     ELSE CAST(list_max(bs) AS DOUBLE) END AS f_max,
                CAST(NULL AS VARCHAR) AS decode_error
         FROM e
-    """,
-}
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -6124,8 +6024,7 @@ def _nhs_mod11_oracle(x: str) -> str:
     )
 
 
-_ORACLES: dict[str, str] = {
-    "add_select": """
+_ADD_SELECT_SQL = """
         SELECT 'add' AS op,
                CAST(l_orderkey AS VARCHAR) || ':' ||
                    CAST(l_linenumber AS VARCHAR) AS k,
@@ -6144,8 +6043,9 @@ _ORACLES: dict[str, str] = {
         SELECT DISTINCT 'distinct',
                o_orderstatus || ':' || o_orderpriority, ''
         FROM orders
-    """,
-    "group_by": """
+    """
+
+_GROUP_BY_SQL = """
         WITH q1 AS (
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 2) AS sum_qty,
@@ -6175,9 +6075,10 @@ _ORACLES: dict[str, str] = {
         JOIN pivoted ON q1.l_linestatus = pivoted.l_linestatus
         JOIN melted ON q1.l_linestatus = melted.l_linestatus
                    AND q1.l_returnflag = melted.rflag
-    """,
-    # --- round-9 analytics singletons (all hashed numerics as VARCHAR) ---
-    "topk_group": """
+    """
+
+# --- window/event/session arms (all hashed numerics as VARCHAR) ---
+_TOPK_GROUP_SQL = _kv_sql("""
         SELECT event_type, CAST(rank AS VARCHAR) AS rk,
                CAST(event_id AS VARCHAR) AS eid,
                CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS cents
@@ -6186,8 +6087,9 @@ _ORACLES: dict[str, str] = {
                 PARTITION BY event_type ORDER BY value DESC, event_id
             ) AS rank FROM events
         ) WHERE rank <= 5
-    """,
-    "rolling_agg": """
+    """, "topk", "event_type || '|' || rk", ["eid", "cents"])
+
+_ROLLING_AGG_SQL = _kv_sql("""
         SELECT CAST(event_id AS VARCHAR) AS eid,
                CAST(n_1h AS VARCHAR) AS n_1h,
                CAST(CAST(cents_1h AS BIGINT) AS VARCHAR) AS cents_1h
@@ -6201,8 +6103,9 @@ _ORACLES: dict[str, str] = {
                 RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
             )
         )
-    """,
-    "percentiles": """
+    """, "roll", "eid", ["n_1h", "cents_1h"])
+
+_PERCENTILES_SQL = _kv_sql("""
         SELECT l_returnflag,
                CAST(CAST(round(quantile_cont(l_extendedprice, 0.25) * 10000)
                     AS BIGINT) AS VARCHAR) AS p25,
@@ -6211,8 +6114,9 @@ _ORACLES: dict[str, str] = {
                CAST(CAST(round(quantile_cont(l_extendedprice, 0.75) * 10000)
                     AS BIGINT) AS VARCHAR) AS p75
         FROM lineitem GROUP BY l_returnflag
-    """,
-    "rollup_cube": """
+    """, "pct", "l_returnflag", ["p25", "p50", "p75"])
+
+_ROLLUP_CUBE_SQL = _kv_sql("""
         SELECT COALESCE(l_returnflag, '*') AS rflag,
                COALESCE(l_linestatus, '*') AS lstatus,
                CAST(CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT)
@@ -6220,8 +6124,9 @@ _ORACLES: dict[str, str] = {
                CAST(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT))
                     AS BIGINT) AS VARCHAR) AS cents
         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    """,
-    "rolling_stream": """
+    """, "ru", "rflag || '|' || lstatus || '|' || gid", ["cents"])
+
+_ROLLING_STREAM_SQL = _kv_sql("""
         SELECT CAST(event_id AS VARCHAR) AS eid,
                CAST(n_1h AS VARCHAR) AS n_1h
         FROM (
@@ -6232,8 +6137,9 @@ _ORACLES: dict[str, str] = {
                 RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW
             )
         )
-    """,
-    "retention": """
+    """, "sroll", "eid", ["n_1h"])
+
+_RETENTION_SQL = _kv_sql("""
         SELECT CAST(cohort AS VARCHAR) AS cohort,
                CAST(p - cohort AS VARCHAR) AS offset,
                CAST(count(*) AS VARCHAR) AS n_users
@@ -6243,8 +6149,9 @@ _ORACLES: dict[str, str] = {
                      min(epoch_us(ts)) // 86400000000 AS cohort
               FROM events GROUP BY 1) f USING (user_id)
         GROUP BY cohort, p - cohort
-    """,
-    "funnel_batch": """
+    """, "ret", 'cohort || \'|\' || "offset"', ["n_users"])
+
+_FUNNEL_BATCH_SQL = _kv_sql("""
         SELECT CAST(stage_k AS VARCHAR) AS stage,
                CAST(CAST(sum(CASE WHEN stage >= stage_k THEN 1 ELSE 0 END)
                     AS BIGINT) AS VARCHAR) AS n_at_least,
@@ -6290,8 +6197,9 @@ _ORACLES: dict[str, str] = {
             )
         ), (SELECT unnest([1, 2, 3]) AS stage_k)
         GROUP BY stage_k
-    """,
-    "funnel_stream": """
+    """, "fb", "stage", ["n_at_least", "n_exact", "lag_sum_us"])
+
+_FUNNEL_STREAM_SQL = _kv_sql("""
         SELECT CAST(user_id AS VARCHAR) AS uid, CAST(stage AS VARCHAR)
                    AS stage,
                CAST(COALESCE(t1, -1) AS VARCHAR) AS t_enter_us,
@@ -6333,8 +6241,9 @@ _ORACLES: dict[str, str] = {
                 GROUP BY 1, 2, 3
             )
         )
-    """,
-    "left_join": """
+    """, "fs", "uid", ["stage", "t_enter_us", "t_reach_us"])
+
+_LEFT_JOIN_SQL = """
         SELECT 'lj' AS op, CAST(c_custkey AS VARCHAR) AS k,
                c_name || '|' ||
                CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR) ||
@@ -6349,8 +6258,9 @@ _ORACLES: dict[str, str] = {
         SELECT 'o2o', CAST(c_custkey AS VARCHAR),
                COALESCE(CAST(n_regionkey AS VARCHAR), '~')
         FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-    """,
-    "flag_joins": """
+    """
+
+_FLAG_JOINS_SQL = """
         SELECT 'has_match' AS op, o_orderkey AS key,
                EXISTS (
                    SELECT 1 FROM customer c
@@ -6397,8 +6307,9 @@ _ORACLES: dict[str, str] = {
         WHERE NOT EXISTS (
             SELECT 1 FROM orders o WHERE c.c_custkey = o.o_custkey
         )
-    """,
-    "union": """
+    """
+
+_UNION_ROW_SQL = """
         WITH unioned AS (
             SELECT c_custkey AS id, c_name AS name, c_acctbal AS bal,
                    NULL::INT AS nationkey
@@ -6505,8 +6416,9 @@ _ORACLES: dict[str, str] = {
         ), (SELECT max(o_orderkey) // 2 AS as_of FROM orders)
         WHERE cop = 'U' AND valid_from <= as_of
           AND (valid_to IS NULL OR valid_to > as_of)
-    """,
-    "join_header": """
+    """
+
+_JOIN_HEADER_SQL = """
         SELECT 'hdr' AS op, n_nationkey, n_name,
                CAST(h.n_orders AS VARCHAR) || '|' ||
                CAST(CAST(round(h.max_price * 100) AS BIGINT) AS VARCHAR)
@@ -6519,8 +6431,9 @@ _ORACLES: dict[str, str] = {
         UNION ALL
         SELECT 'ref', n_nationkey, n_name, COALESCE(r_name, '~')
         FROM nation LEFT JOIN region ON n_regionkey = r_regionkey
-    """,
-    "sync_filters": """
+    """
+
+_SYNC_FILTERS_SQL = """
         SELECT 'row' AS op, CAST(o_orderkey AS VARCHAR) AS record_key,
                o_orderstatus AS code, CAST(NULL AS VARCHAR) AS detail
         FROM orders
@@ -6538,8 +6451,9 @@ _ORACLES: dict[str, str] = {
         SELECT 'notif', CAST(c_custkey AS VARCHAR), 'NEG_BAL',
                'customer|customer ' || c_name || ' has negative balance'
         FROM customer WHERE c_acctbal < 0
-    """,
-    "contract_functions": """
+    """
+
+_CONTRACT_FUNCTIONS_SQL = """
         WITH s AS (
             SELECT CAST(c_custkey AS VARCHAR) AS ck, c_name AS nm,
                    c_mktsegment AS seg
@@ -6566,8 +6480,9 @@ _ORACLES: dict[str, str] = {
         )
         SELECT * FROM t
         WHERE segment IS NOT NULL AND TRIM(segment) <> ''
-    """,
-    "streaming_sync_messages": """
+    """
+
+_STREAMING_SYNC_MESSAGES_SQL = """
         SELECT 'msg' AS op, 'stream' AS entity, 'VALUE_RANGE' AS error_code,
                'value out of range' AS error_message,
                'record' AS failure_type, event_id AS record_key
@@ -6585,8 +6500,9 @@ _ORACLES: dict[str, str] = {
           ON a.user_id = b.user_id
          AND a.event_type = 'purchase' AND b.event_type = 'click'
          AND b.ts BETWEEN a.ts - INTERVAL 6 HOUR AND a.ts
-    """,
-    "streaming_dedup": """
+    """
+
+_STREAMING_DEDUP_SQL = """
         SELECT 'dedup' AS op, user_id AS k, event_type AS s,
                CAST(NULL AS DOUBLE) AS x
         FROM (SELECT DISTINCT user_id, event_type FROM events)
@@ -6602,11 +6518,12 @@ _ORACLES: dict[str, str] = {
                    ) AS rn
             FROM orders
         ) WHERE rn = 1 AND cop = 'U'
-    """,
-    # append-mode emission: windows closed by the final watermark
-    # (window end <= max event time - 2h); hourly Spark windows align to
-    # epoch, i.e. date_trunc('hour') for whole-hour widths
-    "streaming_window_counts": f"""
+    """
+
+# append-mode emission: windows closed by the final watermark
+# (window end <= max event time - 2h); hourly Spark windows align to
+# epoch, i.e. date_trunc('hour') for whole-hour widths
+_STREAMING_WINDOW_COUNTS_SQL = f"""
         WITH m AS (SELECT max(ts) AS mx FROM events),
         wh AS (
             SELECT DISTINCT
@@ -6640,8 +6557,9 @@ _ORACLES: dict[str, str] = {
                     ELSE CAST('{float(15) * float(1 << 60)!r}' AS DOUBLE)
                          / CAST(kth AS DOUBLE) END
         FROM wk
-    """,
-    "sessionize_batch": """
+    """
+
+_SESSIONIZE_BATCH_SQL = _kv_sql("""
         WITH flagged AS (
             SELECT user_id, ts,
                    CASE WHEN lag(ts) OVER w IS NULL
@@ -6665,10 +6583,11 @@ _ORACLES: dict[str, str] = {
                CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS VARCHAR)
                    AS duration_us
         FROM sessions GROUP BY user_id, session_idx
-    """,
-    # identical SQL: the stream row must match the SAME oracle,
-    # which is precisely the batch/stream parity claim
-    "sessionize_stream": """
+    """, "b", "uid || '|' || session_idx", ["n_events", "duration_us"])
+
+# identical SQL: the stream row must match the SAME oracle,
+# which is precisely the batch/stream parity claim
+_SESSIONIZE_STREAM_SQL = _kv_sql("""
         WITH flagged AS (
             SELECT user_id, ts,
                    CASE WHEN lag(ts) OVER w IS NULL
@@ -6692,13 +6611,14 @@ _ORACLES: dict[str, str] = {
                CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS VARCHAR)
                    AS duration_us
         FROM sessions GROUP BY user_id, session_idx
-    """,
-    # the crossJoin collapses to exactly one distinct audit status row
-    # ('completed') iff every stage of both submissions succeeded;
-    # 'vt*' tags: the versioned-table lifecycle (v1 half / v2 full /
-    # time-travel read of v1 after v2 / v3 + vacuum to {2,3}) stated
-    # from the same constructions
-    "pipeline_e2e": """
+    """, "s", "uid || '|' || session_idx", ["n_events", "duration_us"])
+
+# the crossJoin collapses to exactly one distinct audit status row
+# ('completed') iff every stage of both submissions succeeded;
+# 'vt*' tags: the versioned-table lifecycle (v1 half / v2 full /
+# time-travel read of v1 after v2 / v3 + vacuum to {2,3}) stated
+# from the same constructions
+_PIPELINE_E2E_SQL = """
         SELECT 'pipe' AS op, CAST(n_nationkey AS VARCHAR) AS k,
                n_name || '|' || CAST(n_regionkey AS VARCHAR) || '|' ||
                CAST(length(n_name) AS VARCHAR) || '|completed' AS v
@@ -6710,8 +6630,9 @@ _ORACLES: dict[str, str] = {
         SELECT 'vt2', CAST(n_nationkey AS VARCHAR), n_name FROM nation
         UNION ALL
         SELECT 'vac', '*', '1|2,3|3'
-    """,
-    "report_aggregates": """
+    """
+
+_REPORT_AGGREGATES_SQL = """
         WITH stringified AS (
             SELECT CAST(o_orderkey AS VARCHAR) AS okey,
                    CASE WHEN o_orderkey % 11 = 0 THEN NULL
@@ -6758,8 +6679,9 @@ _ORACLES: dict[str, str] = {
         SELECT 'Presence Check', 'gamma',
                'file submitted for undeclared entity ''gamma''',
                'submission', 'UNEXPECTED_ENTITY', CAST(1 AS BIGINT)
-    """,
-    "entity_ops": """
+    """
+
+_ENTITY_OPS_SQL = """
         WITH today AS (
             SELECT n_nationkey,
                    CASE WHEN n_nationkey % 3 = 0 THEN upper(n_name)
@@ -6793,9 +6715,9 @@ _ORACLES: dict[str, str] = {
                END,
                CAST(NULL AS VARCHAR)
         FROM nation
-    """,
+    """
 
-    "contract_cast": """
+_CONTRACT_CAST_SQL = """
         WITH stringified AS (
             SELECT CAST(o_orderkey AS VARCHAR) AS okey,
                    CASE WHEN o_orderkey % 11 = 0 THEN NULL
@@ -6831,11 +6753,12 @@ _ORACLES: dict[str, str] = {
                 OR LENGTH(TRIM(status)) >= 1, FALSE)
           AND COALESCE(status IS NULL OR TRIM(status) = ''
                 OR LENGTH(TRIM(status)) <= 1, FALSE)
-    """,
-    # 'base' = default compiled checks; 'ovr' = the same checks compiled
-    # with per-field error-detail overrides (custom code/message/flag) —
-    # the Spark row unions both feeds
-    "contract_messages": """
+    """
+
+# 'base' = default compiled checks; 'ovr' = the same checks compiled
+# with per-field error-detail overrides (custom code/message/flag) —
+# the Spark row unions both feeds
+_CONTRACT_MESSAGES_SQL = """
         WITH stringified AS (
             SELECT CAST(o_orderkey AS VARCHAR) AS okey,
                    CASE WHEN o_orderkey % 11 = 0 THEN NULL
@@ -6908,10 +6831,11 @@ _ORACLES: dict[str, str] = {
                 WHERE o_orderkey % 100 = 0
             )
         ) WHERE c > 1
-    """,
-    # name_len / seg_title are produced by the registered Python UDFs on
-    # the Spark side (the escape hatch); the oracle recomputes them in SQL
-    "scalar_functions": f"""
+    """
+
+# name_len / seg_title are produced by the registered Python UDFs on
+# the Spark side (the escape hatch); the oracle recomputes them in SQL
+_SCALAR_FUNCTIONS_SQL = f"""
         SELECT 'scalar' AS op, c_custkey,
                c_acctbal > 10000 AS big_bal,
                c_acctbal <= 5000.0 AS le_5k,
@@ -6942,77 +6866,7 @@ _ORACLES: dict[str, str] = {
                   AND o.o_orderstatus = 'O'),
                CAST(NULL AS VARCHAR)
         FROM customer c
-    """,
-}
-
-
-def _merge_oracles() -> None:
-    """Round-10 re-merge: compose the union-row oracles from the EXACT
-    singleton SQL that was green in CORRECTNESS_r09 (the texts are
-    wrapped, never edited, so the merged twin is provably the attested
-    one), normalised to the same (op, k, v) all-string frame the Spark
-    unions emit. '||' is safe here: every singleton column is a
-    non-null VARCHAR by construction (the r9 all-string discipline)."""
-
-    def arm(sql: str, op: str, k: str, v_cols: list[str]) -> str:
-        v = " || '|' || ".join(v_cols)
-        return (
-            f"SELECT '{op}' AS op, {k} AS k, {v} AS v FROM ({sql})"
-        )
-
-    _LLMOPS_ORACLES["corpus_terms"] = "\nUNION ALL\n".join([
-        arm(_LLMOPS_ORACLES.pop("tfidf_top1"), "tfidf", "doc_id",
-            ["term", "tf", "df", "n_docs"]),
-        arm(_LLMOPS_ORACLES.pop("vocab_build"), "vocab", "term",
-            ["cnt", "doc_freq"]),
-        arm(_LLMOPS_ORACLES.pop("vocab_encode"), "enc", "doc_id",
-            ["sig", "n_tokens", "n_unk"]),
-        arm(_LLMOPS_ORACLES.pop("postings"), "post", "term",
-            ["postings_md5", "doc_freq", "tf_total"]),
-        arm(_LLMOPS_ORACLES.pop("bpe_pairstats"), "bpe", "pair",
-            ["cnt", "rk"]),
-        # NEW 'dec' tag: decode(join-path-encode(x)) must equal the
-        # whitespace-normalised lowercased text — stated directly
-        r"""SELECT 'dec' AS op, CAST(doc_id AS VARCHAR) AS k,
-               md5(array_to_string(toks, ' ')) || '|' ||
-               CAST(len(toks) AS VARCHAR) AS v
-        FROM (
-            SELECT doc_id,
-                   CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = ''
-                        THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(regexp_replace(lower(text), '^\s+|\s+$', '', 'g'), '\s+')
-                   END AS toks
-            FROM documents
-        ) WHERE len(toks) > 0""",
-    ])
-    _ORACLES["window_analytics"] = "\nUNION ALL\n".join([
-        arm(_ORACLES.pop("topk_group"), "topk",
-            "event_type || '|' || rk", ["eid", "cents"]),
-        arm(_ORACLES.pop("rolling_agg"), "roll", "eid",
-            ["n_1h", "cents_1h"]),
-        arm(_ORACLES.pop("percentiles"), "pct", "l_returnflag",
-            ["p25", "p50", "p75"]),
-        arm(_ORACLES.pop("rollup_cube"), "ru",
-            "rflag || '|' || lstatus || '|' || gid", ["cents"]),
-    ])
-    _ORACLES["event_analytics"] = "\nUNION ALL\n".join([
-        arm(_ORACLES.pop("retention"), "ret",
-            'cohort || \'|\' || "offset"', ["n_users"]),
-        arm(_ORACLES.pop("funnel_batch"), "fb", "stage",
-            ["n_at_least", "n_exact", "lag_sum_us"]),
-        arm(_ORACLES.pop("funnel_stream"), "fs", "uid",
-            ["stage", "t_enter_us", "t_reach_us"]),
-        arm(_ORACLES.pop("rolling_stream"), "sroll", "eid", ["n_1h"]),
-    ])
-    _ORACLES["sessionize"] = "\nUNION ALL\n".join([
-        arm(_ORACLES.pop("sessionize_batch"), "b",
-            "uid || '|' || session_idx", ["n_events", "duration_us"]),
-        arm(_ORACLES.pop("sessionize_stream"), "s",
-            "uid || '|' || session_idx", ["n_events", "duration_us"]),
-    ])
-
-
-_merge_oracles()
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -7066,112 +6920,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return ents["lineitem"]
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 queries: the driver's correctness artifact records at
-    most 50 rows, so the budget is allocated deliberately. The full
-    merge history and per-row tag map live in ROSTER.md; this docstring
-    keeps only the LIVE round-13 edit.
-
-    ROUND-13 edit (r12 verdict Next-round #3, a pure roster edit —
-    every constituent query function and oracle reused verbatim; fold
-    rationale in the _R13 promotion section at the end of this file):
-    three staged-green r13 rows land as tags on surviving rows, 0
-    slots: r13_pq ('enc'/'adc' product-quantization surfaces) ->
-    semantic_dedup; r13_substring_verify ('spv'/'rmv' text-exact
-    ExactSubstr proof) -> substring_dedup; r13_warc ('w'/'n'/'c' WARC
-    ingest) -> text_corpus. All three pre-proven green through the
-    exact driver comparison pipeline in round 12 (oracle_check
-    --staged 3/3).
-
-    Still pytest-pinned only (documented non-hashable, FLOATS.md +
-    ROSTER.md): the BPE merge loop, pca_fit's eigen-iteration,
-    perplexity/zscore float values, classifier_fit's trained weights,
-    hash_bucket(algo="xxhash64"), real multimodal codecs."""
-    return {
-        # relational steps (SURVEY §2.3)
-        "add_select": q_add_select,
-        "group_by": q_group_by,
-        "left_join": q_left_join,
-        "flag_joins": q_flag_joins,
-        "union": q_union,
-        "join_header": q_join_header,
-        "sync_filters": q_sync_filters,
-        "entity_ops": q_entity_ops,
-        "scalar_functions": q_scalar_functions,
-        # data contract (SURVEY §2.5-2.6)
-        "contract_cast": q_contract_cast,
-        "contract_messages": q_contract_messages,
-        "contract_functions": q_contract_functions,
-        # grouped/rolling/event analytics (round-10 re-merged unions)
-        "window_analytics": q_window_analytics,
-        "event_analytics": q_event_analytics,
-        # llmops (training-data pipeline operators)
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash": q_dedup_minhash,
-        "step_dedup_fuzzy": q_step_dedup_fuzzy,
-        "dedup_simhash": q_dedup_simhash,
-        "bounded_pairs": q_bounded_pairs,
-        "connected_components": q_connected_components,
-        "step_similarity_ann": q_step_similarity_ann,
-        "ann_variants": q_ann_variants,
-        "vector_stats": q_vector_stats,
-        "embedding_neardup": q_embedding_neardup,
-        "quality_sync": q_quality_sync,
-        "text_stats": q_text_stats,
-        "sequence_prep": q_sequence_prep,
-        "data_profiling": q_data_profiling,
-        "text_retrieval": q_text_retrieval,
-        "multimodal_meta": q_multimodal_meta,
-        # sources (SURVEY §2.1)
-        "source_xml_json": q_source_xml_json,
-        # streaming (availableNow drains over the events table)
-        "streaming_sync_messages": q_streaming_sync_messages,
-        "streaming_dedup": q_streaming_dedup,
-        "streaming_window_counts": q_streaming_window_counts,
-        "sessionize": q_sessionize,
-        # pipeline/infrastructure surfaces proven by oracle
-        "report_aggregates": q_report_aggregates,
-        "pipeline_e2e": q_pipeline_e2e,
-        # round-10 attestation rows for the round-9 operator increment
-        # (semantic_dedup gained the r13 PQ 'enc'/'adc' tags)
-        "semantic_dedup": q_semantic_dedup_v2,
-        "pca_project": q_pca_project,
-        "feature_scores": q_feature_scores,
-        # round-12 family merges (constituents verbatim — see ROSTER.md
-        # and the _R12 promotion section at the end of this file)
-        "span_dedup": q_span_dedup,
-        "sketches": q_sketches,
-        "chunk_artifacts": q_chunk_artifacts,
-        # text_corpus gained the r13 WARC 'w'/'n'/'c' tags
-        "text_corpus": q_text_corpus_v2,
-        # round-11 promotion rows extended with r12 staged tags
-        "sampling_v2": q_sampling_v3,
-        "crawl_signals": q_crawl_signals_v2,
-        # round-12 promotion rows (staged-green in r11, text verbatim;
-        # classifier additionally carries the new 'ev' holdout tags)
-        "classifier": q_classifier_v2,
-        # substring_dedup gained the r13 text-exact 'spv'/'rmv' tags
-        "substring_dedup": q_substring_dedup_v2,
-        "index_maintenance": q_r12_index_maintenance,
-        "stream_heavy": q_r12_stream_heavy,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    merged = {**_ORACLES, **_LLMOPS_ORACLES, **_R10_ORACLES, **_R11_ORACLES}
-    for retired in _R11_RETIRED:
-        merged.pop(retired, None)
-    merged.update(_r12_oracles(merged))
-    for retired in _R12_RETIRED:
-        merged.pop(retired, None)
-    merged.update(_r13_oracles(merged))
-    return merged
-
 
 # ---------------------------------------------------------------------------
-# round-10 attestation rows: first driver attestation of the round-9
-# operator increment (VERDICT r9, Next-round #1). Shared constructions
-# are mirrored verbatim in the DuckDB twins (_R10_ORACLES below).
+# embedding, span, sketch, feature and text-preparation operators. Shared
+# constructions are mirrored verbatim in the DuckDB twins.
 # ---------------------------------------------------------------------------
 
 # fixed SemDeDup centroid rows — exist at every SF (ids < 50)
@@ -7290,7 +7042,7 @@ def q_paragraph_dedup(
         "doc_id", f"{_PARA_CORPUS_EXPR} AS text"
     )
     # OPTIMIZATION r13 (guide §1.2): the three paragraph arms all start
-    # from the same split_paragraphs explode — the roster wrapper
+    # from the same split_paragraphs explode — the row's build
     # (q_span_dedup) passes the persisted frame in so the corpus is
     # split once per row instead of three times
     freq = paragraph_frequency(
@@ -7330,6 +7082,7 @@ def q_paragraph_dedup(
 _SPAN_TEXT = (
     " the quick brown fox jumps over the lazy dog near the river bank"
 )
+
 _SPAN_CORPUS_EXPR = (
     "CASE WHEN doc_id % 16 = 0 THEN CONCAT(text,"
     f" '{_SPAN_TEXT}') ELSE text END"
@@ -7356,9 +7109,9 @@ def q_shared_spans(
         "doc_id", f"{_SPAN_CORPUS_EXPR} AS text"
     )
     # OPTIMIZATION r13 (guide §1.2): both arms (and the incremental
-    # sibling) fold over the same winnowed-fingerprint rows; the roster
-    # wrapper passes the persisted frame in so the gram-hash pass runs
-    # once per row instead of four times
+    # sibling) fold over the same winnowed-fingerprint rows; the row's
+    # build (q_span_dedup) passes the persisted frame in so the
+    # gram-hash pass runs once per row instead of four times
     if fps is None:
         fps = winnowed_fingerprints(
             docs, "doc_id", "text", width=24, window=8
@@ -7391,7 +7144,7 @@ def q_shared_spans(
     return fp_summary.unionByName(pairs)
 
 
-def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_cms_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch (llmops/sketch.py, Cormode 2005) with the
     md5-derived cells replayed exactly by the oracle — so even the
     *approximate* estimates hash engine-exact:
@@ -7399,24 +7152,13 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'cells' — cms_build over (lang-nulled-every-11th, source) grouped
       by lang: NULL group keys are REAL groups (the marker discipline);
     - 'est' — cms_query point estimates for every distinct (lang,
-      source) probe INCLUDING the NULL-lang group (the round-10
-      eqNullSafe fix riding the oracle gate);
+      source) probe INCLUDING the NULL-lang group;
     - 'merge' — cms_merge of two halves == the direct sketch
       (mergeability, the property that lets 100 TB persist per-batch
-      sketches and never re-touch raw data);
-    - 'stream' — streaming_cms_cells (native windowed agg, watermark
-      eviction) drained over events == batch cells per closed window.
+      sketches and never re-touch raw data).
 
+    The 'stream' surface of the same oracle is :func:`_q_cms_stream`.
     All-string (op, k, v) frame."""
-    return _q_cms_batch(spark, sf_dir).unionByName(
-        _q_cms_stream(spark, sf_dir)
-    )
-
-
-def _q_cms_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch surfaces of :func:`q_cms_sketch` (cells/est/merge) —
-    factored so the sketches row's parallel construction doesn't hold
-    them behind the streaming drain."""
     from data_validation_engine_spark.llmops.sketch import (
         cms_build,
         cms_merge,
@@ -7466,35 +7208,26 @@ def _q_cms_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming surface of :func:`q_cms_sketch` ('stream' — the
-    availableNow drain), factored out as its own parallel arm: the
-    drain is ~2s of fixed micro-batch plumbing that the batch sketch
-    builds can overlap."""
+    """'stream' — streaming_cms_cells (native windowed agg, watermark
+    eviction) drained over events == batch cells per closed window. Its
+    own arm so the drain's fixed micro-batch plumbing overlaps the
+    batch sketch builds."""
     import tempfile
 
-    from data_validation_engine_spark.streaming import read_entity_stream
     from data_validation_engine_spark.streaming.cardinality import (
         streaming_cms_cells,
     )
 
-    sdf = read_entity_stream(
-        spark, sf_dir, _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    sdf = _events_stream(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="dve_scms_q_")
     with _state_partitions(spark):
-        sq = (
+        sq = _drain(
             streaming_cms_cells(
                 sdf, "ts", "event_type",
                 window_seconds=86400, depth=3, width=64,
                 watermark="2 hours",
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{out}/data",
         )
     sq.awaitTermination()
     return spark.read.parquet(f"{out}/data").selectExpr(
@@ -7618,7 +7351,7 @@ _PCA_COMPS: list[list[float]] = [
 
 
 # ---------------------------------------------------------------------------
-# round-10 oracle twins
+# oracle twins of the operators above
 # ---------------------------------------------------------------------------
 
 def _duck_l2sq(a: str, b: str, dim: int = 64) -> str:
@@ -7638,9 +7371,8 @@ def _duck_list(vals) -> str:
 
 _SEM_IDS_SQL = ", ".join(str(i) for i in _SEM_CENTROID_IDS)
 
-_R10_ORACLES: dict[str, str] = {}
 
-_R10_ORACLES["semantic_dedup"] = f"""
+_SEMANTIC_DEDUP_SQL = f"""
     WITH RECURSIVE corpus AS (
         SELECT vec_id, embedding FROM embeddings
         UNION ALL
@@ -7727,7 +7459,7 @@ _SENT_SPLIT_SQL = r"""
     FROM documents
 """
 
-_R10_ORACLES["paragraph_dedup"] = f"""
+_PARAGRAPH_DEDUP_SQL = f"""
     WITH pd AS ({_PARA_CORPUS_SQL}),
     paras AS (
         SELECT doc_id, pos, para,
@@ -7826,7 +7558,7 @@ _SPAN_FPS_CTES = f"""
     fps AS (SELECT doc_id, unnest(hs) AS h FROM sel)
 """
 
-_R10_ORACLES["shared_spans"] = f"""
+_SHARED_SPANS_SQL = f"""
     {_SPAN_FPS_CTES}
     SELECT 'fp' AS op, CAST(doc_id AS VARCHAR) AS k,
            CAST(count(*) AS VARCHAR) || '|' ||
@@ -7853,7 +7585,7 @@ def _duck_cms_cells(kv: str, depth: int = 3, width: int = 64) -> str:
     )
 
 
-_R10_ORACLES["cms_sketch"] = f"""
+_CMS_SKETCH_SQL = f"""
     WITH cd AS (
         SELECT CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang,
                source, doc_id
@@ -7906,7 +7638,7 @@ _R10_ORACLES["cms_sketch"] = f"""
     GROUP BY 1, 2
 """
 
-_R10_ORACLES["hll_profile"] = """
+_HLL_PROFILE_SQL = """
     SELECT 'grp' AS op, lang AS k,
            CAST(count(DISTINCT source) AS VARCHAR) AS v
     FROM documents GROUP BY lang
@@ -7941,7 +7673,7 @@ def _duck_pca_proj(comp: list[float]) -> str:
     )
 
 
-_R10_ORACLES["pca_project"] = f"""
+_PCA_PROJECT_SQL = f"""
     WITH mv AS (
         SELECT vec_id, {_duck_moment_vec()} AS m
         FROM (SELECT vec_id, (embedding::DOUBLE[])[1:{_PCA_MOM_DIM}] AS v
@@ -8395,7 +8127,7 @@ def q_source_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUCK_LM_NORM = "lower(regexp_replace(text, '\\s+', ' ', 'g'))"
 
-_R10_ORACLES["feature_scores"] = f"""
+_FEATURE_SCORES_SQL = f"""
     WITH base AS (
         SELECT doc_id, lang, n_chars::DOUBLE AS nc FROM documents
     ),
@@ -8506,7 +8238,7 @@ _DUCK_CHAT_CONV = f"""
     FROM documents
 """
 
-_R10_ORACLES["chat_prep"] = f"""
+_CHAT_PREP_SQL = f"""
     WITH convs AS ({_DUCK_CHAT_CONV}),
     turns AS (
         SELECT doc_id,
@@ -8698,7 +8430,7 @@ def _duck_html_pipeline() -> str:
     return _duck_collapse(n)
 
 
-_R10_ORACLES["text_normalize"] = f"""
+_TEXT_NORMALIZE_SQL = f"""
     SELECT 'norm' AS op, CAST(doc_id AS VARCHAR) AS k,
            md5(t) || '|' || CAST(length(t) AS VARCHAR) AS v
     FROM (SELECT doc_id, {_duck_norm_pipeline()} AS t FROM documents)
@@ -8786,13 +8518,13 @@ def _duck_pack_arm(op: str, eod: bool) -> str:
     """
 
 
-_R10_ORACLES["materialize_packs"] = (
+_MATERIALIZE_PACKS_SQL = (
     _duck_pack_arm("plain", eod=False)
     + " UNION ALL "
     + _duck_pack_arm("eod", eod=True)
 )
 
-_R10_ORACLES["training_shards"] = """
+_TRAINING_SHARDS_SQL = """
     SELECT 'manifest' AS op, CAST(shard AS VARCHAR) AS k,
            CAST(count(*) AS VARCHAR) || '|1|' ||
            min(hash) || '|' || max(hash) || '|' ||
@@ -8809,7 +8541,7 @@ _R10_ORACLES["training_shards"] = """
     ) GROUP BY shard
 """
 
-_R10_ORACLES["source_formats"] = """
+_SOURCE_FORMATS_SQL = """
     SELECT 'orc' AS op, CAST(n_nationkey AS VARCHAR) AS k,
            n_name || '|' || CAST(n_regionkey AS VARCHAR) AS v
     FROM nation
@@ -8822,19 +8554,8 @@ _R10_ORACLES["source_formats"] = """
 
 
 # ---------------------------------------------------------------------------
-# ROUND-11 STAGED ROWS
-#
-# Oracle twins for the round-10 operator increment, built and verified
-# locally THIS round but deliberately NOT on the 50-row roster (the
-# freeze rule: first-time surfaces ride the NEXT budget, and round 10's
-# budget was spent attesting the round-9 increment). The driver never
-# sees these; `tools/oracle_check.py --staged` runs them through the
-# exact comparison pipeline, and tests/test_staged_oracles.py gates
-# them in CI — so when round 11 promotes them onto the roster they are
-# already proven green under the all-string hash discipline.
+# selection sketches, chunking, sampling and crawl-signal operators
 # ---------------------------------------------------------------------------
-
-_STAGED_ORACLES: dict[str, str] = {}
 
 
 def q_r11_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8913,7 +8634,7 @@ def _duck_bloom_words(src: str, m_bits: int = 1024, k: int = 3) -> str:
     """
 
 
-_STAGED_ORACLES["r11_bloom"] = f"""
+_R11_BLOOM_SQL = f"""
     WITH cd AS (
         SELECT CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang,
                doc_id, md5(text) AS h
@@ -9028,7 +8749,7 @@ _DUCK_DSIR_FEATS = r"""
         )
 """
 
-_STAGED_ORACLES["r11_dsir"] = f"""
+_R11_DSIR_SQL = f"""
     WITH feats AS ({_DUCK_DSIR_FEATS}),
     exploded AS (
         SELECT doc_id, unnest(f) AS bucket FROM feats
@@ -9080,7 +8801,7 @@ def q_r11_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_cdc_chunks"] = r"""
+_R11_CDC_CHUNKS_SQL = r"""
     WITH RECURSIVE toked AS (
         SELECT doc_id,
                CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = ''
@@ -9141,8 +8862,6 @@ _STAGED_ORACLES["r11_cdc_chunks"] = r"""
 """
 
 
-
-
 def q_r11_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-aware greedy chunking (llmops/chunking.py
     chunk_by_sentences): the full chunk table at max_tokens=20 — chunk
@@ -9185,7 +8904,7 @@ _SENTENCED_SENT_SPLIT_SQL = _SENT_SPLIT_SQL.replace(
         FROM documents)""",
 )
 
-_STAGED_ORACLES["r11_sentence_chunks"] = f"""
+_R11_SENTENCE_CHUNKS_SQL = f"""
     WITH RECURSIVE split AS ({_SENTENCED_SENT_SPLIT_SQL}),
     base AS (
         SELECT doc_id,
@@ -9267,7 +8986,7 @@ def q_r11_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return absolute.unionByName(frac)
 
 
-_STAGED_ORACLES["r11_curation"] = r"""
+_R11_CURATION_SQL = r"""
     WITH toks AS (
         SELECT doc_id, lang, n_chars,
                CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = '' THEN 0
@@ -9326,7 +9045,7 @@ def q_r11_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_script_profile"] = """
+_R11_SCRIPT_PROFILE_SQL = """
     WITH sp AS (
         SELECT doc_id,
                text || CASE WHEN doc_id % 3 = 0
@@ -9381,8 +9100,6 @@ _STAGED_ORACLES["r11_script_profile"] = """
 """
 
 
-
-
 def q_r11_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming_paragraph_frequency (streaming/cardinality.py): the
     continuous-boilerplate twin of the attested batch paragraph
@@ -9395,32 +9112,23 @@ def q_r11_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     'stream' tag does. All-string (op, k, v) frame."""
     import tempfile
 
-    from data_validation_engine_spark.streaming import read_entity_stream
     from data_validation_engine_spark.streaming.cardinality import (
         streaming_paragraph_frequency,
     )
 
-    sdf = read_entity_stream(
-        spark, sf_dir, _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    ).selectExpr(
+    sdf = _events_stream(spark, sf_dir).selectExpr(
         "ts",
         "CONCAT(event_type, ' line\\n', 'subscribe to the footer') "
         "AS text",
     )
     out = tempfile.mkdtemp(prefix="dve_spara_q_")
     with _state_partitions(spark):
-        sq = (
+        sq = _drain(
             streaming_paragraph_frequency(
                 sdf, "ts", "text",
                 window_seconds=86400, watermark="2 hours",
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{out}/data",
         )
     sq.awaitTermination()
     return spark.read.parquet(f"{out}/data").selectExpr(
@@ -9430,7 +9138,7 @@ def q_r11_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_stream_paragraphs"] = """
+_R11_STREAM_PARAGRAPHS_SQL = """
     WITH ev AS (
         SELECT ts,
                event_type || ' line' || chr(10) ||
@@ -9460,8 +9168,6 @@ _STAGED_ORACLES["r11_stream_paragraphs"] = """
            md5(para) || '|' || CAST(n_occ AS VARCHAR) AS v
     FROM counted
 """
-
-
 
 
 def q_r11_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9498,7 +9204,7 @@ def q_r11_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_rrf_fusion"] = """
+_R11_RRF_FUSION_SQL = """
     WITH d AS (
         SELECT lang, doc_id, n_chars, md5(text) AS h FROM documents
     ),
@@ -9531,8 +9237,6 @@ _STAGED_ORACLES["r11_rrf_fusion"] = """
            CAST(rrf_score AS VARCHAR) AS v
     FROM cut WHERE rn <= 10
 """
-
-
 
 
 def q_r11_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9571,7 +9275,7 @@ def q_r11_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return draws.unionByName(gaps)
 
 
-_STAGED_ORACLES["r11_negative_samples"] = """
+_R11_NEGATIVE_SAMPLES_SQL = """
     WITH ranked AS (
         SELECT doc_id, lang,
                row_number() OVER (ORDER BY
@@ -9607,24 +9311,14 @@ _STAGED_ORACLES["r11_negative_samples"] = """
 """
 
 
-
-
-def q_r11_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_hh_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters with the CMS pre-screen (llmops/sketch.py
     heavy_hitters): frequent word tokens over the documents corpus
-    ('tok', min 100 occurrences) and char-weighted frequent sources
-    ('src', min 5000 chars). The oracle is the NAIVE exact group-by —
-    the operator's guarantee is bit-identical output to it, so a green
-    hash proves the never-undercount screen dropped no true heavy
-    hitter and the final cut removed every overcount leak.
-    All-string (op, k, v) frame."""
-    return _q_hh_tok(spark, sf_dir).unionByName(_q_hh_src(spark, sf_dir))
-
-
-def _q_hh_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 'tok' surface of :func:`q_r11_heavy_hitters` — factored so
-    its bounded sketch collect overlaps the 'src' arm's in the sketches
-    row's parallel construction."""
+    ('tok', min 100 occurrences). The oracle is the NAIVE exact
+    group-by — the operator's guarantee is bit-identical output to it,
+    so a green hash proves the never-undercount screen dropped no true
+    heavy hitter and the final cut removed every overcount leak. The
+    'src' surface of the same oracle is :func:`_q_hh_src`."""
     from data_validation_engine_spark.llmops.dedup import tokens_col
     from data_validation_engine_spark.llmops.sketch import heavy_hitters
 
@@ -9638,8 +9332,8 @@ def _q_hh_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_hh_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 'src' surface of :func:`q_r11_heavy_hitters` (char-weighted
-    frequent sources)."""
+    """Heavy hitters 'src': char-weighted frequent sources (min 5000
+    chars), the second surface of :func:`_q_hh_tok`'s oracle."""
     from data_validation_engine_spark.llmops.sketch import heavy_hitters
 
     docs = _docs(spark, sf_dir)
@@ -9650,7 +9344,7 @@ def _q_hh_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_heavy_hitters"] = r"""
+_R11_HEAVY_HITTERS_SQL = r"""
     WITH toks AS (
         SELECT unnest(string_split_regex(
             regexp_replace(lower(text), '^\s+|\s+$', '', 'g'),
@@ -9663,8 +9357,6 @@ _STAGED_ORACLES["r11_heavy_hitters"] = r"""
     SELECT 'src', source, CAST(sum(n_chars) AS VARCHAR)
     FROM documents GROUP BY source HAVING sum(n_chars) >= 5000
 """
-
-
 
 
 def q_r11_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9687,7 +9379,7 @@ def q_r11_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_ORACLES["r11_interleave"] = """
+_R11_INTERLEAVE_SQL = """
     WITH ranked AS (
         SELECT doc_id, lang,
                row_number() OVER (PARTITION BY lang ORDER BY
@@ -9703,8 +9395,6 @@ _STAGED_ORACLES["r11_interleave"] = """
                AS VARCHAR) AS v
     FROM ranked
 """
-
-
 
 
 def q_r11_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9769,7 +9459,7 @@ def q_r11_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r_rows.unionByName(dec).unionByName(dec_t)
 
 
-_STAGED_ORACLES["r11_robots"] = r"""
+_R11_ROBOTS_SQL = r"""
     WITH hosts AS (SELECT DISTINCT source AS host FROM documents),
     bodies AS (
         SELECT host,
@@ -9884,158 +9574,12 @@ _STAGED_ORACLES["r11_robots"] = r"""
 """
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round-(N+1) candidate rows — run by tools/oracle_check.py
-    --staged and tests/test_staged_oracles.py, NOT by the driver.
-    Nothing new lands on the 50-row roster without a staged green twin
-    first; the round-10 batch (r11_bloom ... r11_robots) was promoted
-    onto the roster in round 11 exactly as staged (see the
-    _R11_ORACLES section); the round-11 increment staged here (the
-    eight r12_* rows) was promoted onto the roster in round 12 exactly
-    as staged (see the _R12 promotion section); the round-12 increment
-    (the three r13_* rows) was promoted in round 13 exactly as staged
-    (see the _R13 promotion section), and this now stages the
-    round-13 increment for round 14."""
-    return dict(_R14_STAGED_QUERIES)
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    return dict(_R14_STAGED_ORACLES)
-
-
-# round-11 increment candidates, populated below as operators land
-_R12_STAGED_QUERIES: dict[
-    str, Callable[[SparkSession, str], DataFrame]
-] = {}
-_R12_STAGED_ORACLES: dict[str, str] = {}
-
-
-# ---------------------------------------------------------------------------
-# ROUND-11 PROMOTION (r10 verdict, Next-round #1)
-#
-# The twelve staged rows above were pre-proven green through the exact
-# driver comparison pipeline in round 10 (tools/oracle_check.py
-# --staged, CI-gated by tests/test_staged_oracles.py). This section is
-# the ROSTER EDIT ONLY: every staged query function and oracle string
-# is reused VERBATIM (the proof is for the exact text); the wrappers
-# below just union proven (op, k, v) frames, which preserves each
-# constituent's hashed surface row-for-row.
-#
-# Slot arithmetic (the driver records at most 50 rows):
-#   merged away (4 slots freed):
-#     hll_profile            -> cms_sketch   ('grp'/'fine'/'roll' tags)
-#     text_normalize + chat_prep                  -> text_prep
-#     materialize_packs + training_shards + source_formats -> artifacts
-#   promoted (4 new rows; op tags are disjoint within each union):
-#     selection_sketches = r11_bloom + r11_dsir
-#     chunking_v2        = r11_cdc_chunks + r11_sentence_chunks
-#                          + r11_stream_paragraphs (the 'w' streaming
-#                          tag rides here, not streaming_window_counts,
-#                          so no proven frame needs reshaping)
-#     sampling_v2        = r11_curation + r11_negative_samples
-#                          + r11_interleave (all llmops/split.py)
-#     crawl_signals      = r11_robots + r11_script_profile
-#                          + r11_rrf_fusion
-#   tags on existing rows (0 slots):
-#     r11_heavy_hitters  -> cms_sketch ('tok'/'src' tags)
-#   net: 50 - 4 + 4 = 50.
-# ---------------------------------------------------------------------------
-
-_R11_RETIRED = (
-    "hll_profile",
-    "text_normalize",
-    "chat_prep",
-    "materialize_packs",
-    "training_shards",
-    "source_formats",
-)
-
-
-def _union_sql(*parts: str) -> str:
-    """UNION ALL of proven oracle strings as parenthesised subqueries
-    (every constituent emits the same (op, k, v) positional shape —
-    asserted by the r10 staged sweep)."""
-    return "\nUNION ALL\n".join(
-        f"SELECT * FROM (\n{p}\n)" for p in parts
-    )
-
-
-def q_text_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 merge: text_normalize + chat_prep — the two text-
-    preparation rows, each green on CORRECTNESS_r10, unioned verbatim
-    (op tags disjoint: norm/html/json/url vs render/stats/mask)."""
-    return q_text_normalize(spark, sf_dir).unionByName(
-        q_chat_prep(spark, sf_dir)
-    )
-
-
-def q_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 merge: materialize_packs + training_shards +
-    source_formats — the three artifact/export rows, each green on
-    CORRECTNESS_r10, unioned verbatim (op tags disjoint: plain/eod vs
-    manifest vs orc/bin)."""
-    return (
-        q_materialize_packs(spark, sf_dir)
-        .unionByName(q_training_shards(spark, sf_dir))
-        .unionByName(q_source_formats(spark, sf_dir))
-    )
-
-
-def q_cms_sketch_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 merge riding the cms_sketch row: the r10-green CMS
-    surface (cells/est/merge/stream) + the r10-green HLL profile
-    (grp/fine/roll) + the staged-green exact heavy hitters with CMS
-    pre-screen (tok/src) — one sketch-family row, all constituents
-    verbatim."""
-    return (
-        q_cms_sketch(spark, sf_dir)
-        .unionByName(q_hll_profile(spark, sf_dir))
-        .unionByName(q_r11_heavy_hitters(spark, sf_dir))
-    )
-
-
-def q_selection_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 promotion: Bloom filters (w/m/q) + DSIR importance-
-    resampling integer surfaces (rt/sc/nf), both staged-green in r10."""
-    return q_r11_bloom(spark, sf_dir).unionByName(
-        q_r11_dsir(spark, sf_dir)
-    )
-
-
-def q_chunking_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 promotion: content-defined chunking (c) + sentence-
-    aware chunking (sc) + streaming paragraph frequency (w), all
-    staged-green in r10 — the document-segmentation row."""
-    return (
-        q_r11_cdc_chunks(spark, sf_dir)
-        .unionByName(q_r11_sentence_chunks(spark, sf_dir))
-        .unionByName(q_r11_stream_paragraphs(spark, sf_dir))
-    )
-
-
-def q_sampling_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 promotion: token-budget curation (abs/frac) +
-    deterministic negative sampling (d/x) + stride-scheduled source
-    interleaving (o) — the llmops/split.py selection row, all
-    staged-green in r10.
-
-    'absn'/'fracn' arms (r10 verdict, Next-round #5): the same two
-    curation paths with every 11th doc's lang NULLed — NULL group keys
-    are REAL groups through both the window path and the frac path's
-    eqNullSafe totals join (the cms_query/standardize discipline, now
-    on the oracle gate for select_token_budget too)."""
-    return (
-        q_r11_curation(spark, sf_dir)
-        .unionByName(q_r11_negative_samples(spark, sf_dir))
-        .unionByName(q_r11_interleave(spark, sf_dir))
-        .unionByName(_q_sampling_nulled_budget(spark, sf_dir))
-    )
-
-
 def _q_sampling_nulled_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 'absn'/'fracn' arms of :func:`q_sampling_v2`, factored out so
-    the parallel-construction wrapper can treat them as one arm (their
-    two surfaces share the NULLed-lang projection)."""
+    """Token-budget curation with every 11th doc's lang NULLed ('absn'
+    absolute budget / 'fracn' fractional budget): NULL group keys are
+    REAL groups through both the window path and the frac path's
+    eqNullSafe totals join. One arm, because both surfaces share the
+    NULLed-lang projection."""
     from data_validation_engine_spark.llmops.dedup import tokens_col
     from data_validation_engine_spark.llmops.split import (
         select_token_budget,
@@ -10068,48 +9612,7 @@ def _q_sampling_nulled_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return absn.unionByName(fracn)
 
 
-def q_crawl_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-11 promotion: robots.txt compliance (r/d/dt, RFC 9309) +
-    Unicode script profiling (p) + reciprocal-rank fusion (f) — the
-    crawl/corpus-signal row, all staged-green in r10."""
-    return (
-        q_r11_robots(spark, sf_dir)
-        .unionByName(q_r11_script_profile(spark, sf_dir))
-        .unionByName(q_r11_rrf_fusion(spark, sf_dir))
-    )
-
-
-_R11_ORACLES: dict[str, str] = {
-    "text_prep": _union_sql(
-        _R10_ORACLES["text_normalize"], _R10_ORACLES["chat_prep"]
-    ),
-    "artifacts": _union_sql(
-        _R10_ORACLES["materialize_packs"],
-        _R10_ORACLES["training_shards"],
-        _R10_ORACLES["source_formats"],
-    ),
-    "cms_sketch": _union_sql(
-        _R10_ORACLES["cms_sketch"],
-        _R10_ORACLES["hll_profile"],
-        _STAGED_ORACLES["r11_heavy_hitters"],
-    ),
-    "selection_sketches": _union_sql(
-        _STAGED_ORACLES["r11_bloom"], _STAGED_ORACLES["r11_dsir"]
-    ),
-    "chunking_v2": _union_sql(
-        _STAGED_ORACLES["r11_cdc_chunks"],
-        _STAGED_ORACLES["r11_sentence_chunks"],
-        _STAGED_ORACLES["r11_stream_paragraphs"],
-    ),
-    "sampling_v2": _union_sql(
-        _STAGED_ORACLES["r11_curation"],
-        _STAGED_ORACLES["r11_negative_samples"],
-        _STAGED_ORACLES["r11_interleave"],
-        # NULL-group curation probe (r10 verdict, Next-round #5):
-        # every 11th doc's lang NULLed; NULL is a real group in both
-        # engines' window partitioning and in the frac path's
-        # eqNullSafe totals join
-        r"""
+_SAMPLING_NULLED_BUDGET_SQL = r"""
     WITH toks AS (
         SELECT doc_id,
                CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang,
@@ -10139,27 +9642,15 @@ _R11_ORACLES: dict[str, str] = {
            COALESCE(lang, '~') || '|' ||
            CAST(before < CAST(floor(total * 0.5) AS BIGINT) AS VARCHAR)
     FROM ranked
-""",
-    ),
-    "crawl_signals": _union_sql(
-        _STAGED_ORACLES["r11_robots"],
-        _STAGED_ORACLES["r11_script_profile"],
-        _STAGED_ORACLES["r11_rrf_fusion"],
-    ),
-}
+"""
 
 
 # ---------------------------------------------------------------------------
-# ROUND-12 STAGED ROWS (r10 verdict, Next-round #2)
-#
-# Oracle twins for the operators that were pytest-only in round 10:
-# the crawl-graph trio (extract_links / extract_anchor_texts /
-# canonicalize_url), Bloom-screened decontamination, incremental span
-# dedup, and cosine-band hard negatives. Staged — run by
-# tools/oracle_check.py --staged and tests/test_staged_oracles.py, not
-# by the driver — so a future promotion is a proven roster edit.
-# hash_bucket(algo="xxhash64") stays pytest-permanent by design
-# (engine-only hash, FLOATS.md non-hashable class).
+# crawl graph (extract_links / extract_anchor_texts / canonicalize_url),
+# Bloom-screened decontamination, incremental span dedup, cosine-band hard
+# negatives, index maintenance, classifier, streaming heavy hitters and
+# exact-substring dedup. hash_bucket(algo="xxhash64") stays pytest-only
+# by design (engine-only hash, FLOATS.md non-hashable class).
 # ---------------------------------------------------------------------------
 
 
@@ -10276,7 +9767,7 @@ def q_r12_crawl_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l_rows.unionByName(a_rows).unionByName(c_rows).unionByName(probe)
 
 
-_R12_STAGED_ORACLES["r12_crawl_graph"] = """
+_R12_CRAWL_GRAPH_SQL = """
     WITH d AS (
         SELECT doc_id, source,
                'http://' || source AS origin,
@@ -10366,7 +9857,7 @@ def q_r12_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_STAGED_ORACLES["r12_decon_bloom"] = f"""
+_R12_DECON_BLOOM_SQL = f"""
     WITH toked AS (
         SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
     ),
@@ -10415,9 +9906,9 @@ def q_r12_spans_incremental(
     new = docs.where("doc_id % 4 = 0")
     # OPTIMIZATION r13 (guide §1.2): fingerprinting is per-row, so the
     # corpus index and the new-batch fingerprints are FILTERS of the
-    # full-corpus fingerprint frame — the roster wrapper passes the
-    # persisted frame in and both sides slice it instead of running two
-    # more gram-hash passes
+    # full-corpus fingerprint frame — the row's build (q_span_dedup)
+    # passes the persisted frame in and both sides slice it instead of
+    # running two more gram-hash passes
     if fps is None:
         index = winnowed_fingerprints(
             corpus, "doc_id", "text", width=24, window=8
@@ -10437,7 +9928,7 @@ def q_r12_spans_incremental(
     )
 
 
-_R12_STAGED_ORACLES["r12_spans_incremental"] = f"""
+_R12_SPANS_INCREMENTAL_SQL = f"""
     {_SPAN_FPS_CTES}
     SELECT 'inc' AS op,
            CAST(n.doc_id AS VARCHAR) || '|' ||
@@ -10479,7 +9970,7 @@ def q_r12_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_STAGED_ORACLES["r12_hard_negatives"] = f"""
+_R12_HARD_NEGATIVES_SQL = f"""
     WITH cands AS (
         SELECT * FROM ({_knn_join_oracle(k=12)})
     ),
@@ -10498,16 +9989,6 @@ _R12_STAGED_ORACLES["r12_hard_negatives"] = f"""
            CAST(CAST(floor(cosine * 1000000) AS BIGINT) AS VARCHAR) AS v
     FROM band WHERE rk <= 3
 """
-
-
-_R12_STAGED_QUERIES.update(
-    {
-        "r12_crawl_graph": q_r12_crawl_graph,
-        "r12_decon_bloom": q_r12_decon_bloom,
-        "r12_spans_incremental": q_r12_spans_incremental,
-        "r12_hard_negatives": q_r12_hard_negatives,
-    }
-)
 
 
 def q_r12_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10560,7 +10041,7 @@ def q_r12_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ix.unionByName(st)
 
 
-_R12_STAGED_ORACLES["r12_index_maintenance"] = f"""
+_R12_INDEX_MAINTENANCE_SQL = f"""
     WITH {_minhash_pair_ctes()},
     live AS (
         SELECT doc_id, band_idx, band_key FROM bands
@@ -10642,7 +10123,7 @@ def q_r12_classifier(
     every arm folds over the shared arrays via ``features_col`` —
     identical doubles, identical hash (oracle-reproven), ~5x less
     per-row hashing. ``feats`` may be passed in by
-    :func:`q_classifier_v2` so the 'ev' arm shares the same pass."""
+    :func:`q_classifier` so the 'ev' arm shares the same pass."""
     from data_validation_engine_spark.llmops.classifier import (
         classifier_filter,
         classifier_score,
@@ -10699,7 +10180,7 @@ def q_r12_classifier(
     )
 
 
-_R12_STAGED_ORACLES["r12_classifier"] = rf"""
+_R12_CLASSIFIER_SQL = rf"""
     WITH feats AS ({_DUCK_DSIR_FEATS}),
     scored AS (
         SELECT doc_id, len(f) AS nf,
@@ -10784,29 +10265,20 @@ def q_r12_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_validation_engine_spark.llmops.sketch import (
         windowed_heavy_hitters,
     )
-    from data_validation_engine_spark.streaming import read_entity_stream
     from data_validation_engine_spark.streaming.cardinality import (
         streaming_cms_cells,
     )
 
-    sdf = read_entity_stream(
-        spark, sf_dir, _EVENTS_TS_SCHEMA,
-        options={"pathGlobFilter": "events.parquet"},
-    )
+    sdf = _events_stream(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="dve_shh_q_")
     with _state_partitions(spark):
-        sq = (
+        sq = _drain(
             streaming_cms_cells(
                 sdf, "ts", "event_type",
                 window_seconds=86400, depth=3, width=64,
                 watermark="2 hours",
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{out}/data",
         )
     sq.awaitTermination()
     cells = spark.read.parquet(f"{out}/data")
@@ -10824,7 +10296,7 @@ def q_r12_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_STAGED_ORACLES["r12_stream_heavy"] = """
+_R12_STREAM_HEAVY_SQL = """
     SELECT 'hh' AS op,
            CAST(win AS VARCHAR) || '|' || event_type AS k,
            CAST(count(*) AS VARCHAR) AS v
@@ -10837,15 +10309,6 @@ _R12_STAGED_ORACLES["r12_stream_heavy"] = """
     GROUP BY 1, 2
     HAVING count(*) >= 5
 """
-
-
-_R12_STAGED_QUERIES.update(
-    {
-        "r12_index_maintenance": q_r12_index_maintenance,
-        "r12_classifier": q_r12_classifier,
-        "r12_stream_heavy": q_r12_stream_heavy,
-    }
-)
 
 
 def q_r12_substring_dedup(
@@ -10870,7 +10333,7 @@ def q_r12_substring_dedup(
     OPTIMIZATION r13 (guide §1.2): the 'sp' and 'rm' arms previously
     each ran the full gram-hash + CMS-screen pipeline; the span table
     is now computed once (PERSISTED — or passed in by
-    :func:`q_substring_dedup_v2`, which shares the upstream ``marked``
+    :func:`q_substring_dedup`, which shares the upstream ``marked``
     frame with the verify twin too) and both arms derive from it.
     Identical spans in, identical splice out — oracle-reproven."""
     from data_validation_engine_spark.llmops.substrings import (
@@ -10906,7 +10369,7 @@ def q_r12_substring_dedup(
     return sp.unionByName(rm)
 
 
-_R12_STAGED_ORACLES["r12_substring_dedup"] = r"""
+_R12_SUBSTRING_DEDUP_SQL = r"""
     WITH corpus AS (
         SELECT doc_id,
                CASE WHEN doc_id % 4 = 0 THEN
@@ -10983,65 +10446,16 @@ _R12_STAGED_ORACLES["r12_substring_dedup"] = r"""
 """
 
 
-_R12_STAGED_QUERIES["r12_substring_dedup"] = q_r12_substring_dedup
-
-
-# ---------------------------------------------------------------------------
-# ROUND-12 PROMOTION (r11 verdict, Next-round #1)
-#
-# The eight staged rows above were pre-proven green through the exact
-# driver comparison pipeline in round 11 (tools/oracle_check.py
-# --staged 8/8, CI-gated by tests/test_staged_oracles.py). This
-# section is the ROSTER EDIT ONLY: every staged query function and
-# oracle string is reused VERBATIM; the wrappers below union proven
-# all-string (op, k, v) frames with disjoint op tags, which preserves
-# each constituent's hashed surface row-for-row.
-#
-# Slot arithmetic (the driver records at most 50 rows):
-#   merged away (4 slots freed; each pair is one SURVEY/verdict
-#   family, so every family stays named by a green row):
-#     paragraph_dedup + shared_spans      -> span_dedup
-#     cms_sketch + selection_sketches     -> sketches
-#     chunking_v2 + artifacts             -> chunk_artifacts
-#     text_prep + corpus_terms            -> text_corpus
-#   folded as tags on surviving rows (0 slots):
-#     r12_spans_incremental ('inc')       -> span_dedup
-#     r12_decon_bloom ('bx')              -> sketches
-#     r12_hard_negatives ('hn')           -> sampling_v2
-#     r12_crawl_graph ('l'/'a'/'c'/'q')   -> crawl_signals
-#   promoted as real rows (4 new rows):
-#     classifier        = r12_classifier
-#     substring_dedup   = r12_substring_dedup
-#     index_maintenance = r12_index_maintenance
-#     stream_heavy      = r12_stream_heavy
-#   net: 50 - 4 + 4 = 50.
-# ---------------------------------------------------------------------------
-
-_R12_RETIRED = (
-    "paragraph_dedup",
-    "shared_spans",
-    "cms_sketch",
-    "selection_sketches",
-    "chunking_v2",
-    "artifacts",
-    "corpus_terms",
-    "text_prep",
-)
-
-
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 merge: the paragraph/span-dedup family in one row —
-    CCNet paragraph dedup (first/freq/none/sent) + winnowing
-    fingerprints and shared-span pairs (fp/pairs) + the staged-green
-    incremental span index ('inc', r12_spans_incremental verbatim).
+    """Build of the span_dedup row: CCNet paragraph dedup
+    (first/freq/none/sent) + winnowing fingerprints and shared-span
+    pairs (fp/pairs) + the incremental span index ('inc').
 
-    OPTIMIZATION r13 (guide §1.2): the row's arms re-ran their dominant
-    per-row projections — winnowed_fingerprints 4× (fp, pairs, inc
-    index, inc new-batch) and split_paragraphs 3× (freq, none, first).
-    Both are per-row generators, so every consumer is a fold or filter
-    of ONE persisted frame; the constituent functions keep building
-    their own pipelines when called standalone (the staged-oracle
-    path)."""
+    The arms share their dominant per-row projections —
+    winnowed_fingerprints (fp, pairs, inc index, inc new-batch) and
+    split_paragraphs (freq, none, first) — so each is computed ONCE
+    into a persisted frame that every arm folds or filters; the arm
+    functions build their own pipelines when called standalone."""
     from data_validation_engine_spark.llmops.paragraphs import (
         split_paragraphs,
     )
@@ -11066,160 +10480,32 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 merge: the sketch family in one row — CMS
-    build/query/merge/stream + HLL profile + exact heavy hitters
-    (cells/est/merge/stream/grp/fine/roll/tok/src) + Bloom filters and
-    DSIR surfaces (w/m/q/rt/sc/nf) + the staged-green Bloom-screened
-    decontamination ('bx', r12_decon_bloom verbatim — its guarantee is
-    output identity with exact decontaminate, which is the oracle).
-
-    OPTIMIZATION r13 (guide §2.6): the six constituents construct
-    concurrently via :func:`_parallel_arms` — the flat arm list is the
-    associativity-flattened (cms ∪ hll ∪ hh) ∪ (bloom ∪ dsir) ∪ decon,
-    so the union is row-for-row the r12 wrapper's. Serially, the CMS
-    arm's availableNow drain (~1.9s), the heavy-hitter arms' two
-    bounded sketch collects and the decon arm's word-array collect sum
-    on the driver; overlapped, the row pays the max (measured 13.3s →
-    9.8s median, 5-rep alternation at sf0.1/local[32])."""
-    return _parallel_arms(
-        spark, sf_dir,
-        _q_cms_batch,
-        _q_cms_stream,
-        q_hll_profile,
-        _q_hh_tok,
-        _q_hh_src,
-        q_r11_bloom,
-        q_r11_dsir,
-        q_r12_decon_bloom,
+def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build of the classifier row: the 'base' and 'ev' arms share ONE
+    persisted :func:`_classifier_feats` pass (one feature-hashing pass
+    for the whole row instead of six)."""
+    feats = _classifier_feats(spark, sf_dir)
+    return q_r12_classifier(spark, sf_dir, feats=feats).unionByName(
+        _q_classifier_ev(spark, sf_dir, feats=feats)
     )
 
 
-def q_chunk_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 merge: the chunk/pack/export family in one row —
-    content-defined + sentence chunking + streaming paragraph
-    frequency (c/sc/w) + pack materialization, training-shard
-    manifests, and ORC/binary round-trips (plain/eod/manifest/orc/
-    bin).
-
-    OPTIMIZATION r13 (guide §2.6): flat concurrent construction — the
-    stream-paragraph arm's availableNow drain (~2s) and the artifacts
-    arm's shard/ORC/binary round-trip writes (~1.6s) overlap instead
-    of summing; union order is the associativity-flattened original."""
-    return _parallel_arms(
-        spark, sf_dir,
-        q_r11_cdc_chunks,
-        q_r11_sentence_chunks,
-        q_r11_stream_paragraphs,
-        q_artifacts,
-    )
-
-
-def q_text_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 merge: the text-preparation + corpus-term family in
-    one row — normalization/HTML/JSON/URL + chat templates
-    (norm/html/json/url/render/stats/mask) + TF-IDF/vocab/postings/BPE
-    round-trip (tfidf/vocab/enc/post/bpe/dec)."""
-    return q_text_prep(spark, sf_dir).unionByName(
-        q_corpus_terms(spark, sf_dir)
-    )
-
-
-def q_sampling_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 extension riding the sampling_v2 row: the r11 roster
-    row verbatim + the staged-green cosine-band hard negatives ('hn',
-    r12_hard_negatives verbatim).
-
-    OPTIMIZATION r13 (guide §2.6): flat concurrent construction in the
-    associativity-flattened original union order (the absn/fracn pair
-    rides as one arm, :func:`_q_sampling_nulled_budget`)."""
-    return _parallel_arms(
-        spark, sf_dir,
-        q_r11_curation,
-        q_r11_negative_samples,
-        q_r11_interleave,
-        _q_sampling_nulled_budget,
-        q_r12_hard_negatives,
-    )
-
-
-def q_crawl_signals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-12 extension riding the crawl_signals row: the r11 roster
-    row verbatim (robots/script-profile/RRF, r/d/dt/p/f) + the
-    staged-green crawl-graph trio ('l'/'a'/'c'/'q',
-    r12_crawl_graph verbatim).
-
-    OPTIMIZATION r13 (guide §2.6): flat concurrent construction in the
-    associativity-flattened original union order."""
-    return _parallel_arms(
-        spark, sf_dir,
-        q_r11_robots,
-        q_r11_script_profile,
-        q_r11_rrf_fusion,
-        q_r12_crawl_graph,
-    )
-
-
-def _r12_oracles(pre: dict[str, str]) -> dict[str, str]:
-    """The round-12 oracle edit over the effective pre-r12 dict: union
-    strings mirror the query wrappers constituent-for-constituent."""
-    return {
-        "span_dedup": _union_sql(
-            pre["paragraph_dedup"],
-            pre["shared_spans"],
-            _R12_STAGED_ORACLES["r12_spans_incremental"],
-        ),
-        "sketches": _union_sql(
-            pre["cms_sketch"],
-            pre["selection_sketches"],
-            _R12_STAGED_ORACLES["r12_decon_bloom"],
-        ),
-        "chunk_artifacts": _union_sql(
-            pre["chunking_v2"], pre["artifacts"]
-        ),
-        "text_corpus": _union_sql(
-            pre["text_prep"], pre["corpus_terms"]
-        ),
-        "sampling_v2": _union_sql(
-            pre["sampling_v2"],
-            _R12_STAGED_ORACLES["r12_hard_negatives"],
-        ),
-        "crawl_signals": _union_sql(
-            pre["crawl_signals"],
-            _R12_STAGED_ORACLES["r12_crawl_graph"],
-        ),
-        "classifier": _union_sql(
-            _R12_STAGED_ORACLES["r12_classifier"],
-            _CLASSIFIER_EVAL_ORACLE,
-        ),
-        "substring_dedup": _R12_STAGED_ORACLES["r12_substring_dedup"],
-        "index_maintenance": _R12_STAGED_ORACLES[
-            "r12_index_maintenance"
-        ],
-        "stream_heavy": _R12_STAGED_ORACLES["r12_stream_heavy"],
-    }
-
-
-def q_classifier_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The classifier row: r12_classifier verbatim (z/za/k/cz/ck) +
-    the round-12 'ev' holdout-evaluation tags (r11 verdict, Next-round
-    #6): classifier_eval with the row's integer weights (bias 3,
-    sum mode, threshold_prob 0.5 → logit cut 0 exactly), labels
-    y = (doc_id % 2 = 0), grouped per lang. Confusion counts ride as
-    exact longs; precision/recall/f1/accuracy ride as
+def _q_classifier_ev(
+    spark: SparkSession, sf_dir: str, feats: DataFrame | None = None
+) -> DataFrame:
+    """Holdout evaluation ('ev'): classifier_eval with the row's integer
+    weights (bias 3, sum mode, threshold_prob 0.5 → logit cut 0
+    exactly), labels y = (doc_id % 2 = 0), grouped per lang. Confusion
+    counts ride as exact longs; precision/recall/f1/accuracy ride as
     floor(metric * 1e6) — each a short fixed tree of correctly-rounded
     double ops on exact integers (the 'za' mean-logit class), NULL
-    metrics as '~' (CONCAT_WS would silently drop NULLs).
-
-    OPTIMIZATION r13: the 'ev' arm shares the persisted
-    :func:`_classifier_feats` frame with the five base surfaces (one
-    feature-hashing pass for the whole row instead of six)."""
+    metrics as '~' (CONCAT_WS would silently drop NULLs)."""
     from data_validation_engine_spark.llmops.classifier import (
         classifier_eval,
     )
 
-    feats = _classifier_feats(spark, sf_dir)
-    base = q_r12_classifier(spark, sf_dir, feats=feats)
+    if feats is None:
+        feats = _classifier_feats(spark, sf_dir)
     docs = feats.withColumn(
         "y", (F.col("doc_id") % 2 == 0).cast("int")
     )
@@ -11228,7 +10514,7 @@ def q_classifier_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "COALESCE(CAST(CAST(floor({m} * 1000000) AS BIGINT) AS STRING),"
         " '~')"
     )
-    ev = classifier_eval(
+    return classifier_eval(
         docs, "text", "y", w, bias=3.0, average=False,
         threshold_prob=0.5, group_cols=["lang"], features_col="__wf",
     ).selectExpr(
@@ -11239,7 +10525,6 @@ def q_classifier_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {mfmt.format(m='`precision`')}, {mfmt.format(m='recall')},"
         f" {mfmt.format(m='f1')}, {mfmt.format(m='accuracy')}) AS v",
     )
-    return base.unionByName(ev)
 
 
 _CLASSIFIER_EVAL_ORACLE = rf"""
@@ -11292,15 +10577,8 @@ _CLASSIFIER_EVAL_ORACLE = rf"""
 
 
 # ---------------------------------------------------------------------------
-# ROUND-13 STAGED ROWS — the next increment's pre-promotion gate
-# (populated as round-12 operators land; run by tools/oracle_check.py
-# --staged and tests/test_staged_oracles.py, not by the driver)
+# WARC ingest, exact-substring verification and product quantization
 # ---------------------------------------------------------------------------
-
-_R13_STAGED_QUERIES: dict[
-    str, Callable[[SparkSession, str], DataFrame]
-] = {}
-_R13_STAGED_ORACLES: dict[str, str] = {}
 
 
 #: WARC fixture path per sf_dir (one bounded driver-side build per
@@ -11418,7 +10696,7 @@ def q_r13_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.unionByName(n).unionByName(c)
 
 
-_R13_STAGED_ORACLES["r13_warc"] = """
+_R13_WARC_SQL = """
     WITH inv AS (
         SELECT doc_id,
                'http://' || source || '/doc/' || doc_id
@@ -11444,9 +10722,6 @@ _R13_STAGED_ORACLES["r13_warc"] = """
     UNION ALL
     SELECT 'c', uri, canon FROM inv
 """
-
-
-_R13_STAGED_QUERIES["r13_warc"] = q_r13_warc
 
 
 def q_r13_substring_verify(
@@ -11502,8 +10777,8 @@ def q_r13_substring_verify(
 # gram-TEXT group-by (the only change — the span-merge/splice chain is
 # reused verbatim so the two proofs differ in exactly the claim under
 # test)
-_R13_STAGED_ORACLES["r13_substring_verify"] = (
-    _R12_STAGED_ORACLES["r12_substring_dedup"]
+_R13_SUBSTRING_VERIFY_SQL = (
+    _R12_SUBSTRING_DEDUP_SQL
     .replace(
         """pos AS (
         SELECT doc_id, i,
@@ -11518,10 +10793,7 @@ _R13_STAGED_ORACLES["r13_substring_verify"] = (
     .replace("SELECT 'sp' AS op,", "SELECT 'spv' AS op,")
     .replace("SELECT 'rm',", "SELECT 'rmv',")
 )
-assert "md5(substring" not in _R13_STAGED_ORACLES["r13_substring_verify"]
-
-
-_R13_STAGED_QUERIES["r13_substring_verify"] = q_r13_substring_verify
+assert "md5(substring" not in _R13_SUBSTRING_VERIFY_SQL
 
 
 def q_r13_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11624,7 +10896,7 @@ _PQ_ADC_CTES = """
     )"""
 
 
-_R13_STAGED_ORACLES["r13_pq"] = _PQ_ADC_CTES.replace("__PQ_K__", "20") + """
+_R13_PQ_SQL = _PQ_ADC_CTES.replace("__PQ_K__", "20") + """
     SELECT 'enc' AS op, CAST(vec_id AS VARCHAR) AS k,
            string_agg(CAST(code AS VARCHAR), ',' ORDER BY s) AS v
     FROM assign GROUP BY vec_id
@@ -11636,69 +10908,17 @@ _R13_STAGED_ORACLES["r13_pq"] = _PQ_ADC_CTES.replace("__PQ_K__", "20") + """
 """
 
 
-_R13_STAGED_QUERIES["r13_pq"] = q_r13_pq
+def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build of the substring_dedup row: hash-replay spans ('sp'/'rm')
+    + the exact_verify twin ('spv'/'rmv'), whose oracle groups grams by
+    TEXT, proving true ExactSubstr semantics rather than hash-replay
+    parity.
 
-
-# ---------------------------------------------------------------------------
-# ROUND-13 PROMOTION (r12 verdict, Next-round #3)
-#
-# The three staged rows above were pre-proven green through the exact
-# driver comparison pipeline in round 12 (tools/oracle_check.py
-# --staged 3/3, CI-gated by tests/test_staged_oracles.py). This
-# section is the ROSTER EDIT ONLY: every staged query function and
-# oracle string is reused VERBATIM; each fold unions proven all-string
-# (op, k, v) frames with disjoint op tags, which preserves each
-# constituent's hashed surface row-for-row.
-#
-# Slot arithmetic: all three land as TAGS on surviving rows (0 slots;
-# net 50 - 0 + 0 = 50):
-#   r13_pq ('enc'/'adc')                 -> semantic_dedup
-#   r13_substring_verify ('spv'/'rmv')   -> substring_dedup
-#   r13_warc ('w'/'n'/'c')               -> text_corpus
-#
-# Fold-target notes (the r12 verdict named ann_variants /
-# source_xml_json as the obvious homes, but neither is an all-string
-# (op, k, v) frame — ann_variants is (method, vec_id, cosine, bucket,
-# bucket_part) and source_xml_json is (src, k BIGINT, name, rk), so a
-# verbatim union is impossible there; chunk_artifacts collides on the
-# 'c'/'w' tags):
-#   - r13_pq rides semantic_dedup: the other embedding-family
-#     all-string row (pair/grp/keep vs enc/adc — disjoint);
-#   - r13_warc rides text_corpus: the text-ingestion family
-#     (norm/html/json/url/... vs w/n/c — disjoint).
-# ---------------------------------------------------------------------------
-
-
-def q_semantic_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-13 extension riding the semantic_dedup row: the r10 roster
-    row verbatim (SemDeDup pair/grp/keep) + the staged-green product-
-    quantization surfaces ('enc' full-corpus PQ codes / 'adc'
-    asymmetric-distance top-20, r13_pq verbatim — llmops/pq.py).
-
-    OPTIMIZATION r13 (guide §2.6): concurrent construction — the
-    SemDeDup arm's k-means rounds and centroid collects (~4.5s of
-    driver-side construction) overlap the PQ arm's codebook fit."""
-    return _parallel_arms(
-        spark, sf_dir,
-        q_semantic_dedup,
-        q_r13_pq,
-    )
-
-
-def q_substring_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-13 extension riding the substring_dedup row: the r12
-    roster row verbatim (hash-replay 'sp'/'rm') + the staged-green
-    exact_verify twin ('spv'/'rmv', r13_substring_verify verbatim) —
-    whose oracle groups grams by TEXT, proving true ExactSubstr
-    semantics rather than hash-replay parity.
-
-    OPTIMIZATION r13 (guide §1.2): the two modes share everything up
-    to the hot-candidate position table — the verify mode is a filter
-    over it — so ``marked`` is computed ONCE (persisted; one gram-hash
-    + CMS-collect pass for the whole row where the four arms
-    previously ran four) and each mode's span table derives from it.
-    The constituent functions still build their own pipelines when
-    called standalone (the staged-oracle path)."""
+    The two modes share everything up to the hot-candidate position
+    table — the verify mode is a filter over it — so ``marked`` is
+    computed ONCE (persisted; one gram-hash + CMS-collect pass for the
+    whole row) and each mode's span table derives from it. The arm
+    functions build their own pipelines when called standalone."""
     from data_validation_engine_spark.llmops.substrings import (
         marked_positions,
         spans_from_marked,
@@ -11728,51 +10948,10 @@ def q_substring_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_text_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-13 extension riding the text_corpus row: the r12 merge
-    verbatim (text-prep + corpus-term surfaces) + the staged-green WARC
-    ingest ('w' payload fidelity / 'n' record inventory / 'c'
-    canonicalized URIs, r13_warc verbatim — sources/warc.py).
-
-    OPTIMIZATION r13 (guide §2.6): flat concurrent construction — the
-    corpus-terms arm's BPE merge loop runs driver-side rounds (~4.5s
-    construct) that the text-prep and WARC arms' work now overlaps;
-    union order is the associativity-flattened original."""
-    return _parallel_arms(
-        spark, sf_dir,
-        q_text_prep,
-        q_corpus_terms,
-        q_r13_warc,
-    )
-
-
-def _r13_oracles(pre: dict[str, str]) -> dict[str, str]:
-    """The round-13 oracle edit over the effective post-r12 dict: union
-    strings mirror the query wrappers constituent-for-constituent."""
-    return {
-        "semantic_dedup": _union_sql(
-            pre["semantic_dedup"], _R13_STAGED_ORACLES["r13_pq"]
-        ),
-        "substring_dedup": _union_sql(
-            pre["substring_dedup"],
-            _R13_STAGED_ORACLES["r13_substring_verify"],
-        ),
-        "text_corpus": _union_sql(
-            pre["text_corpus"], _R13_STAGED_ORACLES["r13_warc"]
-        ),
-    }
-
-
 # ---------------------------------------------------------------------------
-# ROUND-14 STAGED ROWS — the next increment's pre-promotion gate
-# (populated as round-13 operators land; run by tools/oracle_check.py
-# --staged and tests/test_staged_oracles.py, not by the driver)
+# staged rows (the STAGED table): run by tools/oracle_check.py --staged
+# and tests/test_staged_oracles.py, not by the driver
 # ---------------------------------------------------------------------------
-
-_R14_STAGED_QUERIES: dict[
-    str, Callable[[SparkSession, str], DataFrame]
-] = {}
-_R14_STAGED_ORACLES: dict[str, str] = {}
 
 
 def q_r14_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11842,7 +11021,7 @@ def _duck_recall_arm(method: str, cte: str) -> str:
     """
 
 
-_R14_STAGED_ORACLES["r14_ann_recall"] = (
+_R14_ANN_RECALL_SQL = (
     f"""
     WITH ex AS (SELECT vec_id FROM ({_similarity_topk_oracle(k=10)})),
     iv AS (SELECT vec_id FROM ({_similarity_ivf_oracle(k=10)})),
@@ -11865,9 +11044,6 @@ _R14_STAGED_ORACLES["r14_ann_recall"] = (
     + "UNION ALL"
     + _duck_recall_arm("pq", "pqt")
 )
-
-
-_R14_STAGED_QUERIES["r14_ann_recall"] = q_r14_ann_recall
 
 
 def q_r14_pq_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11936,7 +11112,7 @@ def q_r14_pq_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cb.unionByName(ent)
 
 
-_R14_STAGED_ORACLES["r14_pq_entity"] = (
+_R14_PQ_ENTITY_SQL = (
     _PQ_ADC_CTES.replace("__PQ_K__", "20")
     + """
     SELECT 'cb' AS op,
@@ -11953,9 +11129,6 @@ _R14_STAGED_ORACLES["r14_pq_entity"] = (
     FROM top
 """
 )
-
-
-_R14_STAGED_QUERIES["r14_pq_entity"] = q_r14_pq_entity
 
 
 def q_r14_pq_many(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12040,7 +11213,7 @@ def q_r14_pq_many(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multi-query twin of the _PQ_ADC_CTES chain: lut/dist/top gain a qid
 # key; the 'mivf' arm adds the per-query probe-cell cut (same centroid
 # folds, row_number <= n_probe per query, ties to the lower cell)
-_R14_STAGED_ORACLES["r14_pq_many"] = f"""
+_R14_PQ_MANY_SQL = f"""
     WITH cb AS (
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
                embedding AS cv
@@ -12159,9 +11332,6 @@ _R14_STAGED_ORACLES["r14_pq_many"] = f"""
 """
 
 
-_R14_STAGED_QUERIES["r14_pq_many"] = q_r14_pq_many
-
-
 def q_r14_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rule quality gate (llmops/gopher.py, Rae 2021 §A1.1 —
     round 13) over the documents table via the DECLARED step, with
@@ -12211,7 +11381,7 @@ def q_r14_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R14_STAGED_ORACLES["r14_gopher"] = """
+_R14_GOPHER_SQL = """
     WITH base AS (
         SELECT doc_id, COALESCE(text, '') AS t FROM documents
     ),
@@ -12304,9 +11474,6 @@ _R14_STAGED_ORACLES["r14_gopher"] = """
 """
 
 
-_R14_STAGED_QUERIES["r14_gopher"] = q_r14_gopher
-
-
 #: the r14_c4 corpus construction, shared verbatim by both twins: the
 #: synthetic documents are single-line unpunctuated word bags, so the
 #: splice plants every C4 rule's trigger — terminal punctuation
@@ -12361,7 +11528,7 @@ def q_r14_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R14_STAGED_ORACLES["r14_c4"] = f"""
+_R14_C4_SQL = f"""
     WITH corpus AS (
         -- COALESCE mirrors c4_clean's fail-closed NULL handling (a
         -- NULL-text doc cleans to the empty page, flags false)
@@ -12418,9 +11585,6 @@ _R14_STAGED_ORACLES["r14_c4"] = f"""
                 AS INT) AS VARCHAR) AS v
     FROM m
 """
-
-
-_R14_STAGED_QUERIES["r14_c4"] = q_r14_c4
 
 
 #: the r14_urls corpus construction, shared verbatim by both twins:
@@ -12481,7 +11645,7 @@ def q_r14_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R14_STAGED_ORACLES["r14_urls"] = f"""
+_R14_URLS_SQL = f"""
     WITH corpus AS (
         SELECT doc_id, {_URLS_CASE_SQL} AS url FROM documents
     ),
@@ -12514,9 +11678,6 @@ _R14_STAGED_ORACLES["r14_urls"] = f"""
            COALESCE(CAST(CAST(blocked AS INT) AS VARCHAR), '~') AS v
     FROM s
 """
-
-
-_R14_STAGED_QUERIES["r14_urls"] = q_r14_urls
 
 
 def q_r14_wordlm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12585,7 +11746,7 @@ _WORDLM_GRAMS = (
     "{'p': i, 'o': k, 'g': array_to_string(toks[i - k + 1:i], ' ')}))))"
 )
 
-_R14_STAGED_ORACLES["r14_wordlm"] = f"""
+_R14_WORDLM_SQL = f"""
     WITH tok AS (
         SELECT doc_id,
                CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
@@ -12642,7 +11803,6 @@ _R14_STAGED_ORACLES["r14_wordlm"] = f"""
            CAST(COALESCE(h.h3, 0) AS VARCHAR)
     FROM ev e LEFT JOIN hist h ON e.doc_id = h.doc_id
 """
-_R14_STAGED_QUERIES["r14_wordlm"] = q_r14_wordlm
 
 
 def q_r14_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12812,8 +11972,7 @@ def _pair_recall_oracle() -> str:
     """
 
 
-_R14_STAGED_ORACLES["r14_pair_recall"] = _pair_recall_oracle()
-_R14_STAGED_QUERIES["r14_pair_recall"] = q_r14_pair_recall
+_R14_PAIR_RECALL_SQL = _pair_recall_oracle()
 
 
 def q_r14_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13074,8 +12233,7 @@ def _rep_oracle() -> str:
     """
 
 
-_R14_STAGED_ORACLES["r14_repetition"] = _rep_oracle()
-_R14_STAGED_QUERIES["r14_repetition"] = q_r14_repetition
+_R14_REPETITION_SQL = _rep_oracle()
 
 
 #: injected-marker prefix shared verbatim by both r14_encoding twins —
@@ -13150,5 +12308,228 @@ def _encoding_oracle() -> str:
 """
 
 
-_R14_STAGED_ORACLES["r14_encoding"] = _encoding_oracle()
-_R14_STAGED_QUERIES["r14_encoding"] = q_r14_encoding
+_R14_ENCODING_SQL = _encoding_oracle()
+
+
+# ---------------------------------------------------------------------------
+# the roster table that queries(), oracle_sql() and the staged pair are
+# derived from
+# ---------------------------------------------------------------------------
+
+
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+class Arm(NamedTuple):
+    """One constituent of a roster row: a tag naming it, the function that
+    builds its frame, and the DuckDB SQL stating the same rows. ``oracle``
+    is None for an arm whose rows the PREVIOUS arm's SQL already states
+    (one attested string covering a surface built in two arms)."""
+
+    tag: str
+    query: Query
+    oracle: str | None
+
+
+class Row(NamedTuple):
+    """A roster row. Its frame is the union of its arms' frames, built
+    concurrently by :func:`_parallel_arms`, unless ``build`` is set: a
+    row whose arms share a persisted intermediate builds them through
+    that one function instead. A multi-arm row's frames are all-string
+    (op, k, v) with disjoint op tags, so the union hashes each arm
+    row-for-row."""
+
+    arms: tuple[Arm, ...]
+    build: Query | None = None
+
+
+def _one(query: Query, oracle: str) -> Row:
+    """A single-surface row: one arm, tagged ``full``."""
+    return Row((Arm("full", query, oracle),))
+
+
+#: The driver's 50 rows: row -> its arms. This table is the only place
+#: that pairs a query function with its oracle; queries(), oracle_sql(),
+#: and tools/profile_arms.py are derived from it. ROSTER.md has the op
+#: tags each arm emits.
+ROSTER: dict[str, Row] = {
+    # relational steps (SURVEY §2.3)
+    "add_select": _one(q_add_select, _ADD_SELECT_SQL),
+    "group_by": _one(q_group_by, _GROUP_BY_SQL),
+    "left_join": _one(q_left_join, _LEFT_JOIN_SQL),
+    "flag_joins": _one(q_flag_joins, _FLAG_JOINS_SQL),
+    "union": _one(q_union, _UNION_ROW_SQL),
+    "join_header": _one(q_join_header, _JOIN_HEADER_SQL),
+    "sync_filters": _one(q_sync_filters, _SYNC_FILTERS_SQL),
+    "entity_ops": _one(q_entity_ops, _ENTITY_OPS_SQL),
+    "scalar_functions": _one(q_scalar_functions, _SCALAR_FUNCTIONS_SQL),
+    # data contract (SURVEY §2.5-2.6)
+    "contract_cast": _one(q_contract_cast, _CONTRACT_CAST_SQL),
+    "contract_messages": _one(q_contract_messages, _CONTRACT_MESSAGES_SQL),
+    "contract_functions": _one(
+        q_contract_functions, _CONTRACT_FUNCTIONS_SQL
+    ),
+    # grouped/rolling/event analytics
+    "window_analytics": Row((
+        Arm("topk", q_topk_group, _TOPK_GROUP_SQL),
+        Arm("roll", q_rolling_agg, _ROLLING_AGG_SQL),
+        Arm("pct", q_percentiles, _PERCENTILES_SQL),
+        Arm("ru", q_rollup_cube, _ROLLUP_CUBE_SQL),
+    )),
+    "event_analytics": Row((
+        Arm("ret", q_retention, _RETENTION_SQL),
+        Arm("fb", q_funnel_batch, _FUNNEL_BATCH_SQL),
+        Arm("fs", q_funnel_stream, _FUNNEL_STREAM_SQL),
+        Arm("sroll", q_rolling_stream, _ROLLING_STREAM_SQL),
+    )),
+    # llmops (training-data pipeline operators)
+    "dedup_exact": _one(q_dedup_exact, _DEDUP_EXACT_SQL),
+    "dedup_minhash": _one(q_dedup_minhash, _DEDUP_MINHASH_SQL),
+    "step_dedup_fuzzy": _one(q_step_dedup_fuzzy, _STEP_DEDUP_FUZZY_SQL),
+    "dedup_simhash": _one(q_dedup_simhash, _DEDUP_SIMHASH_SQL),
+    "bounded_pairs": _one(q_bounded_pairs, _BOUNDED_PAIRS_SQL),
+    "connected_components": _one(
+        q_connected_components, _CONNECTED_COMPONENTS_SQL
+    ),
+    "step_similarity_ann": _one(
+        q_step_similarity_ann, _STEP_SIMILARITY_ANN_SQL
+    ),
+    "ann_variants": _one(q_ann_variants, _ANN_VARIANTS_SQL),
+    "vector_stats": _one(q_vector_stats, _VECTOR_STATS_SQL),
+    "embedding_neardup": _one(q_embedding_neardup, _EMBEDDING_NEARDUP_SQL),
+    "quality_sync": _one(q_quality_sync, _QUALITY_SYNC_SQL),
+    "text_stats": _one(q_text_stats, _TEXT_STATS_SQL),
+    "sequence_prep": _one(q_sequence_prep, _SEQUENCE_PREP_SQL),
+    "data_profiling": _one(q_data_profiling, _DATA_PROFILING_SQL),
+    "text_retrieval": _one(q_text_retrieval, _TEXT_RETRIEVAL_SQL),
+    "multimodal_meta": _one(q_multimodal_meta, _MULTIMODAL_META_SQL),
+    # sources (SURVEY §2.1)
+    "source_xml_json": _one(q_source_xml_json, _SOURCE_XML_JSON_SQL),
+    # streaming (availableNow drains over the events table)
+    "streaming_sync_messages": _one(
+        q_streaming_sync_messages, _STREAMING_SYNC_MESSAGES_SQL
+    ),
+    "streaming_dedup": _one(q_streaming_dedup, _STREAMING_DEDUP_SQL),
+    "streaming_window_counts": _one(
+        q_streaming_window_counts, _STREAMING_WINDOW_COUNTS_SQL
+    ),
+    "sessionize": Row((
+        Arm("b", q_sessionize_batch, _SESSIONIZE_BATCH_SQL),
+        Arm("s", q_sessionize_stream, _SESSIONIZE_STREAM_SQL),
+    )),
+    # pipeline/infrastructure surfaces
+    "report_aggregates": _one(q_report_aggregates, _REPORT_AGGREGATES_SQL),
+    "pipeline_e2e": _one(q_pipeline_e2e, _PIPELINE_E2E_SQL),
+    # embeddings, features and text families
+    "semantic_dedup": Row((
+        Arm("sem", q_semantic_dedup, _SEMANTIC_DEDUP_SQL),
+        Arm("pq", q_r13_pq, _R13_PQ_SQL),
+    )),
+    "pca_project": _one(q_pca_project, _PCA_PROJECT_SQL),
+    "feature_scores": _one(q_feature_scores, _FEATURE_SCORES_SQL),
+    "span_dedup": Row((
+        Arm("para", q_paragraph_dedup, _PARAGRAPH_DEDUP_SQL),
+        Arm("spans", q_shared_spans, _SHARED_SPANS_SQL),
+        Arm("inc", q_r12_spans_incremental, _R12_SPANS_INCREMENTAL_SQL),
+    ), build=q_span_dedup),
+    "sketches": Row((
+        Arm("cms", _q_cms_batch, _CMS_SKETCH_SQL),
+        Arm("cms_stream", _q_cms_stream, None),
+        Arm("hll", q_hll_profile, _HLL_PROFILE_SQL),
+        Arm("hh_tok", _q_hh_tok, _R11_HEAVY_HITTERS_SQL),
+        Arm("hh_src", _q_hh_src, None),
+        Arm("bloom", q_r11_bloom, _R11_BLOOM_SQL),
+        Arm("dsir", q_r11_dsir, _R11_DSIR_SQL),
+        Arm("decon", q_r12_decon_bloom, _R12_DECON_BLOOM_SQL),
+    )),
+    "chunk_artifacts": Row((
+        Arm("cdc", q_r11_cdc_chunks, _R11_CDC_CHUNKS_SQL),
+        Arm("sentences", q_r11_sentence_chunks, _R11_SENTENCE_CHUNKS_SQL),
+        Arm("paragraphs", q_r11_stream_paragraphs,
+            _R11_STREAM_PARAGRAPHS_SQL),
+        Arm("packs", q_materialize_packs, _MATERIALIZE_PACKS_SQL),
+        Arm("shards", q_training_shards, _TRAINING_SHARDS_SQL),
+        Arm("formats", q_source_formats, _SOURCE_FORMATS_SQL),
+    )),
+    "text_corpus": Row((
+        Arm("normalize", q_text_normalize, _TEXT_NORMALIZE_SQL),
+        Arm("chat", q_chat_prep, _CHAT_PREP_SQL),
+        Arm("terms", q_corpus_terms, _CORPUS_TERMS_SQL),
+        Arm("warc", q_r13_warc, _R13_WARC_SQL),
+    )),
+    "sampling_v2": Row((
+        Arm("curation", q_r11_curation, _R11_CURATION_SQL),
+        Arm("negs", q_r11_negative_samples, _R11_NEGATIVE_SAMPLES_SQL),
+        Arm("interleave", q_r11_interleave, _R11_INTERLEAVE_SQL),
+        Arm("nulled", _q_sampling_nulled_budget, _SAMPLING_NULLED_BUDGET_SQL),
+        Arm("hardneg", q_r12_hard_negatives, _R12_HARD_NEGATIVES_SQL),
+    )),
+    "crawl_signals": Row((
+        Arm("robots", q_r11_robots, _R11_ROBOTS_SQL),
+        Arm("scripts", q_r11_script_profile, _R11_SCRIPT_PROFILE_SQL),
+        Arm("rrf", q_r11_rrf_fusion, _R11_RRF_FUSION_SQL),
+        Arm("graph", q_r12_crawl_graph, _R12_CRAWL_GRAPH_SQL),
+    )),
+    "classifier": Row((
+        Arm("base", q_r12_classifier, _R12_CLASSIFIER_SQL),
+        Arm("ev", _q_classifier_ev, _CLASSIFIER_EVAL_ORACLE),
+    ), build=q_classifier),
+    "substring_dedup": Row((
+        Arm("hash", q_r12_substring_dedup, _R12_SUBSTRING_DEDUP_SQL),
+        Arm("verify", q_r13_substring_verify, _R13_SUBSTRING_VERIFY_SQL),
+    ), build=q_substring_dedup),
+    "index_maintenance": _one(
+        q_r12_index_maintenance, _R12_INDEX_MAINTENANCE_SQL
+    ),
+    "stream_heavy": _one(q_r12_stream_heavy, _R12_STREAM_HEAVY_SQL),
+}
+
+#: Candidate rows, run by ``tools/oracle_check.py --staged`` and
+#: tests/test_staged_oracles.py but not by the driver: a row is proven
+#: green here before it joins ROSTER.
+STAGED: dict[str, Row] = {
+    "r14_ann_recall": _one(q_r14_ann_recall, _R14_ANN_RECALL_SQL),
+    "r14_pq_entity": _one(q_r14_pq_entity, _R14_PQ_ENTITY_SQL),
+    "r14_pq_many": _one(q_r14_pq_many, _R14_PQ_MANY_SQL),
+    "r14_gopher": _one(q_r14_gopher, _R14_GOPHER_SQL),
+    "r14_c4": _one(q_r14_c4, _R14_C4_SQL),
+    "r14_urls": _one(q_r14_urls, _R14_URLS_SQL),
+    "r14_wordlm": _one(q_r14_wordlm, _R14_WORDLM_SQL),
+    "r14_pair_recall": _one(q_r14_pair_recall, _R14_PAIR_RECALL_SQL),
+    "r14_repetition": _one(q_r14_repetition, _R14_REPETITION_SQL),
+    "r14_encoding": _one(q_r14_encoding, _R14_ENCODING_SQL),
+}
+
+
+def _row_query(row: Row) -> Query:
+    if row.build is not None:
+        return row.build
+    if len(row.arms) == 1:
+        return row.arms[0].query
+    fns = [arm.query for arm in row.arms]
+    return lambda spark, sf_dir: _parallel_arms(spark, sf_dir, *fns)
+
+
+def _row_oracle(row: Row) -> str:
+    # UNION ALL is associative and the value hash is order-insensitive,
+    # so a row's SQL is its arms' SQL in one flat union
+    parts = [arm.oracle for arm in row.arms if arm.oracle is not None]
+    return parts[0] if len(parts) == 1 else _union_sql(*parts)
+
+
+def queries() -> dict[str, Query]:
+    """Exactly 50 queries: the driver's correctness artifact records at
+    most 50 rows, so the budget is allocated deliberately (ROSTER.md)."""
+    return {name: _row_query(row) for name, row in ROSTER.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: _row_oracle(row) for name, row in ROSTER.items()}
+
+
+def staged_queries() -> dict[str, Query]:
+    return {name: _row_query(row) for name, row in STAGED.items()}
+
+
+def staged_oracle_sql() -> dict[str, str]:
+    return {name: _row_oracle(row) for name, row in STAGED.items()}

@@ -207,7 +207,7 @@ def test_span_paragraph_passthrough_parity(spark, docs):
 
 
 def test_cms_parity_keyed_build_matches_two_half_builds(spark, docs):
-    """The q_cms_sketch 'merge' rewrite: building one sketch keyed by
+    """The CMS batch arm's 'merge' rewrite: building one sketch keyed by
     (group, parity) and merging the parity dimension away must equal
     union-then-merge of two separately built half sketches — a value's
     cells depend only on the value, never on its group."""

@@ -11,7 +11,8 @@ The submission path gets the same treatment for Python-built frames:
 a ``spark.createDataFrame(`` over a Python list is planned as an RDD
 that starts Python workers when evaluated, so each call site on that
 path is pinned below. Importing the pipeline must also leave the llmops
-library unimported, so a submission's setup does not pay for it.
+library unimported, so a submission's setup does not pay for it. The
+driver roster must carry no dead function and no round-layered registry.
 """
 
 from __future__ import annotations
@@ -123,3 +124,63 @@ def test_pipeline_import_loads_no_llmops_module():
         cwd=REPO, capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip() == "[]"
+
+
+#: module-level names that mark a round-layered registry: aliases kept
+#: for an older roster, retired-row lists and oracle merge passes
+_ROUND_LAYERED = re.compile(
+    r"_v[23]$|_RETIRED|_r1[0-9]_oracles|_merge_oracles"
+)
+
+#: what the driver exposes: the contract functions and the two tables
+_DRIVER_ROOTS = {
+    "entry", "queries", "oracle_sql", "staged_queries", "staged_oracle_sql",
+    "ROSTER", "STAGED",
+}
+
+
+def test_driver_has_no_dead_or_round_layered_code():
+    """Every top-level function in ``__spark_entry__.py`` is reachable from
+    the driver contract or its tables, or is named by ``tests/`` or
+    ``tools/``; and no module-level name marks a round-layered registry
+    (a ``_v2`` alias, a retired-row list, an oracle merge pass)."""
+    import ast
+
+    source = (REPO / "__spark_entry__.py").read_text(encoding="utf-8")
+    tree = ast.parse(source)
+    defs: dict[str, ast.AST] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            defs[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (
+                node.targets if isinstance(node, ast.Assign) else [node.target]
+            )
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    defs[t.id] = node
+
+    layered = sorted(n for n in defs if _ROUND_LAYERED.search(n))
+    assert not layered, f"round-layered registry names: {layered}"
+
+    this = Path(__file__).resolve()
+    named = set()
+    for p in [*REPO.glob("tests/*.py"), *REPO.glob("tools/*.py")]:
+        if p.resolve() != this:
+            named |= set(re.findall(r"\w+", p.read_text(encoding="utf-8")))
+
+    def refs(node: ast.AST) -> set[str]:
+        return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+    seen: set[str] = set()
+    todo = [n for n in defs if n in _DRIVER_ROOTS or n in named]
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += [r for r in refs(defs[name]) if r in defs]
+    dead = sorted(
+        n for n, node in defs.items()
+        if isinstance(node, ast.FunctionDef) and n not in seen
+    )
+    assert not dead, f"unreachable driver functions: {dead}"

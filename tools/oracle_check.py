@@ -392,7 +392,7 @@ def main() -> int:
             print(f"FAIL  {name}: " + "; ".join(problems))
             failures += 1
         else:
-            print(f"OK    {name}: {len(s_rows)} rows")
+            print(f"OK    {name}: {len(s_rows)} rows hash={sh}")
     print("failures:", failures)
     return 1 if failures else 0
 

@@ -1,13 +1,13 @@
-"""Per-arm profiler for the merged roster rows (r13 optimization,
-guide §1: measure first).
+"""Per-arm profiler for roster rows.
 
 Usage: python tools/profile_arms.py <row> [runs]
 
-Replays a merged row's constituent arms SEPARATELY, each forced with
-the noop sink and labelled via setJobDescription, so the row's seconds
-decompose into arm seconds. Arms are the exact constituent query
-functions the row unions — same code path, same inputs — so the
-decomposition is faithful to the in-roster cost.
+Replays a row's arms (``__spark_entry__.ROSTER[row].arms``, by tag)
+SEPARATELY, each forced with the noop sink and labelled via
+setJobDescription, so the row's seconds decompose into arm seconds. A
+one-arm row replays as its single arm, ``full``. Each arm is called
+standalone, so a row with a shared ``build`` replays every arm with its
+own copy of the shared intermediate.
 """
 
 from __future__ import annotations
@@ -44,63 +44,7 @@ def main() -> None:
 
     import __spark_entry__ as e
 
-    ARMS: dict[str, dict] = {
-        "sketches": {
-            "cms": e.q_cms_sketch,
-            "hll": e.q_hll_profile,
-            "hh": e.q_r11_heavy_hitters,
-            "bloom": e.q_r11_bloom,
-            "dsir": e.q_r11_dsir,
-            "decon": e.q_r12_decon_bloom,
-        },
-        "text_corpus": {
-            "text_prep": e.q_text_prep,
-            "corpus_terms": e.q_corpus_terms,
-            "warc": e.q_r13_warc,
-        },
-        "semantic_dedup": {
-            "sem": e.q_semantic_dedup,
-            "pq": e.q_r13_pq,
-        },
-        "span_dedup": {
-            "para": e.q_paragraph_dedup,
-            "spans": e.q_shared_spans,
-            "inc": e.q_r12_spans_incremental,
-        },
-        "chunk_artifacts": {
-            "chunking": e.q_chunking_v2,
-            "artifacts": e.q_artifacts,
-        },
-        "sampling_v2": {
-            "curation": e.q_r11_curation,
-            "negs": e.q_r11_negative_samples,
-            "interleave": e.q_r11_interleave,
-            "hardneg": e.q_r12_hard_negatives,
-            "full": e.q_sampling_v2,
-        },
-        "crawl_signals": {
-            "r11": e.q_crawl_signals,
-            "graph": e.q_r12_crawl_graph,
-        },
-        "data_profiling": {"full": e.q_data_profiling},
-        "pipeline_e2e": {"full": e.q_pipeline_e2e},
-        "connected_components": {"full": e.q_connected_components},
-        "multimodal_meta": {"full": e.q_multimodal_meta},
-        "substring_dedup": {"full": e.q_substring_dedup_v2},
-        "feature_scores": {"full": e.q_feature_scores},
-        "report_aggregates": {"full": e.q_report_aggregates},
-        "streaming_dedup": {"full": e.q_streaming_dedup},
-        "dedup_minhash": {"full": e.q_dedup_minhash},
-        "dedup_exact": {"full": e.q_dedup_exact},
-        "text_stats": {"full": e.q_text_stats},
-        "vector_stats": {"full": e.q_vector_stats},
-        "ann_variants": {"full": e.q_ann_variants},
-    }
-
-    arms = ARMS.get(row)
-    if arms is None:
-        fn = e.queries()[row]
-        arms = {"full": fn}
+    arms = {arm.tag: arm.query for arm in e.ROSTER[row].arms}
 
     # one untimed warmup of every arm (JIT/codegen/python-pool)
     for name, fn in arms.items():
