@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. $SPARK_GRAFT_CPUS defaults to every
+core; the driver heap is three quarters of physical memory, at most 90g.
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver-side collect overhead).
@@ -32,23 +33,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dve-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "90g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    cpus = local_cpus()
+    spark = local_session("dve-spark-bench", QUERY_CONF)
 
     import __spark_entry__ as entry_mod
 
@@ -274,6 +260,47 @@ def main() -> None:
         last_pass = run_pass(record=True, pass_idx=i)
         emit()
     spark.stop()
+
+
+def local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, or every core of this machine."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+
+
+def driver_memory() -> str:
+    """Driver heap: three quarters of physical memory, at most 90g."""
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(90 * 1024, physical_mb * 3 // 4)}m"
+
+
+#: the settings the headline queries run under
+QUERY_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
+def local_session(app_name: str, conf: dict[str, str]):
+    """A ``local[local_cpus()]`` session with as many shuffle partitions,
+    the ``driver_memory()`` heap and the UI off; ``conf`` adds settings or
+    overrides these."""
+    from pyspark.sql import SparkSession
+
+    cpus = local_cpus()
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    settings = {
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.driver.memory": driver_memory(),
+        "spark.ui.enabled": "false",
+        **conf,
+    }
+    for key, value in settings.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 if __name__ == "__main__":

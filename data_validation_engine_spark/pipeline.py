@@ -78,7 +78,7 @@ def _critical_row(
 ) -> dict:
     """The literal dict of a submission-level message — the driver-side
     unit the presence/XSD early-return paths write without a Spark job
-    (r14 optimization, sinks/errors.py write_literal_messages_jsonl)."""
+    (sinks/errors.py write_literal_messages_jsonl)."""
     return {
         "entity": entity,
         "original_entity": entity,
@@ -238,12 +238,12 @@ def run_pipeline(
     datasets = {e.name: e for e in contract.datasets} if contract else {}
 
     # -- entity presence checks (dve backends/base/contract.py:227-315) ----
-    # r14 optimization (guide §5): presence/XSD failures are a handful of
-    # DRIVER-LITERAL rows; ``boot_rows`` tracks them so the early-return
-    # paths write the feed driver-side (write_literal_messages_jsonl —
-    # layout-identical to the distributed writer) instead of paying a
-    # ~0.75s Spark write job for 2-3 rows. The collector still carries
-    # the frames every continuing path unions downstream.
+    # presence/XSD failures are a handful of DRIVER-LITERAL rows;
+    # ``boot_rows`` tracks them so the early-return paths write the feed
+    # driver-side (write_literal_messages_jsonl — layout-identical to the
+    # distributed writer) instead of paying a ~0.75s Spark write job for
+    # 2-3 rows. The collector still carries the frames every continuing
+    # path unions downstream.
     boot_rows: list[dict] = []
     missing = set(datasets) - set(input_files)
     extra = set(input_files) - set(datasets)
@@ -373,8 +373,8 @@ def run_pipeline(
     # lazy checkpoint BEFORE the JSONL write: the write is this frame's
     # first action and materialises the blocks, so the all_messages
     # union below reuses them instead of re-running the whole contract
-    # validation DAG a second time (r13, guide §1.2 — the message feed
-    # is error-sized, never corpus-sized)
+    # validation DAG a second time (the message feed is error-sized,
+    # never corpus-sized)
     contract_msgs = contract_messages.union_or_empty(spark).localCheckpoint(
         eager=False
     )

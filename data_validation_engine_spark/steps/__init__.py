@@ -1,223 +1,15 @@
-"""Relational step vocabulary: typed configs + the Spark step engine."""
+"""Relational step vocabulary: typed configs + the Spark step engine.
 
-from data_validation_engine_spark.steps.configs import (
-    AnyStep,
-    Aggregation,
-    AntiJoin,
-    ApplyChanges,
-    Scd2Build,
-    ExactQuotaSample,
-    Winsorize,
-    Impute,
-    KmvSetOps,
-    RetentionCohorts,
-    WindowFunnel,
-    Unpivot,
-    Chi2Drift,
-    GroupedRegression,
-    EcdfNormalize,
-    BucketByLength,
-    SqlQuery,
-    BpeTrain,
-    BpeEncode,
-    Repartition,
-    Pseudonymize,
-    ClusterRepresentatives,
-    ApproxDistinct,
-    AsofJoin,
-    Bm25Search,
-    BuildVocab,
-    ChunkDocuments,
-    ColumnAddition,
-    ColumnRemoval,
-    ConfirmJoinHasMatch,
-    ConnectedComponents,
-    ContainmentPairs,
-    CopyEntity,
-    CorpusMix,
-    Decontaminate,
-    DeferredFilter,
-    EmbeddingNearDup,
-    EncodeTokens,
-    EntityRemoval,
-    ExactDedup,
-    FrequentItems,
-    FuzzyJoin,
-    GroupedQuantiles,
-    HashSample,
-    HashSplit,
-    HeaderJoin,
-    ImmediateFilter,
-    IncrementalDedup,
-    InnerJoin,
-    IntervalJoin,
-    KMeansFit,
-    KnnJoin,
-    LabelCentroids,
-    LanguageId,
-    LeftJoin,
-    MergeUpsert,
-    MinHashDedup,
-    NearestCentroid,
-    NgramJaccardPairs,
-    Notification,
-    OneToOneJoin,
-    OrphanIdentification,
-    PackSequences,
-    OutlierFlags,
-    PageRankStep,
-    PiiScrub,
-    ProfileColumns,
-    ProfileDiff,
-    ProjectVectors,
-    ProfileGate,
-    QuantileBuckets,
-    QuantizeVectors,
-    QualityFilters,
-    RenameEntity,
-    RepetitionStats,
-    RollingAggregate,
-    Rule,
-    SaltedJoin,
-    SampledQuantiles,
-    SelectColumns,
-    SemiJoin,
-    Sessionize,
-    SimHashPairs,
-    SimHashSignatures,
-    SimilarityTopK,
-    PQFit,
-    AnnRecall,
-    PQTopKMany,
-    PQEncode,
-    GopherQualityFlags,
-    GopherRepetitionFlags,
-    C4Clean,
-    UrlBlocklist,
-    PairRecall,
-    WordLm,
-    MojibakeStats,
-    FixMojibake,
-    SnapshotDiff,
-    StratifiedSample,
-    TableUnion,
-    TextFingerprint,
-    TextStats,
-    TfIdfTopTerms,
-    TopKPerGroup,
-    TriangleCount,
-    WeightedSample,
-    parse_step,
-)
+Every public name in ``steps.configs`` (each step type and ``AnyStep``)
+is also importable from here.
+"""
+
+from data_validation_engine_spark.steps import configs
+from data_validation_engine_spark.steps.configs import parse_step
 from data_validation_engine_spark.steps.engine import StepEngine
 
-__all__ = [
-    "AnyStep",
-    "ApplyChanges",
-    "Scd2Build",
-    "ExactQuotaSample",
-    "Winsorize",
-    "Impute",
-    "KmvSetOps",
-    "RetentionCohorts",
-    "WindowFunnel",
-    "Unpivot",
-    "Chi2Drift",
-    "GroupedRegression",
-    "EcdfNormalize",
-    "BucketByLength",
-    "SqlQuery",
-    "BpeTrain",
-    "BpeEncode",
-    "Repartition",
-    "Pseudonymize",
-    "ClusterRepresentatives",
-    "ApproxDistinct",
-    "MergeUpsert",
-    "Bm25Search",
-    "EncodeTokens",
-    "FrequentItems",
-    "FuzzyJoin",
-    "GroupedQuantiles",
-    "PageRankStep",
-    "OutlierFlags",
-    "ProfileColumns",
-    "ProfileDiff",
-    "ProjectVectors",
-    "ProfileGate",
-    "QuantileBuckets",
-    "QuantizeVectors",
-    "Aggregation",
-    "AntiJoin",
-    "AsofJoin",
-    "BuildVocab",
-    "ChunkDocuments",
-    "ColumnAddition",
-    "ColumnRemoval",
-    "ConfirmJoinHasMatch",
-    "ConnectedComponents",
-    "ContainmentPairs",
-    "CopyEntity",
-    "CorpusMix",
-    "Decontaminate",
-    "DeferredFilter",
-    "EmbeddingNearDup",
-    "EntityRemoval",
-    "ExactDedup",
-    "HashSample",
-    "HashSplit",
-    "HeaderJoin",
-    "ImmediateFilter",
-    "IncrementalDedup",
-    "InnerJoin",
-    "IntervalJoin",
-    "KMeansFit",
-    "KnnJoin",
-    "LabelCentroids",
-    "LanguageId",
-    "LeftJoin",
-    "MinHashDedup",
-    "NearestCentroid",
-    "NgramJaccardPairs",
-    "Notification",
-    "OneToOneJoin",
-    "OrphanIdentification",
-    "PackSequences",
-    "PiiScrub",
-    "QualityFilters",
-    "RenameEntity",
-    "RepetitionStats",
-    "RollingAggregate",
-    "Rule",
-    "SaltedJoin",
-    "SampledQuantiles",
-    "SelectColumns",
-    "SemiJoin",
-    "Sessionize",
-    "SimHashPairs",
-    "SimHashSignatures",
-    "SimilarityTopK",
-    "PQFit",
-    "AnnRecall",
-    "PQTopKMany",
-    "PQEncode",
-    "GopherQualityFlags",
-    "GopherRepetitionFlags",
-    "C4Clean",
-    "UrlBlocklist",
-    "PairRecall",
-    "WordLm",
-    "MojibakeStats",
-    "FixMojibake",
-    "SnapshotDiff",
-    "StepEngine",
-    "StratifiedSample",
-    "TableUnion",
-    "TextFingerprint",
-    "TextStats",
-    "TfIdfTopTerms",
-    "TopKPerGroup",
-    "TriangleCount",
-    "WeightedSample",
-    "parse_step",
-]
+
+def __getattr__(name: str):
+    if not name.startswith("_") and hasattr(configs, name):
+        return getattr(configs, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -5,6 +5,11 @@ Pydantic v2 models mirroring the reference's step vocabulary
 discriminated on ``operation``). Configs are frozen/hashable; the engine
 dispatches on config type.
 
+A model that declares an ``operation`` tag is a step type, and its class
+is the type's only declaration: ``AnyStep`` collects every such model,
+``steps`` re-exports them and the engine routes each to its binding or
+handler.
+
 Every step reads ``entity_name`` from the namespace and writes its result
 under ``new_entity_name or entity_name``.
 """
@@ -2085,151 +2090,18 @@ class WindowedHeavyHitters(AbstractStep):
     check_totals: bool = False
 
 
-
+#: every step type: each model above that declares an ``operation`` tag,
+#: in definition order
 AnyStep = Annotated[
     Union[
-        ColumnAddition,
-        ColumnRemoval,
-        SelectColumns,
-        Aggregation,
-        ImmediateFilter,
-        DeferredFilter,
-        Notification,
-        LeftJoin,
-        InnerJoin,
-        OneToOneJoin,
-        SemiJoin,
-        AntiJoin,
-        ConfirmJoinHasMatch,
-        HeaderJoin,
-        TableUnion,
-        OrphanIdentification,
-        CopyEntity,
-        RenameEntity,
-        EntityRemoval,
-        ExactDedup,
-        MinHashDedup,
-        QualityFilters,
-        SimilarityTopK,
-        EmbeddingNearDup,
-        TextStats,
-        LanguageId,
-        TfIdfTopTerms,
-        TextFingerprint,
-        SimHashSignatures,
-        SimHashPairs,
-        NgramJaccardPairs,
-        HashSplit,
-        HashSample,
-        StratifiedSample,
-        AsofJoin,
-        ConnectedComponents,
-        Sessionize,
-        IntervalJoin,
-        TopKPerGroup,
-        RollingAggregate,
-        IncrementalDedup,
-        ContainmentPairs,
-        WeightedSample,
-        RepetitionStats,
-        PiiScrub,
-        Decontaminate,
-        ChunkDocuments,
-        PackSequences,
-        LabelCentroids,
-        NearestCentroid,
-        BuildVocab,
-        KnnJoin,
-        KMeansFit,
-        ApproxDistinct,
-        GroupedQuantiles,
-        ProfileColumns,
-        FuzzyJoin,
-        Bm25Search,
-        PageRankStep,
-        EncodeTokens,
-        ProfileGate,
-        FrequentItems,
-        ProfileDiff,
-        QuantileBuckets,
-        OutlierFlags,
-        MergeUpsert,
-        ApplyChanges,
-        TriangleCount,
-        ParagraphDedup,
-        SemanticDedup,
-        PcaProject,
-        HllProfile,
-        LmPerplexity,
-        SharedSpans,
-        GroupedAuc,
-        SampledQuantiles,
-        QuantizeVectors,
-        SaltedJoin,
-        ProjectVectors,
-        CorpusMix,
-        SnapshotDiff,
-        Scd2Build,
-        ExactQuotaSample,
-        Winsorize,
-        Impute,
-        KmvSetOps,
-        RetentionCohorts,
-        WindowFunnel,
-        Unpivot,
-        Chi2Drift,
-        GroupedRegression,
-        EcdfNormalize,
-        BucketByLength,
-        SqlQuery,
-        BpeTrain,
-        BpeEncode,
-        Repartition,
-        Pseudonymize,
-        ClusterRepresentatives,
-        RenderChat,
-        ConversationStats,
-        NormalizeText,
-        CmsSketch,
-        BloomFilter,
-        DsirResample,
-        RrfFuse,
-        NegativeSamples,
-        ExtractHtmlText,
-        ExtractLinks,
-        ExtractAnchorTexts,
-        HeavyHitters,
-        InterleaveSources,
-        HardNegativeSamples,
-        ParseRobots,
-        RobotsAllowed,
-        ParseJson,
-        MaterializePacks,
-        CompressionRatio,
-        Standardize,
-        SplitSentences,
-        ChunkBySentences,
-        ChunkByContent,
-        ScriptProfile,
-        SelectTokenBudget,
-        ClassifierFit,
-        ClassifierScore,
-        ClassifierEval,
-        CompactMinhashIndex,
-        RemoveRepeatedSubstrings,
-        WindowedHeavyHitters,
-        PQFit,
-        AnnRecall,
-        PQTopKMany,
-        PQEncode,
-        GopherQualityFlags,
-        C4Clean,
-        UrlBlocklist,
-        PairRecall,
-        WordLm,
-        GopherRepetitionFlags,
-        MojibakeStats,
-        FixMojibake,
+        tuple(
+            model
+            for model in globals().values()
+            if isinstance(model, type)
+            and issubclass(model, BaseModel)
+            and model.__module__ == __name__
+            and "operation" in model.model_fields
+        )
     ],
     Field(discriminator="operation"),
 ]
@@ -2242,13 +2114,3 @@ class _StepParser(BaseModel):
 def parse_step(config: dict) -> AnyStep:
     """Parse one step dict (e.g. from a dischema JSON) into a typed config."""
     return _StepParser(step=config).step
-
-
-class Rule(BaseModel):
-    """A named, ordered list of steps (a rule program fragment)."""
-
-    model_config = ConfigDict(frozen=True)
-
-    name: str = "root"
-    steps: tuple[AnyStep, ...] = ()
-    variables: dict[str, object] = Field(default_factory=dict)

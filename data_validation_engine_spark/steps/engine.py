@@ -3,15 +3,19 @@ every step is lazy DataFrame ops.
 
 Design notes (vs reference, for the parity audit):
 
-- Dispatch: ``StepEngine.evaluate`` looks the config type up in
-  ``BINDINGS`` and then in the engine's handler table (dve
-  base/rules.py:97-203 reflects over type hints; here an explicit
-  registry — same contract). A binding row names a library function as
-  ``"module:function"``, imported when the step runs, and maps config
-  fields to its frames and arguments; a step that only forwards its
-  fields needs nothing else. Steps that orchestrate (joins and their
-  integrity checks, orphans, notifications, the sync-filter stage,
-  side-table resolution, multi-branch steps) keep a handler method.
+- Dispatch: a step type is declared once, by its config class in
+  ``configs``. ``StepEngine.evaluate`` looks the config type up in
+  ``BINDINGS`` and then in ``HANDLERS``, which is read at import from
+  the handler methods' own signatures: a public method whose
+  keyword-only ``config`` is annotated ``configs.X`` handles ``X`` (dve
+  base/rules.py:97-122 fills ``__step_functions__`` by the same
+  reflection over type hints). A binding row names a library function
+  as ``"module:function"``, imported when the step runs, and maps
+  config fields to its frames and arguments; a step that only forwards
+  its fields needs nothing else. Steps that orchestrate (joins and
+  their integrity checks, orphans, notifications, the sync-filter
+  stage, side-table resolution, multi-branch steps) keep a handler
+  method.
 - Joins are theta joins on SQL conditions (dve spark/rules.py:144-166);
   Catalyst picks broadcast/hash/sort-merge/nested-loop. Column-conflict
   resolution is last-wins, case-insensitive, preserving last casing
@@ -33,8 +37,16 @@ Design notes (vs reference, for the parity audit):
 from __future__ import annotations
 
 import importlib
+import inspect
 import uuid
-from typing import Callable, MutableMapping, NamedTuple, Optional
+from typing import (
+    Callable,
+    MutableMapping,
+    NamedTuple,
+    Optional,
+    get_args,
+    get_type_hints,
+)
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,73 +59,6 @@ from data_validation_engine_spark.messages import (
     messages_for_failures,
 )
 from data_validation_engine_spark.steps import configs
-from data_validation_engine_spark.steps.configs import (
-    AbstractJoin,
-    AbstractNewColumnJoin,
-    Aggregation,
-    AntiJoin,
-    AnyStep,
-    ColumnAddition,
-    ColumnRemoval,
-    ConfirmJoinHasMatch,
-    ConnectedComponents,
-    CopyEntity,
-    DeferredFilter,
-    EmbeddingNearDup,
-    EntityRemoval,
-    ExactDedup,
-    HeaderJoin,
-    ImmediateFilter,
-    InnerJoin,
-    LeftJoin,
-    MinHashDedup,
-    Notification,
-    OneToOneJoin,
-    OrphanIdentification,
-    QualityFilters,
-    RenameEntity,
-    SelectColumns,
-    SemiJoin,
-    Sessionize,
-    SimilarityTopK,
-    TableUnion,
-    IntervalJoin,
-    TopKPerGroup,
-    RollingAggregate,
-    IncrementalDedup,
-    KMeansFit,
-    ProfileGate,
-    SemanticDedup,
-    PcaProject,
-    HllProfile,
-    LmPerplexity,
-    SharedSpans,
-    ProjectVectors,
-    ExactQuotaSample,
-    Winsorize,
-    Impute,
-    KmvSetOps,
-    WindowFunnel,
-    Unpivot,
-    EcdfNormalize,
-    BucketByLength,
-    SqlQuery,
-    BpeTrain,
-    BpeEncode,
-    Repartition,
-    Pseudonymize,
-    BloomFilter,
-    CmsSketch,
-    DsirResample,
-    RrfFuse,
-    ClassifierFit,
-    ClassifierScore,
-    ClassifierEval,
-    PQFit,
-    PQTopKMany,
-    PQEncode,
-    WordLm,
-)
 
 Entities = MutableMapping[str, DataFrame]
 Messages = Optional[DataFrame]
@@ -152,7 +97,7 @@ class Binding(NamedTuple):
             name,
         )
 
-    def __call__(self, entities: Entities, config: AnyStep) -> DataFrame:
+    def __call__(self, entities: Entities, config: configs.AnyStep) -> DataFrame:
         def value(field: str):
             if field.startswith("@"):
                 return entities[getattr(config, field[1:])]
@@ -616,83 +561,18 @@ class StepEngine:
 
             register_all_functions(spark)
 
-        self._handlers: dict[type, Callable[..., Messages]] = {
-            ColumnAddition: self.add,
-            ColumnRemoval: self.remove,
-            SelectColumns: self.select,
-            Aggregation: self.group_by,
-            ImmediateFilter: self.filter,
-            DeferredFilter: self.deferred_filter,
-            Notification: self.notify,
-            LeftJoin: self.left_join,
-            InnerJoin: self.inner_join,
-            OneToOneJoin: self.one_to_one_join,
-            SemiJoin: self.semi_join,
-            AntiJoin: self.anti_join,
-            ConfirmJoinHasMatch: self.has_match,
-            HeaderJoin: self.join_header,
-            TableUnion: self.union,
-            OrphanIdentification: self.identify_orphans,
-            CopyEntity: self.copy_entity,
-            RenameEntity: self.rename_entity,
-            EntityRemoval: self.remove_entities,
-            ExactDedup: self.dedup_exact,
-            MinHashDedup: self.dedup_minhash,
-            QualityFilters: self.quality_filters,
-            SimilarityTopK: self.similarity_topk,
-            EmbeddingNearDup: self.embedding_neardup,
-            KMeansFit: self.kmeans,
-            ConnectedComponents: self.connected_components,
-            Sessionize: self.sessionize,
-            IntervalJoin: self.interval_join,
-            TopKPerGroup: self.top_k,
-            RollingAggregate: self.rolling_agg,
-            IncrementalDedup: self.dedup_incremental,
-            ProfileGate: self.profile_gate,
-            SemanticDedup: self.semantic_dedup,
-            PcaProject: self.pca_project,
-            HllProfile: self.hll_profile,
-            LmPerplexity: self.lm_perplexity,
-            SharedSpans: self.shared_spans,
-            ProjectVectors: self.project_vectors,
-            ExactQuotaSample: self.exact_quota_sample,
-            Winsorize: self.winsorize,
-            Impute: self.impute,
-            KmvSetOps: self.kmv_set,
-            WindowFunnel: self.window_funnel,
-            Unpivot: self.unpivot,
-            EcdfNormalize: self.ecdf_normalize,
-            BucketByLength: self.bucket_by_length,
-            SqlQuery: self.sql_query,
-            BpeTrain: self.bpe_train,
-            BpeEncode: self.bpe_encode,
-            Repartition: self.repartition,
-            Pseudonymize: self.pseudonymize,
-            CmsSketch: self.cms_sketch,
-            BloomFilter: self.bloom_filter,
-            DsirResample: self.dsir_resample,
-            RrfFuse: self.rrf_fuse,
-            ClassifierFit: self.classifier_fit,
-            ClassifierScore: self.classifier_score,
-            ClassifierEval: self.classifier_eval,
-            PQFit: self.pq_fit,
-            PQTopKMany: self.pq_topk_many,
-            PQEncode: self.pq_encode,
-            WordLm: self.word_lm,
-        }
-
     # -- dispatch ----------------------------------------------------------
-    def evaluate(self, entities: Entities, *, config: AnyStep) -> Messages:
+    def evaluate(self, entities: Entities, *, config: configs.AnyStep) -> Messages:
         binding = BINDINGS.get(type(config))
         if binding is not None:
             entities[config.output_name] = binding(entities, config)
             return None
-        handler = self._handlers.get(type(config))
+        handler = HANDLERS.get(type(config))
         if handler is None:
             raise ConfigurationError(f"unsupported step type {type(config).__name__}")
-        return handler(entities, config=config)
+        return handler(self, entities, config=config)
 
-    def run(self, entities: Entities, steps: list[AnyStep]) -> Messages:
+    def run(self, entities: Entities, steps: list[configs.AnyStep]) -> Messages:
         """Evaluate a list of steps in order; returns the unioned messages."""
         collector = MessageCollector()
         for step in steps:
@@ -700,19 +580,19 @@ class StepEngine:
         return collector.union()
 
     # -- column / projection ----------------------------------------------
-    def add(self, entities: Entities, *, config: ColumnAddition) -> Messages:
+    def add(self, entities: Entities, *, config: configs.ColumnAddition) -> Messages:
         df = entities[config.entity_name]
         entities[config.output_name] = df.withColumn(
             config.column_name, F.expr(config.expression)
         )
         return None
 
-    def remove(self, entities: Entities, *, config: ColumnRemoval) -> Messages:
+    def remove(self, entities: Entities, *, config: configs.ColumnRemoval) -> Messages:
         df = entities[config.entity_name]
         entities[config.output_name] = df.drop(config.column_name)
         return None
 
-    def select(self, entities: Entities, *, config: SelectColumns) -> Messages:
+    def select(self, entities: Entities, *, config: configs.SelectColumns) -> Messages:
         df = entities[config.entity_name]
         out = df.selectExpr(*parse_multiple_expressions(config.columns))
         if config.distinct:
@@ -720,7 +600,7 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    def group_by(self, entities: Entities, *, config: Aggregation) -> Messages:
+    def group_by(self, entities: Entities, *, config: configs.Aggregation) -> Messages:
         df = entities[config.entity_name]
         group_exprs = [
             F.expr(e) for e in parse_multiple_expressions(config.group_by)
@@ -758,13 +638,15 @@ class StepEngine:
         return None
 
     # -- filters / notifications ------------------------------------------
-    def filter(self, entities: Entities, *, config: ImmediateFilter) -> Messages:
+    def filter(
+        self, entities: Entities, *, config: configs.ImmediateFilter
+    ) -> Messages:
         df = entities[config.entity_name]
         entities[config.output_name] = df.where(F.expr(config.expression))
         return None
 
     def deferred_filter(
-        self, entities: Entities, *, config: DeferredFilter
+        self, entities: Entities, *, config: configs.DeferredFilter
     ) -> Messages:
         """A deferred filter evaluated standalone == a sync stage of one."""
         from data_validation_engine_spark.steps.sync_filters import (
@@ -773,7 +655,7 @@ class StepEngine:
 
         return apply_sync_filters(entities, [config])
 
-    def notify(self, entities: Entities, *, config: Notification) -> Messages:
+    def notify(self, entities: Entities, *, config: configs.Notification) -> Messages:
         df = entities[config.entity_name]
         # The predicate is evaluated on the FULL frame (excluded columns stay
         # visible to the expression); they are only omitted from the message
@@ -793,7 +675,7 @@ class StepEngine:
     def _theta_join(
         self,
         entities: Entities,
-        config: AbstractJoin,
+        config: configs.AbstractJoin,
         how: str,
         *,
         source_extra: list[tuple[str, Column]] | None = None,
@@ -816,7 +698,7 @@ class StepEngine:
         self,
         source: DataFrame,
         joined: DataFrame,
-        config: AbstractNewColumnJoin,
+        config: configs.AbstractNewColumnJoin,
         *,
         drop_source_columns: tuple[str, ...] = (),
     ) -> DataFrame:
@@ -850,7 +732,7 @@ class StepEngine:
         )
 
     def _assert_join_not_multiplying(
-        self, joined: DataFrame, rowid: str, config: AbstractJoin
+        self, joined: DataFrame, rowid: str, config: configs.AbstractJoin
     ) -> DataFrame:
         """Single-execution integrity check: persist the join, run ONE action
         computing (total, distinct source rows), raise if any source row
@@ -893,7 +775,7 @@ class StepEngine:
         self._persisted.clear()
 
     def _new_column_join(
-        self, entities: Entities, config: AbstractNewColumnJoin, how: str,
+        self, entities: Entities, config: configs.AbstractNewColumnJoin, how: str,
         *, integrity_check: bool = False,
     ) -> Messages:
         rowid = f"__rowid_{uuid.uuid4().hex[:8]}"
@@ -911,32 +793,32 @@ class StepEngine:
         )
         return None
 
-    def left_join(self, entities: Entities, *, config: LeftJoin) -> Messages:
+    def left_join(self, entities: Entities, *, config: configs.LeftJoin) -> Messages:
         return self._new_column_join(entities, config, "left")
 
-    def inner_join(self, entities: Entities, *, config: InnerJoin) -> Messages:
+    def inner_join(self, entities: Entities, *, config: configs.InnerJoin) -> Messages:
         return self._new_column_join(entities, config, "inner")
 
     def one_to_one_join(
-        self, entities: Entities, *, config: OneToOneJoin
+        self, entities: Entities, *, config: configs.OneToOneJoin
     ) -> Messages:
         return self._new_column_join(
             entities, config, "left",
             integrity_check=config.perform_integrity_check,
         )
 
-    def semi_join(self, entities: Entities, *, config: SemiJoin) -> Messages:
+    def semi_join(self, entities: Entities, *, config: configs.SemiJoin) -> Messages:
         _, _, joined = self._theta_join(entities, config, "left_semi")
         entities[config.output_name] = joined
         return None
 
-    def anti_join(self, entities: Entities, *, config: AntiJoin) -> Messages:
+    def anti_join(self, entities: Entities, *, config: configs.AntiJoin) -> Messages:
         _, _, joined = self._theta_join(entities, config, "left_anti")
         entities[config.output_name] = joined
         return None
 
     def has_match(
-        self, entities: Entities, *, config: ConfirmJoinHasMatch
+        self, entities: Entities, *, config: configs.ConfirmJoinHasMatch
     ) -> Messages:
         rowid = f"__rowid_{uuid.uuid4().hex[:8]}"
         check = config.perform_integrity_check
@@ -958,7 +840,9 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    def join_header(self, entities: Entities, *, config: HeaderJoin) -> Messages:
+    def join_header(
+        self, entities: Entities, *, config: configs.HeaderJoin
+    ) -> Messages:
         source = entities[config.entity_name]
         header = entities[config.target_name]
         # exactly-one-row check: fetch at most 2 rows, never a full count
@@ -984,7 +868,7 @@ class StepEngine:
         )
         return None
 
-    def union(self, entities: Entities, *, config: TableUnion) -> Messages:
+    def union(self, entities: Entities, *, config: configs.TableUnion) -> Messages:
         source = entities[config.entity_name]
         target = entities[config.target_name]
 
@@ -1017,7 +901,7 @@ class StepEngine:
         return None
 
     def identify_orphans(
-        self, entities: Entities, *, config: OrphanIdentification
+        self, entities: Entities, *, config: configs.OrphanIdentification
     ) -> Messages:
         """Boolean ``IsOrphaned`` flag: no match in target under the theta
         condition; OR-accumulated with a pre-existing flag.
@@ -1114,19 +998,21 @@ class StepEngine:
         return None
 
     # -- entity namespace --------------------------------------------------
-    def copy_entity(self, entities: Entities, *, config: CopyEntity) -> Messages:
+    def copy_entity(
+        self, entities: Entities, *, config: configs.CopyEntity
+    ) -> Messages:
         entities[config.new_entity_name] = entities[config.entity_name]
         return None
 
     def rename_entity(
-        self, entities: Entities, *, config: RenameEntity
+        self, entities: Entities, *, config: configs.RenameEntity
     ) -> Messages:
         entities[config.new_entity_name] = entities[config.entity_name]
         del entities[config.entity_name]
         return None
 
     def remove_entities(
-        self, entities: Entities, *, config: EntityRemoval
+        self, entities: Entities, *, config: configs.EntityRemoval
     ) -> Messages:
         for name in config.entity_names:
             del entities[name]
@@ -1137,7 +1023,9 @@ class StepEngine:
     # local, as in BINDINGS: llmops is an optional surface for
     # pure-validation users, and importing the engine loads none of it.
 
-    def dedup_exact(self, entities: Entities, *, config: ExactDedup) -> Messages:
+    def dedup_exact(
+        self, entities: Entities, *, config: configs.ExactDedup
+    ) -> Messages:
         from data_validation_engine_spark.llmops.dedup import exact_dedup
 
         keys = (
@@ -1159,7 +1047,7 @@ class StepEngine:
         return None
 
     def dedup_minhash(
-        self, entities: Entities, *, config: MinHashDedup
+        self, entities: Entities, *, config: configs.MinHashDedup
     ) -> Messages:
         from data_validation_engine_spark.llmops.dedup import minhash_dedup
 
@@ -1183,7 +1071,7 @@ class StepEngine:
         return None
 
     def embedding_neardup(
-        self, entities: Entities, *, config: EmbeddingNearDup
+        self, entities: Entities, *, config: configs.EmbeddingNearDup
     ) -> Messages:
         if config.target_name is not None:
             from data_validation_engine_spark.llmops.similarity import (
@@ -1220,7 +1108,7 @@ class StepEngine:
         )
         return None
 
-    def kmeans(self, entities: Entities, *, config: KMeansFit) -> Messages:
+    def kmeans(self, entities: Entities, *, config: configs.KMeansFit) -> Messages:
         from data_validation_engine_spark.llmops.ivf import ivf_assign
         from data_validation_engine_spark.llmops.vectors import kmeans_fit
 
@@ -1258,7 +1146,7 @@ class StepEngine:
         return None
 
     def connected_components(
-        self, entities: Entities, *, config: ConnectedComponents
+        self, entities: Entities, *, config: configs.ConnectedComponents
     ) -> Messages:
         from data_validation_engine_spark.llmops.dedup import (
             connected_components,
@@ -1273,7 +1161,7 @@ class StepEngine:
         entities[config.output_name] = cc(entities[config.entity_name])
         return None
 
-    def sessionize(self, entities: Entities, *, config: Sessionize) -> Messages:
+    def sessionize(self, entities: Entities, *, config: configs.Sessionize) -> Messages:
         from data_validation_engine_spark.streaming.sessions import (
             session_stats,
             sessionize,
@@ -1289,7 +1177,7 @@ class StepEngine:
         return None
 
     def quality_filters(
-        self, entities: Entities, *, config: QualityFilters
+        self, entities: Entities, *, config: configs.QualityFilters
     ) -> Messages:
         from data_validation_engine_spark.llmops.text import quality_filters
         from data_validation_engine_spark.steps.sync_filters import (
@@ -1311,7 +1199,7 @@ class StepEngine:
         return apply_sync_filters(entities, gates)
 
     def similarity_topk(
-        self, entities: Entities, *, config: SimilarityTopK
+        self, entities: Entities, *, config: configs.SimilarityTopK
     ) -> Messages:
         from data_validation_engine_spark.llmops.ivf import ivf_topk
         from data_validation_engine_spark.llmops.similarity import (
@@ -1390,7 +1278,7 @@ class StepEngine:
 
     # -- interval / windowed analytics (round 6) ---------------------------
     def interval_join(
-        self, entities: Entities, *, config: IntervalJoin
+        self, entities: Entities, *, config: configs.IntervalJoin
     ) -> Messages:
         from data_validation_engine_spark.llmops.interval import interval_join
 
@@ -1407,7 +1295,7 @@ class StepEngine:
         )
         return None
 
-    def top_k(self, entities: Entities, *, config: TopKPerGroup) -> Messages:
+    def top_k(self, entities: Entities, *, config: configs.TopKPerGroup) -> Messages:
         from data_validation_engine_spark.llmops.analytics import grouped_topk
 
         entities[config.output_name] = grouped_topk(
@@ -1422,7 +1310,7 @@ class StepEngine:
         return None
 
     def rolling_agg(
-        self, entities: Entities, *, config: RollingAggregate
+        self, entities: Entities, *, config: configs.RollingAggregate
     ) -> Messages:
         from data_validation_engine_spark.llmops.analytics import rolling_agg
 
@@ -1437,7 +1325,7 @@ class StepEngine:
         return None
 
     def dedup_incremental(
-        self, entities: Entities, *, config: IncrementalDedup
+        self, entities: Entities, *, config: configs.IncrementalDedup
     ) -> Messages:
         from data_validation_engine_spark.llmops.dedup import (
             incremental_exact_dedup,
@@ -1489,7 +1377,7 @@ class StepEngine:
         return None
 
     def profile_gate(
-        self, entities: Entities, *, config: ProfileGate
+        self, entities: Entities, *, config: configs.ProfileGate
     ) -> Messages:
         """Dataset-level thresholds over the single-pass column profile,
         reported as SUBMISSION-severity messages (the reference's
@@ -1582,7 +1470,7 @@ class StepEngine:
         return union_messages(feeds)
 
     def semantic_dedup(
-        self, entities: Entities, *, config: SemanticDedup
+        self, entities: Entities, *, config: configs.SemanticDedup
     ) -> Messages:
         from data_validation_engine_spark.llmops import semdedup
 
@@ -1603,7 +1491,7 @@ class StepEngine:
         return None
 
     def shared_spans(
-        self, entities: Entities, *, config: SharedSpans
+        self, entities: Entities, *, config: configs.SharedSpans
     ) -> Messages:
         from data_validation_engine_spark.llmops.spans import (
             shared_span_pairs,
@@ -1651,7 +1539,7 @@ class StepEngine:
         return None
 
     def lm_perplexity(
-        self, entities: Entities, *, config: LmPerplexity
+        self, entities: Entities, *, config: configs.LmPerplexity
     ) -> Messages:
         from data_validation_engine_spark.llmops.lm import (
             perplexity_score,
@@ -1673,7 +1561,7 @@ class StepEngine:
         return None
 
     def word_lm(
-        self, entities: Entities, *, config: WordLm
+        self, entities: Entities, *, config: configs.WordLm
     ) -> Messages:
         from data_validation_engine_spark.llmops.lm import (
             stupid_backoff_score,
@@ -1718,7 +1606,7 @@ class StepEngine:
         return None
 
     def hll_profile(
-        self, entities: Entities, *, config: HllProfile
+        self, entities: Entities, *, config: configs.HllProfile
     ) -> Messages:
         from data_validation_engine_spark.llmops.sketch import (
             hll_profile,
@@ -1741,7 +1629,7 @@ class StepEngine:
         return None
 
     def pca_project(
-        self, entities: Entities, *, config: PcaProject
+        self, entities: Entities, *, config: configs.PcaProject
     ) -> Messages:
         from data_validation_engine_spark.llmops.pca import (
             pca_fit,
@@ -1771,7 +1659,7 @@ class StepEngine:
         return None
 
     def exact_quota_sample(
-        self, entities: Entities, *, config: ExactQuotaSample
+        self, entities: Entities, *, config: configs.ExactQuotaSample
     ) -> Messages:
         from data_validation_engine_spark.llmops.split import (
             exact_quota_sample,
@@ -1789,7 +1677,7 @@ class StepEngine:
         return None
 
     def winsorize(
-        self, entities: Entities, *, config: Winsorize
+        self, entities: Entities, *, config: configs.Winsorize
     ) -> Messages:
         from data_validation_engine_spark.llmops.analytics import winsorize
 
@@ -1804,7 +1692,7 @@ class StepEngine:
         )
         return None
 
-    def impute(self, entities: Entities, *, config: Impute) -> Messages:
+    def impute(self, entities: Entities, *, config: configs.Impute) -> Messages:
         from data_validation_engine_spark.llmops.analytics import (
             impute_nulls,
         )
@@ -1818,7 +1706,7 @@ class StepEngine:
         return None
 
     def kmv_set(
-        self, entities: Entities, *, config: KmvSetOps
+        self, entities: Entities, *, config: configs.KmvSetOps
     ) -> Messages:
         from data_validation_engine_spark.llmops.sketch import (
             kmv_set_estimates,
@@ -1846,7 +1734,7 @@ class StepEngine:
         return None
 
     def window_funnel(
-        self, entities: Entities, *, config: WindowFunnel
+        self, entities: Entities, *, config: configs.WindowFunnel
     ) -> Messages:
         from data_validation_engine_spark.llmops.events import (
             funnel_counts,
@@ -1869,7 +1757,7 @@ class StepEngine:
         return None
 
     def pseudonymize(
-        self, entities: Entities, *, config: Pseudonymize
+        self, entities: Entities, *, config: configs.Pseudonymize
     ) -> Messages:
         df = entities[config.entity_name]
         n = int(config.token_length)
@@ -1889,7 +1777,7 @@ class StepEngine:
         return None
 
     def cms_sketch(
-        self, entities: Entities, *, config: CmsSketch
+        self, entities: Entities, *, config: configs.CmsSketch
     ) -> Messages:
         from data_validation_engine_spark.llmops.sketch import (
             cms_build,
@@ -1928,7 +1816,7 @@ class StepEngine:
         return None
 
     def bloom_filter(
-        self, entities: Entities, *, config: BloomFilter
+        self, entities: Entities, *, config: configs.BloomFilter
     ) -> Messages:
         from data_validation_engine_spark.llmops.sketch import (
             bloom_build,
@@ -1966,7 +1854,7 @@ class StepEngine:
         return None
 
     def dsir_resample(
-        self, entities: Entities, *, config: DsirResample
+        self, entities: Entities, *, config: configs.DsirResample
     ) -> Messages:
         from data_validation_engine_spark.llmops import dsir
 
@@ -2027,7 +1915,7 @@ class StepEngine:
         return None
 
     def rrf_fuse(
-        self, entities: Entities, *, config: RrfFuse
+        self, entities: Entities, *, config: configs.RrfFuse
     ) -> Messages:
         from data_validation_engine_spark.llmops.fusion import rrf_fuse
 
@@ -2046,7 +1934,7 @@ class StepEngine:
         return None
 
     def classifier_fit(
-        self, entities: Entities, *, config: ClassifierFit
+        self, entities: Entities, *, config: configs.ClassifierFit
     ) -> Messages:
         from data_validation_engine_spark.llmops.classifier import (
             classifier_fit,
@@ -2112,7 +2000,7 @@ class StepEngine:
         )
 
     def pq_topk_many(
-        self, entities: Entities, *, config: PQTopKMany
+        self, entities: Entities, *, config: configs.PQTopKMany
     ) -> Messages:
         from data_validation_engine_spark.llmops.pq import (
             ivf_pq_topk_many,
@@ -2152,7 +2040,7 @@ class StepEngine:
         return None
 
     def pq_encode(
-        self, entities: Entities, *, config: PQEncode
+        self, entities: Entities, *, config: configs.PQEncode
     ) -> Messages:
         from data_validation_engine_spark.llmops.ivf import ivf_assign
         from data_validation_engine_spark.llmops.pq import pq_encode
@@ -2175,7 +2063,7 @@ class StepEngine:
         )
         return None
 
-    def pq_fit(self, entities: Entities, *, config: PQFit) -> Messages:
+    def pq_fit(self, entities: Entities, *, config: configs.PQFit) -> Messages:
         from data_validation_engine_spark.llmops.pq import (
             pq_codebooks_to_rows,
             pq_fit,
@@ -2202,7 +2090,7 @@ class StepEngine:
         return None
 
     def _resolve_classifier_weights(
-        self, entities: Entities, config: "ClassifierScore"
+        self, entities: Entities, config: configs.ClassifierScore
     ) -> tuple[list[float], float]:
         if (config.weights is None) == (config.weights_entity is None):
             raise ConfigurationError(
@@ -2252,7 +2140,7 @@ class StepEngine:
         return [pairs.get(b, 0.0) for b in range(n)], bias
 
     def classifier_score(
-        self, entities: Entities, *, config: ClassifierScore
+        self, entities: Entities, *, config: configs.ClassifierScore
     ) -> Messages:
         from data_validation_engine_spark.llmops.classifier import (
             classifier_filter,
@@ -2292,7 +2180,7 @@ class StepEngine:
         return None
 
     def classifier_eval(
-        self, entities: Entities, *, config: ClassifierEval
+        self, entities: Entities, *, config: configs.ClassifierEval
     ) -> Messages:
         from data_validation_engine_spark.llmops.classifier import (
             classifier_eval,
@@ -2320,7 +2208,7 @@ class StepEngine:
         return None
 
     def bpe_train(
-        self, entities: Entities, *, config: BpeTrain
+        self, entities: Entities, *, config: configs.BpeTrain
     ) -> Messages:
         from data_validation_engine_spark.llmops.bpe import bpe_train
 
@@ -2337,7 +2225,7 @@ class StepEngine:
         return None
 
     def bpe_encode(
-        self, entities: Entities, *, config: BpeEncode
+        self, entities: Entities, *, config: configs.BpeEncode
     ) -> Messages:
         from data_validation_engine_spark.llmops.bpe import bpe_encode
 
@@ -2358,7 +2246,7 @@ class StepEngine:
         return None
 
     def repartition(
-        self, entities: Entities, *, config: Repartition
+        self, entities: Entities, *, config: configs.Repartition
     ) -> Messages:
         df = entities[config.entity_name]
         cols = [F.col(c) for c in config.columns]
@@ -2387,7 +2275,7 @@ class StepEngine:
         return None
 
     def sql_query(
-        self, entities: Entities, *, config: SqlQuery
+        self, entities: Entities, *, config: configs.SqlQuery
     ) -> Messages:
         names = dict.fromkeys([config.entity_name, *config.inputs])
         # entity names become spark.sql(**kwargs) template frames, so they
@@ -2414,7 +2302,7 @@ class StepEngine:
         return None
 
     def ecdf_normalize(
-        self, entities: Entities, *, config: EcdfNormalize
+        self, entities: Entities, *, config: configs.EcdfNormalize
     ) -> Messages:
         from data_validation_engine_spark.llmops.stats import (
             ecdf_normalize,
@@ -2430,7 +2318,7 @@ class StepEngine:
         return None
 
     def bucket_by_length(
-        self, entities: Entities, *, config: BucketByLength
+        self, entities: Entities, *, config: configs.BucketByLength
     ) -> Messages:
         from data_validation_engine_spark.llmops.chunking import (
             bucket_by_length,
@@ -2449,7 +2337,7 @@ class StepEngine:
         )
         return None
 
-    def unpivot(self, entities: Entities, *, config: Unpivot) -> Messages:
+    def unpivot(self, entities: Entities, *, config: configs.Unpivot) -> Messages:
         entities[config.output_name] = entities[
             config.entity_name
         ].unpivot(
@@ -2461,7 +2349,7 @@ class StepEngine:
         return None
 
     def project_vectors(
-        self, entities: Entities, *, config: ProjectVectors
+        self, entities: Entities, *, config: configs.ProjectVectors
     ) -> Messages:
         from data_validation_engine_spark.llmops.vectors import (
             project_vectors,
@@ -2477,3 +2365,24 @@ class StepEngine:
             ),
         )
         return None
+
+
+def _handlers() -> dict[type, Callable[..., Messages]]:
+    """Each public ``StepEngine`` method whose keyword-only ``config`` is
+    annotated with a step type handles that type."""
+    step_types = set(get_args(get_args(configs.AnyStep)[0]))
+    table = {}
+    for method in vars(StepEngine).values():
+        if not inspect.isfunction(method) or method.__name__.startswith("_"):
+            continue
+        config = inspect.signature(method).parameters.get("config")
+        if config is None or config.kind is not config.KEYWORD_ONLY:
+            continue
+        step_type = get_type_hints(method)["config"]
+        if step_type in step_types:
+            table[step_type] = method
+    return table
+
+
+#: config type -> handler method, for every step type without a binding
+HANDLERS = _handlers()

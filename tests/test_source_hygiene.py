@@ -184,3 +184,30 @@ def test_driver_has_no_dead_or_round_layered_code():
         if isinstance(node, ast.FunctionDef) and n not in seen
     )
     assert not dead, f"unreachable driver functions: {dead}"
+
+
+def test_step_types_are_not_imported_by_name():
+    """Step types are declared once, in ``steps/configs.py``: the package
+    re-exports them through ``__getattr__`` and the engine reads them as
+    ``configs.X``, so neither file keeps its own list of them."""
+    import ast
+
+    from data_validation_engine_spark.steps import configs
+
+    bad = []
+    for rel in (
+        "data_validation_engine_spark/steps/__init__.py",
+        "data_validation_engine_spark/steps/engine.py",
+    ):
+        for node in ast.walk(ast.parse((REPO / rel).read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if not (node.module or "").endswith("steps.configs"):
+                continue
+            bad += [
+                (rel, alias.name)
+                for alias in node.names
+                if alias.name in ("*", "AnyStep")
+                or isinstance(getattr(configs, alias.name, None), type)
+            ]
+    assert bad == []

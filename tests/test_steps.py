@@ -564,29 +564,56 @@ def test_entity_read_counts():
 
 
 def test_every_declared_step_type_dispatches():
-    """The AnyStep union IS the public vocabulary: every config type in
-    it has exactly one of a hand-written handler or a binding row, and a
-    binding's function imports, names only real config fields, and
-    accepts the arguments the row passes (a broken row would otherwise
-    only fail at evaluate() time in production)."""
+    """A step type is declared once, by its config class: the AnyStep
+    union is every ``operation``-bearing model in ``configs``, tags are
+    unique, each member has exactly one binding row or handler method,
+    and every public engine method with a keyword-only ``config`` handles
+    a member. A binding's function imports, names only real config
+    fields, and accepts the arguments the row passes (a broken row would
+    otherwise only fail at evaluate() time in production)."""
+    import collections
     import inspect
     import typing
 
-    from data_validation_engine_spark.steps.configs import AnyStep
-    from data_validation_engine_spark.steps.engine import BINDINGS, StepEngine
+    from pydantic import BaseModel
 
-    union = typing.get_args(typing.get_args(AnyStep)[0])
-    handlers = StepEngine(None, register_functions=False)._handlers
+    from data_validation_engine_spark.steps import configs
+    from data_validation_engine_spark.steps.engine import (
+        BINDINGS,
+        HANDLERS,
+        StepEngine,
+    )
+
+    union = typing.get_args(typing.get_args(configs.AnyStep)[0])
+    declared = {
+        model
+        for _, model in inspect.getmembers(configs, inspect.isclass)
+        if issubclass(model, BaseModel)
+        and model.__module__ == configs.__name__
+        and "operation" in model.model_fields
+    }
+    assert set(union) == declared
+    tags = collections.Counter(t.model_fields["operation"].default for t in union)
+    assert [tag for tag, n in tags.items() if n > 1] == []
+
+    annotated = {}
+    for name, method in vars(StepEngine).items():
+        if name.startswith("_") or not inspect.isfunction(method):
+            continue
+        param = inspect.signature(method).parameters.get("config")
+        if param is not None and param.kind is param.KEYWORD_ONLY:
+            annotated[name] = typing.get_type_hints(method)["config"]
+    # the dispatch entry point takes any step
+    del annotated["evaluate"]
+    assert {n: t for n, t in annotated.items() if t not in union} == {}
+    assert HANDLERS == {t: getattr(StepEngine, n) for n, t in annotated.items()}
+
     assert set(BINDINGS) <= set(union)
-    assert not set(BINDINGS) & set(handlers)
+    routes = collections.Counter([*BINDINGS, *annotated.values()])
+    assert {t.__name__: routes[t] for t in union if routes[t] != 1} == {}
+
     problems = []
-    for config_type in union:
-        if config_type in handlers:
-            continue
-        binding = BINDINGS.get(config_type)
-        if binding is None:
-            problems.append((config_type.__name__, "no handler or binding"))
-            continue
+    for config_type, binding in BINDINGS.items():
         fn = binding.function()
         fields = [f.removeprefix("@") for f in binding.args]
         fields += [f.removeprefix("@") for f in binding.kwargs.values()]
@@ -598,6 +625,19 @@ def test_every_declared_step_type_dispatches():
         except TypeError as exc:
             problems.append((config_type.__name__, str(exc)))
     assert problems == []
+
+
+def test_every_step_type_imports_from_steps():
+    """The package exports the whole vocabulary, not a hand-kept subset."""
+    import typing
+
+    import data_validation_engine_spark.steps as steps
+    from data_validation_engine_spark.steps import configs
+
+    union = typing.get_args(typing.get_args(configs.AnyStep)[0])
+    missing = [t.__name__ for t in union if getattr(steps, t.__name__, None) is not t]
+    assert missing == []
+    assert steps.AnyStep is configs.AnyStep
 
 
 def test_driver_engine_does_not_pin_sessions(spark):

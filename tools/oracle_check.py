@@ -48,6 +48,8 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import bench  # noqa: E402
+
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -273,28 +275,16 @@ def main() -> int:
         time.tzset()
 
     import __spark_entry__ as entry_mod
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master("local[16]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", opts["shuffle"])
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-    )
+    conf = {
+        "spark.sql.shuffle.partitions": opts["shuffle"],
+        "spark.sql.adaptive.enabled": "true",
+        "spark.ui.showConsoleProgress": "false",
+    }
     if opts["session_tz"] != "none":
-        builder = builder.config(
-            "spark.sql.session.timeZone", opts["session_tz"]
-        )
+        conf["spark.sql.session.timeZone"] = opts["session_tz"]
     if opts["arrow_batch"]:
-        builder = builder.config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            opts["arrow_batch"],
-        )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+        conf["spark.sql.execution.arrow.maxRecordsPerBatch"] = opts["arrow_batch"]
+    spark = bench.local_session("oracle-check", conf)
 
     con = duckdb.connect()
     for t in TABLES:

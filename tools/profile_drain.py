@@ -10,7 +10,7 @@ opaque ~2s number.
 
 Usage: python tools/profile_drain.py [runs] [state_partitions]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: every core),
      SPARK_GRAFT_DRAIN_SCRATCH (checkpoint/sink base dir; default the
      system tempdir — point it at /dev/shm to A/B tmpfs scratch).
 """
@@ -26,26 +26,22 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import bench  # noqa: E402
+
 
 def main() -> None:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     state_n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     scratch = os.environ.get("SPARK_GRAFT_DRAIN_SCRATCH") or None
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("drain-profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = bench.local_session(
+        "drain-profile",
+        {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.session.timeZone": "UTC",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from data_validation_engine_spark.streaming import (
         read_entity_stream,
