@@ -10844,10 +10844,9 @@ def q_r13_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enc.unionByName(adc)
 
 
-# the ADC CTE chain is shared by the r13_pq oracle and the r14
-# recall/entity oracles (r12 verdict #6: factor repeated folds) —
-# parameterised on the top-k LIMIT only; the r13_pq text below
-# recomposes BYTE-IDENTICALLY to its staged-green literal
+# the ADC CTE chain is shared by the r13_pq oracle and the PQ recall and
+# codebooks-entity proofs in tests/test_recall_pq_steps.py —
+# parameterised on the top-k LIMIT only
 _PQ_ADC_CTES = """
     WITH cb AS (
         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
@@ -10949,1371 +10948,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# staged rows (the STAGED table): run by tools/oracle_check.py --staged
-# and tests/test_staged_oracles.py, not by the driver
-# ---------------------------------------------------------------------------
-
-
-def q_r14_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN recall@10 (llmops/recall.py ann_recall — r12 verdict,
-    What's-missing #2: the approximate paths' quality gauge) of each
-    approximate top-10 against the exact cosine top-10 for query vec 0:
-
-    - 'rec'/ivf — the 4-of-16-cell IVF probe (the pruned-scan path);
-    - 'rec'/ivf_full — the 16-of-16 probe, which scans everything and
-      must therefore measure recall EXACTLY 1.0 (the identity arm that
-      pins the measurement itself);
-    - 'rec'/multiprobe — the 3-table OR-amplified hyperplane probe;
-    - 'rec'/pq — raw ADC over placeholder codebooks (no refine: this
-      row MEASURES the quantization loss the refine stage repairs).
-
-    v = n_hits|n_exact|n_approx|floor(recall * 1e6): counts are exact
-    longs; recall is one correctly-rounded division of exact integers
-    (the classifier_eval metric class). All-string (op, k, v) frame."""
-    from data_validation_engine_spark.llmops.ivf import ivf_topk
-    from data_validation_engine_spark.llmops.pq import (
-        default_codebooks,
-        pq_topk,
-    )
-    from data_validation_engine_spark.llmops.recall import ann_recall
-    from data_validation_engine_spark.llmops.similarity import (
-        cosine_topk,
-        multiprobe_ann_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.where("vec_id = 0")
-    exact = cosine_topk(emb, q, 10).select("vec_id")
-    books = default_codebooks(emb, dim=64, m=8, k=16)
-    approx = {
-        "ivf": ivf_topk(emb, q, 10).select("vec_id"),
-        "ivf_full": ivf_topk(emb, q, 10, n_probe=16).select("vec_id"),
-        "multiprobe": multiprobe_ann_topk(emb, q, 10).select("vec_id"),
-        "pq": pq_topk(emb, q, 10, codebooks=books).select("vec_id"),
-    }
-    out = None
-    for method, ap in approx.items():
-        rec = ann_recall(ap, exact, k=10).selectExpr(
-            "'rec' AS op",
-            f"'{method}' AS k",
-            "CONCAT_WS('|', CAST(n_hits AS STRING),"
-            " CAST(n_exact AS STRING), CAST(n_approx AS STRING),"
-            " CAST(CAST(floor(recall * 1000000) AS BIGINT) AS STRING))"
-            " AS v",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
-
-
-def _duck_recall_arm(method: str, cte: str) -> str:
-    """One oracle recall row: |cte ∩ ex| / 10 with the same
-    hits|n_exact|n_approx|floor(recall*1e6) surface the Spark side
-    emits."""
-    return f"""
-    SELECT 'rec' AS op, '{method}' AS k,
-           CAST((SELECT count(*) FROM {cte}
-                 WHERE vec_id IN (SELECT vec_id FROM ex)) AS VARCHAR)
-           || '|10|' ||
-           CAST((SELECT count(*) FROM {cte}) AS VARCHAR) || '|' ||
-           CAST(CAST(floor((SELECT count(*) FROM {cte}
-                 WHERE vec_id IN (SELECT vec_id FROM ex))::DOUBLE
-                 / 10.0 * 1000000) AS BIGINT) AS VARCHAR) AS v
-    """
-
-
-_R14_ANN_RECALL_SQL = (
-    f"""
-    WITH ex AS (SELECT vec_id FROM ({_similarity_topk_oracle(k=10)})),
-    iv AS (SELECT vec_id FROM ({_similarity_ivf_oracle(k=10)})),
-    ivfull AS (
-        SELECT vec_id FROM ({_similarity_ivf_oracle(k=10, n_probe=16)})
-    ),
-    mp AS (SELECT vec_id FROM ({_multiprobe_ann_oracle(k=10)})),
-    pqt AS (
-        SELECT vec_id FROM (
-            {_PQ_ADC_CTES.replace("__PQ_K__", "10")}
-            SELECT vec_id FROM top
-        )
-    )
-    """
-    + _duck_recall_arm("ivf", "iv")
-    + "UNION ALL"
-    + _duck_recall_arm("ivf_full", "ivfull")
-    + "UNION ALL"
-    + _duck_recall_arm("multiprobe", "mp")
-    + "UNION ALL"
-    + _duck_recall_arm("pq", "pqt")
-)
-
-
-def q_r14_pq_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pq_fit → codebooks-entity → similarity_topk composition
-    declared as JSON steps (r12 verdict, Next-round #5 — the
-    classifier_fit → weights_entity pattern applied to PQ):
-
-    - 'cb' — the codebooks ENTITY surface itself ((subspace, code) →
-      the centroid's per-component floor(x*1e6) fold), proving the
-      entity round-trip carries the exact geometry (here the
-      deterministic placeholder codebooks, so the oracle can re-derive
-      them from the embeddings table — the TRAINED path's numeric
-      parity with the library is pytest-pinned in
-      tests/test_recall_pq_steps.py, the classifier_fit precedent);
-    - 'ent' — ADC top-20 computed by the similarity_topk step FED FROM
-      THE ENTITY (codebooks_entity=...), which must match the same
-      index-order ADC folds the oracle replays — proving the
-      entity-resolved codebooks reach the search bit-identically.
-
-    All-string (op, k, v) frame."""
-    from data_validation_engine_spark.llmops.pq import (
-        default_codebooks,
-        pq_codebooks_to_rows,
-    )
-    from data_validation_engine_spark.steps import parse_step
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = default_codebooks(emb, dim=64, m=8, k=16)
-    ents = {
-        "emb": emb,
-        "query": emb.where("vec_id = 0"),
-        "books": spark.createDataFrame(
-            pq_codebooks_to_rows(books),
-            "subspace int, code int, centroid array<double>",
-        ),
-    }
-    eng = _engine(spark)
-    eng.evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "similarity_topk",
-                "entity_name": "emb",
-                "target_name": "query",
-                "method": "pq",
-                "k": 20,
-                "codebooks_entity": "books",
-                "new_entity_name": "top",
-            }
-        ),
-    )
-    cb = ents["books"].where("subspace >= 0").selectExpr(
-        "'cb' AS op",
-        "CONCAT_WS('|', CAST(subspace AS STRING),"
-        " CAST(code AS STRING)) AS k",
-        "array_join(transform(centroid,"
-        " x -> CAST(CAST(floor(x * 1000000) AS BIGINT) AS STRING)),"
-        " ',') AS v",
-    )
-    ent = ents["top"].selectExpr(
-        "'ent' AS op",
-        "CAST(rank AS STRING) AS k",
-        "CONCAT_WS('|', CAST(vec_id AS STRING),"
-        " CAST(CAST(floor(pq_dist * 1000000) AS BIGINT) AS STRING)) AS v",
-    )
-    return cb.unionByName(ent)
-
-
-_R14_PQ_ENTITY_SQL = (
-    _PQ_ADC_CTES.replace("__PQ_K__", "20")
-    + """
-    SELECT 'cb' AS op,
-           CAST(s AS VARCHAR) || '|' || CAST(j AS VARCHAR) AS k,
-           (SELECT string_agg(
-                CAST(CAST(floor(cv[s * 8 + i]::DOUBLE * 1000000)
-                     AS BIGINT) AS VARCHAR), ',' ORDER BY i)
-            FROM (SELECT unnest(range(1, 9)) AS i)) AS v
-    FROM subs CROSS JOIN cb
-    UNION ALL
-    SELECT 'ent', CAST(rk AS VARCHAR),
-           CAST(vec_id AS VARCHAR) || '|' ||
-           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR)
-    FROM top
-"""
-)
-
-
-def q_r14_pq_many(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched multi-query PQ search (llmops/pq.py pq_topk_many /
-    ivf_pq_topk_many — round 13: the one-distributed-pass lift of the
-    single-query probes, declared as the pq_topk_many step):
-
-    - 'many' — ADC top-5 per query for the 3-query batch {0, 7, 23}
-      via the DECLARED step (query-as-column ADC folds, WindowGroupLimit
-      ranking) — the oracle replays every (query, corpus, subspace)
-      fold independently;
-    - 'mivf' — the IVF-pruned batch path (n_probe=4 of 16 cells, probe
-      cells computed per query as an expression): each query ranks only
-      its probed cells' rows, top-5 each;
-    - 'rc' — corpus-level recall@5 of the pruned batch vs the flat
-      batch per query (ann_recall group_cols=["query_id"]) — the
-      composition the operators exist for.
-
-    All-string (op, k, v) frame; dists hashed floor(x*1e6) (the r13_pq
-    'adc' class)."""
-    from data_validation_engine_spark.llmops.ivf import default_centroids
-    from data_validation_engine_spark.llmops.pq import (
-        default_codebooks,
-        ivf_pq_topk_many,
-    )
-    from data_validation_engine_spark.llmops.recall import ann_recall
-    from data_validation_engine_spark.steps import parse_step
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = default_codebooks(emb, dim=64, m=8, k=16)
-    queries = emb.where("vec_id IN (0, 7, 23)")
-    ents = {"emb": emb, "qs": queries}
-    eng = _engine(spark)
-    eng.evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "pq_topk_many",
-                "entity_name": "emb",
-                "target_name": "qs",
-                "k": 5,
-                "codebooks": books,
-                "new_entity_name": "flat",
-            }
-        ),
-    )
-    fmt = (
-        "CONCAT_WS('|', CAST(vec_id AS STRING),"
-        " CAST(CAST(floor(pq_dist * 1000000) AS BIGINT) AS STRING)) AS v"
-    )
-    many = ents["flat"].selectExpr(
-        "'many' AS op",
-        "CONCAT_WS('|', CAST(query_id AS STRING),"
-        " CAST(rank AS STRING)) AS k",
-        fmt,
-    )
-    cents = default_centroids(emb, n_cells=16)
-    pruned = ivf_pq_topk_many(
-        emb, queries, 5, centroids=cents, codebooks=books, n_probe=4
-    )
-    mivf = pruned.selectExpr(
-        "'mivf' AS op",
-        "CONCAT_WS('|', CAST(query_id AS STRING),"
-        " CAST(rank AS STRING)) AS k",
-        fmt,
-    )
-    rc = ann_recall(
-        pruned.select("query_id", "vec_id"),
-        ents["flat"].select("query_id", "vec_id"),
-        group_cols=["query_id"],
-        k=5,
-    ).selectExpr(
-        "'rc' AS op",
-        "CAST(query_id AS STRING) AS k",
-        "CONCAT_WS('|', CAST(n_hits AS STRING), CAST(n_exact AS STRING),"
-        " CAST(n_approx AS STRING),"
-        " CAST(CAST(floor(recall * 1000000) AS BIGINT) AS STRING)) AS v",
-    )
-    return many.unionByName(mivf).unionByName(rc)
-
-
-# multi-query twin of the _PQ_ADC_CTES chain: lut/dist/top gain a qid
-# key; the 'mivf' arm adds the per-query probe-cell cut (same centroid
-# folds, row_number <= n_probe per query, ties to the lower cell)
-_R14_PQ_MANY_SQL = f"""
-    WITH cb AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
-               embedding AS cv
-        FROM embeddings ORDER BY vec_id LIMIT 16
-    ),
-    subs AS (SELECT unnest(range(0, 8)) AS s),
-    assign AS (
-        SELECT e.vec_id, subs.s,
-               (min(struct_pack(
-                   d := list_reduce(list_transform(
-                       generate_series(1, 8),
-                       i -> (e.embedding[subs.s * 8 + i]::DOUBLE
-                             - c.cv[subs.s * 8 + i]::DOUBLE)
-                          * (e.embedding[subs.s * 8 + i]::DOUBLE
-                             - c.cv[subs.s * 8 + i]::DOUBLE)),
-                       (x, y) -> x + y),
-                   j := c.j))).j AS code
-        FROM embeddings e CROSS JOIN subs CROSS JOIN cb c
-        GROUP BY e.vec_id, subs.s
-    ),
-    qs AS (
-        SELECT vec_id AS qid, embedding AS qv FROM embeddings
-        WHERE vec_id IN (0, 7, 23)
-    ),
-    lut AS (
-        SELECT qs.qid, subs.s, c.j,
-               list_reduce(list_transform(
-                   generate_series(1, 8),
-                   i -> (qs.qv[subs.s * 8 + i]::DOUBLE
-                         - c.cv[subs.s * 8 + i]::DOUBLE)
-                      * (qs.qv[subs.s * 8 + i]::DOUBLE
-                         - c.cv[subs.s * 8 + i]::DOUBLE)),
-                   (x, y) -> x + y) AS d
-        FROM subs CROSS JOIN cb c CROSS JOIN qs
-    ),
-    dist AS (
-        SELECT l.qid, a.vec_id,
-               list_reduce([0.0] || list(l.d ORDER BY a.s),
-                           (x, y) -> x + y) AS dist
-        FROM assign a JOIN lut l ON l.s = a.s AND l.j = a.code
-        GROUP BY l.qid, a.vec_id
-    ),
-    topf AS (
-        SELECT qid, vec_id, dist,
-               row_number() OVER (
-                   PARTITION BY qid ORDER BY dist ASC, vec_id ASC
-               ) AS rk
-        FROM dist WHERE vec_id <> qid
-    ),
-    cent AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS i,
-               embedding AS cv
-        FROM embeddings ORDER BY vec_id LIMIT 16
-    ),
-    ccell AS (
-        SELECT e.vec_id,
-               (min(struct_pack(
-                   d := {_duck_l2sq('e.embedding', 'c.cv')},
-                   i := c.i))).i AS cell
-        FROM embeddings e CROSS JOIN cent c
-        GROUP BY e.vec_id
-    ),
-    qcells AS (
-        SELECT qid, cell FROM (
-            SELECT qs.qid, c.i AS cell,
-                   row_number() OVER (
-                       PARTITION BY qs.qid
-                       ORDER BY {_duck_l2sq('qs.qv', 'c.cv')} ASC,
-                                c.i ASC
-                   ) AS pr
-            FROM qs CROSS JOIN cent c
-        ) WHERE pr <= 4
-    ),
-    topp AS (
-        SELECT d.qid, d.vec_id, d.dist,
-               row_number() OVER (
-                   PARTITION BY d.qid ORDER BY d.dist ASC, d.vec_id ASC
-               ) AS rk
-        FROM dist d
-        JOIN ccell ON ccell.vec_id = d.vec_id
-        JOIN qcells ON qcells.qid = d.qid AND qcells.cell = ccell.cell
-        WHERE d.vec_id <> d.qid
-    )
-    SELECT 'many' AS op,
-           CAST(qid AS VARCHAR) || '|' || CAST(rk AS VARCHAR) AS k,
-           CAST(vec_id AS VARCHAR) || '|' ||
-           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR) AS v
-    FROM topf WHERE rk <= 5
-    UNION ALL
-    SELECT 'mivf',
-           CAST(qid AS VARCHAR) || '|' || CAST(rk AS VARCHAR),
-           CAST(vec_id AS VARCHAR) || '|' ||
-           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR)
-    FROM topp WHERE rk <= 5
-    UNION ALL
-    SELECT 'rc', CAST(f.qid AS VARCHAR),
-           CAST(COALESCE(h.n, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(te.n, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(tp.n, 0) AS VARCHAR) || '|' ||
-           CAST(CAST(floor(COALESCE(h.n, 0)::DOUBLE / 5.0 * 1000000)
-                AS BIGINT) AS VARCHAR)
-    FROM (SELECT DISTINCT qid FROM qs) f
-    LEFT JOIN (
-        SELECT p.qid, count(*) AS n
-        FROM (SELECT qid, vec_id FROM topp WHERE rk <= 5) p
-        JOIN (SELECT qid, vec_id FROM topf WHERE rk <= 5) t
-          ON t.qid = p.qid AND t.vec_id = p.vec_id
-        GROUP BY p.qid
-    ) h ON h.qid = f.qid
-    LEFT JOIN (
-        SELECT qid, count(*) AS n FROM topf WHERE rk <= 5 GROUP BY qid
-    ) te ON te.qid = f.qid
-    LEFT JOIN (
-        SELECT qid, count(*) AS n FROM topp WHERE rk <= 5 GROUP BY qid
-    ) tp ON tp.qid = f.qid
-"""
-
-
-def q_r14_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-rule quality gate (llmops/gopher.py, Rae 2021 §A1.1 —
-    round 13) over the documents table via the DECLARED step, with
-    relaxed thresholds (min_words=30, min_stop_words=1) so the
-    synthetic corpus exercises both keep outcomes: per doc the exact
-    integer metrics (word/stop-word counts), all seven rule booleans +
-    the keep conjunction, and the ratio metrics as floor(x*1e6) of
-    single correctly-rounded divisions (the classifier_eval class).
-    All-string (op, k, v) frame."""
-    from data_validation_engine_spark.steps import parse_step
-
-    ents = {"docs": _docs(spark, sf_dir)}
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "gopher_quality_flags",
-                "entity_name": "docs",
-                "min_words": 30,
-                "min_stop_words": 1,
-                "new_entity_name": "flagged",
-            }
-        ),
-    )
-    r6 = (
-        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
-        " '~')"
-    )
-    return ents["flagged"].selectExpr(
-        "'g' AS op",
-        "CAST(doc_id AS STRING) AS k",
-        "CONCAT_WS('|', CAST(gopher_words AS STRING),"
-        " CAST(gopher_stop_words AS STRING),"
-        " CAST(CAST(flag_word_count AS INT) AS STRING),"
-        " CAST(CAST(flag_mean_word_len AS INT) AS STRING),"
-        " CAST(CAST(flag_symbol_ratio AS INT) AS STRING),"
-        " CAST(CAST(flag_bullet_lines AS INT) AS STRING),"
-        " CAST(CAST(flag_ellipsis_lines AS INT) AS STRING),"
-        " CAST(CAST(flag_alpha_words AS INT) AS STRING),"
-        " CAST(CAST(flag_stop_words AS INT) AS STRING),"
-        " CAST(CAST(gopher_keep AS INT) AS STRING),"
-        f" {r6.format(x='gopher_mean_word_len')},"
-        f" {r6.format(x='gopher_symbol_ratio')},"
-        f" {r6.format(x='gopher_alpha_frac')},"
-        f" {r6.format(x='gopher_bullet_frac')},"
-        f" {r6.format(x='gopher_ellipsis_frac')}) AS v",
-    )
-
-
-_R14_GOPHER_SQL = """
-    WITH base AS (
-        SELECT doc_id, COALESCE(text, '') AS t FROM documents
-    ),
-    w AS (
-        SELECT doc_id, t,
-               list_filter(regexp_split_to_array(t, '\\s+'),
-                           x -> length(x) > 0) AS words,
-               list_filter(regexp_split_to_array(t, '\\n'),
-                           x -> length(trim(x)) > 0) AS lines
-        FROM base
-    ),
-    m AS (
-        SELECT doc_id, t, words, lines,
-               len(words) AS n_words,
-               len(lines) AS n_lines,
-               COALESCE(list_sum(list_transform(words,
-                                                x -> length(x))), 0)
-                   AS total_chars,
-               (length(t) - length(replace(t, '#', '')))
-               + (length(t) - length(replace(t, '...', ''))) / 3
-               + (length(t) - length(replace(t, '…', ''))) AS n_sym,
-               len(list_filter(lines,
-                   x -> substring(ltrim(x), 1, 1) IN ('•', '-', '*')))
-                   AS n_bullet,
-               len(list_filter(lines,
-                   x -> right(rtrim(x), 3) = '...'
-                        OR right(rtrim(x), 1) = '…')) AS n_ell,
-               len(list_filter(words,
-                   x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-               len(list_filter(
-                   ['the', 'be', 'to', 'of', 'and', 'that', 'have',
-                    'with'],
-                   s -> list_contains(
-                       list_transform(words, x -> lower(x)), s)))
-                   AS n_stop
-        FROM w
-    ),
-    r AS (
-        SELECT doc_id, n_words, n_stop,
-               CASE WHEN n_words > 0
-                    THEN total_chars::DOUBLE / n_words END AS mean_wl,
-               CASE WHEN n_words > 0
-                    THEN n_sym::DOUBLE / n_words END AS sym_ratio,
-               CASE WHEN n_words > 0
-                    THEN n_alpha::DOUBLE / n_words END AS alpha_frac,
-               CASE WHEN n_lines > 0
-                    THEN n_bullet::DOUBLE / n_lines END AS bullet_frac,
-               CASE WHEN n_lines > 0
-                    THEN n_ell::DOUBLE / n_lines END AS ell_frac,
-               n_lines
-        FROM m
-    ),
-    f AS (
-        SELECT doc_id, n_words, n_stop, mean_wl, sym_ratio, alpha_frac,
-               bullet_frac, ell_frac,
-               (n_words >= 30 AND n_words <= 100000) AS f_wc,
-               COALESCE(mean_wl >= 3.0 AND mean_wl <= 10.0, FALSE)
-                   AS f_mwl,
-               COALESCE(sym_ratio <= 0.1, FALSE) AS f_sym,
-               COALESCE(bullet_frac < 0.9, n_lines = 0) AS f_bul,
-               COALESCE(ell_frac < 0.3, n_lines = 0) AS f_ell,
-               COALESCE(alpha_frac >= 0.8, FALSE) AS f_alpha,
-               (n_stop >= 1) AS f_stop
-        FROM r
-    )
-    SELECT 'g' AS op, CAST(doc_id AS VARCHAR) AS k,
-           CAST(n_words AS VARCHAR) || '|' ||
-           CAST(n_stop AS VARCHAR) || '|' ||
-           CAST(CAST(f_wc AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_mwl AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_sym AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_bul AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_ell AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_alpha AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(f_stop AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST((f_wc AND f_mwl AND f_sym AND f_bul AND f_ell
-                      AND f_alpha AND f_stop) AS INT) AS VARCHAR)
-           || '|' ||
-           COALESCE(CAST(CAST(floor(mean_wl * 1000000) AS BIGINT)
-                    AS VARCHAR), '~') || '|' ||
-           COALESCE(CAST(CAST(floor(sym_ratio * 1000000) AS BIGINT)
-                    AS VARCHAR), '~') || '|' ||
-           COALESCE(CAST(CAST(floor(alpha_frac * 1000000) AS BIGINT)
-                    AS VARCHAR), '~') || '|' ||
-           COALESCE(CAST(CAST(floor(bullet_frac * 1000000) AS BIGINT)
-                    AS VARCHAR), '~') || '|' ||
-           COALESCE(CAST(CAST(floor(ell_frac * 1000000) AS BIGINT)
-                    AS VARCHAR), '~') AS v
-    FROM f
-"""
-
-
-#: the r14_c4 corpus construction, shared verbatim by both twins: the
-#: synthetic documents are single-line unpunctuated word bags, so the
-#: splice plants every C4 rule's trigger — terminal punctuation
-#: (doc_id%3=0), multi-line pages with punctuated lines (%3=1),
-#: untouched no-punct pages (%3=2), lorem-ipsum (%7=0) and brace
-#: (%11=0) page poisons
-_C4_CASE_SQL = (
-    "CASE WHEN doc_id % 7 = 0 THEN CONCAT(text, ' and lorem ipsum.') "
-    "WHEN doc_id % 11 = 0 THEN CONCAT(text, ' { code block.') "
-    "WHEN doc_id % 13 = 5 THEN CONCAT(text, ' she said \"go now\"') "
-    "WHEN doc_id % 3 = 0 THEN CONCAT(text, '.') "
-    "WHEN doc_id % 3 = 1 THEN REPLACE(text, ' batch ', '.\n') "
-    "ELSE text END"
-)
-
-
-def q_r14_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 line-level cleaning (llmops/c4.py, Raffel 2020 §2.2 — round
-    13) via the DECLARED step over the spliced corpus (_C4_CASE_SQL,
-    construction stated verbatim in both twins): per doc the cleaned
-    page's md5 + exact line/sentence counts + the page flags + keep
-    (min_line_words=3, min_sentences=1 so the corpus exercises every
-    rule both ways). All-string (op, k, v) frame."""
-    from data_validation_engine_spark.steps import parse_step
-
-    docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", f"{_C4_CASE_SQL} AS text"
-    )
-    ents = {"docs": docs}
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "c4_clean",
-                "entity_name": "docs",
-                "min_line_words": 3,
-                "min_sentences": 1,
-                "new_entity_name": "clean",
-            }
-        ),
-    )
-    return ents["clean"].selectExpr(
-        "'c4' AS op",
-        "CAST(doc_id AS STRING) AS k",
-        "CONCAT_WS('|', md5(c4_text),"
-        " CAST(c4_lines_kept AS STRING),"
-        " CAST(c4_lines_total AS STRING),"
-        " CAST(c4_sentences AS STRING),"
-        " CAST(CAST(c4_has_lorem AS INT) AS STRING),"
-        " CAST(CAST(c4_has_brace AS INT) AS STRING),"
-        " CAST(CAST(c4_keep AS INT) AS STRING)) AS v",
-    )
-
-
-_R14_C4_SQL = f"""
-    WITH corpus AS (
-        -- COALESCE mirrors c4_clean's fail-closed NULL handling (a
-        -- NULL-text doc cleans to the empty page, flags false)
-        SELECT doc_id, COALESCE({_C4_CASE_SQL}, '') AS t FROM documents
-    ),
-    l AS (
-        SELECT doc_id, t,
-               list_filter(
-                   regexp_split_to_array(t, '\\n'),
-                   ln -> right(rtrim(ln), 1) IN ('.', '!', '?', '"')
-                         AND len(list_filter(
-                                 regexp_split_to_array(ln, '\\s+'),
-                                 x -> length(x) > 0)) >= 3
-                         AND NOT contains(lower(ln), 'javascript')
-               ) AS kept,
-               len(list_filter(regexp_split_to_array(t, '\\n'),
-                               x -> length(trim(x)) > 0)) AS n_total
-        FROM corpus
-    ),
-    c AS (
-        SELECT doc_id, t, n_total, len(kept) AS n_kept,
-               -- array_to_string of an EMPTY list is NULL in DuckDB;
-               -- Spark's array_join gives '' — coalesce to match
-               COALESCE(array_to_string(
-                   list_transform(kept, x -> trim(x)), chr(10)), '')
-                   AS cleaned,
-               -- a kept line terminated by a BARE end quote (no .!?
-               -- before it) counts as one sentence (kept lines have
-               -- >= 3 words, so the penultimate char always exists)
-               len(list_filter(kept,
-                   ln -> right(rtrim(ln), 1) = '"'
-                         AND substr(rtrim(ln),
-                                    length(rtrim(ln)) - 1, 1)
-                             NOT IN ('.', '!', '?'))) AS n_qsent
-        FROM l
-    ),
-    m AS (
-        SELECT doc_id, cleaned, n_kept, n_total,
-               length(cleaned) - length(
-                   replace(replace(replace(cleaned, '.', ''), '!', ''),
-                           '?', '')) + n_qsent AS n_sent,
-               contains(lower(t), 'lorem ipsum') AS has_lorem,
-               contains(t, '{{') AS has_brace
-        FROM c
-    )
-    SELECT 'c4' AS op, CAST(doc_id AS VARCHAR) AS k,
-           md5(cleaned) || '|' ||
-           CAST(n_kept AS VARCHAR) || '|' ||
-           CAST(n_total AS VARCHAR) || '|' ||
-           CAST(n_sent AS VARCHAR) || '|' ||
-           CAST(CAST(has_lorem AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST(has_brace AS INT) AS VARCHAR) || '|' ||
-           CAST(CAST((n_sent >= 1 AND NOT has_lorem AND NOT has_brace)
-                AS INT) AS VARCHAR) AS v
-    FROM m
-"""
-
-
-#: the r14_urls corpus construction, shared verbatim by both twins:
-#: per-doc URL from the source column (ads. subdomain every 5th doc,
-#: junk every 13th to exercise the loud NULL), blocklist of three
-#: hosts exercising exact, subdomain-suffix, and subdomain-only hits
-_URLS_CASE_SQL = (
-    "CASE WHEN doc_id % 13 = 0 THEN 'not a url' "
-    "ELSE CONCAT('https://', "
-    "CASE WHEN doc_id % 5 = 0 THEN 'ads.' ELSE '' END, "
-    "source, '.example.com/doc/', CAST(doc_id AS STRING)) END"
-)
-
-_URLS_BLOCKED = ("src3.example.com", "src7.example.com",
-                 "ads.src1.example.com")
-
-
-def q_r14_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL blocklist filtering (llmops/web.py url_blocklist — round
-    13, the RefinedWeb-style domain cut) via the DECLARED step over
-    the constructed URL corpus (_URLS_CASE_SQL / _URLS_BLOCKED, both
-    stated verbatim in the oracle): per doc the extracted host and the
-    suffix-aware blocked flag — src3/src7 docs (and their ads.
-    subdomains) blocked by the parent domain, src1 blocked only on
-    its ads. subdomain, junk URLs flag NULL ('~'). All-string
-    (op, k, v) frame."""
-    from data_validation_engine_spark.llmops.web import url_host
-    from data_validation_engine_spark.steps import parse_step
-
-    docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", f"{_URLS_CASE_SQL} AS url"
-    )
-    ents = {
-        "docs": docs,
-        "blocked": spark.createDataFrame(
-            [(h,) for h in _URLS_BLOCKED], "host string"
-        ),
-    }
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "url_blocklist",
-                "entity_name": "docs",
-                "target_name": "blocked",
-                "new_entity_name": "flagged",
-            }
-        ),
-    )
-    return ents["flagged"].withColumn(
-        "__h", url_host(F.col("url"))
-    ).selectExpr(
-        "'u' AS op",
-        "CAST(doc_id AS STRING) AS k",
-        "CONCAT_WS('|', COALESCE(__h, '~'),"
-        " COALESCE(CAST(CAST(url_blocked AS INT) AS STRING), '~'))"
-        " AS v",
-    )
-
-
-_R14_URLS_SQL = f"""
-    WITH corpus AS (
-        SELECT doc_id, {_URLS_CASE_SQL} AS url FROM documents
-    ),
-    h AS (
-        SELECT doc_id,
-               NULLIF(regexp_replace(regexp_replace(lower(
-                   regexp_extract(trim(url),
-                       '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)),
-                   '^.*@', ''), ':[0-9]+$', ''), '') AS host
-        FROM corpus
-    ),
-    s AS (
-        SELECT doc_id, host,
-               CASE WHEN host IS NULL THEN NULL ELSE (
-                   len(list_filter(
-                       list_transform(
-                           range(0, greatest(least(
-                               len(string_split(host, '.')) - 1, 10),
-                               1)),
-                           i -> array_to_string(
-                               string_split(host, '.')[i + 1 :], '.')),
-                       x -> contains(x, '.') AND x IN
-                            ('src3.example.com', 'src7.example.com',
-                             'ads.src1.example.com'))) > 0
-               ) END AS blocked
-        FROM h
-    )
-    SELECT 'u' AS op, CAST(doc_id AS VARCHAR) AS k,
-           COALESCE(host, '~') || '|' ||
-           COALESCE(CAST(CAST(blocked AS INT) AS VARCHAR), '~') AS v
-    FROM s
-"""
-
-
-def q_r14_wordlm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word n-gram LM with Stupid Backoff (llmops/lm.py, Brants 2007 —
-    round 13) via the DECLARED word_lm step: train on doc_id%3!=0 with
-    min_count=2 (the pruning path on the oracle gate), export the
-    sentinel-carrying counts entity, score the held-out doc_id%3=0
-    slice. Surfaces: 'n' the unpruned token total (the ord=0 sentinel),
-    'g' the top-15 grams per order by (cnt DESC, gram) — pins training
-    counts and pruning — and 'd' the per-doc exact-integer backoff
-    histogram n_tokens|hits_0..hits_3 — pins tokenization, gram
-    construction, the model join and the whole cascade, with zero
-    floats in the hash (FLOATS.md: the log-score itself is
-    transcendental and stays pytest-pinned). All-string (op, k, v)."""
-    from data_validation_engine_spark.steps import parse_step
-
-    docs = _docs(spark, sf_dir)
-    ents = {
-        "docs": docs.where("doc_id % 3 = 0"),
-        "ref": docs.where("doc_id % 3 != 0"),
-    }
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "word_lm",
-                "entity_name": "docs",
-                "new_entity_name": "scored",
-                "key_column": "doc_id",
-                "reference_name": "ref",
-                "model_entity": "wlm",
-                "min_count": 2,
-            }
-        ),
-    )
-    model_rows = ents["wlm"]
-    n_row = model_rows.where("ord = 0").selectExpr(
-        "'n' AS op", "'total' AS k", "CAST(cnt AS STRING) AS v"
-    )
-    w15 = Window.partitionBy("ord").orderBy(F.desc("cnt"), F.asc("gram"))
-    g = (
-        model_rows.where("ord > 0")
-        .withColumn("rk", F.row_number().over(w15))
-        .where("rk <= 15")
-        .selectExpr(
-            "'g' AS op",
-            "CONCAT_WS('|', CAST(ord AS STRING), gram) AS k",
-            "CONCAT_WS('|', CAST(cnt AS STRING), CAST(rk AS STRING)) AS v",
-        )
-    )
-    d = ents["scored"].selectExpr(
-        "'d' AS op",
-        "CAST(doc_id AS STRING) AS k",
-        "CONCAT_WS('|', CAST(n_tokens AS STRING), CAST(hits_0 AS STRING),"
-        " CAST(hits_1 AS STRING), CAST(hits_2 AS STRING),"
-        " CAST(hits_3 AS STRING)) AS v",
-    )
-    return n_row.unionByName(g).unionByName(d)
-
-
-#: word-gram struct explode shared by both r14_wordlm oracle slices:
-#: every (pos, ord<=min(3,pos)) gram ending at each position
-_WORDLM_GRAMS = (
-    "unnest(flatten(list_transform(generate_series(1, len(toks)), i -> "
-    "list_transform(generate_series(1, least(3, i)), k -> "
-    "{'p': i, 'o': k, 'g': array_to_string(toks[i - k + 1:i], ' ')}))))"
-)
-
-_R14_WORDLM_SQL = f"""
-    WITH tok AS (
-        SELECT doc_id,
-               CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-                    ELSE list_filter(
-                        string_split_regex(lower(text), '[^a-z0-9]+'),
-                        t -> t <> '') END AS toks
-        FROM documents
-    ),
-    tr AS (SELECT toks FROM tok WHERE doc_id % 3 <> 0),
-    trg AS (SELECT {_WORDLM_GRAMS} AS s FROM tr),
-    cnts AS (
-        SELECT s.o AS ord, s.g AS gram, count(*) AS cnt
-        FROM trg GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    total AS (SELECT COALESCE(SUM(len(toks)), 0) AS t FROM tr),
-    topg AS (
-        SELECT ord, gram, cnt,
-               row_number() OVER (
-                   PARTITION BY ord ORDER BY cnt DESC, gram) AS rk
-        FROM cnts
-    ),
-    ev AS (SELECT doc_id, toks FROM tok WHERE doc_id % 3 = 0),
-    eg AS (
-        SELECT doc_id, s.p AS pos, s.o AS ord, s.g AS gram FROM (
-            SELECT doc_id, {_WORDLM_GRAMS} AS s FROM ev
-        )
-    ),
-    res AS (
-        SELECT doc_id, pos,
-               COALESCE(MAX(CASE WHEN c.cnt IS NOT NULL
-                                 THEN e.ord END), 0) AS ro
-        FROM eg e LEFT JOIN cnts c ON c.ord = e.ord AND c.gram = e.gram
-        GROUP BY doc_id, pos
-    ),
-    hist AS (
-        SELECT doc_id, COUNT(*) AS nt,
-               COUNT(*) FILTER (WHERE ro = 0) AS h0,
-               COUNT(*) FILTER (WHERE ro = 1) AS h1,
-               COUNT(*) FILTER (WHERE ro = 2) AS h2,
-               COUNT(*) FILTER (WHERE ro = 3) AS h3
-        FROM res GROUP BY doc_id
-    )
-    SELECT 'n' AS op, 'total' AS k, CAST(t AS VARCHAR) AS v FROM total
-    UNION ALL
-    SELECT 'g', CAST(ord AS VARCHAR) || '|' || gram,
-           CAST(cnt AS VARCHAR) || '|' || CAST(rk AS VARCHAR)
-    FROM topg WHERE rk <= 15
-    UNION ALL
-    SELECT 'd', CAST(e.doc_id AS VARCHAR),
-           CAST(COALESCE(h.nt, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(h.h0, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(h.h1, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(h.h2, 0) AS VARCHAR) || '|' ||
-           CAST(COALESCE(h.h3, 0) AS VARCHAR)
-    FROM ev e LEFT JOIN hist h ON e.doc_id = h.doc_id
-"""
-
-
-def q_r14_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pair recall/precision (llmops/recall.py
-    pair_recall — round 13, the dedup-side sibling of ann_recall) via
-    the DECLARED step with group_columns, over the perturbed-union
-    corpus (the dedup_minhash construction: slice ∪ slice+appended
-    word at offset ids guarantees non-vacuous ground truth at every
-    scale). Three arms measured in ONE step call: 'b4' MinHash-LSH at
-    the default 4 bands (3-row bands collide easily — high recall),
-    'b1' the same 12 hashes as ONE 12-row band (a pair must match all
-    12 minhashes — the strictness lever, recall <= b4), 'id' the exact
-    set against itself (the 1.0/1.0 identity pin). MinHash verifies
-    candidates with exact Jaccard, so precision is exactly 1.0 on both
-    approximate arms; the md5-derived signatures make every number
-    deterministic. Counts are exact longs; recall/precision hash as
-    floor(x*1e6) of single correctly-rounded divisions."""
-    from data_validation_engine_spark.llmops import (
-        minhash_pairs,
-        ngram_jaccard_pairs,
-    )
-    from data_validation_engine_spark.steps import parse_step
-
-    sl = _docs(spark, sf_dir).where("doc_id % 10 = 0").select(
-        "doc_id", "text"
-    )
-    u = sl.unionByName(
-        sl.selectExpr(
-            "doc_id + 1000000 AS doc_id", "text || ' spark' AS text"
-        )
-    )
-    # pair frames are corpus-bounded and tiny at these SFs; checkpoint
-    # once — the exact side is referenced six times across the arms
-    # (three exact tags + three hit joins), and without the cut each
-    # reference re-runs the whole shingle chain
-    ex = ngram_jaccard_pairs(
-        u, "doc_id", "text", threshold=0.5
-    ).localCheckpoint()
-    mh4 = minhash_pairs(
-        u, "doc_id", "text", threshold=0.5, bands=4
-    ).localCheckpoint()
-    mh1 = minhash_pairs(
-        u, "doc_id", "text", threshold=0.5, bands=1
-    ).localCheckpoint()
-    approx = (
-        mh4.selectExpr("'b4' AS method", "id_a", "id_b")
-        .unionByName(mh1.selectExpr("'b1' AS method", "id_a", "id_b"))
-        .unionByName(ex.selectExpr("'id' AS method", "id_a", "id_b"))
-    )
-    exact = (
-        ex.selectExpr("'b4' AS method", "id_a", "id_b")
-        .unionByName(ex.selectExpr("'b1' AS method", "id_a", "id_b"))
-        .unionByName(ex.selectExpr("'id' AS method", "id_a", "id_b"))
-    )
-    ents = {"approx": approx, "exact": exact}
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "pair_recall",
-                "entity_name": "approx",
-                "new_entity_name": "pr",
-                "target_name": "exact",
-                "group_columns": ["method"],
-            }
-        ),
-    )
-    r6 = (
-        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
-        " '~')"
-    )
-    return ents["pr"].selectExpr(
-        "method AS op",
-        "'pairs' AS k",
-        "CONCAT_WS('|', CAST(n_hits AS STRING), CAST(n_exact AS STRING),"
-        " CAST(n_approx AS STRING),"
-        f" {r6.format(x='recall')}, {r6.format(x='precision')}) AS v",
-    )
-
-
-#: the perturbed-union corpus shared by every r14_pair_recall oracle
-#: slice (appending ONE word keeps every original shingle)
-_PR_UDOCS = (
-    "(SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0 "
-    "UNION ALL SELECT doc_id + 1000000 AS doc_id, "
-    "text || ' spark' AS text FROM documents WHERE doc_id % 10 = 0)"
-)
-
-
-def _pair_recall_oracle() -> str:
-    """Composes the attested minhash CTE chain twice (4-band and
-    1-band configs, each scoped inside its own subquery-WITH so the
-    CTE names never clash) with the NAIVE exact-Jaccard twin, then the
-    recall arithmetic is plain set counting."""
-    mh4 = _minhash_pair_ctes(12, 4, 0.5).replace(
-        "FROM documents", f"FROM {_PR_UDOCS} u"
-    )
-    mh1 = _minhash_pair_ctes(12, 1, 0.5).replace(
-        "FROM documents", f"FROM {_PR_UDOCS} u"
-    )
-    r6 = "CAST(CAST(floor({x} * 1000000) AS BIGINT) AS VARCHAR)"
-    arm = (
-        "SELECT '{m}' AS op, 'pairs' AS k, "
-        "CAST(n_hits AS VARCHAR) || '|' || CAST(n_exact AS VARCHAR)"
-        " || '|' || CAST(n_approx AS VARCHAR) || '|' || "
-        + "CASE WHEN n_exact = 0 THEN '~' ELSE "
-        + r6.format(x="n_hits::DOUBLE / n_exact")
-        + " END || '|' || "
-        + "CASE WHEN n_approx = 0 THEN '~' ELSE "
-        + r6.format(x="n_hits::DOUBLE / n_approx")
-        + " END AS v FROM {src}"
-    )
-    return f"""
-        WITH mh4 AS (
-            SELECT id_a, id_b FROM (WITH {mh4} SELECT id_a, id_b FROM pairs)
-        ),
-        mh1 AS (
-            SELECT id_a, id_b FROM (WITH {mh1} SELECT id_a, id_b FROM pairs)
-        ),
-        utoked AS (
-            SELECT doc_id, {_DUCK_TOKS} AS toks FROM {_PR_UDOCS} u
-        ),
-        ush AS (
-            SELECT doc_id, {_duck_shingles()} AS shingles FROM utoked
-        ),
-        uposts AS (SELECT doc_id, unnest(shingles) AS s FROM ush),
-        ucand AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM uposts a JOIN uposts b
-              ON a.s = b.s AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
-        ex AS (
-            SELECT id_a, id_b FROM (
-                SELECT id_a, id_b,
-                       round(len(list_intersect(x.shingles, y.shingles))::DOUBLE
-                             / len(list_distinct(
-                                   list_concat(x.shingles, y.shingles))), 6)
-                           AS j
-                FROM ucand
-                JOIN ush x ON ucand.id_a = x.doc_id
-                JOIN ush y ON ucand.id_b = y.doc_id
-            ) WHERE j >= 0.5
-        ),
-        b4c AS (
-            SELECT (SELECT count(*) FROM mh4 m JOIN ex e
-                    ON m.id_a = e.id_a AND m.id_b = e.id_b) AS n_hits,
-                   (SELECT count(*) FROM ex) AS n_exact,
-                   (SELECT count(*) FROM mh4) AS n_approx
-        ),
-        b1c AS (
-            SELECT (SELECT count(*) FROM mh1 m JOIN ex e
-                    ON m.id_a = e.id_a AND m.id_b = e.id_b) AS n_hits,
-                   (SELECT count(*) FROM ex) AS n_exact,
-                   (SELECT count(*) FROM mh1) AS n_approx
-        ),
-        idc AS (
-            SELECT (SELECT count(*) FROM ex) AS n_hits,
-                   (SELECT count(*) FROM ex) AS n_exact,
-                   (SELECT count(*) FROM ex) AS n_approx
-        )
-        {arm.format(m="b4", src="b4c")}
-        UNION ALL
-        {arm.format(m="b1", src="b1c")}
-        UNION ALL
-        {arm.format(m="id", src="idc")}
-    """
-
-
-_R14_PAIR_RECALL_SQL = _pair_recall_oracle()
-
-
-def q_r14_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher §A1.2 repetition signals (llmops/gopher.py
-    gopher_repetition_flags, Rae 2021 Table A1 — round 13, the other
-    half of the r14_gopher rule gate) via the DECLARED step, over
-    documents ∪ two adversarial variant families (self-concatenation
-    separated by a blank line — every line/paragraph/gram duplicated —
-    and a 3×-repeated 120-char head on separate lines), so all four
-    dup families and the interval-merge cover path are non-vacuous.
-    Per doc: the integer anchors (words, joined-token chars, dup
-    line/para counts) plus all 13 fracs as floor(x*1e6) of single
-    correctly-rounded divisions ('~' for the no-words NULL), plus the
-    keep conjunction. All-string (op, k, v)."""
-    from data_validation_engine_spark.steps import parse_step
-
-    base = _docs(spark, sf_dir).where("doc_id % 5 = 0").selectExpr(
-        "doc_id", "text"
-    )
-    corpus = base.unionByName(
-        base.where("doc_id % 10 = 0").selectExpr(
-            "doc_id + 1000000 AS doc_id",
-            "text || '\\n\\n' || text AS text",
-        )
-    ).unionByName(
-        base.where("doc_id % 10 = 0").selectExpr(
-            "doc_id + 2000000 AS doc_id",
-            "concat_ws('\\n', substr(text, 1, 120), substr(text, 1, 120),"
-            " substr(text, 1, 120)) AS text",
-        )
-    )
-    ents = {"docs": corpus}
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "gopher_repetition_flags",
-                "entity_name": "docs",
-                "new_entity_name": "flagged",
-            }
-        ),
-    )
-    r6 = (
-        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
-        " '~')"
-    )
-    fracs = [
-        "rep_dup_line_frac", "rep_dup_line_char_frac",
-        "rep_dup_para_frac", "rep_dup_para_char_frac",
-        "rep_top_2gram_frac", "rep_top_3gram_frac", "rep_top_4gram_frac",
-        "rep_dup_5gram_frac", "rep_dup_6gram_frac", "rep_dup_7gram_frac",
-        "rep_dup_8gram_frac", "rep_dup_9gram_frac", "rep_dup_10gram_frac",
-    ]
-    v = (
-        "CONCAT_WS('|', CAST(rep_words AS STRING),"
-        " CAST(rep_total_chars AS STRING),"
-        " CAST(rep_dup_lines AS STRING), CAST(rep_dup_paras AS STRING), "
-        + ", ".join(r6.format(x=c) for c in fracs)
-        + ", CAST(CAST(rep_keep AS INT) AS STRING))"
-    )
-    return ents["flagged"].selectExpr(
-        "'r' AS op", "CAST(doc_id AS STRING) AS k", f"{v} AS v"
-    )
-
-
-def _rep_oracle() -> str:
-    """The 13-signal DuckDB twin: dup line/para stats via unnest +
-    group-by (occurrences beyond the first), top-gram char mass via a
-    (count DESC, gram) rank, and the dup-n-gram char coverage via
-    QUALIFY-filtered duplicate starts + gaps-and-islands interval
-    merging (overlap-only, matching the Spark fold's `s <= last_e`),
-    charged per merged run from the word array."""
-    cover_ctes = []
-    cover_joins = []
-    for n in (5, 6, 7, 8, 9, 10):
-        cover_ctes.append(f"""
-    gn{n} AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(ws) - {n} + 1),
-                   i -> {{'s': i,
-                          'g': array_to_string(ws[i:i + {n} - 1], ' ')}}
-               )) AS sg
-        FROM tot WHERE len(ws) >= {n}
-    ),
-    gs{n} AS (
-        SELECT doc_id, sg.s AS s FROM gn{n}
-        QUALIFY count(*) OVER (PARTITION BY doc_id, sg.g) >= 2
-    ),
-    brk{n} AS (
-        SELECT doc_id, s, s + {n} - 1 AS e,
-               CASE WHEN s <= COALESCE(MAX(s + {n} - 1) OVER (
-                        PARTITION BY doc_id ORDER BY s
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                        -1) THEN 0 ELSE 1 END AS brk
-        FROM gs{n}
-    ),
-    isl{n} AS (
-        SELECT doc_id, s, e,
-               SUM(brk) OVER (PARTITION BY doc_id ORDER BY s) AS grp
-        FROM brk{n}
-    ),
-    run{n} AS (
-        SELECT doc_id, MIN(s) AS a, MAX(e) AS b
-        FROM isl{n} GROUP BY doc_id, grp
-    ),
-    cov{n} AS (
-        SELECT r.doc_id,
-               SUM(list_sum(list_transform(t.ws[r.a:r.b],
-                                           w -> length(w)))
-                   + (r.b - r.a)) AS covered
-        FROM run{n} r JOIN tot t USING (doc_id) GROUP BY r.doc_id
-    )""")
-        cover_joins.append(f"LEFT JOIN cov{n} ON tot.doc_id = cov{n}.doc_id")
-
-    top_ctes = []
-    top_joins = []
-    for n in (2, 3, 4):
-        top_ctes.append(f"""
-    tg{n} AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, len(ws) - {n} + 1),
-                   i -> array_to_string(ws[i:i + {n} - 1], ' ')
-               )) AS g
-        FROM tot WHERE len(ws) >= {n}
-    ),
-    tc{n} AS (SELECT doc_id, g, count(*) AS c FROM tg{n} GROUP BY 1, 2),
-    top{n} AS (
-        SELECT doc_id, c, length(g) AS l FROM (
-            SELECT doc_id, g, c,
-                   row_number() OVER (
-                       PARTITION BY doc_id ORDER BY c DESC, g) AS rk
-            FROM tc{n}
-        ) WHERE rk = 1
-    )""")
-        top_joins.append(f"LEFT JOIN top{n} ON tot.doc_id = top{n}.doc_id")
-
-    def frac6(expr: str) -> str:
-        return (
-            f"COALESCE(CAST(CAST(floor(({expr}) * 1000000) AS BIGINT)"
-            " AS VARCHAR), '~')"
-        )
-
-    # per-doc frac expressions (NULL when no words; 0.0 when words but
-    # fewer than n grams / top count < 2 — the operator's convention)
-    def cover_frac(n: int) -> str:
-        return (
-            f"CASE WHEN len(ws) = 0 THEN NULL "
-            f"WHEN len(ws) < {n} OR cov{n}.covered IS NULL THEN 0.0 "
-            f"ELSE round(cov{n}.covered::DOUBLE / total_chars, 6) END"
-        )
-
-    def top_frac(n: int) -> str:
-        return (
-            f"CASE WHEN len(ws) = 0 THEN NULL "
-            f"WHEN len(ws) < {n} OR top{n}.c IS NULL OR top{n}.c < 2 "
-            f"THEN 0.0 "
-            f"ELSE round((top{n}.c * top{n}.l)::DOUBLE / total_chars, 6)"
-            " END"
-        )
-
-    frac_exprs = [
-        "CASE WHEN ld.n_items > 0 THEN"
-        " round(COALESCE(ld.dcnt, 0)::DOUBLE / ld.n_items, 6) END",
-        "CASE WHEN ld.item_chars > 0 THEN"
-        " round(COALESCE(ld.dchars, 0)::DOUBLE / ld.item_chars, 6) END",
-        "CASE WHEN pd.n_items > 0 THEN"
-        " round(COALESCE(pd.dcnt, 0)::DOUBLE / pd.n_items, 6) END",
-        "CASE WHEN pd.item_chars > 0 THEN"
-        " round(COALESCE(pd.dchars, 0)::DOUBLE / pd.item_chars, 6) END",
-        top_frac(2), top_frac(3), top_frac(4),
-    ] + [cover_frac(n) for n in (5, 6, 7, 8, 9, 10)]
-    thresholds = [
-        0.30, 0.20, 0.30, 0.20, 0.20, 0.18, 0.16,
-        0.15, 0.14, 0.13, 0.12, 0.11, 0.10,
-    ]
-    keep = " AND ".join(
-        f"COALESCE(({e}) <= {t}, FALSE)"
-        for e, t in zip(frac_exprs, thresholds)
-    )
-    v = (
-        "CAST(CASE WHEN len(ws) > 0 THEN len(ws) ELSE 0 END AS VARCHAR)"
-        " || '|' || CAST(total_chars AS VARCHAR)"
-        " || '|' || CAST(COALESCE(ld.dcnt, 0) AS VARCHAR)"
-        " || '|' || CAST(COALESCE(pd.dcnt, 0) AS VARCHAR) || '|' || "
-        + " || '|' || ".join(frac6(e) for e in frac_exprs)
-        + f" || '|' || CAST(CASE WHEN {keep} THEN 1 ELSE 0 END AS VARCHAR)"
-    )
-    return f"""
-    WITH base AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-    ),
-    corpus AS (
-        SELECT doc_id, text FROM base
-        UNION ALL
-        SELECT doc_id + 1000000, text || chr(10) || chr(10) || text
-        FROM base WHERE doc_id % 10 = 0
-        UNION ALL
-        SELECT doc_id + 2000000,
-               substr(text, 1, 120) || chr(10) || substr(text, 1, 120)
-               || chr(10) || substr(text, 1, 120)
-        FROM base WHERE doc_id % 10 = 0
-    ),
-    tot AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(COALESCE(text, ''), '\\s+'),
-                           w -> w <> '') AS ws,
-               COALESCE(text, '') AS t,
-               CASE WHEN len(list_filter(string_split_regex(
-                        COALESCE(text, ''), '\\s+'), w -> w <> '')) > 0
-                    THEN list_sum(list_transform(
-                        list_filter(string_split_regex(
-                            COALESCE(text, ''), '\\s+'), w -> w <> ''),
-                        w -> length(w)))
-                         + len(list_filter(string_split_regex(
-                             COALESCE(text, ''), '\\s+'), w -> w <> ''))
-                         - 1
-                    ELSE 0 END AS total_chars
-        FROM corpus
-    ),
-    lit AS (
-        SELECT doc_id,
-               unnest(list_filter(list_transform(
-                   string_split_regex(t, '\\n'), x -> trim(x, ' ')),
-                   x -> x <> '')) AS it
-        FROM tot
-    ),
-    lstat AS (SELECT doc_id, it, count(*) AS c FROM lit GROUP BY 1, 2),
-    ld AS (
-        SELECT doc_id,
-               SUM(c - 1) FILTER (WHERE c > 1) AS dcnt,
-               SUM((c - 1) * length(it)) FILTER (WHERE c > 1) AS dchars,
-               SUM(c) AS n_items, SUM(c * length(it)) AS item_chars
-        FROM lstat GROUP BY doc_id
-    ),
-    pit AS (
-        SELECT doc_id,
-               unnest(list_filter(list_transform(
-                   string_split_regex(t, '\\n{{2,}}'), x -> trim(x, ' ')),
-                   x -> x <> '')) AS it
-        FROM tot
-    ),
-    pstat AS (SELECT doc_id, it, count(*) AS c FROM pit GROUP BY 1, 2),
-    pd AS (
-        SELECT doc_id,
-               SUM(c - 1) FILTER (WHERE c > 1) AS dcnt,
-               SUM((c - 1) * length(it)) FILTER (WHERE c > 1) AS dchars,
-               SUM(c) AS n_items, SUM(c * length(it)) AS item_chars
-        FROM pstat GROUP BY doc_id
-    ),{",".join(top_ctes)},{",".join(cover_ctes)}
-    SELECT 'r' AS op, CAST(tot.doc_id AS VARCHAR) AS k, {v} AS v
-    FROM tot
-    LEFT JOIN ld ON tot.doc_id = ld.doc_id
-    LEFT JOIN pd ON tot.doc_id = pd.doc_id
-    {" ".join(top_joins)}
-    {" ".join(cover_joins)}
-    """
-
-
-_R14_REPETITION_SQL = _rep_oracle()
-
-
-#: injected-marker prefix shared verbatim by both r14_encoding twins —
-#: plain string literals, so the two engines build identical variant
-#: text without needing byte-codec work in SQL
-_ENC_PREFIX = "cafÃ© â€™ mojibake Â° sample â€œ "
-
-
-def q_r14_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mojibake detection (llmops/normalize.py mojibake_stats — round
-    13, the ftfy-class encoding-artifact signal) via the DECLARED step
-    over documents ∪ marker-injected variants (the shared _ENC_PREFIX
-    literal prepended at offset ids — both twins build the identical
-    string, no codec work in SQL). Per doc: the exact marker count and
-    floor(frac*1e6) of the single division ('~' for empty text). The
-    REPAIR (fix_mojibake) is engine byte-codec work and stays
-    pytest-pinned (tests/test_mojibake.py round-trips real broken
-    text); its decision inputs — these counts — are what this row
-    attests. All-string (op, k, v)."""
-    from data_validation_engine_spark.steps import parse_step
-
-    base = _docs(spark, sf_dir).where("doc_id % 10 = 0").select(
-        "doc_id", "text"
-    )
-    corpus = base.unionByName(
-        base.select(
-            (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
-            F.concat(F.lit(_ENC_PREFIX), F.col("text")).alias("text"),
-        )
-    )
-    ents = {"docs": corpus}
-    _engine(spark).evaluate(
-        ents,
-        config=parse_step(
-            {"operation": "mojibake_stats", "entity_name": "docs"}
-        ),
-    )
-    return ents["docs"].selectExpr(
-        "'s' AS op",
-        "CAST(doc_id AS STRING) AS k",
-        "CONCAT_WS('|', CAST(mojibake_count AS STRING),"
-        " COALESCE(CAST(CAST(floor(mojibake_frac * 1000000) AS BIGINT)"
-        " AS STRING), '~')) AS v",
-    )
-
-
-def _encoding_oracle() -> str:
-    from data_validation_engine_spark.llmops.normalize import (
-        MOJIBAKE_MARKERS,
-    )
-
-    terms = " + ".join(
-        f"(length(t) - length(replace(t, '{m}', ''))) // {len(m)}"
-        for m in MOJIBAKE_MARKERS
-    )
-    return f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-        UNION ALL
-        SELECT doc_id + 1000000, '{_ENC_PREFIX}' || text
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    c AS (SELECT doc_id, COALESCE(text, '') AS t FROM corpus),
-    m AS (SELECT doc_id, t, {terms} AS cnt FROM c)
-    SELECT 's' AS op, CAST(doc_id AS VARCHAR) AS k,
-           CAST(cnt AS VARCHAR) || '|' ||
-           CASE WHEN length(t) > 0
-                THEN CAST(CAST(floor(round(cnt::DOUBLE / length(t), 6)
-                     * 1000000) AS BIGINT) AS VARCHAR)
-                ELSE '~' END AS v
-    FROM m
-"""
-
-
-_R14_ENCODING_SQL = _encoding_oracle()
-
-
-# ---------------------------------------------------------------------------
-# the roster table that queries(), oracle_sql() and the staged pair are
-# derived from
+# the roster table that queries() and oracle_sql() are derived from
 # ---------------------------------------------------------------------------
 
 
@@ -12484,22 +11119,6 @@ ROSTER: dict[str, Row] = {
     "stream_heavy": _one(q_r12_stream_heavy, _R12_STREAM_HEAVY_SQL),
 }
 
-#: Candidate rows, run by ``tools/oracle_check.py --staged`` and
-#: tests/test_staged_oracles.py but not by the driver: a row is proven
-#: green here before it joins ROSTER.
-STAGED: dict[str, Row] = {
-    "r14_ann_recall": _one(q_r14_ann_recall, _R14_ANN_RECALL_SQL),
-    "r14_pq_entity": _one(q_r14_pq_entity, _R14_PQ_ENTITY_SQL),
-    "r14_pq_many": _one(q_r14_pq_many, _R14_PQ_MANY_SQL),
-    "r14_gopher": _one(q_r14_gopher, _R14_GOPHER_SQL),
-    "r14_c4": _one(q_r14_c4, _R14_C4_SQL),
-    "r14_urls": _one(q_r14_urls, _R14_URLS_SQL),
-    "r14_wordlm": _one(q_r14_wordlm, _R14_WORDLM_SQL),
-    "r14_pair_recall": _one(q_r14_pair_recall, _R14_PAIR_RECALL_SQL),
-    "r14_repetition": _one(q_r14_repetition, _R14_REPETITION_SQL),
-    "r14_encoding": _one(q_r14_encoding, _R14_ENCODING_SQL),
-}
-
 
 def _row_query(row: Row) -> Query:
     if row.build is not None:
@@ -12526,10 +11145,3 @@ def queries() -> dict[str, Query]:
 def oracle_sql() -> dict[str, str]:
     return {name: _row_oracle(row) for name, row in ROSTER.items()}
 
-
-def staged_queries() -> dict[str, Query]:
-    return {name: _row_query(row) for name, row in STAGED.items()}
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    return {name: _row_oracle(row) for name, row in STAGED.items()}

@@ -40,6 +40,7 @@ from data_validation_engine_spark.llmops.substrings import (
 ROBOTS = "User-agent: *\nDisallow: /private/\n"
 
 
+@pytest.mark.slow
 def test_robots_host_col_is_case_folded(spark):
     rules = parse_robots(
         spark.createDataFrame(

@@ -469,6 +469,7 @@ def test_group_by_cube_covers_all_subsets(spark, events):
 
 
 # -- containment (asymmetric near-dup) ---------------------------------------
+@pytest.mark.slow
 def test_containment_pairs_matches_naive_and_catches_wrapper(spark, docs):
     from data_validation_engine_spark.llmops.dedup import containment_pairs
 

@@ -94,6 +94,7 @@ def test_boolean_labels_and_loud_bad_labels(spark):
         classifier_eval(bad, "text", "y", W).collect()
 
 
+@pytest.mark.slow
 def test_train_eval_filter_compose_as_json_steps(spark):
     from data_validation_engine_spark.steps import parse_step
     from data_validation_engine_spark.steps.engine import StepEngine

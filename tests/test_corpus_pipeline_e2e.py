@@ -11,6 +11,7 @@ splits are disjoint, the export manifest reproduces bit-for-bit."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from data_validation_engine_spark.steps import StepEngine, parse_step
 
@@ -20,6 +21,7 @@ def _steps(eng, ents, configs):
         eng.evaluate(ents, config=parse_step(c))
 
 
+@pytest.mark.slow
 def test_declared_corpus_pipeline(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # synthesize a crawl: real text wrapped in markup, a JSON sidecar,
@@ -174,6 +176,7 @@ def test_declared_corpus_pipeline(spark, sf_dir, tmp_path):
     assert sum(r["n_rows"] for r in m1) == counts["train"]
 
 
+@pytest.mark.slow
 def test_declared_round11_curation_pipeline(spark, sf_dir):
     """The round-11 curation story composes: classifier quality filter
     (logit-space threshold) → LSH index admission of a new batch
@@ -315,6 +318,7 @@ def test_declared_round11_curation_pipeline(spark, sf_dir):
     )
 
 
+@pytest.mark.slow
 def test_warc_to_corpus_compliance_pipeline(spark, sf_dir, tmp_path):
     """The round-13 ingestion story end to end: a WARC crawl archive →
     read_warc → HTML text extraction → URL canonicalization → domain

@@ -18,6 +18,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
 # the rows whose plumbing crosses the hazards: pandas-state µs math
@@ -42,6 +44,7 @@ SENSITIVE = [
 ]
 
 
+@pytest.mark.slow
 def test_sensitive_rows_green_under_adverse_environment():
     env = dict(os.environ)
     env["TZ"] = "America/New_York"

@@ -1,5 +1,6 @@
-"""Round-13 extras: the Gopher document-quality gate (Rae 2021 §A1.1)
-and the IVF cell-occupancy gauge."""
+"""The Gopher document-quality gate (Rae 2021 §A1.1), C4 line-level
+cleaning (Raffel 2020 §2.2) and the IVF cell-occupancy gauge; the two
+declared crawl filters are also proven against their DuckDB twins."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from data_validation_engine_spark.llmops.ivf import (
     ivf_assign,
     ivf_stats,
 )
+from __spark_entry__ import _docs
 
 GOOD = (
     "The quick brown fox jumps over the lazy dog and then decides "
@@ -163,10 +165,110 @@ def test_ivf_stats_persisted_layout_and_validation(spark):
         ivf_stats(assigned, cell_col="c")
 
 
-def test_declared_gopher_step_composes_with_filter(spark, sf_dir):
+_GOPHER_SQL = """
+    WITH base AS (
+        SELECT doc_id, COALESCE(text, '') AS t FROM documents
+    ),
+    w AS (
+        SELECT doc_id, t,
+               list_filter(regexp_split_to_array(t, '\\s+'),
+                           x -> length(x) > 0) AS words,
+               list_filter(regexp_split_to_array(t, '\\n'),
+                           x -> length(trim(x)) > 0) AS lines
+        FROM base
+    ),
+    m AS (
+        SELECT doc_id, t, words, lines,
+               len(words) AS n_words,
+               len(lines) AS n_lines,
+               COALESCE(list_sum(list_transform(words,
+                                                x -> length(x))), 0)
+                   AS total_chars,
+               (length(t) - length(replace(t, '#', '')))
+               + (length(t) - length(replace(t, '...', ''))) / 3
+               + (length(t) - length(replace(t, '…', ''))) AS n_sym,
+               len(list_filter(lines,
+                   x -> substring(ltrim(x), 1, 1) IN ('•', '-', '*')))
+                   AS n_bullet,
+               len(list_filter(lines,
+                   x -> right(rtrim(x), 3) = '...'
+                        OR right(rtrim(x), 1) = '…')) AS n_ell,
+               len(list_filter(words,
+                   x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
+               len(list_filter(
+                   ['the', 'be', 'to', 'of', 'and', 'that', 'have',
+                    'with'],
+                   s -> list_contains(
+                       list_transform(words, x -> lower(x)), s)))
+                   AS n_stop
+        FROM w
+    ),
+    r AS (
+        SELECT doc_id, n_words, n_stop,
+               CASE WHEN n_words > 0
+                    THEN total_chars::DOUBLE / n_words END AS mean_wl,
+               CASE WHEN n_words > 0
+                    THEN n_sym::DOUBLE / n_words END AS sym_ratio,
+               CASE WHEN n_words > 0
+                    THEN n_alpha::DOUBLE / n_words END AS alpha_frac,
+               CASE WHEN n_lines > 0
+                    THEN n_bullet::DOUBLE / n_lines END AS bullet_frac,
+               CASE WHEN n_lines > 0
+                    THEN n_ell::DOUBLE / n_lines END AS ell_frac,
+               n_lines
+        FROM m
+    ),
+    f AS (
+        SELECT doc_id, n_words, n_stop, mean_wl, sym_ratio, alpha_frac,
+               bullet_frac, ell_frac,
+               (n_words >= 30 AND n_words <= 100000) AS f_wc,
+               COALESCE(mean_wl >= 3.0 AND mean_wl <= 10.0, FALSE)
+                   AS f_mwl,
+               COALESCE(sym_ratio <= 0.1, FALSE) AS f_sym,
+               COALESCE(bullet_frac < 0.9, n_lines = 0) AS f_bul,
+               COALESCE(ell_frac < 0.3, n_lines = 0) AS f_ell,
+               COALESCE(alpha_frac >= 0.8, FALSE) AS f_alpha,
+               (n_stop >= 1) AS f_stop
+        FROM r
+    )
+    SELECT 'g' AS op, CAST(doc_id AS VARCHAR) AS k,
+           CAST(n_words AS VARCHAR) || '|' ||
+           CAST(n_stop AS VARCHAR) || '|' ||
+           CAST(CAST(f_wc AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_mwl AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_sym AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_bul AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_ell AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_alpha AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(f_stop AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST((f_wc AND f_mwl AND f_sym AND f_bul AND f_ell
+                      AND f_alpha AND f_stop) AS INT) AS VARCHAR)
+           || '|' ||
+           COALESCE(CAST(CAST(floor(mean_wl * 1000000) AS BIGINT)
+                    AS VARCHAR), '~') || '|' ||
+           COALESCE(CAST(CAST(floor(sym_ratio * 1000000) AS BIGINT)
+                    AS VARCHAR), '~') || '|' ||
+           COALESCE(CAST(CAST(floor(alpha_frac * 1000000) AS BIGINT)
+                    AS VARCHAR), '~') || '|' ||
+           COALESCE(CAST(CAST(floor(bullet_frac * 1000000) AS BIGINT)
+                    AS VARCHAR), '~') || '|' ||
+           COALESCE(CAST(CAST(floor(ell_frac * 1000000) AS BIGINT)
+                    AS VARCHAR), '~') AS v
+    FROM f
+"""
+
+
+def test_declared_gopher_step_composes_with_filter(spark, sf_dir, duck_oracle):
+    """The declared gopher_quality_flags step over the documents table,
+    with relaxed thresholds (min_words=30, min_stop_words=1) so the
+    synthetic corpus exercises both keep outcomes, matched against
+    DuckDB: per doc the exact integer metrics (word/stop-word counts),
+    all seven rule booleans + the keep conjunction, and the ratio
+    metrics as floor(x*1e6) of single correctly-rounded divisions. A
+    declared filter on gopher_keep then keeps what the library keeps."""
     from data_validation_engine_spark.steps import StepEngine, parse_step
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _docs(spark, sf_dir)
     eng = StepEngine(spark)
     ents = {"docs": docs}
     eng.evaluate(
@@ -181,6 +283,30 @@ def test_declared_gopher_step_composes_with_filter(spark, sf_dir):
             }
         ),
     )
+    r6 = (
+        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
+        " '~')"
+    )
+    frame = ents["flagged"].selectExpr(
+        "'g' AS op",
+        "CAST(doc_id AS STRING) AS k",
+        "CONCAT_WS('|', CAST(gopher_words AS STRING),"
+        " CAST(gopher_stop_words AS STRING),"
+        " CAST(CAST(flag_word_count AS INT) AS STRING),"
+        " CAST(CAST(flag_mean_word_len AS INT) AS STRING),"
+        " CAST(CAST(flag_symbol_ratio AS INT) AS STRING),"
+        " CAST(CAST(flag_bullet_lines AS INT) AS STRING),"
+        " CAST(CAST(flag_ellipsis_lines AS INT) AS STRING),"
+        " CAST(CAST(flag_alpha_words AS INT) AS STRING),"
+        " CAST(CAST(flag_stop_words AS INT) AS STRING),"
+        " CAST(CAST(gopher_keep AS INT) AS STRING),"
+        f" {r6.format(x='gopher_mean_word_len')},"
+        f" {r6.format(x='gopher_symbol_ratio')},"
+        f" {r6.format(x='gopher_alpha_frac')},"
+        f" {r6.format(x='gopher_bullet_frac')},"
+        f" {r6.format(x='gopher_ellipsis_frac')}) AS v",
+    )
+    duck_oracle("gopher", frame, _GOPHER_SQL)
     eng.evaluate(
         ents,
         config=parse_step(
@@ -274,6 +400,118 @@ def test_c4_zero_shuffle_on_corpus(spark, sf_dir):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert out.count() == docs.count()
+
+
+#: the C4 proof's corpus construction, shared verbatim by both twins: the
+#: synthetic documents are single-line unpunctuated word bags, so the
+#: splice plants every C4 rule's trigger — terminal punctuation
+#: (doc_id%3=0), multi-line pages with punctuated lines (%3=1),
+#: untouched no-punct pages (%3=2), lorem-ipsum (%7=0) and brace
+#: (%11=0) page poisons
+_C4_CASE_SQL = (
+    "CASE WHEN doc_id % 7 = 0 THEN CONCAT(text, ' and lorem ipsum.') "
+    "WHEN doc_id % 11 = 0 THEN CONCAT(text, ' { code block.') "
+    "WHEN doc_id % 13 = 5 THEN CONCAT(text, ' she said \"go now\"') "
+    "WHEN doc_id % 3 = 0 THEN CONCAT(text, '.') "
+    "WHEN doc_id % 3 = 1 THEN REPLACE(text, ' batch ', '.\n') "
+    "ELSE text END"
+)
+
+_C4_SQL = f"""
+    WITH corpus AS (
+        -- COALESCE mirrors c4_clean's fail-closed NULL handling (a
+        -- NULL-text doc cleans to the empty page, flags false)
+        SELECT doc_id, COALESCE({_C4_CASE_SQL}, '') AS t FROM documents
+    ),
+    l AS (
+        SELECT doc_id, t,
+               list_filter(
+                   regexp_split_to_array(t, '\\n'),
+                   ln -> right(rtrim(ln), 1) IN ('.', '!', '?', '"')
+                         AND len(list_filter(
+                                 regexp_split_to_array(ln, '\\s+'),
+                                 x -> length(x) > 0)) >= 3
+                         AND NOT contains(lower(ln), 'javascript')
+               ) AS kept,
+               len(list_filter(regexp_split_to_array(t, '\\n'),
+                               x -> length(trim(x)) > 0)) AS n_total
+        FROM corpus
+    ),
+    c AS (
+        SELECT doc_id, t, n_total, len(kept) AS n_kept,
+               -- array_to_string of an EMPTY list is NULL in DuckDB;
+               -- Spark's array_join gives '' — coalesce to match
+               COALESCE(array_to_string(
+                   list_transform(kept, x -> trim(x)), chr(10)), '')
+                   AS cleaned,
+               -- a kept line terminated by a BARE end quote (no .!?
+               -- before it) counts as one sentence (kept lines have
+               -- >= 3 words, so the penultimate char always exists)
+               len(list_filter(kept,
+                   ln -> right(rtrim(ln), 1) = '"'
+                         AND substr(rtrim(ln),
+                                    length(rtrim(ln)) - 1, 1)
+                             NOT IN ('.', '!', '?'))) AS n_qsent
+        FROM l
+    ),
+    m AS (
+        SELECT doc_id, cleaned, n_kept, n_total,
+               length(cleaned) - length(
+                   replace(replace(replace(cleaned, '.', ''), '!', ''),
+                           '?', '')) + n_qsent AS n_sent,
+               contains(lower(t), 'lorem ipsum') AS has_lorem,
+               contains(t, '{{') AS has_brace
+        FROM c
+    )
+    SELECT 'c4' AS op, CAST(doc_id AS VARCHAR) AS k,
+           md5(cleaned) || '|' ||
+           CAST(n_kept AS VARCHAR) || '|' ||
+           CAST(n_total AS VARCHAR) || '|' ||
+           CAST(n_sent AS VARCHAR) || '|' ||
+           CAST(CAST(has_lorem AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST(has_brace AS INT) AS VARCHAR) || '|' ||
+           CAST(CAST((n_sent >= 1 AND NOT has_lorem AND NOT has_brace)
+                AS INT) AS VARCHAR) AS v
+    FROM m
+"""
+
+
+def test_declared_c4_step_matches_duckdb(spark, sf_dir, duck_oracle):
+    """The declared c4_clean step over the spliced corpus
+    (_C4_CASE_SQL), matched against DuckDB: per doc the cleaned page's
+    md5 + exact line/sentence counts + the page flags + keep
+    (min_line_words=3, min_sentences=1 so the corpus exercises every
+    rule both ways)."""
+    from data_validation_engine_spark.steps import StepEngine, parse_step
+
+    docs = _docs(spark, sf_dir).selectExpr(
+        "doc_id", f"{_C4_CASE_SQL} AS text"
+    )
+    ents = {"docs": docs}
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "c4_clean",
+                "entity_name": "docs",
+                "min_line_words": 3,
+                "min_sentences": 1,
+                "new_entity_name": "clean",
+            }
+        ),
+    )
+    frame = ents["clean"].selectExpr(
+        "'c4' AS op",
+        "CAST(doc_id AS STRING) AS k",
+        "CONCAT_WS('|', md5(c4_text),"
+        " CAST(c4_lines_kept AS STRING),"
+        " CAST(c4_lines_total AS STRING),"
+        " CAST(c4_sentences AS STRING),"
+        " CAST(CAST(c4_has_lorem AS INT) AS STRING),"
+        " CAST(CAST(c4_has_brace AS INT) AS STRING),"
+        " CAST(CAST(c4_keep AS INT) AS STRING)) AS v",
+    )
+    duck_oracle("c4", frame, _C4_SQL)
 
 
 # --- streaming lift: the gates are stateless projections ------------------

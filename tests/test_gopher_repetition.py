@@ -1,6 +1,7 @@
 """Gopher §A1.2 repetition signals (llmops/gopher.py
 gopher_repetition_flags), pinned against a pure-Python reference and
-hand-computable cases."""
+hand-computable cases, and the declared step proven against its DuckDB
+twin."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from data_validation_engine_spark.llmops.gopher import (
 )
 from data_validation_engine_spark.steps import parse_step
 from data_validation_engine_spark.steps.engine import StepEngine
+from __spark_entry__ import _docs
 
 
 # ---------------------------------------------------------------- python ref
@@ -245,6 +247,7 @@ def test_thresholds_and_flags(spark):
         gopher_repetition_flags(df, "text", max_dup_gram_fracs=(0.1,))
 
 
+@pytest.mark.slow
 def test_partitioning_invariance(spark, sf_dir):
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -263,6 +266,7 @@ def test_partitioning_invariance(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.slow
 def test_declared_step(spark):
     eng = StepEngine(spark)
     ents = {
@@ -293,3 +297,251 @@ def test_declared_step(spark):
     assert sorted(map(tuple, fn.collect())) == sorted(
         map(tuple, ents["flagged"].collect())
     )
+
+
+def _rep_oracle() -> str:
+    """The 13-signal DuckDB twin: dup line/para stats via unnest +
+    group-by (occurrences beyond the first), top-gram char mass via a
+    (count DESC, gram) rank, and the dup-n-gram char coverage via
+    QUALIFY-filtered duplicate starts + gaps-and-islands interval
+    merging (overlap-only, matching the Spark fold's `s <= last_e`),
+    charged per merged run from the word array."""
+    cover_ctes = []
+    cover_joins = []
+    for n in (5, 6, 7, 8, 9, 10):
+        cover_ctes.append(f"""
+    gn{n} AS (
+        SELECT doc_id,
+               unnest(list_transform(
+                   generate_series(1, len(ws) - {n} + 1),
+                   i -> {{'s': i,
+                          'g': array_to_string(ws[i:i + {n} - 1], ' ')}}
+               )) AS sg
+        FROM tot WHERE len(ws) >= {n}
+    ),
+    gs{n} AS (
+        SELECT doc_id, sg.s AS s FROM gn{n}
+        QUALIFY count(*) OVER (PARTITION BY doc_id, sg.g) >= 2
+    ),
+    brk{n} AS (
+        SELECT doc_id, s, s + {n} - 1 AS e,
+               CASE WHEN s <= COALESCE(MAX(s + {n} - 1) OVER (
+                        PARTITION BY doc_id ORDER BY s
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                        -1) THEN 0 ELSE 1 END AS brk
+        FROM gs{n}
+    ),
+    isl{n} AS (
+        SELECT doc_id, s, e,
+               SUM(brk) OVER (PARTITION BY doc_id ORDER BY s) AS grp
+        FROM brk{n}
+    ),
+    run{n} AS (
+        SELECT doc_id, MIN(s) AS a, MAX(e) AS b
+        FROM isl{n} GROUP BY doc_id, grp
+    ),
+    cov{n} AS (
+        SELECT r.doc_id,
+               SUM(list_sum(list_transform(t.ws[r.a:r.b],
+                                           w -> length(w)))
+                   + (r.b - r.a)) AS covered
+        FROM run{n} r JOIN tot t USING (doc_id) GROUP BY r.doc_id
+    )""")
+        cover_joins.append(f"LEFT JOIN cov{n} ON tot.doc_id = cov{n}.doc_id")
+
+    top_ctes = []
+    top_joins = []
+    for n in (2, 3, 4):
+        top_ctes.append(f"""
+    tg{n} AS (
+        SELECT doc_id,
+               unnest(list_transform(
+                   generate_series(1, len(ws) - {n} + 1),
+                   i -> array_to_string(ws[i:i + {n} - 1], ' ')
+               )) AS g
+        FROM tot WHERE len(ws) >= {n}
+    ),
+    tc{n} AS (SELECT doc_id, g, count(*) AS c FROM tg{n} GROUP BY 1, 2),
+    top{n} AS (
+        SELECT doc_id, c, length(g) AS l FROM (
+            SELECT doc_id, g, c,
+                   row_number() OVER (
+                       PARTITION BY doc_id ORDER BY c DESC, g) AS rk
+            FROM tc{n}
+        ) WHERE rk = 1
+    )""")
+        top_joins.append(f"LEFT JOIN top{n} ON tot.doc_id = top{n}.doc_id")
+
+    def frac6(expr: str) -> str:
+        return (
+            f"COALESCE(CAST(CAST(floor(({expr}) * 1000000) AS BIGINT)"
+            " AS VARCHAR), '~')"
+        )
+
+    # per-doc frac expressions (NULL when no words; 0.0 when words but
+    # fewer than n grams / top count < 2 — the operator's convention)
+    def cover_frac(n: int) -> str:
+        return (
+            f"CASE WHEN len(ws) = 0 THEN NULL "
+            f"WHEN len(ws) < {n} OR cov{n}.covered IS NULL THEN 0.0 "
+            f"ELSE round(cov{n}.covered::DOUBLE / total_chars, 6) END"
+        )
+
+    def top_frac(n: int) -> str:
+        return (
+            f"CASE WHEN len(ws) = 0 THEN NULL "
+            f"WHEN len(ws) < {n} OR top{n}.c IS NULL OR top{n}.c < 2 "
+            f"THEN 0.0 "
+            f"ELSE round((top{n}.c * top{n}.l)::DOUBLE / total_chars, 6)"
+            " END"
+        )
+
+    frac_exprs = [
+        "CASE WHEN ld.n_items > 0 THEN"
+        " round(COALESCE(ld.dcnt, 0)::DOUBLE / ld.n_items, 6) END",
+        "CASE WHEN ld.item_chars > 0 THEN"
+        " round(COALESCE(ld.dchars, 0)::DOUBLE / ld.item_chars, 6) END",
+        "CASE WHEN pd.n_items > 0 THEN"
+        " round(COALESCE(pd.dcnt, 0)::DOUBLE / pd.n_items, 6) END",
+        "CASE WHEN pd.item_chars > 0 THEN"
+        " round(COALESCE(pd.dchars, 0)::DOUBLE / pd.item_chars, 6) END",
+        top_frac(2), top_frac(3), top_frac(4),
+    ] + [cover_frac(n) for n in (5, 6, 7, 8, 9, 10)]
+    thresholds = [
+        0.30, 0.20, 0.30, 0.20, 0.20, 0.18, 0.16,
+        0.15, 0.14, 0.13, 0.12, 0.11, 0.10,
+    ]
+    keep = " AND ".join(
+        f"COALESCE(({e}) <= {t}, FALSE)"
+        for e, t in zip(frac_exprs, thresholds)
+    )
+    v = (
+        "CAST(CASE WHEN len(ws) > 0 THEN len(ws) ELSE 0 END AS VARCHAR)"
+        " || '|' || CAST(total_chars AS VARCHAR)"
+        " || '|' || CAST(COALESCE(ld.dcnt, 0) AS VARCHAR)"
+        " || '|' || CAST(COALESCE(pd.dcnt, 0) AS VARCHAR) || '|' || "
+        + " || '|' || ".join(frac6(e) for e in frac_exprs)
+        + f" || '|' || CAST(CASE WHEN {keep} THEN 1 ELSE 0 END AS VARCHAR)"
+    )
+    return f"""
+    WITH base AS (
+        SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
+    ),
+    corpus AS (
+        SELECT doc_id, text FROM base
+        UNION ALL
+        SELECT doc_id + 1000000, text || chr(10) || chr(10) || text
+        FROM base WHERE doc_id % 10 = 0
+        UNION ALL
+        SELECT doc_id + 2000000,
+               substr(text, 1, 120) || chr(10) || substr(text, 1, 120)
+               || chr(10) || substr(text, 1, 120)
+        FROM base WHERE doc_id % 10 = 0
+    ),
+    tot AS (
+        SELECT doc_id,
+               list_filter(string_split_regex(COALESCE(text, ''), '\\s+'),
+                           w -> w <> '') AS ws,
+               COALESCE(text, '') AS t,
+               CASE WHEN len(list_filter(string_split_regex(
+                        COALESCE(text, ''), '\\s+'), w -> w <> '')) > 0
+                    THEN list_sum(list_transform(
+                        list_filter(string_split_regex(
+                            COALESCE(text, ''), '\\s+'), w -> w <> ''),
+                        w -> length(w)))
+                         + len(list_filter(string_split_regex(
+                             COALESCE(text, ''), '\\s+'), w -> w <> ''))
+                         - 1
+                    ELSE 0 END AS total_chars
+        FROM corpus
+    ),
+    lit AS (
+        SELECT doc_id,
+               unnest(list_filter(list_transform(
+                   string_split_regex(t, '\\n'), x -> trim(x, ' ')),
+                   x -> x <> '')) AS it
+        FROM tot
+    ),
+    lstat AS (SELECT doc_id, it, count(*) AS c FROM lit GROUP BY 1, 2),
+    ld AS (
+        SELECT doc_id,
+               SUM(c - 1) FILTER (WHERE c > 1) AS dcnt,
+               SUM((c - 1) * length(it)) FILTER (WHERE c > 1) AS dchars,
+               SUM(c) AS n_items, SUM(c * length(it)) AS item_chars
+        FROM lstat GROUP BY doc_id
+    ),
+    pit AS (
+        SELECT doc_id,
+               unnest(list_filter(list_transform(
+                   string_split_regex(t, '\\n{{2,}}'), x -> trim(x, ' ')),
+                   x -> x <> '')) AS it
+        FROM tot
+    ),
+    pstat AS (SELECT doc_id, it, count(*) AS c FROM pit GROUP BY 1, 2),
+    pd AS (
+        SELECT doc_id,
+               SUM(c - 1) FILTER (WHERE c > 1) AS dcnt,
+               SUM((c - 1) * length(it)) FILTER (WHERE c > 1) AS dchars,
+               SUM(c) AS n_items, SUM(c * length(it)) AS item_chars
+        FROM pstat GROUP BY doc_id
+    ),{",".join(top_ctes)},{",".join(cover_ctes)}
+    SELECT 'r' AS op, CAST(tot.doc_id AS VARCHAR) AS k, {v} AS v
+    FROM tot
+    LEFT JOIN ld ON tot.doc_id = ld.doc_id
+    LEFT JOIN pd ON tot.doc_id = pd.doc_id
+    {" ".join(top_joins)}
+    {" ".join(cover_joins)}
+    """
+
+
+@pytest.mark.slow
+def test_declared_step_matches_duckdb(spark, sf_dir, duck_oracle):
+    """The declared step over documents ∪ two adversarial variant
+    families (self-concatenation separated by a blank line — every
+    line/paragraph/gram duplicated — and a 3×-repeated 120-char head on
+    separate lines), so all four dup families and the interval-merge
+    cover path are non-vacuous, matched against DuckDB. Per doc: the
+    integer anchors (words, joined-token chars, dup line/para counts)
+    plus all 13 fracs as floor(x*1e6) of single correctly-rounded
+    divisions ('~' for the no-words NULL), plus the keep conjunction."""
+    base = _docs(spark, sf_dir).where("doc_id % 5 = 0").selectExpr(
+        "doc_id", "text"
+    )
+    corpus = base.unionByName(
+        base.where("doc_id % 10 = 0").selectExpr(
+            "doc_id + 1000000 AS doc_id",
+            "text || '\\n\\n' || text AS text",
+        )
+    ).unionByName(
+        base.where("doc_id % 10 = 0").selectExpr(
+            "doc_id + 2000000 AS doc_id",
+            "concat_ws('\\n', substr(text, 1, 120), substr(text, 1, 120),"
+            " substr(text, 1, 120)) AS text",
+        )
+    )
+    ents = {"docs": corpus}
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "gopher_repetition_flags",
+                "entity_name": "docs",
+                "new_entity_name": "flagged",
+            }
+        ),
+    )
+    r6 = (
+        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
+        " '~')"
+    )
+    v = (
+        "CONCAT_WS('|', CAST(rep_words AS STRING),"
+        " CAST(rep_total_chars AS STRING),"
+        " CAST(rep_dup_lines AS STRING), CAST(rep_dup_paras AS STRING), "
+        + ", ".join(r6.format(x=c) for c in METRIC_COLS[4:])
+        + ", CAST(CAST(rep_keep AS INT) AS STRING))"
+    )
+    frame = ents["flagged"].selectExpr(
+        "'r' AS op", "CAST(doc_id AS STRING) AS k", f"{v} AS v"
+    )
+    duck_oracle("repetition", frame, _rep_oracle())

@@ -21,6 +21,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod  # noqa: E402
@@ -58,6 +60,7 @@ class TestHashDisciplineStructure:
 
 
 class TestHashDisciplineFrames:
+    @pytest.mark.slow
     def test_all_query_frames_respect_the_allowlist(self, spark):
         q = entry_mod.queries()
         bad: dict[str, list[str]] = {}

@@ -227,6 +227,7 @@ def test_cosine_topk_plans_limited_sort(embs):
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.slow
 def test_multiprobe_ann_recall_dominates_single_table(spark, embs):
     from data_validation_engine_spark.llmops import multiprobe_ann_topk
 
@@ -390,6 +391,7 @@ def test_codec_stubs_fail_loudly(spark):
 # -- skew-bounded self-join (llmops/pairs.py) --------------------------------
 
 
+@pytest.mark.slow
 def test_bounded_self_join_exact_on_skewed_buckets(spark):
     """One hot bucket (800 rows) + small buckets: the block-decomposed
     self-join must return EXACTLY the naive join's pair set while keeping
@@ -549,6 +551,7 @@ def test_connected_components_star_matches_label_propagation(spark):
     assert (13, 10) in star and (3, 1) in star and (31, 30) in star
 
 
+@pytest.mark.slow
 def test_connected_components_star_fewer_rounds_on_deep_chain(spark):
     """A 33-node chain is the adversarial case for label propagation (the
     min label travels one hop per round -> rounds ~ diameter); the
@@ -1787,6 +1790,7 @@ def test_knn_join_declarable_step(spark):
     assert step == lib and len(lib) > 0
 
 
+@pytest.mark.slow
 def test_minhash_dedup_best_quality_survivor(spark):
     """quality_col switches survivor selection from min-id to best
     quality per exact cluster (production shape: keep the cleanest copy);
@@ -1819,6 +1823,7 @@ def test_minhash_dedup_best_quality_survivor(spark):
     assert worst == {0, 2}
 
 
+@pytest.mark.slow
 def test_minhash_dedup_quality_step_matches_library(spark):
     from data_validation_engine_spark.llmops import minhash_dedup, text_stats
     from data_validation_engine_spark.steps import StepEngine, parse_step
@@ -1845,6 +1850,7 @@ def test_minhash_dedup_quality_step_matches_library(spark):
     assert step == lib and 0 < len(lib) <= docs.count()
 
 
+@pytest.mark.slow
 def test_kmeans_fit_deterministic_and_improving(spark):
     """kmeans_fit is bit-identical under repartition (the whole point of
     the ordered-fold update) and each iteration does not increase the

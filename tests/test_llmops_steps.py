@@ -111,6 +111,7 @@ def corpus_result(spark, corpus_workspace, tmp_path_factory):
     )
 
 
+@pytest.mark.slow
 def test_corpus_pipeline_succeeds(corpus_result):
     assert corpus_result.success
     assert "clean_documents" in corpus_result.entities
@@ -257,6 +258,7 @@ def test_llmops_steps_parse_from_json():
     assert isinstance(s4, SimilarityTopK) and s4.k == 3
 
 
+@pytest.mark.slow
 def test_text_analysis_steps_match_library(spark):
     """The six round-5 declarable corpus steps compute exactly what the
     direct library calls compute (the JSON vocabulary adds no semantics)."""
@@ -415,6 +417,7 @@ def test_sessionize_step_matches_library(spark):
     assert got_idx == want_idx
 
 
+@pytest.mark.slow
 def test_pair_graph_steps_match_library(spark):
     """Declarable simhash-pairs and connected-components steps chain into
     the full pair-graph pipeline and equal the library calls."""
@@ -534,6 +537,7 @@ def test_ivf_step_accepts_explicit_centroids(spark):
     assert step == lib and len(lib) == 5
 
 
+@pytest.mark.slow
 def test_hygiene_steps_match_library(spark):
     """The round-6 corpus-hygiene steps (repetition signals, PII scrub,
     benchmark decontamination) compute exactly what the direct library

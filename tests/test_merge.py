@@ -236,6 +236,7 @@ class TestMergeModelBased:
     Spark job), wide shapes (overlapping keys, dup-key updates, deletes
     of absent keys, delete-then-reinsert)."""
 
+    @pytest.mark.slow
     def test_against_dict_model(self, spark):
         from hypothesis import given, settings, HealthCheck
         from hypothesis import strategies as st
@@ -320,6 +321,7 @@ class TestSnapshotDiff:
         r = snapshot_diff(old, new_set, ["id"]).collect()[0]
         assert (r.op, r.v) == ("U", "x")
 
+    @pytest.mark.slow
     def test_roundtrip_law_with_apply_changes(self, spark):
         from hypothesis import given, settings, HealthCheck
         from hypothesis import strategies as st

@@ -1,5 +1,6 @@
 """Mojibake detection + repair (llmops/normalize.py), pinned against
-Python's codec round-trip."""
+Python's codec round-trip; the detection counts are also proven against
+their DuckDB twin."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from data_validation_engine_spark.llmops.normalize import (
 )
 from data_validation_engine_spark.steps import parse_step
 from data_validation_engine_spark.steps.engine import StepEngine
+from __spark_entry__ import _docs
 
 
 def _break(s: str) -> str:
@@ -149,3 +151,73 @@ def test_steps_and_corpus_roundtrip(spark, sf_dir):
         assert b["mojibake_count"] > 0
         assert b["mojibake_fixed"] is True
         assert b["fixed"] == "café — it’s " + (r["text"] or "")
+
+
+#: injected-marker prefix shared verbatim by both mojibake_stats twins —
+#: plain string literals, so the two engines build identical variant
+#: text without needing byte-codec work in SQL
+_ENC_PREFIX = "cafÃ© â€™ mojibake Â° sample â€œ "
+
+
+def _encoding_oracle() -> str:
+    from data_validation_engine_spark.llmops.normalize import (
+        MOJIBAKE_MARKERS,
+    )
+
+    terms = " + ".join(
+        f"(length(t) - length(replace(t, '{m}', ''))) // {len(m)}"
+        for m in MOJIBAKE_MARKERS
+    )
+    return f"""
+    WITH corpus AS (
+        SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
+        UNION ALL
+        SELECT doc_id + 1000000, '{_ENC_PREFIX}' || text
+        FROM documents WHERE doc_id % 10 = 0
+    ),
+    c AS (SELECT doc_id, COALESCE(text, '') AS t FROM corpus),
+    m AS (SELECT doc_id, t, {terms} AS cnt FROM c)
+    SELECT 's' AS op, CAST(doc_id AS VARCHAR) AS k,
+           CAST(cnt AS VARCHAR) || '|' ||
+           CASE WHEN length(t) > 0
+                THEN CAST(CAST(floor(round(cnt::DOUBLE / length(t), 6)
+                     * 1000000) AS BIGINT) AS VARCHAR)
+                ELSE '~' END AS v
+    FROM m
+"""
+
+
+def test_declared_stats_match_duckdb(spark, sf_dir, duck_oracle):
+    """The declared mojibake_stats step over documents ∪ marker-injected
+    variants (the shared _ENC_PREFIX literal prepended at offset ids —
+    both twins build the identical string, no codec work in SQL),
+    matched against DuckDB. Per doc: the exact marker count and
+    floor(frac*1e6) of the single division ('~' for empty text). The
+    repair is engine byte-codec work and is pinned by the round trips
+    above; its decision inputs — these counts — are what this proves."""
+    from pyspark.sql import functions as F
+
+    base = _docs(spark, sf_dir).where("doc_id % 10 = 0").select(
+        "doc_id", "text"
+    )
+    corpus = base.unionByName(
+        base.select(
+            (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
+            F.concat(F.lit(_ENC_PREFIX), F.col("text")).alias("text"),
+        )
+    )
+    ents = {"docs": corpus}
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {"operation": "mojibake_stats", "entity_name": "docs"}
+        ),
+    )
+    frame = ents["docs"].selectExpr(
+        "'s' AS op",
+        "CAST(doc_id AS STRING) AS k",
+        "CONCAT_WS('|', CAST(mojibake_count AS STRING),"
+        " COALESCE(CAST(CAST(floor(mojibake_frac * 1000000) AS BIGINT)"
+        " AS STRING), '~')) AS v",
+    )
+    duck_oracle("encoding", frame, _encoding_oracle())

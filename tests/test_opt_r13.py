@@ -73,6 +73,7 @@ def test_classifier_features_col_parity(spark, docs):
     assert_frames_equal(direct, shared)
 
 
+@pytest.mark.slow
 def test_substring_shared_marked_parity(spark, docs):
     from data_validation_engine_spark.llmops.substrings import (
         marked_positions,
@@ -145,6 +146,7 @@ def test_marked_positions_regimes_agree(spark, docs):
     assert_frames_equal(screened.select("doc_id", "__s", "__gt"), naive)
 
 
+@pytest.mark.slow
 def test_span_paragraph_passthrough_parity(spark, docs):
     """The q_span_dedup rewrite's premise: winnowed fingerprints and
     paragraph splits are per-row projections, so (a) passing the

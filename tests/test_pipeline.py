@@ -321,6 +321,7 @@ def test_process_landing_end_to_end(spark, workspace, tmp_path_factory):
     assert t["report_name"] == "customers.csv"
 
 
+@pytest.mark.slow
 def test_process_landing_thread_pool_fan_out(spark, workspace, tmp_path_factory):
     """max_workers > 1 maps submissions over a thread pool (reference
     concurrency model, dve pipeline/pipeline.py:950-977): three

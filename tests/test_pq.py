@@ -15,6 +15,7 @@ from data_validation_engine_spark.llmops.pq import (
     pq_fit,
     pq_topk,
 )
+from __spark_entry__ import _duck_l2sq
 
 
 BOOKS = [
@@ -348,3 +349,201 @@ def test_ivf_pq_topk_many_matches_flat_on_probed_cells(spark):
         assert len(single) > 0
         for r in single:
             assert got[(qid, r["rank"])] == (r["vec_id"], r["pq_dist"])
+
+
+# multi-query twin of the _PQ_ADC_CTES chain: lut/dist/top gain a qid
+# key; the 'mivf' arm adds the per-query probe-cell cut (same centroid
+# folds, row_number <= n_probe per query, ties to the lower cell)
+_PQ_MANY_SQL = f"""
+    WITH cb AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j,
+               embedding AS cv
+        FROM embeddings ORDER BY vec_id LIMIT 16
+    ),
+    subs AS (SELECT unnest(range(0, 8)) AS s),
+    assign AS (
+        SELECT e.vec_id, subs.s,
+               (min(struct_pack(
+                   d := list_reduce(list_transform(
+                       generate_series(1, 8),
+                       i -> (e.embedding[subs.s * 8 + i]::DOUBLE
+                             - c.cv[subs.s * 8 + i]::DOUBLE)
+                          * (e.embedding[subs.s * 8 + i]::DOUBLE
+                             - c.cv[subs.s * 8 + i]::DOUBLE)),
+                       (x, y) -> x + y),
+                   j := c.j))).j AS code
+        FROM embeddings e CROSS JOIN subs CROSS JOIN cb c
+        GROUP BY e.vec_id, subs.s
+    ),
+    qs AS (
+        SELECT vec_id AS qid, embedding AS qv FROM embeddings
+        WHERE vec_id IN (0, 7, 23)
+    ),
+    lut AS (
+        SELECT qs.qid, subs.s, c.j,
+               list_reduce(list_transform(
+                   generate_series(1, 8),
+                   i -> (qs.qv[subs.s * 8 + i]::DOUBLE
+                         - c.cv[subs.s * 8 + i]::DOUBLE)
+                      * (qs.qv[subs.s * 8 + i]::DOUBLE
+                         - c.cv[subs.s * 8 + i]::DOUBLE)),
+                   (x, y) -> x + y) AS d
+        FROM subs CROSS JOIN cb c CROSS JOIN qs
+    ),
+    dist AS (
+        SELECT l.qid, a.vec_id,
+               list_reduce([0.0] || list(l.d ORDER BY a.s),
+                           (x, y) -> x + y) AS dist
+        FROM assign a JOIN lut l ON l.s = a.s AND l.j = a.code
+        GROUP BY l.qid, a.vec_id
+    ),
+    topf AS (
+        SELECT qid, vec_id, dist,
+               row_number() OVER (
+                   PARTITION BY qid ORDER BY dist ASC, vec_id ASC
+               ) AS rk
+        FROM dist WHERE vec_id <> qid
+    ),
+    cent AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS i,
+               embedding AS cv
+        FROM embeddings ORDER BY vec_id LIMIT 16
+    ),
+    ccell AS (
+        SELECT e.vec_id,
+               (min(struct_pack(
+                   d := {_duck_l2sq('e.embedding', 'c.cv')},
+                   i := c.i))).i AS cell
+        FROM embeddings e CROSS JOIN cent c
+        GROUP BY e.vec_id
+    ),
+    qcells AS (
+        SELECT qid, cell FROM (
+            SELECT qs.qid, c.i AS cell,
+                   row_number() OVER (
+                       PARTITION BY qs.qid
+                       ORDER BY {_duck_l2sq('qs.qv', 'c.cv')} ASC,
+                                c.i ASC
+                   ) AS pr
+            FROM qs CROSS JOIN cent c
+        ) WHERE pr <= 4
+    ),
+    topp AS (
+        SELECT d.qid, d.vec_id, d.dist,
+               row_number() OVER (
+                   PARTITION BY d.qid ORDER BY d.dist ASC, d.vec_id ASC
+               ) AS rk
+        FROM dist d
+        JOIN ccell ON ccell.vec_id = d.vec_id
+        JOIN qcells ON qcells.qid = d.qid AND qcells.cell = ccell.cell
+        WHERE d.vec_id <> d.qid
+    )
+    SELECT 'many' AS op,
+           CAST(qid AS VARCHAR) || '|' || CAST(rk AS VARCHAR) AS k,
+           CAST(vec_id AS VARCHAR) || '|' ||
+           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR) AS v
+    FROM topf WHERE rk <= 5
+    UNION ALL
+    SELECT 'mivf',
+           CAST(qid AS VARCHAR) || '|' || CAST(rk AS VARCHAR),
+           CAST(vec_id AS VARCHAR) || '|' ||
+           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR)
+    FROM topp WHERE rk <= 5
+    UNION ALL
+    SELECT 'rc', CAST(f.qid AS VARCHAR),
+           CAST(COALESCE(h.n, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(te.n, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(tp.n, 0) AS VARCHAR) || '|' ||
+           CAST(CAST(floor(COALESCE(h.n, 0)::DOUBLE / 5.0 * 1000000)
+                AS BIGINT) AS VARCHAR)
+    FROM (SELECT DISTINCT qid FROM qs) f
+    LEFT JOIN (
+        SELECT p.qid, count(*) AS n
+        FROM (SELECT qid, vec_id FROM topp WHERE rk <= 5) p
+        JOIN (SELECT qid, vec_id FROM topf WHERE rk <= 5) t
+          ON t.qid = p.qid AND t.vec_id = p.vec_id
+        GROUP BY p.qid
+    ) h ON h.qid = f.qid
+    LEFT JOIN (
+        SELECT qid, count(*) AS n FROM topf WHERE rk <= 5 GROUP BY qid
+    ) te ON te.qid = f.qid
+    LEFT JOIN (
+        SELECT qid, count(*) AS n FROM topp WHERE rk <= 5 GROUP BY qid
+    ) tp ON tp.qid = f.qid
+"""
+
+
+def test_declared_batch_and_ivf_batch_match_duckdb(spark, sf_dir, duck_oracle):
+    """Batched multi-query PQ search on the embeddings table, matched
+    against DuckDB:
+
+    - 'many' — ADC top-5 per query for the 3-query batch {0, 7, 23}
+      via the DECLARED pq_topk_many step (query-as-column ADC folds,
+      WindowGroupLimit ranking) — the oracle replays every (query,
+      corpus, subspace) fold independently;
+    - 'mivf' — the IVF-pruned batch path (n_probe=4 of 16 cells, probe
+      cells computed per query as an expression): each query ranks only
+      its probed cells' rows, top-5 each;
+    - 'rc' — recall@5 of the pruned batch vs the flat batch per query
+      (ann_recall group_cols=["query_id"]) — the composition the
+      operators exist for.
+
+    Distances hash as floor(x*1e6)."""
+    from data_validation_engine_spark.llmops.ivf import default_centroids
+    from data_validation_engine_spark.llmops.pq import ivf_pq_topk_many
+    from data_validation_engine_spark.llmops.recall import ann_recall
+    from data_validation_engine_spark.steps import parse_step
+    from data_validation_engine_spark.steps.engine import StepEngine
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    books = default_codebooks(emb, dim=64, m=8, k=16)
+    queries = emb.where("vec_id IN (0, 7, 23)")
+    ents = {"emb": emb, "qs": queries}
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "pq_topk_many",
+                "entity_name": "emb",
+                "target_name": "qs",
+                "k": 5,
+                "codebooks": books,
+                "new_entity_name": "flat",
+            }
+        ),
+    )
+    fmt = (
+        "CONCAT_WS('|', CAST(vec_id AS STRING),"
+        " CAST(CAST(floor(pq_dist * 1000000) AS BIGINT) AS STRING)) AS v"
+    )
+    many = ents["flat"].selectExpr(
+        "'many' AS op",
+        "CONCAT_WS('|', CAST(query_id AS STRING),"
+        " CAST(rank AS STRING)) AS k",
+        fmt,
+    )
+    cents = default_centroids(emb, n_cells=16)
+    pruned = ivf_pq_topk_many(
+        emb, queries, 5, centroids=cents, codebooks=books, n_probe=4
+    )
+    mivf = pruned.selectExpr(
+        "'mivf' AS op",
+        "CONCAT_WS('|', CAST(query_id AS STRING),"
+        " CAST(rank AS STRING)) AS k",
+        fmt,
+    )
+    rc = ann_recall(
+        pruned.select("query_id", "vec_id"),
+        ents["flat"].select("query_id", "vec_id"),
+        group_cols=["query_id"],
+        k=5,
+    ).selectExpr(
+        "'rc' AS op",
+        "CAST(query_id AS STRING) AS k",
+        "CONCAT_WS('|', CAST(n_hits AS STRING), CAST(n_exact AS STRING),"
+        " CAST(n_approx AS STRING),"
+        " CAST(CAST(floor(recall * 1000000) AS BIGINT) AS STRING)) AS v",
+    )
+    duck_oracle(
+        "pq_many", many.unionByName(mivf).unionByName(rc), _PQ_MANY_SQL
+    )

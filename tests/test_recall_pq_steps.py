@@ -1,7 +1,7 @@
-"""Round-13 verdict items #4/#5: the ann_recall operator (recall@k of
-approximate vs exact top-k) and the pq_fit -> codebooks-entity ->
-similarity_topk composition (the classifier_fit weights-entity
-pattern applied to PQ)."""
+"""The ann_recall operator (recall@k of approximate vs exact top-k) and
+the pq_fit -> codebooks-entity -> similarity_topk composition (the
+classifier_fit weights-entity pattern applied to PQ), each also proven
+against its DuckDB twin on the embeddings table."""
 
 from __future__ import annotations
 
@@ -19,6 +19,12 @@ from data_validation_engine_spark.llmops.pq import (
 )
 from data_validation_engine_spark.llmops.recall import ann_recall
 from data_validation_engine_spark.steps import StepEngine, parse_step
+from __spark_entry__ import (
+    _PQ_ADC_CTES,
+    _multiprobe_ann_oracle,
+    _similarity_ivf_oracle,
+    _similarity_topk_oracle,
+)
 
 
 # --- ann_recall library surface -----------------------------------------
@@ -71,21 +77,100 @@ def test_ann_recall_validates(spark):
         ann_recall(df, df, k=0)
 
 
-def test_ann_recall_on_real_ann_paths(spark, sf_dir):
+def _duck_recall_arm(method: str, cte: str) -> str:
+    """One oracle recall row: |cte ∩ ex| / 10 with the same
+    hits|n_exact|n_approx|floor(recall*1e6) surface the Spark side
+    emits."""
+    return f"""
+    SELECT 'rec' AS op, '{method}' AS k,
+           CAST((SELECT count(*) FROM {cte}
+                 WHERE vec_id IN (SELECT vec_id FROM ex)) AS VARCHAR)
+           || '|10|' ||
+           CAST((SELECT count(*) FROM {cte}) AS VARCHAR) || '|' ||
+           CAST(CAST(floor((SELECT count(*) FROM {cte}
+                 WHERE vec_id IN (SELECT vec_id FROM ex))::DOUBLE
+                 / 10.0 * 1000000) AS BIGINT) AS VARCHAR) AS v
+    """
+
+
+_ANN_RECALL_SQL = (
+    f"""
+    WITH ex AS (SELECT vec_id FROM ({_similarity_topk_oracle(k=10)})),
+    iv AS (SELECT vec_id FROM ({_similarity_ivf_oracle(k=10)})),
+    ivfull AS (
+        SELECT vec_id FROM ({_similarity_ivf_oracle(k=10, n_probe=16)})
+    ),
+    mp AS (SELECT vec_id FROM ({_multiprobe_ann_oracle(k=10)})),
+    pqt AS (
+        SELECT vec_id FROM (
+            {_PQ_ADC_CTES.replace("__PQ_K__", "10")}
+            SELECT vec_id FROM top
+        )
+    )
+    """
+    + _duck_recall_arm("ivf", "iv")
+    + "UNION ALL"
+    + _duck_recall_arm("ivf_full", "ivfull")
+    + "UNION ALL"
+    + _duck_recall_arm("multiprobe", "mp")
+    + "UNION ALL"
+    + _duck_recall_arm("pq", "pqt")
+)
+
+
+def test_ann_recall_on_real_ann_paths(spark, sf_dir, duck_oracle):
+    """Recall@10 of each approximate top-10 against the exact cosine
+    top-10 for query vec 0, matched against DuckDB:
+
+    - ivf: the 4-of-16-cell IVF probe (the pruned-scan path);
+    - ivf_full: the 16-of-16 probe, which scans everything and must
+      therefore measure recall exactly 1.0 (the arm that pins the
+      measurement itself);
+    - multiprobe: the 3-table OR-amplified hyperplane probe;
+    - pq: raw ADC over placeholder codebooks, without refine, so it
+      measures the quantization loss the refine stage repairs.
+
+    v = n_hits|n_exact|n_approx|floor(recall * 1e6): the counts are
+    exact longs and recall is one correctly-rounded division of exact
+    integers."""
     from data_validation_engine_spark.llmops.ivf import ivf_topk
-    from data_validation_engine_spark.llmops.similarity import cosine_topk
+    from data_validation_engine_spark.llmops.similarity import (
+        cosine_topk,
+        multiprobe_ann_topk,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.where("vec_id = 0")
     exact = cosine_topk(emb, q, 10).select("vec_id")
+    books = default_codebooks(emb, dim=64, m=8, k=16)
+    approx = {
+        "ivf": ivf_topk(emb, q, 10, n_cells=16, n_probe=4),
+        "ivf_full": ivf_topk(emb, q, 10, n_cells=16, n_probe=16),
+        "multiprobe": multiprobe_ann_topk(emb, q, 10),
+        "pq": pq_topk(emb, q, 10, codebooks=books),
+    }
+    recs = {
+        method: ann_recall(ap.select("vec_id"), exact, k=10)
+        for method, ap in approx.items()
+    }
     # probing ALL cells must be exact-equivalent: recall == 1.0
-    full = ivf_topk(emb, q, 10, n_cells=16, n_probe=16).select("vec_id")
-    [r] = ann_recall(full, exact, k=10).collect()
+    [r] = recs["ivf_full"].collect()
     assert r["recall"] == 1.0
     # a 4-of-16 probe is a subset scan: recall in [0, 1], hits bounded
-    part = ivf_topk(emb, q, 10, n_cells=16, n_probe=4).select("vec_id")
-    [r] = ann_recall(part, exact, k=10).collect()
+    [r] = recs["ivf"].collect()
     assert 0.0 <= r["recall"] <= 1.0 and r["n_hits"] <= 10
+    out = None
+    for method, rec in recs.items():
+        rec = rec.selectExpr(
+            "'rec' AS op",
+            f"'{method}' AS k",
+            "CONCAT_WS('|', CAST(n_hits AS STRING),"
+            " CAST(n_exact AS STRING), CAST(n_approx AS STRING),"
+            " CAST(CAST(floor(recall * 1000000) AS BIGINT) AS STRING))"
+            " AS v",
+        )
+        out = rec if out is None else out.unionByName(rec)
+    duck_oracle("ann_recall", out, _ANN_RECALL_SQL)
 
 
 # --- codebooks entity round-trip ----------------------------------------
@@ -120,6 +205,7 @@ def _codeword_corpus(spark):
     )
 
 
+@pytest.mark.slow
 def test_declared_pq_fit_entity_feeds_similarity_topk(spark):
     """pq_fit -> entity -> similarity_topk(codebooks_entity=...) must
     equal the library path with the same trained codebooks."""
@@ -197,6 +283,80 @@ def test_declared_pq_fit_entity_feeds_similarity_topk(spark):
         )
 
 
+_PQ_ENTITY_SQL = (
+    _PQ_ADC_CTES.replace("__PQ_K__", "20")
+    + """
+    SELECT 'cb' AS op,
+           CAST(s AS VARCHAR) || '|' || CAST(j AS VARCHAR) AS k,
+           (SELECT string_agg(
+                CAST(CAST(floor(cv[s * 8 + i]::DOUBLE * 1000000)
+                     AS BIGINT) AS VARCHAR), ',' ORDER BY i)
+            FROM (SELECT unnest(range(1, 9)) AS i)) AS v
+    FROM subs CROSS JOIN cb
+    UNION ALL
+    SELECT 'ent', CAST(rk AS VARCHAR),
+           CAST(vec_id AS VARCHAR) || '|' ||
+           CAST(CAST(floor(dist * 1000000) AS BIGINT) AS VARCHAR)
+    FROM top
+"""
+)
+
+
+def test_codebooks_entity_search_matches_duckdb(spark, sf_dir, duck_oracle):
+    """The codebooks-entity -> similarity_topk composition on the
+    embeddings table, matched against DuckDB:
+
+    - 'cb' — the codebooks ENTITY surface itself ((subspace, code) ->
+      the centroid's per-component floor(x*1e6) fold), proving the
+      entity round-trip carries the exact geometry. These are the
+      deterministic placeholder codebooks, so the oracle can re-derive
+      them from the embeddings table; the trained path's parity with
+      the library is pinned above;
+    - 'ent' — ADC top-20 computed by the similarity_topk step FED FROM
+      THE ENTITY (codebooks_entity=...), which must match the same
+      index-order ADC folds the oracle replays — proving the
+      entity-resolved codebooks reach the search bit-identically."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    books = default_codebooks(emb, dim=64, m=8, k=16)
+    ents = {
+        "emb": emb,
+        "query": emb.where("vec_id = 0"),
+        "books": spark.createDataFrame(
+            pq_codebooks_to_rows(books),
+            "subspace int, code int, centroid array<double>",
+        ),
+    }
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "similarity_topk",
+                "entity_name": "emb",
+                "target_name": "query",
+                "method": "pq",
+                "k": 20,
+                "codebooks_entity": "books",
+                "new_entity_name": "top",
+            }
+        ),
+    )
+    cb = ents["books"].where("subspace >= 0").selectExpr(
+        "'cb' AS op",
+        "CONCAT_WS('|', CAST(subspace AS STRING),"
+        " CAST(code AS STRING)) AS k",
+        "array_join(transform(centroid,"
+        " x -> CAST(CAST(floor(x * 1000000) AS BIGINT) AS STRING)),"
+        " ',') AS v",
+    )
+    ent = ents["top"].selectExpr(
+        "'ent' AS op",
+        "CAST(rank AS STRING) AS k",
+        "CONCAT_WS('|', CAST(vec_id AS STRING),"
+        " CAST(CAST(floor(pq_dist * 1000000) AS BIGINT) AS STRING)) AS v",
+    )
+    duck_oracle("pq_entity", cb.unionByName(ent), _PQ_ENTITY_SQL)
+
+
 def test_declared_ann_recall_step(spark):
     eng = StepEngine(spark)
     ents = {
@@ -249,6 +409,7 @@ def _grid_corpus(spark):
     )
 
 
+@pytest.mark.slow
 def test_pq_fit_codebooks_beat_default_on_recall(spark):
     df = _grid_corpus(spark)
     q = df.where("vec_id = 200")  # a = 8, b = 12

@@ -44,6 +44,7 @@ def test_dischema_loads_with_rule_store():
     assert {"WEAK_ESCAPE", "LONG_ORBIT", "HIGH_DENSITY", "STRONG_GRAVITY"} <= codes
 
 
+@pytest.mark.slow
 def test_pipeline_succeeds(result):
     assert result.success
     assert set(result.entities) == {"planets", "largest_satellites"}

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_validation_engine_spark.llmops.robots import (
@@ -60,6 +61,7 @@ def _allowed(spark, url, agent):
     return r["robots_allowed"]
 
 
+@pytest.mark.slow
 def test_longest_match_and_allow_tiebreak(spark):
     # /private/ blocked, but the longer Allow carves out ok.html
     assert _allowed(spark, "http://a.ex/private/x.html", "anybot") is False

@@ -1,10 +1,9 @@
 """The roster contract: the driver's rows come from one declared table.
 
-``__spark_entry__.ROSTER`` (and ``STAGED``, the candidate rows) maps each
-row to its arms; ``queries()``/``oracle_sql()`` and their staged pair are
-derived from it. The driver records at most 50 rows and compares every
-one against its DuckDB twin, and the tools and tests that key rows by name
-must name rows that exist.
+``__spark_entry__.ROSTER`` maps each row to its arms;
+``queries()``/``oracle_sql()`` are derived from it. The driver records at
+most 50 rows and compares every one against its DuckDB twin, and the tools
+and tests that key rows by name must name rows that exist.
 """
 
 from __future__ import annotations
@@ -17,31 +16,20 @@ sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry  # noqa: E402
 from test_driver_matrix import SENSITIVE  # noqa: E402
-from tools.plan_dump import (  # noqa: E402
-    EXECUTES_AT_BUILD,
-    STAGED_EXECUTES_AT_BUILD,
-)
+from tools.plan_dump import EXECUTES_AT_BUILD  # noqa: E402
 
 
 def test_roster_contract():
-    roster, staged = entry.ROSTER, entry.STAGED
+    roster = entry.ROSTER
     assert len(roster) == 50
     assert set(entry.queries()) == set(entry.oracle_sql()) == set(roster)
-    assert (
-        set(entry.staged_queries())
-        == set(entry.staged_oracle_sql())
-        == set(staged)
-    )
-    for name, row in {**roster, **staged}.items():
+    for name, row in roster.items():
         tags = [arm.tag for arm in row.arms]
         assert tags, f"{name}: no arms"
         assert len(set(tags)) == len(tags), f"{name}: repeated tag {tags}"
         # a None oracle means "stated by the previous arm's SQL"
         assert row.arms[0].oracle is not None, f"{name}: first arm has no SQL"
-    assert not set(roster) & set(staged), "staged rows already on the roster"
     stale = sorted(
         (set(EXECUTES_AT_BUILD) | set(SENSITIVE)) - set(roster)
     )
     assert not stale, f"rows keyed in plan_dump/driver_matrix: {stale}"
-    stale = sorted(set(STAGED_EXECUTES_AT_BUILD) - set(staged))
-    assert not stale, f"staged rows keyed in plan_dump: {stale}"

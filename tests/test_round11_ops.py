@@ -50,6 +50,7 @@ def test_compact_prunes_dead_ids_and_reingest_dupes(spark, span_docs):
     ).count() == 0
 
 
+@pytest.mark.slow
 def test_compact_preserves_admission_decisions(spark, span_docs):
     """Compacted index == fresh index over the live corpus, for the
     decisions incremental_minhash_dedup makes about a new batch."""
@@ -447,6 +448,7 @@ def test_classifier_fit_matches_numpy_reference(spark):
     assert b == pytest.approx(b_ref, abs=1e-9)
 
 
+@pytest.mark.slow
 def test_classifier_fit_learns_separable_data(spark):
     from data_validation_engine_spark.llmops.classifier import (
         classifier_fit,
@@ -520,6 +522,7 @@ def test_classifier_fit_validates(spark):
         classifier_fit(bad, "text", "y", epochs=1, n_buckets=16)
 
 
+@pytest.mark.slow
 def test_declared_classifier_fit_then_score(spark):
     """Train → score entirely in the declared vocabulary: the weights
     travel as an entity (bucket, weight; bias at bucket = -1)."""
@@ -839,6 +842,7 @@ def test_training_shards_json_format(spark, sf_dir, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_char_ngram_features_end_to_end(spark):
     """Char-gram mode: features survive formatting changes (whitespace
     collapse), work on short texts, and train/score consistently."""

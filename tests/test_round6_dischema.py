@@ -192,6 +192,7 @@ def hygiene_result(spark, tmp_path_factory):
     )
 
 
+@pytest.mark.slow
 def test_hygiene_pipeline_succeeds(hygiene_result):
     assert hygiene_result.success
     assert {
@@ -312,6 +313,7 @@ def profiling_result(spark, tmp_path_factory):
     )
 
 
+@pytest.mark.slow
 def test_profiling_pipeline_succeeds(profiling_result):
     assert profiling_result.success
     assert {

@@ -45,6 +45,7 @@ class TestScd2:
             (2, 20): ("b", None, True),
         }
 
+    @pytest.mark.slow
     def test_snapshot_matches_apply_changes(self, spark):
         from pyspark.sql.types import StructType
 

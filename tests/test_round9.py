@@ -28,6 +28,7 @@ DOCS = [
 ]
 
 
+@pytest.mark.slow
 def test_bpe_fold_path_equals_join_path(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     merges, words = bpe_train(
@@ -195,6 +196,7 @@ def _mk_docs(spark):
     return corpus, batch
 
 
+@pytest.mark.slow
 def test_incremental_minhash_matches_full_pairs_filter(spark):
     """The incremental path must drop exactly the new ids the FULL
     banded pair set over the union implies (same banding → identical
@@ -225,6 +227,7 @@ def test_incremental_minhash_matches_full_pairs_filter(spark):
     assert 101 in kept
 
 
+@pytest.mark.slow
 def test_incremental_minhash_prebuilt_index_equivalent(spark):
     """Feeding a persisted (round-tripped) minhash_index must give the
     same survivors as building it on the fly — the production shape
@@ -280,6 +283,7 @@ def test_incremental_minhash_declared_step(spark):
     assert 101 in kept and 100 not in kept and 103 not in kept
 
 
+@pytest.mark.slow
 def test_incremental_embedding_dedup_matches_pair_filter(spark):
     """The embedding admission filter must drop exactly the new ids the
     full LSH pair set over the union implies (same planes → identical
@@ -394,6 +398,7 @@ def test_driver_row_budget_and_oracle_coverage():
     assert set(o) <= set(q), "stale oracle entries for removed rows"
 
 
+@pytest.mark.slow
 def test_round9_singletons_hash_all_string(spark, sf_dir):
     """The round-9 localization singletons must keep their hashed frames
     free of numeric dtypes (the engine→pandas dtype-coercion divergence

@@ -182,6 +182,7 @@ def test_exact_dedup_is_one_narrow_shuffle(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.slow
 def test_no_accidental_cartesian_in_any_query_plan(spark):
     """Plan lint over the whole oracle surface: no query's physical plan
     may contain a cartesian product or nested-loop join EXCEPT the

@@ -123,6 +123,7 @@ def test_streaming_message_sink_jsonl(spark, events_stream, events_batch, tmp_pa
     assert codes == {"BIG_VALUE", "ERR_EVENT"}
 
 
+@pytest.mark.slow
 def test_windowed_counts_with_watermark(spark, events_stream, events_batch, tmp_path):
     agg = windowed_counts(
         events_stream, "ts", window="1 hour", watermark="2 hours",
@@ -155,6 +156,7 @@ def test_windowed_counts_with_watermark(spark, events_stream, events_batch, tmp_
         assert batch[(r["start"], r["event_type"])] == r["n"]
 
 
+@pytest.mark.slow
 def test_streaming_exact_dedup(spark, events_stream, events_batch, tmp_path):
     from data_validation_engine_spark.streaming import streaming_exact_dedup
 
@@ -200,6 +202,7 @@ def test_streaming_rejects_batch_frame(spark, events_batch):
         streaming_sync_filters(events_batch, FILTERS)
 
 
+@pytest.mark.slow
 def test_streaming_sync_messages_query_matches_batch(spark):
     """The driver-facing streaming_sync_messages query (availableNow drain
     over events.parquet) must agree with the batch sync stage run over the
@@ -253,6 +256,7 @@ def test_streaming_sync_messages_query_matches_batch(spark):
     assert got == expected and len(got) > 0
 
 
+@pytest.mark.slow
 def test_streaming_sessionize_matches_batch(spark, events_stream, events_batch):
     """The applyInPandasWithState session operator on a single availableNow
     drain assigns exactly the batch gaps-and-islands sessions."""
@@ -294,6 +298,7 @@ def test_streaming_sessionize_matches_batch(spark, events_stream, events_batch):
     assert got == want and len(got) > 0
 
 
+@pytest.mark.slow
 def test_streaming_sessionize_multichunk_string_key(
     spark, events_stream, events_batch
 ):
@@ -387,6 +392,7 @@ def test_session_stats_rollup(spark, events_batch):
     assert len(per_user) == stats.select("user_id").distinct().count()
 
 
+@pytest.mark.slow
 def test_streaming_corpus_quality_gates(spark, tmp_path):
     """Corpus cleaning composes onto streams with no new code: the llmops
     quality gates are ordinary DeferredFilters, so streaming_sync_filters
@@ -634,6 +640,7 @@ def test_streaming_rolling_counts_matches_batch(
     assert got == want and len(got) == events_batch.count()
 
 
+@pytest.mark.slow
 def test_streaming_rolling_counts_carries_state_across_batches(
     spark, tmp_path
 ):
@@ -1064,6 +1071,7 @@ def test_streaming_kmv_rejects_batch_frame(spark):
         streaming_kmv_distinct(batch, "ts", "user_id")
 
 
+@pytest.mark.slow
 def test_streaming_kmv_state_merges_across_batches(spark, tmp_path):
     """The sketch state carries across micro-batches: a second file drop
     MERGES into the window's min-k set (mergeable-sketch law), and the

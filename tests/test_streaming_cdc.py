@@ -39,6 +39,7 @@ def _table(spark, path: str) -> dict:
     }
 
 
+@pytest.mark.slow
 def test_cdc_stream_maintains_table_across_drains(spark, tmp_path):
     src = str(tmp_path / "ledger")
     table = str(tmp_path / "table")
@@ -100,6 +101,7 @@ def test_rejects_batch_frame(spark):
         )
 
 
+@pytest.mark.slow
 def test_out_of_order_sequences_across_batches_do_not_clobber(
     spark, tmp_path
 ):
@@ -173,6 +175,7 @@ def test_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(backup) and not os.path.exists(staging)
 
 
+@pytest.mark.slow
 def test_ledger_split_across_batches_matches_one_batch_apply(
     spark, tmp_path
 ):

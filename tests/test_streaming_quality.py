@@ -40,6 +40,7 @@ def docs_dir(tmp_path_factory):
     return str(d)
 
 
+@pytest.mark.slow
 def test_quality_stack_streams_and_matches_batch(spark, docs_dir, tmp_path):
     batch = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")

@@ -1,6 +1,7 @@
 """URL blocklist filtering (llmops/web.py url_blocklist — the
 RefinedWeb-style domain cut): host extraction, suffix-aware matching
-via the candidate-explode equi-join, NULL-host loudness."""
+via the candidate-explode equi-join, NULL-host loudness, and the
+declared step proven against its DuckDB twin."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ from data_validation_engine_spark.llmops.web import (
     url_blocklist,
     url_host,
 )
+from data_validation_engine_spark.steps import StepEngine, parse_step
+from __spark_entry__ import _docs
 
 
 def test_url_host_extraction(spark):
@@ -112,3 +115,91 @@ def test_url_blocklist_plan_is_equi_join(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert out.where("url_blocked").count() == 8
+
+
+#: the blocklist proof's corpus construction, shared verbatim by both twins:
+#: per-doc URL from the source column (ads. subdomain every 5th doc,
+#: junk every 13th to exercise the loud NULL), blocklist of three
+#: hosts exercising exact, subdomain-suffix, and subdomain-only hits
+_URLS_CASE_SQL = (
+    "CASE WHEN doc_id % 13 = 0 THEN 'not a url' "
+    "ELSE CONCAT('https://', "
+    "CASE WHEN doc_id % 5 = 0 THEN 'ads.' ELSE '' END, "
+    "source, '.example.com/doc/', CAST(doc_id AS STRING)) END"
+)
+
+_URLS_BLOCKED = ("src3.example.com", "src7.example.com",
+                 "ads.src1.example.com")
+
+_URLS_SQL = f"""
+    WITH corpus AS (
+        SELECT doc_id, {_URLS_CASE_SQL} AS url FROM documents
+    ),
+    h AS (
+        SELECT doc_id,
+               NULLIF(regexp_replace(regexp_replace(lower(
+                   regexp_extract(trim(url),
+                       '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)),
+                   '^.*@', ''), ':[0-9]+$', ''), '') AS host
+        FROM corpus
+    ),
+    s AS (
+        SELECT doc_id, host,
+               CASE WHEN host IS NULL THEN NULL ELSE (
+                   len(list_filter(
+                       list_transform(
+                           range(0, greatest(least(
+                               len(string_split(host, '.')) - 1, 10),
+                               1)),
+                           i -> array_to_string(
+                               string_split(host, '.')[i + 1 :], '.')),
+                       x -> contains(x, '.') AND x IN
+                            ('src3.example.com', 'src7.example.com',
+                             'ads.src1.example.com'))) > 0
+               ) END AS blocked
+        FROM h
+    )
+    SELECT 'u' AS op, CAST(doc_id AS VARCHAR) AS k,
+           COALESCE(host, '~') || '|' ||
+           COALESCE(CAST(CAST(blocked AS INT) AS VARCHAR), '~') AS v
+    FROM s
+"""
+
+
+def test_declared_step_matches_duckdb(spark, sf_dir, duck_oracle):
+    """The declared url_blocklist step over the constructed URL corpus
+    (_URLS_CASE_SQL / _URLS_BLOCKED, both stated verbatim in the
+    oracle), matched against DuckDB: per doc the extracted host and the
+    suffix-aware blocked flag — src3/src7 docs (and their ads.
+    subdomains) blocked by the parent domain, src1 blocked only on its
+    ads. subdomain, junk URLs flag NULL ('~')."""
+    docs = _docs(spark, sf_dir).selectExpr(
+        "doc_id", f"{_URLS_CASE_SQL} AS url"
+    )
+    ents = {
+        "docs": docs,
+        "blocked": spark.createDataFrame(
+            [(h,) for h in _URLS_BLOCKED], "host string"
+        ),
+    }
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "url_blocklist",
+                "entity_name": "docs",
+                "target_name": "blocked",
+                "new_entity_name": "flagged",
+            }
+        ),
+    )
+    frame = ents["flagged"].withColumn(
+        "__h", url_host(F.col("url"))
+    ).selectExpr(
+        "'u' AS op",
+        "CAST(doc_id AS STRING) AS k",
+        "CONCAT_WS('|', COALESCE(__h, '~'),"
+        " COALESCE(CAST(CAST(url_blocked AS INT) AS STRING), '~'))"
+        " AS v",
+    )
+    duck_oracle("urls", frame, _URLS_SQL)

@@ -1,6 +1,7 @@
 """Word n-gram LM with Stupid Backoff (llmops/lm.py, Brants 2007) and
 near-duplicate pair recall/precision (llmops/recall.py pair_recall),
-pinned against pure-Python references and hand cases."""
+pinned against pure-Python references and hand cases, and each declared
+step proven against its DuckDB twin on the documents table."""
 
 from __future__ import annotations
 
@@ -19,6 +20,12 @@ from data_validation_engine_spark.llmops.lm import (
 from data_validation_engine_spark.llmops.recall import pair_recall
 from data_validation_engine_spark.steps import parse_step
 from data_validation_engine_spark.steps.engine import StepEngine
+from __spark_entry__ import (
+    _DUCK_TOKS,
+    _docs,
+    _duck_shingles,
+    _minhash_pair_ctes,
+)
 
 N = 3
 ALPHA = 0.4
@@ -305,6 +312,131 @@ def test_word_lm_step_train_export_score(spark):
         )
 
 
+#: word-gram struct explode shared by both word_lm oracle slices:
+#: every (pos, ord<=min(3,pos)) gram ending at each position
+_WORDLM_GRAMS = (
+    "unnest(flatten(list_transform(generate_series(1, len(toks)), i -> "
+    "list_transform(generate_series(1, least(3, i)), k -> "
+    "{'p': i, 'o': k, 'g': array_to_string(toks[i - k + 1:i], ' ')}))))"
+)
+
+_WORDLM_SQL = f"""
+    WITH tok AS (
+        SELECT doc_id,
+               CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
+                    ELSE list_filter(
+                        string_split_regex(lower(text), '[^a-z0-9]+'),
+                        t -> t <> '') END AS toks
+        FROM documents
+    ),
+    tr AS (SELECT toks FROM tok WHERE doc_id % 3 <> 0),
+    trg AS (SELECT {_WORDLM_GRAMS} AS s FROM tr),
+    cnts AS (
+        SELECT s.o AS ord, s.g AS gram, count(*) AS cnt
+        FROM trg GROUP BY 1, 2 HAVING count(*) >= 2
+    ),
+    total AS (SELECT COALESCE(SUM(len(toks)), 0) AS t FROM tr),
+    topg AS (
+        SELECT ord, gram, cnt,
+               row_number() OVER (
+                   PARTITION BY ord ORDER BY cnt DESC, gram) AS rk
+        FROM cnts
+    ),
+    ev AS (SELECT doc_id, toks FROM tok WHERE doc_id % 3 = 0),
+    eg AS (
+        SELECT doc_id, s.p AS pos, s.o AS ord, s.g AS gram FROM (
+            SELECT doc_id, {_WORDLM_GRAMS} AS s FROM ev
+        )
+    ),
+    res AS (
+        SELECT doc_id, pos,
+               COALESCE(MAX(CASE WHEN c.cnt IS NOT NULL
+                                 THEN e.ord END), 0) AS ro
+        FROM eg e LEFT JOIN cnts c ON c.ord = e.ord AND c.gram = e.gram
+        GROUP BY doc_id, pos
+    ),
+    hist AS (
+        SELECT doc_id, COUNT(*) AS nt,
+               COUNT(*) FILTER (WHERE ro = 0) AS h0,
+               COUNT(*) FILTER (WHERE ro = 1) AS h1,
+               COUNT(*) FILTER (WHERE ro = 2) AS h2,
+               COUNT(*) FILTER (WHERE ro = 3) AS h3
+        FROM res GROUP BY doc_id
+    )
+    SELECT 'n' AS op, 'total' AS k, CAST(t AS VARCHAR) AS v FROM total
+    UNION ALL
+    SELECT 'g', CAST(ord AS VARCHAR) || '|' || gram,
+           CAST(cnt AS VARCHAR) || '|' || CAST(rk AS VARCHAR)
+    FROM topg WHERE rk <= 15
+    UNION ALL
+    SELECT 'd', CAST(e.doc_id AS VARCHAR),
+           CAST(COALESCE(h.nt, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(h.h0, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(h.h1, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(h.h2, 0) AS VARCHAR) || '|' ||
+           CAST(COALESCE(h.h3, 0) AS VARCHAR)
+    FROM ev e LEFT JOIN hist h ON e.doc_id = h.doc_id
+"""
+
+
+def test_declared_word_lm_matches_duckdb(spark, sf_dir, duck_oracle):
+    """The declared word_lm step, matched against DuckDB: train on
+    doc_id%3!=0 with min_count=2 (the pruning path), export the
+    sentinel-carrying counts entity, score the held-out doc_id%3=0
+    slice. Surfaces: 'n' the unpruned token total (the ord=0 sentinel),
+    'g' the top-15 grams per order by (cnt DESC, gram) — pins training
+    counts and pruning — and 'd' the per-doc exact-integer backoff
+    histogram n_tokens|hits_0..hits_3 — pins tokenization, gram
+    construction, the model join and the whole cascade, with zero
+    floats in the hash (the log-score itself is transcendental and is
+    pinned against the Python reference above)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    docs = _docs(spark, sf_dir)
+    ents = {
+        "docs": docs.where("doc_id % 3 = 0"),
+        "ref": docs.where("doc_id % 3 != 0"),
+    }
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "word_lm",
+                "entity_name": "docs",
+                "new_entity_name": "scored",
+                "key_column": "doc_id",
+                "reference_name": "ref",
+                "model_entity": "wlm",
+                "min_count": 2,
+            }
+        ),
+    )
+    model_rows = ents["wlm"]
+    n_row = model_rows.where("ord = 0").selectExpr(
+        "'n' AS op", "'total' AS k", "CAST(cnt AS STRING) AS v"
+    )
+    w15 = Window.partitionBy("ord").orderBy(F.desc("cnt"), F.asc("gram"))
+    g = (
+        model_rows.where("ord > 0")
+        .withColumn("rk", F.row_number().over(w15))
+        .where("rk <= 15")
+        .selectExpr(
+            "'g' AS op",
+            "CONCAT_WS('|', CAST(ord AS STRING), gram) AS k",
+            "CONCAT_WS('|', CAST(cnt AS STRING), CAST(rk AS STRING)) AS v",
+        )
+    )
+    d = ents["scored"].selectExpr(
+        "'d' AS op",
+        "CAST(doc_id AS STRING) AS k",
+        "CONCAT_WS('|', CAST(n_tokens AS STRING), CAST(hits_0 AS STRING),"
+        " CAST(hits_1 AS STRING), CAST(hits_2 AS STRING),"
+        " CAST(hits_3 AS STRING)) AS v",
+    )
+    duck_oracle("wordlm", n_row.unionByName(g).unionByName(d), _WORDLM_SQL)
+
+
 # ------------------------------------------------------------- pair_recall
 def test_pair_recall_hand_case(spark):
     approx = spark.createDataFrame(
@@ -348,39 +480,181 @@ def test_pair_recall_groups_and_empty_sides(spark):
         pair_recall(approx.drop("id_b"), exact)
 
 
-def test_pair_recall_minhash_vs_exact_on_corpus(spark, sf_dir):
-    """The production measurement: MinHash-LSH banding recall against
-    EXACT n-gram Jaccard ground truth on real documents. MinHash
-    verifies candidates with exact Jaccard, so precision is exactly
-    1.0; banding loses only pairs that never collide, so recall is in
-    (0, 1]. The identity arm pins 1.0/1.0."""
+#: the perturbed-union corpus shared by every pair-recall oracle
+#: slice (appending ONE word keeps every original shingle)
+_PR_UDOCS = (
+    "(SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0 "
+    "UNION ALL SELECT doc_id + 1000000 AS doc_id, "
+    "text || ' spark' AS text FROM documents WHERE doc_id % 10 = 0)"
+)
+
+
+def _pair_recall_oracle() -> str:
+    """Composes the attested minhash CTE chain twice (4-band and
+    1-band configs, each scoped inside its own subquery-WITH so the
+    CTE names never clash) with the NAIVE exact-Jaccard twin, then the
+    recall arithmetic is plain set counting."""
+    mh4 = _minhash_pair_ctes(12, 4, 0.5).replace(
+        "FROM documents", f"FROM {_PR_UDOCS} u"
+    )
+    mh1 = _minhash_pair_ctes(12, 1, 0.5).replace(
+        "FROM documents", f"FROM {_PR_UDOCS} u"
+    )
+    r6 = "CAST(CAST(floor({x} * 1000000) AS BIGINT) AS VARCHAR)"
+    arm = (
+        "SELECT '{m}' AS op, 'pairs' AS k, "
+        "CAST(n_hits AS VARCHAR) || '|' || CAST(n_exact AS VARCHAR)"
+        " || '|' || CAST(n_approx AS VARCHAR) || '|' || "
+        + "CASE WHEN n_exact = 0 THEN '~' ELSE "
+        + r6.format(x="n_hits::DOUBLE / n_exact")
+        + " END || '|' || "
+        + "CASE WHEN n_approx = 0 THEN '~' ELSE "
+        + r6.format(x="n_hits::DOUBLE / n_approx")
+        + " END AS v FROM {src}"
+    )
+    return f"""
+        WITH mh4 AS (
+            SELECT id_a, id_b FROM (WITH {mh4} SELECT id_a, id_b FROM pairs)
+        ),
+        mh1 AS (
+            SELECT id_a, id_b FROM (WITH {mh1} SELECT id_a, id_b FROM pairs)
+        ),
+        utoked AS (
+            SELECT doc_id, {_DUCK_TOKS} AS toks FROM {_PR_UDOCS} u
+        ),
+        ush AS (
+            SELECT doc_id, {_duck_shingles()} AS shingles FROM utoked
+        ),
+        uposts AS (SELECT doc_id, unnest(shingles) AS s FROM ush),
+        ucand AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b
+            FROM uposts a JOIN uposts b
+              ON a.s = b.s AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+        ),
+        ex AS (
+            SELECT id_a, id_b FROM (
+                SELECT id_a, id_b,
+                       round(len(list_intersect(x.shingles, y.shingles))::DOUBLE
+                             / len(list_distinct(
+                                   list_concat(x.shingles, y.shingles))), 6)
+                           AS j
+                FROM ucand
+                JOIN ush x ON ucand.id_a = x.doc_id
+                JOIN ush y ON ucand.id_b = y.doc_id
+            ) WHERE j >= 0.5
+        ),
+        b4c AS (
+            SELECT (SELECT count(*) FROM mh4 m JOIN ex e
+                    ON m.id_a = e.id_a AND m.id_b = e.id_b) AS n_hits,
+                   (SELECT count(*) FROM ex) AS n_exact,
+                   (SELECT count(*) FROM mh4) AS n_approx
+        ),
+        b1c AS (
+            SELECT (SELECT count(*) FROM mh1 m JOIN ex e
+                    ON m.id_a = e.id_a AND m.id_b = e.id_b) AS n_hits,
+                   (SELECT count(*) FROM ex) AS n_exact,
+                   (SELECT count(*) FROM mh1) AS n_approx
+        ),
+        idc AS (
+            SELECT (SELECT count(*) FROM ex) AS n_hits,
+                   (SELECT count(*) FROM ex) AS n_exact,
+                   (SELECT count(*) FROM ex) AS n_approx
+        )
+        {arm.format(m="b4", src="b4c")}
+        UNION ALL
+        {arm.format(m="b1", src="b1c")}
+        UNION ALL
+        {arm.format(m="id", src="idc")}
+    """
+
+
+@pytest.mark.slow
+def test_pair_recall_minhash_vs_exact_on_corpus(spark, sf_dir, duck_oracle):
+    """The production measurement, declared as one pair_recall step
+    with group_columns and matched against DuckDB: MinHash-LSH recall
+    against EXACT n-gram Jaccard ground truth on real documents. Three
+    arms: 'b4' MinHash-LSH at the default 4 bands (3-row bands collide
+    easily — high recall), 'b1' the same 12 hashes as ONE 12-row band
+    (a pair must match all 12 minhashes — the strictness lever), 'id'
+    the exact set against itself (the 1.0/1.0 identity pin). MinHash
+    verifies candidates with exact Jaccard, so precision is exactly 1.0
+    on both approximate arms; banding loses only pairs that never
+    collide. Counts are exact longs; recall/precision hash as
+    floor(x*1e6) of single correctly-rounded divisions."""
     from data_validation_engine_spark.llmops import (
         minhash_pairs,
         ngram_jaccard_pairs,
     )
 
-    sl = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where("doc_id % 10 = 0")
-        .select("doc_id", "text")
+    sl = _docs(spark, sf_dir).where("doc_id % 10 = 0").select(
+        "doc_id", "text"
     )
     # perturbed-union device (the dedup_minhash row's construction):
     # appending one word keeps every original shingle, so each
     # (d, d+1000000) pair has Jaccard (w-2)/(w-1) >= 0.5 — guaranteed
     # non-vacuous ground truth at every scale factor
-    docs = sl.unionByName(
+    u = sl.unionByName(
         sl.selectExpr(
             "doc_id + 1000000 AS doc_id", "text || ' spark' AS text"
         )
     )
     n_guaranteed = sl.count()
-    exact = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
-    mh = minhash_pairs(docs, "doc_id", "text", threshold=0.5)
-    r = pair_recall(mh, exact).collect()[0]
+    # pair frames are corpus-bounded and tiny at these SFs; checkpoint
+    # once — the exact side is referenced six times across the arms
+    # (three exact tags + three hit joins), and without the cut each
+    # reference re-runs the whole shingle chain
+    ex = ngram_jaccard_pairs(
+        u, "doc_id", "text", threshold=0.5
+    ).localCheckpoint()
+    mh4 = minhash_pairs(
+        u, "doc_id", "text", threshold=0.5, bands=4
+    ).localCheckpoint()
+    mh1 = minhash_pairs(
+        u, "doc_id", "text", threshold=0.5, bands=1
+    ).localCheckpoint()
+    approx = (
+        mh4.selectExpr("'b4' AS method", "id_a", "id_b")
+        .unionByName(mh1.selectExpr("'b1' AS method", "id_a", "id_b"))
+        .unionByName(ex.selectExpr("'id' AS method", "id_a", "id_b"))
+    )
+    exact = (
+        ex.selectExpr("'b4' AS method", "id_a", "id_b")
+        .unionByName(ex.selectExpr("'b1' AS method", "id_a", "id_b"))
+        .unionByName(ex.selectExpr("'id' AS method", "id_a", "id_b"))
+    )
+    ents = {"approx": approx, "exact": exact}
+    StepEngine(spark).evaluate(
+        ents,
+        config=parse_step(
+            {
+                "operation": "pair_recall",
+                "entity_name": "approx",
+                "new_entity_name": "pr",
+                "target_name": "exact",
+                "group_columns": ["method"],
+            }
+        ),
+    )
+    arms = {r["method"]: r for r in ents["pr"].collect()}
+    r = arms["b4"]
     assert r["n_exact"] >= n_guaranteed, "construction-guaranteed pairs missing"
     assert r["precision"] == pytest.approx(1.0)  # exact-verified
     assert 0.0 < r["recall"] <= 1.0
     assert r["n_hits"] == r["n_approx"]
-    ident = pair_recall(exact, exact).collect()[0]
-    assert ident["recall"] == pytest.approx(1.0)
-    assert ident["precision"] == pytest.approx(1.0)
+    # a pair that matches all 12 minhashes matches every 3-row band
+    assert arms["b1"]["recall"] <= r["recall"]
+    assert arms["id"]["recall"] == pytest.approx(1.0)
+    assert arms["id"]["precision"] == pytest.approx(1.0)
+    r6 = (
+        "COALESCE(CAST(CAST(floor({x} * 1000000) AS BIGINT) AS STRING),"
+        " '~')"
+    )
+    frame = ents["pr"].selectExpr(
+        "method AS op",
+        "'pairs' AS k",
+        "CONCAT_WS('|', CAST(n_hits AS STRING), CAST(n_exact AS STRING),"
+        " CAST(n_approx AS STRING),"
+        f" {r6.format(x='recall')}, {r6.format(x='precision')}) AS v",
+    )
+    duck_oracle("pair_recall", frame, _pair_recall_oracle())

@@ -1,8 +1,9 @@
 """Dump ``.explain("formatted")`` for declared queries to files.
 
-Round-13 optimization evidence: writes ``plans/r13/<query>_<suffix>.txt``
-for every requested roster row (default: all 50), so plan-shape claims in
-OPTIMIZATION_r13.md are checkable without running Spark.
+Writes ``plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<suffix>.txt`` for every
+requested roster row (default: all 50), so a change's plan-shape claims
+are checkable without running Spark: dump ``before`` on the parent and
+``after`` on the change, then diff.
 
 Usage: python tools/explain_dump.py <suffix> [query ...]
   suffix   e.g. ``before`` or ``after``
@@ -29,18 +30,16 @@ def main() -> None:
     out_dir = Path(__file__).resolve().parent.parent / "plans" / round_dir
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dve-explain-dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = bench.local_session(
+        "dve-explain-dump",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.session.timeZone": "UTC",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
 

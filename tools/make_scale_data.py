@@ -1,27 +1,24 @@
-"""Generate a LARGER synthetic dataset from sf0.1 for scale spot-benches
-(r14, VERDICT r13 Next-round #6: produce measured scale evidence).
+"""Generate a LARGER synthetic dataset from sf0.1 for scale spot-benches.
 
 /root/testdata is read-only and tops out at sf0.1 (~17 MB), where every
-roster row is overhead-bound (the r13 scaling block measured core-ratios
-≈1). This tool writes a K-times-larger replica to an OUTPUT dir by
-unioning K deterministic key-shifted copies of each table:
+roster row is overhead-bound (core-count scaling measures ratios ≈1).
+This tool writes a K-times-larger replica to an OUTPUT dir by unioning K
+deterministic key-shifted copies of each table:
 
 - ids shift by copy_index * 10**9 per copy (disjoint key spaces, FK
   shifts applied consistently within a table family);
 - document text is salted with a copy token inserted every 2 words, so
   no 3-word shingle survives across copies and the near-dup cluster
   structure does not grow quadratically with K (each copy keeps its own
-  in-copy duplicate structure — the realistic shape; the first cut
-  salted every 4 words, which left 2 intact shingles per run and made
-  dedup_exact's candidate stage grow 13x at K=4 — a useful stress
-  data point, recorded in OPTIMIZATION_r14.md, but the spot bench
-  measures scaling of the intended workload shape);
+  in-copy duplicate structure — the realistic shape; salting every 4
+  words instead leaves 2 intact shingles per run and makes dedup_exact's
+  candidate stage grow 13x at K=4, which stresses a different workload
+  shape than the one the spot bench measures);
 - event timestamps shift by copy_index hours, extending the timeline.
 
-The output is an INPUT for side measurements only (plans/r14 scale
-spots) — bench.py still reads $SPARK_GRAFT_SF_DIR and the driver's
-contract is untouched. Nothing here caches or precomputes any query
-result.
+The output is an INPUT for side measurements only (scale spot runs) —
+bench.py still reads $SPARK_GRAFT_SF_DIR and the driver's contract is
+untouched. Nothing here caches or precomputes any query result.
 
 Usage: python tools/make_scale_data.py <out_dir> <K>
   e.g. python tools/make_scale_data.py /root/scale_data/sf0.4 4
@@ -32,6 +29,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
 
 def main() -> None:
     out_dir = Path(sys.argv[1])
@@ -39,17 +38,15 @@ def main() -> None:
     src = "/root/testdata/sf0.1"
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("make-scale-data")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = bench.local_session(
+        "make-scale-data",
+        {
+            "spark.sql.shuffle.partitions": "16",
+            "spark.sql.session.timeZone": "UTC",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     shift = 10**9
 

@@ -17,7 +17,7 @@ legitimately do differently from this replica):
                          pandas/pytz all follow it)
 --arrow-batch=N          spark.sql.execution.arrow.maxRecordsPerBatch
 --shuffle=N              spark.sql.shuffle.partitions
---canon=fetch|pandas     comparison-pipeline replica (round 9): ``fetch``
+--canon=fetch|pandas     comparison-pipeline replica: ``fetch``
                          (default) hashes fetchall() Python natives
                          through the %.12g float normaliser; ``pandas``
                          replicates the DRIVER's canonicalization layer —
@@ -33,9 +33,13 @@ legitimately do differently from this replica):
                          chunks), each under BOTH canonicalizations; any
                          red here is a latent driver red
 
-The matrix exists because rounds 6-7 had two rows red ONLY on the driver
-box: hashed surfaces must be environment-invariant by construction, and
-this is the harness that falsifies that locally.
+The matrix exists because two rows once went red ONLY on the driver box:
+hashed surfaces must be environment-invariant by construction, and this
+is the harness that falsifies that locally.
+
+``duck_views`` and ``check_row`` are the comparison itself; operator
+tests that prove a frame against DuckDB SQL outside the roster import
+them.
 """
 
 from __future__ import annotations
@@ -43,12 +47,16 @@ from __future__ import annotations
 import hashlib
 import sys
 from pathlib import Path
+from typing import TYPE_CHECKING, Callable
 
 import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import bench  # noqa: E402
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -58,8 +66,9 @@ TABLES = (
 # row -> columns attested to carry a non-string type (the FLOATS.md
 # inventory: ordered-fold doubles, exact-integer keys, booleans — each
 # individually driver-attested green). The lint fails any OTHER
-# non-string hashed column: the permanent gate against the r6-r8
-# engine→pandas dtype-coercion failure class (r9 verdict Next-round #3).
+# non-string hashed column: the permanent gate against the
+# engine→pandas dtype-coercion failure class (DuckDB HUGEINT → float64
+# '1.0' against Spark int64 '1').
 # Extending this list requires a FLOATS.md entry explaining why the
 # column is engine-exact.
 HASH_TYPE_ALLOWLIST: dict[str, frozenset[str]] = {
@@ -116,7 +125,7 @@ HASH_TYPE_ALLOWLIST: dict[str, frozenset[str]] = {
 
 def hash_discipline_violations(name: str, dtypes: list[tuple]) -> list[str]:
     """Columns of a hashed frame that are neither string nor on the
-    attested allowlist — each is a latent driver red of the r6-r8
+    attested allowlist — each is a latent driver red of the
     dtype-coercion class and fails the sweep."""
     allowed = HASH_TYPE_ALLOWLIST.get(name, frozenset())
     return [
@@ -211,14 +220,11 @@ def parse_args(argv: list[str]):
         "shuffle": "16",
         "matrix": False,
         "canon": "fetch",
-        "staged": False,
     }
     rest: list[str] = []
     for a in argv:
         if a == "--matrix":
             opts["matrix"] = True
-        elif a == "--staged":
-            opts["staged"] = True
         elif a.startswith("--session-tz="):
             opts["session_tz"] = a.split("=", 1)[1]
         elif a.startswith("--os-tz="):
@@ -235,7 +241,7 @@ def parse_args(argv: list[str]):
     return opts, sf_dir, set(rest[1:])
 
 
-def run_matrix(sf_dir: str, only: set[str], staged: bool = False) -> int:
+def run_matrix(sf_dir: str, only: set[str]) -> int:
     import os
     import subprocess
 
@@ -248,8 +254,6 @@ def run_matrix(sf_dir: str, only: set[str], staged: bool = False) -> int:
                 f"--arrow-batch={cfg['arrow_batch']}",
                 f"--canon={canon}",
             ]
-            if staged:
-                flags.append("--staged")
             env = dict(os.environ)
             env["TZ"] = cfg["os_tz"]
             print(f"=== matrix: TZ={cfg['os_tz']} {' '.join(flags)} ===",
@@ -263,10 +267,115 @@ def run_matrix(sf_dir: str, only: set[str], staged: bool = False) -> int:
     return 1 if failures else 0
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table under
+    ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if Path(path).exists():
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            )
+    return con
+
+
+def check_row(
+    name: str,
+    build: Callable[[], DataFrame],
+    sql: str | None,
+    con: duckdb.DuckDBPyConnection,
+    canon: str = "fetch",
+) -> tuple[int, str]:
+    """Compares the Spark frame ``build()`` returns with ``sql`` run on
+    ``con``: row count, column names and the order-insensitive value hash,
+    after the hash-discipline lint. Returns (failures, report), where the
+    report is the row's printed lines; a green row's last line reads
+    ``OK    <name>: <rows> rows hash=<hash>``."""
+    lines: list[str] = []
+    failures = 0
+    try:
+        sdf = build()
+        s_cols = sdf.columns
+        lint = hash_discipline_violations(name, sdf.dtypes)
+        if lint:
+            lines.append(f"LINT  {name}: non-string hashed columns not on "
+                         f"the FLOATS.md allowlist: {lint}")
+            failures += 1
+        if canon == "pandas":
+            s_rows = [
+                tuple(r) for r in sdf.toPandas().itertuples(index=False)
+            ]
+        else:
+            s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:  # noqa: BLE001
+        if "ENV_FINGERPRINT" in str(exc):
+            # the deliberate diagnostic row: raising IS its contract
+            return failures, f"probe {name}: {str(exc)[:400]}"
+        lines.append(f"FAIL  {name}: spark error: {exc}")
+        return failures + 1, "\n".join(lines)
+    if sql is None:
+        lines.append(
+            f"rows  {name}: {len(s_rows)} rows (no oracle — weak check)"
+        )
+        return failures, "\n".join(lines)
+    try:
+        rel = con.execute(sql)
+        d_cols = [c[0] for c in rel.description]
+        if canon == "pandas":
+            d_rows = [
+                tuple(r) for r in rel.df().itertuples(index=False)
+            ]
+        else:
+            d_rows = rel.fetchall()
+    except Exception as exc:  # noqa: BLE001
+        lines.append(f"FAIL  {name}: duckdb error: {exc}")
+        return failures + 1, "\n".join(lines)
+
+    problems = []
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
+    if sorted(c.lower() for c in s_cols) != sorted(c.lower() for c in d_cols):
+        problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
+    norm = normalise_pandas if canon == "pandas" else normalise
+    if not problems:
+        sh = value_hash([c.lower() for c in s_cols], s_rows, norm)
+        dh = value_hash([c.lower() for c in d_cols], d_rows, norm)
+        if sh != dh:
+            problems.append(f"valuehash spark={sh} duckdb={dh}")
+            # show a diff sample
+            s_set = {
+                "|".join(
+                    norm(r[i])
+                    for i in sorted(range(len(s_cols)), key=lambda i: s_cols[i].lower())
+                )
+                for r in s_rows
+            }
+            d_set = {
+                "|".join(
+                    norm(r[i])
+                    for i in sorted(range(len(d_cols)), key=lambda i: d_cols[i].lower())
+                )
+                for r in d_rows
+            }
+            only_s = list(s_set - d_set)[:3]
+            only_d = list(d_set - s_set)[:3]
+            if only_s:
+                problems.append(f"spark-only: {only_s}")
+            if only_d:
+                problems.append(f"duckdb-only: {only_d}")
+    if problems:
+        lines.append(f"FAIL  {name}: " + "; ".join(problems))
+        failures += 1
+    else:
+        lines.append(f"OK    {name}: {len(s_rows)} rows hash={sh}")
+    return failures, "\n".join(lines)
+
+
 def main() -> int:
     opts, sf_dir, only = parse_args(sys.argv[1:])
     if opts["matrix"]:
-        return run_matrix(sf_dir, only, staged=opts["staged"])
+        return run_matrix(sf_dir, only)
     if opts["os_tz"]:
         import os
         import time
@@ -285,104 +394,19 @@ def main() -> int:
     if opts["arrow_batch"]:
         conf["spark.sql.execution.arrow.maxRecordsPerBatch"] = opts["arrow_batch"]
     spark = bench.local_session("oracle-check", conf)
+    con = duck_views(sf_dir)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if Path(path).exists():
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-
-    if opts["staged"]:
-        # round-(N+1) candidate rows: pre-prove them green before they
-        # ever ride the driver's 50-row roster
-        queries = entry_mod.staged_queries()
-        oracles = entry_mod.staged_oracle_sql()
-    else:
-        queries = entry_mod.queries()
-        oracles = entry_mod.oracle_sql()
+    oracles = entry_mod.oracle_sql()
     failures = 0
-    for name, fn in queries.items():
+    for name, fn in entry_mod.queries().items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            lint = hash_discipline_violations(name, sdf.dtypes)
-            if lint:
-                print(f"LINT  {name}: non-string hashed columns not on "
-                      f"the FLOATS.md allowlist: {lint}")
-                failures += 1
-            if opts["canon"] == "pandas":
-                s_rows = [
-                    tuple(r) for r in sdf.toPandas().itertuples(index=False)
-                ]
-            else:
-                s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # noqa: BLE001
-            if "ENV_FINGERPRINT" in str(exc):
-                # the deliberate diagnostic row: raising IS its contract
-                print(f"probe {name}: {str(exc)[:400]}")
-                continue
-            print(f"FAIL  {name}: spark error: {exc}")
-            failures += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"rows  {name}: {len(s_rows)} rows (no oracle — weak check)")
-            continue
-        try:
-            rel = con.execute(sql)
-            d_cols = [c[0] for c in rel.description]
-            if opts["canon"] == "pandas":
-                d_rows = [
-                    tuple(r) for r in rel.df().itertuples(index=False)
-                ]
-            else:
-                d_rows = rel.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            failures += 1
-            continue
-
-        problems = []
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
-        if sorted(c.lower() for c in s_cols) != sorted(c.lower() for c in d_cols):
-            problems.append(f"schema spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        norm = normalise_pandas if opts["canon"] == "pandas" else normalise
-        if not problems:
-            sh = value_hash([c.lower() for c in s_cols], s_rows, norm)
-            dh = value_hash([c.lower() for c in d_cols], d_rows, norm)
-            if sh != dh:
-                problems.append(f"valuehash spark={sh} duckdb={dh}")
-                # show a diff sample
-                s_set = {
-                    "|".join(
-                        norm(r[i])
-                        for i in sorted(range(len(s_cols)), key=lambda i: s_cols[i].lower())
-                    )
-                    for r in s_rows
-                }
-                d_set = {
-                    "|".join(
-                        norm(r[i])
-                        for i in sorted(range(len(d_cols)), key=lambda i: d_cols[i].lower())
-                    )
-                    for r in d_rows
-                }
-                only_s = list(s_set - d_set)[:3]
-                only_d = list(d_set - s_set)[:3]
-                if only_s:
-                    problems.append(f"spark-only: {only_s}")
-                if only_d:
-                    problems.append(f"duckdb-only: {only_d}")
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            failures += 1
-        else:
-            print(f"OK    {name}: {len(s_rows)} rows hash={sh}")
+        n, report = check_row(
+            name, lambda: fn(spark, sf_dir), oracles.get(name), con,
+            opts["canon"],
+        )
+        print(report)
+        failures += n
     print("failures:", failures)
     return 1 if failures else 0
 

@@ -1,14 +1,13 @@
 """Physical-plan audit over the whole oracle surface -> PLANS.md.
 
-Round 12 (r11 verdict, Next-round #2): coverage is now 50/50 — no
-skipped rows. Rows whose construction runs bounded jobs (streaming
-drains, iterative driver loops, fixture/layout writes, bounded
-control-plane collects) are built anyway at the small audit sf and
-FLAGGED in the ``build`` column (``exec`` vs ``lazy``); the audited
-plan is the row's RETURNED frame — for a streaming row that is the
-post-drain batch plan (the per-batch streaming plan itself is pinned
-behaviourally in tests/test_streaming*.py, since Spark only
-materialises a streaming physical plan on a started query).
+Coverage is all 50 roster rows, none skipped. Rows whose construction
+runs bounded jobs (streaming drains, iterative driver loops,
+fixture/layout writes, bounded control-plane collects) are built anyway
+at the small audit sf and FLAGGED in the ``build`` column (``exec`` vs
+``lazy``); the audited plan is the row's RETURNED frame — for a
+streaming row that is the post-drain batch plan (the per-batch streaming
+plan itself is pinned behaviourally in tests/test_streaming*.py, since
+Spark only materialises a streaming physical plan on a started query).
 
 Columns from ``scale.plan_report``: exchange count, join strategies
 chosen by Catalyst, nested-loop/cartesian fallbacks (0 everywhere
@@ -28,15 +27,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 # rows whose query function RUNS bounded jobs during construction
 # (streams drained to parquet, iterative driver loops, fixture/layout
 # writes, control-plane collects) — flagged, not skipped
-# staged (next-round candidate) rows that run bounded jobs at build
-STAGED_EXECUTES_AT_BUILD = {
-    "r14_ann_recall": "exact/IVF search layout + codebook collects",
-    "r14_pq_entity": "pq_fit k-means collect",
-    "r14_pq_many": "codebook + probe-cell collects",
-    "r14_wordlm": "training token-total collect (1 scalar)",
-    "r14_pair_recall": "three pair-frame localCheckpoints",
-}
-
 EXECUTES_AT_BUILD = {
     "streaming_sync_messages": "stream drain",
     "streaming_dedup": "stream drain",
@@ -49,8 +39,8 @@ EXECUTES_AT_BUILD = {
     "connected_components": "iterative label-prop rounds",
     "step_dedup_fuzzy": "iterative CC inside the step",
     "ann_variants": "LSH layout write (first call)",
-    "text_corpus": "BPE train loop (dec arm) + WARC fixture build (r13)",
-    "semantic_dedup": "PQ codebook collect (enc/adc arms, r13)",
+    "text_corpus": "BPE train loop (dec arm) + WARC fixture build",
+    "semantic_dedup": "PQ codebook collect (enc/adc arms)",
     "pca_project": "moment collect (dim^2 driver fetch)",
     "chunk_artifacts": "shard/ORC/blob writes + stream drain",
     "substring_dedup": "CMS heavy-hitter collect",
@@ -69,18 +59,16 @@ def main() -> None:
         Path(__file__).resolve().parent.parent / "PLANS.md"
     )
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("dve-plan-dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = bench.local_session(
+        "dve-plan-dump",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.session.timeZone": "UTC",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
     from data_validation_engine_spark.scale import plan_report
@@ -89,9 +77,8 @@ def main() -> None:
         "# PLANS — physical-plan audit of the oracle surface",
         "",
         f"Generated by `tools/plan_dump.py` at `{sf_dir}`. Coverage is "
-        "the 50 roster rows PLUS every staged next-round candidate "
-        "(`staged` in the build column). Rows whose construction runs "
-        "bounded jobs are built at "
+        "the 50 roster rows. Rows whose construction runs bounded jobs "
+        "are built at "
         "this small sf and flagged in the `build` column; their audited "
         "plan is the returned frame (for streaming rows the post-drain "
         "batch plan — the per-batch streaming plan is pinned in "
@@ -107,20 +94,8 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|",
     ]
     failures = 0
-    rows = [
-        (name, fn, EXECUTES_AT_BUILD.get(name, "lazy"))
-        for name, fn in entry.queries().items()
-    ] + [
-        (
-            name,
-            fn,
-            "staged+" + STAGED_EXECUTES_AT_BUILD[name]
-            if name in STAGED_EXECUTES_AT_BUILD
-            else "staged",
-        )
-        for name, fn in entry.staged_queries().items()
-    ]
-    for name, fn, build in rows:
+    for name, fn in entry.queries().items():
+        build = EXECUTES_AT_BUILD.get(name, "lazy")
         try:
             rep = plan_report(fn(spark, sf_dir))
         except Exception as exc:  # pragma: no cover - diagnostic path
