@@ -49,8 +49,8 @@ def _load(spark: SparkSession, sf_dir: str, names: Iterable[str]) -> dict[str, D
     return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
-#: arms constructed at once by :func:`_parallel_arms` (OPTIMIZATION_r14.md
-#: has the sweep that chose it)
+#: arms constructed at once by :func:`_parallel_arms` (chosen by a
+#: concurrency sweep on the bench roster)
 _ARM_CONCURRENCY = 4
 
 
@@ -104,8 +104,7 @@ def _state_partitions(spark: SparkSession, n: int = 4):
     exchanges). Batch queries planned outside the ``with`` are
     unaffected; restore is in a finally.
 
-    r13 optimization: default 8 -> 4 — re-measured per drain on the
-    bench streams (tiny keyspaces: event types, user ids), 4 is 0.1-0.75s
+    Default 4: measured per drain on the bench streams (tiny keyspaces: event types, user ids), 4 is 0.1-0.75s
     faster per availableNow drain and results are partition-count-
     independent (exact stateful aggs). Production streams size n UP with
     the keyspace; this default is the bench-scale setting of the same
@@ -136,13 +135,11 @@ def _drain(sdf: DataFrame, path: str):
 # ---------------------------------------------------------------------------
 
 def q_add_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-wise projection steps in one row (round-9 tagged union, merged
-    from the former filter / distinct rows to free slots for the red-row
-    split): 'add' rows are ColumnAddition + SelectColumns (per-row revenue
+    """Row-wise projection steps in one row (tagged union): 'add' rows are ColumnAddition + SelectColumns (per-row revenue
     on lineitem, value pinned as exact 1e-4-cents integer STRING); 'filter'
     rows are ImmediateFilter survivors (quantity + date predicate pushed to
     the scan); 'distinct' rows are SelectColumns with distinct. All hashed
-    numerics render as STRING in both twins (round-9 representation-proof
+    numerics render as STRING in both twins (representation-proof
     discipline)."""
     ents = _load(spark, sf_dir, ["lineitem", "orders"])
     eng = _engine(spark)
@@ -227,8 +224,7 @@ def q_group_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation: TPC-H Q1-shaped pricing summary, with the pivot
     variant (fixed value list, no extra distinct job) joined on per
     linestatus — one driver row attests plain AND pivoted aggregation
-    (merged from the former group_by_pivot row). Round 8: the DECLARED
-    unpivot step melts the pivoted frame back to long form and the
+    The DECLARED unpivot step melts the pivoted frame back to long form and the
     melted value joins on as ``q_roundtrip`` — pivot∘unpivot = identity,
     attested inside the same row (the oracle pins q_roundtrip to the
     directly-aggregated value)."""
@@ -518,10 +514,9 @@ def q_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics — one user-keyed shuffle, JVM ``aggregate`` fold over the
     sorted event array, no UDF. The DuckDB twin is the closed-form
     min-cascade, so the hash proves the fold computes exactly the
-    documented SQL semantics. Hashed frame all-STRING (the r8 red-row
-    suspect was this surface's bare DuckDB sum() HUGEINT-promoting the
-    unioned column; with both twins rendering STRING there is no numeric
-    column left to promote)."""
+    documented SQL semantics. Hashed frame all-STRING (a bare DuckDB sum()
+    HUGEINT-promotes the unioned column; with both twins rendering STRING
+    there is no numeric column left to promote)."""
     from data_validation_engine_spark.steps import parse_step
 
     ents = {"events": _events_ts(spark, sf_dir)}
@@ -562,8 +557,7 @@ def q_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The three enrichment-join step kinds in one row (round-9 tagged
-    union, merged from the former inner_join / one_to_one_join rows):
+    """The three enrichment-join step kinds in one row (tagged union):
     'lj' rows are LeftJoin (theta) with last-wins new_columns overwrite;
     'ij' rows are InnerJoin with a compound theta condition; 'o2o' rows
     are OneToOneJoin (integrity-checked many-to-one lookup). All hashed
@@ -655,10 +649,9 @@ def q_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_flag_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ConfirmJoinHasMatch + OrphanIdentification + the AS-OF join + the
-    INTERVAL-overlap join, PLUS (round 9) SemiJoin/AntiJoin over the
+    INTERVAL-overlap join, PLUS SemiJoin/AntiJoin over the
     customer/orders graph, all normalised to (op, key, flag, detail) and
-    unioned through the engine — one driver row attests all six (merged
-    from the former has_match / identify_orphans / semi_anti_join rows). The asof branch
+    unioned through the engine — one driver row attests all six. The asof branch
     runs as a DECLARED step (AsofJoin config) joining every non-purchase
     event to its user's latest purchase at-or-before the event; detail
     encodes the matched row as integers (epoch micros + value cents), so
@@ -685,8 +678,7 @@ def q_flag_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("value").alias("v"))
     )
     eng = _engine(spark)
-    # round-9 merge: the former semi_anti_join row rides as 'semi'/'anti'
-    # arms (SemiJoin + AntiJoin over the customer/orders graph) — created
+    # 'semi'/'anti' arms (SemiJoin + AntiJoin over the customer/orders graph) — created
     # FIRST, before later steps overwrite the orders/customer entities
     eng.evaluate(
         ents,
@@ -875,14 +867,14 @@ def q_flag_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-combination surface in one row (tagged union): 'union' rows
     are the case-insensitive TableUnion with null-fill; 'upsert' rows
-    (round 7) are ANSI MERGE via the DECLARED merge_upsert step — every
+    are ANSI MERGE via the DECLARED merge_upsert step — every
     customer with orders takes an updated name/balance, a disjoint
     +10M keyspace inserts, everyone else passes through (the base table
     never shuffles under a broadcast-able delta — plan-asserted in
     tests/test_merge.py); 'cdc' rows are the DECLARED apply_changes step
     over an I/U/D ledger derived from orders, collapsed latest-per-key
     by o_orderkey (unique, so the collapse is engine-exact) with 'P'
-    status rows acting as deletes; 'scd2'/'scd2s' rows (round 8) build
+    status rows acting as deletes; 'scd2'/'scd2s' rows build
     the TYPE-2 history from the SAME ledger via the DECLARED scd2 step
     (merge.py scd2_from_ledger: one keyed lead-window, validity bounds
     in the integer sequence domain, deletes close intervals) plus its
@@ -1080,8 +1072,7 @@ def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_header(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HeaderJoin (1-row summary header attached to every nation row as a
-    broadcast struct) tag-unioned with the refdata path (round-9 merge of
-    the former refdata_join row): refdata region loaded through the
+    broadcast struct) tag-unioned with the refdata path: refdata region loaded through the
     EntityManager (filename-relative config, refdata_ prefix, lazy load)
     feeding an engine LeftJoin. Hashed numerics render as STRING."""
     from data_validation_engine_spark.entities import EntityManager, RefDataConfig
@@ -1153,14 +1144,12 @@ def q_join_header(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sync_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full sync-filter stage in one row (tagged union, merged from
-    the former sync_filter_messages row): 'row' rows are the survivors of
+    """The full sync-filter stage in one row (tagged union): 'row' rows are the survivors of
     validate-all-then-drop over orders; 'msg' rows are the message feed —
     one per (record, failed filter) with code and failure type. Both
     sides come from ONE apply_sync_filters invocation, proving the
     single-scan fused predicate evaluation emits consistent survivors and
-    messages. Round 9 adds 'notif' rows (merged from the former
-    notification row): the Notification step's distributed message
+    messages. 'notif' rows: the Notification step's distributed message
     emission with compiled {{field}} template, round-tripped through the
     JSONL error sink (sinks/errors.py) and read back under the declared
     message schema — the sink proven value-preserving, not just the
@@ -1234,10 +1223,9 @@ def q_entity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLUS the entity parquet sink: the final entity (with the internal
     record index attached) round-trips through ``write_entities`` and is
     read back — proving the overwrite write lands and the engine-internal
-    index column is dropped at the boundary (sinks/entities.py:18-38;
-    merged from the former sink_entities row).
+    index column is dropped at the boundary (sinks/entities.py:18-38).
 
-    'diff' rows (round 7): row-level snapshot diff via the DECLARED
+    'diff' rows: row-level snapshot diff via the DECLARED
     snapshot_diff step — today's nation (every 3rd name uppercased, keys
     0-1 dropped, a +100 keyspace added) diffed against yesterday's as a
     CDC ledger (merge.snapshot_diff, one full-outer join; the
@@ -1245,7 +1233,7 @@ def q_entity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface profile_diff's schema drift can't see: exactly WHICH rows
     changed.
 
-    'anon' rows (round 8): the DECLARED pseudonymize step — nation
+    'anon' rows: the DECLARED pseudonymize step — nation
     names replaced by keyed SHA-256 tokens (salt 'r8', 16 hex chars);
     the same (salt, value) tokenises identically in every entity, so
     referential joins survive while raw identifiers never leave the
@@ -1338,13 +1326,13 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL function library (incl. NHS mod-11 as a pure expression) PLUS
     the Python/pandas UDF escape hatch (functions/library.py:184-201): an
     Arrow-batched vectorised UDF and a row-at-a-time UDF registered and
-    applied in the same engine select — all against the pure-SQL oracle
-    (merged from the former python_udf row). 'udtf' rows (round 7): the
+    applied in the same engine select — all against the pure-SQL oracle.
+    'udtf' rows: the
     user-defined TABLE function escape hatch — a '#'-splitting UDTF
     LATERAL-joined against customer names, one row per part, whose twin
     is DuckDB unnest-with-ordinality; the set-returning surface the
     reference lacks entirely (its only generator is the XML reader's
-    internal explode). 'sqlq' rows (round 8): the raw-SQL escape hatch
+    internal explode). 'sqlq' rows: the raw-SQL escape hatch
     (DECLARED sql step — parameterized spark.sql, no temp views,
     multiple entities bound as {name} parameters): a correlated scalar
     subquery (per-customer open-order count) that Catalyst decorrelates
@@ -1494,8 +1482,7 @@ def q_contract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse; records failing any check are dropped (reference record
     rejection). The SAME contract is also applied to a zero-row
     stringified frame and unioned in — the empty path must yield the full
-    declared schema, zero rows, and zero messages (merged from the former
-    contract_empty_entity row)."""
+    declared schema, zero rows, and zero messages."""
     from data_validation_engine_spark.contract import apply_contract, parse_contract
 
     contract = parse_contract(_CONTRACT_DISCHEMA)
@@ -1509,7 +1496,7 @@ def q_contract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
         contract.entity("orders_sub"), empty
     )
     assert empty_messages.count() == 0
-    # odate renders as an ISO STRING in both twins (round 9): a DATE
+    # odate renders as an ISO STRING in both twins: a DATE
     # column crosses the engine→pandas layer as datetime.date on the
     # Spark side but datetime64[ns] ('... 00:00:00') on the DuckDB .df()
     # side — the exact representation-layer divergence --canon=pandas
@@ -1524,8 +1511,7 @@ def q_contract_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged 'base', unioned with the SAME dataset validated under
     per-field error-detail OVERRIDES (custom code / informational flag per
     reporting category, reference DataContractErrorDetail) tagged 'ovr' —
-    one driver row attests the default and the overridden compilation
-    (merged from the former contract_error_details row)."""
+    one driver row attests the default and the overridden compilation."""
     from data_validation_engine_spark.contract import apply_contract, parse_contract
 
     cols = (
@@ -1537,7 +1523,7 @@ def q_contract_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_informational",
         "CAST(reporting_field AS BIGINT) AS record_key",
     )
-    # OPTIMIZATION r14 (guide §1.2/§5): the base and ovr arms validate
+    # the base and ovr arms validate
     # the SAME stringified frame — materialise it once (localCheckpoint)
     # so the parquet scan + dirt projection run once instead of twice.
     # Both contracts still compile and evaluate independently (the
@@ -1567,8 +1553,7 @@ def q_contract_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
     _, ovr_messages = apply_contract(ovr.entity("orders_sub"), stringified)
-    # round-9 merge: the former contract_unique row rides as the 'uniq'
-    # part — cross-record uniqueness (windowed count per value; duplicate
+    # the 'uniq' part — cross-record uniqueness (windowed count per value; duplicate
     # key values get one DUPLICATE_VALUE message per copy). Literal
     # padding on the non-attested fields keeps the arm surface minimal.
     orders = _load(spark, sf_dir, ["orders"])["orders"]
@@ -1626,10 +1611,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ways: the direct library call and the DECLARATIVE dischema step
     (steps/configs.py ExactDedup -> engine.dedup_exact), inner-joined on
     the survivor id — the hash covers both paths, so the JSON-declarable
-    vocabulary is proven to compute identically (merged from the former
-    step_dedup_exact row).
+    vocabulary is proven to compute identically.
 
-    Round 6 adds the INCREMENTAL branches as a tagged union (op, doc_id,
+    The INCREMENTAL branches ride as a tagged union (op, doc_id,
     a, b) over the EVEN half of documents (bench-scope compensation like
     the minhash row's ngram slice — candidate volume is quadratic-ish in
     corpus size and the proof needs semantics, not volume): the corpus is
@@ -1730,7 +1714,7 @@ def q_step_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph in SQL, components by recursive reachability, survivors =
     documents whose id IS its component.
 
-    'rep:' rows (round 8): the DECLARED cluster_representatives step —
+    'rep:' rows: the DECLARED cluster_representatives step —
     the survivorship policy generalised from min-id to best-score
     (highest n_chars, id-asc tiebreak) over a deterministic clustering;
     the rank-1 filter sits on the window so WindowGroupLimit keeps a
@@ -1740,12 +1724,12 @@ def q_step_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     entities = {"documents": _docs(spark, sf_dir)}
     eng = _engine(spark)
-    # OPTIMIZATION r13 (guide §2.4): the step's exact-components rounds
+    # the step's exact-components rounds
     # iterate over the PAIR GRAPH during evaluate — pin their per-round
-    # shuffles (the connected_components convention; 3.5s -> 3.3s med
-    # at 8, survivors identical). r14: 8 -> 4 with the CC row (label-prop
-    # rounds measured 0.94 -> 0.66s over the same-sized graph); the knob
-    # scales UP with the edge count at 100 TB.
+    # shuffles (the connected_components convention; 4 partitions, as the
+    # CC row measured label-prop rounds 0.94 -> 0.66s vs 8 over the
+    # same-sized graph, survivors identical); the knob scales UP with the
+    # edge count at 100 TB.
     with _state_partitions(spark, 4):
         eng.evaluate(
             entities,
@@ -1829,7 +1813,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ng = ngram_jaccard_pairs(
         ng_in, "doc_id", "text", threshold=0.5
     ).withColumn("method", F.lit("ngram"))
-    # third modality (round 6): ASYMMETRIC containment over the same
+    # third modality: ASYMMETRIC containment over the same
     # slice — each original is fully contained in its perturbed superset
     # (appending a word keeps every shingle), so (d, d+1000000) pairs at
     # containment 1.0 are guaranteed; the oracle twin is the naive
@@ -1858,8 +1842,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash surface in one row (tagged union, merged from the
-    former dedup_simhash_pairs row): 'sig' rows carry the 16-bit
+    """The SimHash surface in one row (tagged union): 'sig' rows carry the 16-bit
     signature per document (md5-derived bit votes, explode+aggregate
     scale path) over the FULL corpus; 'pair' rows carry the 32-bit
     banded near-dup pairs (pigeonhole-exact candidates, skew-bounded
@@ -1886,13 +1869,12 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-row text-analysis suite in one row: quality statistics +
     gate, heuristic language ID (CJK charset check + stopword vote), the
     canonical md5 fingerprint + min-k winnowed shingle sketch, the
-    deterministic md5-bucket train/val/test split, and (round 6) the
+    deterministic md5-bucket train/val/test split, and the
     deterministic WEIGHTED Bernoulli keep-decision (probability
     min(1, n_chars/2000), decided by the same bucket — quality-weighted
     downsampling) — five zero-shuffle projections inner-joined on doc_id
-    (merged from the former lang_id and text_fingerprint rows; the
-    split/weighted twins recompute the identical bucket arithmetic in
-    DuckDB, pinning engine-independence). Round 8 joins on 'ecdf': the
+    (the split/weighted twins recompute the identical bucket arithmetic in
+    DuckDB, pinning engine-independence). 'ecdf' joins on: the
     DECLARED ecdf_normalize step rank-calibrates n_chars within each
     doc_id%3 source label — the cross-source score-calibration pass —
     via the distinct-value histogram (no total sort of the rows; exact
@@ -1941,8 +1923,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     ecdf = ents["calibrated"].select("doc_id", "src", "ecdf")
-    # round-9 merge: the former text_hygiene row rides as extra per-doc
-    # columns — Gopher-style repetition signals (top-token fraction via
+    # extra per-doc columns — Gopher-style repetition signals (top-token fraction via
     # distributed mode, duplicated bigram/trigram fractions) + the PII
     # scrub over PLANTED PII (email + IPv4 + card number concatenated per
     # doc from doc_id — deterministic in both engines — proving every
@@ -1983,7 +1964,7 @@ def q_tfidf_top1(
     the exact rational the tfidf float derives from is pinned without
     hashing any libm-dependent ln (llmops/text.py tfidf_top_terms).
     ``tf`` lets :func:`q_corpus_terms` share one term_frequencies pass
-    across the tfidf/vocab/enc/post arms (r14 optimization)."""
+    across the tfidf/vocab/enc/post arms."""
     from data_validation_engine_spark.llmops import tfidf_top_terms
 
     docs = _docs(spark, sf_dir)
@@ -2003,7 +1984,7 @@ def q_vocab_build(
     min_count=3 floor) — llmops/text.py build_vocab; one term-keyed
     aggregation. All-STRING hashed frame. ``vocab`` lets
     :func:`q_corpus_terms` share one persisted vocabulary with the
-    'enc' arm (r13 optimization)."""
+    'enc' arm."""
     from data_validation_engine_spark.llmops import build_vocab
 
     docs = _docs(spark, sf_dir)
@@ -2062,7 +2043,7 @@ def q_postings(
     ``docid:tf`` posting list — the term→documents map a retrieval or
     decontamination pass probes, order-exact under any partitioning.
     All-STRING hashed frame. ``tf`` shares one term_frequencies pass
-    with the sibling corpus-term arms (r14 optimization)."""
+    with the sibling corpus-term arms."""
     from data_validation_engine_spark.llmops.text import build_postings
 
     docs = _docs(spark, sf_dir)
@@ -2116,15 +2097,15 @@ def q_corpus_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Frame is (op, k, v), every value a string."""
     from data_validation_engine_spark.llmops.bpe import bpe_decode, bpe_encode, bpe_train
 
-    # OPTIMIZATION r13 (guide §1.2): the 'vocab' and 'enc' arms both
+    # the 'vocab' and 'enc' arms both
     # need the SAME min_count=3 vocabulary — build it once (persisted;
     # it seeds the encode join too) instead of running the term
     # aggregation twice.
-    # OPTIMIZATION r14 (guide §1.2): the tfidf/vocab/post arms each
-    # started from the identical tokenize → explode → (doc, term) count;
-    # ONE persisted term_frequencies frame now feeds all three (and the
+    # the tfidf/vocab/post arms each
+    # start from the identical tokenize → explode → (doc, term) count;
+    # ONE persisted term_frequencies frame feeds all three (and the
     # shared vocabulary derives from it too), so the row runs one corpus
-    # tokenization pass where it ran three, and vocab's two-phase
+    # tokenization pass instead of three, and vocab's two-phase
     # countDistinct collapses to count(1) over the tf rows.
     from data_validation_engine_spark.llmops import build_vocab
     from data_validation_engine_spark.llmops.text import term_frequencies
@@ -2160,7 +2141,7 @@ def q_corpus_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whatever merges were learned, so the round-trip attests the path
     # at any K (production K rides the join path whose plan size is
     # K-independent — the point of word_table=)
-    # OPTIMIZATION r13 (guide §2.4): the merge loop's 12 rounds run
+    # the merge loop's 12 rounds run
     # over the vocabulary-bounded word table — loop_partitions sizes
     # the per-round jobs to IT (2 tasks instead of 32), and
     # checkpoint_interval=12 drops every mid-loop re-materialisation
@@ -2284,7 +2265,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bucket-self-join similarity surface in one row (tagged union):
     'pair' rows are the embedding-cosine near-dup pairs (LSH-bucket
     self-join + exact cosine verify, no all-pairs cross join); 'knn' rows
-    are the round-6 k-NN JOIN (top-3 same-bucket neighbours for EVERY
+    are the k-NN JOIN (top-3 same-bucket neighbours for EVERY
     row, both directions of each candidate pair, rounded-cosine +
     id-asc window cutoff)."""
     from data_validation_engine_spark.llmops import (
@@ -2333,10 +2314,9 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds) and large-star/small-star (O(log² n) rounds, the deep-chain
     scale path) — inner-joined on the node id. The oracle recomputes the
     pair graph in SQL and resolves components with a recursive CTE, so the
-    hash proves both algorithms equal AND correct on the same graph
-    (merged from the former connected_components_star row). The pair
+    hash proves both algorithms equal AND correct on the same graph. The pair
     frame is materialised once so the signature pipeline doesn't run
-    per-algorithm. 'tri' rows (round 7): exact per-node triangle counts
+    per-algorithm. 'tri' rows: exact per-node triangle counts
     of the SAME pair graph via the DECLARED triangle_count step
     (degree-oriented wedge join — cluster-density signal separating
     near-dup cliques from borderline chains)."""
@@ -2357,14 +2337,14 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round is pure task-scheduling overhead (measured ~40% of the row).
     # Same decision as the streaming state stores; at 100 TB the same
     # knob goes UP with the edge count instead.
-    # OPTIMIZATION r13 (guide §2.6): both algorithms iterate rounds of
+    # both algorithms iterate rounds of
     # tiny jobs over the SAME checkpointed pair graph (label-prop
     # materialises per round, star per large/small step) — serially,
     # each round's scheduling tail idles the box. Overlapping the two
     # iteration chains in threads back-fills one algorithm's tail with
     # the other's rounds; values are untouched (each is a deterministic
     # function of `pairs`, and the partition pin covers both).
-    # r14: rounds pinned 8 -> 4 — re-measured per algorithm over the
+    # Rounds pinned to 4 partitions — measured per algorithm over the
     # checkpointed graph (label-prop 0.94 -> 0.66s, star 1.33 -> 1.21s
     # min of 3); the pair graph is a few thousand edges, so 4 round
     # partitions still splits it well past skew while halving the
@@ -2390,7 +2370,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'cc' AS op", "id", "component", "component_star",
         "CAST(NULL AS DOUBLE) AS x",
     )
-    # 'pr' rows (round 6): deterministic fixed-iteration PageRank over the
+    # 'pr' rows: deterministic fixed-iteration PageRank over the
     # supplier->part fulfilment graph (high-quantity lineitems; partkeys
     # offset by 1e9 so the two key spaces stay disjoint at every SF).
     # Every per-target float sum is a segmented two-level ORDERED fold
@@ -2428,7 +2408,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The data-profiling family in one row (round 6, tagged union), every
+    """The data-profiling family in one row (tagged union), every
     branch driven as a DECLARED step: 'kmv' rows are the deterministic
     K-Minimum-Values distinct sketch of customers per order priority
     (k=128, 60-bit md5 hash space — saturated, so the estimator path is
@@ -2438,10 +2418,10 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stringified min-max per column — the pre-contract data-quality
     surface); 'quant' rows are exact per-group quantiles
     (percentile_cont type-7) of lineitem quantity by return flag,
-    unpivoted one row per (group, prob); 'squant' rows (round 7) are the
+    unpivoted one row per (group, prob); 'squant' rows are the
     APPROXIMATE quantiles from the deterministic min-256 hash sample
     (sampled_quantiles step) — the mergeable 100 TB path, engine-exact
-    because the oracle recomputes the identical sample. Round 8 adds
+    because the oracle recomputes the identical sample. Then
     'kmvset' (KMV set algebra), 'wins' (winsorize), 'imp' (impute),
     'chi2' (per-cell chi-square drift between two snapshot halves) and
     'reg' (per-group OLS from exact DECIMAL sufficient statistics) —
@@ -2523,7 +2503,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(NULL AS STRING) AS s1",
         "CAST(NULL AS STRING) AS s2",
     )
-    # 'hh' rows (round 6): exact heavy hitters — top-3 order priorities
+    # 'hh' rows: exact heavy hitters — top-3 order priorities
     # per order status via the DECLARED frequent_items step
     eng.evaluate(
         ents,
@@ -2547,7 +2527,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value AS s1",
         "CAST(NULL AS STRING) AS s2",
     )
-    # 'drift' rows (round 6): schema/stat drift via the DECLARED
+    # 'drift' rows: schema/stat drift via the DECLARED
     # profile_diff step — "yesterday" is (c_custkey, c_name),
     # "today" drops c_name, adds c_mktsegment, and nulls every 5th
     # custkey, so all three statuses and a null-rate delta are exercised
@@ -2577,7 +2557,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status AS s1",
         "CAST(l_null AS STRING) || ':' || CAST(r_null AS STRING) AS s2",
     )
-    # 'bin' rows (round 6): equi-depth quartile binning of order value
+    # 'bin' rows: equi-depth quartile binning of order value
     # per status (DECLARED quantile_buckets step), aggregated to
     # (count, min, max) per bucket — populations and boundaries pin the
     # ntile assignment without shipping per-row output
@@ -2612,7 +2592,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(NULL AS STRING) AS s2",
         )
     )
-    # 'outlier' rows (round 6): Tukey IQR flags on lineitem price per
+    # 'outlier' rows: Tukey IQR flags on lineitem price per
     # return flag (DECLARED outlier_flags step), reduced to counts
     eng.evaluate(
         ents,
@@ -2643,7 +2623,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(NULL AS STRING) AS s2",
         )
     )
-    # 'squant' rows (round 7): approximate per-group quantiles from the
+    # 'squant' rows: approximate per-group quantiles from the
     # deterministic min-256 hash SAMPLE (DECLARED sampled_quantiles step)
     # — the 100 TB path where exact percentile's whole-group buffer is
     # the trap; the oracle recomputes the identical sample, so even the
@@ -2688,7 +2668,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(NULL AS STRING) AS s1",
         "CAST(NULL AS STRING) AS s2",
     )
-    # 'kmvset' rows (round 8): KMV SET ALGEBRA through the DECLARED
+    # 'kmvset' rows: KMV SET ALGEBRA through the DECLARED
     # kmv_set step — union/intersection/Jaccard of the open-order vs
     # finished-order customer sets per priority, estimated from the two
     # O(k) sketches alone (llmops/sketch.py kmv_set_estimates, Beyer et
@@ -2726,7 +2706,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(NULL AS STRING) AS s1",
         "CAST(NULL AS STRING) AS s2",
     )
-    # 'wins' rows (round 8): DECLARED winsorize of integer price cents
+    # 'wins' rows: DECLARED winsorize of integer price cents
     # per return flag to the exact [p5, p95] interpolated bounds —
     # hashed surface = clip counts + the two deterministic bounds (the
     # clipped SUM would be a float-order trap; counts and bounds pin the
@@ -2755,8 +2735,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         ),
     )
-    # the hashed bounds come from the quantiles DIRECTLY (round-9 fix,
-    # ADVICE r8): reconstructing lo/hi from rows that actually clipped
+    # the hashed bounds come from the quantiles DIRECTLY: reconstructing lo/hi from rows that actually clipped
     # (max/min over F.when) yields NULL whenever a group clips on only
     # one side — a data-dependent red waiting on any corpus where a
     # p5/p95 bound sits below/above all values. The clip COUNTS stay on
@@ -2788,11 +2767,11 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(NULL AS STRING) AS s2",
         )
     )
-    # 'imp' rows (round 8): DECLARED impute step — synthetic NULLs
+    # 'imp' rows: DECLARED impute step — synthetic NULLs
     # (orderkey mod 13 / mod 17) filled with the cohort mean / exact
     # median per return flag; hashed surface = imputed-row counts + the
     # fill values themselves (mean = exact-integer sum / count, one
-    # division; median = round-6 percentile — both engine-exact)
+    # division; median = exact percentile — both engine-exact)
     eng.evaluate(
         ents,
         config=SelectColumns(
@@ -2855,7 +2834,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(NULL AS STRING) AS s2",
         )
     )
-    # 'chi2' rows (round 8): DECLARED chi2_drift step — per-value
+    # 'chi2' rows: DECLARED chi2_drift step — per-value
     # chi-square contributions between the even- and odd-orderkey halves
     # of orders (a deterministic "two snapshots" split). Cells are
     # hashed, not the summed statistic, so there is no
@@ -2884,7 +2863,7 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(NULL AS STRING) AS s1",
         "CAST(NULL AS STRING) AS s2",
     )
-    # 'reg' rows (round 8): DECLARED grouped_regression step — per-flag
+    # 'reg' rows: DECLARED grouped_regression step — per-flag
     # OLS of extendedprice on quantity from exact DECIMAL(38,0)
     # sufficient statistics (integer-cents products); the slope row also
     # pins two of the exact sums as strings, so the hash attests both
@@ -2940,15 +2919,15 @@ def q_data_profiling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text retrieval + record linkage in one row (round 8 revision,
-    tagged union), both branches DECLARED steps: 'bm25' rows pin the
+    """Text retrieval + record linkage in one row (tagged union), both
+    branches DECLARED steps: 'bm25' rows pin the
     Okapi BM25 DETAIL surface for every document matching the fixed
     query — per-doc md5 over the term-sorted (term, tf, df, dl) tuples
     plus corpus (N, sumdl), i.e. the exact rational inputs every BM25
     weight derives from. The float score itself is deliberately OUT of
     the hashed frame: its idf carries `ln`, which is libm-dependent
     (1-ulp JVM/DuckDB divergence flips a rounded decimal — the same
-    hazard that kept tfidf_topterms red in r6-r7); the fold-to-score
+    hazard that would make a rounded tfidf score red); the fold-to-score
     path is pytest-pinned instead. 'fuzzy'
     rows are the blocked fuzzy-match pairs over part names unioned with a
     one-char-truncated perturbed copy (offset ids — every original pairs
@@ -3055,8 +3034,7 @@ def q_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'' AS sig",
         )
     )
-    # round-9 merge: the former decontaminate row rides as 'decon' arms —
-    # benchmark decontamination (corpus docs sharing any word 5-gram with
+    # 'decon' arms — benchmark decontamination (corpus docs sharing any word 5-gram with
     # the doc_id % 97 = 0 benchmark slice; the benchmark's distinct n-gram
     # set is broadcast, the corpus never shuffles for the match).
     from data_validation_engine_spark.llmops import decontaminate
@@ -3128,7 +3106,7 @@ def q_step_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: LSH-partitioned layout path per sf_dir (written once per process).
 #: All layouts live under ONE per-process root registered for atexit
 #: removal, so long-lived bench/driver processes don't leak a
-#: partitioned-parquet directory per sf_dir in /tmp (ADVICE r6).
+#: partitioned-parquet directory per sf_dir in /tmp.
 _LSH_LAYOUTS: dict[str, str] = {}
 _LSH_LAYOUT_ROOT: list[str] = []
 
@@ -3146,9 +3124,8 @@ def _lsh_layout_dir() -> str:
 
 
 def q_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The similarity library paths in one row (tagged union, merged from
-    the former similarity_topk, similarity_ivf, and multiprobe_ann rows —
-    the step path keeps its own hash-identical proof in
+    """The similarity library paths in one row (tagged union — the step
+    path keeps its own hash-identical proof in
     step_similarity_ann): 'exact' rows are the brute-force cosine top-20
     (broadcast query, TakeOrderedAndProject — the correctness baseline);
     'ivf' rows are the deterministic 16-cell coarse quantizer with
@@ -3179,7 +3156,7 @@ def q_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     mp = multiprobe_ann_topk(embs, q, 10).selectExpr(
         "'multiprobe' AS method", "vec_id", "cosine", *pad
     )
-    # 'ann' rows (merged from the former similarity_ann row): the flat
+    # 'ann' rows: the flat
     # hyperplane-LSH probe joined to the LSH-PARTITIONED layout's probe
     # (embeddings persisted PARTITIONED BY bucket, probe pushed as a
     # static partition filter reading ONE directory — plan-asserted in
@@ -3204,7 +3181,7 @@ def q_ann_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed vector aggregation (round 6): per-label
+    """Deterministic distributed vector aggregation: per-label
     centroids via the two-level ORDERED segment fold — the engine's only
     cross-row float aggregation, partitioning-independent by construction
     where a naive groupBy-sum is shuffle-order-dependent — plus the
@@ -3213,7 +3190,7 @@ def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     union: 'centroid' rows carry (label, n, fold-checksum, first
     component) — the checksum pins all 64 components, and the assignment
     cosines pin them again through the scoring; 'assign' rows carry
-    (vec_id, assigned_label, cosine); 'kmeans' rows (round 6) carry the
+    (vec_id, assigned_label, cosine); 'kmeans' rows carry the
     final cells of a 2-iteration deterministic distributed k-means
     (squared-L2 argmin assignment + ordered-fold update — an ITERATIVE
     algorithm with an exact unrolled-SQL oracle, which a float
@@ -3260,7 +3237,7 @@ def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate(centroid, 0.0D, (acc, v) -> acc + v) AS x",
         "centroid[0] AS y",
     )
-    # 'quant' rows (round 7): symmetric per-vector int8 quantization via
+    # 'quant' rows: symmetric per-vector int8 quantization via
     # the DECLARED quantize_vectors step — the 4x storage form for 100 TB
     # embedding tables; zero-shuffle projection, and the integer qvec
     # checksum + rounded scale replay exactly in the oracle
@@ -3286,7 +3263,7 @@ def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scale AS x",
         "CAST(qvec[0] AS DOUBLE) AS y",
     )
-    # 'proj' rows (round 7): JL random projection 64 -> 8 through the
+    # 'proj' rows: JL random projection 64 -> 8 through the
     # DECLARED project_vectors step (deterministic md5 Rademacher matrix
     # shipped as plan literals — zero-shuffle map-side, the preprocessing
     # that shrinks 100 TB ANN/IVF indexes 8x); the raw ordered-fold
@@ -3318,14 +3295,14 @@ def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sequence_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-6 sequence preparation in one row (tagged union): 'chunk'
+    """Sequence preparation in one row (tagged union): 'chunk'
     rows split every document into 32-token windows with an 8-token
     overlap (per-row + posexplode, zero shuffle); 'pack' rows assign each
     document to a fixed-512-token pack under the concat-and-split rule,
     sharded 8 ways by md5 bucket so shards pack independently (one
     narrow shuffle, integer arithmetic only — bit-exact cross-engine).
 
-    'mix' rows (round 7): deterministic corpus mixing through the
+    'mix' rows: deterministic corpus mixing through the
     DECLARED corpus_mix step — documents labelled web/code/books by
     doc_id mod 3 are downsampled to 50/30/20 shares of a fixed 200k-char
     budget (md5 keep-decisions, +,*,/ only, so the exact kept SET
@@ -3379,7 +3356,7 @@ def q_sequence_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'mix' AS op", "doc_id", "CAST(NULL AS INT) AS idx",
         "CAST(n_chars AS BIGINT) AS n", "src AS payload",
     )
-    # 'quota' rows (round 8): EXACT-size per-stratum sampling through the
+    # 'quota' rows: EXACT-size per-stratum sampling through the
     # DECLARED exact_quota_sample step — exactly 25 docs per source label
     # ranked by md5(doc_id) with key tiebreak (llmops/split.py;
     # WindowGroupLimit keeps a running top-25 per partition below the
@@ -3402,7 +3379,7 @@ def q_sequence_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'quota' AS op", "doc_id", "CAST(NULL AS INT) AS idx",
         "CAST(n_chars AS BIGINT) AS n", "src AS payload",
     )
-    # 'buck' rows (round 8): DECLARED bucket_by_length step — docs land
+    # 'buck' rows: DECLARED bucket_by_length step — docs land
     # in token-length buckets (≤16, ≤48, +inf), shard 4 ways inside the
     # bucket (the hot-bucket guard), and batch 4-at-a-time by id; the
     # hashed surface pins batch assignment AND per-row padding waste
@@ -3438,8 +3415,7 @@ def q_sequence_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_source_xml_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The structured-text readers + the record indexer in one row (tagged
-    union; round 9 merges the former source_csv and record_index rows in):
-    'json' rows prove the JSONL round-trip with explicit stringified
+    union): 'json' rows prove the JSONL round-trip with explicit stringified
     schema over region; 'xml' rows prove the XML round-trip (nation
     rendered to XML, read back via the engine's XML reader with rowTag
     records); 'csv' rows prove the CSV round-trip THROUGH the file-handling
@@ -3554,18 +3530,14 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (payload bytes + content hash) inner-joined with the
     Arrow-batched decode plumbing (mapInPandas + the deterministic fake
     decoder; the ``features array<double>`` projected to scalar DOUBLE
-    columns for the oracle canonicalizer) — merged from the former
-    multimodal_decode row.
+    columns for the oracle canonicalizer).
 
-    Perf adjudication (round 6, re-measured round 8 for the r7 floor
-    question): in isolation at sf0.1 on local[32] this row runs
-    0.89-1.17s warm and 8.6s on the very first run of a fresh session
-    (Python worker spin-up + first Arrow exchange — one-time session
-    cost, not per-query). Code path unchanged since 49c8744; the r7
-    1.74s floor = partially-warm workers + the uniform ~16% box drift
-    the judge measured on unchanged single-stage scans. Warm floor is
-    back under the 1.0s target; nothing to fix in the plan (the Arrow
-    hop ships exactly the projected binary column, PLANS.md)."""
+    Perf: in isolation at sf0.1 on local[32] this row runs 0.89-1.17s
+    warm and 8.6s on the very first run of a fresh session (Python
+    worker spin-up + first Arrow exchange — one-time session cost, not
+    per-query). A slower in-roster time is partially-warm workers plus
+    box drift, not the plan: the Arrow hop ships exactly the projected
+    binary column (PLANS.md)."""
     from data_validation_engine_spark.llmops.multimodal import (
         attach_binary,
         binary_meta,
@@ -3666,7 +3638,7 @@ def q_streaming_sync_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/stream message parity a hash-checked property instead of a
     claim: the oracle is plain SQL over the same events table.
 
-    'sjoin' rows (round 7): the STREAM-STREAM event-time interval join
+    'sjoin' rows: the STREAM-STREAM event-time interval join
     (streaming/joins.py) — every purchase joined to the same user's
     clicks in the preceding 6 hours (the attribution shape), both sides
     live streams with watermarks + the range condition that lets Spark
@@ -3778,7 +3750,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same table. The watermark horizon covers the whole synthetic range,
     so no key is dropped for lateness.
 
-    'scdc' rows (round 7): a CDC ledger derived from orders ('P' status
+    'scdc' rows: a CDC ledger derived from orders ('P' status
     = delete, o_orderkey = sequence) is STREAMED through
     ``streaming_apply_changes`` (foreachBatch + the declared-semantics
     batch apply_changes, write-staging-then-swap) into a parquet table
@@ -3845,7 +3817,7 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is a plain filtered GROUP BY. Window starts are returned as
     formatted strings so the comparison is engine-neutral.
 
-    'kmv' rows (round 6): the SAME drain discipline for the third custom
+    'kmv' rows: the SAME drain discipline for the third custom
     stateful operator — daily windowed APPROXIMATE distinct users via the
     mergeable KMV sketch (O(k) state per window where exact distinct is
     the canonical unbounded-state trap); the DuckDB twin recomputes the
@@ -3885,7 +3857,7 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch seconds, not date_format: the window BUCKETING is epoch-µs
     # aligned (tz-free) but formatting a timestamp renders in the session
     # zone — integer window starts keep the hashed surface
-    # environment-invariant (matrix-harness-caught, round 8)
+    # environment-invariant (caught by the adverse-environment matrix)
     counts = spark.read.parquet(f"{out}/data").selectExpr(
         "'count' AS op",
         "CAST(unix_seconds(window.start) AS STRING) AS win_start",
@@ -3906,10 +3878,9 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user batch sessionization (30-min gap rule): the gaps-and-islands
     rollup — one user-keyed window shuffle, integer-µs arithmetic
-    (streaming/sessions.py session_stats). Rounds 6-8 carried batch and
-    stream parity as ONE red driver row; each side now rides its own row
-    (round-9 localization) and every hashed numeric renders as STRING in
-    both twins."""
+    (streaming/sessions.py session_stats). Batch and stream each ride
+    their own arm, so a divergence names its side, and every hashed
+    numeric renders as STRING in both twins."""
     from data_validation_engine_spark.streaming import session_stats
 
     events = _events_ts(spark, sf_dir)
@@ -3931,8 +3902,7 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs — drained under availableNow), rolled up per (user, session) and
     hashed against the identical gaps-and-islands SQL oracle: the hash
     proves batch/stream session parity against the oracle instead of
-    claiming it. All-STRING hashed frame (round-9 split of the 3-rounds-red
-    merged sessionize row)."""
+    claiming it. All-STRING hashed frame."""
     import tempfile
 
     from data_validation_engine_spark.streaming import streaming_sessionize
@@ -3967,18 +3937,11 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (q_env_probe retired round 10: the r8-ordered diagnostic did its job —
-#  the driver box fingerprint is recorded verbatim in VERDICT r9: Spark
-#  4.1.2, DuckDB 1.0.0, pandas 2.2.2, numpy 1.26.4, Python 3.11.7, ANSI
-#  on, UTC everywhere — and the slot is reclaimed for attestation.)
-
-
 def q_report_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-shaped report aggregates sheet computed distributed
     (sinks/report.py:59-75) over the contract validation feed — the sheet
-    the Excel/CSV report writes, proven against a SQL GROUP BY. Round 9
-    unions in the entity PRESENCE checks (merged from the former
-    presence_checks row; pipeline.py:230-260): a dischema declaring
+    the Excel/CSV report writes, proven against a SQL GROUP BY, unioned
+    with the entity PRESENCE checks (pipeline.py:230-260): a dischema declaring
     {alpha, beta} fed {alpha, gamma} fails the submission with one
     critical message per missing/undeclared entity, mapped into the same
     sheet columns under Type='Presence Check'. The early return fires
@@ -4039,13 +4002,13 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited by ``process_landing`` (thread-pool fan-out, max_workers=2),
     each run through transform -> contract -> business rules -> entity
     sinks -> audit. The returned frame is the validated entity read back
-    from a COMPACTED rewrite of the parquet SINK (scale.compact_parquet,
-    round 7 — the small-file maintenance an incremental pipeline needs;
+    from a COMPACTED rewrite of the parquet SINK (scale.compact_parquet
+    — the small-file maintenance an incremental pipeline needs;
     reading the compacted copy makes the oracle hash prove compaction
     lossless), cross-joined with the audit trail's distinct latest
     status — exactly one ('completed') iff every stage of both
     submissions succeeded, so the hash attests the pipeline AND the audit
-    table (absorbs the former audit_latest_status row)."""
+    table."""
     import json as _json
     import tempfile
     from pathlib import Path
@@ -4092,7 +4055,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         (landing / f"nations_{i}.csv.metadata.json").write_text(
             _json.dumps({"file_name": f"nations_{i}.csv"})
         )
-    # OPTIMIZATION r13 (guide §2.6): the versioned-table attestation
+    # the versioned-table attestation
     # below touches only its own temp dir and the nation scan — nothing
     # from the landing pipeline — so its serial chain of write/read/
     # vacuum jobs (~0.9s) runs in a thread that process_landing's
@@ -4149,8 +4112,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_vtable_frames(spark: SparkSession, sf_dir: str, root):
-    """The versioned-table tags of :func:`q_pipeline_e2e` (round 10,
-    r9 verdict Next-round #6): write v1 (half the table), publish v2
+    """The versioned-table tags of :func:`q_pipeline_e2e`: write v1 (half the table), publish v2
     (full), prove a reader pinned at v1 still reads the COMPLETE old
     snapshot after v2 published (time travel), publish v3, vacuum
     keep_last=2 (removes exactly v1), and read the published pointer
@@ -6982,11 +6944,11 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-graph-sized (small), so the eager localCheckpoint is cheap
     # and the groups/keep stages reuse it via the operators' passthrough
     # parameters instead of re-running the pipeline three times.
-    # OPTIMIZATION r13 (guide §2.4): the CC label-prop rounds inside
+    # the CC label-prop rounds inside
     # semantic_dup_groups iterate over the PAIR GRAPH (thousands of
     # edges) — pin their per-round shuffles like the connected_components
-    # row does (3.9s -> 3.7s med at 8; rows identical). r14: 8 -> 4 with
-    # the CC row's re-measurement; scales UP with the edge count.
+    # row does (4 partitions, the CC row's measurement; rows identical);
+    # scales UP with the edge count.
     with _state_partitions(spark, 4):
         pairs_df = semantic_pairs(corpus, **kw).localCheckpoint()
         groups_df = semantic_dup_groups(corpus, **kw, pairs=pairs_df)
@@ -7041,7 +7003,7 @@ def q_paragraph_dedup(
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", f"{_PARA_CORPUS_EXPR} AS text"
     )
-    # OPTIMIZATION r13 (guide §1.2): the three paragraph arms all start
+    # the three paragraph arms all start
     # from the same split_paragraphs explode — the row's build
     # (q_span_dedup) passes the persisted frame in so the corpus is
     # split once per row instead of three times
@@ -7108,7 +7070,7 @@ def q_shared_spans(
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", f"{_SPAN_CORPUS_EXPR} AS text"
     )
-    # OPTIMIZATION r13 (guide §1.2): both arms (and the incremental
+    # both arms (and the incremental
     # sibling) fold over the same winnowed-fingerprint rows; the row's
     # build (q_span_dedup) passes the persisted frame in so the
     # gram-hash pass runs once per row instead of four times
@@ -7171,7 +7133,7 @@ def _q_cms_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kw = dict(group_cols=["lang"], depth=3, width=64)
     # persisted: the 'cells' projection and the 'est' probe join both
-    # read the direct sketch — one build instead of two (r13, guide §1.2)
+    # read the direct sketch — one build instead of two
     sketch = cms_build(docs, "source", **kw).persist()
     cells = sketch.selectExpr(
         "'cells' AS op",
@@ -7185,7 +7147,7 @@ def _q_cms_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CONCAT_WS('|', COALESCE(lang, '~'), source) AS k",
         "CAST(n_est AS STRING) AS v",
     )
-    # r13 (guide §2.2): the two half-corpus sketches are ONE build keyed
+    # the two half-corpus sketches are ONE build keyed
     # by (lang, parity) — a value's cells depend only on the value, so
     # building per-parity groups and summing the parity dimension away
     # is exactly the union-then-merge of two separate half builds, for
@@ -7302,8 +7264,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # different, equally-valid fold orders), so the oracle replays
     # exactly 256; determinism across partitionings holds at any
     # fixed size.
-    # ROUND 11 (r10 verdict, Next-round #4): the 'mom' attestation
-    # runs at dim=16 (the first 16 coordinates) — 152 interpreted
+    # The 'mom' attestation runs at dim=16 (the first 16 coordinates) — 152 interpreted
     # multiplies per row instead of 2,080, dropping the row's floor
     # from ~5-11s to ~1-2s while exercising the identical fold
     # machinery; production fits use moment_stats(..., method="fast")
@@ -7321,7 +7282,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'mom' AS op", "CONCAT_WS('|', part, CAST(i AS STRING)) AS k",
         "value AS x",
     )
-    # OPTIMIZATION r13 (guide §1.2): 'proj'/'proj2' are two components
+    # 'proj'/'proj2' are two components
     # of the SAME projection row — compute the interpreted centered-
     # projection fold once (persisted) and slice it twice, instead of
     # evaluating the full fold per arm. Identical doubles per component.
@@ -7341,7 +7302,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed projection constants for q_pca_project's 'proj' arms: integer-
 # derived rationals, exactly representable, inlined identically into the
 # oracle SQL (no Date/random — deterministic by construction)
-_PCA_MOM_DIM = 16  # 'mom' attestation width (r11, see q_pca_project)
+_PCA_MOM_DIM = 16  # 'mom' attestation width (see q_pca_project)
 _PCA_MOM_FLAT = _PCA_MOM_DIM + _PCA_MOM_DIM * (_PCA_MOM_DIM + 1) // 2
 _PCA_MEAN: list[float] = [((i * 7 + 3) % 11 - 5) / 8.0 for i in range(64)]
 _PCA_COMPS: list[list[float]] = [
@@ -7529,7 +7490,7 @@ _SPAN_CORPUS_SQL = f"""
 """
 
 # the winnowed-fingerprint CTE chain (norm -> grams -> sel -> fps),
-# shared verbatim by the shared_spans oracle and the r12 incremental
+# shared verbatim by the shared_spans oracle and the incremental
 # parity twin
 _SPAN_FPS_CTES = f"""
     WITH norm AS (
@@ -7714,7 +7675,7 @@ def q_feature_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'mm' / 'rb' — standardize minmax and robust over n_chars grouped
       by lang (integer inputs → exact min/max/type-7-percentile
       arithmetic, one correctly-rounded division; the robust arm runs
-      broadcast_stats=False, putting the round-10 non-broadcast path on
+      broadcast_stats=False, putting the non-broadcast path on
       the oracle gate). zscore stays pytest-only: Welford-merged
       variance is partition-order float math, not hashable.
     - 'auc' — grouped ROC AUC (Mann-Whitney over distinct scores):
@@ -7869,8 +7830,8 @@ def q_chat_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the oracle derives starts by exact token/separator length
     arithmetic, valid because between tokens there is only whitespace,
     the same invariant the fold exploits). All integer/md5/boolean
-    surfaces; the round-10 phantom-token fix rides this row (rendered
-    text ends in newline)."""
+    surfaces; the phantom-token fix rides this row (rendered text ends
+    in newline)."""
     from data_validation_engine_spark.llmops.chat import (
         conversation_stats,
         render_chat,
@@ -8085,7 +8046,7 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_source_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-9 source connectors, round-tripped: nation written to ORC
+    """Source connectors, round-tripped: nation written to ORC
     through the entity sink path and read back via sources/orc.py
     ('orc'), and document texts written as individual files then read
     via sources/binary.py binaryFile (content length + md5 + path
@@ -8558,7 +8519,7 @@ _SOURCE_FORMATS_SQL = """
 # ---------------------------------------------------------------------------
 
 
-def q_r11_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom membership filter (llmops/sketch.py, Bloom 1970) with the
     md5-derived bit positions replayed exactly by the oracle:
 
@@ -8634,7 +8595,7 @@ def _duck_bloom_words(src: str, m_bits: int = 1024, k: int = 3) -> str:
     """
 
 
-_R11_BLOOM_SQL = f"""
+_BLOOM_SQL = f"""
     WITH cd AS (
         SELECT CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang,
                doc_id, md5(text) AS h
@@ -8673,7 +8634,7 @@ _R11_BLOOM_SQL = f"""
 """
 
 
-def q_r11_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR integer surfaces (llmops/dsir.py, Xie 2023): the ratio
     table's per-bucket counts over the full spine ('rt': target = the
     'en' docs, raw = all docs) and the per-doc feature extraction
@@ -8691,12 +8652,11 @@ def q_r11_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     kw = dict(n_max=2, buckets=512)
-    # OPTIMIZATION r13 (guide §1.2 / §2.3): the row previously hashed
-    # every gram FOUR times (target counts, raw counts, the 'sc'
-    # checksum, and the scoring pass) and built the ratio table twice.
-    # One persisted feature frame feeds all four consumers via the new
-    # features_col passthrough, and the ratio table is built once —
-    # identical arrays in, identical rows out.
+    # One persisted feature frame feeds all four gram consumers (target
+    # counts, raw counts, the 'sc' checksum, and the scoring pass) via
+    # the features_col passthrough, and the ratio table is built once,
+    # so every gram is hashed once — identical arrays in, identical rows
+    # out.
     featd = docs.select(
         "doc_id", "lang", ngram_buckets(F.col("text"), **kw).alias("__f")
     ).persist()
@@ -8749,7 +8709,7 @@ _DUCK_DSIR_FEATS = r"""
         )
 """
 
-_R11_DSIR_SQL = f"""
+_DSIR_SQL = f"""
     WITH feats AS ({_DUCK_DSIR_FEATS}),
     exploded AS (
         SELECT doc_id, unnest(f) AS bucket FROM feats
@@ -8778,7 +8738,7 @@ _R11_DSIR_SQL = f"""
 """
 
 
-def q_r11_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (llmops/chunking.py chunk_by_content,
     LBFS/FastCDC): the full chunk table at target=32/gram=4 — chunk
     index, md5 of the chunk text, and the token count. The oracle
@@ -8801,7 +8761,7 @@ def q_r11_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_CDC_CHUNKS_SQL = r"""
+_CDC_CHUNKS_SQL = r"""
     WITH RECURSIVE toked AS (
         SELECT doc_id,
                CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = ''
@@ -8862,7 +8822,7 @@ _R11_CDC_CHUNKS_SQL = r"""
 """
 
 
-def q_r11_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-aware greedy chunking (llmops/chunking.py
     chunk_by_sentences): the full chunk table at max_tokens=20 — chunk
     text hash, own-sentence count, own-token count. The oracle reuses
@@ -8871,7 +8831,7 @@ def q_r11_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE over prefix sums (closed form: a chunk extends to the
     last sentence keeping its cumulative tokens <= max, minimum one —
     oversized sentences stay whole and loud). overlap_sentences stays
-    pytest-pinned (tests/test_round10_ops.py). All-string (op, k, v)."""
+    pytest-pinned (tests/test_chunking.py). All-string (op, k, v)."""
     from data_validation_engine_spark.llmops.chunking import (
         chunk_by_sentences,
     )
@@ -8904,7 +8864,7 @@ _SENTENCED_SENT_SPLIT_SQL = _SENT_SPLIT_SQL.replace(
         FROM documents)""",
 )
 
-_R11_SENTENCE_CHUNKS_SQL = f"""
+_SENTENCE_CHUNKS_SQL = f"""
     WITH RECURSIVE split AS ({_SENTENCED_SENT_SPLIT_SQL}),
     base AS (
         SELECT doc_id,
@@ -8950,7 +8910,7 @@ _R11_SENTENCE_CHUNKS_SQL = f"""
 """
 
 
-def q_r11_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus curation (llmops/split.py
     select_token_budget): keep the highest-quality docs per lang until
     the cumulative token budget is crossed. 'abs' — absolute 2000-token
@@ -8986,7 +8946,7 @@ def q_r11_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return absolute.unionByName(frac)
 
 
-_R11_CURATION_SQL = r"""
+_CURATION_SQL = r"""
     WITH toks AS (
         SELECT doc_id, lang, n_chars,
                CASE WHEN COALESCE(regexp_replace(text, '^\s+|\s+$', '', 'g'), '') = '' THEN 0
@@ -9016,7 +8976,7 @@ _R11_CURATION_SQL = r"""
 """
 
 
-def q_r11_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode writing-system profiling (llmops/text.py script_profile)
     over a derived mixed-script corpus (the synthetic documents are
     ASCII-Latin, so both twins append the same Han/Cyrillic/Arabic
@@ -9045,7 +9005,7 @@ def q_r11_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_SCRIPT_PROFILE_SQL = """
+_SCRIPT_PROFILE_SQL = """
     WITH sp AS (
         SELECT doc_id,
                text || CASE WHEN doc_id % 3 = 0
@@ -9100,7 +9060,7 @@ _R11_SCRIPT_PROFILE_SQL = """
 """
 
 
-def q_r11_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming_paragraph_frequency (streaming/cardinality.py): the
     continuous-boilerplate twin of the attested batch paragraph
     frequencies, drained with availableNow over the events table (the
@@ -9138,7 +9098,7 @@ def q_r11_stream_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_STREAM_PARAGRAPHS_SQL = """
+_STREAM_PARAGRAPHS_SQL = """
     WITH ev AS (
         SELECT ts,
                event_type || ' line' || chr(10) ||
@@ -9170,7 +9130,7 @@ _R11_STREAM_PARAGRAPHS_SQL = """
 """
 
 
-def q_r11_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal Rank Fusion (llmops/fusion.py, Cormack 2009): fuse
     two per-lang rankings of the documents table — by n_chars and by
     the md5 of the text (both engine-exact orderings; float-scored
@@ -9204,7 +9164,7 @@ def q_r11_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_RRF_FUSION_SQL = """
+_RRF_FUSION_SQL = """
     WITH d AS (
         SELECT lang, doc_id, n_chars, md5(text) AS h FROM documents
     ),
@@ -9239,7 +9199,7 @@ _R11_RRF_FUSION_SQL = """
 """
 
 
-def q_r11_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling (llmops/split.py
     negative_samples): every even-doc anchor draws 3 negatives from the
     full documents pool by md5-rank indexing. The oracle replays the
@@ -9275,7 +9235,7 @@ def q_r11_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return draws.unionByName(gaps)
 
 
-_R11_NEGATIVE_SAMPLES_SQL = """
+_NEGATIVE_SAMPLES_SQL = """
     WITH ranked AS (
         SELECT doc_id, lang,
                row_number() OVER (ORDER BY
@@ -9344,7 +9304,7 @@ def _q_hh_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_HEAVY_HITTERS_SQL = r"""
+_HEAVY_HITTERS_SQL = r"""
     WITH toks AS (
         SELECT unnest(string_split_regex(
             regexp_replace(lower(text), '^\s+|\s+$', '', 'g'),
@@ -9359,7 +9319,7 @@ _R11_HEAVY_HITTERS_SQL = r"""
 """
 
 
-def q_r11_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stride-scheduled source interleaving (llmops/split.py
     interleave_sources): the full order column over documents mixed
     2:1:1:1:1 by lang. Integer virtual times over the md5
@@ -9379,7 +9339,7 @@ def q_r11_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R11_INTERLEAVE_SQL = """
+_INTERLEAVE_SQL = """
     WITH ranked AS (
         SELECT doc_id, lang,
                row_number() OVER (PARTITION BY lang ORDER BY
@@ -9397,7 +9357,7 @@ _R11_INTERLEAVE_SQL = """
 """
 
 
-def q_r11_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robots Exclusion Protocol (llmops/robots.py, RFC 9309) — both
     twins derive the same robots corpus (one body per source with
     '*'-group rules plus a 'trainbot' group on every 2nd host) and the
@@ -9459,7 +9419,7 @@ def q_r11_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r_rows.unionByName(dec).unionByName(dec_t)
 
 
-_R11_ROBOTS_SQL = r"""
+_ROBOTS_SQL = r"""
     WITH hosts AS (SELECT DISTINCT source AS host FROM documents),
     bodies AS (
         SELECT host,
@@ -9654,7 +9614,7 @@ _SAMPLING_NULLED_BUDGET_SQL = r"""
 # ---------------------------------------------------------------------------
 
 
-def q_r12_crawl_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_crawl_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-graph extraction (llmops/web.py) over a CONSTRUCTED HTML
     corpus whose link inventory is stated by construction in both twins
     (the text_normalize 'json'/'url' precedent — the oracle asserts the
@@ -9671,8 +9631,8 @@ def q_r12_crawl_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
       collapsed.
     - 'c' — canonicalize_url over the resolved links (utm_*/gclid
       dropped, host lowercased, default port stripped, params sorted)
-      plus a dedicated '?'-inside-query probe ('q') riding the r10
-      ADVICE fix on the oracle gate.
+      plus a dedicated '?'-inside-query probe ('q') putting the
+      '?'-inside-fragment/query parse on the oracle gate.
 
     Every 11th doc's html is NULL (contributes no rows — explode of
     the coalesced empty array). All-string (op, k, v) frame."""
@@ -9767,7 +9727,7 @@ def q_r12_crawl_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l_rows.unionByName(a_rows).unionByName(c_rows).unionByName(probe)
 
 
-_R12_CRAWL_GRAPH_SQL = """
+_CRAWL_GRAPH_SQL = """
     WITH d AS (
         SELECT doc_id, source,
                'http://' || source AS origin,
@@ -9827,7 +9787,7 @@ _R12_CRAWL_GRAPH_SQL = """
 """
 
 
-def q_r12_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-screened decontamination (llmops/decontam.py
     decontaminate_bloom, exact_verify=True) on the text_retrieval
     'decon' split (benchmark = every 97th doc): the operator's
@@ -9857,7 +9817,7 @@ def q_r12_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_DECON_BLOOM_SQL = f"""
+_DECON_BLOOM_SQL = f"""
     WITH toked AS (
         SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
     ),
@@ -9882,7 +9842,7 @@ _R12_DECON_BLOOM_SQL = f"""
 """
 
 
-def q_r12_spans_incremental(
+def q_spans_incremental(
     spark: SparkSession, sf_dir: str, fps: DataFrame | None = None
 ) -> DataFrame:
     """Incremental span dedup (llmops/spans.py shared_spans_incremental)
@@ -9904,7 +9864,7 @@ def q_r12_spans_incremental(
     )
     corpus = docs.where("doc_id % 4 != 0")
     new = docs.where("doc_id % 4 = 0")
-    # OPTIMIZATION r13 (guide §1.2): fingerprinting is per-row, so the
+    # fingerprinting is per-row, so the
     # corpus index and the new-batch fingerprints are FILTERS of the
     # full-corpus fingerprint frame — the row's build (q_span_dedup)
     # passes the persisted frame in and both sides slice it instead of
@@ -9928,7 +9888,7 @@ def q_r12_spans_incremental(
     )
 
 
-_R12_SPANS_INCREMENTAL_SQL = f"""
+_SPANS_INCREMENTAL_SQL = f"""
     {_SPAN_FPS_CTES}
     SELECT 'inc' AS op,
            CAST(n.doc_id AS VARCHAR) || '|' ||
@@ -9940,15 +9900,15 @@ _R12_SPANS_INCREMENTAL_SQL = f"""
 """
 
 
-def q_r12_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-band hard negatives (llmops/similarity.py
     hard_negative_samples, k=3, candidate_factor=4, band [0.05, 0.35])
     over the embeddings table. The oracle replays the knn_join
     candidate stage with the attested `_knn_join_oracle` machinery
-    (the ann_variants 'knn' arm has been green since r6: same-bucket
+    (the ann_variants 'knn' arm: same-bucket
     LSH candidates, ordered-fold cosines rounded to 6), then the band
     filter and re-rank. The cosine rides the hashed frame as
-    floor(cosine * 1e6) — the round-6 doubles are bit-identical across
+    floor(cosine * 1e6) — the knn arm's doubles are bit-identical across
     engines (the premise the green knn arm proves), so the scaled
     floor is too, and the all-string frame needs no dtype allowlist
     entry. All-string (op, k, v) frame."""
@@ -9970,7 +9930,7 @@ def q_r12_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_HARD_NEGATIVES_SQL = f"""
+_HARD_NEGATIVES_SQL = f"""
     WITH cands AS (
         SELECT * FROM ({_knn_join_oracle(k=12)})
     ),
@@ -9991,9 +9951,9 @@ _R12_HARD_NEGATIVES_SQL = f"""
 """
 
 
-def q_r12_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-index maintenance (llmops/dedup.py compact_minhash_index
-    + minhash_index_stats, r10 verdict Next-round #6a): build the
+    + minhash_index_stats): build the
     persistable LSH index over documents, simulate a backfill replay
     (every even doc's rows appended twice) and deletions (every 7th doc
     no longer live), compact, and report band skew.
@@ -10012,7 +9972,7 @@ def q_r12_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    # OPTIMIZATION r13 (guide §1.2): minhash_index is a PER-DOCUMENT
+    # minhash_index is a PER-DOCUMENT
     # projection (shingle → signature → band rows touch only that
     # doc's text), so the replayed-batch index over the even half is
     # exactly the full index filtered by id — build the signature
@@ -10041,7 +10001,7 @@ def q_r12_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ix.unionByName(st)
 
 
-_R12_INDEX_MAINTENANCE_SQL = f"""
+_INDEX_MAINTENANCE_SQL = f"""
     WITH {_minhash_pair_ctes()},
     live AS (
         SELECT doc_id, band_idx, band_key FROM bands
@@ -10093,11 +10053,11 @@ def _classifier_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_r12_classifier(
+def q_classifier_base(
     spark: SparkSession, sf_dir: str, feats: DataFrame | None = None
 ) -> DataFrame:
-    """fastText-style classifier inference (llmops/classifier.py, r10
-    verdict Next-round #6b) with INTEGER weights w[b] = ((b*7+3) mod
+    """fastText-style classifier inference (llmops/classifier.py) with
+    INTEGER weights w[b] = ((b*7+3) mod
     21) - 10 over 512 hashed-n-gram buckets (the DSIR feature space,
     so the oracle reuses _DUCK_DSIR_FEATS verbatim), bias 3:
 
@@ -10115,14 +10075,11 @@ def q_r12_classifier(
 
     All-string (op, k, v) frame.
 
-    OPTIMIZATION r13 (guide §1.2 step 1 — don't compute things twice):
-    the five surfaces previously each re-hashed every word/char gram
-    through md5 (five independent feature-extraction passes under one
-    union). The feature-bucket arrays are now computed ONCE into a
-    persisted ``feats`` frame (word + char arrays side by side) and
-    every arm folds over the shared arrays via ``features_col`` —
-    identical doubles, identical hash (oracle-reproven), ~5x less
-    per-row hashing. ``feats`` may be passed in by
+    The feature-bucket arrays are computed ONCE into a persisted
+    ``feats`` frame (word + char arrays side by side) and every arm folds
+    over the shared arrays via ``features_col`` — identical doubles,
+    identical hash, ~5x less per-row hashing than five independent
+    feature-extraction passes. ``feats`` may be passed in by
     :func:`q_classifier` so the 'ev' arm shares the same pass."""
     from data_validation_engine_spark.llmops.classifier import (
         classifier_filter,
@@ -10180,7 +10137,7 @@ def q_r12_classifier(
     )
 
 
-_R12_CLASSIFIER_SQL = rf"""
+_CLASSIFIER_SQL = rf"""
     WITH feats AS ({_DUCK_DSIR_FEATS}),
     scored AS (
         SELECT doc_id, len(f) AS nf,
@@ -10251,10 +10208,9 @@ _R12_CLASSIFIER_SQL = rf"""
 """
 
 
-def q_r12_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-lifted exact windowed heavy hitters (llmops/sketch.py
-    windowed_heavy_hitters over streaming_cms_cells, r10 verdict
-    Next-round #6c): the stream maintains only depth×width CMS cells
+    windowed_heavy_hitters over streaming_cms_cells): the stream maintains only depth×width CMS cells
     per daily window (watermark-evicted), the batch pass screens the
     raw events against the drained cells (never-undercount, map-side
     broadcast) and exact-counts the surviving sliver. Output is
@@ -10296,7 +10252,7 @@ def q_r12_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_R12_STREAM_HEAVY_SQL = """
+_STREAM_HEAVY_SQL = """
     SELECT 'hh' AS op,
            CAST(win AS VARCHAR) || '|' || event_type AS k,
            CAST(count(*) AS VARCHAR) AS v
@@ -10311,7 +10267,7 @@ _R12_STREAM_HEAVY_SQL = """
 """
 
 
-def q_r12_substring_dedup(
+def q_substring_dedup_hash(
     spark: SparkSession, sf_dir: str, spans: DataFrame | None = None
 ) -> DataFrame:
     """Exact repeated-substring removal (llmops/substrings.py, Lee 2021
@@ -10330,9 +10286,8 @@ def q_r12_substring_dedup(
     the naive gram-frequency replay the oracle runs. All-string
     (op, k, v) frame.
 
-    OPTIMIZATION r13 (guide §1.2): the 'sp' and 'rm' arms previously
-    each ran the full gram-hash + CMS-screen pipeline; the span table
-    is now computed once (PERSISTED — or passed in by
+    The 'sp' and 'rm' arms share one gram-hash + CMS-screen pipeline:
+    the span table is computed once (PERSISTED — or passed in by
     :func:`q_substring_dedup`, which shares the upstream ``marked``
     frame with the verify twin too) and both arms derive from it.
     Identical spans in, identical splice out — oracle-reproven."""
@@ -10369,7 +10324,7 @@ def q_r12_substring_dedup(
     return sp.unionByName(rm)
 
 
-_R12_SUBSTRING_DEDUP_SQL = r"""
+_SUBSTRING_DEDUP_SQL = r"""
     WITH corpus AS (
         SELECT doc_id,
                CASE WHEN doc_id % 4 = 0 THEN
@@ -10476,7 +10431,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         q_paragraph_dedup(spark, sf_dir, paras=paras)
         .unionByName(q_shared_spans(spark, sf_dir, fps=fps))
-        .unionByName(q_r12_spans_incremental(spark, sf_dir, fps=fps))
+        .unionByName(q_spans_incremental(spark, sf_dir, fps=fps))
     )
 
 
@@ -10485,7 +10440,7 @@ def q_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted :func:`_classifier_feats` pass (one feature-hashing pass
     for the whole row instead of six)."""
     feats = _classifier_feats(spark, sf_dir)
-    return q_r12_classifier(spark, sf_dir, feats=feats).unionByName(
+    return q_classifier_base(spark, sf_dir, feats=feats).unionByName(
         _q_classifier_ev(spark, sf_dir, feats=feats)
     )
 
@@ -10647,7 +10602,7 @@ def _warc_fixture(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
-def q_r13_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC source (sources/warc.py, ISO 28500) over a constructed
     archive whose record inventory is stated by construction in both
     twins (the r12_crawl_graph precedent):
@@ -10666,9 +10621,8 @@ def q_r13_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_validation_engine_spark.sources.warc import read_warc
 
     root = _warc_fixture(spark, sf_dir)
-    # OPTIMIZATION r13 (guide §1.2): the row previously ran the Python
-    # WARC parser THREE times — once per consumer ('w', 'n', and the
-    # lazy re-evaluation for 'c'). ``types=None`` yields every record
+    # one Python WARC parse for the three consumers ('w', 'n', and the
+    # lazy re-evaluation for 'c'): ``types=None`` yields every record
     # with the identical schema, and ``types=("response",)`` is exactly
     # the parse-time filter ``warc_type = 'response'`` — so one
     # persisted full parse feeds all three arms with identical rows.
@@ -10696,7 +10650,7 @@ def q_r13_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.unionByName(n).unionByName(c)
 
 
-_R13_WARC_SQL = """
+_WARC_SQL = """
     WITH inv AS (
         SELECT doc_id,
                'http://' || source || '/doc/' || doc_id
@@ -10724,10 +10678,10 @@ _R13_WARC_SQL = """
 """
 
 
-def q_r13_substring_verify(
+def q_substring_verify(
     spark: SparkSession, sf_dir: str, spans: DataFrame | None = None
 ) -> DataFrame:
-    """remove_repeated_substrings(exact_verify=True) (ADVICE r11) on
+    """remove_repeated_substrings(exact_verify=True) on
     the substring_dedup corpus (same boilerplate splice). The oracle
     here is STRONGER than the roster row's: it replays gram
     frequencies by the gram's TEXT — no hashing anywhere — so a green
@@ -10735,8 +10689,8 @@ def q_r13_substring_verify(
     semantics, not merely hash-replay parity. All-string (op, k, v)
     frame ('spv' spans / 'rmv' scrubbed surface).
 
-    OPTIMIZATION r13 (guide §1.2): same sharing as
-    :func:`q_r12_substring_dedup` — the verified span table is computed
+    same sharing as
+    :func:`q_substring_dedup_hash` — the verified span table is computed
     once (persisted, or passed in) and both arms derive from it."""
     from data_validation_engine_spark.llmops.substrings import (
         remove_repeated_substrings,
@@ -10777,8 +10731,8 @@ def q_r13_substring_verify(
 # gram-TEXT group-by (the only change — the span-merge/splice chain is
 # reused verbatim so the two proofs differ in exactly the claim under
 # test)
-_R13_SUBSTRING_VERIFY_SQL = (
-    _R12_SUBSTRING_DEDUP_SQL
+_SUBSTRING_VERIFY_SQL = (
+    _SUBSTRING_DEDUP_SQL
     .replace(
         """pos AS (
         SELECT doc_id, i,
@@ -10793,10 +10747,10 @@ _R13_SUBSTRING_VERIFY_SQL = (
     .replace("SELECT 'sp' AS op,", "SELECT 'spv' AS op,")
     .replace("SELECT 'rm',", "SELECT 'rmv',")
 )
-assert "md5(substring" not in _R13_SUBSTRING_VERIFY_SQL
+assert "md5(substring" not in _SUBSTRING_VERIFY_SQL
 
 
-def q_r13_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (llmops/pq.py, Jégou 2011 IVF-PQ's PQ half)
     over the embeddings table with the deterministic placeholder
     codebooks (subvectors of the first 16 vectors in id order — the
@@ -10822,7 +10776,7 @@ def q_r13_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     books = default_codebooks(emb, dim=64, m=8, k=16)
-    # OPTIMIZATION r13 (guide §1.2): the 'enc' and 'adc' arms both
+    # the 'enc' and 'adc' arms both
     # consume the coded corpus, and the per-row encode is the row's
     # dominant cost (m*k interpreted squared-L2 folds) — persist it so
     # the union evaluates the encode once instead of per branch.
@@ -10895,7 +10849,7 @@ _PQ_ADC_CTES = """
     )"""
 
 
-_R13_PQ_SQL = _PQ_ADC_CTES.replace("__PQ_K__", "20") + """
+_PQ_SQL = _PQ_ADC_CTES.replace("__PQ_K__", "20") + """
     SELECT 'enc' AS op, CAST(vec_id AS VARCHAR) AS k,
            string_agg(CAST(code AS VARCHAR), ',' ORDER BY s) AS v
     FROM assign GROUP BY vec_id
@@ -10940,10 +10894,10 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans_ver = spans_from_marked(
         verify_marked(marked, "doc_id", 3), "doc_id", min_len=30
     ).persist()
-    return q_r12_substring_dedup(
+    return q_substring_dedup_hash(
         spark, sf_dir, spans=spans_hash
     ).unionByName(
-        q_r13_substring_verify(spark, sf_dir, spans=spans_ver)
+        q_substring_verify(spark, sf_dir, spans=spans_ver)
     )
 
 
@@ -11058,30 +11012,30 @@ ROSTER: dict[str, Row] = {
     # embeddings, features and text families
     "semantic_dedup": Row((
         Arm("sem", q_semantic_dedup, _SEMANTIC_DEDUP_SQL),
-        Arm("pq", q_r13_pq, _R13_PQ_SQL),
+        Arm("pq", q_pq, _PQ_SQL),
     )),
     "pca_project": _one(q_pca_project, _PCA_PROJECT_SQL),
     "feature_scores": _one(q_feature_scores, _FEATURE_SCORES_SQL),
     "span_dedup": Row((
         Arm("para", q_paragraph_dedup, _PARAGRAPH_DEDUP_SQL),
         Arm("spans", q_shared_spans, _SHARED_SPANS_SQL),
-        Arm("inc", q_r12_spans_incremental, _R12_SPANS_INCREMENTAL_SQL),
+        Arm("inc", q_spans_incremental, _SPANS_INCREMENTAL_SQL),
     ), build=q_span_dedup),
     "sketches": Row((
         Arm("cms", _q_cms_batch, _CMS_SKETCH_SQL),
         Arm("cms_stream", _q_cms_stream, None),
         Arm("hll", q_hll_profile, _HLL_PROFILE_SQL),
-        Arm("hh_tok", _q_hh_tok, _R11_HEAVY_HITTERS_SQL),
+        Arm("hh_tok", _q_hh_tok, _HEAVY_HITTERS_SQL),
         Arm("hh_src", _q_hh_src, None),
-        Arm("bloom", q_r11_bloom, _R11_BLOOM_SQL),
-        Arm("dsir", q_r11_dsir, _R11_DSIR_SQL),
-        Arm("decon", q_r12_decon_bloom, _R12_DECON_BLOOM_SQL),
+        Arm("bloom", q_bloom, _BLOOM_SQL),
+        Arm("dsir", q_dsir, _DSIR_SQL),
+        Arm("decon", q_decon_bloom, _DECON_BLOOM_SQL),
     )),
     "chunk_artifacts": Row((
-        Arm("cdc", q_r11_cdc_chunks, _R11_CDC_CHUNKS_SQL),
-        Arm("sentences", q_r11_sentence_chunks, _R11_SENTENCE_CHUNKS_SQL),
-        Arm("paragraphs", q_r11_stream_paragraphs,
-            _R11_STREAM_PARAGRAPHS_SQL),
+        Arm("cdc", q_cdc_chunks, _CDC_CHUNKS_SQL),
+        Arm("sentences", q_sentence_chunks, _SENTENCE_CHUNKS_SQL),
+        Arm("paragraphs", q_stream_paragraphs,
+            _STREAM_PARAGRAPHS_SQL),
         Arm("packs", q_materialize_packs, _MATERIALIZE_PACKS_SQL),
         Arm("shards", q_training_shards, _TRAINING_SHARDS_SQL),
         Arm("formats", q_source_formats, _SOURCE_FORMATS_SQL),
@@ -11090,33 +11044,33 @@ ROSTER: dict[str, Row] = {
         Arm("normalize", q_text_normalize, _TEXT_NORMALIZE_SQL),
         Arm("chat", q_chat_prep, _CHAT_PREP_SQL),
         Arm("terms", q_corpus_terms, _CORPUS_TERMS_SQL),
-        Arm("warc", q_r13_warc, _R13_WARC_SQL),
+        Arm("warc", q_warc, _WARC_SQL),
     )),
     "sampling_v2": Row((
-        Arm("curation", q_r11_curation, _R11_CURATION_SQL),
-        Arm("negs", q_r11_negative_samples, _R11_NEGATIVE_SAMPLES_SQL),
-        Arm("interleave", q_r11_interleave, _R11_INTERLEAVE_SQL),
+        Arm("curation", q_curation, _CURATION_SQL),
+        Arm("negs", q_negative_samples, _NEGATIVE_SAMPLES_SQL),
+        Arm("interleave", q_interleave, _INTERLEAVE_SQL),
         Arm("nulled", _q_sampling_nulled_budget, _SAMPLING_NULLED_BUDGET_SQL),
-        Arm("hardneg", q_r12_hard_negatives, _R12_HARD_NEGATIVES_SQL),
+        Arm("hardneg", q_hard_negatives, _HARD_NEGATIVES_SQL),
     )),
     "crawl_signals": Row((
-        Arm("robots", q_r11_robots, _R11_ROBOTS_SQL),
-        Arm("scripts", q_r11_script_profile, _R11_SCRIPT_PROFILE_SQL),
-        Arm("rrf", q_r11_rrf_fusion, _R11_RRF_FUSION_SQL),
-        Arm("graph", q_r12_crawl_graph, _R12_CRAWL_GRAPH_SQL),
+        Arm("robots", q_robots, _ROBOTS_SQL),
+        Arm("scripts", q_script_profile, _SCRIPT_PROFILE_SQL),
+        Arm("rrf", q_rrf_fusion, _RRF_FUSION_SQL),
+        Arm("graph", q_crawl_graph, _CRAWL_GRAPH_SQL),
     )),
     "classifier": Row((
-        Arm("base", q_r12_classifier, _R12_CLASSIFIER_SQL),
+        Arm("base", q_classifier_base, _CLASSIFIER_SQL),
         Arm("ev", _q_classifier_ev, _CLASSIFIER_EVAL_ORACLE),
     ), build=q_classifier),
     "substring_dedup": Row((
-        Arm("hash", q_r12_substring_dedup, _R12_SUBSTRING_DEDUP_SQL),
-        Arm("verify", q_r13_substring_verify, _R13_SUBSTRING_VERIFY_SQL),
+        Arm("hash", q_substring_dedup_hash, _SUBSTRING_DEDUP_SQL),
+        Arm("verify", q_substring_verify, _SUBSTRING_VERIFY_SQL),
     ), build=q_substring_dedup),
     "index_maintenance": _one(
-        q_r12_index_maintenance, _R12_INDEX_MAINTENANCE_SQL
+        q_index_maintenance, _INDEX_MAINTENANCE_SQL
     ),
-    "stream_heavy": _one(q_r12_stream_heavy, _R12_STREAM_HEAVY_SQL),
+    "stream_heavy": _one(q_stream_heavy, _STREAM_HEAVY_SQL),
 }
 
 

@@ -7,7 +7,7 @@ core; the driver heap is three quarters of physical memory, at most 90g.
 Each query is forced end-to-end with a noop sink (full computation, no
 driver-side collect overhead).
 
-Round-13 additions (r12 verdict, Next-round #1/#7):
+Diagnostics:
 - per-sample detail in bench_out.json ``query_stats[*].samples``
   (pass index + wall-clock offset + duration) so a disturbed time
   segment is attributable;
@@ -40,7 +40,7 @@ def main() -> None:
 
     queries = entry_mod.queries()
 
-    # isolation mode (r12 verdict, Next-round #1b): SPARK_GRAFT_BENCH_ONLY
+    # isolation mode: SPARK_GRAFT_BENCH_ONLY
     # = comma-separated row names runs ONLY those queries in this (fresh)
     # process — the adjudication path for a row whose in-roster timing is
     # suspected of being session pressure rather than the operator
@@ -74,12 +74,12 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
 
     # k runs per query, report the MEDIAN: this machine's co-tenant noise
-    # swings single-run timings 3-20x (judge-verified in round 2), so one
+    # swings single-run timings 3-20x, so one
     # sample per query cannot support any perf claim. Runs are interleaved
     # round-robin (all queries once, then again) so a transient load spike
     # degrades one sample of many queries rather than all samples of one.
-    # r13: default 5 passes (was 3) — the per-sample timestamps this round
-    # added show the box's noise arrives in MINUTE-SCALE windows (~2 min
+    # Default 5 passes: the per-sample timestamps show the box's noise
+    # arrives in MINUTE-SCALE windows (~2 min
     # on / ~1 min off twice during one 3-pass run, same roster positions
     # inflated in consecutive passes, all flat in fresh-process isolation
     # and no local process above 1% CPU), so with 3 passes a median can
@@ -88,29 +88,28 @@ def main() -> None:
     # count before ever degrading to an unusable single sample.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     # soft wall-clock budget: complete passes only, never fewer than one —
-    # a partially-sampled pass would bias medians. ADAPTIVE (r10 verdict,
-    # What's-wrong #2: the fixed 450s budget was blown by one pass of the
-    # grown roster, leaving runs_per_query=1 — statistically void on a
-    # box with 3-20x single-run noise): the next pass starts only if the
+    # a partially-sampled pass would bias medians. ADAPTIVE (a fixed
+    # budget that one pass of the roster outgrows leaves runs_per_query=1
+    # — statistically void on a box with 3-20x single-run noise): the
+    # next pass starts only if the
     # measured cost of the previous pass still fits, so the harness
     # degrades to fewer passes long before it degrades to one, and the
     # default budget is sized for >=2-3 passes of the current roster
-    # r12: the untimed warmup pass consumes ~1 roster-pass of wall
+    # The untimed warmup pass consumes ~1 roster-pass of wall
     # clock before any sample lands, so the default budget grows by
     # one pass-worth to keep >= 3 TIMED passes at the current roster
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "1800"))
     t0 = time.perf_counter()
     samples: dict[str, list[float]] = {name: [] for name in queries}
-    # per-sample detail (r12 verdict, Next-round #1a): pass index + the
-    # sample's wall-clock offset from bench start, so a disturbed
-    # SEGMENT of one pass (five adjacent 7-13x max/median rows in
-    # BENCH_r12) is attributable to its time window instead of reading
+    # per-sample detail: pass index + the sample's wall-clock offset from
+    # bench start, so a disturbed SEGMENT of one pass (e.g. five adjacent
+    # 7-13x max/median rows) is attributable to its time window instead of reading
     # as five independently-unstable operators
     detail: dict[str, list[dict]] = {name: [] for name in queries}
 
     def _gc_ms() -> int:
         """Cumulative JVM GC milliseconds (driver == executor in local
-        mode) — the box-noise telemetry the r12 adjudication lacked."""
+        mode) — box-noise telemetry."""
         beans = (
             spark.sparkContext._jvm.java.lang.management
             .ManagementFactory.getGarbageCollectorMXBeans()
@@ -143,8 +142,8 @@ def main() -> None:
         # co-tenant noise makes the MINIMUM the honest floor, and the
         # driver snapshots only stdout — adjudicating noise shouldn't
         # require bench_out.json. Full per-query median/min/max detail
-        # goes to the FILE: round 3 proved a combined line overflows
-        # the driver's stdout capture.
+        # goes to the FILE: a combined line overflows the driver's stdout
+        # capture.
         timings = {
             name: round(median(xs), 3) for name, xs in samples.items()
         }
@@ -189,11 +188,10 @@ def main() -> None:
                         name: s["min"] for name, s in stats.items()
                     },
                     # a single-sample artifact must be self-identifying
-                    # (r10 verdict: one pass cannot support a perf claim)
+                    # (one pass cannot support a perf claim)
                     "runs_per_query": rpq,
                     "sf": sf,
-                    # box-noise telemetry (r12 verdict, Next-round #7):
-                    # lets a judge separate box noise from code without
+                    # box-noise telemetry: lets a reader separate box noise from code without
                     # an isolation re-run
                     "env": _env_snapshot(),
                 },
@@ -238,16 +236,16 @@ def main() -> None:
         # reclaimed when the ContextCleaner sees their references die in
         # a DRIVER GC — without one, 4 roster passes accumulate blocks
         # and the growing heap pressure bleeds into later rows' timings
-        # (the r12 "session pressure" class: unchanged operators +28-49%
+        # ("session pressure": unchanged operators measured +28-49%
         # in-roster while flat in isolation)
         spark.sparkContext._jvm.System.gc()
         return time.perf_counter() - pass_t0
 
-    # one UNTIMED warmup pass of the full roster (r11 verdict,
-    # Next-round #5): the generic JVM warmup above doesn't touch the
-    # per-query codegen/JIT/process-pool paths, so pass 1 used to carry
-    # 8x first-run spikes (feature_scores max 69s vs median 8.2s in
-    # BENCH_r11) that read as phantom instability in max/median. The
+    # one UNTIMED warmup pass of the full roster: the generic JVM warmup
+    # above doesn't touch the per-query codegen/JIT/process-pool paths,
+    # so without it pass 1 carries 8x first-run spikes (feature_scores
+    # max 69s vs median 8.2s) that read as phantom instability in
+    # max/median. The
     # warmup consumes budget; the adaptive pass logic sees its cost, so
     # the harness still degrades to fewer TIMED passes, never to zero.
     last_pass = 0.0

@@ -1,427 +1,59 @@
 """LLM-training-data pipeline operators (net-new vs the reference).
 
-The reference engine (NHSDigital/data-validation-engine) is a batch file
-validation engine with no dedup / similarity / text-analysis surface; these
-operators extend the same entity-namespace model to the operations a
-large-scale training-data pipeline needs:
+The reference engine (NHSDigital/data-validation-engine) validates batch
+files and has no dedup, similarity or text-analysis surface. These
+operators extend its entity-namespace model to a training-data pipeline:
 
-- :mod:`dedup` — exact dedup, MinHash-LSH fuzzy dedup (banded candidate
-  generation, never all-pairs), SimHash, EXACT n-gram Jaccard pairs via
-  AllPairs/PPJoin prefix filtering, connected components (label
-  propagation + large-star/small-star).
-- :mod:`similarity` — cosine top-k over embedding columns (exact brute force
-  + LSH-bucketed ANN probe, multi-probe, partition-pruned); :mod:`ivf` —
-  coarse-quantized ANN.
-- :mod:`text` — tokenisation, token counting, quality stats, language ID,
-  TF-IDF top terms, document fingerprinting, repetition signals
-  (Gopher-style), PII scrubbing.
-- :mod:`decontam` — benchmark decontamination by exact word-n-gram
-  overlap (broadcast benchmark, corpus scanned once).
-- :mod:`chunking` — token-window document chunking (zero shuffle) and
-  shard-parallel greedy sequence packing (concat-and-split rule).
-- :mod:`vectors` — deterministic distributed vector aggregation
-  (two-level ordered segment fold; the only cross-row float aggregation,
-  engineered to be partitioning-independent), nearest-prototype
-  assignment, and engine-exact distributed k-means (Lloyd's over the
-  deterministic fold — an ITERATIVE algorithm with an exact SQL oracle).
-- :mod:`split` — deterministic md5-bucket train/val/test assignment and
-  stable nested sampling (row-stable across engines and repartitions).
-- :mod:`multimodal` — opaque binary columns with typed metadata and
-  Arrow-batched decode/feature plumbing (``mapInPandas``).
-- :mod:`chat` — conversation rendering with exact per-turn content
-  spans, loss-mask spans, token-level loss masks, structural quality
-  gates for instruction data.
-- :mod:`normalize` / :mod:`web` — Unicode NFKC canonicalization,
-  HTML-to-text extraction, typed JSON sidecar parsing.
-- :mod:`sketch` also carries the Count-Min frequency sketch
-  (build/merge/query), the Bloom membership filter (63-bit words,
-  OR-mergeable), and CMS-pre-screened exact heavy hitters — shuffle
-  bounded by cells/words, never cardinality.
-- :mod:`dsir` — DSIR importance resampling (hashed-n-gram bucket
-  models, log-ratio scoring, deterministic Gumbel-top-k selection).
-- :mod:`fusion` — Reciprocal Rank Fusion for hybrid retrieval with
-  integer-exact fused scores.
-- :mod:`robots` — robots.txt parsing + RFC 9309 allow/deny evaluation
-  (crawl-compliance filtering as a host join).
-- :mod:`split` also carries deterministic negative sampling
-  (md5-rank indexing) and stride-scheduled source interleaving;
-  :mod:`similarity` adds cosine-band hard-negative mining.
-- :mod:`classifier` — fastText-style quality-filter inference over the
-  DSIR hashed-n-gram feature space (broadcast weight vector, per-row
-  ordered fold, logit-space thresholding — no distributed sigmoid).
-- :mod:`substrings` — exact repeated-substring removal (Lee 2021
-  ExactSubstr at fixed-gram granularity): CMS-screened gram
-  frequencies, per-row interval merge + splice — shared spans >=
-  min_len removed completely, corpus text never shuffles.
-- :mod:`dedup` also carries the LSH index maintenance pass
-  (``compact_minhash_index`` + ``minhash_index_stats``) for the
-  incremental-dedup side-table; :mod:`sketch` adds
-  ``windowed_heavy_hitters``, the exact streaming-history heavy-hitter
-  pass over persisted ``streaming_cms_cells`` state.
+- :mod:`dedup` — exact, MinHash-LSH (banded, never all-pairs), SimHash and
+  exact n-gram Jaccard (AllPairs/PPJoin) dedup, connected components, and
+  the LSH index maintenance pass for incremental dedup.
+- :mod:`similarity` / :mod:`ivf` — cosine top-k (exact, LSH multi-probe,
+  partition-pruned, coarse-quantized ANN) and hard-negative mining.
+- :mod:`text` — tokens, quality stats, language ID, TF-IDF, fingerprints,
+  Gopher-style repetition, PII scrubbing; :mod:`decontam` — benchmark
+  n-gram decontamination.
+- :mod:`chunking` — zero-shuffle chunking and greedy sequence packing;
+  :mod:`split` — md5-bucket splits, stable and negative sampling,
+  stride-scheduled source interleaving.
+- :mod:`vectors` — partitioning-independent vector folds, prototypes and
+  engine-exact k-means; :mod:`multimodal` — Arrow-batched binary decode.
+- :mod:`chat` — rendering with exact content and loss-mask spans;
+  :mod:`normalize` / :mod:`web` — NFKC, HTML-to-text, JSON sidecars.
+- :mod:`sketch` — Count-Min, Bloom and CMS-screened exact (and windowed)
+  heavy hitters: shuffle bounded by cells, never by cardinality.
+- :mod:`dsir` importance resampling, :mod:`fusion` reciprocal rank
+  fusion, :mod:`robots` RFC 9309 filtering, :mod:`classifier`
+  fastText-style scoring, :mod:`substrings` repeated-substring removal.
 
-Design invariant: every hash these operators use is an ``md5`` hex string —
-portable across engines — so each operator has an exact ANSI-SQL oracle
-(the driver's DuckDB correctness gate runs them side by side). All hot-path
-logic is built from ``pyspark.sql.functions`` (JVM/codegen); Python appears
-only in the multimodal decode boundary, by design, as Arrow-batched
-``mapInPandas``.
+Every hash is an ``md5`` hex string, portable across engines, so each
+operator has an exact ANSI-SQL oracle (the driver's DuckDB gate). Hot
+paths are ``pyspark.sql.functions``; Python runs only at the multimodal
+decode boundary, as Arrow-batched ``mapInPandas``.
+
+``llmops.<module>`` and ``llmops.<public function or class>`` resolve
+lazily and import only the module that defines them.
 """
 
-from data_validation_engine_spark.llmops.analytics import (
-    frequent_items,
-    impute_nulls,
-    winsorize,
-    grouped_quantiles,
-    outlier_flags,
-    profile_diff,
-    quantile_buckets,
-    sampled_quantiles,
-    grouped_topk,
-    profile_columns,
-    rolling_agg,
-)
-from data_validation_engine_spark.llmops.graph import (
-    pagerank,
-    triangle_count,
-)
-from data_validation_engine_spark.llmops.linkage import (
-    fuzzy_dedup_pairs,
-    fuzzy_string_join,
-)
-from data_validation_engine_spark.llmops.robots import (
-    parse_robots,
-    robots_allowed,
-)
-from data_validation_engine_spark.llmops.fusion import (
-    rank_by_score,
-    rrf_fuse,
-)
-from data_validation_engine_spark.llmops.dsir import (
-    dsir_bucket_counts,
-    dsir_log_ratio,
-    dsir_score,
-    gumbel_topk,
-    gumbel_topk_grouped,
-    ngram_buckets,
-)
-from data_validation_engine_spark.llmops.sketch import (
-    kmv_distinct,
-    kmv_merge,
-    kmv_set_estimates,
-    kmv_sketch,
-)
-from data_validation_engine_spark.llmops.asof import (
-    asof_join,
-)
-from data_validation_engine_spark.llmops.chunking import (
-    chunk_by_content,
-    chunk_by_sentences,
-    chunk_documents,
-    pack_sequences,
-)
-from data_validation_engine_spark.llmops.chat import (
-    conversation_stats,
-    render_chat,
-    token_loss_mask,
-)
-from data_validation_engine_spark.llmops.chunking import (
-    materialize_packs,
-)
-from data_validation_engine_spark.llmops.classifier import (
-    classifier_filter,
-    classifier_fit,
-    classifier_score,
-)
-from data_validation_engine_spark.llmops.compress import (
-    compression_ratio,
-)
-from data_validation_engine_spark.llmops.normalize import (
-    fix_mojibake,
-    mojibake_stats,
-    normalize_text,
-)
-from data_validation_engine_spark.llmops.paragraphs import (
-    split_sentences,
-)
-from data_validation_engine_spark.llmops.substrings import (
-    remove_repeated_substrings,
-    repeated_substring_spans,
-)
-from data_validation_engine_spark.llmops.stats import (
-    standardize,
-)
-from data_validation_engine_spark.llmops.sketch import (
-    bloom_build,
-    bloom_merge,
-    bloom_might_contain,
-    cms_build,
-    cms_merge,
-    cms_query,
-    heavy_hitters,
-)
-from data_validation_engine_spark.llmops.split import (
-    temperature_targets,
-)
-from data_validation_engine_spark.llmops.web import (
-    canonicalize_url,
-    extract_anchor_texts,
-    extract_html_text,
-    extract_links,
-    host_suffixes,
-    parse_json_column,
-    url_blocklist,
-    url_host,
-)
-from data_validation_engine_spark.llmops.pq import (
-    default_codebooks,
-    ivf_pq_topk,
-    ivf_pq_topk_many,
-    pq_codebooks_from_rows,
-    pq_codebooks_to_rows,
-    pq_encode,
-    pq_fit,
-    pq_topk,
-    pq_topk_many,
-    probe_cells_col,
-)
-from data_validation_engine_spark.llmops.recall import ann_recall, pair_recall
-from data_validation_engine_spark.llmops.gopher import (
-    gopher_quality_flags,
-    gopher_repetition_flags,
-)
-from data_validation_engine_spark.llmops.c4 import c4_clean
-from data_validation_engine_spark.llmops.decontam import (
-    decontaminate,
-    decontaminate_bloom,
-)
-from data_validation_engine_spark.llmops.dedup import (
-    connected_components,
-    connected_components_star,
-    containment_pairs,
-    exact_dedup,
-    incremental_exact_dedup,
-    incremental_minhash_dedup,
-    incremental_ngram_dedup,
-    compact_minhash_index,
-    minhash_index,
-    minhash_index_stats,
-    minhash_dedup,
-    minhash_pairs,
-    ngram_jaccard_pairs,
-    shingle_occurrence_rows,
-    simhash,
-    simhash_pairs,
-    simhash_table,
-    with_shingles,
-)
-from data_validation_engine_spark.llmops.interval import (
-    interval_join,
-)
-from data_validation_engine_spark.llmops.ivf import (
-    default_centroids,
-    ivf_assign,
-    ivf_stats,
-    ivf_topk,
-)
-from data_validation_engine_spark.llmops.similarity import (
-    ann_topk,
-    ann_topk_partitioned,
-    cosine_topk,
-    embedding_bucket_index,
-    embedding_neardup_pairs,
-    hard_negative_samples,
-    incremental_embedding_dedup,
-    knn_join,
-    multiprobe_ann_topk,
-    with_lsh_bucket,
-    write_lsh_partitioned,
-)
-from data_validation_engine_spark.llmops.split import (
-    corpus_mix,
-    deterministic_sample,
-    exact_quota_sample,
-    select_token_budget,
-    hash_bucket,
-    hash_split,
-    interleave_sources,
-    negative_samples,
-    stratified_sample,
-    weighted_keep,
-    weighted_sample,
-)
-from data_validation_engine_spark.llmops.vectors import (
-    dequantize_col,
-    grouped_vector_sum,
-    kmeans_fit,
-    label_centroids,
-    nearest_centroid,
-    project_vectors,
-    projection_matrix,
-    quantize_vectors,
-)
-from data_validation_engine_spark.llmops.text import (
-    bm25_search,
-    build_vocab,
-    encode_tokens,
-    vocab_ids,
-    language_id,
-    pii_scrub,
-    quality_filters,
-    repetition_stats,
-    script_profile,
-    term_frequencies,
-    text_fingerprint,
-    text_stats,
-    tfidf_top_terms,
-)
+import importlib
+import re
+from functools import cache
+from pathlib import Path
 
-__all__ = [
-    "ann_recall",
-    "pair_recall",
-    "c4_clean",
-    "default_codebooks",
-    "gopher_quality_flags",
-    "gopher_repetition_flags",
-    "host_suffixes",
-    "ivf_pq_topk",
-    "ivf_pq_topk_many",
-    "ivf_stats",
-    "pq_codebooks_from_rows",
-    "pq_codebooks_to_rows",
-    "pq_encode",
-    "pq_fit",
-    "pq_topk",
-    "pq_topk_many",
-    "probe_cells_col",
-    "url_blocklist",
-    "url_host",
-    "asof_join",
-    "containment_pairs",
-    "grouped_topk",
-    "incremental_exact_dedup",
-    "incremental_minhash_dedup",
-    "incremental_ngram_dedup",
-    "compact_minhash_index",
-    "minhash_index",
-    "minhash_index_stats",
-    "interval_join",
-    "rolling_agg",
-    "connected_components",
-    "connected_components_star",
-    "deterministic_sample",
-    "exact_quota_sample",
-    "select_token_budget",
-    "exact_dedup",
-    "minhash_dedup",
-    "minhash_pairs",
-    "ngram_jaccard_pairs",
-    "stratified_sample",
-    "shingle_occurrence_rows",
-    "simhash",
-    "simhash_pairs",
-    "simhash_table",
-    "with_shingles",
-    "ann_topk",
-    "ann_topk_partitioned",
-    "cosine_topk",
-    "default_centroids",
-    "embedding_bucket_index",
-    "embedding_neardup_pairs",
-    "hard_negative_samples",
-    "incremental_embedding_dedup",
-    "ivf_assign",
-    "ivf_topk",
-    "kmeans_fit",
-    "knn_join",
-    "multiprobe_ann_topk",
-    "with_lsh_bucket",
-    "write_lsh_partitioned",
-    "hash_bucket",
-    "corpus_mix",
-    "hash_split",
-    "interleave_sources",
-    "negative_samples",
-    "weighted_keep",
-    "weighted_sample",
-    "build_vocab",
-    "chunk_by_content",
-    "chunk_by_sentences",
-    "chunk_documents",
-    "classifier_filter",
-    "classifier_fit",
-    "classifier_score",
-    "remove_repeated_substrings",
-    "repeated_substring_spans",
-    "decontaminate",
-    "decontaminate_bloom",
-    "grouped_vector_sum",
-    "quantize_vectors",
-    "project_vectors",
-    "projection_matrix",
-    "dequantize_col",
-    "label_centroids",
-    "language_id",
-    "nearest_centroid",
-    "pack_sequences",
-    "pii_scrub",
-    "quality_filters",
-    "repetition_stats",
-    "text_fingerprint",
-    "script_profile",
-    "term_frequencies",
-    "text_stats",
-    "tfidf_top_terms",
-    "bm25_search",
-    "fuzzy_dedup_pairs",
-    "fuzzy_string_join",
-    "grouped_quantiles",
-    "impute_nulls",
-    "winsorize",
-    "kmv_distinct",
-    "kmv_set_estimates",
-    "kmv_sketch",
-    "kmv_merge",
-    "pagerank",
-    "triangle_count",
-    "profile_columns",
-    "encode_tokens",
-    "frequent_items",
-    "outlier_flags",
-    "profile_diff",
-    "quantile_buckets",
-    "sampled_quantiles",
-    "vocab_ids",
-    "render_chat",
-    "conversation_stats",
-    "token_loss_mask",
-    "materialize_packs",
-    "normalize_text",
-    "mojibake_stats",
-    "fix_mojibake",
-    "bloom_build",
-    "dsir_bucket_counts",
-    "parse_robots",
-    "rank_by_score",
-    "robots_allowed",
-    "rrf_fuse",
-    "dsir_log_ratio",
-    "dsir_score",
-    "gumbel_topk",
-    "gumbel_topk_grouped",
-    "ngram_buckets",
-    "bloom_merge",
-    "bloom_might_contain",
-    "cms_build",
-    "cms_merge",
-    "cms_query",
-    "heavy_hitters",
-    "temperature_targets",
-    "canonicalize_url",
-    "extract_anchor_texts",
-    "extract_html_text",
-    "extract_links",
-    "parse_json_column",
-    "compression_ratio",
-    "split_sentences",
-    "standardize",
-]
+_HERE = Path(__file__).parent
+
+
+@cache
+def _definitions() -> dict[str, str]:
+    """Public top-level def/class name -> its module, read from source."""
+    pattern = re.compile(r"^(?:def|class) ([A-Za-z]\w*)\s*[(:]", re.M)
+    return {name: path.stem for path in _HERE.glob("*.py")
+            for name in pattern.findall(path.read_text())}
+
+
+def __getattr__(name: str):
+    if not name.startswith("_") and (_HERE / f"{name}.py").is_file():
+        return importlib.import_module(f"{__name__}.{name}")
+    if name not in _definitions():
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = importlib.import_module(f"{__name__}.{_definitions()[name]}")
+    return getattr(module, name)

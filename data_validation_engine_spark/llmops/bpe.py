@@ -25,7 +25,7 @@ K·O(vocab) work total, corpus touched once.
 
 Driver-oracle split (honest): the corpus-facing stage (word counts →
 round-1 pair statistics) is hash-attested against DuckDB in the
-``bpe_pairstats`` driver row (its own singleton row since round 9); the
+``bpe_pairstats`` driver row; the
 iterative merge loop is not
 SQL-expressible in closed form (per-word greedy sequential collapse),
 so it is pinned by pytest against an independent pure-Python reference
@@ -172,8 +172,8 @@ def bpe_train(
     is independent of K (at real tokenizer scale, K ≈ 30k chained folds
     would blow whole-stage codegen long before memory).
 
-    ``loop_partitions`` (r13 optimization, guide §2.4 — size iterative
-    rounds to THEIR data, not the session default): the merge loop's
+    ``loop_partitions`` (size iterative rounds to THEIR data, not the
+    session default): the merge loop's
     per-round jobs run over the word table, which is VOCABULARY-bounded
     at any corpus scale — a quantity the session's corpus-sized shuffle
     width is wrong for in both directions, and one AQE cannot fix for
@@ -266,7 +266,7 @@ def bpe_encode(
     in training order (greedy per rule, canonical BPE application).
 
     Two application paths, identical results on trained vocabulary
-    (pytest-pinned, tests/test_round9.py):
+    (pytest-pinned, tests/test_bpe.py):
 
     - ``merges=[...]`` — the FOLD path: the merge list is a driver-side
       constant folded into the plan as K chained JVM ``aggregate``

@@ -533,7 +533,7 @@ def chunk_by_content(
             ),
             16,
             10,
-        ).cast("long")  # 60-bit value: long, not decimal (r13)
+        ).cast("long")  # 60-bit value: long, not decimal
         return (h % F.lit(target_tokens)) == 0
 
     cand = F.when(

@@ -75,7 +75,7 @@ def char_ngram_buckets(
                 ),
                 16,
                 10,
-            ).cast("long")  # 60-bit value: long, not decimal (r13)
+            ).cast("long")  # 60-bit value: long, not decimal
             % F.lit(buckets)
         ).cast("int")
 
@@ -254,8 +254,7 @@ def classifier_eval(
     group_cols: list[str] | None = None,
     features_col: str | None = None,
 ) -> DataFrame:
-    """Distributed holdout evaluation of a fitted classifier (r11
-    verdict, Next-round #6): score ``df`` with the same feature space
+    """Distributed holdout evaluation of a fitted classifier: score ``df`` with the same feature space
     and logit-cut decision as :func:`classifier_filter`, compare
     against the 0/1 (or boolean) ``label_col``, and emit ONE row per
     group (one total row without ``group_cols``) of confusion counts
@@ -385,7 +384,7 @@ def classifier_fit(
     # cast FIRST so boolean label columns (a natural keep/drop store)
     # become 1.0/0.0 before the 0/1 validation — comparing boolean vs
     # int literals under Spark 4 ANSI analysis would fail instead of
-    # giving the documented loud error (ADVICE r11)
+    # giving the documented loud error
     _lbl = F.col(label_col).cast("double")
     label = (
         F.when(_lbl.isin(0.0, 1.0), _lbl)

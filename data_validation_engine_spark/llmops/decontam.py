@@ -73,12 +73,11 @@ def _gram_hits(
     n-gram in ``benchmark`` — the exact-overlap core shared by
     :func:`decontaminate` (matched = whole corpus) and
     :func:`decontaminate_bloom` (matched = the screened suspects only)."""
-    # Shingles as codegen OCCURRENCE rows, hashed as a plain projection
-    # (r13 round 2, guide §4.1): the previous shingles_col +
-    # F.transform(md5) walk evaluated interpreted per element (~14x
-    # slower measured). Occurrence rows may repeat a gram within a doc,
-    # so the hit count dedupes with countDistinct — identical to the
-    # old count over the per-doc-distinct array.
+    # Shingles as codegen OCCURRENCE rows, hashed as a plain projection:
+    # a shingles_col + F.transform(md5) walk evaluates interpreted per
+    # element (~14x slower measured). Occurrence rows may repeat a gram
+    # within a doc, so the hit count dedupes with countDistinct —
+    # identical to a count over the per-doc-distinct array.
     # the benchmark side needs no id column — only its text shingles
     bench_grams = (
         shingle_occurrence_rows(
@@ -147,9 +146,9 @@ def decontaminate_bloom(
     fetch, the documented class) and shipped back as a 1-row broadcast
     array — so the corpus-side screen never joins against a
     benchmark-sized table and never shuffles text. The probe runs over
-    EXPLODED shingle rows as plain codegen projections (r13 round 2,
-    guide §4.1 — the previous ``exists``/``forall`` nested-lambda
-    formulation evaluated every md5 and bit test interpreted): k md5
+    EXPLODED shingle rows as plain codegen projections (an
+    ``exists``/``forall`` nested-lambda formulation would evaluate every
+    md5 and bit test interpreted): k md5
     bit positions per gram, an AND of bitmask tests against the
     broadcast word array, then the suspect ids collapse through a
     map-side-combined distinct — the only exchange is that id sliver

@@ -134,8 +134,7 @@ def shingle_occurrence_rows(
     """``(id, shingle)`` OCCURRENCE rows — one per n-gram start
     position, NOT deduplicated per document.
 
-    Fastest shingle generator in the module (r13 round 2, guide §4.1):
-    explode the start positions and assemble each n-gram with
+    Fastest shingle generator in the module: explode the start positions and assemble each n-gram with
     ``slice`` + ``concat_ws`` as plain projections after the Generate —
     everything runs in whole-stage codegen with ZERO shuffle (no
     window, no distinct), ~14x faster than the higher-order
@@ -267,14 +266,13 @@ def minhash_pairs(
     # array_min(transform(...)) lambda computes the same values but
     # evaluates interpreted and compiles a very large generated class).
     # min() over a multiset equals min() over its set, so the zero-shuffle
-    # occurrence rows feed the signatures unchanged (r13, guide §4.1).
-    # r14 (guide §2.3, shuffle fewer bytes): the verification shingle sets
-    # NO LONGER ride this exchange — r13 carried a collect_list of every
-    # document's shingles through the signature aggregation so ReuseExchange
-    # could share it with the verify sides, but only banding SURVIVORS ever
-    # need their sets, and the full-corpus array payload cost more than the
-    # shared exchange saved (dedup_minhash min +5% in the r13 artifact).
-    # The sets are now aggregated AFTER banding, over candidate ids only.
+    # occurrence rows feed the signatures unchanged.
+    # The verification shingle sets do NOT ride this exchange: only
+    # banding SURVIVORS need their sets, and a collect_list of every
+    # document's shingles here (shared with the verify sides through
+    # ReuseExchange) costs more in full-corpus array payload than the
+    # shared exchange saves (dedup_minhash min +5% measured). The sets are
+    # aggregated AFTER banding, over candidate ids only.
     sig = shingled.groupBy(id_col).agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"mh{i}|"), F.col("shingle")))).alias(
@@ -424,12 +422,12 @@ def ngram_jaccard_pairs(
     dfreq = shingled.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("__df")
     )
-    # r14 (guide §2.4, window-count fusion): per-doc set size as a
-    # count over the SAME id-partitioned window the rank runs in — the
-    # dfreq inner join keeps every shingled row (dfreq covers every
-    # distinct shingle of the same frame), so the windowed count equals
-    # the former separate groupBy(id) aggregation + join-back, minus
-    # that aggregation's exchange and the join.
+    # Window-count fusion: per-doc set size as a count over the SAME
+    # id-partitioned window the rank runs in — the dfreq inner join keeps
+    # every shingled row (dfreq covers every distinct shingle of the same
+    # frame), so the windowed count equals a separate groupBy(id)
+    # aggregation + join-back, minus that aggregation's exchange and the
+    # join.
     w_id = Window.partitionBy(id_col)
     w = w_id.orderBy(F.col("__df").asc(), F.col("shingle").asc())
     prefix = (
@@ -1067,7 +1065,7 @@ def incremental_ngram_dedup(
 
     sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    # r14 window-count fusion (guide §2.4): the prefix's per-doc size
+    # Window-count fusion: the prefix's per-doc size
     # rides the rank window's own id partitioning instead of joining the
     # sizes aggregate back in (sizes stays — the AllPairs length filter
     # below still needs it as a standalone frame).
@@ -1176,7 +1174,7 @@ def minhash_index(
     sig_names = [f"mh_{i}" for i in range(num_hashes)]
     # occurrence rows: min() over a multiset equals min() over its set,
     # so the zero-shuffle codegen generator feeds the signature
-    # aggregation directly (r13 round 2, guide §4.1)
+    # aggregation directly
     shingled = shingle_occurrence_rows(
         df, id_col, text_col, shingle_size=shingle_size
     )
@@ -1270,7 +1268,7 @@ def incremental_minhash_dedup(
         .distinct()
     )
     # set-semantic Jaccard verify: duplicate-insensitive, so the
-    # zero-shuffle occurrence generator applies (r13 round 2)
+    # zero-shuffle occurrence generator applies
     shingled = shingle_occurrence_rows(
         union_text.join(ids_needed, on=id_col, how="left_semi"),
         id_col,
@@ -1317,7 +1315,7 @@ def containment_pairs(
     shingled = shingled.localCheckpoint(eager=True)
     sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    # r14 window-count fusion (guide §2.4): see ngram_jaccard_pairs —
+    # Window-count fusion, as in ngram_jaccard_pairs:
     # the prefix's per-doc size rides the rank window's id partitioning;
     # sizes stays for the containment denominator below.
     w_id = Window.partitionBy(id_col)
@@ -1403,9 +1401,8 @@ def compact_minhash_index(
     live: DataFrame,
     id_col: str,
 ) -> DataFrame:
-    """Maintenance pass for a persisted :func:`minhash_index` side-table
-    (the r10-verdict gap: the incremental-dedup index grows forever as
-    batches append).
+    """Maintenance pass for a persisted :func:`minhash_index` side-table,
+    which otherwise grows forever as incremental-dedup batches append.
 
     Two kinds of garbage accumulate in an append-only index:
 

@@ -95,7 +95,7 @@ def ngram_buckets(
                 ),
                 16,
                 10,
-            ).cast("long")  # 60-bit value: long, not decimal (r13)
+            ).cast("long")  # 60-bit value: long, not decimal
             % F.lit(buckets)
         ).cast("int")
 
@@ -132,7 +132,7 @@ def dsir_bucket_counts(
     summing — persist per-batch counts and never re-scan raw text.
 
     ``features_col`` names a precomputed :func:`ngram_buckets` array
-    column (r13 optimization, guide §1.2): a caller scoring target AND
+    column: a caller scoring target AND
     raw counts AND per-doc features hashes each gram once into a shared
     (usually persisted) feature frame instead of once per consumer. The
     column must be built with the same n_max/buckets/seed/lowercase —

@@ -4,7 +4,7 @@ in week W come back in week W+k; how far into signup→activate→convert
 does each user get) expressed as engine-exact integer arithmetic.
 
 Timestamps enter as **epoch-microsecond longs** (the repo-wide
-round-8 convention: derive them JVM-side with ``unix_micros`` over an
+convention: derive them JVM-side with ``unix_micros`` over an
 explicit TIMESTAMP schema so no session-timezone or pandas hop can
 shift them — see FLOATS.md).
 

@@ -70,8 +70,7 @@ def _cell_col(vec: Column, centroids: list[list[float]]) -> Column:
     array of (distance, cell) structs -> array_min -> lexicographic min
     picks the smallest distance, lower cell id on ties.
 
-    r13 optimization (guide §1.2 per-task work, measured): the
-    centroid grid rides as ONE nested-array literal traversed by a
+    The centroid grid rides as ONE nested-array literal traversed by a
     ``transform`` lambda, instead of K independently-planned
     ``l2sq(vec, lit_k)`` subtrees — the arithmetic per (row, centroid)
     is the identical index-order fold, but the analyzed plan shrinks

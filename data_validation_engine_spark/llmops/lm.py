@@ -44,10 +44,10 @@ def _gram_rows(
 ) -> DataFrame:
     """``keep_cols + (gram)`` occurrence rows: every character n-gram of
     ``lower(text)`` with runs of whitespace collapsed to one space.
-    Explode-first shape (r13 round 2, guide §4.1): positions Generate,
-    the gram substring projects after — all whole-stage codegen, zero
-    shuffle. (The previous ``F.transform`` array builder evaluated its
-    lambda interpreted per element.) Docs shorter than ``n`` emit
+    Explode-first shape: positions Generate, the gram substring
+    projects after — all whole-stage codegen, zero shuffle (an
+    ``F.transform`` array builder would evaluate its lambda interpreted
+    per element). Docs shorter than ``n`` emit
     nothing, exactly like the empty-array formulation."""
     t = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     return (

@@ -76,7 +76,7 @@ def fake_decoder(payload: bytes) -> list[float]:
     Arrow plumbing end to end without an image/audio library. Vectorised
     over the payload (numpy byte view, exact int64 sum, then ONE double
     division — bit-identical to the pure-Python float path, ~10x less
-    per-payload CPU; round-5 bench flagged the decode floor)."""
+    per-payload CPU)."""
     if not payload:
         return [0.0, 0.0, 0.0, 0.0]
     import numpy as np

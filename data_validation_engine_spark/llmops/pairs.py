@@ -4,7 +4,7 @@ The candidate stage of MinHash dedup and embedding near-dup is a self-join
 on a bucket key. A plain equi-join puts EVERY pair of a bucket into the one
 task that owns the bucket's key, so a single hot bucket of n rows (near-
 duplicate-heavy corpora produce exactly this) costs n² inside one task —
-the last 100 TB scale hazard flagged in round 2/3 review.
+a scale hazard at 100 TB.
 
 ``bounded_self_join`` makes the per-task input size a constant: each bucket
 of n rows is split into ``S = ceil(n / max_bucket_rows)`` contiguous blocks

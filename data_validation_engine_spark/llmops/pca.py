@@ -76,8 +76,7 @@ def moment_stats(
     lambda-interpreted multiplies per row — Spark never codegens
     lambda bodies), the dominant CPU line of a PCA fit at scale.
 
-    ``method="fast"`` — the vectorized production path (r10 verdict,
-    Next-round #4): one numpy ``Xᵀ·X`` per Arrow batch inside
+    ``method="fast"`` — the vectorized production path: one numpy ``Xᵀ·X`` per Arrow batch inside
     ``mapInPandas`` (~100× fewer interpreter dispatches), partials
     summed by position in one tiny (d + d(d+1)/2 key) shuffle. Batch
     and partition addition order is NOT pinned, so the low-order float

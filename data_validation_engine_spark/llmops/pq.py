@@ -147,7 +147,7 @@ def pq_fit(
 def _checked_size(arr: Column, expected: int, what: str) -> Column:
     """Fail loudly on a corpus row whose array length disagrees with
     the codebook geometry — ``zip_with``/``slice`` would otherwise pad
-    with NULLs and silently drop the row from ranking (r12 ADVICE)."""
+    with NULLs and silently drop the row from ranking."""
     return F.when(F.size(arr) == F.lit(expected), arr).otherwise(
         F.raise_error(
             F.concat(
@@ -164,8 +164,7 @@ def _code_col(
     """Nearest codeword in subspace ``s``: squared-L2 argmin over the
     codeword literals, ties to the lower code (the IVF cell rule).
 
-    r13 optimization (guide §1.2 per-task work, measured): the
-    subspace's codebook rides as ONE nested-array literal traversed by
+    The subspace's codebook rides as ONE nested-array literal traversed by
     a ``transform`` lambda instead of k independently-planned
     ``l2sq(sub, lit_k)`` subtrees — identical index-order folds and
     identical ``array_min`` struct tie rule, but the analyzed plan
@@ -503,7 +502,7 @@ def _books_lit(codebooks: list[list[list[float]]]) -> Column:
     """The full codebook grid as one nested array literal (m × k × dsub
     doubles — a few KB, the same driver-data class as the centroids)."""
     # one parsed SQL expression instead of m*k*dsub py4j lit calls
-    # (r13 optimization — see similarity.dlit_array)
+    # (see similarity.dlit_array)
     return F.expr(
         "array("
         + ",".join(
@@ -624,7 +623,7 @@ def probe_cells_col(
     ``array<int>`` expression — the batched form of the driver-side
     ranked-centroid loop in :func:`ivf_pq_topk` (same squared-L2 folds,
     same lower-cell tie rule via lexicographic struct sort)."""
-    # centroid grid as ONE literal traversed by a lambda (r13 — the
+    # centroid grid as ONE literal traversed by a lambda (the
     # _cell_col convention): identical folds and tie rule, ~K-fold
     # smaller analyzed plan
     scored = F.transform(

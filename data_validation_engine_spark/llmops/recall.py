@@ -1,7 +1,6 @@
 """ANN quality measurement: recall@k of an approximate top-k against
-the exact top-k (r12 verdict, "What's missing" #2 — the tuning target
-for ``n_probe``/``pq_m``/``refine_factor`` that the approximate paths
-otherwise lack).
+the exact top-k — the tuning target for ``n_probe``/``pq_m``/
+``refine_factor`` that the approximate paths otherwise lack.
 
 Recall@k is THE standard ANN quality metric (the ann-benchmarks.com
 convention): for each query, ``|approx ∩ exact| / k``. Both inputs are

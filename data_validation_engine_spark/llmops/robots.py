@@ -21,8 +21,8 @@ per rule, grouped by host); :func:`robots_allowed` collapses them to
 ONE row per host and decides per URL with a pure array fold after the
 host equi-join (AQE broadcasts the dimension side) — the URL stream
 never shuffles, never multiplies by rule count, and the operator
-lifts to Structured Streaming unchanged (r11; previously a per-row-id
-window). No Python, no per-URL state.
+lifts to Structured Streaming unchanged (no per-row-id window). No
+Python, no per-URL state.
 
 Net-new vs the reference (no crawl surface); public spec: RFC 9309,
 "Robots Exclusion Protocol".
@@ -55,7 +55,7 @@ def parse_robots(
     derives from each URL (DNS names are case-insensitive, RFC 4343),
     so the rule table must share that canonicalization or mixed-case
     rule hosts would silently never join and every URL under them
-    would come back allowed (r10 ADVICE fix).
+    would come back allowed.
 
     Implemented as per-row array folds over the body's lines — zero
     shuffle until the final explode. ``match_regex`` is the compiled
@@ -214,7 +214,7 @@ def robots_allowed(
     # lowercase BOTH branches: parse_robots lowercases rule hosts
     # unconditionally (the table's invariant), so a precomputed
     # mixed-case host column must fold too or it silently never joins
-    # and every URL under it comes back allowed (ADVICE r11)
+    # and every URL under it comes back allowed
     host = (
         F.lower(F.col(host_col))
         if host_col is not None
@@ -226,14 +226,14 @@ def robots_allowed(
     )
     path = F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^#]*)", 1)
     path = F.when(path == "", F.lit("/")).otherwise(path)
-    # r11 restructure: the rule table collapses to ONE row per host (a
+    # The rule table collapses to ONE row per host (a
     # dimension-sized aggregation) and the decision becomes a per-URL
     # fold over that host's rule array — no per-row-id window, so the
     # URL side never shuffles and never multiplies by its rule count,
     # and the operator lifts to Structured Streaming unchanged
-    # (stream-static equi-join + projection; the old window/
-    # monotonically_increasing_id shape was batch-only). Semantics are
-    # identical: the decisive rule maximises pattern_len*2 +
+    # (stream-static equi-join + projection; a window/
+    # monotonically_increasing_id shape would be batch-only). The
+    # decisive rule maximises pattern_len*2 +
     # (allow ? 1 : 0) over the selected group's matching rules — the
     # longest pattern wins and allow wins length ties — and no match /
     # no group / no rules means allowed.

@@ -58,12 +58,10 @@ def _dbl_sql(v: float) -> str:
 def dlit_array(values) -> Column:
     """``array<double>`` literal built as ONE parsed SQL expression.
 
-    r13 optimization (guide §1.2): the per-element ``F.lit`` spelling
-    costs one py4j round trip per element — ~0.8s of driver time for a
-    1000-double grid rebuilt on every query construction. One
-    ``F.expr`` parse is ~50x cheaper and yields the identical
-    ``array(CAST(..))`` expression (value-identity pinned in
-    tests/test_opt_r13.py)."""
+    The per-element ``F.lit`` spelling costs one py4j round trip per
+    element — ~0.8s of driver time for a 1000-double grid rebuilt on
+    every query construction. One ``F.expr`` parse is ~50x cheaper and
+    yields the identical ``array(CAST(..))`` expression."""
     return F.expr(
         "array(" + ",".join(_dbl_sql(v) for v in values) + ")"
     )
@@ -688,7 +686,7 @@ def hard_negative_samples(
     :func:`~data_validation_engine_spark.llmops.split.negative_samples`,
     and a strong setup mixes both). Returns ``(id_col, rank,
     neighbour, cosine)``, rank 1-based by descending cosine inside the
-    band (r10 ADVICE fix: the column is named ``neighbour``, the
+    band (the column is named ``neighbour``, the
     :func:`knn_join` convention — alias it to ``neg_id`` downstream if
     that name is wanted).
 

@@ -337,7 +337,7 @@ def _cms_row_col(value: Column, r: int, width: int, seed: str) -> Column:
     digest = F.md5(F.concat(F.lit(f"{seed}|cms{r}|"), keyed))
     return (
         # 60-bit value: long arithmetic, not decimal — same result
-        # (15 hex chars < 2^63), measurably cheaper per gram (r13)
+        # (15 hex chars < 2^63), measurably cheaper per gram
         F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
         % F.lit(width)
     ).cast("int")
@@ -490,7 +490,7 @@ def _bloom_position(
     )
     digest = F.md5(F.concat(F.lit(f"{seed}|bloom{h}|"), keyed))
     return (
-        # 60-bit value: long, not decimal (r13 — see _cms_col)
+        # 60-bit value: long, not decimal (see _cms_col)
         F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
         % F.lit(m_bits)
     ).cast("int")
@@ -647,7 +647,7 @@ def cms_screen(
     ``min_count`` is ever screened out.
 
     Expressed as a conjunction of per-row "col in hot-column-set"
-    tests over plain literal InSets (r13, guide §1.2/§4.1): no 1-row
+    tests over plain literal InSets: no 1-row
     broadcast join, no array<array> literal, no interpreted
     transform/element_at walk per input row — and codegen
     short-circuits the AND, so the non-hot majority stops after hash
@@ -742,8 +742,8 @@ def windowed_heavy_hitters(
     check_totals: bool = False,
 ) -> DataFrame:
     """EXACT per-window heavy hitters on an unbounded stream's history
-    — the streaming lift of :func:`heavy_hitters` (r10 verdict,
-    Next-round #6c): ``(window_start, value, n)`` for every value with
+    — the streaming lift of :func:`heavy_hitters`: ``(window_start,
+    value, n)`` for every value with
     at least ``min_count`` occurrences in its tumbling window.
 
     The streaming side never holds per-value state: run
@@ -769,8 +769,8 @@ def windowed_heavy_hitters(
     never saw: an event the streaming pass's watermark dropped as late
     (yet which remains in the raw ``events`` table) lowers the cell
     estimate below the true raw count, and a true heavy hitter whose
-    estimate falls under ``min_count`` would be silently screened out
-    (ADVICE r11). Either probe exactly the events the streaming pass
+    estimate falls under ``min_count`` would be silently screened out.
+    Either probe exactly the events the streaming pass
     admitted, or pass ``check_totals=True`` for a cheap consistency
     gate: per PROBED window, ``sum(cells.n)`` must equal ``depth`` ×
     the window's probed-event count (each event increments exactly
@@ -853,7 +853,7 @@ def windowed_heavy_hitters(
     # estimate >= min_count  <=>  every one of the value's depth cells
     # reads >= min_count: spelled as a short-circuiting conjunction of
     # scalar map lookups instead of an interpreted transform walk over
-    # the cell array (r13 — the heavy_hitters screen convention; here
+    # the cell array (the heavy_hitters screen convention; here
     # the cells vary per window so the lookup stays a broadcast join,
     # but the non-hot majority still stops after hash row 0)
     screen = None

@@ -607,7 +607,7 @@ def negative_samples(
                                 # and silently vanish at the rank
                                 # equi-join — fail loudly instead,
                                 # matching interleave_sources /
-                                # select_token_budget (r10 ADVICE fix)
+                                # select_token_budget
                                 F.when(
                                     F.col(anchor_col).isNotNull(),
                                     F.col(anchor_col).cast("string"),
@@ -631,7 +631,7 @@ def negative_samples(
                     ),
                     16,
                     10,
-                ).cast("long")  # 60-bit value: long, not decimal (r13)
+                ).cast("long")  # 60-bit value: long, not decimal
                 % F.col("__pool_n")
             ).cast("long"),
         )

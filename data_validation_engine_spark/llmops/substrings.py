@@ -29,7 +29,7 @@ doc-frequency group-by instead of paying two wasted sketch passes
 per-row folds. The only data-sized shuffle is the narrow
 ``(hash, id)`` frequency exchange; the corpus text never shuffles.
 
-Collision caveat (ADVICE r11): anchors are 60-bit md5-prefix hashes
+Collision caveat: anchors are 60-bit md5-prefix hashes
 with no exact-text verify, so "exact" holds up to hash collisions —
 at the trillions-of-grams scale this module targets, a cold gram that
 collides with a hot one marks a non-repeated span hot and excises
@@ -75,9 +75,8 @@ def marked_positions(
     gram's text so an exact-verify pass can close the hash-collision
     window without re-touching the corpus).
 
-    Split out of :func:`repeated_substring_spans` in the r13
-    optimization round (guide §1.2): the hash-replay and exact-verify
-    span tables differ only in a filter over THIS frame, so a caller
+    Kept apart from :func:`repeated_substring_spans` because the
+    hash-replay and exact-verify span tables differ only in a filter over THIS frame, so a caller
     needing both (e.g. the roster row proving the two modes against
     independent oracles) computes the corpus gram hashing + CMS screen
     once — ideally on a persisted ``marked`` frame — instead of once
@@ -94,13 +93,12 @@ def marked_positions(
         cms_screen,
     )
 
-    # Positions as an EXPLODE-FIRST pipeline (r13 round 2, guide
-    # §4.1/§1.2): explode the start positions and hash each gram as a
-    # plain projection AFTER the Generate, all inside one
-    # whole-stage-codegen span. The previous shape built the per-doc
-    # hash array with ``F.transform`` — a higher-order function whose
-    # lambda body Spark evaluates INTERPRETED per element — and paid
-    # that interpreted md5 walk on every scan. Nothing here shuffles:
+    # Positions as an EXPLODE-FIRST pipeline: explode the start positions
+    # and hash each gram as a plain projection AFTER the Generate, all
+    # inside one whole-stage-codegen span. A per-doc hash array built
+    # with ``F.transform`` — a higher-order function whose lambda body
+    # Spark evaluates INTERPRETED per element — would pay that
+    # interpreted md5 walk on every scan. Nothing here shuffles:
     # Generate + Project pipeline row-at-a-time in the same stage, so
     # the text is never copied per generated row.
     t = F.coalesce(F.col(text_col), F.lit(""))
@@ -125,7 +123,7 @@ def marked_positions(
             "long"
         ),
     )
-    # Scale-adaptive screen cutover (r13 round 2, guide §1.1/§2.1): the
+    # Scale-adaptive screen cutover: the
     # CMS screen only discriminates when a cell's EXPECTED load stays
     # below the threshold — avg cell count = total grams / width; once
     # that reaches ``min_docs`` essentially every cell reads hot, the
@@ -319,8 +317,8 @@ def remove_repeated_substrings(
 
     ``spans`` supplies a PRE-COMPUTED :func:`repeated_substring_spans`
     frame (same ``df``/``id_col``/span parameters — the caller owns
-    that contract) and skips the internal span pipeline: the r13
-    optimization lever for callers that need both the span table and
+    that contract) and skips the internal span pipeline, for callers
+    that need both the span table and
     the scrubbed corpus (one gram-hash + CMS pass instead of two)."""
     if spans is None:
         spans = repeated_substring_spans(

@@ -294,8 +294,7 @@ def term_frequencies(
 ) -> DataFrame:
     """Per-document term frequencies: ``(id, term, tf)``.
 
-    The shared base of the corpus-term family (r14 optimization, guide
-    §1.2 "don't compute things you throw away"): :func:`tfidf_top_terms`,
+    The shared base of the corpus-term family: :func:`tfidf_top_terms`,
     :func:`build_vocab` and :func:`build_postings` each start from
     exactly this tokenize → explode → (id, term) count — computing it
     once and passing it via their ``tf=`` parameter removes two of the
@@ -335,12 +334,11 @@ def tfidf_top_terms(
     ``top_n=1`` (the common "label each doc" call) replaces the ranking
     window with a ``min_by`` aggregation over the identical total order
     — one map-side-combining agg instead of a doc-keyed shuffle + full
-    per-partition sort (r13 optimization, guide §2.2: shuffle fewer
-    bytes / avoid corpus sorts); the ordering struct is unique per doc
+    per-partition sort; the ordering struct is unique per doc
     (terms are distinct after the tf aggregation), so the argmin is
     deterministic and the rows are exactly the window path's.
     ``tf`` accepts a precomputed :func:`term_frequencies` frame so one
-    tokenization pass can feed the whole corpus-term family (r14).
+    tokenization pass can feed the whole corpus-term family.
     """
     if tf is None:
         tf = term_frequencies(df, id_col, text_col)
@@ -412,8 +410,8 @@ def build_vocab(
     aggregation — the irreducible shuffle of any corpus-frequency table.
     No reference counterpart.
 
-    ``tf`` accepts a precomputed :func:`term_frequencies` frame (r14,
-    guide §1.2): the tf rows are one per (doc, term), so
+    ``tf`` accepts a precomputed :func:`term_frequencies` frame: the tf
+    rows are one per (doc, term), so
     ``count(1)`` over them IS the distinct-doc count and ``sum(tf)``
     the total occurrence count — identical values to the direct
     tokenize + two-phase distinct aggregate, one pass cheaper.
@@ -657,8 +655,7 @@ def build_postings(
     whose single-row lists would not fit a task at 100 TB, and they
     carry no retrieval signal. No reference counterpart.
 
-    ``tf`` accepts a precomputed :func:`term_frequencies` frame (r14,
-    guide §1.2) — its ``(id, term, tf)`` rows are exactly this
+    ``tf`` accepts a precomputed :func:`term_frequencies` frame — its ``(id, term, tf)`` rows are exactly this
     function's pre-aggregation, so the posting fold is unchanged.
     """
     if tf is None:

@@ -388,7 +388,7 @@ def canonicalize_url(
     # legal INSIDE a query per RFC 3986, and a greedy '^[^#]*\?' would
     # anchor on the LAST one, silently dropping everything between —
     # distinct URLs would collapse to one canonical dedup key
-    # (r10 ADVICE fix; mirrors the path regex's '[^?#]*' stop)
+    # (mirrors the path regex's '[^?#]*' stop)
     query = F.regexp_extract(u, r"^[^#?]*\?([^#]*)", 1)
     fragment = F.regexp_extract(u, r"#(.*)$", 1)
 

@@ -182,8 +182,8 @@ class AuditLog:
             rows.append(tuple(rec.get(f.name) for f in schema.fields))
 
         # Parquet fallback on a local path: write the partition-layout file
-        # DRIVER-SIDE with pyarrow instead of launching a Spark job (r13,
-        # guide §5 — audit appends are 1-row control-plane writes; the
+        # DRIVER-SIDE with pyarrow instead of launching a Spark job (audit
+        # appends are 1-row control-plane writes; the
         # repartition(1)+dynamic-partition Spark job costs ~0.5 s each on
         # local[32] and the e2e pipeline makes ~5 per submission, making
         # the audit trail its single most expensive component). The file

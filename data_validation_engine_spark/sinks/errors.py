@@ -4,8 +4,8 @@ Replaces the reference's background-thread row writer
 (dve common/error_utils.py:30-173): messages are already a DataFrame, so
 the feed is a single ``write.json`` — no queue, no driver serialisation.
 
-r14 optimization (guide §5, the driver-side 1-row audit-append pattern
-from r13's sinks/audit.py): pipeline early-return paths (entity presence,
+The driver-side 1-row audit-append pattern of sinks/audit.py, applied
+to messages: pipeline early-return paths (entity presence,
 XSD failure) emit a HANDFUL of driver-literal submission messages, and a
 full Spark ``write.json`` job for 2-3 rows costs ~0.75s of job + commit
 protocol. :func:`write_literal_messages_jsonl` writes those known-tiny

@@ -3,7 +3,7 @@
 A real 100 TB crawl-to-corpus pipeline starts from WARC files (the
 Common Crawl / Internet Archive container), not from an
 already-columnar ``(url, html)`` table — this source closes that
-ingestion gap (r11 verdict, "What's missing" #3). Records flow
+ingestion gap. Records flow
 straight into the existing web chain:
 ``read_warc`` → :func:`~data_validation_engine_spark.llmops.web.extract_html_text`
 → ``canonicalize_url`` → :mod:`~data_validation_engine_spark.llmops.robots`.
@@ -35,7 +35,7 @@ the parsed columns (header map, payload bytes); everything downstream
 is JVM-side. ``types`` filtering happens INSIDE the splitter, so
 skipped record types never materialise their payload into Arrow.
 
-Task-memory shape (r12 verdict, "What's wrong" #1): ``binaryFile`` is
+Task-memory shape: ``binaryFile`` is
 not splittable, so the COMPRESSED file necessarily lands whole in one
 task (~1 GiB for a crawl segment) — everything past that is streamed.
 Decompression feeds ~1 MiB slices through ``zlib`` and the record

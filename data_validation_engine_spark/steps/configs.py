@@ -543,7 +543,7 @@ class EmbeddingNearDup(AbstractStep):
     n_tables: int = 1
     dim: int = 64
     threshold: float = 0.9
-    # round 9: when target_name is set, run as the INCREMENTAL admission
+    # when target_name is set, run as the INCREMENTAL admission
     # filter — this entity is the NEW batch, target_name the corpus, and
     # the output keeps only non-near-dup batch rows (optionally probing a
     # pre-built embedding_bucket_index entity instead of bucketing the
@@ -799,7 +799,7 @@ class IncrementalDedup(AbstractStep):
     re-clustering (or even re-pairing) the corpus. ``method="exact"``
     anti-joins 32-byte text-hash keys; ``method="ngram"`` drops a new
     row iff some corpus row or smaller-id new row has exact n-gram
-    Jaccard >= ``threshold``; ``method="minhash"`` (round 9) uses
+    Jaccard >= ``threshold``; ``method="minhash"`` uses
     banded MinHash-LSH candidates (optionally against a pre-built
     persisted index entity, ``index_entity``) verified with exact
     Jaccard — the corpus-scale path where the exact prefix filter is
@@ -1202,7 +1202,7 @@ class SharedSpans(AbstractStep):
     # the thing to persist per corpus version so later batches probe it
     # incrementally (appends are independent rows; no rebuild)
     mode: Literal["pairs", "fingerprints"] = "pairs"
-    # incremental mode (round 10): name a persisted (key, h) winnowing
+    # incremental mode: name a persisted (key, h) winnowing
     # fingerprint index entity and ONLY this entity (the new batch) is
     # fingerprinted — output becomes (new_id, corpus_id, n_shared),
     # corpus×corpus pairs never generated (the dedup_incremental

@@ -1276,7 +1276,7 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    # -- interval / windowed analytics (round 6) ---------------------------
+    # -- interval / windowed analytics -------------------------------------
     def interval_join(
         self, entities: Entities, *, config: configs.IntervalJoin
     ) -> Messages:
@@ -1954,7 +1954,7 @@ class StepEngine:
             l2=config.l2,
         )
         spark = entities[config.entity_name].sparkSession
-        # bucket -2 declares n_buckets (ADVICE r11): a partially read
+        # bucket -2 declares n_buckets: a partially read
         # or written entity that lost TRAILING bucket rows would
         # otherwise reconstruct a smaller feature space and score
         # everything wrong silently — the sentinel lets the consumer
@@ -2117,7 +2117,7 @@ class StepEngine:
                 f"classifier_score: weights entity "
                 f"'{config.weights_entity}' holds no bucket rows"
             )
-        # completeness check (ADVICE r11): classifier_fit writes one
+        # completeness check: classifier_fit writes one
         # row per bucket 0..n_buckets-1, a bias row (-1), and an
         # n_buckets sentinel (-2). A sparser entity (filtered read,
         # partial write) silently SHRINKS the feature space — every
@@ -2282,7 +2282,7 @@ class StepEngine:
         # must be valid Python identifiers, and 'args' is reserved by
         # pyspark's spark.sql(..., args=...) parameter — an entity named
         # 'args' would silently bind as the parameter dict instead of a
-        # {args} template frame (round-9 fix, ADVICE r8)
+        # {args} template frame
         for n in names:
             if not n.isidentifier() or n == "args":
                 reason = (

@@ -16,7 +16,7 @@ every predicate once, ONE message frame for all filters (per-check structs +
 ``array_compact`` + a single ``explode`` — one scan for N filters), one
 ``where`` over the conjunction — all fused by Catalyst into a single scan.
 
-Deliberate deviation (documented per round-1 advice): the reference's sync
+Deliberate deviation: the reference's sync
 stage notifies on ``NOT <pred>`` being truthy, so a NULL predicate drops the
 record silently with no message. Here a NULL predicate both drops the record
 AND emits its failure message — null is treated as failure-with-feedback

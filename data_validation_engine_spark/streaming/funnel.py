@@ -13,8 +13,8 @@ attestation drains a single ``availableNow`` batch where order is
 total (the same contract streaming_sessionize documents).
 
 All timestamp arithmetic is integer epoch-microseconds computed
-JVM-side BEFORE the Python hop (the round-7/8 timezone-immunity
-convention); the step index is likewise resolved JVM-side so the state
+JVM-side BEFORE the Python hop (the timezone-immunity convention); the
+step index is likewise resolved JVM-side so the state
 function never touches strings.
 
 Scale: state is three longs per ACTIVE user; each micro-batch shuffles

@@ -107,7 +107,7 @@ def streaming_sessionize(
     ``unix_micros`` BEFORE the Python hop: the Arrow/pandas timestamp
     conversion localizes to the driver session's timezone, and a non-UTC
     session under DST shifts event spacing non-uniformly — integer-long
-    plumbing is immune by construction (the round-7 driver red-row fix).
+    plumbing is immune by construction.
     """
     if not sdf.isStreaming:
         raise ConfigurationError(

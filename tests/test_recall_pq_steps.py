@@ -5,8 +5,6 @@ against its DuckDB twin on the embeddings table."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +23,7 @@ from __spark_entry__ import (
     _similarity_ivf_oracle,
     _similarity_topk_oracle,
 )
+from test_pq import BOOKS, _codeword_corpus
 
 
 # --- ann_recall library surface -----------------------------------------
@@ -93,15 +92,18 @@ def _duck_recall_arm(method: str, cte: str) -> str:
     """
 
 
+# each arm reads its approximate CTE three times and ``ex`` twice;
+# MATERIALIZED computes every CTE once (DuckDB otherwise inlines a CTE
+# at each reference, and the multiprobe oracle dominates the query)
 _ANN_RECALL_SQL = (
     f"""
-    WITH ex AS (SELECT vec_id FROM ({_similarity_topk_oracle(k=10)})),
-    iv AS (SELECT vec_id FROM ({_similarity_ivf_oracle(k=10)})),
-    ivfull AS (
+    WITH ex AS MATERIALIZED (SELECT vec_id FROM ({_similarity_topk_oracle(k=10)})),
+    iv AS MATERIALIZED (SELECT vec_id FROM ({_similarity_ivf_oracle(k=10)})),
+    ivfull AS MATERIALIZED (
         SELECT vec_id FROM ({_similarity_ivf_oracle(k=10, n_probe=16)})
     ),
-    mp AS (SELECT vec_id FROM ({_multiprobe_ann_oracle(k=10)})),
-    pqt AS (
+    mp AS MATERIALIZED (SELECT vec_id FROM ({_multiprobe_ann_oracle(k=10)})),
+    pqt AS MATERIALIZED (
         SELECT vec_id FROM (
             {_PQ_ADC_CTES.replace("__PQ_K__", "10")}
             SELECT vec_id FROM top
@@ -175,11 +177,6 @@ def test_ann_recall_on_real_ann_paths(spark, sf_dir, duck_oracle):
 
 # --- codebooks entity round-trip ----------------------------------------
 
-BOOKS = [
-    [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [2.0, 2.0]],
-    [[0.0, 0.0], [0.5, 0.5], [1.0, 1.0], [3.0, 0.0]],
-]
-
 
 def test_codebooks_entity_roundtrip_and_validation():
     rows = pq_codebooks_to_rows(BOOKS)
@@ -195,21 +192,11 @@ def test_codebooks_entity_roundtrip_and_validation():
         pq_codebooks_from_rows(rows + [rows[-1]])
 
 
-def _codeword_corpus(spark):
-    rows = [
-        (i, BOOKS[0][a] + BOOKS[1][b])
-        for i, (a, b) in enumerate(itertools.product(range(4), range(4)))
-    ]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-
-
 @pytest.mark.slow
 def test_declared_pq_fit_entity_feeds_similarity_topk(spark):
     """pq_fit -> entity -> similarity_topk(codebooks_entity=...) must
     equal the library path with the same trained codebooks."""
-    df = _codeword_corpus(spark)
+    _, df = _codeword_corpus(spark)
     eng = StepEngine(spark)
     ents = {"emb": df, "query": df.where("vec_id = 13")}
     eng.evaluate(
@@ -439,7 +426,7 @@ def test_declared_full_pq_pipeline(spark):
     the flat batch — five JSON steps, no library calls."""
     from data_validation_engine_spark.llmops.ivf import default_centroids
 
-    df = _codeword_corpus(spark)
+    _, df = _codeword_corpus(spark)
     cents = default_centroids(df, n_cells=4)
     eng = StepEngine(spark)
     ents = {"emb": df, "qs": df.where("vec_id IN (2, 9)")}

@@ -11,8 +11,10 @@ The submission path gets the same treatment for Python-built frames:
 a ``spark.createDataFrame(`` over a Python list is planned as an RDD
 that starts Python workers when evaluated, so each call site on that
 path is pinned below. Importing the pipeline must also leave the llmops
-library unimported, so a submission's setup does not pay for it. The
-driver roster must carry no dead function and no round-layered registry.
+library unimported, so a submission's setup does not pay for it, and a
+step loads only its own operator module. The driver roster must carry no
+dead function and no round-layered registry. Tests are filed by the
+module they test, and code says why, not in which round.
 """
 
 from __future__ import annotations
@@ -127,11 +129,12 @@ def test_pipeline_import_loads_no_llmops_module():
 
 
 #: module-level names that mark a round-layered registry: aliases kept
-#: for an older roster, retired-row lists, oracle merge passes and a
-#: second tier of candidate rows (candidates are proven in their
-#: operator's test file instead)
+#: for an older roster, retired-row lists, oracle merge passes, a second
+#: tier of candidate rows (candidates are proven in their operator's test
+#: file instead) and arms named for a round instead of their surface
 _ROUND_LAYERED = re.compile(
     r"_v[23]$|_RETIRED|_r1[0-9]_oracles|_merge_oracles|^STAGED|^staged_"
+    r"|^q_r1[0-9]_|^_R1[0-9]_"
 )
 
 #: what the driver exposes: the contract functions and the roster table
@@ -143,7 +146,7 @@ def test_driver_has_no_dead_or_round_layered_code():
     the driver contract or its table, or is named by ``tests/`` or
     ``tools/``; and no module-level name marks a round-layered registry
     (a ``_v2`` alias, a retired-row list, an oracle merge pass, a
-    ``STAGED`` table or a ``staged_*`` accessor)."""
+    ``STAGED`` table, a ``staged_*`` accessor or a round-named arm)."""
     import ast
 
     source = (REPO / "__spark_entry__.py").read_text(encoding="utf-8")
@@ -184,6 +187,106 @@ def test_driver_has_no_dead_or_round_layered_code():
         if isinstance(node, ast.FunctionDef) and n not in seen
     )
     assert not dead, f"unreachable driver functions: {dead}"
+
+
+def test_bound_step_loads_only_its_llmops_module():
+    """A bound step imports its function's module when it first runs
+    (``Binding.function``); the rest of the operator library stays
+    unimported. ``text_stats`` lives in ``text``, which uses ``dedup``'s
+    tokenizer, which uses ``pairs``."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys;"
+        "from data_validation_engine_spark.steps import configs;"
+        "from data_validation_engine_spark.steps.engine import BINDINGS;"
+        "BINDINGS[configs.TextStats].function();"
+        "print(sorted(m.rsplit('.', 1)[1] for m in sys.modules"
+        " if m.startswith('data_validation_engine_spark.llmops.')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "['dedup', 'pairs', 'text']"
+
+
+def test_every_llmops_definition_imports_from_the_package():
+    """Each public function or class defined in an ``llmops`` module is an
+    attribute of the package, and no name is defined in two modules."""
+    import importlib
+    import inspect
+
+    from data_validation_engine_spark import llmops
+
+    defined: dict[str, object] = {}
+    for path in sorted(Path(llmops.__file__).parent.glob("*.py")):
+        if path.stem == "__init__":
+            continue
+        module = importlib.import_module(f"{llmops.__name__}.{path.stem}")
+        assert getattr(llmops, path.stem) is module
+        for name, obj in vars(module).items():
+            if name.startswith("_") or not (
+                inspect.isfunction(obj) or inspect.isclass(obj)
+            ):
+                continue
+            if obj.__module__ == module.__name__:
+                assert name not in defined, f"{name} defined twice"
+                defined[name] = obj
+    assert {n for n in defined if getattr(llmops, n) is not defined[n]} == set()
+    assert set(llmops._definitions()) == set(defined)
+
+
+def test_no_test_file_is_named_for_a_round():
+    """Tests are filed by the module they test, ``tests/test_<module>.py``,
+    never by the round that added them."""
+    rounds = re.compile(r"round\d|_r1\d|advice|review_fixes")
+    named = sorted(
+        p.name for p in (REPO / "tests").glob("test_*.py") if rounds.search(p.name)
+    )
+    assert named == []
+
+
+#: round labels and round history; algorithm rounds (label propagation's
+#: "round 1", BPE's "round-1 pair statistics", k-means rounds) do not match
+_NARRATION = re.compile(r"\br1\d\b|OPTIMIZATION_r|[Rr]ound[- ]1\d|Next-round")
+
+
+def _prose(source: str):
+    """``(line, text)`` of every comment and docstring in ``source``;
+    string literals that are data (SQL, fixture text) are not prose."""
+    import ast
+    import io
+    import tokenize
+
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef)):
+            doc = ast.get_docstring(node, clean=False) or ""
+            for i, text in enumerate(doc.splitlines()):
+                yield node.body[0].lineno + i, text
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        if tok.type == tokenize.COMMENT:
+            yield tok.start[0], tok.string
+
+
+def test_no_round_narration_in_code():
+    """Comments and docstrings in the library, the driver, ``bench.py`` and
+    ``tools/`` state reasons and invariants, not the round that made a
+    change; that history is in CHANGES.md."""
+    files = [
+        *sorted((REPO / "data_validation_engine_spark").rglob("*.py")),
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *sorted((REPO / "tools").glob("*.py")),
+    ]
+    hits = [
+        f"{p.relative_to(REPO)}:{line}: {text.strip()}"
+        for p in files
+        for line, text in _prose(p.read_text(encoding="utf-8"))
+        if _NARRATION.search(text)
+    ]
+    assert hits == [], "\n".join(hits)
 
 
 def test_step_types_are_not_imported_by_name():

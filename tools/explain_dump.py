@@ -1,9 +1,10 @@
 """Dump ``.explain("formatted")`` for declared queries to files.
 
-Writes ``plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<suffix>.txt`` for every
-requested roster row (default: all 50), so a change's plan-shape claims
-are checkable without running Spark: dump ``before`` on the parent and
-``after`` on the change, then diff.
+Writes ``plans/dump/<query>_<suffix>.txt`` for every requested roster
+row (default: all 50), so a change's plan-shape claims are checkable
+without running Spark: dump ``before`` on the parent and ``after`` on the
+change, then diff. A later run with the same suffix overwrites its
+files; copy a dump elsewhere to keep it.
 
 Usage: python tools/explain_dump.py <suffix> [query ...]
   suffix   e.g. ``before`` or ``after``
@@ -26,8 +27,7 @@ def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    round_dir = os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r14")
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / round_dir
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / "dump"
     out_dir.mkdir(parents=True, exist_ok=True)
 
     import bench

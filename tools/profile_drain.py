@@ -1,4 +1,4 @@
-"""Micro-profiler for the availableNow drain fixed cost (r14, guide §1).
+"""Micro-profiler for the availableNow drain fixed cost.
 
 Runs one representative stateful availableNow drain (the hourly
 windowed-count shape from q_streaming_window_counts) N times in one
