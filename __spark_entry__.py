@@ -8831,7 +8831,7 @@ def q_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE over prefix sums (closed form: a chunk extends to the
     last sentence keeping its cumulative tokens <= max, minimum one —
     oversized sentences stay whole and loud). overlap_sentences stays
-    pytest-pinned (tests/test_chunking.py). All-string (op, k, v)."""
+    pytest-pinned (tests/test_round10_ops.py). All-string (op, k, v)."""
     from data_validation_engine_spark.llmops.chunking import (
         chunk_by_sentences,
     )

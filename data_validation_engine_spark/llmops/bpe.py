@@ -266,7 +266,7 @@ def bpe_encode(
     in training order (greedy per rule, canonical BPE application).
 
     Two application paths, identical results on trained vocabulary
-    (pytest-pinned, tests/test_bpe.py):
+    (pytest-pinned, tests/test_round9.py):
 
     - ``merges=[...]`` — the FOLD path: the merge list is a driver-side
       constant folded into the plan as K chained JVM ``aggregate``

@@ -51,7 +51,7 @@ def chi2_drift(
     NULL, DuckDB inf) — an unacceptable edge in an operator whose whole
     point is engine-exactness. The contribution is therefore guarded:
     cells with a zero expected count emit NULL (pytest-pinned in
-    tests/test_stats.py), so a chi-square against an empty snapshot is
+    tests/test_round9.py), so a chi-square against an empty snapshot is
     all-NULL rather than a crash or an inf.
     """
     a = ref.groupBy(

@@ -1,6 +1,6 @@
 """Shared test fixtures: one session-scoped local SparkSession, the
-DuckDB oracle comparison, a step engine, and the frames and the exact
-frame comparison that several module test files use."""
+DuckDB oracle comparison, and the exact frame comparison that several
+test files use."""
 
 from __future__ import annotations
 
@@ -72,30 +72,3 @@ def assert_frames_equal(a, b):
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
-
-
-BOILERPLATE_ROWS = [
-    (i, f"doc {i} shared boilerplate sentence common tail piece "
-        f"unique-{i} words repeat repeat number {i % 7}")
-    for i in range(40)
-]
-
-
-@pytest.fixture(scope="module")
-def boilerplate_docs(spark):
-    return spark.createDataFrame(BOILERPLATE_ROWS, "doc_id long, text string")
-
-
-@pytest.fixture(scope="module")
-def boilerplate_dup_docs(spark):
-    # two exact-duplicate groups + near-duplicates so banding produces
-    # real survivors and the survivor-only set aggregation is exercised
-    rows = BOILERPLATE_ROWS + [(100 + i, BOILERPLATE_ROWS[i][1]) for i in range(6)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-@pytest.fixture()
-def engine(spark):
-    from data_validation_engine_spark.steps.engine import StepEngine
-
-    return StepEngine(spark)

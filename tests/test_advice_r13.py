@@ -19,8 +19,6 @@ regression test that would have caught it.
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,21 +28,7 @@ from data_validation_engine_spark.llmops.pq import (
     pq_encode,
     pq_topk,
 )
-
-BOOKS = [
-    [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [2.0, 2.0]],
-    [[0.0, 0.0], [0.5, 0.5], [1.0, 1.0], [3.0, 0.0]],
-]
-
-
-def _codeword_corpus(spark):
-    rows = [
-        (i, BOOKS[0][a] + BOOKS[1][b])
-        for i, (a, b) in enumerate(itertools.product(range(4), range(4)))
-    ]
-    return rows, spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
+from test_pq import BOOKS, _codeword_corpus
 
 
 def test_ivf_pq_refine_on_codes_only_table(spark):

@@ -15,7 +15,6 @@ from data_validation_engine_spark.llmops.bpe import (
     bpe_train,
     word_frequencies,
 )
-from data_validation_engine_spark.steps import parse_step
 
 
 def ref_bpe(texts: list[str], k: int, *, lowercase: bool = True):
@@ -188,122 +187,3 @@ def test_bpe_decode_round_trips_both_paths(spark, sf_dir):
             for r in bpe_decode(enc).collect()
         }
         assert got == want
-
-
-DOCS = [
-    (1, "the cat sat on the mat"),
-    (2, "the cats sat"),
-    (3, "a mat a cat a hat"),
-    (4, "hat hat hat cat"),
-    (5, ""),
-]
-
-
-class TestBpeSteps:
-    def test_train_then_encode_declared(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        ents = {
-            "docs": spark.createDataFrame(
-                [(0, "low low low lower"), (1, "lowest low")],
-                "doc_id long, text string",
-            )
-        }
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "bpe_train",
-                    "entity_name": "docs",
-                    "text_column": "text",
-                    "n_merges": 3,
-                    "new_entity_name": "merges",
-                }
-            ),
-        )
-        merges = ents["merges"].orderBy("rank").collect()
-        assert [(r["left"], r["right"]) for r in merges][:2] == [
-            ("l", "o"), ("lo", "w"),
-        ]
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "bpe_encode",
-                    "entity_name": "docs",
-                    "merges_name": "merges",
-                    "id_column": "doc_id",
-                    "text_column": "text",
-                    "new_entity_name": "enc",
-                }
-            ),
-        )
-        got = {r.doc_id: r.subwords_csv for r in ents["enc"].collect()}
-        assert got[0].startswith("low low low")
-
-
-@pytest.mark.slow
-def test_bpe_fold_path_equals_join_path(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    merges, words = bpe_train(
-        df, "text", n_merges=6, return_words=True
-    )
-    assert merges, "training must learn at least one merge"
-    fold = {
-        r["doc_id"]: (r["n_words"], r["n_subwords"], r["subwords_csv"])
-        for r in bpe_encode(df, "doc_id", "text", merges).collect()
-    }
-    join = {
-        r["doc_id"]: (r["n_words"], r["n_subwords"], r["subwords_csv"])
-        for r in bpe_encode(
-            df, "doc_id", "text", word_table=words
-        ).collect()
-    }
-    assert fold == join
-    # and the shuffle-join variant agrees too (the no-broadcast fallback
-    # for pathological vocabularies)
-    shuffled = {
-        r["doc_id"]: (r["n_words"], r["n_subwords"], r["subwords_csv"])
-        for r in bpe_encode(
-            df, "doc_id", "text", word_table=words, broadcast_words=False
-        ).collect()
-    }
-    assert fold == shuffled
-
-
-def test_bpe_join_path_plan_independent_of_k(spark):
-    """At K=1000 the join path's plan must contain no K-deep fold chain
-    — plan size independent of the merge count (the fold path at that K
-    would blow whole-stage codegen)."""
-    df = spark.createDataFrame(DOCS[:2], "doc_id long, text string")
-    words = spark.createDataFrame(
-        [("the", "the", 1), ("cat", "c▁at", 2), ("sat", "s▁at", 2)],
-        "word string, subwords string, n_subwords long",
-    )
-    enc = bpe_encode(df, "doc_id", "text", word_table=words)
-    plan = enc._jdf.queryExecution().optimizedPlan().toString()
-    assert "aggregate(" not in plan, "join path must not fold merges"
-    assert len(plan) < 20_000
-    out = {r["doc_id"]: r["subwords_csv"] for r in enc.collect()}
-    # OOV words ('on', 'mat', 'cats') fall back to character symbols
-    assert out[1].split(" ")[0] == "the"
-    assert "c▁a▁t▁s" in out[2]
-
-
-def test_bpe_unseen_word_falls_back_to_chars(spark):
-    df = spark.createDataFrame([(1, "zzz")], "doc_id long, text string")
-    words = spark.createDataFrame(
-        [("the", "the", 1)], "word string, subwords string, n_subwords long"
-    )
-    row = bpe_encode(df, "doc_id", "text", word_table=words).collect()[0]
-    assert row["subwords_csv"] == "z▁z▁z"
-    assert row["n_subwords"] == 3
-
-
-def test_bpe_encode_rejects_ambiguous_arguments(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="exactly one"):
-        bpe_encode(df, "doc_id", "text")
-    with pytest.raises(ValueError, match="exactly one"):
-        bpe_encode(df, "doc_id", "text", [("a", "b")], word_table=df)

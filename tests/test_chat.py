@@ -282,83 +282,3 @@ class TestTokenLossMask:
             rendered, "id", "text", "mask_spans"
         )._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan and "EvalPython" not in plan
-
-
-class TestRandomizedParity:
-    """Seeded randomized parity: one Spark job over hundreds of random
-    cases per operator, asserted row-by-row against pure-Python
-    references (the repo's hypothesis suite stays pure-Python; these
-    cover the Spark-side operators with the same breadth)."""
-
-    def test_render_chat_random_conversations(self, spark):
-        import random
-
-        from data_validation_engine_spark.llmops.chat import render_chat
-
-        rng = random.Random(42)
-        alphabet = "ab é—\t.<|>&#"
-        roles = ["user", "assistant", "system", "tool", "", None]
-        convs = []
-        for i in range(300):
-            turns = [
-                (
-                    rng.choice(roles),
-                    None
-                    if rng.random() < 0.1
-                    else "".join(
-                        rng.choice(alphabet)
-                        for _ in range(rng.randrange(0, 12))
-                    ),
-                )
-                for _ in range(rng.randrange(0, 6))
-            ]
-            convs.append((f"c{i}", turns))
-        df = spark.createDataFrame(
-            convs,
-            "id string, conversation array<struct<role string,"
-            " content string>>",
-        )
-        got = {
-            r["id"]: r for r in render_chat(df, "id", "conversation").collect()
-        }
-        for cid, turns in convs:
-            text, off = "", 0
-            spans = []
-            for t, (role, content) in enumerate(turns):
-                role = role or ""
-                content = content or ""
-                text += "<|" + role + "|>\n" + content + "<|end|>\n"
-                start = off + len("<|") + len(role) + len("|>\n")
-                spans.append((t, role, start, start + len(content)))
-                off = start + len(content) + len("<|end|>\n")
-            r = got[cid]
-            assert r["text"] == text, cid
-            assert [
-                (s["turn"], s["role"], s["start"], s["end"])
-                for s in r["spans"]
-            ] == spans, cid
-            for (_, content), s in zip(turns, r["spans"]):
-                assert text[s["start"] : s["end"]] == (content or "")
-
-
-class TestReviewFixes:
-    """Regression pins for review findings."""
-
-    def test_token_mask_plan_folds_offsets_once(self, spark):
-        from data_validation_engine_spark.llmops.chat import (
-            token_loss_mask,
-        )
-
-        df = spark.createDataFrame(
-            [("d", "a b c", [])],
-            "id string, text string,"
-            " mask_spans array<struct<start bigint, end bigint>>",
-        )
-        out = token_loss_mask(df, "id", "text", "mask_spans")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # the offset fold appears once (the staged projection), not once
-        # per mask element
-        assert plan.count("aggregate(") <= 3
-        r = out.first()
-        assert list(r["token_starts"]) == [0, 2, 4]
-        assert list(r["loss_mask"]) == [False, False, False]

@@ -73,21 +73,3 @@ class TestHashDisciplineFrames:
             "non-string hashed columns outside the FLOATS.md allowlist "
             f"(add an inventory entry or render as STRING): {bad}"
         )
-
-
-@pytest.mark.slow
-def test_union_rows_hash_all_string(spark, sf_dir):
-    """The union rows that carry the former singleton surfaces must keep
-    their hashed frames free of numeric dtypes (the engine→pandas
-    dtype-coercion divergence class) — every column is a string."""
-    import __spark_entry__ as entry
-
-    # the frames must stay all-string (the broader allowlist gate is
-    # TestHashDisciplineFrames above — this pins the merged rows);
-    # corpus_terms rides the text_corpus union row
-    rows = ["window_analytics", "text_corpus", "sessionize"]
-    q = entry.queries()
-    for name in rows:
-        df = q[name](spark, sf_dir)
-        kinds = {f.dataType.typeName() for f in df.schema.fields}
-        assert kinds == {"string"}, f"{name}: {df.schema.simpleString()}"

@@ -388,100 +388,3 @@ class TestSnapshotDiff:
             snapshot_diff(clean, dirty, ["id"]).collect()
         with pytest.raises(Exception, match="NULL key value"):
             snapshot_diff(dirty, clean, ["id"]).collect()
-
-
-class TestScd2:
-    def _ledger(self, spark):
-        return spark.createDataFrame(
-            [
-                ("I", 1, "a", 10),
-                ("U", 1, "a2", 30),
-                ("D", 1, None, 50),
-                ("I", 1, "a3", 70),
-                ("I", 2, "b", 20),
-            ],
-            "op string, id int, v string, seq int",
-        )
-
-    def test_versions_and_validity(self, spark):
-        from data_validation_engine_spark.merge import scd2_from_ledger
-
-        hist = {
-            (r.id, r.valid_from): (r.v, r.valid_to, r.is_current)
-            for r in scd2_from_ledger(
-                self._ledger(spark), ["id"], sequence_col="seq"
-            ).collect()
-        }
-        assert hist == {
-            (1, 10): ("a", 30, False),
-            (1, 30): ("a2", 50, False),   # closed by the DELETE
-            (1, 70): ("a3", None, True),  # reborn after deletion
-            (2, 20): ("b", None, True),
-        }
-
-    @pytest.mark.slow
-    def test_snapshot_matches_apply_changes(self, spark):
-        from pyspark.sql.types import StructType
-
-        from data_validation_engine_spark.merge import (
-            apply_changes,
-            scd2_from_ledger,
-            scd2_snapshot,
-        )
-
-        ledger = self._ledger(spark)
-        hist = scd2_from_ledger(ledger, ["id"], sequence_col="seq")
-        empty = spark.createDataFrame([], "id int, v string")
-        for s in (5, 10, 30, 50, 60, 70, 99):
-            snap = {
-                (r.id, r.v)
-                for r in scd2_snapshot(hist, s).collect()
-            }
-            replay = {
-                (r.id, r.v)
-                for r in apply_changes(
-                    empty,
-                    ledger.where(F.col("seq") <= s),
-                    ["id"],
-                    sequence_col="seq",
-                ).collect()
-            }
-            assert snap == replay, f"as_of={s}"
-
-    def test_guards(self, spark):
-        from data_validation_engine_spark.merge import scd2_from_ledger
-
-        bad_op = spark.createDataFrame(
-            [("X", 1, "a", 1)], "op string, id int, v string, seq int"
-        )
-        with pytest.raises(Exception, match="unknown op"):
-            scd2_from_ledger(bad_op, ["id"], sequence_col="seq").collect()
-        dup = spark.createDataFrame(
-            [("I", 1, "a", 1), ("U", 1, "b", 1)],
-            "op string, id int, v string, seq int",
-        )
-        with pytest.raises(Exception, match="duplicate"):
-            scd2_from_ledger(dup, ["id"], sequence_col="seq").collect()
-
-    def test_declared_step(self, spark, engine):
-        from data_validation_engine_spark.merge import scd2_from_ledger
-
-        ents = {"ledger": self._ledger(spark)}
-        engine.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "scd2",
-                    "entity_name": "ledger",
-                    "keys": ["id"],
-                    "sequence_column": "seq",
-                    "new_entity_name": "hist",
-                }
-            ),
-        )
-        want = scd2_from_ledger(
-            self._ledger(spark), ["id"], sequence_col="seq"
-        )
-        assert sorted(map(tuple, ents["hist"].collect())) == sorted(
-            map(tuple, want.collect())
-        )

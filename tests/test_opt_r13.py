@@ -9,13 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-
-def assert_frames_equal(a, b):
-    """Order-insensitive exact row equality (schemas by column name)."""
-    assert a.columns == b.columns
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
+from conftest import assert_frames_equal
 
 
 @pytest.fixture(scope="module")
@@ -285,7 +279,7 @@ def test_tfidf_top1_agg_matches_window(spark, docs):
 
 
 def test_minhash_index_filter_commutes(spark, docs):
-    """The q_r12_index_maintenance rewrite's premise: minhash_index is a
+    """The q_index_maintenance rewrite's premise: minhash_index is a
     per-document projection, so indexing a filtered corpus equals
     filtering the full index."""
     from data_validation_engine_spark.llmops.dedup import minhash_index

@@ -10,13 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-
-def assert_frames_equal(a, b):
-    """Order-insensitive exact row equality (schemas by column name)."""
-    assert a.columns == b.columns
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
+from conftest import assert_frames_equal
 
 
 @pytest.fixture(scope="module")

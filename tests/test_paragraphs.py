@@ -190,57 +190,3 @@ def test_paragraph_dedup_declared_step(spark):
     )
     got = {r["doc_id"]: r["text"] for r in ents["clean"].collect()}
     assert got == {1: "alpha", 2: "beta", 3: ""}
-
-
-class TestSplitSentences:
-    def test_segmentation_and_declared(self, spark):
-        from data_validation_engine_spark.llmops.paragraphs import (
-            split_sentences,
-        )
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        rows = [
-            ("d1", 'One here. Two there! "Three?" Four ends.'),
-            ("d2", "no caps here. still one sentence"),
-            ("d3", None),
-            ("d4", "  "),
-            ("d5", "Ends mid"),
-        ]
-        df = spark.createDataFrame(rows, "id string, text string")
-        got = {}
-        for r in split_sentences(df, "id", "text").collect():
-            got.setdefault(r["id"], []).append(
-                (r["sent_idx"], r["sentence"])
-            )
-        assert [s for _, s in sorted(got["d1"])] == [
-            "One here.",
-            "Two there!",
-            '"Three?"',
-            "Four ends.",
-        ]
-        # caseless continuation does not split
-        assert [s for _, s in sorted(got["d2"])] == [
-            "no caps here. still one sentence"
-        ]
-        assert "d3" not in got and "d4" not in got
-        assert [s for _, s in sorted(got["d5"])] == ["Ends mid"]
-
-        eng = StepEngine(spark, register_functions=False)
-        ents = {"docs": df}
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "split_sentences",
-                    "entity_name": "docs",
-                    "key_column": "id",
-                    "min_chars": 3,
-                    "new_entity_name": "sents",
-                }
-            ),
-        )
-        assert ents["sents"].count() == sum(
-            len(v) for v in got.values()
-        )
-        plan = ents["sents"]._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan

@@ -11,12 +11,10 @@ from pyspark.sql import functions as F
 
 from data_validation_engine_spark.llmops.pq import (
     default_codebooks,
-    ivf_pq_topk,
     pq_encode,
     pq_fit,
     pq_topk,
 )
-from data_validation_engine_spark.llmops.ivf import default_centroids
 from __spark_entry__ import _duck_l2sq
 
 
@@ -549,53 +547,3 @@ def test_declared_batch_and_ivf_batch_match_duckdb(spark, sf_dir, duck_oracle):
     duck_oracle(
         "pq_many", many.unionByName(mivf).unionByName(rc), _PQ_MANY_SQL
     )
-
-
-def test_ivf_pq_refine_on_codes_only_table(spark):
-    """The documented deployment shape: persisted table carries cell +
-    codes but NOT the raw vector; refine_df supplies the vectors."""
-    from data_validation_engine_spark.llmops.ivf import ivf_assign
-
-    rows, raw = _codeword_corpus(spark)
-    cents = default_centroids(raw, n_cells=4)
-    table = pq_encode(
-        ivf_assign(raw, cents, cell_col="ivf_cell"), BOOKS
-    )  # keep_vec=False drops embedding
-    assert "embedding" not in table.columns
-    q = raw.where("vec_id = 13")
-    got = ivf_pq_topk(
-        table, q, 5,
-        centroids=cents, codebooks=BOOKS,
-        cell_col="ivf_cell", codes_col="pq_codes",
-        n_probe=4, refine_factor=4, refine_df=raw,
-    ).orderBy("rank").collect()
-    qvec = dict(rows)[13]
-
-    def l2sq(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    want = sorted((l2sq(qvec, v), i) for i, v in rows if i != 13)[:5]
-    assert [(r["pq_dist"], r["vec_id"]) for r in got] == want
-
-
-def test_pq_encode_rejects_short_corpus_vector(spark):
-    df = spark.createDataFrame(
-        [(0, [0.0, 0.0, 0.0, 0.0]), (1, [1.0, 2.0, 3.0])],
-        "vec_id long, embedding array<double>",
-    )
-    with pytest.raises(Exception, match="expected array length 4"):
-        pq_encode(df, BOOKS).collect()
-
-
-def test_pq_topk_rejects_short_code_array(spark):
-    coded = spark.createDataFrame(
-        [(0, [0, 1]), (1, [2]), (2, [3, 0])],
-        "vec_id long, pq_codes array<int>",
-    )
-    q = spark.createDataFrame(
-        [(99, [0.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="expected array length 2"):
-        pq_topk(
-            coded, q, 2, codebooks=BOOKS, codes_col="pq_codes"
-        ).collect()

@@ -136,99 +136,3 @@ def test_declared_steps(spark):
         "new_entity_name": "checked"}))
     got = {r["url"]: r["robots_allowed"] for r in ents["checked"].collect()}
     assert got == {"http://a.ex/private/x": False, "http://a.ex/ok": True}
-
-
-ROBOTS = "User-agent: *\nDisallow: /private/\n"
-
-
-def test_parse_robots_mixed_case_host_joins(spark):
-    """Rule hosts are lowercased at parse time so a
-    mixed-case host column still joins robots_allowed's lowercased
-    URL-derived host — disallowed URLs must NOT come back allowed."""
-    from data_validation_engine_spark.llmops.robots import (
-        parse_robots,
-        robots_allowed,
-    )
-
-    robots = spark.createDataFrame(
-        [("Example.COM", "User-agent: *\nDisallow: /private/")],
-        "host string, body string",
-    )
-    rules = parse_robots(robots, "host", "body")
-    assert {r["host"] for r in rules.collect()} == {"example.com"}
-    urls = spark.createDataFrame(
-        [(1, "http://example.com/private/x"),
-         (2, "http://EXAMPLE.com/public/y")],
-        "id long, url string",
-    )
-    got = {
-        r["id"]: r["robots_allowed"]
-        for r in robots_allowed(urls, rules, "url", agent="bot").collect()
-    }
-    assert got == {1: False, 2: True}
-
-
-def test_robots_filtering_composes_with_streaming(spark, tmp_path):
-    """robots_allowed is a stream-static equi-join + per-row regex, so
-    continuous crawl-compliance filtering works on an ingest stream;
-    parity with batch pinned."""
-    from data_validation_engine_spark.llmops.robots import (
-        parse_robots,
-        robots_allowed,
-    )
-
-    robots = spark.createDataFrame(
-        [("site.ex", "User-agent: *\nDisallow: /private/")],
-        "host string, body string",
-    )
-    rules = parse_robots(robots, "host", "body")
-    src = str(tmp_path / "urls")
-    urls = spark.createDataFrame(
-        [
-            (i, f"http://site.ex/{'private' if i % 3 == 0 else 'pub'}/p{i}")
-            for i in range(30)
-        ],
-        "id long, url string",
-    )
-    urls.write.mode("overwrite").parquet(src)
-    sdf = spark.readStream.schema("id long, url string").parquet(src)
-    out = str(tmp_path / "out")
-    q = (
-        robots_allowed(sdf, rules, "url", agent="trainbot")
-        .writeStream.format("parquet")
-        .option("path", f"{out}/d")
-        .option("checkpointLocation", f"{out}/c")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["id"]: r["robots_allowed"]
-        for r in spark.read.parquet(f"{out}/d").collect()
-    }
-    want = {
-        r["id"]: r["robots_allowed"]
-        for r in robots_allowed(urls, rules, "url", agent="trainbot").collect()
-    }
-    assert got == want
-    assert sum(1 for v in got.values() if not v) == 10
-
-
-@pytest.mark.slow
-def test_robots_host_col_is_case_folded(spark):
-    rules = parse_robots(
-        spark.createDataFrame(
-            [("EXAMPLE.com", ROBOTS)], "host string, body string"
-        ),
-        "host",
-        "body",
-    )
-    urls = spark.createDataFrame(
-        [(1, "http://example.com/private/x", "Example.COM")],
-        "doc_id long, url string, myhost string",
-    )
-    [r] = robots_allowed(
-        urls, rules, "url", agent="bot", host_col="myhost"
-    ).collect()
-    assert r["robots_allowed"] is False  # pre-fix: True (never joined)

@@ -33,36 +33,3 @@ def test_roster_contract():
         (set(EXECUTES_AT_BUILD) | set(SENSITIVE)) - set(roster)
     )
     assert not stale, f"rows keyed in plan_dump/driver_matrix: {stale}"
-
-
-def test_parallel_arms_matches_serial_union(spark):
-    """_parallel_arms (guide §2.6, overlap independent arm construction)
-    must return row-for-row the serial unionByName in argument order,
-    and each arm's session-conf mutations must stay arm-local."""
-    import __spark_entry__ as e
-
-    seen_partitions = {}
-
-    def arm_a(s, d):
-        # pin a conf in THIS arm's session; sibling arms must not see it
-        with e._state_partitions(s, 3):
-            seen_partitions["a"] = s.conf.get("spark.sql.shuffle.partitions")
-            return s.createDataFrame([(1, "a")], "k int, v string")
-
-    def arm_b(s, d):
-        seen_partitions["b"] = s.conf.get("spark.sql.shuffle.partitions")
-        return s.createDataFrame([(2, "b")], "k int, v string")
-
-    def arm_c(s, d):
-        return s.createDataFrame([(3, "c")], "k int, v string")
-
-    out = e._parallel_arms(spark, "", arm_a, arm_b, arm_c)
-    rows = [(r.k, r.v) for r in out.collect()]
-    assert sorted(rows) == [(1, "a"), (2, "b"), (3, "c")]
-    assert seen_partitions["a"] == "3"
-    # arm_b's cloned session keeps the parent's value, never arm_a's pin
-    assert seen_partitions["b"] == spark.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    # the parent session is untouched after the arms complete
-    assert spark.conf.get("spark.sql.shuffle.partitions") != "3"

@@ -718,113 +718,3 @@ def test_salted_join_declared_step(spark):
         (r.k, r.payload, r.label) for r in ents["joined"].collect()
     }
     assert salted == plain and len(salted) == 100
-
-
-class TestTrainingShards:
-    def test_export_manifest_and_determinism(self, spark, tmp_path):
-        from data_validation_engine_spark.scale import write_training_shards
-
-        df = spark.createDataFrame(
-            [(f"doc{i}", f"text {i}") for i in range(500)],
-            "id string, text string",
-        )
-        d1 = str(tmp_path / "exp1")
-        m1 = write_training_shards(df, d1, "id", n_shards=4).collect()
-        assert [r["shard"] for r in m1] == [0, 1, 2, 3]
-        assert sum(r["n_rows"] for r in m1) == 500
-        # shards are equal-sized in expectation (contiguous hash ranges)
-        for r in m1:
-            assert 60 <= r["n_rows"] <= 190
-        # hash ranges are disjoint and ordered: shard k's max < k+1's min
-        for a, b in zip(m1, m1[1:]):
-            assert a["max_hash"] < b["min_hash"]
-
-        # byte-identical manifest on re-export, even repartitioned
-        d2 = str(tmp_path / "exp2")
-        m2 = write_training_shards(
-            df.repartition(7), d2, "id", n_shards=4
-        ).collect()
-        assert [tuple(r) for r in m1] == [tuple(r) for r in m2]
-
-        # a different seed is a different epoch order
-        d3 = str(tmp_path / "exp3")
-        m3 = write_training_shards(
-            df, d3, "id", n_shards=4, seed="epoch2"
-        ).collect()
-        assert [tuple(r) for r in m3] != [tuple(r) for r in m1]
-
-        # in-shard file content is sorted by the shuffle hash
-        out = spark.read.parquet(d1)
-        rows = out.where("shard = 0").select("__hash").collect()
-        hashes = [r["__hash"] for r in rows]
-        assert hashes == sorted(hashes)
-        # nothing lost or duplicated
-        assert sorted(r["id"] for r in out.select("id").collect()) == sorted(
-            f"doc{i}" for i in range(500)
-        )
-
-    def test_max_records_per_file_and_validation(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from data_validation_engine_spark.scale import write_training_shards
-
-        df = spark.createDataFrame(
-            [(f"k{i}",) for i in range(200)], "id string"
-        )
-        dest = str(tmp_path / "chunked")
-        m = write_training_shards(
-            df, dest, "id", n_shards=2, max_records_per_file=25
-        ).collect()
-        for r in m:
-            # ceil(n_rows/25) files per shard
-            assert r["n_files"] == -(-r["n_rows"] // 25)
-        with _pytest.raises(ValueError, match="n_shards"):
-            write_training_shards(df, dest, "id", n_shards=0)
-        with _pytest.raises(ValueError, match="destination"):
-            write_training_shards(df, "", "id", n_shards=2)
-
-
-class TestReviewFixes:
-    """Regression pins for review findings."""
-
-    def test_shard_id_no_overflow_at_large_n_shards(self, spark):
-        from data_validation_engine_spark.scale import write_training_shards
-        import tempfile
-
-        df = spark.createDataFrame(
-            [(f"k{i}",) for i in range(64)], "id string"
-        )
-        d = tempfile.mkdtemp(prefix="bigshards_")
-        m = write_training_shards(df, d + "/e", "id", n_shards=40000)
-        rows = m.collect()
-        assert all(0 <= r["shard"] < 40000 for r in rows)
-
-
-def test_training_shards_json_format(spark, sf_dir, tmp_path):
-    """JSON-lines shard export: same shard assignment, in-shard order,
-    and manifest as parquet; reproducible across partitionings."""
-    import glob
-
-    from data_validation_engine_spark.scale import write_training_shards
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    m1 = write_training_shards(
-        df, str(tmp_path / "j1"), "doc_id", n_shards=4, format="json"
-    ).collect()
-    m2 = write_training_shards(
-        df.repartition(7), str(tmp_path / "j2"), "doc_id",
-        n_shards=4, format="json",
-    ).collect()
-    assert [tuple(r) for r in m1] == [tuple(r) for r in m2]
-    mp = write_training_shards(
-        df, str(tmp_path / "p"), "doc_id", n_shards=4
-    ).collect()
-    key = lambda r: (r["shard"], r["n_rows"], r["checksum"])  # noqa: E731
-    assert [key(r) for r in m1] == [key(r) for r in mp]
-    assert len(glob.glob(str(tmp_path / "j1" / "shard=*" / "*.json"))) == 4
-    with pytest.raises(ValueError, match="format"):
-        write_training_shards(
-            df, str(tmp_path / "x"), "doc_id", n_shards=2, format="orc"
-        )

@@ -544,112 +544,3 @@ def test_binary_files_max_bytes_guard(spark, tmp_path):
     except Exception as exc:  # noqa: BLE001 — Spark wraps raise_error
         raised = "max_bytes" in str(exc)
     assert raised
-
-
-class TestErrorSamples:
-    def test_bounded_deterministic_and_plan(self, spark):
-        from data_validation_engine_spark.messages import Reporting
-        from data_validation_engine_spark.sinks.report import error_samples
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-        from data_validation_engine_spark.steps.sync_filters import (
-            apply_sync_filters,
-        )
-
-        df = spark.range(100).selectExpr(
-            "CAST(id AS INT) AS v", "id AS __record_index__"
-        )
-        eng = StepEngine(spark, register_functions=False)
-        ents = {"t": df}
-        msgs = apply_sync_filters(
-            ents,
-            [
-                parse_step(
-                    {
-                        "operation": "filter",
-                        "entity_name": "t",
-                        "expression": "v % 2 = 0",
-                        "reporting": {
-                            "code": "ODD",
-                            "message": "odd value {{v}}",
-                        },
-                    }
-                ),
-                parse_step(
-                    {
-                        "operation": "filter",
-                        "entity_name": "t",
-                        "expression": "v < 90",
-                        "reporting": {
-                            "code": "BIG",
-                            "message": "too big {{v}}",
-                        },
-                    }
-                ),
-            ],
-        )
-        out = error_samples(msgs, per_code=5)
-        rows = out.collect()
-        by_code = {}
-        for r in rows:
-            by_code.setdefault(r["error_code"], []).append(
-                r["__record_index__"]
-            )
-        assert len(by_code["ODD"]) == 5
-        assert len(by_code["BIG"]) == 5
-        # first five failing indices per code, ascending
-        assert by_code["ODD"] == [1, 3, 5, 7, 9]
-        assert by_code["BIG"] == [90, 91, 92, 93, 94]
-        # deterministic under repartitioning
-        again = error_samples(
-            msgs.repartition(13), per_code=5
-        ).collect()
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-        # the rank rewrites to WindowGroupLimit below the exchange
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan
-
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="per_code"):
-            error_samples(msgs, per_code=0)
-
-
-class TestOverwritePartitions:
-    def test_only_touched_partitions_replaced(self, spark, tmp_path):
-        from data_validation_engine_spark.sinks.entities import (
-            overwrite_partitions,
-        )
-
-        uri = str(tmp_path / "tbl")
-        day1 = spark.createDataFrame(
-            [("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 3)],
-            "day string, v int",
-        )
-        overwrite_partitions(day1, uri, ["day"])
-        # re-load day 2 with corrected data; day 1 must survive intact
-        fix2 = spark.createDataFrame(
-            [("2024-01-02", 30), ("2024-01-02", 31)], "day string, v int"
-        )
-        overwrite_partitions(fix2, uri, ["day"])
-        got = {
-            (r["day"], r["v"])
-            # partition-column inference reads the dir value back as a
-            # DATE; compare on its ISO string
-            for r in spark.read.parquet(uri)
-            .selectExpr("CAST(day AS STRING) day", "v")
-            .collect()
-        }
-        assert got == {
-            ("2024-01-01", 1),
-            ("2024-01-01", 2),
-            ("2024-01-02", 30),
-            ("2024-01-02", 31),
-        }
-        # replaying the same batch converges (idempotent retry)
-        overwrite_partitions(fix2, uri, ["day"])
-        assert spark.read.parquet(uri).count() == 4
-
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="partition column"):
-            overwrite_partitions(day1, uri, [])

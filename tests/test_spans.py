@@ -11,7 +11,6 @@ from data_validation_engine_spark.llmops.spans import (
     shared_span_pairs,
     winnowed_fingerprints,
 )
-from conftest import assert_frames_equal
 
 
 @pytest.fixture()
@@ -359,65 +358,3 @@ class TestSharedSpansIncremental:
                     }
                 ),
             )
-
-
-@pytest.mark.slow
-def test_span_paragraph_passthrough_parity(spark, boilerplate_docs):
-    """The q_span_dedup rewrite's premise: winnowed fingerprints and
-    paragraph splits are per-row projections, so (a) passing the
-    precomputed frame through ``fps=``/``paras=`` returns exactly the
-    internally-built result, and (b) the incremental path's
-    index/new-batch sides are FILTERS of the full-corpus fingerprint
-    frame."""
-    from data_validation_engine_spark.llmops.paragraphs import (
-        paragraph_frequency,
-        remove_repeated_paragraphs,
-        split_paragraphs,
-    )
-    from data_validation_engine_spark.llmops.spans import (
-        shared_span_pairs,
-        shared_spans_incremental,
-        winnowed_fingerprints,
-    )
-
-    multi = boilerplate_docs.selectExpr(
-        "doc_id",
-        "concat(text, '\\ncommon footer line', '\\nunique ', doc_id) AS text",
-    )
-    fps = winnowed_fingerprints(multi, "doc_id", "text", width=8, window=4)
-    assert_frames_equal(
-        shared_span_pairs(
-            multi, "doc_id", "text", width=8, window=4, fps=fps
-        ),
-        shared_span_pairs(multi, "doc_id", "text", width=8, window=4),
-    )
-    corpus = multi.where("doc_id % 4 != 0")
-    new = multi.where("doc_id % 4 = 0")
-    assert_frames_equal(
-        shared_spans_incremental(
-            new, fps.where("doc_id % 4 != 0"), "doc_id", "text",
-            width=8, window=4, new_fps=fps.where("doc_id % 4 = 0"),
-        ),
-        shared_spans_incremental(
-            new,
-            winnowed_fingerprints(
-                corpus, "doc_id", "text", width=8, window=4
-            ),
-            "doc_id", "text", width=8, window=4,
-        ),
-    )
-    paras = split_paragraphs(multi, "doc_id", "text")
-    assert_frames_equal(
-        paragraph_frequency(multi, "doc_id", "text", paras=paras),
-        paragraph_frequency(multi, "doc_id", "text"),
-    )
-    for keep in ("none", "first"):
-        assert_frames_equal(
-            remove_repeated_paragraphs(
-                multi, "doc_id", "text", max_docs=1, keep=keep,
-                paras=paras,
-            ),
-            remove_repeated_paragraphs(
-                multi, "doc_id", "text", max_docs=1, keep=keep
-            ),
-        )

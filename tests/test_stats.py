@@ -2,12 +2,10 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_validation_engine_spark.llmops.stats import (
     chi2_drift,
-    ecdf_normalize,
     grouped_regression,
 )
 
@@ -403,257 +401,3 @@ def test_grouped_auc_declared_step(spark, sf_dir):
     rows = ents["auc"].collect()
     assert len(rows) > 0
     assert all(r["auc"] is None or 0.0 <= r["auc"] <= 1.0 for r in rows)
-
-
-class TestMergeRegressionStats:
-    def test_merge_equals_whole(self, spark):
-        from data_validation_engine_spark.llmops.stats import (
-            grouped_regression,
-            merge_regression_stats,
-        )
-
-        rows = [("g", float(i % 17), float((i * 7) % 23)) for i in range(500)]
-        df = spark.createDataFrame(rows, "g string, x double, y double")
-        whole = grouped_regression(df, ["g"], "x", "y").first()
-        a = grouped_regression(
-            df.where("x < 8"), ["g"], "x", "y"
-        )
-        b = grouped_regression(
-            df.where("x >= 8"), ["g"], "x", "y"
-        )
-        merged = merge_regression_stats(a, b, ["g"]).first()
-        assert (
-            str(merged.sxy) == str(whole.sxy)
-            and merged.slope == whole.slope
-            and merged.corr == whole.corr
-        )
-
-    def test_one_sided_group_passes_through(self, spark):
-        from data_validation_engine_spark.llmops.stats import (
-            grouped_regression,
-            merge_regression_stats,
-        )
-
-        a = grouped_regression(
-            spark.createDataFrame(
-                [("g", 1.0, 2.0), ("g", 2.0, 4.0)], "g string, x double, y double"
-            ),
-            ["g"], "x", "y",
-        )
-        b = grouped_regression(
-            spark.createDataFrame(
-                [("h", 1.0, 1.0), ("h", 3.0, 2.0)], "g string, x double, y double"
-            ),
-            ["g"], "x", "y",
-        )
-        merged = merge_regression_stats(a, b, ["g"])
-        assert {r.g for r in merged.collect()} == {"g", "h"}
-        assert merged.count() == 2
-
-
-def test_chi2_empty_side_emits_null_not_inf(spark):
-    """An empty snapshot makes every expected count zero on that side;
-    the guard must emit NULL (not a crash, not inf) — the documented
-    engine-exact degenerate policy."""
-    ref = spark.createDataFrame(
-        [("a",), ("a",), ("b",)], "lbl string"
-    )
-    cur = spark.createDataFrame([], "lbl string")
-    rows = chi2_drift(ref, cur, "lbl").collect()
-    assert {r["value"] for r in rows} == {"a", "b"}
-    for r in rows:
-        # e_cur = row * 0 / N = 0 → guarded NULL; e_ref = row * N / N > 0
-        assert r["chi2_cur"] is None
-        assert r["chi2_ref"] is not None
-
-
-def test_ecdf_normalize_null_value_fails_loudly(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, None), (3, 30.0)], "id long, v double"
-    )
-    with pytest.raises(Exception, match="ecdf_normalize: NULL"):
-        ecdf_normalize(df, "v").collect()
-
-
-def test_ecdf_normalize_null_group_fails_loudly(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0, "a"), (2, 20.0, None)], "id long, v double, g string"
-    )
-    with pytest.raises(Exception, match="ecdf_normalize: NULL"):
-        ecdf_normalize(df, "v", group_cols=["g"]).collect()
-
-
-def test_ecdf_normalize_clean_data_unchanged(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 20.0), (4, 40.0)], "id long, v double"
-    )
-    got = {r["id"]: r["ecdf"] for r in ecdf_normalize(df, "v").collect()}
-    assert got == {1: 0.25, 2: 0.75, 3: 0.75, 4: 1.0}
-
-
-class TestStandardize:
-    def test_three_methods_match_python(self, spark):
-        import statistics
-
-        from data_validation_engine_spark.llmops.stats import standardize
-
-        vals = {"a": [1.0, 2.0, 3.0, 4.0, 10.0], "b": [5.0, 5.0, 5.0]}
-        rows = [
-            (g, i, v) for g, vs in vals.items() for i, v in enumerate(vs)
-        ] + [("a", 99, None)]
-        df = spark.createDataFrame(rows, "g string, i int, v double")
-
-        z = {
-            (r["g"], r["i"]): r["scaled"]
-            for r in standardize(df, "v", group_cols=["g"]).collect()
-        }
-        mu = statistics.mean(vals["a"])
-        sd = statistics.stdev(vals["a"])
-        for i, v in enumerate(vals["a"]):
-            assert z[("a", i)] == pytest.approx((v - mu) / sd)
-        for i in range(3):
-            assert z[("b", i)] == 0.0  # zero spread
-        assert z[("a", 99)] is None  # NULL stays NULL
-
-        mm = {
-            (r["g"], r["i"]): r["scaled"]
-            for r in standardize(
-                df, "v", group_cols=["g"], method="minmax"
-            ).collect()
-        }
-        for i, v in enumerate(vals["a"]):
-            assert mm[("a", i)] == pytest.approx((v - 1.0) / 9.0)
-        assert mm[("b", 0)] == 0.0
-
-        rb = {
-            (r["g"], r["i"]): r["scaled"]
-            for r in standardize(
-                df, "v", group_cols=["g"], method="robust"
-            ).collect()
-        }
-        med = 3.0
-        iqr = 4.0 - 2.0  # type-7 quartiles of [1,2,3,4,10]
-        for i, v in enumerate(vals["a"]):
-            assert rb[("a", i)] == pytest.approx((v - med) / iqr)
-
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="method"):
-            standardize(df, "v", method="nope")
-        with _pytest.raises(ValueError, match="ddof"):
-            standardize(df, "v", ddof=2)
-
-    def test_robust_quoted_name_and_string_numeric(self, spark):
-        # robust must use the same casted column as zscore/minmax: a
-        # column name needing backticks and a string-typed numeric
-        # column both work identically across methods
-        from data_validation_engine_spark.llmops.stats import standardize
-
-        df = spark.createDataFrame(
-            [("a", "1"), ("a", "2"), ("a", "3"), ("a", "4"), ("a", "10")],
-            ["g", "my value"],
-        )
-        rb = sorted(
-            r["scaled"]
-            for r in standardize(
-                df, "my value", group_cols=["g"], method="robust"
-            ).collect()
-        )
-        med, iqr = 3.0, 2.0
-        want = sorted((v - med) / iqr for v in [1, 2, 3, 4, 10])
-        assert rb == pytest.approx(want)
-
-    def test_broadcast_stats_escape_flag(self, spark):
-        # broadcast_stats=False drops the hard-coded hint so AQE picks
-        # the join strategy from the measured stats-frame size
-        from data_validation_engine_spark.llmops.stats import standardize
-
-        df = spark.createDataFrame(
-            [("a", 1.0), ("a", 2.0), ("b", 3.0)], "g string, v double"
-        )
-        hinted = standardize(df, "v", group_cols=["g"])
-        plain = standardize(df, "v", group_cols=["g"], broadcast_stats=False)
-        hp = hinted._jdf.queryExecution().optimizedPlan().toString()
-        pp = plain._jdf.queryExecution().optimizedPlan().toString()
-        assert "broadcast" in hp.lower()
-        assert "broadcast" not in pp.lower()
-        # semantics identical either way
-        a = sorted(r["scaled"] for r in hinted.collect())
-        b = sorted(r["scaled"] for r in plain.collect())
-        assert a == pytest.approx(b)
-
-    def test_global_and_declared(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        df = spark.createDataFrame(
-            [(i, float(i)) for i in range(10)], "i int, v double"
-        )
-        eng = StepEngine(spark, register_functions=False)
-        ents = {"t": df}
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "standardize",
-                    "entity_name": "t",
-                    "value_column": "v",
-                    "method": "minmax",
-                    "new_entity_name": "s",
-                }
-            ),
-        )
-        got = {r["i"]: r["scaled"] for r in ents["s"].collect()}
-        assert got[0] == 0.0 and got[9] == 1.0
-        # the broadcast stats join never shuffles the data side
-        plan = ents["s"]._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
-class TestReviewFixes:
-    """Regression pins for review findings."""
-
-    def test_standardize_null_group_key_scales_correctly(self, spark):
-        from data_validation_engine_spark.llmops.stats import standardize
-
-        df = spark.createDataFrame(
-            [(None, 1.0), (None, 3.0), ("g", 5.0), ("g", 7.0)],
-            "g string, v double",
-        )
-        out = {
-            (r["g"], r["v"]): r["scaled"]
-            for r in standardize(
-                df, "v", group_cols=["g"], method="minmax"
-            ).collect()
-        }
-        # NULL group is a real group: its rows scale within it, not 0.0
-        assert out[(None, 1.0)] == 0.0 and out[(None, 3.0)] == 1.0
-        assert out[("g", 5.0)] == 0.0 and out[("g", 7.0)] == 1.0
-
-
-class TestDeclaredSteps:
-    def test_standardize_declared_broadcast_escape(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        df = spark.createDataFrame(
-            [("a", 1.0), ("a", 3.0), ("b", 5.0)], "g string, v double"
-        )
-        eng = StepEngine(spark, register_functions=False)
-        ents = {"t": df}
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "standardize",
-                    "entity_name": "t",
-                    "value_column": "v",
-                    "group_by": ["g"],
-                    "method": "minmax",
-                    "broadcast_stats": False,
-                    "new_entity_name": "s",
-                }
-            ),
-        )
-        plan = ents["s"]._jdf.queryExecution().optimizedPlan().toString()
-        assert "broadcast" not in plan.lower()
-        got = sorted(r["scaled"] for r in ents["s"].collect())
-        assert got == [0.0, 0.0, 1.0]

@@ -6,10 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from data_validation_engine_spark.errors import (
-    ConfigurationError,
-    ConstraintError,
-)
+from data_validation_engine_spark.errors import ConstraintError
 from data_validation_engine_spark.steps import (
     Aggregation,
     AntiJoin,
@@ -34,7 +31,6 @@ from data_validation_engine_spark.steps import (
     parse_step,
 )
 from data_validation_engine_spark.messages import Reporting
-from test_classifier import _weights
 
 
 @pytest.fixture(scope="module")
@@ -728,417 +724,3 @@ def test_driver_engine_does_not_pin_sessions(spark):
     spark.newSession()
     gc.collect()
     assert ref() is None
-
-
-class TestStepDispatch:
-    def test_all_six_steps_run(self, spark):
-        eng = StepEngine(spark, register_functions=False)
-        docs = spark.createDataFrame(
-            [(i, f"term{i % 5} shared word number {i}") for i in range(50)],
-            "doc_id int, text string",
-        )
-        nums = spark.createDataFrame(
-            [(i % 3, float(i)) for i in range(60)], "g int, x double"
-        )
-        edges = spark.createDataFrame(
-            [(i, (i * 7) % 20) for i in range(40)], "src int, dst int"
-        )
-        names = spark.createDataFrame(
-            [(1, "smith"), (2, "taylor")], "id int, name string"
-        )
-        entities = {
-            "docs": docs,
-            "nums": nums,
-            "edges": edges,
-            "names_l": names,
-            "names_r": names.select(
-                F.col("id").alias("rid"), F.col("name").alias("rname")
-            ),
-        }
-        steps = [
-            {
-                "operation": "approx_distinct",
-                "entity_name": "docs",
-                "group_by": [],
-                "value_column": "text",
-                "new_entity_name": "distinct_est",
-            },
-            {
-                "operation": "grouped_quantiles",
-                "entity_name": "nums",
-                "group_by": ["g"],
-                "value_column": "x",
-                "new_entity_name": "quants",
-            },
-            {
-                "operation": "profile",
-                "entity_name": "docs",
-                "new_entity_name": "prof",
-            },
-            {
-                "operation": "fuzzy_join",
-                "entity_name": "names_l",
-                "right_entity": "names_r",
-                "left_column": "name",
-                "right_column": "rname",
-                "new_entity_name": "linked",
-            },
-            {
-                "operation": "bm25",
-                "entity_name": "docs",
-                "id_column": "doc_id",
-                "query": "shared term1",
-                "new_entity_name": "scored",
-            },
-            {
-                "operation": "pagerank",
-                "entity_name": "edges",
-                "new_entity_name": "ranks",
-            },
-        ]
-        for raw in steps:
-            eng.evaluate(entities, config=parse_step(raw))
-        assert entities["distinct_est"].collect()[0].n_seen == 50
-        assert entities["quants"].count() == 3
-        assert entities["prof"].count() == 2
-        assert entities["linked"].count() == 2  # exact self matches
-        assert entities["scored"].count() == 50  # every doc has 'shared'
-        assert entities["ranks"].count() > 0
-
-
-class TestSqlQueryStep:
-    def test_parameterized_query_no_temp_views(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        ents = {
-            "a": spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string"),
-            "b": spark.createDataFrame([(1, 10.0)], "id int, w double"),
-        }
-        before = {t.name for t in spark.catalog.listTables()}
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "sql",
-                    "entity_name": "a",
-                    "inputs": ["b"],
-                    "query": "SELECT a.id, v, w FROM {a} a JOIN {b} b"
-                    " USING (id)",
-                    "new_entity_name": "j",
-                }
-            ),
-        )
-        assert [tuple(r) for r in ents["j"].collect()] == [(1, "x", 10.0)]
-        # parameterized sql must not leak temp views into the catalog
-        assert {t.name for t in spark.catalog.listTables()} == before
-
-    def test_correlated_subquery_shape(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        ents = {
-            "t": spark.createDataFrame(
-                [("g", 1.0), ("g", 2.0), ("g", 3.0), ("h", 5.0)],
-                "seg string, bal double",
-            )
-        }
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "sql",
-                    "entity_name": "t",
-                    "query": "SELECT bal, (SELECT count(*) FROM {t} t2"
-                    " WHERE t2.seg = t.seg AND t2.bal > t.bal) AS n"
-                    " FROM {t} t",
-                    "new_entity_name": "o",
-                }
-            ),
-        )
-        got = {r.bal: r.n for r in ents["o"].collect()}
-        assert got == {1.0: 2, 2.0: 1, 3.0: 0, 5.0: 0}
-
-
-class TestBroadcastTargetHint:
-    def test_hint_forces_broadcast_when_stats_wouldnt(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, LeftJoin
-
-        eng = StepEngine(spark)
-        big = spark.createDataFrame(
-            [(i, i % 5) for i in range(100)], "id int, k int"
-        )
-        dim = spark.createDataFrame(
-            [(i, f"d{i}") for i in range(5)], "k int, label string"
-        )
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            for flag, expect in ((False, 0), (True, 1)):
-                ents = {"big": big, "dim": dim}
-                eng.evaluate(
-                    ents,
-                    config=LeftJoin(
-                        entity_name="big",
-                        target_name="dim",
-                        join_condition="big.k = dim.k",
-                        new_columns={"dim.label": "label"},
-                        broadcast_target=flag,
-                    ),
-                )
-                plan = (
-                    ents["big"]._jdf.queryExecution()
-                    .executedPlan().toString()
-                )
-                assert ("BroadcastHashJoin" in plan) == bool(expect), plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-class TestRepartitionStep:
-    def test_modes(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        df = spark.createDataFrame(
-            [(i, i % 3) for i in range(30)], "id int, k int"
-        ).repartition(6)
-        for cfg, check in [
-            ({"mode": "coalesce", "n": 2},
-             lambda o: o.rdd.getNumPartitions() == 2),
-            ({"mode": "hash", "columns": ["k"], "n": 4},
-             lambda o: o.rdd.getNumPartitions() == 4),
-            ({"mode": "range", "columns": ["id"], "n": 3},
-             lambda o: o.rdd.getNumPartitions() <= 3),
-        ]:
-            ents = {"t": df}
-            eng.evaluate(
-                ents,
-                config=parse_step(
-                    {"operation": "repartition", "entity_name": "t", **cfg}
-                ),
-            )
-            assert check(ents["t"]), cfg
-            assert ents["t"].count() == 30
-
-    def test_rejects_bad_config(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-        import pytest as _pt
-
-        eng = StepEngine(spark)
-        ents = {"t": spark.range(3)}
-        with _pt.raises(ValueError, match="coalesce requires n"):
-            eng.evaluate(
-                ents,
-                config=parse_step(
-                    {"operation": "repartition", "entity_name": "t",
-                     "mode": "coalesce"}
-                ),
-            )
-        with _pt.raises(ValueError, match="requires n or columns"):
-            eng.evaluate(
-                ents,
-                config=parse_step(
-                    {"operation": "repartition", "entity_name": "t"}
-                ),
-            )
-
-
-class TestPseudonymize:
-    def test_deterministic_and_referential(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        cust = spark.createDataFrame(
-            [(1, "alice", 10.0), (2, "bob", 20.0)],
-            "id int, name string, bal double",
-        )
-        orders = spark.createDataFrame(
-            [(1, 100), (1, 101), (2, 102)], "id int, okey int"
-        )
-        ents = {"cust": cust, "orders": orders}
-        for ent in ("cust", "orders"):
-            eng.evaluate(
-                ents,
-                config=parse_step(
-                    {
-                        "operation": "pseudonymize",
-                        "entity_name": ent,
-                        "columns": ["id"],
-                        "salt": "s1",
-                    }
-                ),
-            )
-        # same key -> same token across entities (joins still work)
-        joined = ents["cust"].join(ents["orders"], "id")
-        assert joined.count() == 3
-        # tokens are not the raw values
-        assert {r.id for r in ents["cust"].collect()} != {"1", "2"}
-
-    def test_salt_changes_tokens(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        base = spark.createDataFrame([(1,)], "id int")
-        tokens = []
-        for salt in ("a", "b"):
-            ents = {"t": base}
-            eng.evaluate(
-                ents,
-                config=parse_step(
-                    {
-                        "operation": "pseudonymize",
-                        "entity_name": "t",
-                        "columns": ["id"],
-                        "salt": salt,
-                    }
-                ),
-            )
-            tokens.append(ents["t"].first().id)
-        assert tokens[0] != tokens[1]
-
-    def test_null_stays_null(self, spark):
-        from data_validation_engine_spark.steps import StepEngine, parse_step
-
-        eng = StepEngine(spark)
-        ents = {"t": spark.createDataFrame([(None,), (3,)], "id int")}
-        eng.evaluate(
-            ents,
-            config=parse_step(
-                {
-                    "operation": "pseudonymize",
-                    "entity_name": "t",
-                    "columns": ["id"],
-                    "salt": "s",
-                }
-            ),
-        )
-        vals = [r.id for r in ents["t"].collect()]
-        assert None in vals and len([v for v in vals if v]) == 1
-
-
-def test_sql_query_rejects_reserved_and_invalid_names(spark, sf_dir):
-    from data_validation_engine_spark import StepEngine
-    from data_validation_engine_spark.steps import parse_step
-
-    eng = StepEngine(spark)
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    for bad in ("args", "not-an-identifier"):
-        with pytest.raises(ConfigurationError, match="sql_query"):
-            eng.evaluate(
-                {bad: nation},
-                config=parse_step(
-                    {
-                        "operation": "sql",
-                        "entity_name": bad,
-                        "query": "SELECT * FROM {" + bad + "}",
-                        "new_entity_name": "out",
-                    }
-                ),
-            )
-
-
-def test_declared_classifier_and_maintenance_steps(spark):
-    from data_validation_engine_spark.steps import StepEngine, parse_step
-
-    eng = StepEngine(spark)
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta tok{i} gamma") for i in range(20)],
-        "doc_id long, text string",
-    )
-    ents = {"docs": docs}
-    w = _weights(64)
-    eng.evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "classifier_score",
-                "entity_name": "docs",
-                "text_column": "text",
-                "weights": w,
-                "threshold_prob": 0.5,
-                "keep_column": "keep",
-                "new_entity_name": "scored",
-            }
-        ),
-    )
-    assert ents["scored"].count() == 20
-    assert {"keep", "clf_logit"} <= set(ents["scored"].columns)
-
-    from data_validation_engine_spark.llmops.dedup import minhash_index
-
-    ents["index"] = minhash_index(docs, "doc_id", "text").unionByName(
-        minhash_index(docs, "doc_id", "text")
-    )
-    ents["live"] = docs.where("doc_id % 2 = 0")
-    eng.evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "compact_minhash_index",
-                "entity_name": "index",
-                "live_entity": "live",
-                "id_column": "doc_id",
-                "new_entity_name": "compacted",
-            }
-        ),
-    )
-    n_bands = ents["index"].select("band_idx").distinct().count()
-    assert ents["compacted"].count() == 10 * n_bands
-
-
-def test_exact_verify_and_check_totals_declared_as_steps(spark):
-    """The two hardening options are JSON-declarable (step parity
-    with the library kwargs)."""
-    from data_validation_engine_spark.steps import parse_step
-    from data_validation_engine_spark.steps.engine import StepEngine
-
-    boiler = "SHARED BOILERPLATE " * 3
-    ents = {
-        "docs": spark.createDataFrame(
-            [(i, f"head {i} {boiler} tail {i}") for i in range(5)],
-            "doc_id long, text string",
-        )
-    }
-    eng = StepEngine(spark)
-    eng.evaluate(
-        ents,
-        config=parse_step(
-            {
-                "operation": "remove_repeated_substrings",
-                "entity_name": "docs",
-                "id_column": "doc_id",
-                "min_len": 20,
-                "min_docs": 3,
-                "width": 256,
-                "exact_verify": True,
-                "new_entity_name": "clean",
-            }
-        ),
-    )
-    assert ents["clean"].where("n_spans > 0").count() == 5
-
-    cells = spark.createDataFrame(
-        [], "window_start long, row int, col int, n long"
-    )
-    events = spark.createDataFrame(
-        [(1, "a")], "sec long, v string"
-    ).selectExpr("timestamp_seconds(sec) AS ts", "v")
-    ents2 = {"events": events, "cells": cells}
-    with pytest.raises(ValueError, match="do not cover"):
-        StepEngine(spark).evaluate(
-            ents2,
-            config=parse_step(
-                {
-                    "operation": "windowed_heavy_hitters",
-                    "entity_name": "events",
-                    "cells_entity": "cells",
-                    "ts_column": "ts",
-                    "value_column": "v",
-                    "min_count": 1,
-                    "window_seconds": 100,
-                    "check_totals": True,
-                    "new_entity_name": "hh",
-                }
-            ),
-        )

@@ -6,7 +6,6 @@ import glob
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_validation_engine_spark.errors import ConfigurationError
 from data_validation_engine_spark.messages import Reporting
@@ -1217,240 +1216,3 @@ def test_stream_interval_join_validation(spark, events_batch):
             events_batch, "user_id",
             lower_seconds=1, upper_seconds=1, watermark="1 hour",
         )
-
-
-class TestReviewRegressions:
-    """Regression pins: NULL handling in the sketch/linkage paths and
-    arbitrary column names in profiling."""
-
-    def test_streaming_kmv_survives_null_values(self, spark, tmp_path):
-        from data_validation_engine_spark.streaming import (
-            read_entity_stream,
-            streaming_kmv_distinct,
-        )
-
-        src = tmp_path / "null_src"
-        src.mkdir()
-        batch = spark.createDataFrame(
-            [("2024-01-01 00:00:00", 1), ("2024-01-01 00:10:00", None),
-             ("2024-01-01 00:20:00", 2)],
-            "ts string, user_id int",
-        ).selectExpr("CAST(ts AS TIMESTAMP) ts", "user_id")
-        batch.write.parquet(str(src), mode="overwrite")
-        sdf = streaming_kmv_distinct(
-            read_entity_stream(spark, str(src), batch.schema),
-            "ts", "user_id", window_seconds=3600, k=4,
-        )
-        out = str(tmp_path / "null_out")
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ck_null"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1 and rows[0].n_seen == 2  # NULL ignored
-
-
-class TestStreamingCms:
-    def test_stream_cells_match_batch(self, spark, tmp_path):
-        from data_validation_engine_spark.llmops.sketch import cms_build
-        from data_validation_engine_spark.streaming import (
-            read_entity_stream,
-        )
-        from data_validation_engine_spark.streaming.cardinality import (
-            streaming_cms_cells,
-        )
-
-        rows = [
-            (f"2024-01-01 {h:02d}:{m:02d}:00", f"u{(h * 7 + m) % 5}")
-            for h in range(6)
-            for m in range(0, 60, 7)
-        ] + [("2024-01-02 00:00:00", "sentinel")]  # closes all day-1 windows
-        src = tmp_path / "cms_src"
-        batch = spark.createDataFrame(rows, "ts string, user string").selectExpr(
-            "CAST(ts AS TIMESTAMP) ts", "user"
-        )
-        batch.write.parquet(str(src))
-
-        sdf = streaming_cms_cells(
-            read_entity_stream(spark, str(src), batch.schema),
-            "ts",
-            "user",
-            window_seconds=3600,
-            depth=3,
-            width=64,
-            watermark="1 hour",
-        )
-        out = str(tmp_path / "cms_out")
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "cms_ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["window_start"], r["row"], r["col"]): r["n"]
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got, "no windows emitted"
-
-        want_df = cms_build(
-            batch.selectExpr(
-                "CAST(FLOOR(unix_timestamp(ts) / 3600) * 3600 AS BIGINT)"
-                " AS window_start",
-                "user",
-            ),
-            "user",
-            group_cols=["window_start"],
-            depth=3,
-            width=64,
-        )
-        want = {
-            (r["window_start"], r["row"], r["col"]): r["n"]
-            for r in want_df.collect()
-        }
-        # every emitted cell matches batch exactly, and all six day-1
-        # hourly windows emitted (the sentinel advanced the watermark)
-        for k, v in got.items():
-            assert want[k] == v, k
-        assert len({k[0] for k in got}) == 6
-
-
-class TestStatelessOpsOnStreams:
-    def test_normalize_and_html_extract_run_on_a_stream(
-        self, spark, tmp_path
-    ):
-        """The per-row corpus operators are stateless projections, so
-        they lift onto Structured Streaming unchanged — pin that the
-        plans are actually streamable (no batch-only construct)."""
-        from data_validation_engine_spark.llmops.normalize import (
-            normalize_text,
-        )
-        from data_validation_engine_spark.llmops.web import (
-            extract_html_text,
-            parse_json_column,
-        )
-        from data_validation_engine_spark.streaming import (
-            read_entity_stream,
-        )
-
-        src = tmp_path / "stream_src"
-        batch = spark.createDataFrame(
-            [("a", "<p>Héllo&amp;co</p>", '{"lang":"en"}')],
-            "id string, html string, meta string",
-        )
-        batch.write.parquet(str(src))
-        sdf = read_entity_stream(spark, str(src), batch.schema)
-        piped = parse_json_column(
-            normalize_text(
-                extract_html_text(sdf, "html"),
-                "text",
-                collapse_whitespace=True,
-            ),
-            "meta",
-            "lang STRING",
-        )
-        assert piped.isStreaming
-        out = str(tmp_path / "stream_out")
-        q = (
-            piped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "stream_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        row = spark.read.parquet(out).first()
-        assert row["text"] == "Héllo&co"
-        assert row["parsed"]["lang"] == "en" and row["is_valid"]
-
-
-class TestStreamingParagraphFrequency:
-    def test_drained_windows_match_batch(self, spark, tmp_path):
-        from data_validation_engine_spark.streaming import (
-            read_entity_stream,
-            streaming_paragraph_frequency,
-        )
-
-        boiler = "subscribe to our newsletter"
-        rows = [
-            (
-                f"2024-01-01 {h:02d}:{m:02d}:00",
-                f"body text {h} {m}\n{boiler}"
-                if m % 2 == 0
-                else f"body text {h} {m}",
-            )
-            for h in range(4)
-            for m in range(0, 60, 13)
-        ] + [("2024-01-02 00:00:00", "sentinel closes day one")]
-        src = tmp_path / "pf_src"
-        batch = spark.createDataFrame(
-            rows, "ts string, text string"
-        ).selectExpr("CAST(ts AS TIMESTAMP) ts", "text")
-        batch.write.parquet(str(src))
-
-        sdf = streaming_paragraph_frequency(
-            read_entity_stream(spark, str(src), batch.schema),
-            "ts",
-            "text",
-            window_seconds=3600,
-            watermark="1 hour",
-        )
-        out = str(tmp_path / "pf_out")
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "pf_ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["window_start"], r["h"]): (r["para"], r["n_occ"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got, "no windows emitted"
-
-        # batch twin over the same construction
-        from pyspark.sql import functions as F
-
-        from data_validation_engine_spark.llmops.paragraphs import _norm_col
-
-        want_df = (
-            batch.select(
-                F.expr(
-                    "CAST(FLOOR(unix_timestamp(ts) / 3600) * 3600"
-                    " AS BIGINT) AS window_start"
-                ),
-                F.explode(F.split("text", "\n", -1)).alias("para"),
-            )
-            .where(F.length(F.trim("para")) >= 1)
-            .select(
-                "window_start",
-                "para",
-                F.md5(_norm_col(F.col("para"), normalize=True)).alias("h"),
-            )
-            .groupBy("window_start", "h")
-            .agg(F.min("para").alias("para"), F.count(F.lit(1)).alias("n"))
-        )
-        want = {
-            (r["window_start"], r["h"]): (r["para"], r["n"])
-            for r in want_df.collect()
-        }
-        for k, v in got.items():
-            assert want[k] == v, k
-        # all four day-1 hourly windows flushed by the sentinel, and the
-        # boilerplate hash dominates each window
-        assert len({k[0] for k in got}) == 4
-        for ws in {k[0] for k in got}:
-            top = max(
-                (v[1], v[0]) for k, v in got.items() if k[0] == ws
-            )
-            assert top[1] == boiler
