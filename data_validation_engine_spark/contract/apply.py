@@ -4,9 +4,10 @@ Replaces the reference's row-at-a-time pydantic validation on the RDD with
 two lazy selects over the stringified entity (design target from
 SURVEY.md §4):
 
-- **messages**: every compiled check evaluates as a boolean column; failed
-  checks become structs collected with ``array_compact`` and exploded into
-  the standard message schema. One scan, no driver loop, no Python workers.
+- **messages**: every compiled check evaluates as a boolean column and
+  hands its message fields to ``messages.failure_messages``, which explodes
+  the failed ones into the standard message schema. One scan, no per-row
+  Python loop, no Python workers.
 - **typed**: the declarative cast select (TRIM+TRY_CAST, regex-guarded
   TRY_TO_TIMESTAMP, TRANSFORM/STRUCT recursion — dve
   spark_helpers.py:516-621 design, kept because it is already idiomatic).
@@ -20,7 +21,7 @@ index.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_validation_engine_spark.contract.compile import (
@@ -33,8 +34,17 @@ from data_validation_engine_spark.messages import (
     ORIGIN_ENTITY,
     RECORD_INDEX,
     compile_message_template,
-    empty_messages,
+    failure_messages,
+    rejects_record,
+    union_messages,
 )
+
+
+def _key_col(entity: EntityContract, df: DataFrame) -> Column | None:
+    """A message's ``reporting_field``: the record's key, when declared."""
+    if entity.key_field and entity.key_field in df.columns:
+        return F.col(f"`{entity.key_field}`")
+    return None
 
 
 def contract_messages(
@@ -51,65 +61,30 @@ def contract_messages(
     explode, never per-row Python.
     """
     checks = checks if checks is not None else compile_checks(entity)
-    if not checks:
-        # no declared checks (e.g. a header entity of plain strings):
-        # an empty explode would type as VOID — return the empty frame
-        return empty_messages(df.sparkSession)
-    idx = (
-        F.col(RECORD_INDEX).cast("long")
-        if RECORD_INDEX in df.columns
-        else F.lit(None).cast("long")
-    )
-    key = (
-        F.col(f"`{entity.key_field}`").cast("string")
-        if entity.key_field and entity.key_field in df.columns
-        else F.lit(None).cast("string")
-    )
-    cols = list(df.columns)
-    failure_structs = [
-        F.when(
-            ~F.coalesce(F.expr(c.predicate_sql).cast("boolean"), F.lit(False)),
-            F.struct(
-                F.lit(c.reporting_entity or entity.name).alias("entity"),
-                F.lit(c.code).alias("error_code"),
-                compile_message_template(
-                    c.message,
-                    cols,
-                    extra_vars={"__error_value": F.expr(c.value_sql)},
-                ).alias("error_message"),
-                F.lit(c.field).alias("error_location"),
-                F.lit(c.level).alias("failure_type"),
-                F.lit(c.informational).alias("is_informational"),
-                F.lit(c.category).alias("category"),
-                F.expr(c.value_sql).alias("value"),
+    key = _key_col(entity, df)
+    cols = df.columns
+
+    def fields(c: CompiledCheck) -> dict[str, Column | None]:
+        value = F.expr(c.value_sql)
+        return {
+            "entity": F.lit(c.reporting_entity or entity.name),
+            "original_entity": F.lit(entity.name),
+            "error_code": F.lit(c.code),
+            "error_message": compile_message_template(
+                c.message, cols, extra_vars={"__error_value": value}
             ),
-        )
-        for c in checks
-    ]
-    exploded = (
-        df.select(
-            idx.alias(RECORD_INDEX),
-            key.alias("reporting_field"),
-            F.array_compact(F.array(*failure_structs)).alias("__failures"),
-        )
-        .where(F.size("__failures") > 0)
-        .select(
-            RECORD_INDEX, "reporting_field", F.explode("__failures").alias("f")
-        )
-    )
-    return exploded.select(
-        F.col("f.entity").alias("entity"),
-        F.lit(entity.name).alias("original_entity"),
-        F.col(RECORD_INDEX),
-        F.col("f.error_code").alias("error_code"),
-        F.col("f.error_message").alias("error_message"),
-        F.col("f.error_location").alias("error_location"),
-        F.col("f.failure_type").alias("failure_type"),
-        F.col("f.is_informational").alias("is_informational"),
-        F.col("f.category").alias("category"),
-        F.col("reporting_field"),
-        F.col("f.value").alias("value"),
-        F.lit(None).cast("string").alias("record_json"),
+            "error_location": F.lit(c.field),
+            "failure_type": F.lit(c.level),
+            "is_informational": F.lit(c.informational),
+            "category": F.lit(c.category),
+            "reporting_field": key,
+            "value": value,
+        }
+
+    return failure_messages(
+        df,
+        [(F.expr(c.predicate_sql), fields(c)) for c in checks],
+        record_json=None,
     )
 
 
@@ -122,62 +97,49 @@ def uniqueness_messages(entity: EntityContract, df: DataFrame) -> DataFrame | No
     narrow shuffle per field, keyed on the value, partial-aggregating
     map-side. Null/blank values are exempt (missing-ness is the mandatory
     check's job). Duplicates get messages; nothing is dropped — dedup is
-    an explicit operator, not a validation side effect.
+    an explicit operator, not a validation side effect. ``parse_contract``
+    guarantees each unique field is a declared field.
     """
     from pyspark.sql import Window
 
     if not entity.unique_fields:
         return None
+    key = _key_col(entity, df)
     frames = []
     for field in entity.unique_fields:
-        if field not in df.columns:
-            continue
         value = F.col(f"`{field}`").cast("string")
         counted = df.withColumn(
             "__n_dup", F.count(F.lit(1)).over(Window.partitionBy(value))
         )
-        idx = (
-            F.col(RECORD_INDEX).cast("long")
-            if RECORD_INDEX in df.columns
-            else F.lit(None).cast("long")
+        duplicate = (
+            value.isNotNull() & (F.trim(value) != "") & (F.col("__n_dup") > 1)
         )
-        key = (
-            F.col(f"`{entity.key_field}`").cast("string")
-            if entity.key_field and entity.key_field in df.columns
-            else F.lit(None).cast("string")
-        )
+        fields = {
+            "entity": F.lit(entity.name),
+            "original_entity": F.lit(entity.name),
+            "error_code": F.lit("DUPLICATE_VALUE"),
+            "error_message": F.concat(
+                F.lit(f"Field {field} value "),
+                value,
+                F.lit(" occurs "),
+                F.col("__n_dup").cast("string"),
+                F.lit(" times"),
+            ),
+            "error_location": F.lit(field),
+            "failure_type": F.lit("record"),
+            "is_informational": F.lit(True),
+            "category": F.lit("uniqueness"),
+            "reporting_field": key,
+            "value": value,
+        }
         frames.append(
-            counted.where(
-                value.isNotNull()
-                & (F.trim(value) != "")
-                & (F.col("__n_dup") > 1)
-            ).select(
-                F.lit(entity.name).alias("entity"),
-                F.lit(entity.name).alias("original_entity"),
-                idx.alias(RECORD_INDEX),
-                F.lit("DUPLICATE_VALUE").alias("error_code"),
-                F.concat(
-                    F.lit(f"Field {field} value "),
-                    value,
-                    F.lit(" occurs "),
-                    F.col("__n_dup").cast("string"),
-                    F.lit(" times"),
-                ).alias("error_message"),
-                F.lit(field).alias("error_location"),
-                F.lit("record").alias("failure_type"),
-                F.lit(True).alias("is_informational"),
-                F.lit("uniqueness").alias("category"),
-                key.alias("reporting_field"),
-                value.alias("value"),
-                F.lit(None).cast("string").alias("record_json"),
+            failure_messages(
+                counted,
+                [(~F.coalesce(duplicate, F.lit(False)), fields)],
+                record_json=None,
             )
         )
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return union_messages(frames)
 
 
 def cast_entity(entity: EntityContract, df: DataFrame) -> DataFrame:
@@ -236,9 +198,7 @@ def reject_records(df: DataFrame, messages: DataFrame) -> DataFrame:
     against non-informational record failures
     (dve spark_helpers.py:393-437)."""
     rejects = (
-        messages.where(
-            (F.col("failure_type") == "record") & (~F.col("is_informational"))
-        )
+        messages.where(rejects_record())
         .select(RECORD_INDEX)
         .distinct()
     )
@@ -256,9 +216,7 @@ def reject_records_by_origin(df: DataFrame, messages: DataFrame) -> DataFrame:
     columns — broadcastable at any realistic error volume.
     """
     rejects = (
-        messages.where(
-            (F.col("failure_type") == "record") & (~F.col("is_informational"))
-        )
+        messages.where(rejects_record())
         .select(
             F.col("original_entity").alias(ORIGIN_ENTITY),
             F.col(RECORD_INDEX),

@@ -28,6 +28,8 @@ from typing import Any, Optional
 
 from pydantic import BaseModel, ConfigDict, Field
 
+from data_validation_engine_spark.errors import ConfigurationError
+
 BASE_TYPES = {
     "str": "string",
     "string": "string",
@@ -251,6 +253,14 @@ def parse_contract(
             )
             for n, d in ds.get("fields", {}).items()
         )
+        unique = tuple(ds.get("unique_fields", []))
+        undeclared = [u for u in unique if u not in {f.name for f in fields}]
+        if undeclared:
+            # a typo here would silently switch duplicate detection off
+            raise ConfigurationError(
+                f"dataset {ds_name!r}: unique_fields {undeclared} are not "
+                "declared fields"
+            )
         datasets.append(
             EntityContract(
                 name=ds_name,
@@ -259,7 +269,7 @@ def parse_contract(
                 mandatory_fields=tuple(mandatory),
                 reader_config=ds.get("reader_config", {}),
                 error_details=dict(error_details or {}),
-                unique_fields=tuple(ds.get("unique_fields", [])),
+                unique_fields=unique,
             )
         )
     return Contract(datasets=tuple(datasets))

@@ -7,6 +7,11 @@ schema; per-row message templates compile to native Column expressions
 (``concat``), so message generation is distributed, codegen'd, and written
 once per stage with ``df.write.json``.
 
+Every feed — contract, uniqueness, rule filters and notifications, the
+sync stage (batch and streaming), profile gates — is built by the one
+:func:`failure_messages`: producers supply only their pass predicates and
+per-check field Columns; the ``MESSAGE_SCHEMA`` projection lives here.
+
 Message taxonomy parity: dve core_engine/message.py:136-198
 (entity/record/failure_type/error code/message/location/informational).
 """
@@ -51,6 +56,16 @@ MESSAGE_SCHEMA = T.StructType(
         T.StructField("record_json", T.StringType(), True),
     ]
 )
+
+# Casts take type names: a DataType argument costs extra Python-to-JVM round
+# trips, and building a plan is dominated by those round trips.
+_SQL_TYPES = {f.name: f.dataType.simpleString() for f in MESSAGE_SCHEMA}
+_PER_CHECK = [
+    n for n in MESSAGE_SCHEMA.names if n not in (RECORD_INDEX, "record_json")
+]
+_PER_CHECK_TYPE = T.StructType(
+    [MESSAGE_SCHEMA[n] for n in _PER_CHECK]
+).simpleString()
 
 _TEMPLATE_VAR = re.compile(r"\{\{\s*([A-Za-z_][A-Za-z0-9_.]*)\s*\}\}")
 
@@ -256,68 +271,59 @@ def original_entity_col(
     return F.lit(entity_name)
 
 
-def messages_for_failures(
-    entity_name: str,
-    df: DataFrame,
-    predicate: Column,
-    reporting: Reporting,
-    *,
-    include_record_json: bool = True,
-    exclude_columns: tuple[str, ...] = (),
-) -> DataFrame:
-    """Build the messages DataFrame for rows of ``df`` failing ``predicate``.
+def rejects_record() -> Column:
+    """Over a message feed: the message rejects its record (a
+    non-informational record-level failure) — the one rule record
+    rejection and the rejection statistics share
+    (dve spark_helpers.py:393-437)."""
+    return (F.col("failure_type") == "record") & ~F.col("is_informational")
 
-    ``predicate`` is the *pass* condition: a message is emitted where it is
-    null or false. ``exclude_columns`` are hidden helper columns: usable by
-    the predicate but omitted from the message payload/template. Fully
-    distributed — the caller unions message frames and writes once.
+
+def failure_messages(
+    df: DataFrame,
+    checks: list[tuple[Column, dict[str, Column | None]]],
+    *,
+    record_json: Column | None,
+) -> DataFrame:
+    """The one message-feed builder: a row per (record, failed check) of
+    ``df``, in MESSAGE_SCHEMA order.
+
+    Each check is a ``(pass_predicate, fields)`` pair: a message is emitted
+    where the predicate is null or false, its fields taken from the
+    ``{field: Column}`` map (a field the check omits, or maps to ``None``,
+    is the schema's typed null). ``__record_index__`` (from ``df``, else
+    null) and ``record_json`` are per-row, computed once. N checks cost one
+    scan: per-check structs, ``array_compact`` and a single ``explode``
+    (fixes the scan-per-filter shape the reference inherits from its
+    per-filter Notification loop, dve backends/base/rules.py:356-555).
+    With no checks the feed is empty and derived from ``df`` itself, so a
+    streaming input gives a streaming feed.
     """
-    failed = df.where(~F.coalesce(predicate.cast("boolean"), F.lit(False)))
-    cols = [c for c in df.columns if c not in exclude_columns]
-    idx = (
-        F.col(RECORD_INDEX).cast("long")
-        if RECORD_INDEX in cols
-        else F.lit(None).cast("long")
-    )
-    reporting_field_col = (
-        F.col(f"`{reporting.reporting_field}`").cast("string")
-        if reporting.reporting_field and reporting.reporting_field in cols
-        else F.lit(None).cast("string")
-    )
-    record_json = (
-        F.to_json(
-            F.struct(
-                *[
-                    F.col(f"`{c}`")
-                    for c in cols
-                    if c not in (RECORD_INDEX, ORIGIN_ENTITY)
-                ]
-            )
+    null = F.lit(None)
+    if not checks:
+        return df.where(F.lit(False)).select(
+            *[null.cast(_SQL_TYPES[n]).alias(n) for n in MESSAGE_SCHEMA.names]
         )
-        if include_record_json
-        else F.lit(None).cast("string")
+    # one struct cast names and types every field of a check's message
+    structs = [
+        F.when(
+            ~F.coalesce(pred.cast("boolean"), F.lit(False)),
+            F.struct(
+                *[null if fields.get(n) is None else fields[n] for n in _PER_CHECK]
+            ).cast(_PER_CHECK_TYPE),
+        )
+        for pred, fields in checks
+    ]
+    idx = F.col(RECORD_INDEX) if RECORD_INDEX in df.columns else null
+    exploded = df.select(
+        idx.cast(_SQL_TYPES[RECORD_INDEX]).alias(RECORD_INDEX),
+        (null if record_json is None else record_json)
+        .cast(_SQL_TYPES["record_json"])
+        .alias("record_json"),
+        F.explode(F.array_compact(F.array(*structs))).alias("__m"),
     )
-    if reporting.location:
-        value_col = location_value_col(df, reporting.location)
-    elif reporting.reporting_field and reporting.reporting_field in cols:
-        value_col = F.col(f"`{reporting.reporting_field}`").cast("string")
-    else:
-        value_col = F.lit(None).cast("string")
-    return failed.select(
-        F.lit(reporting.reporting_entity_override or entity_name).alias("entity"),
-        original_entity_col(df, entity_name, reporting).alias(
-            "original_entity"
-        ),
-        idx.alias(RECORD_INDEX),
-        F.lit(reporting.code).alias("error_code"),
-        compile_message_template(reporting.message, cols).alias("error_message"),
-        F.lit(reporting.location).cast("string").alias("error_location"),
-        F.lit(reporting.failure_type).alias("failure_type"),
-        F.lit(reporting.is_informational).alias("is_informational"),
-        F.lit(reporting.category).cast("string").alias("category"),
-        reporting_field_col.alias("reporting_field"),
-        value_col.alias("value"),
-        record_json.alias("record_json"),
+    return exploded.select(
+        *[n if n not in _PER_CHECK else f"__m.{n}" for n in MESSAGE_SCHEMA.names]
     )
 
 
@@ -326,105 +332,59 @@ def messages_for_checks(
     df: DataFrame,
     checks: list[tuple[Column, Reporting]],
     *,
-    include_record_json: bool = True,
     exclude_columns: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Build ONE messages frame for many checks in a single scan of ``df``.
+    """ONE messages frame for many ``(pass_predicate, reporting)`` checks
+    in a single scan of ``df`` (see :func:`failure_messages`).
 
-    Each check is a ``(pass_predicate, reporting)`` pair; a message row is
-    produced for every (record, check) where the predicate is null or false.
-    Implementation: one ``array_compact(array(when(...)))`` of per-check
-    message structs + a single ``explode`` — N checks cost one scan, not N
-    (the pattern contract/apply.py uses for field checks; fixes the
-    scan-per-filter shape the reference inherits from its per-filter
-    Notification loop, dve backends/base/rules.py:356-555).
+    ``exclude_columns`` are hidden helper columns: usable by the predicate
+    but omitted from the message payload and template.
     """
-    if not checks:
-        return empty_messages(df.sparkSession)
     cols = [c for c in df.columns if c not in exclude_columns]
-    idx = (
-        F.col(RECORD_INDEX).cast("long")
-        if RECORD_INDEX in cols
-        else F.lit(None).cast("long")
-    )
-    record_json = (
-        F.to_json(
-            F.struct(
-                *[
-                    F.col(f"`{c}`")
-                    for c in cols
-                    if c not in (RECORD_INDEX, ORIGIN_ENTITY)
-                ]
-            )
-        )
-        if include_record_json
-        else F.lit(None).cast("string")
-    )
 
-    def _struct(reporting: Reporting) -> Column:
-        reporting_field_col = (
-            F.col(f"`{reporting.reporting_field}`").cast("string")
-            if reporting.reporting_field and reporting.reporting_field in cols
-            else F.lit(None).cast("string")
+    def fields(reporting: Reporting) -> dict[str, Column | None]:
+        field_col = (
+            F.col(f"`{reporting.reporting_field}`")
+            if reporting.reporting_field in cols
+            else None
         )
-        if reporting.location:
-            value_col = location_value_col(df, reporting.location)
-        elif reporting.reporting_field and reporting.reporting_field in cols:
-            value_col = F.col(f"`{reporting.reporting_field}`").cast("string")
-        else:
-            value_col = F.lit(None).cast("string")
-        return F.struct(
-            F.lit(reporting.reporting_entity_override or entity_name).alias(
-                "entity"
+        return {
+            "entity": F.lit(reporting.reporting_entity_override or entity_name),
+            "original_entity": original_entity_col(df, entity_name, reporting),
+            "error_code": F.lit(reporting.code),
+            "error_message": compile_message_template(reporting.message, cols),
+            "error_location": F.lit(reporting.location),
+            "failure_type": F.lit(reporting.failure_type),
+            "is_informational": F.lit(reporting.is_informational),
+            "category": F.lit(reporting.category),
+            "reporting_field": field_col,
+            "value": (
+                location_value_col(df, reporting.location)
+                if reporting.location
+                else field_col
             ),
-            original_entity_col(df, entity_name, reporting).alias(
-                "original_entity"
-            ),
-            F.lit(reporting.code).alias("error_code"),
-            compile_message_template(reporting.message, cols).alias(
-                "error_message"
-            ),
-            F.lit(reporting.location).cast("string").alias("error_location"),
-            F.lit(reporting.failure_type).alias("failure_type"),
-            F.lit(reporting.is_informational).alias("is_informational"),
-            F.lit(reporting.category).cast("string").alias("category"),
-            reporting_field_col.alias("reporting_field"),
-            value_col.alias("value"),
-        )
+        }
 
-    failed_structs = [
-        F.when(
-            ~F.coalesce(pred.cast("boolean"), F.lit(False)), _struct(reporting)
+    record_json = F.to_json(
+        F.struct(
+            *[
+                F.col(f"`{c}`")
+                for c in cols
+                if c not in (RECORD_INDEX, ORIGIN_ENTITY)
+            ]
         )
-        for pred, reporting in checks
-    ]
-    exploded = df.select(
-        idx.alias(RECORD_INDEX),
-        record_json.alias("record_json"),
-        F.explode(F.array_compact(F.array(*failed_structs))).alias("__m"),
     )
-    return exploded.select(
-        F.col("__m.entity").alias("entity"),
-        F.col("__m.original_entity").alias("original_entity"),
-        F.col(RECORD_INDEX),
-        F.col("__m.error_code").alias("error_code"),
-        F.col("__m.error_message").alias("error_message"),
-        F.col("__m.error_location").alias("error_location"),
-        F.col("__m.failure_type").alias("failure_type"),
-        F.col("__m.is_informational").alias("is_informational"),
-        F.col("__m.category").alias("category"),
-        F.col("__m.reporting_field").alias("reporting_field"),
-        F.col("__m.value").alias("value"),
-        F.col("record_json"),
+    return failure_messages(
+        df,
+        [(pred, fields(reporting)) for pred, reporting in checks],
+        record_json=record_json,
     )
 
 
 def empty_messages(spark: SparkSession) -> DataFrame:
     """A message feed with no rows, planned in the JVM (a typed null per
     field over an empty range) so evaluating it starts no Python worker."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in MESSAGE_SCHEMA]
-    )
+    return failure_messages(spark.range(0), [], record_json=None)
 
 
 def union_messages(frames: list[DataFrame]) -> DataFrame | None:

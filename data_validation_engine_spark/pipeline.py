@@ -50,6 +50,7 @@ from data_validation_engine_spark.messages import (
     MessageCollector,
     ORIGIN_ENTITY,
     RECORD_INDEX,
+    rejects_record,
 )
 from data_validation_engine_spark.sinks.audit import AuditLog, new_submission_id
 from data_validation_engine_spark.sinks.errors import (
@@ -522,8 +523,7 @@ def run_pipeline(
         F.count(F.lit(1)).alias("n_messages"),
         F.count_distinct(
             F.when(
-                (F.col("failure_type") == "record")
-                & ~F.col("is_informational"),
+                rejects_record(),
                 F.concat_ws(
                     "/",
                     F.col("original_entity"),

@@ -56,7 +56,9 @@ from data_validation_engine_spark.errors import ConfigurationError, ConstraintEr
 from data_validation_engine_spark.exprs import parse_multiple_expressions
 from data_validation_engine_spark.messages import (
     MessageCollector,
-    messages_for_failures,
+    failure_messages,
+    messages_for_checks,
+    union_messages,
 )
 from data_validation_engine_spark.steps import configs
 
@@ -663,11 +665,10 @@ class StepEngine:
         # and drops excluded columns from the payload only — the sync stage
         # relies on expressions referencing excluded helper columns.
         predicate_fails_for_matches = ~_truthy(config.expression)
-        return messages_for_failures(
+        return messages_for_checks(
             config.entity_name,
             df,
-            predicate_fails_for_matches,
-            config.reporting,
+            [(predicate_fails_for_matches, config.reporting)],
             exclude_columns=tuple(config.excluded_columns or ()),
         )
 
@@ -1387,7 +1388,6 @@ class StepEngine:
         from data_validation_engine_spark.llmops.analytics import (
             profile_columns,
         )
-        from data_validation_engine_spark.messages import RECORD_INDEX
 
         df = entities[config.entity_name]
         prof = profile_columns(
@@ -1395,38 +1395,34 @@ class StepEngine:
             list(config.columns) if config.columns is not None else None,
         )
 
-        def msg(
-            filtered: DataFrame,
+        def check(
+            violated: Column,
             template: Column,
             value: Column,
             *,
             field: Column | None = None,
-        ):
+        ) -> tuple[Column, dict[str, Column | None]]:
             # entity-level violations (min_rows) carry a NULL
             # reporting_field — blaming an arbitrary column would
             # misattribute a dataset-wide failure
-            field = F.col("column") if field is None else field
-            return filtered.select(
-                F.lit(config.entity_name).alias("entity"),
-                F.lit(config.entity_name).alias("original_entity"),
-                F.lit(None).cast("long").alias(RECORD_INDEX),
-                F.lit(config.code).alias("error_code"),
-                template.alias("error_message"),
-                F.lit(None).cast("string").alias("error_location"),
-                F.lit("submission").alias("failure_type"),
-                F.lit(False).alias("is_informational"),
-                F.lit("profile").alias("category"),
-                field.alias("reporting_field"),
-                value.cast("string").alias("value"),
-                F.lit(None).cast("string").alias("record_json"),
-            )
+            return ~F.coalesce(violated, F.lit(False)), {
+                "entity": F.lit(config.entity_name),
+                "original_entity": F.lit(config.entity_name),
+                "error_code": F.lit(config.code),
+                "error_message": template,
+                "failure_type": F.lit("submission"),
+                "is_informational": F.lit(False),
+                "category": F.lit("profile"),
+                "reporting_field": F.col("column") if field is None else field,
+                "value": value,
+            }
 
-        feeds = []
+        per_column = []
         if config.max_null_frac is not None:
             frac = F.col("n_null") / F.greatest(F.col("n_rows"), F.lit(1))
-            feeds.append(
-                msg(
-                    prof.where(frac > F.lit(float(config.max_null_frac))),
+            per_column.append(
+                check(
+                    frac > F.lit(float(config.max_null_frac)),
                     F.concat(
                         F.lit("column "), F.col("column"),
                         F.lit(" null fraction "),
@@ -1437,11 +1433,9 @@ class StepEngine:
                 )
             )
         if config.min_distinct is not None:
-            feeds.append(
-                msg(
-                    prof.where(
-                        F.col("n_distinct") < F.lit(int(config.min_distinct))
-                    ),
+            per_column.append(
+                check(
+                    F.col("n_distinct") < F.lit(int(config.min_distinct)),
                     F.concat(
                         F.lit("column "), F.col("column"),
                         F.lit(" has "), F.col("n_distinct").cast("string"),
@@ -1450,23 +1444,28 @@ class StepEngine:
                     F.col("n_distinct"),
                 )
             )
+        feeds = []
+        if per_column:
+            feeds.append(failure_messages(prof, per_column, record_json=None))
         if config.min_rows is not None:
             feeds.append(
-                msg(
-                    prof.limit(1).where(
-                        F.col("n_rows") < F.lit(int(config.min_rows))
-                    ),
-                    F.concat(
-                        F.lit("entity has "),
-                        F.col("n_rows").cast("string"),
-                        F.lit(f" rows, below {int(config.min_rows)}"),
-                    ),
-                    F.col("n_rows"),
-                    field=F.lit(None).cast("string"),
+                failure_messages(
+                    prof.limit(1),
+                    [
+                        check(
+                            F.col("n_rows") < F.lit(int(config.min_rows)),
+                            F.concat(
+                                F.lit("entity has "),
+                                F.col("n_rows").cast("string"),
+                                F.lit(f" rows, below {int(config.min_rows)}"),
+                            ),
+                            F.col("n_rows"),
+                            field=F.lit(None),
+                        )
+                    ],
+                    record_json=None,
                 )
             )
-        from data_validation_engine_spark.messages import union_messages
-
         return union_messages(feeds)
 
     def semantic_dedup(

@@ -41,6 +41,50 @@ from data_validation_engine_spark.steps.configs import DeferredFilter
 Entities = MutableMapping[str, DataFrame]
 
 
+def sync_entity(
+    entity_name: str, df: DataFrame, filters: list[DeferredFilter]
+) -> tuple[DataFrame, DataFrame]:
+    """One entity's sync stage: ``(survivors, messages)``.
+
+    Shared by the batch stage and its streaming lift
+    (streaming/filters.py), so both evaluate, report and drop alike.
+    """
+    record_level = [f for f in filters if f.reporting.emit == "record_failure"]
+    notify_only = [f for f in filters if f.reporting.emit != "record_failure"]
+
+    # one pass: compute every record-level predicate as a column
+    pred_names = [f"__filter_{i}" for i in range(len(record_level))]
+    with_preds = df.select(
+        "*",
+        *[
+            F.expr(f.expression).cast("boolean").alias(name)
+            for f, name in zip(record_level, pred_names)
+        ],
+    )
+
+    # ONE message frame for all filters on this entity (single scan):
+    # record-level checks reference their precomputed predicate columns,
+    # notify-only checks evaluate their expression in place (the helper
+    # columns are excluded from payloads, so the frames are equivalent).
+    checks: list[tuple[Column, Reporting]] = [
+        (F.col(name), f.reporting) for f, name in zip(record_level, pred_names)
+    ] + [
+        (F.expr(f.expression).cast("boolean"), f.reporting)
+        for f in notify_only
+    ]
+    messages = messages_for_checks(
+        entity_name, with_preds, checks, exclude_columns=tuple(pred_names)
+    )
+    if not record_level:
+        return df, messages
+
+    # survivor condition: every predicate non-null AND true
+    survive = F.lit(True)
+    for name in pred_names:
+        survive = survive & F.col(name).isNotNull() & F.col(name)
+    return with_preds.where(survive).drop(*pred_names), messages
+
+
 def apply_sync_filters(
     entities: Entities, filters: list[DeferredFilter]
 ) -> DataFrame | None:
@@ -51,53 +95,8 @@ def apply_sync_filters(
 
     collector = MessageCollector()
     for entity_name, entity_filters in by_entity.items():
-        entity = entities[entity_name]
-
-        record_level = [
-            f for f in entity_filters if f.reporting.emit == "record_failure"
-        ]
-        notify_only = [
-            f for f in entity_filters if f.reporting.emit != "record_failure"
-        ]
-
-        # one pass: compute every record-level predicate as a column
-        pred_names = [f"__filter_{i}" for i in range(len(record_level))]
-        with_preds = entity.select(
-            "*",
-            *[
-                F.expr(f.expression).cast("boolean").alias(name)
-                for f, name in zip(record_level, pred_names)
-            ],
+        entities[entity_name], messages = sync_entity(
+            entity_name, entities[entity_name], entity_filters
         )
-
-        # ONE message frame for all filters on this entity (single scan):
-        # record-level checks reference their precomputed predicate columns,
-        # notify-only checks evaluate their expression in place (the helper
-        # columns are excluded from payloads, so the frames are equivalent).
-        checks: list[tuple[Column, Reporting]] = [
-            (F.col(name), f.reporting)
-            for f, name in zip(record_level, pred_names)
-        ] + [
-            (F.expr(f.expression).cast("boolean"), f.reporting)
-            for f in notify_only
-        ]
-        if checks:
-            collector.add(
-                messages_for_checks(
-                    entity_name,
-                    with_preds,
-                    checks,
-                    exclude_columns=tuple(pred_names),
-                )
-            )
-
-        if not record_level:
-            continue
-
-        # survivor condition: every predicate non-null AND true
-        survive = F.lit(True)
-        for name in pred_names:
-            survive = survive & F.col(name).isNotNull() & F.col(name)
-        entities[entity_name] = with_preds.where(survive).drop(*pred_names)
-
+        collector.add(messages)
     return collector.union()

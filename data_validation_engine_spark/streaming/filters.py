@@ -13,14 +13,14 @@ watermark dropped by Spark's state store).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from data_validation_engine_spark.errors import ConfigurationError
-from data_validation_engine_spark.messages import Reporting, messages_for_checks
 from data_validation_engine_spark.steps.configs import DeferredFilter
+from data_validation_engine_spark.steps.sync_filters import sync_entity
 
 
 def read_entity_stream(
@@ -52,45 +52,17 @@ def streaming_sync_filters(
 ) -> tuple[DataFrame, DataFrame]:
     """Lift the sync-filter stage onto a stream.
 
-    Returns ``(survivors, messages)`` — both streaming DataFrames. All
-    predicates are computed in one projection per micro-batch (the same
-    single-scan shape as the batch stage); messages use the shared
-    ``messages_for_checks`` explode, so the error feed schema is identical
-    to batch.
+    Returns ``(survivors, messages)`` — both streaming DataFrames, even
+    with no filters. Each micro-batch runs the batch stage's own
+    per-entity body (``steps.sync_filters.sync_entity``), so predicates,
+    messages and the survivor conjunction are identical to batch.
     """
     if not sdf.isStreaming:
         raise ConfigurationError(
             "streaming_sync_filters requires a streaming DataFrame; "
             "use apply_sync_filters for batch entities"
         )
-    entity_name = "stream"
-    record_level = [f for f in filters if f.reporting.emit == "record_failure"]
-    notify_only = [f for f in filters if f.reporting.emit != "record_failure"]
-
-    pred_names = [f"__filter_{i}" for i in range(len(record_level))]
-    with_preds = sdf.select(
-        "*",
-        *[
-            F.expr(f.expression).cast("boolean").alias(name)
-            for f, name in zip(record_level, pred_names)
-        ],
-    )
-    checks: list[tuple[Column, Reporting]] = [
-        (F.col(name), f.reporting)
-        for f, name in zip(record_level, pred_names)
-    ] + [
-        (F.expr(f.expression).cast("boolean"), f.reporting)
-        for f in notify_only
-    ]
-    messages = messages_for_checks(
-        entity_name, with_preds, checks, exclude_columns=tuple(pred_names)
-    )
-
-    survive = F.lit(True)
-    for name in pred_names:
-        survive = survive & F.col(name).isNotNull() & F.col(name)
-    survivors = with_preds.where(survive).drop(*pred_names)
-    return survivors, messages
+    return sync_entity("stream", sdf, filters)
 
 
 def start_message_sink(

@@ -10,7 +10,7 @@ from data_validation_engine_spark.contract import apply_contract, parse_contract
 from data_validation_engine_spark.messages import (
     Reporting,
     location_value_col,
-    messages_for_failures,
+    messages_for_checks,
     parse_location,
 )
 
@@ -148,11 +148,10 @@ def test_location_truncation(spark):
 
 def test_location_in_message_value(spark):
     df = spark.createDataFrame([(1, 99)], "id long, score long")
-    msgs = messages_for_failures(
+    msgs = messages_for_checks(
         "t",
         df,
-        F.lit(False),
-        Reporting(code="X", message="bad", location="score"),
+        [(F.lit(False), Reporting(code="X", message="bad", location="score"))],
     ).first()
     assert msgs["value"] == "99"
     assert msgs["error_location"] == "score"
@@ -297,6 +296,23 @@ def test_unique_fields_flag_duplicates(spark):
     assert all(r["is_informational"] for r in dups)
     assert all("occurs 2 times" in r["error_message"] for r in dups)
     assert typed.count() == 5  # messages, never silent drops
+
+
+def test_unique_fields_must_be_declared():
+    from data_validation_engine_spark.errors import ConfigurationError
+
+    doc = {
+        "contract": {
+            "datasets": {
+                "people": {
+                    "fields": {"id": "int", "nhs": "str"},
+                    "unique_fields": ["nhz"],
+                }
+            }
+        }
+    }
+    with pytest.raises(ConfigurationError, match="nhz"):
+        parse_contract(doc)
 
 
 # -- timezone constraint -----------------------------------------------------

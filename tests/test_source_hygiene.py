@@ -15,6 +15,8 @@ library unimported, so a submission's setup does not pay for it, and a
 step loads only its own operator module. The driver roster must carry no
 dead function and no round-layered registry. Tests are filed by the
 module they test, and code says why, not in which round.
+The message feed is built in one place: no other library module names a
+message-only column.
 """
 
 from __future__ import annotations
@@ -333,3 +335,38 @@ def test_step_types_are_not_imported_by_name():
                 or isinstance(getattr(configs, alias.name, None), type)
             ]
     assert bad == []
+
+
+#: message fields no feed but the message feed itself carries
+_MESSAGE_ONLY_FIELDS = ("error_code", "error_location", "record_json")
+_SQL_ALIAS = re.compile(
+    r"\bAS\s+`?(" + "|".join(_MESSAGE_ONLY_FIELDS) + r")\b", re.IGNORECASE
+)
+
+
+def test_message_schema_is_projected_only_in_messages():
+    """``messages.failure_messages`` is the one builder of the message
+    feed: other modules hand it ``{field: Column}`` maps and never name a
+    message-only column themselves, through ``.alias``, ``withColumn``,
+    ``withColumnRenamed`` or a SQL ``AS``."""
+    import ast
+
+    bad = []
+    for p in sorted((REPO / "data_validation_engine_spark").rglob("*.py")):
+        rel = p.relative_to(REPO).as_posix()
+        if rel == "data_validation_engine_spark/messages.py":
+            continue
+        for node in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if _SQL_ALIAS.search(node.value):
+                    bad.append((rel, node.lineno, node.value))
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("alias", "withColumn", "withColumnRenamed")
+            ):
+                continue
+            named = node.args[-1 if node.func.attr == "withColumnRenamed" else 0]
+            if isinstance(named, ast.Constant) and named.value in _MESSAGE_ONLY_FIELDS:
+                bad.append((rel, node.lineno, named.value))
+    assert bad == [], bad

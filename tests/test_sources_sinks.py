@@ -141,12 +141,12 @@ def test_write_entities_and_messages(spark, tmp):
 
     from data_validation_engine_spark.messages import (
         Reporting,
-        messages_for_failures,
+        messages_for_checks,
     )
     from pyspark.sql import functions as F
 
-    msgs = messages_for_failures(
-        "t", df, F.col("id") > 1, Reporting(code="LOW", message="id {{id}}")
+    msgs = messages_for_checks(
+        "t", df, [(F.col("id") > 1, Reporting(code="LOW", message="id {{id}}"))]
     )
     write_messages_jsonl(msgs, str(tmp / "errors"))
     feed = spark.read.json(str(tmp / "errors"))

@@ -123,6 +123,26 @@ def test_streaming_message_sink_jsonl(spark, events_stream, events_batch, tmp_pa
     assert codes == {"BIG_VALUE", "ERR_EVENT"}
 
 
+def test_streaming_sync_without_filters_drains_empty_feed(
+    spark, events_stream, tmp_path
+):
+    # with no filters the message feed must still be a stream: a batch
+    # frame here made start_message_sink raise WRITE_STREAM_NOT_ALLOWED
+    survivors, messages = streaming_sync_filters(events_stream, [])
+    assert survivors.isStreaming and messages.isStreaming
+    out = str(tmp_path / "errors")
+    q = start_message_sink(
+        messages, out, str(tmp_path / "ck_empty"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    lines = []
+    for f in glob.glob(f"{out}/*.json"):
+        with open(f) as fh:
+            lines += [line for line in fh if line.strip()]
+    assert lines == []
+
+
 @pytest.mark.slow
 def test_windowed_counts_with_watermark(spark, events_stream, events_batch, tmp_path):
     agg = windowed_counts(
