@@ -21,7 +21,9 @@ index.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import TYPE_CHECKING, Union
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_validation_engine_spark.contract.compile import (
@@ -39,6 +41,9 @@ from data_validation_engine_spark.messages import (
     union_messages,
 )
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 
 def _key_col(entity: EntityContract, df: DataFrame) -> Column | None:
     """A message's ``reporting_field``: the record's key, when declared."""
@@ -47,10 +52,17 @@ def _key_col(entity: EntityContract, df: DataFrame) -> Column | None:
     return None
 
 
+def check_predicates(checks: list[CompiledCheck]) -> list[Column]:
+    """Each check's pass predicate as a Column — parsed once, shared by the
+    message feed and the record filter."""
+    return [F.expr(c.predicate_sql) for c in checks]
+
+
 def contract_messages(
     entity: EntityContract,
     df: DataFrame,
     checks: list[CompiledCheck] | None = None,
+    predicates: list[Column] | None = None,
 ) -> DataFrame:
     """One message row per (record, failed check), standard message schema.
 
@@ -61,6 +73,8 @@ def contract_messages(
     explode, never per-row Python.
     """
     checks = checks if checks is not None else compile_checks(entity)
+    if predicates is None:
+        predicates = check_predicates(checks)
     key = _key_col(entity, df)
     cols = df.columns
 
@@ -83,7 +97,7 @@ def contract_messages(
 
     return failure_messages(
         df,
-        [(F.expr(c.predicate_sql), fields(c)) for c in checks],
+        [(pred, fields(c)) for c, pred in zip(checks, predicates)],
         record_json=None,
     )
 
@@ -151,7 +165,9 @@ def cast_entity(entity: EntityContract, df: DataFrame) -> DataFrame:
 
 
 def valid_record_predicate(
-    entity: EntityContract, checks: list[CompiledCheck] | None = None
+    entity: EntityContract,
+    checks: list[CompiledCheck] | None = None,
+    predicates: list[Column] | None = None,
 ):
     """Boolean Column: record passes every *rejecting* contract check.
 
@@ -160,14 +176,14 @@ def valid_record_predicate(
     rejection feed filter (dve spark_helpers.py:393-437).
     """
     checks = checks if checks is not None else compile_checks(entity)
-    pred = F.lit(True)
-    for c in checks:
+    if predicates is None:
+        predicates = check_predicates(checks)
+    valid = F.lit(True)
+    for c, pred in zip(checks, predicates):
         if c.informational or c.level != "record":
             continue
-        pred = pred & F.coalesce(
-            F.expr(c.predicate_sql).cast("boolean"), F.lit(False)
-        )
-    return pred
+        valid = valid & F.coalesce(pred.cast("boolean"), F.lit(False))
+    return valid
 
 
 def apply_contract(
@@ -183,13 +199,14 @@ def apply_contract(
     record-rejection behaviour, applied in-stage).
     """
     checks = compile_checks(entity)
-    messages = contract_messages(entity, df, checks)
+    predicates = check_predicates(checks)
+    messages = contract_messages(entity, df, checks, predicates)
     uniq = uniqueness_messages(entity, df)
     if uniq is not None:
         messages = messages.unionByName(uniq)
     source = df
     if drop_failed_records and checks:
-        source = df.where(valid_record_predicate(entity, checks))
+        source = df.where(valid_record_predicate(entity, checks, predicates))
     return cast_entity(entity, source), messages
 
 
@@ -205,22 +222,45 @@ def reject_records(df: DataFrame, messages: DataFrame) -> DataFrame:
     return df.join(rejects, on=RECORD_INDEX, how="left_anti")
 
 
-def reject_records_by_origin(df: DataFrame, messages: DataFrame) -> DataFrame:
+def reject_keys(
+    spark: SparkSession, messages: Union[DataFrame, "pa.Table"]
+) -> DataFrame:
+    """The distinct ``(__origin_entity__, __record_index__)`` of the records
+    a feed rejects (its non-informational record failures). A collected
+    feed's keys are found driver-side and join as a local relation, so
+    the anti-join shuffles nothing."""
+    if isinstance(messages, DataFrame):
+        return (
+            messages.where(rejects_record())
+            .select(
+                F.col("original_entity").alias(ORIGIN_ENTITY),
+                F.col(RECORD_INDEX),
+            )
+            .distinct()
+        )
+    import pyarrow.compute as pc
+
+    rejected = messages.filter(
+        pc.and_(
+            pc.equal(messages["failure_type"], "record"),
+            pc.invert(messages["is_informational"]),
+        )
+    )
+    keys = ["original_entity", RECORD_INDEX]
+    distinct = rejected.select(keys).group_by(keys).aggregate([])
+    return spark.createDataFrame(
+        distinct.select(keys).rename_columns([ORIGIN_ENTITY, RECORD_INDEX])
+    )
+
+
+def reject_records_by_origin(df: DataFrame, keys: DataFrame) -> DataFrame:
     """Row-level-lineage record rejection.
 
-    Anti-join on ``(__origin_entity__, __record_index__)`` against each
-    message's ``(original_entity, __record_index__)``: rows carry the
-    contract entity their index belongs to, so rejection survives
-    rename/copy/union of the entity namespace (where a name-scoped
-    anti-join silently matches nothing). The reject frame is 2 narrow
-    columns — broadcastable at any realistic error volume.
+    Anti-join on ``(__origin_entity__, __record_index__)`` against a feed's
+    :func:`reject_keys`: rows carry the contract entity their index
+    belongs to, so rejection survives rename/copy/union of the entity
+    namespace (where a name-scoped anti-join silently matches nothing).
+    The key frame is 2 narrow columns — broadcastable at any realistic
+    error volume.
     """
-    rejects = (
-        messages.where(rejects_record())
-        .select(
-            F.col("original_entity").alias(ORIGIN_ENTITY),
-            F.col(RECORD_INDEX),
-        )
-        .distinct()
-    )
-    return df.join(rejects, on=[ORIGIN_ENTITY, RECORD_INDEX], how="left_anti")
+    return df.join(keys, on=[ORIGIN_ENTITY, RECORD_INDEX], how="left_anti")

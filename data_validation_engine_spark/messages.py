@@ -407,6 +407,3 @@ class MessageCollector:
 
     def union(self) -> DataFrame | None:
         return union_messages(self.frames)
-
-    def union_or_empty(self, spark: SparkSession) -> DataFrame:
-        return self.union() or empty_messages(spark)

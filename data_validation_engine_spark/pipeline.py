@@ -15,13 +15,20 @@ thread-safe, so callers can fan out with their own executor):
    messages (dve backends/base/contract.py:227-315).
 3. **data contract** (pipeline.py:426-544) — reload ``transform/``, add
    ``__record_index__``, run the expression-compiled contract; write
-   ``data_contract/`` parquet + stage errors JSONL.
+   ``data_contract/`` parquet.
 4. **business rules** (pipeline.py:546-728) — entity manager with lazy
    refdata + ``refdata_dve_submission_info``; pre-sync steps per rule, ONE
-   sync-filter stage for all rules, post-sync steps; cross-stage record
-   rejection by anti-join on the record index; write final parquet.
-5. **error report** (pipeline.py:801-948) — aggregate the message feed
-   distributed, write the report + submission statistics audit rows.
+   sync-filter stage for all rules, post-sync steps. The contract and rule
+   messages then form one tagged feed, collected once with a bounded
+   ``limit(cap + 1).toArrow()`` (the cap is the report's 100,000 detail
+   rows), and both stage error JSONL feeds are written from it;
+   cross-stage record rejection by anti-join on the record index; write
+   final parquet.
+5. **error report** (pipeline.py:730-746, 801-948) — the report, the
+   ``error_aggregates`` artifact and the submission statistics audit row.
+   At or under the cap every one of them is derived driver-side from the
+   collected table, as are the JSONL feeds and the rejection keys; over
+   it each is written distributed from the checkpointed feed.
 
 The parquet checkpoints between stages are deliberate barriers (error
 isolation + restartability); *within* a stage everything is one fused lazy
@@ -39,6 +46,7 @@ from pyspark.sql import functions as F
 
 from data_validation_engine_spark.contract.apply import (
     apply_contract,
+    reject_keys,
     reject_records,
     reject_records_by_origin,
 )
@@ -50,15 +58,24 @@ from data_validation_engine_spark.messages import (
     MessageCollector,
     ORIGIN_ENTITY,
     RECORD_INDEX,
-    rejects_record,
+    empty_messages,
+    union_messages,
 )
 from data_validation_engine_spark.sinks.audit import AuditLog, new_submission_id
 from data_validation_engine_spark.sinks.errors import (
+    FEEDS,
+    MAX_DETAIL_ROWS,
+    Feed,
+    collect_feed,
+    select_feed,
+    tag_feed,
     write_literal_messages_jsonl,
     write_messages_jsonl,
 )
 from data_validation_engine_spark.sinks.report import (
     error_aggregates,
+    message_statistics,
+    write_error_aggregates,
     write_error_report,
 )
 from data_validation_engine_spark.sources.csv import CSVOptions, read_csv
@@ -178,6 +195,38 @@ def read_submitted_file(
             *[F.col(f"`{n}`").cast("string").alias(n) for n in field_names]
         )
     raise ValueError(f"unsupported file extension {ext!r} for {path}")
+
+
+def write_message_feeds(
+    feed: DataFrame, errors_dir: Path, *, cap: int = MAX_DETAIL_ROWS
+) -> Feed:
+    """Write the tagged feed's JSONL feeds; return the untagged feed the
+    stage-6 sinks read: its Arrow table when a bounded collect finds at
+    most ``cap`` rows, else ``feed`` itself (cap 0: always ``feed``)."""
+    collected = collect_feed(feed, cap)
+    source = feed if collected is None else collected
+    for name in FEEDS:
+        write_messages_jsonl(select_feed(source, name), str(errors_dir / name))
+    return select_feed(source)
+
+
+def write_feed_artifacts(
+    messages: Feed, work: Path, submission_id: str, *, write_report: bool
+) -> tuple[str | None, str, dict[str, int]]:
+    """Stage 6: the error report, the ``error_aggregates`` audit artifact
+    and the feed's statistics; returns (report path, aggregates path,
+    statistics)."""
+    report_path = None
+    if write_report:
+        report_path = write_error_report(messages, str(work / "error_report"))
+    # per (entity, code) counts persisted as parquet next to the report,
+    # stamped with the submission id — the reference publishes the same
+    # frame for auditing (dve pipeline/pipeline.py:730-746, 801-948);
+    # written unconditionally (it is the machine-readable artifact; the
+    # report is the human one)
+    agg_path = str(work / "audit" / "error_aggregates.parquet")
+    write_error_aggregates(error_aggregates(messages), submission_id, agg_path)
+    return report_path, agg_path, message_statistics(messages)
 
 
 def run_pipeline(
@@ -371,16 +420,6 @@ def run_pipeline(
         typed.write.mode("overwrite").parquet(str(work / "data_contract" / name))
         contract_schemas[name] = typed.schema
         contract_messages.add(messages)
-    # lazy checkpoint BEFORE the JSONL write: the write is this frame's
-    # first action and materialises the blocks, so the all_messages
-    # union below reuses them instead of re-running the whole contract
-    # validation DAG a second time (the message feed is error-sized,
-    # never corpus-sized)
-    contract_msgs = contract_messages.union_or_empty(spark).localCheckpoint(
-        eager=False
-    )
-    write_messages_jsonl(contract_msgs, str(errors_dir / "data_contract"))
-    collector.add(contract_msgs)
 
     # -- stage 4: business rules -------------------------------------------
     # every row carries its contract-entity lineage (a constant literal per
@@ -435,22 +474,21 @@ def run_pipeline(
             )
             success = False
 
-        # same lazy-checkpoint-then-write as the contract feed: the
-        # rules DAG (joins/steps over the entities) is not re-run when
-        # all_messages unions it below
-        rule_msgs = rule_messages.union_or_empty(spark).localCheckpoint(
-            eager=False
-        )
-        write_messages_jsonl(rule_msgs, str(errors_dir / "business_rules"))
-        collector.add(rule_msgs)
-        # lazy checkpoint: all_messages feeds MANY downstream actions (the
-        # per-entity rejection anti-joins, the report collect, the
-        # error-aggregates write, the statistics aggregate) — materialise
-        # the union once at the first consumer instead of re-running the
-        # whole message DAG per action
-        all_messages = collector.union_or_empty(spark).localCheckpoint(
-            eager=False
-        )
+        # ONE feed, each message tagged with the JSONL feed it belongs to.
+        # Lazy checkpoint: its first action (the bounded collect) runs the
+        # contract and rules message DAGs once, and every later consumer
+        # (the rejection anti-joins, the over-cap sinks, the caller's
+        # result.messages) reads the blocks instead of re-running them
+        feed = union_messages(
+            [
+                tag_feed(collector.union(), None),
+                tag_feed(contract_messages.union(), "data_contract"),
+                tag_feed(rule_messages.union(), "business_rules"),
+            ]
+        ) or tag_feed(empty_messages(spark), None)
+        feed = feed.localCheckpoint(eager=False)
+        sink_feed = write_message_feeds(feed, errors_dir)
+        all_messages = select_feed(feed)
 
         result = PipelineResult(
             submission_id=submission_id,
@@ -463,6 +501,7 @@ def run_pipeline(
             return result
 
         # -- stage 5: record rejection + final entity write ----------------
+        rejected = reject_keys(spark, sink_feed)
         for name in list(entities):
             df = entities[name]
             if name in original_snapshots:
@@ -478,7 +517,7 @@ def run_pipeline(
                     # row-level lineage: reject (origin, index) pairs, so
                     # renamed/copied/unioned entities still drop the records
                     # their contract messages refer to
-                    df = reject_records_by_origin(df, all_messages)
+                    df = reject_records_by_origin(df, rejected)
                     df = df.drop(RECORD_INDEX, ORIGIN_ENTITY)
                 else:
                     # no lineage column: scope rejection to THIS entity's
@@ -505,34 +544,11 @@ def run_pipeline(
         engine.cleanup()
 
     # -- stage 6: error report + statistics --------------------------------
-    if write_report:
-        result.report_path = write_error_report(
-            all_messages, str(work / "error_report")
+    result.report_path, result.error_aggregates_path, stats = (
+        write_feed_artifacts(
+            sink_feed, work, submission_id, write_report=write_report
         )
-    # error_aggregates audit artifact: per (entity, code) counts persisted
-    # as parquet next to the report, stamped with the submission id — the
-    # reference publishes the same frame for auditing
-    # (dve pipeline/pipeline.py:730-746, 801-948); written unconditionally
-    # (it is the machine-readable artifact; the report is the human one)
-    agg_path = work / "audit" / "error_aggregates.parquet"
-    error_aggregates(all_messages).withColumn(
-        "submission_id", F.lit(submission_id)
-    ).write.mode("overwrite").parquet(str(agg_path))
-    result.error_aggregates_path = str(agg_path)
-    stats_row = all_messages.select(
-        F.count(F.lit(1)).alias("n_messages"),
-        F.count_distinct(
-            F.when(
-                rejects_record(),
-                F.concat_ws(
-                    "/",
-                    F.col("original_entity"),
-                    F.col(RECORD_INDEX).cast("string"),
-                ),
-            )
-        ).alias("n_record_rejections"),
-        F.count(F.when(F.col("is_informational"), 1)).alias("n_warnings"),
-    ).first()
+    )
     # record_count = records RECEIVED (transform-stage rows), matching the
     # reference's statistics semantics; the counts were observed on the
     # stage-2 write actions themselves — no re-scan
@@ -540,10 +556,10 @@ def run_pipeline(
         int(transform_counts[name].get["rows"]) for name in datasets
     )
     result.statistics = {
-        "n_messages": stats_row["n_messages"],
+        "n_messages": stats["n_messages"],
         "record_count": received,
-        "n_record_rejections": stats_row["n_record_rejections"],
-        "n_warnings": stats_row["n_warnings"],
+        "n_record_rejections": stats["n_record_rejections"],
+        "n_warnings": stats["n_warnings"],
     }
     if audit:
         audit.append(

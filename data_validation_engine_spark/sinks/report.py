@@ -1,31 +1,122 @@
-"""Error report sink (dve reporting/excel_report.py:24-345).
+"""Error report and error aggregates (dve reporting/excel_report.py:24-345).
 
-Aggregates are computed distributed (groupBy — never a driver-side
-dataframe library); only the final small summary lands on the driver.
+Both read a message feed in either form the pipeline hands them (see
+sinks/errors.py): the Arrow table of a collected, error-sized feed, from
+which every sheet, the ``error_aggregates`` rows and the submission
+statistics are derived driver-side, or a feed over the cap as a
+DataFrame, aggregated distributed (groupBy, never a driver-side
+dataframe library) with only the final summaries landing on the driver.
 Excel output requires openpyxl (not in this container) — gated behind an
 import-try with a CSV fallback so the report is always produced.
 """
 
 from __future__ import annotations
 
+import shutil
+import uuid
 from pathlib import Path
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_validation_engine_spark.messages import RECORD_INDEX, rejects_record
+from data_validation_engine_spark.sinks.errors import MAX_DETAIL_ROWS, Feed
 
-def error_aggregates(messages: DataFrame) -> DataFrame:
-    """Per (entity, error code) counts — the machine-readable audit
-    artifact (engine-native column names; the report sheets use the
-    reference-shaped frames below)."""
-    return (
-        messages.groupBy("entity", "error_code", "failure_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_errors"),
-            F.count_distinct(F.col("__record_index__")).alias("n_records"),
+if TYPE_CHECKING:
+    import pandas as pd
+    import pyarrow as pa
+
+_AGGREGATE_KEYS = ("entity", "error_code", "failure_type")
+
+
+def error_aggregates(messages: Feed) -> Feed:
+    """Per (entity, error code, failure type) counts — the machine-readable
+    audit artifact (engine-native column names; the report sheets use the
+    reference-shaped frames below). A collected table gives a table with
+    the same rows and column types, sorted the same way."""
+    if isinstance(messages, DataFrame):
+        return (
+            messages.groupBy(*_AGGREGATE_KEYS)
+            .agg(
+                F.count(F.lit(1)).alias("n_errors"),
+                F.count_distinct(F.col(RECORD_INDEX)).alias("n_records"),
+            )
+            .orderBy("entity", "error_code")
         )
-        .orderBy("entity", "error_code")
+    keys = list(_AGGREGATE_KEYS)
+    counts = messages.group_by(keys).aggregate(
+        [([], "count_all"), (RECORD_INDEX, "count_distinct")]
     )
+    # null keys group together and sort first, as in Spark
+    return (
+        counts.select([*keys, "count_all", f"{RECORD_INDEX}_count_distinct"])
+        .rename_columns([*keys, "n_errors", "n_records"])
+        .sort_by([(k, "ascending") for k in keys], null_placement="at_start")
+    )
+
+
+def write_error_aggregates(
+    aggregates: Feed, submission_id: str, uri: str
+) -> None:
+    """Overwrite ``uri`` with the aggregates stamped with the submission
+    id: a table is written driver-side in the Spark parquet writer's
+    layout (``part-00000-<uuid>-c000.snappy.parquet`` plus ``_SUCCESS``)."""
+    if isinstance(aggregates, DataFrame):
+        aggregates.withColumn("submission_id", F.lit(submission_id)).write.mode(
+            "overwrite"
+        ).parquet(uri)
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = aggregates.append_column(
+        "submission_id",
+        pa.array([submission_id] * aggregates.num_rows, pa.string()),
+    )
+    out = Path(uri)
+    shutil.rmtree(out, ignore_errors=True)
+    out.mkdir(parents=True)
+    part = out / f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    pq.write_table(table, part, compression="snappy")
+    (out / "_SUCCESS").touch()
+
+
+def message_statistics(messages: Feed) -> dict[str, int]:
+    """The submission statistics of a feed: messages, distinct rejected
+    records (by ``concat_ws('/', original_entity, index)``, so a null part
+    is skipped and two nulls make the empty key) and warnings."""
+    if isinstance(messages, DataFrame):
+        row = messages.select(
+            F.count(F.lit(1)).alias("n_messages"),
+            F.count_distinct(
+                F.when(
+                    rejects_record(),
+                    F.concat_ws(
+                        "/",
+                        F.col("original_entity"),
+                        F.col(RECORD_INDEX).cast("string"),
+                    ),
+                )
+            ).alias("n_record_rejections"),
+            F.count(F.when(F.col("is_informational"), 1)).alias("n_warnings"),
+        ).first()
+        return row.asDict()
+    names = ("original_entity", RECORD_INDEX, "failure_type", "is_informational")
+    rejected = set()
+    warnings = 0
+    for entity, index, failure_type, informational in zip(
+        *(messages[n].to_pylist() for n in names)
+    ):
+        warnings += informational is True
+        if failure_type == "record" and informational is False:
+            parts = (entity, None if index is None else str(index))
+            rejected.add("/".join(p for p in parts if p is not None))
+    return {
+        "n_messages": messages.num_rows,
+        "n_record_rejections": len(rejected),
+        "n_warnings": warnings,
+    }
 
 
 def report_type_col() -> "F.Column":
@@ -39,29 +130,36 @@ def report_type_col() -> "F.Column":
     )
 
 
-def report_detail_unsorted(messages: DataFrame) -> DataFrame:
-    """The detail-sheet projection without the output sort — the writer's
-    single-collect fast path sorts driver-side instead (same keys)."""
-    return messages.select(
-        F.col("entity").alias("Table"),
-        report_type_col().alias("Type"),
-        F.col("error_code").alias("Error_Code"),
-        F.col("error_location").alias("Data_Item"),
-        F.col("error_message").alias("Error"),
-        F.col("__record_index__").alias("Record_Index"),
-        F.col("value").alias("Value"),
-        F.col("reporting_field").alias("ID"),
-        F.col("category").alias("Category"),
-    )
+_DETAIL_COLUMNS = (
+    ("Table", "entity"),
+    ("Type", None),  # report_type_col
+    ("Error_Code", "error_code"),
+    ("Data_Item", "error_location"),
+    ("Error", "error_message"),
+    ("Record_Index", RECORD_INDEX),
+    ("Value", "value"),
+    ("ID", "reporting_field"),
+    ("Category", "category"),
+)
+"""The detail sheet's columns and the message field each one shows."""
+
+_DETAIL_INPUTS = [
+    "is_informational",
+    "failure_type",
+    *(src for _, src in _DETAIL_COLUMNS if src is not None),
+]
 
 
 def report_detail(messages: DataFrame) -> DataFrame:
     """Reference-shaped error detail sheet (ERROR_SCHEMA, dve
     reporting/error_report.py:16-26): Table/Type/Error_Code/Data_Item/
     Error/Record_Index/Value/ID/Category, sorted by Type."""
-    return report_detail_unsorted(messages).orderBy(
-        "Type", "Table", "Record_Index"
-    )
+    return messages.select(
+        *[
+            (report_type_col() if src is None else F.col(src)).alias(name)
+            for name, src in _DETAIL_COLUMNS
+        ]
+    ).orderBy("Type", "Table", "Record_Index")
 
 
 def report_aggregates(messages: DataFrame) -> DataFrame:
@@ -106,14 +204,72 @@ def report_summary(messages: DataFrame) -> DataFrame:
     )
 
 
+def _collected_sheets(
+    messages: "pa.Table", max_detail_rows: int
+) -> tuple["pd.DataFrame", "pd.DataFrame", "pd.DataFrame"]:
+    """(summary, detail, aggregates) of a collected feed, driver-side: the
+    same frames the distributed queries give. The aggregates and summary
+    count every message; the detail keeps the first ``max_detail_rows``
+    in sort order."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = messages.select(_DETAIL_INPUTS).to_pandas()
+    report_type = np.select(
+        [pdf["is_informational"].eq(True), pdf["failure_type"].eq("record")],
+        ["Warning", "Record Rejection"],
+        "File Rejection",
+    )
+    detail = pd.DataFrame(
+        {
+            name: report_type if src is None else pdf[src]
+            for name, src in _DETAIL_COLUMNS
+        }
+    )
+    detail = detail.sort_values(
+        ["Type", "Table", "Record_Index"],
+        na_position="first",
+        kind="mergesort",
+    ).reset_index(drop=True)
+    # dropna=False: Spark groupBy keys keep nulls
+    aggregates = (
+        detail.groupby(
+            ["Type", "Table", "Data_Item", "Category", "Error_Code"],
+            dropna=False,
+            as_index=False,
+        )
+        .size()
+        .rename(columns={"size": "Count"})
+        .sort_values(
+            ["Type", "Count"],
+            ascending=[True, False],
+            kind="mergesort",
+        )
+        .reset_index(drop=True)
+    )
+    summary = (
+        detail["Type"]
+        .value_counts()
+        .reindex(REPORT_CATEGORIES)
+        .fillna(0)
+        .astype("int64")
+        .rename_axis("Type")
+        .reset_index(name="Count")
+        .sort_values("Type", kind="mergesort")
+        .reset_index(drop=True)
+    )
+    return summary, detail.head(max_detail_rows), aggregates
+
+
 def write_error_report(
-    messages: DataFrame,
+    messages: Feed,
     out_path: str,
     *,
-    max_detail_rows: int = 100_000,
+    max_detail_rows: int = MAX_DETAIL_ROWS,
     output_format: str = "auto",
 ) -> str:
-    """Write the error report; returns the path written.
+    """Write the error report of a feed DataFrame or collected table;
+    returns the path written.
 
     ``output_format``: ``"auto"`` uses openpyxl when available (xlsx:
     summary + detail + aggregates sheets) and falls back to CSVs in a
@@ -122,54 +278,23 @@ def write_error_report(
     """
     if output_format not in ("auto", "xlsx", "csv"):
         raise ValueError(f"unknown report output_format: {output_format!r}")
-    # One Spark job for the whole report in the common case: collect the
-    # UNSORTED detail projection once (cap + 1 rows to detect truncation)
-    # and derive all three sheets driver-side — the aggregates and summary
-    # are groupings of columns the detail sheet already carries, and the
-    # report is a driver-sized artifact by definition (the reference's
-    # report is a spreadsheet). Only when the cap is exceeded does the
-    # original three-query distributed path run: there the aggregates must
-    # cover ALL messages, not the truncated detail, and the sorted LIMIT
-    # keeps the reference's deterministic first-N-by-type truncation.
-    unsorted = report_detail_unsorted(messages).limit(max_detail_rows + 1)
-    detail = unsorted.toPandas()
-    if len(detail) <= max_detail_rows:
-        detail = detail.sort_values(
-            ["Type", "Table", "Record_Index"],
-            na_position="first",
-            kind="mergesort",
-        ).reset_index(drop=True)
-        # dropna=False: Spark groupBy keys keep nulls
-        aggregates = (
-            detail.groupby(
-                ["Type", "Table", "Data_Item", "Category", "Error_Code"],
-                dropna=False,
-                as_index=False,
-            )
-            .size()
-            .rename(columns={"size": "Count"})
-            .sort_values(
-                ["Type", "Count"],
-                ascending=[True, False],
-                kind="mergesort",
-            )
-            .reset_index(drop=True)
-        )
-        summary = (
-            detail["Type"]
-            .value_counts()
-            .reindex(REPORT_CATEGORIES)
-            .fillna(0)
-            .astype("int64")
-            .rename_axis("Type")
-            .reset_index(name="Count")
-            .sort_values("Type", kind="mergesort")
-            .reset_index(drop=True)
-        )
-    else:
+    if isinstance(messages, DataFrame):
+        # One Spark job for the whole report in the common case: collect
+        # cap + 1 rows of the fields the sheets show and derive every
+        # sheet driver-side — the report is a driver-sized artifact by
+        # definition (the reference's report is a spreadsheet). Over the
+        # cap the three distributed queries run: the aggregates must
+        # cover ALL messages, and the sorted LIMIT keeps the reference's
+        # deterministic first-N-by-type truncation.
+        head = messages.select(*_DETAIL_INPUTS).limit(max_detail_rows + 1).toArrow()
+        if head.num_rows <= max_detail_rows:
+            messages = head
+    if isinstance(messages, DataFrame):
         aggregates = report_aggregates(messages).toPandas()
         detail = report_detail(messages).limit(max_detail_rows).toPandas()
         summary = report_summary(messages).toPandas()
+    else:
+        summary, detail, aggregates = _collected_sheets(messages, max_detail_rows)
 
     use_xlsx = output_format == "xlsx"
     if output_format == "auto":

@@ -239,3 +239,35 @@ def test_reject_records_cross_stage(spark, contract):
     kept = reject_records(df, msgs)
     # 'x' fails min_length; 'bad' age fails INVALID_NUMBER
     assert sorted(r["name"] for r in kept.collect()) == ["ok"]
+
+
+def test_apply_contract_parses_each_predicate_once(spark, monkeypatch):
+    """With record dropping on, the message feed and the record filter
+    share one Column per check: each predicate's SQL is parsed once."""
+    from collections import Counter
+
+    mini = parse_contract(
+        {
+            "contract": {
+                "datasets": {
+                    "mini": {
+                        "fields": {"name": "str", "age": "int", "born": "date"},
+                        "mandatory_fields": ["name"],
+                    }
+                }
+            }
+        }
+    ).entity("mini")
+    df = add_record_index(
+        spark.createDataFrame([("ok", "1", "2001-02-03"), (None, "x", "bad")],
+                              "name string, age string, born string")
+    )
+    expected = Counter(c.predicate_sql for c in compile_checks(mini))
+    parsed = Counter()
+    expr = F.expr
+    monkeypatch.setattr(F, "expr", lambda sql: parsed.update([sql]) or expr(sql))
+    typed, messages = apply_contract(mini, df, drop_failed_records=True)
+    monkeypatch.undo()
+    assert expected and {sql: parsed[sql] for sql in expected} == expected
+    assert [r["name"] for r in typed.collect()] == ["ok"]
+    assert messages.count() == 3

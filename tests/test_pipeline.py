@@ -5,6 +5,7 @@ complex rule -> entities + messages + audit rows."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -711,3 +712,328 @@ def test_process_landing_binds_submission_metadata_at_runtime(
         for r in results[0].entities["customers"].select("dataset_tag").collect()
     }
     assert tags == {"cohort_42"}
+
+
+# -- the message feed: one bounded collect vs the distributed sinks --------
+
+
+def _tagged_feed(spark, rows):
+    from pyspark.sql import types as T
+
+    from data_validation_engine_spark.messages import MESSAGE_SCHEMA
+    from data_validation_engine_spark.sinks.errors import FEED
+
+    schema = T.StructType(
+        MESSAGE_SCHEMA.fields + [T.StructField(FEED, T.StringType(), True)]
+    )
+    fields = schema.names
+    full = [
+        {**{n: None for n in fields}, "is_informational": False, **row}
+        for row in rows
+    ]
+    return spark.createDataFrame([tuple(r[n] for n in fields) for r in full], schema)
+
+
+PARITY_ROWS = [
+    # one record failing two codes
+    {"entity": "orders", "original_entity": "orders", "__record_index__": 1,
+     "error_code": "MISSING", "error_message": "o_orderkey missing",
+     "error_location": "o_orderkey", "failure_type": "record",
+     "category": "missing", "__feed__": "data_contract"},
+    {"entity": "orders", "original_entity": "orders", "__record_index__": 1,
+     "error_code": "INVALID_DATE", "error_message": "bad date",
+     "error_location": "o_orderdate", "failure_type": "record",
+     "category": "type", "value": "31/02/1999", "__feed__": "data_contract"},
+    # informational: counted as a warning, never a rejection
+    {"entity": "orders", "original_entity": "orders", "__record_index__": 2,
+     "error_code": "DUPLICATE_VALUE", "error_message": "occurs 2 times",
+     "failure_type": "record", "is_informational": True,
+     "category": "uniqueness", "__feed__": "data_contract"},
+    # null original_entity: its rejection key is the index alone
+    {"entity": "orders", "original_entity": None, "__record_index__": 3,
+     "error_code": "BAD_STATUS", "failure_type": "record",
+     "__feed__": "business_rules"},
+    # null index (an aggregate entity's row), non-ASCII text and newlines
+    {"entity": "by_nation", "original_entity": "by_nation",
+     "error_code": "LOW_TOTAL",
+     "error_message": "total für Zürich\nbelow ¥500 — ✓",
+     "failure_type": "record", "reporting_field": "nation_name",
+     "record_json": '{"nation_name":"CÔTE D\'IVOIRE\\nlaguna","n":1}',
+     "__feed__": "business_rules"},
+    # null original_entity AND null index: the empty rejection key
+    {"entity": "by_nation", "error_code": "LOW_TOTAL",
+     "failure_type": "record", "__feed__": "business_rules"},
+    {"entity": "orders", "original_entity": "orders", "__record_index__": 4,
+     "error_code": "COUNT_MISMATCH", "failure_type": "integrity",
+     "__feed__": "business_rules"},
+    # written to no JSONL feed, but reported and counted
+    {"entity": "extra", "original_entity": "extra",
+     "error_code": "UNEXPECTED_ENTITY", "failure_type": "submission",
+     "category": "submission"},
+]
+
+
+def _feed_rows(errors_dir):
+    from collections import Counter
+
+    return {
+        d.name: Counter(
+            json.dumps(json.loads(line), sort_keys=True)
+            for p in d.glob("part-*")
+            for line in p.read_text(encoding="utf-8").splitlines()
+        )
+        for d in errors_dir.iterdir()
+    }
+
+
+def _artifact_rows(spark, agg_path):
+    agg = spark.read.parquet(agg_path)
+    return agg.schema.simpleString(), sorted(
+        agg.collect(), key=lambda r: [(v is not None, v) for v in r]
+    )
+
+
+@pytest.mark.parametrize("rows", [PARITY_ROWS, []], ids=["feed", "empty"])
+def test_collected_feed_sinks_match_distributed(spark, tmp_path, rows):
+    """Stage 4→6 read one tagged feed: collected to Arrow when it fits the
+    cap, else distributed. Forcing the distributed path (cap 0) must give
+    the same JSONL feeds, report files, error_aggregates rows and schema,
+    and statistics."""
+    from pyspark.sql import DataFrame
+
+    from data_validation_engine_spark import pipeline
+
+    feed = _tagged_feed(spark, rows)
+    got = {}
+    for label, cap in (("collected", 100_000), ("distributed", 0)):
+        work = tmp_path / label
+        messages = pipeline.write_message_feeds(feed, work / "errors", cap=cap)
+        assert isinstance(messages, DataFrame) == (label == "distributed")
+        report, agg_path, stats = pipeline.write_feed_artifacts(
+            messages, work, "sub-1", write_report=True
+        )
+        got[label] = (
+            _feed_rows(work / "errors"),
+            {p.name: p.read_bytes() for p in sorted(Path(report).iterdir())},
+            _artifact_rows(spark, agg_path),
+            stats,
+        )
+    assert got["collected"] == got["distributed"]
+    feeds, _, (schema, agg), stats = got["collected"]
+    assert schema == (
+        "struct<entity:string,error_code:string,failure_type:string,"
+        "n_errors:bigint,n_records:bigint,submission_id:string>"
+    )
+    if not rows:
+        assert feeds == {"data_contract": {}, "business_rules": {}}
+        assert stats == {"n_messages": 0, "n_record_rejections": 0, "n_warnings": 0}
+        assert agg == []
+        return
+    assert sum(feeds["data_contract"].values()) == 3
+    assert sum(feeds["business_rules"].values()) == 4
+    assert "total für Zürich\nbelow ¥500 — ✓" in {
+        json.loads(line).get("error_message") for line in feeds["business_rules"]
+    }
+    # keys orders/1, 3, by_nation and "" reject; informational and
+    # integrity rows do not
+    assert stats == {"n_messages": 8, "n_record_rejections": 4, "n_warnings": 1}
+    assert sum(r["n_errors"] for r in agg) == 8
+    assert {r["submission_id"] for r in agg} == {"sub-1"}
+
+
+def test_collected_jsonl_matches_spark_writer_layout(spark, tmp_path):
+    """The driver-side JSONL writer lays a collected feed out as Spark's
+    JSON writer does: one part file plus _SUCCESS, UTF-8 text, and lines
+    that parse to the same rows."""
+    from data_validation_engine_spark.sinks.errors import (
+        select_feed,
+        write_messages_jsonl,
+    )
+
+    feed = select_feed(_tagged_feed(spark, PARITY_ROWS))
+    write_messages_jsonl(feed, str(tmp_path / "spark"))
+    write_messages_jsonl(feed.toArrow(), str(tmp_path / "driver"))
+    names = sorted(p.name for p in (tmp_path / "driver").iterdir())
+    assert len(names) == 2 and names[0] == "_SUCCESS"
+    assert names[1].startswith("part-00000-") and names[1].endswith("-c000.json")
+    text = (tmp_path / "driver" / names[1]).read_text(encoding="utf-8")
+    assert "für Zürich\\nbelow" in text and "\\u" not in text
+    assert spark.read.json(str(tmp_path / "spark")).schema == spark.read.json(
+        str(tmp_path / "driver")
+    ).schema
+    assert _feed_rows(tmp_path)["driver"] == _feed_rows(tmp_path)["spark"]
+
+
+def _run_collected_and_distributed(spark, monkeypatch, dischema, inputs, root, refdata):
+    """``run_pipeline`` twice on the same submission: as shipped, then with
+    the feed collect's cap forced to 0 (the over-cap, distributed path)."""
+    from functools import partial
+
+    from data_validation_engine_spark import pipeline
+
+    runs = {}
+    shipped = pipeline.write_message_feeds
+    for label in ("collected", "distributed"):
+        if label == "distributed":
+            monkeypatch.setattr(
+                pipeline, "write_message_feeds", partial(shipped, cap=0)
+            )
+        work = root / label
+        runs[label] = work, pipeline.run_pipeline(
+            spark,
+            dischema,
+            inputs,
+            work,
+            refdata_base_path=refdata,
+            audit_path=str(work / "audit_log"),
+            submission_id="sub-1",
+        )
+    return runs
+
+
+def test_run_pipeline_collected_path_matches_distributed(
+    spark, workspace, tmp_path, monkeypatch
+):
+    """End to end, the collected path writes what the distributed path
+    writes: feeds, report, error_aggregates, statistics, the
+    submission_statistics audit row and the final entities."""
+    from data_validation_engine_spark.sinks.audit import AuditLog
+
+    runs = _run_collected_and_distributed(
+        spark,
+        monkeypatch,
+        workspace / "dischema.json",
+        {"customers": str(workspace / "customers.csv")},
+        tmp_path,
+        str(workspace),
+    )
+    got = {}
+    for label, (work, res) in runs.items():
+        assert res.success
+        audit = AuditLog(spark, str(work / "audit_log")).read("submission_statistics")
+        got[label] = (
+            _feed_rows(work / "errors"),
+            {p.name: p.read_bytes() for p in sorted(Path(res.report_path).iterdir())},
+            _artifact_rows(spark, res.error_aggregates_path),
+            res.statistics,
+            [r.asDict() for r in audit.drop("time_updated", "date_updated").collect()],
+            sorted(r[0] for r in res.entities["customers"].select("c_custkey").collect()),
+        )
+    assert got["collected"] == got["distributed"]
+    feeds, _, _, stats, audit_rows, keys = got["collected"]
+    assert sum(feeds["data_contract"].values()) >= 2
+    assert audit_rows[0]["number_record_rejections"] == stats["n_record_rejections"] > 0
+    assert 7 not in keys and 13 not in keys
+
+
+def test_rules_failure_writes_both_feeds_on_either_path(
+    spark, workspace, tmp_path, monkeypatch
+):
+    """A rule that cannot be planned fails the submission with a
+    PROCESSING_ERROR message, which no JSONL feed receives; both feeds are
+    still written, the same on the collected and the distributed path."""
+    broken = json.loads(json.dumps(DISCHEMA))
+    broken["transformations"]["filters"].append(
+        {
+            "entity": "customers",
+            "name": "unplannable",
+            "expression": "no_such_column > 0",
+            "error_code": "NEVER",
+        }
+    )
+    d = workspace / "broken_rules"
+    d.mkdir(exist_ok=True)
+    (d / "test_ruleset.json").write_text(json.dumps(RULESET))
+    (d / "dischema.json").write_text(json.dumps(broken))
+    runs = _run_collected_and_distributed(
+        spark,
+        monkeypatch,
+        d / "dischema.json",
+        {"customers": str(workspace / "customers.csv")},
+        tmp_path,
+        str(workspace),
+    )
+    feeds = {}
+    for label, (work, res) in runs.items():
+        assert not res.success
+        codes = {r["error_code"] for r in res.messages.collect()}
+        assert "PROCESSING_ERROR" in codes
+        feeds[label] = _feed_rows(work / "errors")
+        assert set(feeds[label]) == {"data_contract", "business_rules"}
+    assert feeds["collected"] == feeds["distributed"]
+    lines = [line for rows in feeds["collected"].values() for line in rows]
+    assert any("MISSING_MANDATORY_VALUE" in line for line in lines)
+    assert not any("PROCESSING_ERROR" in line for line in lines)
+
+
+ORDERS_DISCHEMA = {
+    "contract": {
+        "types": {"Flag": {"callable": "constr", "constraints": {"max_length": 1}}},
+        "datasets": {
+            "orders": {
+                "fields": {
+                    "o_orderkey": "int",
+                    "o_orderstatus": "Flag",
+                    "o_totalprice": "float",
+                    "o_orderdate": "date",
+                },
+                "mandatory_fields": ["o_orderkey"],
+                "reader_config": {".csv": {"reader": "SparkCSVReader"}},
+            }
+        },
+    },
+    "transformations": {
+        "rules": [
+            {
+                "operation": "add",
+                "entity": "orders",
+                "column_name": "order_year",
+                "expression": "year(o_orderdate)",
+            }
+        ],
+        "filters": [
+            {
+                "entity": "orders",
+                "expression": "o_orderstatus IN ('O', 'F', 'P')",
+                "error_code": "BAD_STATUS",
+                "failure_message": "unknown order status",
+                "reporting_field": "o_orderstatus",
+            }
+        ],
+    },
+}
+
+
+def test_submission_job_budget(spark, tmp_path):
+    """One small orders submission runs 8 Spark jobs: the header peek,
+    the transform write, two record-index counts, the contract write, the
+    one bounded collect of the message feed, and the entity write with
+    the broadcast of its rejection keys. Reading the feed once per sink
+    instead (a job per JSONL feed, the report, the error_aggregates write
+    and the statistics, and rejection keys shuffled out of the feed) made
+    the same submission 19 jobs."""
+    (tmp_path / "dischema.json").write_text(json.dumps(ORDERS_DISCHEMA))
+    (tmp_path / "orders.csv").write_text(
+        "o_orderkey,o_orderstatus,o_totalprice,o_orderdate\n"
+        "1,O,10.5,1995-01-02\n"
+        "2,X,11.0,1995-01-03\n"
+        "3,F,1.5.0,1995-01-04\n"
+        ",P,12.0,02/03/1998\n"
+    )
+    sc = spark.sparkContext
+    group = "submission-job-budget"
+    sc.setJobGroup(group, "one orders submission")
+    try:
+        res = run_pipeline(
+            spark,
+            tmp_path / "dischema.json",
+            {"orders": str(tmp_path / "orders.csv")},
+            tmp_path / "work",
+            audit_path=str(tmp_path / "audit"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.success and res.statistics["n_record_rejections"] == 3
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for one small submission"

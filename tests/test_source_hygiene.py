@@ -78,6 +78,9 @@ CREATE_DATAFRAME_ALLOWED = {
     # (failure paths only) and the dve_submission_info refdata frame
     # (evaluated only when a rule reads it)
     "data_validation_engine_spark/pipeline.py": 4,
+    # reject_keys: a collected feed's rejection keys (an Arrow table, so a
+    # local relation, not a Python-built frame)
+    "data_validation_engine_spark/contract/apply.py": 1,
     # audit rows on the Delta / non-local path (local parquet appends are
     # written driver-side)
     "data_validation_engine_spark/sinks/audit.py": 1,
@@ -122,6 +125,25 @@ def test_pipeline_import_loads_no_llmops_module():
         "import sys, data_validation_engine_spark.pipeline;"
         "print(sorted(m for m in sys.modules"
         " if m.startswith('data_validation_engine_spark.llmops')))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]"
+
+
+def test_pipeline_import_loads_no_pandas_or_pyarrow():
+    """The sinks import pandas and pyarrow where they read a collected
+    feed, not at module level: loading them on import would add their
+    cost to every submission's setup."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys, data_validation_engine_spark.pipeline;"
+        "print(sorted(m for m in ('pandas', 'pyarrow', 'pyarrow.parquet')"
+        " if m in sys.modules))"
     )
     out = subprocess.run(
         [sys.executable, "-c", probe],
