@@ -3938,9 +3938,10 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_report_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference-shaped report aggregates sheet computed distributed
-    (sinks/report.py:59-75) over the contract validation feed — the sheet
-    the Excel/CSV report writes, proven against a SQL GROUP BY, unioned
+    """Reference-shaped report aggregates sheet over the contract
+    validation feed — the sheet the Excel/CSV report writes, derived from
+    the feed's grouping-sets summary (sinks/report.py summarise_feed,
+    aggregates_sheet), proven against a SQL GROUP BY, unioned
     with the entity PRESENCE checks (pipeline.py:230-260): a dischema declaring
     {alpha, beta} fed {alpha, gamma} fails the submission with one
     critical message per missing/undeclared entity, mapped into the same
@@ -3955,13 +3956,16 @@ def q_report_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_contract,
     )
     from data_validation_engine_spark.pipeline import run_pipeline
-    from data_validation_engine_spark.sinks.report import report_aggregates
+    from data_validation_engine_spark.sinks.report import (
+        aggregates_sheet,
+        summarise_feed,
+    )
 
     contract = parse_contract(_CONTRACT_DISCHEMA)
     _, messages = apply_contract(
         contract.entity("orders_sub"), _stringified_orders(spark, sf_dir)
     )
-    sheet = report_aggregates(messages)
+    sheet = spark.createDataFrame(aggregates_sheet(summarise_feed(messages)))
 
     root = Path(tempfile.mkdtemp(prefix="dve_presence_"))
     (root / "dischema.json").write_text(

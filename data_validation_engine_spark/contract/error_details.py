@@ -17,8 +17,6 @@ overridden messages are still generated distributed, never per-row Python.
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
 from typing import Any, Optional
 
 from pydantic import BaseModel, ConfigDict
@@ -56,10 +54,6 @@ def parse_error_details(doc: dict[str, Any]) -> ErrorDetails:
         field: {cat: ErrorDetail(**detail) for cat, detail in cats.items()}
         for field, cats in doc.items()
     }
-
-
-def load_error_details(path: str | Path) -> ErrorDetails:
-    return parse_error_details(json.loads(Path(path).read_text()))
 
 
 def apply_error_details(

@@ -175,36 +175,6 @@ def shingle_occurrence_rows(
     return long.unionByName(short)
 
 
-def with_shingles(
-    df: DataFrame,
-    text_col: str,
-    *,
-    shingle_size: int = DEFAULT_SHINGLE_SIZE,
-    out_col: str = "shingles",
-) -> DataFrame:
-    return df.withColumn(out_col, shingles_col(F.col(text_col), shingle_size))
-
-
-def minhash_signature(
-    shingles: Column, num_hashes: int = DEFAULT_NUM_HASHES
-) -> list[Column]:
-    """MinHash signature: per seed, the minimum md5 over the shingle set.
-
-    ``md5(seed || '|' || shingle)`` is uniform per seed, so the lexicographic
-    minimum hex string is an order-statistic min-hash — identical in any
-    engine with md5, which is what makes the LSH pipeline oracle-checkable.
-    Computed entirely per-row (``transform`` + ``array_min``): no shuffle.
-    """
-    return [
-        F.array_min(
-            F.transform(
-                shingles, lambda s, i=i: F.md5(F.concat(F.lit(f"mh{i}|"), s))
-            )
-        ).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def band_keys(
     sig_cols: list[str], bands: int
 ) -> list[Column]:

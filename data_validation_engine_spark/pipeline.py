@@ -25,10 +25,13 @@ thread-safe, so callers can fan out with their own executor):
    cross-stage record rejection by anti-join on the record index; write
    final parquet.
 5. **error report** (pipeline.py:730-746, 801-948) — the report, the
-   ``error_aggregates`` artifact and the submission statistics audit row.
-   At or under the cap every one of them is derived driver-side from the
-   collected table, as are the JSONL feeds and the rejection keys; over
-   it each is written distributed from the checkpointed feed.
+   ``error_aggregates`` artifact and the submission statistics audit row,
+   all read from one summary of the feed whose size is bounded by its
+   distinct entities, codes and locations: pyarrow computes it from the
+   collected table, and over the cap one grouping-sets query does. Only
+   the report's detail rows, the JSONL feeds and the rejection keys are
+   data-sized; over the cap each of them is read distributed from the
+   checkpointed feed.
 
 The parquet checkpoints between stages are deliberate barriers (error
 isolation + restartability); *within* a stage everything is one fused lazy
@@ -75,6 +78,7 @@ from data_validation_engine_spark.sinks.errors import (
 from data_validation_engine_spark.sinks.report import (
     error_aggregates,
     message_statistics,
+    summarise_feed,
     write_error_aggregates,
     write_error_report,
 )
@@ -215,18 +219,21 @@ def write_feed_artifacts(
 ) -> tuple[str | None, str, dict[str, int]]:
     """Stage 6: the error report, the ``error_aggregates`` audit artifact
     and the feed's statistics; returns (report path, aggregates path,
-    statistics)."""
+    statistics), all from one summary of the feed."""
+    summary = summarise_feed(messages)
     report_path = None
     if write_report:
-        report_path = write_error_report(messages, str(work / "error_report"))
+        report_path = write_error_report(
+            messages, str(work / "error_report"), summary=summary
+        )
     # per (entity, code) counts persisted as parquet next to the report,
     # stamped with the submission id — the reference publishes the same
     # frame for auditing (dve pipeline/pipeline.py:730-746, 801-948);
     # written unconditionally (it is the machine-readable artifact; the
     # report is the human one)
     agg_path = str(work / "audit" / "error_aggregates.parquet")
-    write_error_aggregates(error_aggregates(messages), submission_id, agg_path)
-    return report_path, agg_path, message_statistics(messages)
+    write_error_aggregates(error_aggregates(summary), submission_id, agg_path)
+    return report_path, agg_path, message_statistics(summary)
 
 
 def run_pipeline(

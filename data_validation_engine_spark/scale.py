@@ -96,15 +96,6 @@ def salted_left_join(
     return joined.drop("__salt")
 
 
-def repartition_for_parallelism(
-    df: DataFrame, spark: SparkSession | None = None
-) -> DataFrame:
-    """Spread a small-file input across the cluster's cores (single-file
-    parquet = one input split = one busy core for CPU-heavy operators)."""
-    spark = spark or df.sparkSession
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def write_range_partitioned(
     df: DataFrame,
     path: str,

@@ -8,7 +8,9 @@ processing-error rows no feed receives). The feed is error-sized, so the
 pipeline collects it once with a bounded ``limit(cap + 1).toArrow()``
 (:func:`collect_feed`); at or under the cap every sink reads that Arrow
 table driver-side and no sink starts a Spark job. Over the cap the feed
-stays a DataFrame and each sink keeps its distributed writer.
+stays a DataFrame: the data-sized sinks (the JSONL feeds, the rejection
+keys, the report's detail rows) read it distributed, and the counts read
+one bounded grouping-sets summary of it (sinks/report.py).
 
 The driver-side JSONL writer lays a feed out as Spark's JSON writer
 does: ``part-00000-<uuid>-c000.json`` plus ``_SUCCESS``, each line's

@@ -1,12 +1,16 @@
 """Error report and error aggregates (dve reporting/excel_report.py:24-345).
 
-Both read a message feed in either form the pipeline hands them (see
-sinks/errors.py): the Arrow table of a collected, error-sized feed, from
-which every sheet, the ``error_aggregates`` rows and the submission
-statistics are derived driver-side, or a feed over the cap as a
-DataFrame, aggregated distributed (groupBy, never a driver-side
-dataframe library) with only the final summaries landing on the driver.
-Excel output requires openpyxl (not in this container) — gated behind an
+Every error-sized artifact of a submission (the report's summary and
+aggregates sheets, the ``error_aggregates`` rows and the submission
+statistics) is derived driver-side from one :class:`FeedSummary`, whose
+size is bounded by entities x codes x locations, not by messages.
+:func:`summarise_feed` is the only aggregation that depends on the form
+the pipeline hands the feed in (see sinks/errors.py): a collected Arrow
+table is grouped with pyarrow and starts no Spark job; a feed over the
+cap, still a DataFrame, is one grouping-sets query whose small result is
+collected as Arrow. The detail sheet reads rows, not counts: the
+collected table, or over the cap its first ``max_detail_rows`` in sort
+order. Excel output requires the optional openpyxl — gated behind an
 import-try with a CSV fallback so the report is always produced.
 """
 
@@ -15,7 +19,7 @@ from __future__ import annotations
 import shutil
 import uuid
 from pathlib import Path
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,49 +28,119 @@ from data_validation_engine_spark.messages import RECORD_INDEX, rejects_record
 from data_validation_engine_spark.sinks.errors import MAX_DETAIL_ROWS, Feed
 
 if TYPE_CHECKING:
-    import pandas as pd
     import pyarrow as pa
 
-_AGGREGATE_KEYS = ("entity", "error_code", "failure_type")
+_FINE_KEYS = (
+    "entity",
+    "error_code",
+    "failure_type",
+    "is_informational",
+    "error_location",
+    "category",
+)
+_AGGREGATE_KEYS = _FINE_KEYS[:3]
+
+# grouping_id() sets one bit per key a grouping set leaves out, the first
+# key highest: the fine set leaves none, the aggregate set the last three
+_FINE_ID, _AGGREGATE_ID, _GLOBAL_ID = 0, 0b000111, 0b111111
 
 
-def error_aggregates(messages: Feed) -> Feed:
+class FeedSummary(NamedTuple):
+    """A message feed's counts, as small as its distinct keys."""
+
+    fine: "pa.Table"
+    """``_FINE_KEYS`` plus ``n_messages``, the messages per fine key."""
+    codes: "pa.Table"
+    """``_AGGREGATE_KEYS`` plus ``n_messages`` and ``n_records`` (distinct
+    record indexes)."""
+    n_record_rejections: int
+    """Distinct rejected-record keys, ``concat_ws('/', original_entity,
+    index)`` over :func:`rejects_record` rows: a null part is skipped and
+    two nulls make the empty key."""
+
+
+def _group(table: "pa.Table", keys, **aggregates: tuple) -> "pa.Table":
+    """``table`` grouped by ``keys``: the keys, then one column per
+    keyword, ``name=(column or [], pyarrow aggregate function)``."""
+    keys = list(keys)
+    out = table.group_by(keys).aggregate(list(aggregates.values()))
+    made = [f"{col}_{fn}" if col else fn for col, fn in aggregates.values()]
+    return out.select([*keys, *made]).rename_columns([*keys, *aggregates])
+
+
+def summarise_feed(messages: Feed) -> FeedSummary:
+    """The summary of a collected table (pyarrow, no Spark job) or of a
+    feed DataFrame (one ``GROUPING SETS`` query collected as Arrow)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(messages, DataFrame):
+        rejected_key = F.when(
+            rejects_record(),
+            F.concat_ws(
+                "/", F.col("original_entity"), F.col(RECORD_INDEX).cast("string")
+            ),
+        )
+        rows = (
+            messages.groupingSets(
+                [list(_FINE_KEYS), list(_AGGREGATE_KEYS), []], *_FINE_KEYS
+            )
+            .agg(
+                F.grouping_id().alias("gid"),
+                F.count(F.lit(1)).alias("n_messages"),
+                F.count_distinct(F.col(RECORD_INDEX)).alias("n_records"),
+                F.count_distinct(rejected_key).alias("n_rejections"),
+            )
+            .toArrow()
+        )
+
+        def level(gid: int, *names: str) -> "pa.Table":
+            # rebuilt, so every field is nullable as in a pyarrow group_by
+            part = rows.filter(pc.equal(rows["gid"], gid))
+            return pa.table({n: part[n] for n in names})
+
+        return FeedSummary(
+            level(_FINE_ID, *_FINE_KEYS, "n_messages"),
+            level(_AGGREGATE_ID, *_AGGREGATE_KEYS, "n_messages", "n_records"),
+            sum(level(_GLOBAL_ID, "n_rejections")["n_rejections"].to_pylist()),
+        )
+    rejected = messages.filter(
+        pc.and_(
+            pc.equal(messages["failure_type"], "record"),
+            pc.invert(messages["is_informational"]),
+        )
+    )
+    entity = rejected["original_entity"]
+    index = pc.cast(rejected[RECORD_INDEX], pa.string())
+    # concat_ws: a null part is skipped, two nulls give ""
+    key = pc.coalesce(pc.binary_join_element_wise(entity, index, "/"), entity, index, "")
+    return FeedSummary(
+        _group(messages, _FINE_KEYS, n_messages=([], "count_all")),
+        _group(
+            messages,
+            _AGGREGATE_KEYS,
+            n_messages=([], "count_all"),
+            n_records=(RECORD_INDEX, "count_distinct"),
+        ),
+        pc.count_distinct(key).as_py(),
+    )
+
+
+def error_aggregates(summary: FeedSummary) -> "pa.Table":
     """Per (entity, error code, failure type) counts — the machine-readable
     audit artifact (engine-native column names; the report sheets use the
-    reference-shaped frames below). A collected table gives a table with
-    the same rows and column types, sorted the same way."""
-    if isinstance(messages, DataFrame):
-        return (
-            messages.groupBy(*_AGGREGATE_KEYS)
-            .agg(
-                F.count(F.lit(1)).alias("n_errors"),
-                F.count_distinct(F.col(RECORD_INDEX)).alias("n_records"),
-            )
-            .orderBy("entity", "error_code")
-        )
-    keys = list(_AGGREGATE_KEYS)
-    counts = messages.group_by(keys).aggregate(
-        [([], "count_all"), (RECORD_INDEX, "count_distinct")]
-    )
-    # null keys group together and sort first, as in Spark
-    return (
-        counts.select([*keys, "count_all", f"{RECORD_INDEX}_count_distinct"])
-        .rename_columns([*keys, "n_errors", "n_records"])
-        .sort_by([(k, "ascending") for k in keys], null_placement="at_start")
-    )
+    reference-shaped ones below), null keys first as Spark sorts them."""
+    return summary.codes.rename_columns(
+        [*_AGGREGATE_KEYS, "n_errors", "n_records"]
+    ).sort_by([(k, "ascending") for k in _AGGREGATE_KEYS], null_placement="at_start")
 
 
 def write_error_aggregates(
-    aggregates: Feed, submission_id: str, uri: str
+    aggregates: "pa.Table", submission_id: str, uri: str
 ) -> None:
-    """Overwrite ``uri`` with the aggregates stamped with the submission
-    id: a table is written driver-side in the Spark parquet writer's
-    layout (``part-00000-<uuid>-c000.snappy.parquet`` plus ``_SUCCESS``)."""
-    if isinstance(aggregates, DataFrame):
-        aggregates.withColumn("submission_id", F.lit(submission_id)).write.mode(
-            "overwrite"
-        ).parquet(uri)
-        return
+    """Overwrite the local path ``uri`` with the aggregates stamped with
+    the submission id, in the Spark parquet writer's layout
+    (``part-00000-<uuid>-c000.snappy.parquet`` plus ``_SUCCESS``)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -82,40 +156,15 @@ def write_error_aggregates(
     (out / "_SUCCESS").touch()
 
 
-def message_statistics(messages: Feed) -> dict[str, int]:
-    """The submission statistics of a feed: messages, distinct rejected
-    records (by ``concat_ws('/', original_entity, index)``, so a null part
-    is skipped and two nulls make the empty key) and warnings."""
-    if isinstance(messages, DataFrame):
-        row = messages.select(
-            F.count(F.lit(1)).alias("n_messages"),
-            F.count_distinct(
-                F.when(
-                    rejects_record(),
-                    F.concat_ws(
-                        "/",
-                        F.col("original_entity"),
-                        F.col(RECORD_INDEX).cast("string"),
-                    ),
-                )
-            ).alias("n_record_rejections"),
-            F.count(F.when(F.col("is_informational"), 1)).alias("n_warnings"),
-        ).first()
-        return row.asDict()
-    names = ("original_entity", RECORD_INDEX, "failure_type", "is_informational")
-    rejected = set()
-    warnings = 0
-    for entity, index, failure_type, informational in zip(
-        *(messages[n].to_pylist() for n in names)
-    ):
-        warnings += informational is True
-        if failure_type == "record" and informational is False:
-            parts = (entity, None if index is None else str(index))
-            rejected.add("/".join(p for p in parts if p is not None))
+def message_statistics(summary: FeedSummary) -> dict[str, int]:
+    """The submission statistics: messages, distinct rejected records and
+    warnings."""
+    counts = summary.fine["n_messages"].to_pylist()
+    informational = summary.fine["is_informational"].to_pylist()
     return {
-        "n_messages": messages.num_rows,
-        "n_record_rejections": len(rejected),
-        "n_warnings": warnings,
+        "n_messages": sum(counts),
+        "n_record_rejections": summary.n_record_rejections,
+        "n_warnings": sum(n for n, i in zip(counts, informational) if i),
     }
 
 
@@ -130,9 +179,67 @@ def report_type_col() -> "F.Column":
     )
 
 
+def _report_type(rows: "pa.Table") -> "pa.Array":
+    """:func:`report_type_col` over Arrow rows."""
+    import pyarrow.compute as pc
+
+    record = pc.fill_null(pc.equal(rows["failure_type"], "record"), False)
+    return pc.if_else(
+        pc.fill_null(rows["is_informational"], False),
+        "Warning",
+        pc.if_else(record, "Record Rejection", "File Rejection"),
+    )
+
+
+REPORT_CATEGORIES = ("File Rejection", "Record Rejection", "Warning")
+
+
+def _summary_sheet(summary: FeedSummary) -> "pa.Table":
+    """Summary sheet: one row per report category in the reference's
+    heading order, zero-filled so all three rows are always present
+    (dve SummaryItems row_headings, reporting/excel_report.py)."""
+    import pyarrow as pa
+
+    counts = dict.fromkeys(REPORT_CATEGORIES, 0)
+    types = _report_type(summary.fine).to_pylist()
+    for category, n in zip(types, summary.fine["n_messages"].to_pylist()):
+        counts[category] += n
+    return pa.table(
+        {"Type": list(counts), "Count": pa.array(list(counts.values()), pa.int64())}
+    )
+
+
+_SHEET_KEYS = ("Type", "Table", "Data_Item", "Category", "Error_Code")
+
+
+def aggregates_sheet(summary: FeedSummary) -> "pa.Table":
+    """Reference-shaped aggregates sheet (AGGREGATE_SCHEMA +
+    calculate_aggregates, dve reporting/error_report.py:28-36,115-140):
+    counts per Type/Table/Data_Item/Category/Error_Code, Type ascending
+    then Count descending, ties in key order with null keys last."""
+    import pyarrow as pa
+
+    fine = summary.fine
+    typed = pa.table(
+        {
+            "Type": _report_type(fine),
+            "Table": fine["entity"],
+            "Data_Item": fine["error_location"],
+            "Category": fine["category"],
+            "Error_Code": fine["error_code"],
+            "Count": fine["n_messages"],
+        }
+    )
+    return _group(typed, _SHEET_KEYS, Count=("Count", "sum")).sort_by(
+        [("Type", "ascending"), ("Count", "descending")]
+        + [(k, "ascending") for k in _SHEET_KEYS[1:]],
+        null_placement="at_end",
+    )
+
+
 _DETAIL_COLUMNS = (
     ("Table", "entity"),
-    ("Type", None),  # report_type_col
+    ("Type", None),  # _report_type
     ("Error_Code", "error_code"),
     ("Data_Item", "error_location"),
     ("Error", "error_message"),
@@ -150,126 +257,35 @@ _DETAIL_INPUTS = [
 ]
 
 
-def report_detail(messages: DataFrame) -> DataFrame:
+def _detail_sheet(rows: "pa.Table", max_detail_rows: int) -> "pa.Table":
     """Reference-shaped error detail sheet (ERROR_SCHEMA, dve
-    reporting/error_report.py:16-26): Table/Type/Error_Code/Data_Item/
-    Error/Record_Index/Value/ID/Category, sorted by Type."""
-    return messages.select(
-        *[
-            (report_type_col() if src is None else F.col(src)).alias(name)
-            for name, src in _DETAIL_COLUMNS
-        ]
-    ).orderBy("Type", "Table", "Record_Index")
+    reporting/error_report.py:16-26): the first ``max_detail_rows`` rows
+    by Type, Table and Record_Index (a stable sort, nulls first)."""
+    import pyarrow as pa
 
-
-def report_aggregates(messages: DataFrame) -> DataFrame:
-    """Reference-shaped aggregates sheet (AGGREGATE_SCHEMA +
-    calculate_aggregates, dve reporting/error_report.py:28-36,115-140):
-    counts per Type/Table/Data_Item/Category/Error_Code, Type ascending
-    then Count descending."""
-    return (
-        messages.select(
-            report_type_col().alias("Type"),
-            F.col("entity").alias("Table"),
-            F.col("error_location").alias("Data_Item"),
-            F.col("category").alias("Category"),
-            F.col("error_code").alias("Error_Code"),
-        )
-        .groupBy("Type", "Table", "Data_Item", "Category", "Error_Code")
-        .agg(F.count(F.lit(1)).alias("Count"))
-        .orderBy(F.col("Type").asc(), F.col("Count").desc())
-    )
-
-
-REPORT_CATEGORIES = ("File Rejection", "Record Rejection", "Warning")
-
-
-def report_summary(messages: DataFrame) -> DataFrame:
-    """Summary sheet: one row per report category in the reference's
-    heading order, zero-filled so all three rows are always present
-    (dve SummaryItems row_headings, reporting/excel_report.py)."""
-    spark = messages.sparkSession
-    headings = spark.createDataFrame(
-        [(c,) for c in REPORT_CATEGORIES], "Type string"
-    )
-    counts = (
-        messages.select(report_type_col().alias("Type"))
-        .groupBy("Type")
-        .agg(F.count(F.lit(1)).alias("Count"))
-    )
-    return (
-        headings.join(counts, on="Type", how="left")
-        .select("Type", F.coalesce("Count", F.lit(0)).alias("Count"))
-        .orderBy("Type")
-    )
-
-
-def _collected_sheets(
-    messages: "pa.Table", max_detail_rows: int
-) -> tuple["pd.DataFrame", "pd.DataFrame", "pd.DataFrame"]:
-    """(summary, detail, aggregates) of a collected feed, driver-side: the
-    same frames the distributed queries give. The aggregates and summary
-    count every message; the detail keeps the first ``max_detail_rows``
-    in sort order."""
-    import numpy as np
-    import pandas as pd
-
-    pdf = messages.select(_DETAIL_INPUTS).to_pandas()
-    report_type = np.select(
-        [pdf["is_informational"].eq(True), pdf["failure_type"].eq("record")],
-        ["Warning", "Record Rejection"],
-        "File Rejection",
-    )
-    detail = pd.DataFrame(
+    sheet = pa.table(
         {
-            name: report_type if src is None else pdf[src]
+            name: _report_type(rows) if src is None else rows[src]
             for name, src in _DETAIL_COLUMNS
         }
     )
-    detail = detail.sort_values(
-        ["Type", "Table", "Record_Index"],
-        na_position="first",
-        kind="mergesort",
-    ).reset_index(drop=True)
-    # dropna=False: Spark groupBy keys keep nulls
-    aggregates = (
-        detail.groupby(
-            ["Type", "Table", "Data_Item", "Category", "Error_Code"],
-            dropna=False,
-            as_index=False,
-        )
-        .size()
-        .rename(columns={"size": "Count"})
-        .sort_values(
-            ["Type", "Count"],
-            ascending=[True, False],
-            kind="mergesort",
-        )
-        .reset_index(drop=True)
-    )
-    summary = (
-        detail["Type"]
-        .value_counts()
-        .reindex(REPORT_CATEGORIES)
-        .fillna(0)
-        .astype("int64")
-        .rename_axis("Type")
-        .reset_index(name="Count")
-        .sort_values("Type", kind="mergesort")
-        .reset_index(drop=True)
-    )
-    return summary, detail.head(max_detail_rows), aggregates
+    return sheet.sort_by(
+        [("Type", "ascending"), ("Table", "ascending"), ("Record_Index", "ascending")],
+        null_placement="at_start",
+    ).slice(0, max_detail_rows)
 
 
 def write_error_report(
     messages: Feed,
     out_path: str,
     *,
+    summary: FeedSummary | None = None,
     max_detail_rows: int = MAX_DETAIL_ROWS,
     output_format: str = "auto",
 ) -> str:
     """Write the error report of a feed DataFrame or collected table;
-    returns the path written.
+    returns the path written. ``summary`` is the feed's
+    :func:`summarise_feed`, computed here when not given.
 
     ``output_format``: ``"auto"`` uses openpyxl when available (xlsx:
     summary + detail + aggregates sheets) and falls back to CSVs in a
@@ -278,48 +294,44 @@ def write_error_report(
     """
     if output_format not in ("auto", "xlsx", "csv"):
         raise ValueError(f"unknown report output_format: {output_format!r}")
+    if summary is None:
+        summary = summarise_feed(messages)
     if isinstance(messages, DataFrame):
-        # One Spark job for the whole report in the common case: collect
-        # cap + 1 rows of the fields the sheets show and derive every
-        # sheet driver-side — the report is a driver-sized artifact by
-        # definition (the reference's report is a spreadsheet). Over the
-        # cap the three distributed queries run: the aggregates must
-        # cover ALL messages, and the sorted LIMIT keeps the reference's
-        # deterministic first-N-by-type truncation.
-        head = messages.select(*_DETAIL_INPUTS).limit(max_detail_rows + 1).toArrow()
-        if head.num_rows <= max_detail_rows:
-            messages = head
-    if isinstance(messages, DataFrame):
-        aggregates = report_aggregates(messages).toPandas()
-        detail = report_detail(messages).limit(max_detail_rows).toPandas()
-        summary = report_summary(messages).toPandas()
-    else:
-        summary, detail, aggregates = _collected_sheets(messages, max_detail_rows)
+        # only the rows the detail sheet keeps come to the driver: one
+        # sorted LIMIT, the reference's deterministic first-N-by-type
+        messages = (
+            messages.select(*_DETAIL_INPUTS)
+            .orderBy(report_type_col(), "entity", RECORD_INDEX)
+            .limit(max_detail_rows)
+            .toArrow()
+        )
+    sheets = {
+        "summary": _summary_sheet(summary),
+        "errors": _detail_sheet(messages, max_detail_rows),
+        "aggregates": aggregates_sheet(summary),
+    }
+    frames = {name: sheet.to_pandas() for name, sheet in sheets.items()}
 
-    use_xlsx = output_format == "xlsx"
     if output_format == "auto":
         try:
             import openpyxl  # noqa: F401
 
-            use_xlsx = True
+            output_format = "xlsx"
         except ImportError:
-            use_xlsx = False
-
-    if use_xlsx:
+            output_format = "csv"
+    if output_format == "xlsx":
         import openpyxl  # noqa: F401 - loud ImportError when forced
         import pandas as pd
 
         path = out_path if out_path.endswith(".xlsx") else out_path + ".xlsx"
         with pd.ExcelWriter(path, engine="openpyxl") as writer:
-            summary.to_excel(writer, sheet_name="summary", index=False)
-            detail.to_excel(writer, sheet_name="errors", index=False)
-            aggregates.to_excel(writer, sheet_name="aggregates", index=False)
+            for name, frame in frames.items():
+                frame.to_excel(writer, sheet_name=name, index=False)
         return path
     out_dir = Path(out_path.removesuffix(".xlsx"))
     out_dir.mkdir(parents=True, exist_ok=True)
-    summary.to_csv(out_dir / "summary.csv", index=False)
-    detail.to_csv(out_dir / "errors.csv", index=False)
-    aggregates.to_csv(out_dir / "aggregates.csv", index=False)
+    for name, frame in frames.items():
+        frame.to_csv(out_dir / f"{name}.csv", index=False)
     return str(out_dir)
 
 

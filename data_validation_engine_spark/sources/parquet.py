@@ -1,4 +1,4 @@
-"""Parquet source + refdata loading (dve spark/reference_data.py:32-38)."""
+"""Parquet source."""
 
 from __future__ import annotations
 
@@ -57,7 +57,3 @@ def read_parquet_nanos_safe(
                 c, F.timestamp_micros((F.col(c) / 1000).cast("long"))
             )
     return df
-
-
-def load_refdata_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -966,6 +966,98 @@ def test_rules_failure_writes_both_feeds_on_either_path(
     assert not any("PROCESSING_ERROR" in line for line in lines)
 
 
+
+def _over_cap_feed(spark, n):
+    """A tagged feed of ``n + 1`` messages, all distinct in (Type, Table,
+    Record_Index): record failures, every tenth informational, five
+    aggregate-entity rows with a null index, and record 7 failing a
+    second, integrity-level code (untagged)."""
+    from data_validation_engine_spark.messages import MESSAGE_SCHEMA
+    from data_validation_engine_spark.sinks.errors import FEED
+
+    agg = f"id >= {n - 5}"
+    rows = spark.range(n).selectExpr(
+        f"CASE WHEN {agg} THEN concat('agg_', id) ELSE 'orders' END AS entity",
+        f"CASE WHEN {agg} THEN concat('agg_', id) ELSE 'orders' END"
+        " AS original_entity",
+        f"CASE WHEN {agg} THEN NULL ELSE id END AS __record_index__",
+        "element_at(array('MISSING', 'INVALID', 'RANGE'), CAST(id % 3 AS INT) + 1)"
+        " AS error_code",
+        "concat('row ', id) AS error_message",
+        "concat('f', id % 4) AS error_location",
+        "'record' AS failure_type",
+        "id % 10 = 3 AS is_informational",
+        "element_at(array('missing', 'type', 'constraint'), CAST(id % 3 AS INT) + 1)"
+        " AS category",
+        "CAST(NULL AS STRING) AS reporting_field",
+        "CAST(id AS STRING) AS value",
+        "CAST(NULL AS STRING) AS record_json",
+        "CASE WHEN id % 2 = 0 THEN 'data_contract' ELSE 'business_rules' END"
+        f" AS {FEED}",
+    )
+    second = spark.range(1).selectExpr(
+        "'orders' AS entity", "'orders' AS original_entity",
+        "CAST(7 AS BIGINT) AS __record_index__", "'COUNT_MISMATCH' AS error_code",
+        "'count differs' AS error_message", "'f3' AS error_location",
+        "'integrity' AS failure_type", "false AS is_informational",
+        "'integrity' AS category", "CAST(NULL AS STRING) AS reporting_field",
+        "CAST(NULL AS STRING) AS value", "CAST(NULL AS STRING) AS record_json",
+        f"CAST(NULL AS STRING) AS {FEED}",
+    )
+    feed = rows.unionByName(second)
+    assert feed.columns == [*MESSAGE_SCHEMA.names, FEED]
+    return feed.localCheckpoint()
+
+
+@pytest.mark.slow
+def test_over_cap_feed_sinks_match_collected(spark, tmp_path):
+    """Over the real cap the stage-6 sinks read the feed DataFrame (a
+    grouping-sets summary and a sorted LIMIT of detail rows); raising the
+    cap above the feed collects it instead. Both give the same JSONL
+    feeds, report files, error_aggregates rows and schema, and
+    statistics, and the detail sheet keeps exactly the cap's rows."""
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
+
+    from data_validation_engine_spark import pipeline
+    from data_validation_engine_spark.sinks.errors import MAX_DETAIL_ROWS
+
+    n = MAX_DETAIL_ROWS + 10
+    feed = _over_cap_feed(spark, n)
+    got = {}
+    for label, cap, form in (
+        ("distributed", MAX_DETAIL_ROWS, DataFrame),
+        ("collected", 2 * n, pa.Table),
+    ):
+        work = tmp_path / label
+        messages = pipeline.write_message_feeds(feed, work / "errors", cap=cap)
+        assert isinstance(messages, form)
+        report, agg_path, stats = pipeline.write_feed_artifacts(
+            messages, work, "sub-1", write_report=True
+        )
+        got[label] = (
+            _feed_rows(work / "errors"),
+            {p.name: p.read_bytes() for p in sorted(Path(report).iterdir())},
+            _artifact_rows(spark, agg_path),
+            stats,
+        )
+    assert got["collected"] == got["distributed"]
+    feeds, report, (_, agg), stats = got["collected"]
+    assert sum(feeds["data_contract"].values()) == (n + 1) // 2
+    assert sum(feeds["business_rules"].values()) == n // 2
+    detail = report["errors.csv"].decode("utf-8").splitlines()
+    assert len(detail) == 1 + MAX_DETAIL_ROWS
+    warnings = sum(1 for i in range(n) if i % 10 == 3)
+    # one key per non-informational record row: record 7's integrity code
+    # adds none, a null index leaves the entity as the key
+    assert stats == {
+        "n_messages": n + 1,
+        "n_record_rejections": n - warnings,
+        "n_warnings": warnings,
+    }
+    assert sum(r["n_errors"] for r in agg) == n + 1
+    assert {r["n_records"] for r in agg if r["entity"].startswith("agg_")} == {0}
+
 ORDERS_DISCHEMA = {
     "contract": {
         "types": {"Flag": {"callable": "constr", "constraints": {"max_length": 1}}},

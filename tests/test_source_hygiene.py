@@ -86,8 +86,6 @@ CREATE_DATAFRAME_ALLOWED = {
     "data_validation_engine_spark/sinks/audit.py": 1,
     # write_literal_messages_jsonl: presence/XSD failure rows
     "data_validation_engine_spark/sinks/errors.py": 1,
-    # report_summary headings (the over-cap report fallback)
-    "data_validation_engine_spark/sinks/report.py": 1,
 }
 
 SUBMISSION_PATH = (

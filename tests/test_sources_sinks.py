@@ -262,8 +262,8 @@ def test_error_report_xlsx_branch(spark, tmp):
     openpyxl = pytest.importorskip("openpyxl")
 
     from data_validation_engine_spark.sinks.report import (
-        report_aggregates,
-        report_detail,
+        aggregates_sheet,
+        summarise_feed,
         write_error_report,
     )
 
@@ -274,10 +274,12 @@ def test_error_report_xlsx_branch(spark, tmp):
     assert out.endswith(".xlsx")
     wb = openpyxl.load_workbook(out)
     assert wb.sheetnames == ["summary", "errors", "aggregates"]
-    # header row + data rows, matching the distributed frames
+    # header row + data rows: every message, every aggregate
     assert wb["summary"].max_row == 1 + 3
-    assert wb["errors"].max_row == 1 + report_detail(messages).count()
-    assert wb["aggregates"].max_row == 1 + report_aggregates(messages).count()
+    assert wb["errors"].max_row == 1 + messages.count()
+    assert wb["aggregates"].max_row == 1 + (
+        aggregates_sheet(summarise_feed(messages)).num_rows
+    )
 
 
 def test_error_report_xlsx_forced_without_openpyxl_raises(spark, tmp):
@@ -433,20 +435,21 @@ def test_read_parquet_nanos_safe_passes_through_micros(spark):
 
 
 def test_error_report_fast_path_matches_distributed(spark, tmp):
-    """The single-collect fast path and the distributed fallback produce
-    byte-identical sheets: force the fallback with max_detail_rows=1
-    (2 messages > cap) and compare against the default path."""
+    """The collected table and the feed DataFrame (the over-cap path: a
+    grouping-sets summary and a sorted LIMIT of detail rows) give the same
+    sheets: the DataFrame run keeps max_detail_rows=1 of the 2 messages,
+    and both equal sheets counted by a plain Spark groupBy."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from data_validation_engine_spark.sinks.report import (
-        report_aggregates,
-        report_summary,
+        report_type_col,
         write_error_report,
     )
 
     messages = _report_messages(spark)
     fast = write_error_report(
-        messages, str(tmp / "fast"), output_format="csv"
+        messages.toArrow(), str(tmp / "fast"), output_format="csv"
     )
     slow = write_error_report(
         messages,
@@ -464,19 +467,28 @@ def test_error_report_fast_path_matches_distributed(spark, tmp):
     sl = pd.read_csv(f"{slow}/errors.csv")
     assert len(fa) == 2 and len(sl) == 1
     pd.testing.assert_frame_equal(fa.iloc[:1], sl, check_dtype=False)
-    # and the fast-path aggregates equal the distributed frames exactly
-    agg_df = report_aggregates(messages).toPandas()
+    # and the sheets hold the counts of a plain Spark groupBy
+    keys = ["Type", "Table", "Data_Item", "Category", "Error_Code"]
+    typed = messages.select(
+        report_type_col().alias("Type"),
+        F.col("entity").alias("Table"),
+        F.col("error_location").alias("Data_Item"),
+        F.col("category").alias("Category"),
+        F.col("error_code").alias("Error_Code"),
+    )
+    agg_df = typed.groupBy(*keys).count().withColumnRenamed("count", "Count")
     pd.testing.assert_frame_equal(
-        pd.read_csv(f"{fast}/aggregates.csv").fillna(""),
-        agg_df.fillna("").astype(
-            {"Count": "int64"}
-        ),
+        pd.read_csv(f"{fast}/aggregates.csv").fillna("").sort_values(keys)
+        .reset_index(drop=True),
+        agg_df.toPandas().fillna("").sort_values(keys).reset_index(drop=True),
         check_dtype=False,
     )
-    sum_df = report_summary(messages).toPandas()
-    pd.testing.assert_frame_equal(
-        pd.read_csv(f"{fast}/summary.csv"), sum_df, check_dtype=False
-    )
+    by_type = dict(typed.groupBy("Type").count().collect())
+    summary = pd.read_csv(f"{fast}/summary.csv")
+    assert dict(zip(summary["Type"], summary["Count"])) == {
+        t: by_type.get(t, 0)
+        for t in ("File Rejection", "Record Rejection", "Warning")
+    }
 
 
 # -- ORC source/sink (sources/orc.py) ----------------------------------------
