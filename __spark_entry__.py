@@ -3942,11 +3942,12 @@ def q_report_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation feed — the sheet the Excel/CSV report writes, derived from
     the feed's grouping-sets summary (sinks/report.py summarise_feed,
     aggregates_sheet), proven against a SQL GROUP BY, unioned
-    with the entity PRESENCE checks (pipeline.py:230-260): a dischema declaring
+    with the entity PRESENCE checks of ``run_pipeline``: a dischema declaring
     {alpha, beta} fed {alpha, gamma} fails the submission with one
     critical message per missing/undeclared entity, mapped into the same
     sheet columns under Type='Presence Check'. The early return fires
-    before any file IO, so the feed is fully deterministic."""
+    before any file is read, and its ``result.messages`` is the literal
+    file_transformation feed, so the rows are fully deterministic."""
     import json as _json
     import tempfile
     from pathlib import Path

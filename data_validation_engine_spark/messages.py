@@ -11,6 +11,9 @@ Every feed — contract, uniqueness, rule filters and notifications, the
 sync stage (batch and streaming), profile gates — is built by the one
 :func:`failure_messages`: producers supply only their pass predicates and
 per-check field Columns; the ``MESSAGE_SCHEMA`` projection lives here.
+Submission-level messages (entity presence, XSD, processing errors) are
+driver literals: :func:`submission_message` builds one and
+:func:`literal_feed` makes rows of them a tagged feed without a Spark job.
 
 Message taxonomy parity: dve core_engine/message.py:136-198
 (entity/record/failure_type/error code/message/location/informational).
@@ -21,11 +24,14 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Literal
+from typing import TYPE_CHECKING, Literal
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 RECORD_INDEX = "__record_index__"
 """Stable 1-based per-file record index column (dve core_engine/constants.py:3)."""
@@ -56,6 +62,9 @@ MESSAGE_SCHEMA = T.StructType(
         T.StructField("record_json", T.StringType(), True),
     ]
 )
+
+FEED = "__feed__"
+"""Column of the tagged feed: the JSONL feed a message is written to."""
 
 # Casts take type names: a DataType argument costs extra Python-to-JVM round
 # trips, and building a plan is dominated by those round trips.
@@ -379,6 +388,38 @@ def messages_for_checks(
         [(pred, fields(reporting)) for pred, reporting in checks],
         record_json=record_json,
     )
+
+
+def submission_message(
+    entity: str, code: str, message: str, *, informational: bool = False
+) -> dict:
+    """One submission-level message as a MESSAGE_SCHEMA row: it names no
+    record, and its failure type and category are ``submission``."""
+    return {
+        "entity": entity,
+        "original_entity": entity,
+        RECORD_INDEX: None,
+        "error_code": code,
+        "error_message": message,
+        "error_location": None,
+        "failure_type": "submission",
+        "is_informational": informational,
+        "category": "submission",
+        "reporting_field": None,
+        "value": None,
+        "record_json": None,
+    }
+
+
+def literal_feed(rows: list[dict], tag: str | None) -> "pa.Table":
+    """Literal message rows as a tagged feed, every row tagged ``tag``: an
+    Arrow table, so writing it or making it a DataFrame starts no Spark
+    job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(MESSAGE_SCHEMA).append(pa.field(FEED, pa.string()))
+    return pa.Table.from_pylist([{**row, FEED: tag} for row in rows], schema)
 
 
 def empty_messages(spark: SparkSession) -> DataFrame:

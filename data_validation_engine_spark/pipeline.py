@@ -11,19 +11,22 @@ thread-safe, so callers can fan out with their own executor):
 2. **file transformation** (pipeline.py:320-424) — per contract dataset,
    read the submitted file stringified via the configured reader; write the
    ``transform/`` parquet checkpoint. Entity presence checks (missing file,
-   unsupported extension, unconfigured extras) emit critical submission
-   messages (dve backends/base/contract.py:227-315).
+   unconfigured extras) and the XSD check emit submission messages
+   (dve backends/base/contract.py:227-315), driver literals tagged for the
+   ``file_transformation`` feed. A missing entity or a failed XSD ends the
+   submission there: its three JSONL feeds are written from those literal
+   rows, with no Spark job.
 3. **data contract** (pipeline.py:426-544) — reload ``transform/``, add
    ``__record_index__``, run the expression-compiled contract; write
    ``data_contract/`` parquet.
 4. **business rules** (pipeline.py:546-728) — entity manager with lazy
    refdata + ``refdata_dve_submission_info``; pre-sync steps per rule, ONE
-   sync-filter stage for all rules, post-sync steps. The contract and rule
-   messages then form one tagged feed, collected once with a bounded
-   ``limit(cap + 1).toArrow()`` (the cap is the report's 100,000 detail
-   rows), and both stage error JSONL feeds are written from it;
-   cross-stage record rejection by anti-join on the record index; write
-   final parquet.
+   sync-filter stage for all rules, post-sync steps. The file
+   transformation, contract and rule messages then form one tagged feed,
+   collected once with a bounded ``limit(cap + 1).toArrow()`` (the cap is
+   the report's 100,000 detail rows), and the three stage error JSONL
+   feeds are written from it; cross-stage record rejection by anti-join
+   on (origin entity, record index); write final parquet.
 5. **error report** (pipeline.py:730-746, 801-948) — the report, the
    ``error_aggregates`` artifact and the submission statistics audit row,
    all read from one summary of the feed whose size is bounded by its
@@ -50,18 +53,20 @@ from pyspark.sql import functions as F
 from data_validation_engine_spark.contract.apply import (
     apply_contract,
     reject_keys,
-    reject_records,
     reject_records_by_origin,
 )
+from data_validation_engine_spark.contract.compile import stringified_schema
 from data_validation_engine_spark.contract.index import add_record_index
+from data_validation_engine_spark.contract.spec import EntityContract
 from data_validation_engine_spark.dischema import Dischema, load_dischema
 from data_validation_engine_spark.entities import EntityManager
 from data_validation_engine_spark.messages import (
-    MESSAGE_SCHEMA,
     MessageCollector,
     ORIGIN_ENTITY,
     RECORD_INDEX,
     empty_messages,
+    literal_feed,
+    submission_message,
     union_messages,
 )
 from data_validation_engine_spark.sinks.audit import AuditLog, new_submission_id
@@ -72,7 +77,6 @@ from data_validation_engine_spark.sinks.errors import (
     collect_feed,
     select_feed,
     tag_feed,
-    write_literal_messages_jsonl,
     write_messages_jsonl,
 )
 from data_validation_engine_spark.sinks.report import (
@@ -84,49 +88,11 @@ from data_validation_engine_spark.sinks.report import (
 )
 from data_validation_engine_spark.sources.csv import CSVOptions, read_csv
 from data_validation_engine_spark.sources.json import read_json
-from data_validation_engine_spark.sources.xml import read_xml
+from data_validation_engine_spark.sources.xml import conform_to_schema, read_xml
 from data_validation_engine_spark.steps.engine import StepEngine
 from data_validation_engine_spark.steps.sync_filters import apply_sync_filters
 
 from pyspark.sql import types as T
-
-
-def _critical_row(
-    entity: str,
-    code: str,
-    message: str,
-    *,
-    informational: bool = False,
-) -> dict:
-    """The literal dict of a submission-level message — the driver-side
-    unit the presence/XSD early-return paths write without a Spark job
-    (sinks/errors.py write_literal_messages_jsonl)."""
-    return {
-        "entity": entity,
-        "original_entity": entity,
-        RECORD_INDEX: None,
-        "error_code": code,
-        "error_message": message,
-        "error_location": None,
-        "failure_type": "submission",
-        "is_informational": informational,
-        "category": "submission",
-        "reporting_field": None,
-        "value": None,
-        "record_json": None,
-    }
-
-
-def _critical(
-    spark: SparkSession,
-    entity: str,
-    code: str,
-    message: str,
-    *,
-    informational: bool = False,
-) -> DataFrame:
-    row = _critical_row(entity, code, message, informational=informational)
-    return spark.createDataFrame([row], MESSAGE_SCHEMA)
 
 
 @dataclass
@@ -142,29 +108,25 @@ class PipelineResult:
     statistics: dict[str, int] = field(default_factory=dict)
 
 
-def _stringified_schema(names: list[str]) -> T.StructType:
-    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+def _reader_config(entity_contract: EntityContract, path: str) -> dict[str, Any]:
+    """The entity's reader config for ``path``'s extension, keyed with or
+    without the dot (``".xml"`` or ``"xml"``); empty when none is set."""
+    ext = Path(path).suffix.lower()
+    configs = entity_contract.reader_config
+    return configs.get(ext) or configs.get(ext.lstrip(".")) or {}
 
 
 def read_submitted_file(
-    spark: SparkSession,
-    path: str,
-    field_names: list[str],
-    reader_config: dict[str, Any],
-    *,
-    stringified: "T.StructType | None" = None,
+    spark: SparkSession, path: str, entity_contract: EntityContract
 ) -> DataFrame:
-    """Dispatch one submitted file to the configured reader, stringified.
-
-    ``stringified`` is the structure-preserving all-strings schema (nested
-    arrays/structs with string leaves) — required for JSON/XML entities
-    with nested models; flat entities default to one string per field.
-    """
+    """Dispatch one submitted file to the entity's configured reader,
+    stringified: JSON and XML entities read to the structure-preserving
+    all-strings schema (nested arrays/structs with string leaves)."""
     ext = Path(path).suffix.lower()
-    cfg = reader_config.get(ext) or reader_config.get(ext.lstrip(".")) or {}
-    kwargs = dict(cfg.get("kwargs", {}))
-    kwargs.pop("rules_location", None)
+    cfg = _reader_config(entity_contract, path)
+    kwargs = cfg.get("kwargs", {})
     reader_name = (cfg.get("reader") or "").lower()
+    field_names = [f.name for f in entity_contract.fields]
 
     if ext == ".csv" or "csv" in reader_name:
         opt_names = {f.name for f in CSVOptions.__dataclass_fields__.values()}
@@ -173,16 +135,13 @@ def read_submitted_file(
         )
         return read_csv(spark, path, field_names, options)
     if ext == ".json" or "json" in reader_name:
-        df = read_json(
+        return read_json(
             spark,
             path,
-            stringified or _stringified_schema(field_names),
+            stringified_schema(entity_contract),
             multi_line=bool(kwargs.get("multi_line", True)),
         )
-        return df
     if ext == ".xml" or "xml" in reader_name:
-        from data_validation_engine_spark.sources.xml import conform_to_schema
-
         df = read_xml(
             spark,
             path,
@@ -191,8 +150,7 @@ def read_submitted_file(
             explode_record_tag=bool(kwargs.get("root_tag")),
             n_records_to_read=kwargs.get("n_records_to_read"),
         )
-        target = stringified or _stringified_schema(field_names)
-        return conform_to_schema(df, target)
+        return conform_to_schema(df, stringified_schema(entity_contract))
     if ext in (".parquet", ""):
         df = spark.read.parquet(path)
         return df.select(
@@ -202,12 +160,13 @@ def read_submitted_file(
 
 
 def write_message_feeds(
-    feed: DataFrame, errors_dir: Path, *, cap: int = MAX_DETAIL_ROWS
+    feed: Feed, errors_dir: Path, *, cap: int = MAX_DETAIL_ROWS
 ) -> Feed:
     """Write the tagged feed's JSONL feeds; return the untagged feed the
-    stage-6 sinks read: its Arrow table when a bounded collect finds at
-    most ``cap`` rows, else ``feed`` itself (cap 0: always ``feed``)."""
-    collected = collect_feed(feed, cap)
+    stage-6 sinks read. A DataFrame is collected to its Arrow table when a
+    bounded collect finds at most ``cap`` rows, else read as it is (cap 0:
+    always); a table is read as it is."""
+    collected = collect_feed(feed, cap) if isinstance(feed, DataFrame) else feed
     source = feed if collected is None else collected
     for name in FEEDS:
         write_messages_jsonl(select_feed(source, name), str(errors_dir / name))
@@ -290,52 +249,42 @@ def run_pipeline(
             ],
         )
 
-    collector = MessageCollector()
     contract = dischema.contract
     datasets = {e.name: e for e in contract.datasets} if contract else {}
 
     # -- entity presence checks (dve backends/base/contract.py:227-315) ----
-    # presence/XSD failures are a handful of DRIVER-LITERAL rows;
-    # ``boot_rows`` tracks them so the early-return paths write the feed
-    # driver-side (write_literal_messages_jsonl — layout-identical to the
-    # distributed writer) instead of paying a ~0.75s Spark write job for
-    # 2-3 rows. The collector still carries the frames every continuing
-    # path unions downstream.
-    boot_rows: list[dict] = []
-    missing = set(datasets) - set(input_files)
-    extra = set(input_files) - set(datasets)
-    for name in sorted(missing):
-        boot_rows.append(
-            _critical_row(
-                name,
-                "MISSING_ENTITY",
-                f"no file submitted for declared entity {name!r}",
-            )
+    # presence and XSD messages are driver literals for the
+    # file_transformation feed: an early exit writes every feed from them
+    # driver-side and starts no Spark job
+    missing = sorted(set(datasets) - set(input_files))
+    extra = sorted(set(input_files) - set(datasets))
+    file_messages = [
+        submission_message(
+            name, "MISSING_ENTITY", f"no file submitted for declared entity {name!r}"
         )
-    for name in sorted(extra):
-        row = _critical_row(
-            name,
-            "UNEXPECTED_ENTITY",
-            f"file submitted for undeclared entity {name!r}",
+        for name in missing
+    ] + [
+        submission_message(
+            name, "UNEXPECTED_ENTITY", f"file submitted for undeclared entity {name!r}"
         )
-        boot_rows.append(row)
-        collector.add(spark.createDataFrame([row], MESSAGE_SCHEMA))
-    if missing:
-        msgs = write_literal_messages_jsonl(
-            spark, boot_rows, str(errors_dir / "file_transformation")
-        )
+        for name in extra
+    ]
+
+    def fail_early() -> PipelineResult:
+        feed = literal_feed(file_messages, "file_transformation")
+        messages = write_message_feeds(feed, errors_dir)
         audit_status("failed", "critical")
         return PipelineResult(
             submission_id=submission_id,
             success=False,
-            messages=msgs,
+            messages=spark.createDataFrame(messages),
             errors_dir=str(errors_dir),
         )
 
+    if missing:
+        return fail_early()
+
     # -- stage 2: file transformation (stringified checkpoint) -------------
-    from data_validation_engine_spark.contract.compile import (
-        stringified_schema,
-    )
     from data_validation_engine_spark.sources.xml import (
         XSDValidationError,
         validate_xsd,
@@ -345,9 +294,7 @@ def run_pipeline(
     transform_schemas: dict[str, T.StructType] = {}
     for name, entity_contract in datasets.items():
         path = input_files[name]
-        ext = Path(path).suffix.lower()
-        cfg = entity_contract.reader_config.get(ext) or {}
-        kwargs = dict(cfg.get("kwargs", {}))
+        kwargs = _reader_config(entity_contract, path).get("kwargs", {})
         if kwargs.get("xsd_location"):
             xsd = kwargs["xsd_location"]
             if dischema.base_dir and not Path(xsd).is_absolute():
@@ -355,44 +302,24 @@ def run_pipeline(
             try:
                 validate_xsd(path, xsd)
             except XSDValidationError as exc:
-                boot_rows.append(
-                    _critical_row(
+                file_messages.append(
+                    submission_message(
                         name,
                         kwargs.get("xsd_error_code", "XSD_VALIDATION_FAILED"),
                         kwargs.get("xsd_error_message", str(exc)),
                     )
                 )
-                # every message so far is a driver literal (presence +
-                # XSD rows) — same fast path as the presence return
-                msgs = write_literal_messages_jsonl(
-                    spark, boot_rows, str(errors_dir / "file_transformation")
-                )
-                audit_status("failed", "critical")
-                return PipelineResult(
-                    submission_id=submission_id,
-                    success=False,
-                    messages=msgs,
-                    errors_dir=str(errors_dir),
-                )
+                return fail_early()
             except ImportError as exc:
                 # no XSD backend in this runtime: surface it in the error
                 # feed (informational) rather than skipping silently
-                row = _critical_row(
-                    name, "XSD_NOT_VALIDATED", str(exc), informational=True
-                )
-                boot_rows.append(row)
-                collector.add(
-                    spark.createDataFrame([row], MESSAGE_SCHEMA)
+                file_messages.append(
+                    submission_message(
+                        name, "XSD_NOT_VALIDATED", str(exc), informational=True
+                    )
                 )
 
-        field_names = [f.name for f in entity_contract.fields]
-        df = read_submitted_file(
-            spark,
-            path,
-            field_names,
-            entity_contract.reader_config,
-            stringified=stringified_schema(entity_contract),
-        )
+        df = read_submitted_file(spark, path, entity_contract)
         # record_count rides the write action via an Observation instead
         # of a later re-scan-and-count of every transform checkpoint
         # (SURVEY §7: observe metrics replace count-based checks) — at
@@ -457,7 +384,8 @@ def run_pipeline(
 
     engine = StepEngine(spark)
     rule_messages = MessageCollector()
-    success = True
+    # a rules failure is a submission-level message no JSONL feed receives
+    failures: list[dict] = []
     try:
         try:
             for rule in dischema.rules:
@@ -471,37 +399,41 @@ def run_pipeline(
                 for step in rule.post_sync:
                     rule_messages.add(engine.evaluate(entities, config=step))
         except Exception as exc:
-            collector.add(
-                _critical(
-                    spark,
+            failures.append(
+                submission_message(
                     "submission",
                     "PROCESSING_ERROR",
                     f"business rules failed: {type(exc).__name__}: {exc}",
                 )
             )
-            success = False
+        success = not failures
 
-        # ONE feed, each message tagged with the JSONL feed it belongs to.
+        # ONE feed, each message tagged with the JSONL feed it belongs to;
+        # the literal messages join it as Arrow local relations.
         # Lazy checkpoint: its first action (the bounded collect) runs the
         # contract and rules message DAGs once, and every later consumer
         # (the rejection anti-joins, the over-cap sinks, the caller's
         # result.messages) reads the blocks instead of re-running them
+        literals = [
+            spark.createDataFrame(literal_feed(rows, tag))
+            for rows, tag in ((file_messages, "file_transformation"), (failures, None))
+            if rows
+        ]
         feed = union_messages(
             [
-                tag_feed(collector.union(), None),
+                *literals,
                 tag_feed(contract_messages.union(), "data_contract"),
                 tag_feed(rule_messages.union(), "business_rules"),
             ]
         ) or tag_feed(empty_messages(spark), None)
         feed = feed.localCheckpoint(eager=False)
         sink_feed = write_message_feeds(feed, errors_dir)
-        all_messages = select_feed(feed)
 
         result = PipelineResult(
             submission_id=submission_id,
             success=success,
             errors_dir=str(errors_dir),
-            messages=all_messages,
+            messages=select_feed(feed),
         )
         if not success:
             audit_status("failed", "critical")
@@ -520,22 +452,14 @@ def run_pipeline(
                 # from the "before rules" picture
                 df = df.drop(RECORD_INDEX, ORIGIN_ENTITY)
             elif RECORD_INDEX in df.columns:
-                if ORIGIN_ENTITY in df.columns:
-                    # row-level lineage: reject (origin, index) pairs, so
-                    # renamed/copied/unioned entities still drop the records
-                    # their contract messages refer to
-                    df = reject_records_by_origin(df, rejected)
-                    df = df.drop(RECORD_INDEX, ORIGIN_ENTITY)
-                else:
-                    # no lineage column: scope rejection to THIS entity's
-                    # messages — record indexes are per-entity sequences, so
-                    # an unscoped anti-join would reject unrelated rows that
-                    # merely share an index value
-                    df = reject_records(
-                        df,
-                        all_messages.where(F.col("original_entity") == name),
-                    )
-                    df = df.drop(RECORD_INDEX)
+                # reject (origin, index) pairs: the lineage column keeps
+                # renamed/copied/unioned entities dropping the records their
+                # messages refer to; an entity that lost it is its own
+                # origin, since record indexes are per-entity sequences
+                if ORIGIN_ENTITY not in df.columns:
+                    df = df.withColumn(ORIGIN_ENTITY, F.lit(name))
+                df = reject_records_by_origin(df, rejected)
+                df = df.drop(RECORD_INDEX, ORIGIN_ENTITY)
             elif ORIGIN_ENTITY in df.columns:
                 df = df.drop(ORIGIN_ENTITY)
             out = work / "business_rules" / name

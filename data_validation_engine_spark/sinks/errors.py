@@ -3,21 +3,21 @@
 Replaces the reference's background-thread row writer
 (dve common/error_utils.py:30-173). A submission's messages are one
 tagged feed: each row carries the JSONL feed it belongs to in ``FEED``
-(``data_contract``, ``business_rules``, or null for the presence/XSD/
-processing-error rows no feed receives). The feed is error-sized, so the
-pipeline collects it once with a bounded ``limit(cap + 1).toArrow()``
+(``file_transformation``, ``data_contract``, ``business_rules``, or null
+for a processing error no feed receives). The feed is error-sized, so
+the pipeline collects it once with a bounded ``limit(cap + 1).toArrow()``
 (:func:`collect_feed`); at or under the cap every sink reads that Arrow
 table driver-side and no sink starts a Spark job. Over the cap the feed
 stays a DataFrame: the data-sized sinks (the JSONL feeds, the rejection
 keys, the report's detail rows) read it distributed, and the counts read
-one bounded grouping-sets summary of it (sinks/report.py).
+one bounded grouping-sets summary of it (sinks/report.py). A submission
+that stops at file transformation has only literal messages, already an
+Arrow table (messages.literal_feed), read the same way.
 
 The driver-side JSONL writer lays a feed out as Spark's JSON writer
 does: ``part-00000-<uuid>-c000.json`` plus ``_SUCCESS``, each line's
 fields in schema order with null fields omitted, text as UTF-8 — readers
-cannot tell the writers apart. It also writes the literal rows of the
-pipeline's early returns (entity presence, XSD failure), which
-:func:`write_literal_messages_jsonl` returns as a DataFrame.
+cannot tell the writers apart.
 """
 
 from __future__ import annotations
@@ -25,26 +25,25 @@ from __future__ import annotations
 import json
 import uuid
 from pathlib import Path
-from typing import TYPE_CHECKING, Iterable, Union
+from typing import TYPE_CHECKING, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_validation_engine_spark.messages import FEED
 
 if TYPE_CHECKING:
     import pyarrow as pa
 
 Feed = Union[DataFrame, "pa.Table"]
-"""A message feed: a DataFrame, or the Arrow table :func:`collect_feed`
-returned for it."""
+"""A message feed: a DataFrame, or an Arrow table (:func:`collect_feed`'s
+collect of one, or messages.literal_feed)."""
 
 MAX_DETAIL_ROWS = 100_000
 """The error report's detail-sheet cap, and the most messages a feed
 collect brings to the driver."""
 
-FEED = "__feed__"
-"""Column of the tagged feed: the JSONL feed a message is written to."""
-
-FEEDS = ("data_contract", "business_rules")
+FEEDS = ("file_transformation", "data_contract", "business_rules")
 
 
 def tag_feed(messages: DataFrame | None, name: str | None) -> DataFrame | None:
@@ -78,14 +77,28 @@ def select_feed(feed: Feed, name: str | None = None) -> Feed:
 
 def write_messages_jsonl(messages: Feed, uri: str, *, mode: str = "append") -> None:
     """Write a message feed as JSONL: a DataFrame with Spark's JSON writer,
-    a collected table driver-side (appended to a local path)."""
+    a collected table driver-side (appended to a local path) in that
+    writer's layout and line format: schema field order, nulls omitted
+    (``ignoreNullFields``), UTF-8 text."""
     if isinstance(messages, DataFrame):
         messages.write.mode(mode).json(uri)
         return
     path = _local_path(uri)
     if path is None or mode != "append":
         raise ValueError(f"a collected feed is appended to a local path: {uri}")
-    _write_jsonl(messages.to_pylist(), messages.column_names, path)
+    lines = [
+        json.dumps(
+            {k: v for k, v in row.items() if v is not None},
+            ensure_ascii=False,
+            separators=(",", ":"),
+        )
+        for row in messages.to_pylist()
+    ]
+    out = Path(path)
+    out.mkdir(parents=True, exist_ok=True)
+    part = out / f"part-00000-{uuid.uuid4()}-c000.json"
+    part.write_text("".join(line + "\n" for line in lines), encoding="utf-8")
+    (out / "_SUCCESS").touch()
 
 
 def _local_path(uri: str) -> str | None:
@@ -95,49 +108,3 @@ def _local_path(uri: str) -> str | None:
     if "://" in uri:
         return None
     return uri
-
-
-def _write_jsonl(rows: Iterable[dict], fields: list[str], path: str) -> None:
-    """Append rows in the Spark JSON writer's layout and line format,
-    driver-side: schema field order, nulls omitted (``ignoreNullFields``),
-    UTF-8 text."""
-    out = Path(path)
-    out.mkdir(parents=True, exist_ok=True)
-    lines = [
-        json.dumps(
-            {k: row[k] for k in fields if row.get(k) is not None},
-            ensure_ascii=False,
-            separators=(",", ":"),
-        )
-        for row in rows
-    ]
-    part = out / f"part-00000-{uuid.uuid4()}-c000.json"
-    part.write_text("".join(line + "\n" for line in lines), encoding="utf-8")
-    (out / "_SUCCESS").touch()
-
-
-def write_literal_messages_jsonl(
-    spark,
-    rows: list[dict],
-    uri: str,
-    *,
-    mode: str = "append",
-) -> DataFrame:
-    """Write KNOWN-TINY literal message rows as a JSONL feed and return
-    them as a messages DataFrame.
-
-    The caller guarantees ``rows`` is bounded driver metadata (e.g. one
-    row per declared entity) — this is NOT a data-scale sink. Local
-    paths get the driver-side fast path with Spark-writer-identical
-    layout; anything else (object stores, ``mode="overwrite"``) takes
-    the standard distributed writer.
-    """
-    from data_validation_engine_spark.messages import MESSAGE_SCHEMA
-
-    df = spark.createDataFrame(rows, MESSAGE_SCHEMA)
-    path = _local_path(uri)
-    if path is None or mode != "append":
-        df.write.mode(mode).json(uri)
-    else:
-        _write_jsonl(rows, MESSAGE_SCHEMA.names, path)
-    return df

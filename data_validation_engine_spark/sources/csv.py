@@ -56,21 +56,23 @@ def read_csv(
     options: CSVOptions = CSVOptions(),
 ) -> DataFrame:
     """Read a CSV file to a stringified DataFrame with declared columns."""
-    if options.field_check and options.header:
-        _check_header(spark, path, field_names, options)
+    # one header peek serves both the field check and the name mapping
+    file_cols = (
+        _peek_header(spark, path, options)
+        if options.header and (options.field_check or options.map_by_header)
+        else []
+    )
+    if options.field_check and file_cols:
+        _check_header(path, field_names, file_cols)
 
     schema_names = list(field_names)
     header_map: dict[str, str] | None = None
-    if options.header and options.map_by_header:
-        file_cols = _peek_header(spark, path, options)
-        if file_cols:
-            # read with the FILE's column order, then select declared
-            # fields by case-insensitive name
-            schema_names = file_cols
-            by_lower = {c.lower(): c for c in file_cols}
-            header_map = {
-                n: by_lower.get(n.lower(), "") for n in field_names
-            }
+    if options.map_by_header and file_cols:
+        # read with the FILE's column order, then select declared
+        # fields by case-insensitive name
+        schema_names = file_cols
+        by_lower = {c.lower(): c for c in file_cols}
+        header_map = {n: by_lower.get(n.lower(), "") for n in field_names}
 
     reader = (
         spark.read.schema(_stringified(schema_names))
@@ -101,7 +103,6 @@ def read_csv(
         )
 
     if options.null_values:
-        null_col = F.array(*[F.lit(v) for v in options.null_values])
         df = df.select(
             *[
                 F.when(F.col(f"`{c}`").isin(*options.null_values), None)
@@ -110,7 +111,6 @@ def read_csv(
                 for c in df.columns
             ]
         )
-        _ = null_col  # isin covers it; array kept out of the plan
     return df
 
 
@@ -127,18 +127,10 @@ def _peek_header(
     ]
 
 
-def _check_header(
-    spark: SparkSession,
-    path: str,
-    field_names: list[str],
-    options: CSVOptions,
-) -> None:
-    """Validate the header row names case-insensitively (one-line read)."""
-    header_cells = [
-        c.lower() for c in _peek_header(spark, path, options)
-    ]
-    if not header_cells:
-        return
+def _check_header(path: str, field_names: list[str], header: list[str]) -> None:
+    """Validate the file's header cell names against the declared fields,
+    case-insensitively."""
+    header_cells = [c.lower() for c in header]
     expected = [n.lower() for n in field_names]
     missing = [n for n in expected if n not in header_cells]
     extra = [n for n in header_cells if n not in expected]

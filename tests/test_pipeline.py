@@ -487,6 +487,173 @@ def test_missing_entity_fails_critically(spark, workspace, tmp_path_factory):
     assert codes == {"MISSING_ENTITY"}
 
 
+def _file_transformation_codes(errors_dir):
+    return [
+        json.loads(line)["error_code"]
+        for p in sorted((Path(errors_dir) / "file_transformation").glob("part-*"))
+        for line in p.read_text(encoding="utf-8").splitlines()
+    ]
+
+
+def test_undeclared_entity_reaches_file_transformation_feed(
+    spark, workspace, tmp_path
+):
+    """An undeclared entity does not stop the submission; its
+    UNEXPECTED_ENTITY message is written to the file_transformation feed."""
+    csv = str(workspace / "customers.csv")
+    res = run_pipeline(
+        spark,
+        workspace / "dischema.json",
+        {"customers": csv, "stray": csv},
+        tmp_path / "work",
+        refdata_base_path=str(workspace),
+        write_report=False,
+    )
+    assert res.success
+    assert _file_transformation_codes(res.errors_dir) == ["UNEXPECTED_ENTITY"]
+    assert "UNEXPECTED_ENTITY" in {r["error_code"] for r in res.messages.collect()}
+
+
+def test_missing_entity_writes_three_feeds_without_spark_job(
+    spark, workspace, tmp_path
+):
+    """A missing entity ends the submission before any file is read: the
+    three stage feeds are written driver-side from the literal presence
+    messages, so the exit starts no Spark job."""
+    sc = spark.sparkContext
+    group = "missing-entity-exit"
+    sc.setJobGroup(group, "one submission missing its entity")
+    try:
+        res = run_pipeline(
+            spark,
+            workspace / "dischema.json",
+            {"stray": str(workspace / "customers.csv")},
+            tmp_path / "work",
+            audit_path=str(tmp_path / "audit"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not res.success
+    feeds = _feed_rows(Path(res.errors_dir))
+    assert set(feeds) == {"file_transformation", "data_contract", "business_rules"}
+    assert feeds["data_contract"] == {} and feeds["business_rules"] == {}
+    codes = ["MISSING_ENTITY", "UNEXPECTED_ENTITY"]
+    assert _file_transformation_codes(res.errors_dir) == codes
+    assert [r["error_code"] for r in res.messages.collect()] == codes
+
+
+def _xml_dischema(tmp_path, key):
+    (tmp_path / "books.xml").write_text(
+        "<books><book><id>1</id><title>A</title></book>"
+        "<book><id>2</id><title>B</title></book></books>"
+    )
+    (tmp_path / "dischema.json").write_text(
+        json.dumps(
+            {
+                "contract": {
+                    "datasets": {
+                        "books": {
+                            "fields": {"id": "int", "title": "str"},
+                            "reader_config": {
+                                key: {
+                                    "reader": "SparkXMLReader",
+                                    "kwargs": {
+                                        "record_tag": "book",
+                                        "xsd_location": "books.xsd",
+                                    },
+                                }
+                            },
+                        }
+                    }
+                }
+            }
+        )
+    )
+    return tmp_path / "dischema.json", {"books": str(tmp_path / "books.xml")}
+
+
+def test_xsd_failure_ends_submission_at_file_transformation(
+    spark, tmp_path, monkeypatch
+):
+    """A file failing its XSD ends the submission before it is read: the
+    failure is written to the file_transformation feed and audited as
+    failed/critical."""
+    from data_validation_engine_spark.sinks.audit import AuditLog
+    from data_validation_engine_spark.sources import xml
+
+    def invalid(path, xsd):
+        raise xml.XSDValidationError(f"{path} does not match {xsd}")
+
+    monkeypatch.setattr(xml, "validate_xsd", invalid)
+    dischema, inputs = _xml_dischema(tmp_path, ".xml")
+    res = run_pipeline(
+        spark, dischema, inputs, tmp_path / "work", audit_path=str(tmp_path / "audit")
+    )
+    assert not res.success
+    assert _file_transformation_codes(res.errors_dir) == ["XSD_VALIDATION_FAILED"]
+    status = AuditLog(spark, str(tmp_path / "audit")).read("processing_status")
+    assert ("failed", "critical") in {
+        (r["status"], r["submission_result"]) for r in status.collect()
+    }
+
+
+@pytest.mark.parametrize("key", [".xml", "xml"])
+def test_xsd_not_validated_with_either_reader_config_key(
+    spark, tmp_path, monkeypatch, key
+):
+    """The XSD check finds the reader config under the key the reader
+    finds it under, dotted or not; without an XSD backend the submission
+    goes on and the file_transformation feed says it was not validated."""
+    from data_validation_engine_spark.sources import xml
+
+    def no_backend(path, xsd):
+        raise ImportError("XSD validation requires lxml or xmlschema")
+
+    monkeypatch.setattr(xml, "validate_xsd", no_backend)
+    dischema, inputs = _xml_dischema(tmp_path, key)
+    res = run_pipeline(spark, dischema, inputs, tmp_path / "work", write_report=False)
+    assert res.success
+    assert _file_transformation_codes(res.errors_dir) == ["XSD_NOT_VALIDATED"]
+    ids = sorted(r["id"] for r in res.entities["books"].collect())
+    assert ids == [1, 2]
+
+
+def test_rejection_of_entity_without_lineage_column(
+    spark, workspace, tmp_path_factory
+):
+    """A step that keeps the record index but drops the lineage column
+    leaves the entity its own origin: records 7 and 13 are still
+    rejected. Without the sync filters (which also drop both) only
+    contract rejection removes them."""
+    doc = json.loads(json.dumps(DISCHEMA))
+    doc["transformations"]["filters"] = []
+    doc["transformations"]["post_filter_rules"].append(
+        {
+            "operation": "select",
+            "entity": "customers",
+            "columns": ["__record_index__", "c_custkey", "c_name"],
+        }
+    )
+    d = workspace / "no_lineage"
+    d.mkdir(exist_ok=True)
+    (d / "test_ruleset.json").write_text(json.dumps(RULESET))
+    (d / "dischema.json").write_text(json.dumps(doc))
+    res = run_pipeline(
+        spark,
+        d / "dischema.json",
+        {"customers": str(workspace / "customers.csv")},
+        tmp_path_factory.mktemp("no_lineage_work"),
+        refdata_base_path=str(workspace),
+        write_report=False,
+    )
+    assert res.success
+    assert res.entities["customers"].columns == ["c_custkey", "c_name"]
+    keys = {r[0] for r in res.entities["customers"].select("c_custkey").collect()}
+    assert 7 not in keys and 13 not in keys and 8 in keys
+
+
 def test_rule_message_rejection_survives_entity_rename(
     spark, workspace, tmp_path_factory
 ):
@@ -767,8 +934,8 @@ PARITY_ROWS = [
      "error_code": "COUNT_MISMATCH", "failure_type": "integrity",
      "__feed__": "business_rules"},
     # written to no JSONL feed, but reported and counted
-    {"entity": "extra", "original_entity": "extra",
-     "error_code": "UNEXPECTED_ENTITY", "failure_type": "submission",
+    {"entity": "submission", "original_entity": "submission",
+     "error_code": "PROCESSING_ERROR", "failure_type": "submission",
      "category": "submission"},
 ]
 
@@ -825,7 +992,9 @@ def test_collected_feed_sinks_match_distributed(spark, tmp_path, rows):
         "n_errors:bigint,n_records:bigint,submission_id:string>"
     )
     if not rows:
-        assert feeds == {"data_contract": {}, "business_rules": {}}
+        assert feeds == {
+            "file_transformation": {}, "data_contract": {}, "business_rules": {}
+        }
         assert stats == {"n_messages": 0, "n_record_rejections": 0, "n_warnings": 0}
         assert agg == []
         return
@@ -930,8 +1099,9 @@ def test_rules_failure_writes_both_feeds_on_either_path(
     spark, workspace, tmp_path, monkeypatch
 ):
     """A rule that cannot be planned fails the submission with a
-    PROCESSING_ERROR message, which no JSONL feed receives; both feeds are
-    still written, the same on the collected and the distributed path."""
+    PROCESSING_ERROR message, which no JSONL feed receives; the three feeds
+    are still written, the same on the collected and the distributed
+    path."""
     broken = json.loads(json.dumps(DISCHEMA))
     broken["transformations"]["filters"].append(
         {
@@ -959,7 +1129,9 @@ def test_rules_failure_writes_both_feeds_on_either_path(
         codes = {r["error_code"] for r in res.messages.collect()}
         assert "PROCESSING_ERROR" in codes
         feeds[label] = _feed_rows(work / "errors")
-        assert set(feeds[label]) == {"data_contract", "business_rules"}
+        assert set(feeds[label]) == {
+            "file_transformation", "data_contract", "business_rules"
+        }
     assert feeds["collected"] == feeds["distributed"]
     lines = [line for rows in feeds["collected"].values() for line in rows]
     assert any("MISSING_MANDATORY_VALUE" in line for line in lines)

@@ -74,18 +74,17 @@ def test_repo_compiles_with_warnings_as_errors():
 #: (path, count) — ``spark.createDataFrame(`` call sites on the submission
 #: path; every other file in SUBMISSION_PATH must have none
 CREATE_DATAFRAME_ALLOWED = {
-    # _critical, UNEXPECTED_ENTITY and XSD_NOT_VALIDATED message rows
-    # (failure paths only) and the dve_submission_info refdata frame
+    # the literal submission messages as Arrow local relations (an early
+    # exit's result.messages; the presence/XSD and processing-error rows
+    # joining the tagged feed) and the dve_submission_info refdata frame
     # (evaluated only when a rule reads it)
-    "data_validation_engine_spark/pipeline.py": 4,
+    "data_validation_engine_spark/pipeline.py": 3,
     # reject_keys: a collected feed's rejection keys (an Arrow table, so a
     # local relation, not a Python-built frame)
     "data_validation_engine_spark/contract/apply.py": 1,
     # audit rows on the Delta / non-local path (local parquet appends are
     # written driver-side)
     "data_validation_engine_spark/sinks/audit.py": 1,
-    # write_literal_messages_jsonl: presence/XSD failure rows
-    "data_validation_engine_spark/sinks/errors.py": 1,
 }
 
 SUBMISSION_PATH = (

@@ -316,6 +316,25 @@ def test_csv_maps_columns_by_header_name(spark, tmp_path):
     assert rows["alice"]["missing"] is None
 
 
+def test_csv_peeks_header_once(spark, tmp_path, monkeypatch):
+    """The field check and the header-name mapping share one header peek
+    (one small Spark job)."""
+    from data_validation_engine_spark.sources import csv
+
+    calls = []
+    peek = csv._peek_header
+    monkeypatch.setattr(
+        csv, "_peek_header", lambda *a: calls.append(a) or peek(*a)
+    )
+    p = tmp_path / "data.csv"
+    p.write_text("Age,Name\n30,alice\n")
+    df = csv.read_csv(
+        spark, str(p), ["name", "age"], csv.CSVOptions(field_check=True)
+    )
+    assert len(calls) == 1
+    assert [tuple(r) for r in df.collect()] == [("alice", "30")]
+
+
 def test_csv_positional_without_header(spark, tmp_path):
     from data_validation_engine_spark.sources.csv import CSVOptions, read_csv
 
