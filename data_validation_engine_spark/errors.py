@@ -25,8 +25,9 @@ class ConstraintError(EngineError):
         self.constraint = constraint
 
 
-class ConfigurationError(EngineError):
-    """A rule/step/contract configuration is invalid."""
+class ConfigurationError(EngineError, ValueError):
+    """A rule/step/contract configuration is invalid: a bad value, so
+    also a ``ValueError`` (as pydantic's ``ValidationError`` is)."""
 
 
 class ExpressionsMisparseWarning(UserWarning):

@@ -484,7 +484,7 @@ def profile_columns(
 
 def winsorize(
     df: DataFrame,
-    group_cols: list[str] | str,
+    group_cols: list[str] | str | None,
     value_col: str,
     *,
     lower: float = 0.05,
@@ -509,7 +509,9 @@ def winsorize(
         raise ValueError(
             f"need 0 <= lower < upper <= 1, got ({lower}, {upper})"
         )
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    groups = (
+        [group_cols] if isinstance(group_cols, str) else list(group_cols or [])
+    )
     out_col = out_col or value_col
     helpers = {f"__g{i}" for i in range(len(groups))} | {"__lo", "__hi"}
     clash = helpers & set(df.columns)

@@ -664,14 +664,19 @@ def minhash_dedup(
     id_col: str,
     text_col: str,
     *,
+    shingle_size: int = DEFAULT_SHINGLE_SIZE,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    bands: int = DEFAULT_BANDS,
+    threshold: float = 0.5,
+    max_bucket_rows: int = DEFAULT_MAX_BUCKET_ROWS,
     exact_components: bool = False,
     component_algorithm: str = "label",
     quality_col: str | None = None,
     higher_is_better: bool = True,
-    **kwargs,
 ) -> DataFrame:
     """Drop near-duplicates, keeping one representative per cluster.
 
+    The pairs are :func:`minhash_pairs` under the same parameters.
     Default: greedy keep-min (a doc is dropped if it pairs with ANY lower
     id) — single pass, no iteration, but over-keeps on transitive clusters
     whose members only pair through a higher id (e.g. pairs (1,3) and
@@ -689,13 +694,22 @@ def minhash_dedup(
     the min), ties broken by ascending id so the winner is deterministic
     even on equal scores. One extra grouped aggregation per run.
     """
-    pairs = minhash_pairs(df, id_col, text_col, **kwargs)
+    pairs = minhash_pairs(
+        df,
+        id_col,
+        text_col,
+        shingle_size=shingle_size,
+        num_hashes=num_hashes,
+        bands=bands,
+        threshold=threshold,
+        max_bucket_rows=max_bucket_rows,
+    )
+    cc = (
+        connected_components_star
+        if component_algorithm == "star"
+        else connected_components
+    )
     if quality_col is not None:
-        cc = (
-            connected_components_star
-            if component_algorithm == "star"
-            else connected_components
-        )
         members = cc(pairs).join(
             df.select(
                 F.col(id_col).alias("id"), F.col(quality_col).alias("__q")
@@ -714,13 +728,7 @@ def minhash_dedup(
             .select(F.col("id").alias(id_col))
         )
     elif exact_components:
-        cc = (
-            connected_components_star
-            if component_algorithm == "star"
-            else connected_components
-        )
-        comps = cc(pairs)
-        drops = comps.where(F.col("id") != F.col("component")).select(
+        drops = cc(pairs).where(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
     else:

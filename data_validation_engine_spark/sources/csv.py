@@ -8,12 +8,13 @@ one ``spark.read.csv`` call plus Column-expression post-processing:
 - case-insensitive header mapping to declared field names
 - configurable null-value sentinel set -> NULL
 - cell trimming (leading/trailing whitespace)
-- header/field-count validation ("field_check") via a driver-side peek at
-  the first line only — not a full scan
+- header/field-count validation ("field_check") from the first line
+  only, read by a one-row Spark job — not a full scan
 """
 
 from __future__ import annotations
 
+import csv
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,14 +118,30 @@ def read_csv(
 def _peek_header(
     spark: SparkSession, path: str, options: CSVOptions
 ) -> list[str]:
-    """The file's header cell names (one-line driver-side read)."""
+    """The file's header cell names: its first line, read by a one-row
+    Spark job and parsed with the options' delimiter, quote and escape
+    characters, so a quoted name may hold the delimiter."""
     first = spark.read.text(path).limit(1).collect()
     if not first:
         return []
-    return [
-        c.strip().strip(options.quote_char)
-        for c in first[0][0].split(options.delimiter)
-    ]
+    line = first[0][0]
+    if len(options.delimiter) != 1:
+        # csv.reader takes a one-character delimiter only
+        return [
+            c.strip().strip(options.quote_char)
+            for c in line.split(options.delimiter)
+        ]
+    cells = next(
+        csv.reader(
+            [line],
+            delimiter=options.delimiter,
+            quotechar=options.quote_char or None,
+            escapechar=options.escape_char or None,
+            quoting=csv.QUOTE_MINIMAL if options.quote_char else csv.QUOTE_NONE,
+            skipinitialspace=True,
+        )
+    )
+    return [c.strip() for c in cells]
 
 
 def _check_header(path: str, field_names: list[str], header: list[str]) -> None:

@@ -244,17 +244,17 @@ class MinHashDedup(AbstractStep):
 
     ``exact_components=True`` resolves transitive clusters iteratively and
     keeps exactly the minimum id per cluster (default greedy keep-min is
-    single-pass but over-keeps on chains). Defaults of ``None`` use the
-    library defaults (:mod:`llmops.dedup`).
+    single-pass but over-keeps on chains). The defaults are those of
+    :func:`llmops.dedup.minhash_dedup`, which the step calls.
     """
 
     operation: Literal["dedup_minhash"] = "dedup_minhash"
     id_column: str
     text_column: str
     threshold: float = 0.5
-    shingle_size: Optional[int] = None
-    num_hashes: Optional[int] = None
-    bands: Optional[int] = None
+    shingle_size: int = 3
+    num_hashes: int = 12
+    bands: int = 4
     exact_components: bool = False
     # survivor selection: keep the best-QUALITY member per cluster instead
     # of the minimum id (ties -> ascending id)

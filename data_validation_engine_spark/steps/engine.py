@@ -11,11 +11,18 @@ Design notes (vs reference, for the parity audit):
   base/rules.py:97-122 fills ``__step_functions__`` by the same
   reflection over type hints). A binding row names a library function
   as ``"module:function"``, imported when the step runs, and maps
-  config fields to its frames and arguments; a step that only forwards
-  its fields needs nothing else. Steps that orchestrate (joins and
-  their integrity checks, orphans, notifications, the sync-filter
-  stage, side-table resolution, multi-branch steps) keep a handler
-  method.
+  config fields to its frames and arguments. It passes a field as
+  declared, a tuple as a list: ``()`` arrives as ``[]`` and ``None`` as
+  ``None``, so a function whose parameter defaults to ``None`` must
+  read ``[]`` alike where the field defaults to ``()``. A mode row
+  (``_by``) names one ``Literal`` field and gives one binding per value
+  of it. A step that only forwards its fields needs nothing else.
+  Steps that orchestrate keep a handler method: joins and their
+  integrity checks, orphans, notifications, the sync-filter stage,
+  side-table resolution (PQ codebooks, classifier weights, BPE merges),
+  frames built on the driver, several library calls in one step, and a
+  library result reshaped or fed different fields per mode
+  (``dedup_exact``, ``hll_profile``, ``dsir_resample``).
 - Joins are theta joins on SQL conditions (dve spark/rules.py:144-166);
   Catalyst picks broadcast/hash/sort-merge/nested-loop. Column-conflict
   resolution is last-wins, case-insensitive, preserving last casing
@@ -83,7 +90,8 @@ class Binding(NamedTuple):
     function patched on its module is the one called. ``args`` lists the
     config fields passed positionally and ``kwargs`` maps parameter ->
     config field. A field written ``"@field"`` holds an entity name and
-    passes that entity's frame.
+    passes that entity's frame; a name that is no entity raises
+    ``ConfigurationError`` naming the step type and the field.
     Tuples pass as lists and dicts as copies. The function's result
     becomes the step's output entity.
     """
@@ -102,7 +110,12 @@ class Binding(NamedTuple):
     def __call__(self, entities: Entities, config: configs.AnyStep) -> DataFrame:
         def value(field: str):
             if field.startswith("@"):
-                return entities[getattr(config, field[1:])]
+                name = getattr(config, field[1:])
+                if name not in entities:
+                    raise ConfigurationError(
+                        f"{config.operation}: {field[1:]} {name!r} names no entity"
+                    )
+                return entities[name]
             v = getattr(config, field)
             if isinstance(v, tuple):
                 return list(v)
@@ -115,13 +128,28 @@ class Binding(NamedTuple):
         return self.function()(*args, **kwargs)
 
 
+class ModeBinding(NamedTuple):
+    """A step whose ``Literal`` config ``field`` picks its binding: one
+    per value of the field."""
+
+    field: str
+    bindings: dict[str, Binding]
+
+    def __call__(self, entities: Entities, config: configs.AnyStep) -> DataFrame:
+        return self.bindings[getattr(config, self.field)](entities, config)
+
+
 def _bind(impl: str, *args: str, **kwargs: str) -> Binding:
     return Binding(impl, args, kwargs)
 
 
+def _by(field: str, **bindings: Binding) -> ModeBinding:
+    return ModeBinding(field, bindings)
+
+
 #: config type -> binding, for every step that only forwards its fields;
 #: the steps that orchestrate keep a handler method on StepEngine
-BINDINGS: dict[type, Binding] = {
+BINDINGS: dict[type, Binding | ModeBinding] = {
     # -- text / corpus -------------------------------------------------------
     configs.TextStats: _bind(
         "llmops.text:text_stats", "@entity_name", "id_column", "text_column"
@@ -264,6 +292,12 @@ BINDINGS: dict[type, Binding] = {
         capacity="capacity", n_shards="n_shards", seed="seed",
         pad_id="pad_token_id", eod_id="eod_token_id",
     ),
+    configs.BucketByLength: _bind(
+        "llmops.chunking:bucket_by_length",
+        "@entity_name", "id_column", "text_column",
+        batch_size="batch_size", bucket_edges="bucket_edges",
+        n_shards="n_shards", seed="seed",
+    ),
     configs.RenderChat: _bind(
         "llmops.chat:render_chat",
         "@entity_name", "key_column", "conversation_column",
@@ -277,6 +311,19 @@ BINDINGS: dict[type, Binding] = {
         system_role="system_role",
     ),
     # -- near-duplicates / vectors -------------------------------------------
+    configs.MinHashDedup: _bind(
+        "llmops.dedup:minhash_dedup",
+        "@entity_name", "id_column", "text_column",
+        shingle_size="shingle_size", num_hashes="num_hashes", bands="bands",
+        threshold="threshold", exact_components="exact_components",
+        component_algorithm="component_algorithm",
+        quality_col="quality_column", higher_is_better="higher_is_better",
+    ),
+    configs.ConnectedComponents: _by(
+        "algorithm",
+        label=_bind("llmops.dedup:connected_components", "@entity_name"),
+        star=_bind("llmops.dedup:connected_components_star", "@entity_name"),
+    ),
     configs.SimHashSignatures: _bind(
         "llmops.dedup:simhash_table",
         "@entity_name", "id_column", "text_column",
@@ -305,6 +352,24 @@ BINDINGS: dict[type, Binding] = {
     configs.CompactMinhashIndex: _bind(
         "llmops.dedup:compact_minhash_index",
         "@entity_name", "@live_entity", "id_column",
+    ),
+    configs.SemanticDedup: _by(
+        "output",
+        kept=_bind(
+            "llmops.semdedup:semantic_dedup", "@entity_name",
+            id_col="key_column", vec_col="vector_column", dim="dim",
+            n_cells="n_cells", threshold="threshold", n_iters="n_iters",
+        ),
+        groups=_bind(
+            "llmops.semdedup:semantic_dup_groups", "@entity_name",
+            id_col="key_column", vec_col="vector_column", dim="dim",
+            n_cells="n_cells", threshold="threshold", n_iters="n_iters",
+        ),
+        pairs=_bind(
+            "llmops.semdedup:semantic_pairs", "@entity_name",
+            id_col="key_column", vec_col="vector_column", dim="dim",
+            n_cells="n_cells", threshold="threshold", n_iters="n_iters",
+        ),
     ),
     configs.LabelCentroids: _bind(
         "llmops.vectors:label_centroids",
@@ -353,6 +418,10 @@ BINDINGS: dict[type, Binding] = {
         "@entity_name", "key_column", "fraction",
         seed="seed",
     ),
+    configs.ExactQuotaSample: _bind(
+        "llmops.split:exact_quota_sample", "@entity_name", "key_column", "n",
+        strata_cols="strata_columns", seed="seed",
+    ),
     configs.StratifiedSample: _bind(
         "llmops.split:stratified_sample",
         "@entity_name", "key_column", "strata_column", "fractions",
@@ -393,6 +462,12 @@ BINDINGS: dict[type, Binding] = {
         left_ts="left_ts", right_ts="right_ts", value_cols="value_columns",
         prefix="prefix", direction="direction", tolerance="tolerance",
     ),
+    configs.IntervalJoin: _bind(
+        "llmops.interval:interval_join", "@entity_name", "@target_name",
+        left_start="left_start", left_end="left_end",
+        right_start="right_start", right_end="right_end",
+        on="on", bucket_width="bucket_width", prefix="prefix",
+    ),
     configs.FuzzyJoin: _bind(
         "llmops.linkage:fuzzy_string_join",
         "@entity_name", "@right_entity", "left_column", "right_column",
@@ -409,6 +484,21 @@ BINDINGS: dict[type, Binding] = {
     configs.ProfileDiff: _bind(
         "llmops.analytics:profile_diff", "@entity_name", "@target_name",
         columns="columns",
+    ),
+    configs.TopKPerGroup: _bind(
+        "llmops.analytics:grouped_topk",
+        "@entity_name", "group_by", "order_column", "k",
+        descending="descending", tiebreak_cols="tiebreak_columns",
+        rank_col="rank_column",
+    ),
+    configs.Winsorize: _bind(
+        "llmops.analytics:winsorize", "@entity_name", "group_by", "value_column",
+        lower="lower", upper="upper", out_col="output_column",
+        round_to="round_to",
+    ),
+    configs.Impute: _bind(
+        "llmops.analytics:impute_nulls", "@entity_name", "columns",
+        group_cols="group_by", round_to="round_to",
     ),
     configs.GroupedQuantiles: _bind(
         "llmops.analytics:grouped_quantiles",
@@ -439,6 +529,35 @@ BINDINGS: dict[type, Binding] = {
         "llmops.sketch:kmv_distinct",
         "@entity_name", "group_by", "value_column",
         k="k", seed="seed",
+    ),
+    configs.CmsSketch: _by(
+        "mode",
+        build=_bind(
+            "llmops.sketch:cms_build", "@entity_name", "value_column",
+            group_cols="group_by", depth="depth", width="width",
+            weight_col="weight_column", seed="seed",
+        ),
+        merge=_bind("llmops.sketch:cms_merge", "@entity_name", "group_by"),
+        query=_bind(
+            "llmops.sketch:cms_query",
+            "@sketch_name", "@entity_name", "value_column",
+            group_cols="group_by", depth="depth", width="width", seed="seed",
+        ),
+    ),
+    configs.BloomFilter: _by(
+        "mode",
+        build=_bind(
+            "llmops.sketch:bloom_build", "@entity_name", "value_column",
+            group_cols="group_by", m_bits="m_bits", k_hashes="k_hashes",
+            seed="seed",
+        ),
+        merge=_bind("llmops.sketch:bloom_merge", "@entity_name", "group_by"),
+        query=_bind(
+            "llmops.sketch:bloom_might_contain",
+            "@bloom_name", "@entity_name", "value_column",
+            group_cols="group_by", m_bits="m_bits", k_hashes="k_hashes",
+            seed="seed",
+        ),
     ),
     configs.HeavyHitters: _bind(
         "llmops.sketch:heavy_hitters",
@@ -471,6 +590,23 @@ BINDINGS: dict[type, Binding] = {
         "llmops.stats:standardize", "@entity_name", "value_column",
         group_cols="group_by", method="method", out_col="output_column",
         ddof="ddof", broadcast_stats="broadcast_stats",
+    ),
+    configs.EcdfNormalize: _bind(
+        "llmops.stats:ecdf_normalize", "@entity_name", "value_column",
+        group_cols="group_by", out_col="output_column", round_to="round_to",
+    ),
+    configs.Sessionize: _by(
+        "output",
+        events=_bind(
+            "streaming.sessions:sessionize",
+            "@entity_name", "user_column", "ts_column",
+            gap_seconds="gap_seconds",
+        ),
+        sessions=_bind(
+            "streaming.sessions:session_stats",
+            "@entity_name", "user_column", "ts_column",
+            gap_seconds="gap_seconds",
+        ),
     ),
     configs.RetentionCohorts: _bind(
         "llmops.events:retention_cohorts",
@@ -1047,30 +1183,6 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    def dedup_minhash(
-        self, entities: Entities, *, config: configs.MinHashDedup
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import minhash_dedup
-
-        kwargs: dict = {"threshold": config.threshold}
-        if config.shingle_size is not None:
-            kwargs["shingle_size"] = config.shingle_size
-        if config.num_hashes is not None:
-            kwargs["num_hashes"] = config.num_hashes
-        if config.bands is not None:
-            kwargs["bands"] = config.bands
-        entities[config.output_name] = minhash_dedup(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            exact_components=config.exact_components,
-            component_algorithm=config.component_algorithm,
-            quality_col=config.quality_column,
-            higher_is_better=config.higher_is_better,
-            **kwargs,
-        )
-        return None
-
     def embedding_neardup(
         self, entities: Entities, *, config: configs.EmbeddingNearDup
     ) -> Messages:
@@ -1143,37 +1255,6 @@ class StepEngine:
                 F.coalesce(F.col("n"), F.lit(0)).alias("n"),
                 "centroid",
             )
-        )
-        return None
-
-    def connected_components(
-        self, entities: Entities, *, config: configs.ConnectedComponents
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.dedup import (
-            connected_components,
-            connected_components_star,
-        )
-
-        cc = (
-            connected_components_star
-            if config.algorithm == "star"
-            else connected_components
-        )
-        entities[config.output_name] = cc(entities[config.entity_name])
-        return None
-
-    def sessionize(self, entities: Entities, *, config: configs.Sessionize) -> Messages:
-        from data_validation_engine_spark.streaming.sessions import (
-            session_stats,
-            sessionize,
-        )
-
-        fn = session_stats if config.output == "sessions" else sessionize
-        entities[config.output_name] = fn(
-            entities[config.entity_name],
-            config.user_column,
-            config.ts_column,
-            gap_seconds=config.gap_seconds,
         )
         return None
 
@@ -1277,39 +1358,7 @@ class StepEngine:
         entities[config.output_name] = out
         return None
 
-    # -- interval / windowed analytics -------------------------------------
-    def interval_join(
-        self, entities: Entities, *, config: configs.IntervalJoin
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.interval import interval_join
-
-        entities[config.output_name] = interval_join(
-            entities[config.entity_name],
-            entities[config.target_name],
-            left_start=config.left_start,
-            left_end=config.left_end,
-            right_start=config.right_start,
-            right_end=config.right_end,
-            on=list(config.on) or None,
-            bucket_width=config.bucket_width,
-            prefix=config.prefix,
-        )
-        return None
-
-    def top_k(self, entities: Entities, *, config: configs.TopKPerGroup) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import grouped_topk
-
-        entities[config.output_name] = grouped_topk(
-            entities[config.entity_name],
-            list(config.group_by),
-            config.order_column,
-            config.k,
-            descending=config.descending,
-            tiebreak_cols=list(config.tiebreak_columns) or None,
-            rank_col=config.rank_column,
-        )
-        return None
-
+    # -- windowed analytics ------------------------------------------------
     def rolling_agg(
         self, entities: Entities, *, config: configs.RollingAggregate
     ) -> Messages:
@@ -1467,27 +1516,6 @@ class StepEngine:
                 )
             )
         return union_messages(feeds)
-
-    def semantic_dedup(
-        self, entities: Entities, *, config: configs.SemanticDedup
-    ) -> Messages:
-        from data_validation_engine_spark.llmops import semdedup
-
-        fn = {
-            "kept": semdedup.semantic_dedup,
-            "groups": semdedup.semantic_dup_groups,
-            "pairs": semdedup.semantic_pairs,
-        }[config.output]
-        entities[config.output_name] = fn(
-            entities[config.entity_name],
-            id_col=config.key_column,
-            vec_col=config.vector_column,
-            dim=config.dim,
-            n_cells=config.n_cells,
-            threshold=config.threshold,
-            n_iters=config.n_iters,
-        )
-        return None
 
     def shared_spans(
         self, entities: Entities, *, config: configs.SharedSpans
@@ -1657,53 +1685,6 @@ class StepEngine:
             )
         return None
 
-    def exact_quota_sample(
-        self, entities: Entities, *, config: configs.ExactQuotaSample
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.split import (
-            exact_quota_sample,
-        )
-
-        entities[config.output_name] = exact_quota_sample(
-            entities[config.entity_name],
-            config.key_column,
-            config.n,
-            strata_cols=list(config.strata_columns)
-            if config.strata_columns
-            else None,
-            seed=config.seed,
-        )
-        return None
-
-    def winsorize(
-        self, entities: Entities, *, config: configs.Winsorize
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import winsorize
-
-        entities[config.output_name] = winsorize(
-            entities[config.entity_name],
-            list(config.group_by) if config.group_by else [],
-            config.value_column,
-            lower=config.lower,
-            upper=config.upper,
-            out_col=config.output_column,
-            round_to=config.round_to,
-        )
-        return None
-
-    def impute(self, entities: Entities, *, config: configs.Impute) -> Messages:
-        from data_validation_engine_spark.llmops.analytics import (
-            impute_nulls,
-        )
-
-        entities[config.output_name] = impute_nulls(
-            entities[config.entity_name],
-            dict(config.columns),
-            group_cols=list(config.group_by) if config.group_by else None,
-            round_to=config.round_to,
-        )
-        return None
-
     def kmv_set(
         self, entities: Entities, *, config: configs.KmvSetOps
     ) -> Messages:
@@ -1773,83 +1754,6 @@ class StepEngine:
                 c, F.when(F.col(c).isNotNull(), token)
             )
         entities[config.output_name] = df
-        return None
-
-    def cms_sketch(
-        self, entities: Entities, *, config: configs.CmsSketch
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.sketch import (
-            cms_build,
-            cms_merge,
-            cms_query,
-        )
-
-        groups = list(config.group_by)
-        df = entities[config.entity_name]
-        if config.mode == "merge":
-            entities[config.output_name] = cms_merge(df, groups)
-        elif config.mode == "query":
-            if not config.sketch_name:
-                raise ValueError(
-                    "cms_sketch mode='query' needs sketch_name"
-                )
-            entities[config.output_name] = cms_query(
-                entities[config.sketch_name],
-                df,
-                config.value_column,
-                group_cols=groups,
-                depth=config.depth,
-                width=config.width,
-                seed=config.seed,
-            )
-        else:
-            entities[config.output_name] = cms_build(
-                df,
-                config.value_column,
-                group_cols=groups,
-                depth=config.depth,
-                width=config.width,
-                weight_col=config.weight_column,
-                seed=config.seed,
-            )
-        return None
-
-    def bloom_filter(
-        self, entities: Entities, *, config: configs.BloomFilter
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.sketch import (
-            bloom_build,
-            bloom_merge,
-            bloom_might_contain,
-        )
-
-        groups = list(config.group_by)
-        df = entities[config.entity_name]
-        if config.mode == "merge":
-            entities[config.output_name] = bloom_merge(df, groups)
-        elif config.mode == "query":
-            if not config.bloom_name:
-                raise ValueError(
-                    "bloom_filter mode='query' needs bloom_name"
-                )
-            entities[config.output_name] = bloom_might_contain(
-                entities[config.bloom_name],
-                df,
-                config.value_column,
-                group_cols=groups,
-                m_bits=config.m_bits,
-                k_hashes=config.k_hashes,
-                seed=config.seed,
-            )
-        else:
-            entities[config.output_name] = bloom_build(
-                df,
-                config.value_column,
-                group_cols=groups,
-                m_bits=config.m_bits,
-                k_hashes=config.k_hashes,
-                seed=config.seed,
-            )
         return None
 
     def dsir_resample(
@@ -2297,42 +2201,6 @@ class StepEngine:
         frames = {n: entities[n] for n in names}
         entities[config.output_name] = self.spark.sql(
             config.query, **frames
-        )
-        return None
-
-    def ecdf_normalize(
-        self, entities: Entities, *, config: configs.EcdfNormalize
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.stats import (
-            ecdf_normalize,
-        )
-
-        entities[config.output_name] = ecdf_normalize(
-            entities[config.entity_name],
-            config.value_column,
-            group_cols=list(config.group_by) if config.group_by else None,
-            out_col=config.output_column,
-            round_to=config.round_to,
-        )
-        return None
-
-    def bucket_by_length(
-        self, entities: Entities, *, config: configs.BucketByLength
-    ) -> Messages:
-        from data_validation_engine_spark.llmops.chunking import (
-            bucket_by_length,
-        )
-
-        entities[config.output_name] = bucket_by_length(
-            entities[config.entity_name],
-            config.id_column,
-            config.text_column,
-            batch_size=config.batch_size,
-            bucket_edges=list(config.bucket_edges)
-            if config.bucket_edges
-            else None,
-            n_shards=config.n_shards,
-            seed=config.seed,
         )
         return None
 

@@ -442,8 +442,11 @@ def test_cache_originals_exposes_pre_rule_copies(spark, workspace, tmp_path_fact
 def test_rejection_survives_entity_rename(spark, workspace, tmp_path_factory):
     """Contract-rejected records must still be dropped from entities that
     were RENAMED during business rules: rejection matches rows by their
-    (origin, record index) lineage, not the entity's current name."""
+    (origin, record index) lineage, not the entity's current name.
+    Without the sync filters (which also drop records 7 and 13) only
+    contract rejection removes them."""
     renamed = json.loads(json.dumps(DISCHEMA))
+    renamed["transformations"]["filters"] = []
     renamed["transformations"]["post_filter_rules"].append(
         {
             "operation": "rename_entity",
@@ -712,9 +715,12 @@ def test_cache_originals_snapshots_exempt_from_rejection(
     """Original* snapshots are the BEFORE-rules picture: the reference
     explicitly skips them at record rejection (dve pipeline.py:614-625), so
     contract-rejected rows must still be present in the snapshot output
-    while being dropped from the live entity (ADVICE r3)."""
+    while being dropped from the live entity (ADVICE r3). Without the
+    sync filters (which also drop records 7 and 13) only contract
+    rejection removes them."""
     doc = json.loads(json.dumps(DISCHEMA))
     doc["contract"]["cache_originals"] = True
+    doc["transformations"]["filters"] = []
     d = workspace / "originals"
     d.mkdir(exist_ok=True)
     (d / "test_ruleset.json").write_text(json.dumps(RULESET))

@@ -16,7 +16,8 @@ step loads only its own operator module. The driver roster must carry no
 dead function and no round-layered registry. Tests are filed by the
 module they test, and code says why, not in which round.
 The message feed is built in one place: no other library module names a
-message-only column.
+message-only column. A step handler does more than forward its fields
+to one library function: a step that only forwards is a binding row.
 """
 
 from __future__ import annotations
@@ -389,3 +390,69 @@ def test_message_schema_is_projected_only_in_messages():
             if isinstance(named, ast.Constant) and named.value in _MESSAGE_ONLY_FIELDS:
                 bad.append((rel, node.lineno, named.value))
     assert bad == [], bad
+
+
+#: names a forwarded argument may use: the config, the entities its
+#: fields name, and the list/dict copies a binding also makes
+_FORWARDED_NAMES = {"config", "entities", "list", "dict"}
+
+
+def _forwards_only(method) -> bool:
+    """The body is only imports, ``entities[config.output_name] = f(...)``
+    with ``f`` imported there and every argument built from config fields
+    alone, and ``return None``."""
+    import ast
+
+    body = method.body
+    if isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]
+    imported = set()
+    while body and isinstance(body[0], (ast.Import, ast.ImportFrom)):
+        imported |= {a.asname or a.name for a in body[0].names}
+        body = body[1:]
+    if len(body) != 2:
+        return False
+    assign, ret = body
+    if not (
+        isinstance(ret, ast.Return)
+        and (ret.value is None or ast.unparse(ret.value) == "None")
+        and isinstance(assign, ast.Assign)
+        and ast.unparse(assign.targets[0]) == "entities[config.output_name]"
+        and isinstance(assign.value, ast.Call)
+        and isinstance(assign.value.func, ast.Name)
+        and assign.value.func.id in imported
+    ):
+        return False
+    call = assign.value
+    names = {
+        node.id
+        for arg in [*call.args, *(k.value for k in call.keywords)]
+        for node in ast.walk(arg)
+        if isinstance(node, ast.Name)
+    }
+    return names <= _FORWARDED_NAMES
+
+
+def test_no_step_handler_only_forwards_its_fields():
+    """A ``StepEngine`` handler that only passes config fields, or the
+    entities they name, to one library function belongs in
+    ``steps/engine.py:BINDINGS`` as a row: the engine keeps handlers only
+    for the steps that orchestrate."""
+    import ast
+
+    tree = ast.parse(
+        (REPO / "data_validation_engine_spark/steps/engine.py").read_text()
+    )
+    engine = next(
+        node for node in tree.body
+        if isinstance(node, ast.ClassDef) and node.name == "StepEngine"
+    )
+    forwarding = [
+        method.name
+        for method in engine.body
+        if isinstance(method, ast.FunctionDef)
+        and not method.name.startswith("_")
+        and any(a.arg == "config" for a in method.args.kwonlyargs)
+        and _forwards_only(method)
+    ]
+    assert forwarding == []

@@ -335,6 +335,22 @@ def test_csv_peeks_header_once(spark, tmp_path, monkeypatch):
     assert [tuple(r) for r in df.collect()] == [("alice", "30")]
 
 
+def test_csv_header_peek_honours_quotes(spark, tmp_path):
+    """A quoted header name may hold the delimiter: the peek parses the
+    header line as CSV, so the names after it still map to their
+    columns."""
+    p = tmp_path / "quoted_header.csv"
+    p.write_text(
+        'id,"notes, free text",name\n'
+        '1,"likes tea, not coffee",alice\n'
+        '2,plain,bob\n'
+    )
+    df = read_csv(spark, str(p), ["id", "name"], CSVOptions())
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("1", "alice"), ("2", "bob")
+    ]
+
+
 def test_csv_positional_without_header(spark, tmp_path):
     from data_validation_engine_spark.sources.csv import CSVOptions, read_csv
 

@@ -7,6 +7,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_validation_engine_spark.errors import ConstraintError
+from data_validation_engine_spark.llmops import (
+    analytics,
+    chunking,
+    dedup,
+    interval,
+    semdedup,
+    sketch,
+    split,
+    stats,
+)
 from data_validation_engine_spark.steps import (
     Aggregation,
     AntiJoin,
@@ -31,6 +41,7 @@ from data_validation_engine_spark.steps import (
     parse_step,
 )
 from data_validation_engine_spark.messages import Reporting
+from data_validation_engine_spark.streaming import sessions
 
 
 @pytest.fixture(scope="module")
@@ -563,6 +574,14 @@ def test_entity_read_counts():
     assert counts == {"a": 2, "b": 2, "c": 1}
 
 
+def _leaf_bindings(row):
+    """A BINDINGS row's bindings: the row itself, or one per value of a
+    mode row's field."""
+    from data_validation_engine_spark.steps.engine import ModeBinding
+
+    return list(row.bindings.values()) if isinstance(row, ModeBinding) else [row]
+
+
 def test_every_declared_step_type_dispatches():
     """A step type is declared once, by its config class: the AnyStep
     union is every ``operation``-bearing model in ``configs``, tags are
@@ -570,7 +589,8 @@ def test_every_declared_step_type_dispatches():
     and every public engine method with a keyword-only ``config`` handles
     a member. A binding's function imports, names only real config
     fields, and accepts the arguments the row passes (a broken row would
-    otherwise only fail at evaluate() time in production)."""
+    otherwise only fail at evaluate() time in production). A mode row
+    binds exactly the values of its field's ``Literal``."""
     import collections
     import inspect
     import typing
@@ -581,6 +601,7 @@ def test_every_declared_step_type_dispatches():
     from data_validation_engine_spark.steps.engine import (
         BINDINGS,
         HANDLERS,
+        ModeBinding,
         StepEngine,
     )
 
@@ -613,17 +634,25 @@ def test_every_declared_step_type_dispatches():
     assert {t.__name__: routes[t] for t in union if routes[t] != 1} == {}
 
     problems = []
-    for config_type, binding in BINDINGS.items():
-        fn = binding.function()
-        fields = [f.removeprefix("@") for f in binding.args]
-        fields += [f.removeprefix("@") for f in binding.kwargs.values()]
-        unknown = [f for f in fields if f not in config_type.model_fields]
-        if unknown:
-            problems.append((config_type.__name__, f"not fields: {unknown}"))
-        try:
-            inspect.signature(fn).bind(*binding.args, **binding.kwargs)
-        except TypeError as exc:
-            problems.append((config_type.__name__, str(exc)))
+    for config_type, row in BINDINGS.items():
+        if isinstance(row, ModeBinding):
+            field = config_type.model_fields.get(row.field)
+            values = typing.get_args(field.annotation) if field else ()
+            if set(row.bindings) != set(values):
+                problems.append(
+                    (config_type.__name__, f"{row.field}: {sorted(row.bindings)}")
+                )
+        for binding in _leaf_bindings(row):
+            fn = binding.function()
+            fields = [f.removeprefix("@") for f in binding.args]
+            fields += [f.removeprefix("@") for f in binding.kwargs.values()]
+            unknown = [f for f in fields if f not in config_type.model_fields]
+            if unknown:
+                problems.append((config_type.__name__, f"not fields: {unknown}"))
+            try:
+                inspect.signature(fn).bind(*binding.args, **binding.kwargs)
+            except TypeError as exc:
+                problems.append((config_type.__name__, str(exc)))
     assert problems == []
 
 
@@ -634,6 +663,15 @@ _NONE_IS_EMPTY = {
     ("negative_samples", "pool_cols"),
     ("grouped_auc", "group_cols"),
     ("standardize", "group_cols"),
+    ("interval_join", "on"),
+    ("grouped_topk", "tiebreak_cols"),
+    ("ecdf_normalize", "group_cols"),
+    ("cms_build", "group_cols"),
+    ("cms_merge", "group_cols"),
+    ("cms_query", "group_cols"),
+    ("bloom_build", "group_cols"),
+    ("bloom_merge", "group_cols"),
+    ("bloom_might_contain", "group_cols"),
 }
 
 #: (config type, field) -> why its default differs from the library's;
@@ -663,7 +701,12 @@ def test_binding_defaults_match_library_defaults():
     from data_validation_engine_spark.steps.engine import BINDINGS
 
     differ = {}
-    for config_type, binding in BINDINGS.items():
+    bindings = [
+        (config_type, binding)
+        for config_type, row in BINDINGS.items()
+        for binding in _leaf_bindings(row)
+    ]
+    for config_type, binding in bindings:
         fn = binding.function()
         params = inspect.signature(fn).parameters
         names = list(params)
@@ -691,6 +734,209 @@ def test_binding_defaults_match_library_defaults():
             if declared != library:
                 differ[(config_type.__name__, field)] = (declared, library)
     assert set(differ) == set(_DEFAULT_DIFFERENCES), differ
+
+
+@pytest.fixture(scope="module")
+def bound_frames(spark):
+    """Small inputs for the steps bound in one row each."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2024, 1, 1)
+    minutes = lambda m: t0 + timedelta(minutes=m)  # noqa: E731
+    values = spark.createDataFrame(
+        [("en", "a", 1), ("en", "a", 2), ("en", "b", 1), ("fr", "a", 1)],
+        "g string, value string, w long",
+    )
+    return {
+        "scores": spark.createDataFrame(
+            [(1, "a", 1.0, 1.0), (2, "a", 5.0, None), (3, "a", 3.0, 2.0),
+             (4, "b", 2.0, None), (5, "b", 9.0, 7.0), (6, "b", 2.0, 4.0),
+             (7, "b", 4.0, 5.0)],
+            "id long, g string, v double, u double",
+        ),
+        "iv": spark.createDataFrame(
+            [(1, "k1", minutes(0), minutes(10)), (2, "k2", minutes(0), minutes(5))],
+            "id long, k string, s timestamp, e timestamp",
+        ),
+        "win": spark.createDataFrame(
+            [(10, "k1", minutes(5), minutes(20)), (11, "k2", minutes(60), minutes(90))],
+            "wid long, k string, s timestamp, e timestamp",
+        ),
+        "docs": spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog by the river"),
+             (2, "the quick brown fox jumps over the lazy dog by the river bank"),
+             (3, "an entirely different sentence about columnar data engines"),
+             (4, "short")],
+            "doc_id long, text string",
+        ),
+        "pairs": spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
+        ),
+        "events": spark.createDataFrame(
+            [("u1", minutes(0)), ("u1", minutes(10)), ("u1", minutes(200)),
+             ("u2", minutes(0))],
+            "user string, ts timestamp",
+        ),
+        "vecs": spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.999, 0.01]), (3, [0.0, 1.0]),
+             (4, [0.01, 0.999])],
+            "vec_id long, embedding array<double>",
+        ),
+        "values": values,
+        "cms": sketch.cms_build(values, "value", group_cols=["g"]),
+        "bloom": sketch.bloom_build(values, "value", group_cols=["g"]),
+    }
+
+
+#: (step fields, direct library call) for every step bound in one row
+#: each, and every value of a mode row's field; the steps omit the fields
+#: whose ``()``/``None`` defaults a handler used to convert
+_BOUND_STEPS = {
+    "interval_join": (
+        {"entity_name": "iv", "target_name": "win", "left_start": "s",
+         "left_end": "e", "right_start": "s", "right_end": "e",
+         "bucket_width": 600.0},
+        lambda f: interval.interval_join(
+            f["iv"], f["win"], left_start="s", left_end="e",
+            right_start="s", right_end="e", bucket_width=600.0,
+        ),
+    ),
+    "top_k": (
+        {"entity_name": "scores", "group_by": ["g"], "order_column": "v",
+         "k": 2},
+        lambda f: analytics.grouped_topk(f["scores"], ["g"], "v", 2),
+    ),
+    "exact_quota_sample": (
+        {"entity_name": "scores", "key_column": "id", "n": 3, "seed": "s"},
+        lambda f: split.exact_quota_sample(f["scores"], "id", 3, seed="s"),
+    ),
+    "winsorize": (
+        {"entity_name": "scores", "value_column": "v", "lower": 0.2,
+         "upper": 0.8},
+        lambda f: analytics.winsorize(
+            f["scores"], [], "v", lower=0.2, upper=0.8
+        ),
+    ),
+    "impute": (
+        {"entity_name": "scores", "columns": {"u": "median"}},
+        lambda f: analytics.impute_nulls(f["scores"], {"u": "median"}),
+    ),
+    "ecdf_normalize": (
+        {"entity_name": "scores", "value_column": "v"},
+        lambda f: stats.ecdf_normalize(f["scores"], "v"),
+    ),
+    "bucket_by_length": (
+        {"entity_name": "docs", "id_column": "doc_id", "text_column": "text",
+         "batch_size": 2},
+        lambda f: chunking.bucket_by_length(
+            f["docs"], "doc_id", "text", batch_size=2
+        ),
+    ),
+    "dedup_minhash": (
+        {"entity_name": "docs", "id_column": "doc_id", "text_column": "text"},
+        lambda f: dedup.minhash_dedup(f["docs"], "doc_id", "text"),
+    ),
+    "connected_components-label": (
+        {"entity_name": "pairs"},
+        lambda f: dedup.connected_components(f["pairs"]),
+    ),
+    "connected_components-star": (
+        {"entity_name": "pairs", "algorithm": "star"},
+        lambda f: dedup.connected_components_star(f["pairs"]),
+    ),
+    "sessionize-sessions": (
+        {"entity_name": "events", "user_column": "user", "ts_column": "ts"},
+        lambda f: sessions.session_stats(f["events"], "user", "ts"),
+    ),
+    "sessionize-events": (
+        {"entity_name": "events", "user_column": "user", "ts_column": "ts",
+         "output": "events"},
+        lambda f: sessions.sessionize(f["events"], "user", "ts"),
+    ),
+    "semantic_dedup-kept": (
+        {"entity_name": "vecs", "dim": 2, "n_cells": 2},
+        lambda f: semdedup.semantic_dedup(f["vecs"], dim=2, n_cells=2),
+    ),
+    "semantic_dedup-groups": (
+        {"entity_name": "vecs", "dim": 2, "n_cells": 2, "output": "groups"},
+        lambda f: semdedup.semantic_dup_groups(f["vecs"], dim=2, n_cells=2),
+    ),
+    "semantic_dedup-pairs": (
+        {"entity_name": "vecs", "dim": 2, "n_cells": 2, "output": "pairs"},
+        lambda f: semdedup.semantic_pairs(f["vecs"], dim=2, n_cells=2),
+    ),
+    "cms_sketch-build": (
+        {"entity_name": "values", "value_column": "value",
+         "weight_column": "w"},
+        lambda f: sketch.cms_build(f["values"], "value", weight_col="w"),
+    ),
+    "cms_sketch-merge": (
+        {"entity_name": "cms", "mode": "merge"},
+        lambda f: sketch.cms_merge(f["cms"]),
+    ),
+    "cms_sketch-query": (
+        {"entity_name": "values", "mode": "query", "sketch_name": "cms",
+         "value_column": "value", "group_by": ["g"]},
+        lambda f: sketch.cms_query(
+            f["cms"], f["values"], "value", group_cols=["g"]
+        ),
+    ),
+    "bloom_filter-build": (
+        {"entity_name": "values", "value_column": "value"},
+        lambda f: sketch.bloom_build(f["values"], "value"),
+    ),
+    "bloom_filter-merge": (
+        {"entity_name": "bloom", "mode": "merge"},
+        lambda f: sketch.bloom_merge(f["bloom"]),
+    ),
+    "bloom_filter-query": (
+        {"entity_name": "values", "mode": "query", "bloom_name": "bloom",
+         "value_column": "value", "group_by": ["g"]},
+        lambda f: sketch.bloom_might_contain(
+            f["bloom"], f["values"], "value", group_cols=["g"]
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BOUND_STEPS))
+def test_bound_step_matches_library_call(engine, bound_frames, case):
+    """Each step folded into a BINDINGS row computes what a direct call of
+    its library function computes, field defaults included."""
+    fields, call = _BOUND_STEPS[case]
+    ents = dict(bound_frames)
+    step = parse_step(
+        {"operation": case.split("-")[0], "new_entity_name": "out", **fields}
+    )
+    engine.evaluate(ents, config=step)
+    got, want = ents["out"], call(bound_frames)
+    assert got.columns == want.columns
+    rows = lambda df: sorted(repr(tuple(r)) for r in df.collect())  # noqa: E731
+    assert rows(got) == rows(want) != []
+
+
+@pytest.mark.parametrize(
+    "step, field",
+    [
+        ({"operation": "cms_sketch", "mode": "query", "entity_name": "values"},
+         "sketch_name"),
+        ({"operation": "bloom_filter", "mode": "query",
+          "entity_name": "values"}, "bloom_name"),
+        ({"operation": "interval_join", "entity_name": "iv",
+          "target_name": "nowhere", "left_start": "s", "left_end": "e",
+          "right_start": "s", "right_end": "e"}, "target_name"),
+    ],
+)
+def test_binding_entity_field_naming_no_entity_raises(
+    engine, bound_frames, step, field
+):
+    """A bound ``"@field"`` that names no entity is a configuration error
+    that names the step type and the field."""
+    from data_validation_engine_spark.errors import ConfigurationError
+
+    with pytest.raises(ConfigurationError) as exc:
+        engine.evaluate(dict(bound_frames), config=parse_step(step))
+    assert step["operation"] in str(exc.value) and field in str(exc.value)
 
 
 def test_every_step_type_imports_from_steps():
